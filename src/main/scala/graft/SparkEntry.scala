@@ -116,18 +116,16 @@ object SparkEntry {
     val ids =
       if (st.pureHash) Dictionary.hashLiterals(s, constants)
       else Dictionary.lookup(st.dict, constants)
-    // Query: BGP joins over long keys; result is small — pin it so decode
-    // reads it instead of re-running the join tree.
+    // Query: BGP joins over long keys.
     val res = prof("bgp joins")(Bgp.compile(s, st.enc, Seq(
       TriplePattern(V("c"), C(ids("a")), C(ids("Customer"))),
       TriplePattern(V("c"), C(ids("nationkey")), V("n")),
       TriplePattern(V("n"), C(ids("regionkey")), V("r")),
-      TriplePattern(V("r"), C(ids("name")), C(ids("ASIA")))), st.encStats, st.totalCnt)
-      .localCheckpoint(true))
+      TriplePattern(V("r"), C(ids("name")), C(ids("ASIA")))), st.encStats, st.totalCnt))
     // Lazy decode (reference `LazyBinding.scala:22-28`) against the
-    // dictionary materialized at ingest: semi-join it down to the result's
-    // ids, broadcast, decode each projected variable. No per-query re-scan
-    // of the triple store.
+    // dictionary materialized at ingest: decodeAll pins the (small)
+    // result, collects it and resolves its ids with one dictionary probe.
+    // No per-query re-scan of the triple store.
     prof("decode joins")(
       Dictionary.decodeAll(res, st.dict, Seq("c", "n", "r"))
         .select("c", "n", "r").orderBy("c", "n", "r"))

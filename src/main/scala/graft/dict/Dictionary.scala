@@ -1,8 +1,11 @@
 package graft.dict
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.{InSetColumn, SQLExecution}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Distributed string<->id dictionary.
   *
@@ -23,10 +26,13 @@ import org.apache.spark.sql.functions._
   *     on it sound instead of hopeful.
   *   - collision repair (rare path) ranks ONLY the colliding hash groups —
   *     never a window over the full dictionary.
-  *   - decode is a join against the dictionary on demand — the analog of the
-  *     reference's lazy per-variable decode (`LazyBinding.scala:22-28`):
-  *     only SELECTed output columns ever pay for it, and `decodeAll` pays a
-  *     single dictionary pass for any number of output columns.
+  *   - decode touches only the SELECTed output columns — the analog of the
+  *     reference's lazy per-variable decode (`LazyBinding.scala:22-28`).
+  *     `decodeAll` decodes a result of at most `localDecodeCap` rows on the
+  *     driver, as graphula does in process: one bounded collect plus one
+  *     dictionary probe, returned as a local relation. A larger result
+  *     falls back to a distributed decode: one dictionary pass for any
+  *     number of output columns, joined back per column.
   */
 object Dictionary {
 
@@ -166,24 +172,152 @@ object Dictionary {
       .withColumnRenamed(s"__term_$c", c)
   }
 
-  /** Decode several id columns of a small-result DataFrame with ONE pass
-    * over the dictionary: semi-filter the dictionary down to the ids that
-    * actually appear (the reference's lazy-decode discipline — only
-    * projected variables pay, `LazyBinding.scala:22-28`), pin the slim
-    * mapping with an eager local checkpoint, then broadcast-join per column.
+  /** Row cap of `decodeAll`'s driver-side decode: the most rows the
+    * driver ever receives from one decode. The update-script driver paths
+    * (`Sparql.smallModifySols`, `GraftStore.smallBatch`) use the same cap.
+    * Scoped per thread, so a spec can force the distributed decode
+    * (`localDecodeCap.withValue(0) { ... }`) without touching the
+    * session's conf.
+    */
+  private[graft] val LocalCap = 65536
+  private[graft] val localDecodeCap = new scala.util.DynamicVariable[Int](LocalCap)
+
+  /** Decode the id columns `cols` of `df` to their terms, keeping `df`'s
+    * column order and every other column as it is. Ids with no entry
+    * render as `_:<id>`; null ids stay null. Runs eagerly.
+    *
+    * `df` is pinned once (lazily, through `Pins`, unless it already is a
+    * pin), and ONE bounded-collect job materializes it
+    * ([[collectBounded]]). A result of at most `localDecodeCap` rows is
+    * decoded on the driver: one dictionary probe job for the distinct ids
+    * of all `cols`, then the rows come back as a local relation — the
+    * caller's collect starts no job. A larger result (or a non-long id
+    * column) keeps the distributed decode over the same pin: semi-filter
+    * the dictionary down to the ids that appear, pin that slim mapping,
+    * broadcast-join it per column.
     */
   def decodeAll(df: DataFrame, dict: DataFrame, cols: Seq[String]): DataFrame = {
-    val ids = cols.map(c => df.select(col(c).cast("long").as("id")))
-      .reduce(_.unionAll(_)).distinct()
-    // dedup AFTER the semi filter, on the |appearing-ids|-sized slim
-    // mapping: callers may pass a union of overlapping dictionaries
-    // (snapshot diff decodes removed-only terms through before+after),
-    // and deduping the full union first would shuffle |dict| rows to
-    // serve a |delta|-sized decode. Overlapping entries are identical
-    // (id, term) pairs along an update chain, so the pick is stable.
-    val slim = dict.join(ids, Seq("id"), "left_semi")
-      .dropDuplicates("id").localCheckpoint(true)
-    cols.foldLeft(df)((d, c) => decode(d, broadcast(slim), c))
+    val pinned =
+      if (graft.Pins.isPinned(df) || isLocal(df)) df else graft.Pins.checkpointLazy(df)
+    val decodePos = cols.map(df.schema.fieldIndex).toSet
+    val rows =
+      if (decodePos.forall(i => df.schema(i).dataType == LongType))
+        collectBounded(pinned, localDecodeCap.value)
+      else None
+    rows match {
+      case Some(rs) =>
+        if (pinned ne df) graft.Pins.unpin(pinned)
+        val d = decodeRows(rs.toSeq, df.schema, decodePos, dict)
+        df.sparkSession.createDataFrame(
+          scala.jdk.CollectionConverters.SeqHasAsJava(d.rows).asJava, d.schema)
+      case None =>
+        val ids = cols.map(c => pinned.select(col(c).cast("long").as("id")))
+          .reduce(_.unionAll(_)).distinct()
+        // dedup AFTER the semi filter, on the |appearing-ids|-sized slim
+        // mapping: callers may pass a union of overlapping dictionaries
+        // (snapshot diff decodes removed-only terms through before+after),
+        // and deduping the full union first would shuffle |dict| rows to
+        // serve a |delta|-sized decode. Overlapping entries are identical
+        // (id, term) pairs along an update chain, so the pick is stable.
+        val slim = graft.Pins.checkpoint(
+          dict.join(ids, Seq("id"), "left_semi").dropDuplicates("id"))
+        cols.foldLeft(pinned)((d, c) => decode(d, broadcast(slim), c))
+          .select(df.columns.toSeq.map(col): _*)
+    }
+  }
+
+  /** Are `df`'s rows already on the driver — a plan the optimizer folds
+    * into a local relation (e.g. a driver-side decode's result)?
+    */
+  private[graft] def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Collected rows with their id columns decoded (see [[decodeRows]]):
+    * the rows and schema, plus the probe's result — id → term for every
+    * probed id the dictionary holds — and the full probed id set.
+    */
+  private[graft] final case class DecodedRows(rows: Seq[Row], schema: StructType,
+                                              terms: Map[Long, String],
+                                              probed: Set[Long])
+
+  /** Driver-side decode of collected rows: the long columns at
+    * `decodePos` become their terms (`_:<id>` when absent, null stays
+    * null) through ONE dictionary probe job over the distinct ids of all
+    * of them, plus `extraIds` — callers can resolve other ids in the same
+    * job. Every other column keeps its type and value, so expressions
+    * over the result (e.g. a CONSTRUCT skolem's row hash) match the
+    * distributed decode bit for bit.
+    */
+  private[graft] def decodeRows(rows: Seq[Row], schema: StructType,
+                                decodePos: Set[Int], dict: DataFrame,
+                                extraIds: Set[Long] = Set.empty): DecodedRows = {
+    val probed = rows.iterator.flatMap(r =>
+      decodePos.iterator.filter(i => !r.isNullAt(i)).map(r.getLong)).toSet ++ extraIds
+    val terms: Map[Long, String] =
+      if (probed.isEmpty) Map.empty
+      else dict.where(InSetColumn(col("id"), probed.map(i => i: Any)))
+        .select("id", "term").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val outSchema = StructType(schema.fields.zipWithIndex.map { case (f, i) =>
+      if (decodePos(i)) StructField(f.name, StringType, f.nullable) else f
+    })
+    val out = rows.map { r =>
+      Row.fromSeq(schema.fields.indices.map { i =>
+        if (!decodePos(i)) r.get(i)
+        else if (r.isNullAt(i)) null
+        else terms.getOrElse(r.getLong(i), "_:" + r.getLong(i))
+      })
+    }
+    DecodedRows(out, outSchema, terms, probed)
+  }
+
+  /** `df`'s rows on the driver if it holds at most `cap` of them, else
+    * None — in ONE job over every partition. Each task materializes its
+    * partition (a lazy pin is filled here) and ships its rows only if it
+    * holds at most ⌈cap / partitions⌉ of them, otherwise only its row
+    * count. So the driver never receives more than `cap` rows, and no
+    * `spark.sql.limit.*` setting or CollectLimit scale-up job is involved.
+    * When a task shipped only its count but the exact total is still
+    * within `cap` (skewed partitions), a second job fetches just those
+    * partitions. Rows come back in partition order. A plan the optimizer
+    * folds into a local relation is collected without a job.
+    */
+  private[graft] def collectBounded(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    if (isLocal(df)) return Some(df.collect()).filter(_.length <= cap)
+    val qe = df.queryExecution
+    val sc = df.sparkSession.sparkContext
+    SQLExecution.withNewExecutionId(qe, Some("collectBounded")) {
+      val rdd = qe.toRdd
+      val n = rdd.getNumPartitions
+      // no partitions (e.g. AQE proved the result empty): a job over
+      // them would still be posted to listeners
+      if (n == 0) return Some(Array.empty[Row])
+      val share = (cap.toLong + n - 1) / n
+      val first = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+        val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        var seen = 0L
+        while (it.hasNext) {
+          val r = it.next()
+          seen += 1
+          if (seen <= share) buf += r.copy()
+        }
+        if (seen <= share) Right(buf.toArray) else Left(seen)
+      })
+      val total = first.iterator.map(_.fold(identity, _.length.toLong)).sum
+      if (total > cap) None
+      else {
+        val over = first.indices.filter(i => first(i).isLeft)
+        val refetched =
+          if (over.isEmpty) Map.empty[Int, Array[InternalRow]]
+          else over.zip(sc.runJob(rdd,
+            (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, over)).toMap
+        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+        Some(first.indices.iterator.flatMap(i =>
+          refetched.getOrElse(i, first(i).toOption.get))
+          .map(r => toRow(r).asInstanceOf[Row]).toArray)
+      }
+    }
   }
 
   /** Driver-side point lookup (D2): ids for a small set of query constants.

@@ -656,12 +656,6 @@ object Sparql {
       if (prefetchable.isEmpty) None
       else Some(java.util.concurrent.Executors.newFixedThreadPool(
         math.min(prefetchable.size, 4)))
-    // one CollectLimit scale-up conf for the whole script (the per-call
-    // save/restore in smallModifySols is then a same-value no-op, so
-    // concurrent prefetches cannot race it to a stale value)
-    val limitKey = "spark.sql.limit.initialNumPartitions"
-    val limitPrev = spark.conf.getOption(limitKey)
-    spark.conf.set(limitKey, Int.MaxValue.toString)
     try {
       val pre: Map[Int, java.util.concurrent.Future[
           Option[(LocalSols, Map[Long, String], Set[Long])]]] =
@@ -704,10 +698,7 @@ object Sparql {
       }
       flush()
       h
-    } finally {
-      pool.foreach(_.shutdown())
-      limitPrev.fold(spark.conf.unset(limitKey))(spark.conf.set(limitKey, _))
-    }
+    } finally pool.foreach(_.shutdown())
   }
 
   /** Triple-pattern summary for update hazard analysis: a constant per
@@ -1171,11 +1162,6 @@ object Sparql {
     }
   }
 
-  /** Cap for the driver-side modify fast path (same bounded-collect class
-    * as the batch paths in GraftStore).
-    */
-  private val modifySolsCap = 65536
-
   /** Decoded solutions held DRIVER-SIDE: the rows + schema, with the
     * DataFrame materialized lazily — only the blank-node-skolem template
     * path (which needs the Spark-evaluated row hash) ever builds it;
@@ -1190,7 +1176,9 @@ object Sparql {
         scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
   }
 
-  /** Bounded collect + driver-side decode of an encoded solution relation:
+  /** Bounded collect (at most `Dictionary.LocalCap` rows, the cap of the
+    * batch paths in GraftStore) + driver-side decode of an encoded
+    * solution relation:
     * id-typed columns become their terms (one dictionary probe for ALL
     * columns), everything else — plain-valued vars, internal shadows —
     * keeps its exact type and value, so downstream template evaluation
@@ -1206,52 +1194,24 @@ object Sparql {
   private def smallModifySols(env: Env, encSols: DataFrame,
                               extraIds: Set[Long] = Set.empty)
       : Option[(LocalSols, Map[Long, String], Set[Long])] = {
-    // CollectLimit's incremental scale-up (1, 4, 16, ... partitions) costs
-    // one driver-scheduled job per step; expected solutions are small, so
-    // scan every partition in ONE job and let the limit cut the transfer
-    val first = graft.Prof.t("smallSols.collect") {
-      val conf = env.spark.conf
-      val key = "spark.sql.limit.initialNumPartitions"
-      val prev = conf.getOption(key)
-      conf.set(key, Int.MaxValue.toString)
-      try encSols.limit(modifySolsCap + 1).collect()
-      finally prev.fold(conf.unset(key))(conf.set(key, _))
+    val first = graft.Prof.t("smallSols.collect")(
+      graft.dict.Dictionary.collectBounded(encSols, graft.dict.Dictionary.LocalCap)) match {
+      case Some(rows) => rows
+      case None => return None
     }
-    if (first.length > modifySolsCap) return None
     val e = env.enc.get
     val schema = encSols.schema
     val decodePos = schema.fields.zipWithIndex.collect {
       case (f, i) if !e.plainVars.contains(f.name) && !f.name.startsWith("__") &&
         f.dataType == org.apache.spark.sql.types.LongType => i
     }.toSet
-    val ids = first.iterator.flatMap(r =>
-      decodePos.iterator.filter(i => !r.isNullAt(i)).map(r.getLong)).toSet
-    val probed = ids ++ extraIds
-    val idTerm: Map[Long, String] =
-      if (probed.isEmpty) Map.empty
-      else graft.Prof.t("smallSols.dictProbe") {
-        import env.spark.implicits._
-        env.dictAll
-          .join(broadcast(probed.toSeq.toDF("id")), Seq("id"), "left_semi")
-          .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-      }
-    val newSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.zipWithIndex.map { case (f, i) =>
-        if (decodePos(i)) f.copy(dataType = org.apache.spark.sql.types.StringType)
-        else f
-      })
-    val rows: Seq[org.apache.spark.sql.Row] = first.toSeq.map { r =>
-      org.apache.spark.sql.Row.fromSeq(schema.fields.indices.map { i =>
-        if (!decodePos(i)) r.get(i)
-        else if (r.isNullAt(i)) null
-        else idTerm.getOrElse(r.getLong(i), "_:" + r.getLong(i))
-      })
-    }
+    val d = graft.Prof.t("smallSols.dictProbe")(graft.dict.Dictionary
+      .decodeRows(first.toSeq, schema, decodePos, env.dictAll, extraIds))
     // claims = STORE-dict membership only: a query-local dict entry (an
     // absent constant's rendering id) must not read as "already claimed",
     // or an insert of that term would skip its dictionary delta
     val localIds = e.localDict.iterator.map(_._1).toSet
-    Some((LocalSols(env.spark, rows, newSchema), idTerm -- localIds, probed))
+    Some((LocalSols(env.spark, d.rows, d.schema), d.terms -- localIds, d.probed))
   }
 
   /** `instantiate` over a LOCAL solution relation: the same template-term
@@ -2281,9 +2241,10 @@ object Sparql {
       }
   }
 
-  /** Final lazy decode of the projected id columns (encoded mode): pin the
-    * (small) result, then one slim-dictionary broadcast pass decodes every
-    * column — the single decode stage at the top of the plan.
+  /** Final lazy decode of the projected id columns (encoded mode) — the
+    * single decode at the top of the plan, through `Dictionary.decodeAll`:
+    * a result within its cap decodes on the driver (one bounded collect,
+    * one dictionary probe), a larger one by the distributed decode.
     */
   private def decodeFinal(env: Env, df: DataFrame): DataFrame = env.enc match {
     case None => df
@@ -2291,15 +2252,16 @@ object Sparql {
       val cols = df.columns.toSeq
         .filterNot(e.plainVars.contains).filterNot(_.startsWith("__"))
       if (cols.isEmpty) df
-      else {
-        // decode joins re-append columns -> restore projection order
-        val order = df.columns.toSeq
-        val pinned = graft.Prof.t("decodeFinal.pin")(df.localCheckpoint(true))
-        graft.Prof.t("decodeFinal.join")(graft.dict.Dictionary.decodeAll(
-          pinned, env.dictAll, cols)
-          .select(order.map(col): _*))
-      }
+      else graft.Prof.t("decodeFinal")(
+        graft.dict.Dictionary.decodeAll(df, env.dictAll, cols))
   }
+
+  /** A result decoded on the driver is a local relation; on one
+    * partition a sort over it needs no range exchange — one job instead
+    * of three.
+    */
+  private def onePartitionIfLocal(df: DataFrame): DataFrame =
+    if (graft.dict.Dictionary.isLocal(df)) df.coalesce(1) else df
 
   // ---- encoded-mode query analysis (driver-side AST walks) ----
 
@@ -2430,6 +2392,14 @@ object Sparql {
     * a repaired store; content hashes on a certified one), so they match
     * nothing yet still decode back to themselves — preserving e.g. the
     * zero-length-path solution `<absent> p* <absent>`.
+    *
+    * The top-level decode runs eagerly, inside this call
+    * (`Dictionary.decodeAll`): the encoded result is pinned and collected
+    * in one bounded job; if it holds at most `Dictionary.LocalCap` rows,
+    * one dictionary probe job decodes it on the driver and the returned
+    * DataFrame is a local relation, so collecting it starts no job. A
+    * larger result falls back to the distributed decode over the same
+    * pin, and the driver never receives more than the cap.
     */
   def executeEncoded(spark: SparkSession, store: graft.store.StoreHandle,
                      queryText: String): DataFrame = {
@@ -3343,7 +3313,7 @@ object Sparql {
     if (q.orderBy.nonEmpty && shadowSort) {
       // sort on the pre-projection __sk keys, AFTER the final decode
       // (decode joins would scramble an earlier sort)
-      if (encTop) df = decodeFinal(env, df)
+      if (encTop) df = onePartitionIfLocal(decodeFinal(env, df))
       df = df.orderBy(q.orderBy.zipWithIndex.map { case ((_, asc), i) =>
         if (asc) col(s"__sk$i").asc else col(s"__sk$i").desc }: _*)
       q.offset.foreach(n => df = df.offset(n))
@@ -3361,7 +3331,8 @@ object Sparql {
       // ORDER BY compares term strings -> decode first. At the top that IS
       // the final decode; in a subquery, sort via dropped shadow columns.
       val (d, res, shadows) =
-        if (encTop) (decodeFinal(env, df), (v: String) => col(v), Seq.empty[String])
+        if (encTop) (onePartitionIfLocal(decodeFinal(env, df)),
+          (v: String) => col(v), Seq.empty[String])
         else withDecoded(env, df, keys.map(_._1).toSet)
       df = d.orderBy(keys.map { case (v, asc) =>
         if (asc) res(v).asc else res(v).desc }: _*).drop(shadows: _*)
@@ -4007,8 +3978,7 @@ object Sparql {
     // blankness by (broadcast) semi-join instead of a string prefix test
     val blanks = dict.where(col("term").startsWith("_:")).select(col("id"))
     val out = cbdEncoded(spark, merged, subjects, blanks)
-    graft.dict.Dictionary.decodeAll(
-      out.localCheckpoint(true), env.dictAll, Seq("s", "p", "o"))
+    graft.dict.Dictionary.decodeAll(out, env.dictAll, Seq("s", "p", "o"))
   }
 
   /** Concise Bounded Description over an ENCODED triple relation — the
@@ -5216,8 +5186,10 @@ object Sparql {
   private def seededClosureDriver(edges: DataFrame, seeds: DataFrame,
                                   includeZero: Boolean): Option[DataFrame] = {
     val spark = edges.sparkSession
-    val seedRows = seeds.distinct().limit(65).collect()
-    if (seedRows.length > 64) return None
+    val seedRows = graft.dict.Dictionary.collectBounded(seeds.distinct(), 64) match {
+      case Some(rows) => rows
+      case None => return None
+    }
     val origins: Array[Any] = seedRows.map(_.get(0))
     val originIdx = origins.zipWithIndex.toMap
     import scala.collection.mutable
@@ -5236,9 +5208,12 @@ object Sparql {
     while (frontier.nonEmpty) {
       if (rounds >= 500 || frontier.size > 1024) return None
       val nodes = frontier.keys.toSeq
-      val step = edges.where(col("s").isin(nodes: _*))
-        .select(col("s"), col("o")).distinct().limit(budget + 1).collect()
-      if (step.length > budget) return None
+      val step = graft.dict.Dictionary.collectBounded(
+        edges.where(col("s").isin(nodes: _*)).select(col("s"), col("o")).distinct(),
+        budget) match {
+        case Some(rows) => rows
+        case None => return None
+      }
       budget -= step.length
       val next = mutable.Map.empty[Any, mutable.BitSet]
       step.foreach { r =>

@@ -234,23 +234,18 @@ object GraftStore {
     * one union branch per batch — `persist` flattens it (compaction), the
     * same discipline as any LSM-ish append structure.
     */
-  /** Cap for the driver-side batch fast path. A batch at or under the cap
-    * is handled as driver-side constants (one bounded collect, the same
-    * class as the stats/seed lookups elsewhere); anything larger takes
-    * the fully distributed path, so scale correctness never depends on
-    * this shortcut.
+  /** The driver-side batch fast path: a batch of at most
+    * `Dictionary.LocalCap` rows is handled as driver-side constants (one
+    * bounded collect job); anything larger takes the fully distributed
+    * path, so scale correctness never depends on this shortcut.
     */
-  private val smallBatchCap = 65536
-
-  private def smallBatch(df: DataFrame): Option[Seq[(String, String, String)]] = {
-    val first = df.select(col("s").cast("string"), col("p").cast("string"),
-      col("o").cast("string")).limit(smallBatchCap + 1).collect()
-    if (first.length > smallBatchCap) None
-    else Some(first.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
-  }
+  private def smallBatch(df: DataFrame): Option[Seq[(String, String, String)]] =
+    Dictionary.collectBounded(df.select(col("s").cast("string"),
+      col("p").cast("string"), col("o").cast("string")), Dictionary.LocalCap)
+      .map(_.toSeq.map(r => (r.getString(0), r.getString(1), r.getString(2))))
 
   /** `append` for a DRIVER-SIDE batch (ground `INSERT DATA` constants, or
-    * any batch under `smallBatchCap`) on a certified store: dedup, content
+    * any batch within `Dictionary.LocalCap`) on a certified store: dedup, content
     * hashing, and the delta certificate's internal check run driver-side
     * over the tiny batch, so the whole append costs two bounded store
     * probes (the encoded duplicate scan and the dictionary claim scan)
@@ -1329,11 +1324,11 @@ object GraftStore {
     * LAZY-handle discipline (audited; StoreSpec pins the job bound): a
     * post-update handle's relations are lazy compositions whose delta
     * legs re-run per ACTION, so every multi-pass consumer here seals
-    * first — the co-group output checkpoints before decode (one
-    * execution of `after.enc`/`before.enc`), and `decodeAll` reads the
-    * union dictionary exactly once (one slim semi-join, itself
-    * checkpointed before the three per-column decode joins). Each input
-    * relation executes exactly once per diff.
+    * first — `decodeAll` pins the co-group output before it decodes (one
+    * execution of `after.enc`/`before.enc`) and reads the union
+    * dictionary exactly once (one probe for a small diff, one slim
+    * semi-join for a large one). Each input relation executes exactly
+    * once per diff.
     */
   def diff(spark: SparkSession, before: StoreHandle,
            after: StoreHandle): DataFrame = {
@@ -1347,14 +1342,13 @@ object GraftStore {
     // near-no-op after dedup).
     val a = after.enc.select(keys.map(col): _*).withColumn("__a", lit(1))
     val b = before.enc.select(keys.map(col): _*).withColumn("__b", lit(1))
-    // the |Δ|-sized survivors pin eagerly: the snapshot co-group runs
-    // ONCE (decodeAll otherwise executes its input twice — id harvest +
-    // decode joins), and the union dictionary stays raw — decodeAll
-    // dedups its slim post-filter mapping instead of shuffling |dict|
-    val delta = graft.Pins.checkpoint(a.join(b, keys, "full_outer")
+    // decodeAll pins the |Δ|-sized survivors, so the snapshot co-group
+    // runs ONCE; the union dictionary stays raw — decodeAll probes it
+    // for the appearing ids only instead of shuffling |dict|
+    val delta = a.join(b, keys, "full_outer")
       .where(col("__a").isNull || col("__b").isNull)
       .withColumn("change", when(col("__b").isNull, lit("+")).otherwise(lit("-")))
-      .select(col("change") +: keys.map(col): _*))
+      .select(col("change") +: keys.map(col): _*)
     Dictionary.decodeAll(delta, after.dict.unionByName(before.dict), keys)
       .select(col("change"), col("s"), col("p"), col("o"))
   }

@@ -14,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * callsite, so the histogram shows where the wall goes, not just the
   * job count — the gap between a gate's total wall and its summed job
   * wall is driver-side planning/collect time.
+  *
+  * SPARK_GRAFT_DECODE_CAP overrides `Dictionary.localDecodeCap` for the
+  * traced gates (0 forces every decode onto the distributed path), to
+  * trace the over-the-cap decode on small data.
   */
 object JobTrace {
   def main(args: Array[String]): Unit = {
@@ -67,7 +71,9 @@ object JobTrace {
           }
       })
     import scala.jdk.CollectionConverters._
-    gates.foreach { gate =>
+    val decodeCap = sys.env.get("SPARK_GRAFT_DECODE_CAP").map(_.toInt)
+      .getOrElse(graft.dict.Dictionary.LocalCap)
+    graft.dict.Dictionary.localDecodeCap.withValue(decodeCap)(gates.foreach { gate =>
       val fn = graft.SparkEntry.queries(gate)
       fn(spark, dir).collect() // warm (artifacts build here)
       sys.props("graft.pins.trace") = "1"
@@ -91,7 +97,7 @@ object JobTrace {
         .sortBy(-_._2.longValue).foreach { case (w, n) =>
           println(f"${n.longValue}%5d  $w")
         }
-    }
+    })
     spark.stop()
   }
 }

@@ -77,4 +77,33 @@ class DictionarySpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     terms.foreach(t => Dictionary.termHashLocal(t) shouldBe viaExpr(t))
   }
+
+  "Dictionary.collectBounded" should "return every row in partition order up to the cap, even when skewed" in {
+    import spark.implicits._
+    // 4 partitions, 7 of the 8 rows in the last one: over its 3-row share
+    // but within the cap, so a second job fetches that partition
+    val df = spark.sparkContext.parallelize(0 until 4, 4)
+      .flatMap(p => if (p == 0) Seq(1L) else if (p == 3) 2L to 8L else Nil)
+      .toDF("v")
+    Dictionary.collectBounded(df, 10).map(_.map(_.getLong(0)).toSeq) shouldBe
+      Some((1L to 8L).toSeq)
+    Dictionary.collectBounded(df, 8).map(_.length) shouldBe Some(8)
+    Dictionary.collectBounded(df, 7) shouldBe None
+    Dictionary.collectBounded(df.where(lit(false)), 0).map(_.length) shouldBe Some(0)
+  }
+
+  "Dictionary.decodeAll" should "render ids missing from the dictionary as _:<id> on both paths" in {
+    import spark.implicits._
+    val dict = Seq((1L, "a"), (2L, "b")).toDF("id", "term")
+    val df = Seq((1L, Option(2L), 7.5), (3L, None, 1.0)).toDF("x", "y", "v")
+    val expected = Seq(Seq("_:3", null, 1.0), Seq("a", "b", 7.5))
+    val local = Dictionary.decodeAll(df, dict, Seq("x", "y"))
+    val dist = Dictionary.localDecodeCap.withValue(0)(
+      Dictionary.decodeAll(df, dict, Seq("x", "y")))
+    for (d <- Seq(local, dist)) {
+      d.columns.toSeq shouldBe Seq("x", "y", "v")
+      d.collect().map(_.toSeq).toSeq.sortBy(_.head.toString) shouldBe expected
+    }
+    local.schema shouldBe dist.schema
+  }
 }

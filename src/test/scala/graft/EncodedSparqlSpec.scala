@@ -370,4 +370,138 @@ class EncodedSparqlSpec extends SparkSpec {
       .map(_.toList).sortBy(_.mkString) shouldBe
       Seq(List("1", "hub"), List("5", "leaf"), List("6", "leaf"))
   }
+
+  /** Did the top-level decode run on the driver? Its result is then a
+    * local relation; the distributed decode reads the pinned result.
+    */
+  private def decodedLocally(df: org.apache.spark.sql.DataFrame): Boolean =
+    !df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  /** Runs `query` with the driver-side decode and again with the decode
+    * forced onto the distributed path; both must give the same schema and
+    * rows (in result order when `ordered`). Returns the rows.
+    */
+  private def bothDecodes(query: => org.apache.spark.sql.DataFrame,
+                          ordered: Boolean = false): Seq[Seq[Any]] = {
+    val local = query
+    val dist = graft.dict.Dictionary.localDecodeCap.withValue(0)(query)
+    decodedLocally(local) shouldBe true
+    decodedLocally(dist) shouldBe false
+    local.schema shouldBe dist.schema
+    def rows(df: org.apache.spark.sql.DataFrame) = {
+      val r = df.collect().map(_.toSeq).toSeq
+      if (ordered) r else r.sortBy(_.mkString("\u0000"))
+    }
+    val out = rows(local)
+    rows(dist) shouldBe out
+    out should not be empty
+    out
+  }
+
+  private def select(q: String) =
+    Sparql.executeEncoded(spark, store, "PREFIX : <>\n" + q)
+
+  "The top-level decode" should "give the same rows on the driver as distributed" in {
+    // OPTIONAL leaves nulls
+    bothDecodes(select(
+      "SELECT ?x ?y ?z WHERE { ?x :2 ?y . OPTIONAL { ?y :4 ?z } }")) should
+      contain(Seq("5", "5", null))
+    // an absent constant decodes back to itself (zero-length path)
+    bothDecodes(select("SELECT ?x WHERE { \"zz\" :knows * ?x }")) shouldBe
+      Seq(Seq("zz"))
+    // ORDER BY with OFFSET/LIMIT keeps its order; DISTINCT + ORDER BY too
+    bothDecodes(select(
+      "SELECT ?x ?y WHERE { ?x :2 ?y } ORDER BY DESC(?x) OFFSET 1 LIMIT 2"),
+      ordered = true) shouldBe Seq(Seq("5", "5"), Seq("1", "3"))
+    bothDecodes(select(
+      "SELECT DISTINCT ?y WHERE { ?x :2 ?y } ORDER BY DESC(?y)"),
+      ordered = true) shouldBe Seq(Seq("5"), Seq("3"))
+    bothDecodes(select("SELECT DISTINCT ?p WHERE { ?s ?p ?o }")) shouldBe
+      Seq(Seq("2"), Seq("4"), Seq("knows"), Seq("name"))
+  }
+
+  it should "keep aggregate columns' types on both paths" in {
+    val q = """SELECT ?x (COUNT(?y) AS ?n) (GROUP_CONCAT(?y) AS ?ys)
+              |WHERE { ?x :4 ?y } GROUP BY ?x""".stripMargin
+    select(q).schema("n").dataType shouldBe org.apache.spark.sql.types.LongType
+    bothDecodes(select(q)) shouldBe Seq(Seq("3", 2L, "5 6"))
+  }
+
+  it should "give the same CONSTRUCT skolems and DESCRIBE rows on both paths" in {
+    bothDecodes(Sparql.construct(spark, store,
+      """PREFIX : <>
+        |CONSTRUCT { ?a :via _:hop . _:hop :to ?c }
+        |WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin)).size shouldBe 4
+    bothDecodes(Sparql.describe(spark, store,
+      """PREFIX : <>
+        |DESCRIBE <3>""".stripMargin)).size shouldBe 3
+  }
+
+  /** Jobs started while `body` runs (listener events drain first). */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try body
+      finally {
+        Thread.sleep(300)
+        spark.sparkContext.removeSparkListener(l)
+      }
+    (out, jobs.get())
+  }
+
+  it should "cost one collect job and one dictionary probe job for a small SELECT" in {
+    val q = "SELECT ?x ?y WHERE { ?x :knows ?y }"
+    select(q).collect() // warm: store artifacts and codegen
+    val (rows, jobs) = jobsDuring(select(q).collect())
+    rows.map(_.toSeq).toSet shouldBe
+      Set(Seq("a", "b"), Seq("b", "c"), Seq("c", "a"))
+    jobs should be <= 2
+  }
+
+  "Sparql.update" should "not change the session's limit settings under a concurrent query" in {
+    val key = "spark.sql.limit.initialNumPartitions"
+    val q = "SELECT ?x ?y WHERE { ?x :knows ?y }"
+    val expected = select(q).collect().map(_.toSeq).toSet
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    // sampled at every job start: the session conf, and the conf the job
+    // was submitted under (SQL executions copy it to job properties)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        spark.conf.getAll.get(key).foreach(v => seen.add(s"session: $v"))
+        Option(j.properties).flatMap(p => Option(p.getProperty(key)))
+          .foreach(v => seen.add(s"job ${j.jobId}: $v"))
+      }
+    }
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val reads = pool.submit(new java.util.concurrent.Callable[Seq[Set[Seq[Any]]]] {
+        def call() = (1 to 3).map(_ => select(q).collect().map(_.toSeq).toSet)
+      })
+      val after = Sparql.update(spark, store,
+        """PREFIX : <>
+          |DELETE { ?x :2 ?y } INSERT { ?y :back ?x } WHERE { ?x :2 ?y } ;
+          |INSERT { ?x :seen "1" } WHERE { ?x :name ?n } ;
+          |INSERT DATA { <d> :knows <e> }""".stripMargin)
+      reads.get().foreach(_ shouldBe expected)
+      Sparql.executeEncoded(spark, after,
+        "PREFIX : <>\nSELECT ?y ?x WHERE { ?y :back ?x }").count() shouldBe 3L
+    } finally {
+      pool.shutdown()
+      Thread.sleep(300)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    jobs.get() should be > 0
+    seen.toArray.toSeq shouldBe empty
+  }
 }

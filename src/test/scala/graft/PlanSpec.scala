@@ -262,9 +262,39 @@ class PlanSpec extends SparkSpec {
   }
 
   "q_sparql_service_enc" should "broadcast the endpoint on the ENCODED path too" in {
-    val p = finalPlan("q_sparql_service_enc")
-    p should include("BroadcastHashJoin")
-    p should not include "CartesianProduct"
+    // The encoded result is pinned and decoded inside the gate call, so
+    // the endpoint join runs in the pinning execution, not in the plan of
+    // the returned frame: check the join over the endpoint's `r_name`
+    // scan in every plan the gate executes.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+    def nodes(p: SparkPlan, stopAtJoins: Boolean = false): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan, stopAtJoins)
+      case q: QueryStageExec => nodes(q.plan, stopAtJoins)
+      case j: BaseJoinExec if stopAtJoins => Seq(j)
+      case o => o +: o.children.flatMap(nodes(_, stopAtJoins))
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      finalPlan("q_sparql_service_enc")
+      Thread.sleep(500) // listener events are async
+    } finally spark.listenerManager.unregister(l)
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq.flatMap(nodes(_))
+    val endpointJoins = all.collect {
+      // a join with the endpoint scan in a child's subtree, no join between
+      case j: BaseJoinExec if j.children.exists(c =>
+        nodes(c, stopAtJoins = true).exists(_.output.exists(_.name == "r_name"))) => j
+    }
+    endpointJoins should not be empty
+    endpointJoins.foreach(_ shouldBe a[BroadcastHashJoinExec])
+    all.map(_.nodeName) should not contain "CartesianProduct"
   }
 
   "q_rdfs_closure" should "run every rule as a broadcast join" in {
