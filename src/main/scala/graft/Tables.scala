@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ScopedConf
 
 /** Loaders for the driver's deterministic parquet testdata
   * (see /root/repo/TESTDATA.md). Every `SparkEntry.queries` entry takes an
@@ -35,10 +36,14 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   /** events.ts is TIMESTAMP(NANOS) parquet, which Spark 4 refuses to read
     * natively; read nanos as long and convert to a (micros) timestamp.
+    * The read is set up in a session clone carrying the legacy setting
+    * (the scan keeps that session), so the caller's session is unchanged.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
+    val raw = ScopedConf.withConf(s,
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true") { sc =>
+      sc.out(load(sc.session, d, "events"))
+    }
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.LongType
     if (raw.schema("ts").dataType == LongType)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.ScopedConf
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -644,53 +645,12 @@ object GraphOps {
   private[graft] val lastSccRounds =
     new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Per-session depth + saved confs for the scoped SMALL-FIXPOINT
-    * window of [[stronglyConnectedComponents]] — re-entrant and safe
-    * under the parallel fwd/bwd propagation threads. */
-  private val fixConfState = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession,
-    (java.util.concurrent.atomic.AtomicInteger, String, String)]()
+  /** SCC passes over a remainder of at most this many edges and nodes
+    * run in the small-pass scope of [[stronglyConnectedComponents]]. */
+  private val SccSmallPassRows = 1L << 20
 
-  /** Run `f` (fixpoint rounds over a SIZE-GATED small remainder) with
-    * AQE off and the shuffle width capped at `parts`. A fixpoint round
-    * is one action over a join+aggregate plan; with AQE on, every query
-    * stage of every round is submitted as its OWN job, so the ~1-job
-    * round becomes 3-4 jobs of pure scheduling floor — and the rounds
-    * are SEQUENTIAL, so the floor multiplies by the round count
-    * (measured on q_scc: the dominant cost at sf0.1·local[32]). AQE's
-    * value on these frames would be coalescing tiny shuffle partitions;
-    * the explicit width cap does that directly. Callers gate the window
-    * on the MEASURED remainder size (never the input's), so
-    * cluster-scale fixpoints over large remainders keep AQE and full
-    * width.
-    */
-  private def withSmallFixpointConf[A](spark: org.apache.spark.sql.SparkSession,
-                                       parts: Int)(f: => A): A = {
-    val kA = "spark.sql.adaptive.enabled"
-    val kP = "spark.sql.shuffle.partitions"
-    fixConfState.synchronized {
-      val st = fixConfState.get(spark)
-      if (st == null) {
-        fixConfState.put(spark,
-          (new java.util.concurrent.atomic.AtomicInteger(1),
-            spark.conf.get(kA, "true"), spark.conf.get(kP)))
-        spark.conf.set(kA, "false")
-        if (parts > 0)
-          spark.conf.set(kP,
-            math.min(parts, spark.conf.get(kP).toInt).toString)
-      } else st._1.incrementAndGet()
-    }
-    try f finally {
-      fixConfState.synchronized {
-        val st = fixConfState.get(spark)
-        if (st._1.decrementAndGet() == 0) {
-          spark.conf.set(kA, st._2)
-          spark.conf.set(kP, st._3)
-          fixConfState.remove(spark)
-        }
-      }
-    }
-  }
+  /** Shuffle width cap inside SCC's small-pass scope. */
+  private val SccSmallPassParts = 16
 
   /** Largest edge-relation size the most recent
     * [[stronglyConnectedComponents]] call worked with (input edges or
@@ -741,7 +701,11 @@ object GraphOps {
     * [[lastSccEdges]]), still exact and still bounded by `maxRounds`.
     * Shuffle-shaped like [[connectedComponents]] (keyed equi-joins,
     * nothing driver-side), so it scales with the edge relation up to
-    * the budget; `maxRounds` bounds the total loudly.
+    * the budget; `maxRounds` bounds the total loudly. A pass over a
+    * remainder of at most 2^20 edges and nodes runs in a clone of the
+    * session with AQE off and at most 16 shuffle partitions
+    * ([[ScopedConf]]); the caller's session settings are never
+    * written, and the returned frame is bound to the caller's session.
     */
   def stronglyConnectedComponents(spark: org.apache.spark.sql.SparkSession,
                                   edges: DataFrame,
@@ -821,8 +785,8 @@ object GraphOps {
             lastSccEdges.updateAndGet(m => math.max(m, n2))
           }
         }
-        // under the small-pass window AQE is off, so the runtime
-        // broadcast conversion it would apply to this ≤fixCap-row label
+        // in the small-pass scope AQE is off, so the runtime broadcast
+        // conversion it would apply to this ≤SccSmallPassRows-row label
         // side must be explicit — without the hint the static planner
         // sees an unsized LogicalRDD and falls back to sort-merge
         val labJ = if (small) broadcast(lab) else lab
@@ -837,29 +801,19 @@ object GraphOps {
     }
     val parts = scala.collection.mutable.ListBuffer[DataFrame]()
     var remaining = remN.count()
-    // SMALL-FIXPOINT window gate (see withSmallFixpointConf): measured
-    // remainder size, never the input's — a pass over ≤ fixCap edges
-    // and nodes runs its sequential rounds without AQE's per-stage job
-    // fan-out and at a bounded shuffle width (the doubling budget keeps
-    // in-window growth ≤ budgetFactor × fixCap). Large remainders keep
-    // AQE and full width untouched.
-    val fixCap = spark.conf
-      .get("spark.graft.graph.sccSmallFixpointRows",
-        (1L << 20).toString).toLong
-    val fixParts = spark.conf
-      .get("spark.graft.graph.sccFixpointParts", "16").toInt
     var curE = e0
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     while (remaining > 0) {
-      def passBody(): Unit = {
+      // one peeling pass: advances remN/remaining (and remE/curE while
+      // vertices remain) and returns the vertices it determined
+      def pass(small: Boolean): DataFrame = {
         // fwd and bwd are INDEPENDENT fixpoints over the same remainder
         // (guide §2.6 overlap independent jobs): bwd runs on a second
         // driver thread so each propagation round's scheduling floor is
         // paid once per PAIR of rounds, and the tail tasks of one
         // fixpoint back-fill cores the other leaves idle.
-        val small = math.max(curE, remaining) <= fixCap
         val bwdF = Future(minReach(
           remE.select(col("b").as("a"), col("a").as("b")), remN, small))
         val fwd = minReach(remE, remN, small)
@@ -869,7 +823,6 @@ object GraphOps {
           fwd.join(if (small) broadcast(bwdJ) else bwdJ, "node"))
         val det = both.where(col("lab") === col("lab2"))
           .select(col("node"), col("lab").as("scc"))
-        parts += det
         // lazy pin + count = one job (the count materializes it)
         val (remN2, nRem) = pins.pinCounted(
           both.where(col("lab") =!= col("lab2")).select(col("node")))
@@ -893,10 +846,33 @@ object GraphOps {
           remE = remE2
           curE = nE2
         }
+        det
       }
-      if (math.max(curE, remaining) <= fixCap)
-        withSmallFixpointConf(spark, fixParts)(passBody())
-      else passBody()
+      // SMALL-PASS scope, gated on the MEASURED remainder (never the
+      // input's, and the doubling budget keeps in-pass growth
+      // ≤ budgetFactor × SccSmallPassRows): the pass runs in a session
+      // clone with AQE off and the shuffle width capped. A fixpoint
+      // round is one action over a join+aggregate plan; with AQE on,
+      // every query stage of every round is submitted as its OWN job,
+      // so the ~1-job round becomes 3-4 jobs of pure scheduling floor —
+      // and the rounds are SEQUENTIAL, so the floor multiplies by the
+      // round count (measured on q_scc: the dominant cost at
+      // sf0.1·local[32]). AQE's value on these frames would be
+      // coalescing tiny shuffle partitions; the width cap does that
+      // directly. Large remainders keep AQE and full width. Everything
+      // the pass keeps is re-bound to the caller's session on the way
+      // out, so the final seal plans under the caller's settings.
+      if (math.max(curE, remaining) > SccSmallPassRows)
+        parts += pass(small = false)
+      else ScopedConf.withConf(spark,
+          "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> math.min(SccSmallPassParts,
+            spark.conf.get("spark.sql.shuffle.partitions").toInt).toString) {
+        s =>
+          remE = s.in(remE); remN = s.in(remN)
+          val det = pass(small = true)
+          parts += s.out(det); remN = s.out(remN); remE = s.out(remE)
+      }
     }
     lastSccRounds.set(rounds.get())
     if (parts.isEmpty)

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ScopedConf
 import org.apache.spark.sql.functions._
 
 /** RDFS forward-chaining materialization (the rho-df core: rdfs2/3 domain
@@ -297,44 +298,20 @@ object ReasonOps {
     * instead of scheduling a separate isEmpty job per probe — the
     * maintenance gates' job floor is probes × scheduling latency, and
     * every one of these was a whole extra job. An EMPTY result (n == 0)
-    * additionally skips the localization collect entirely: the count
-    * already proves there is nothing to ship, so the empty LocalRelation
-    * is built driver-side with zero further jobs.
+    * comes back as an empty LocalRelation built driver-side with zero
+    * further jobs.
+    *
+    * The materializing count (or guard aggregate) runs with AQE off, in
+    * a clone of the session ([[ScopedConf]]): a pinned frame is
+    * ≤ deltaCap rows by contract and its plan is broadcast joins + one
+    * explicit repartition — AQE has nothing to re-optimize there, but
+    * it executes every query stage as its OWN job, doubling-plus the
+    * scheduling floor of the maintenance gates' many tiny pins
+    * (measured on q_owl_full_delta / q_owl_haskey_delta: −18% wall from
+    * this alone at sf0.1·local[32]). The lazy checkpoint itself, and
+    * with it the frame the caller gets back, stays in the caller's
+    * session, so corpus-sized actions over the pin keep AQE.
     */
-  /** Per-session depth + saved value for the scoped AQE-off window of
-    * [[pinCappedN]] — re-entrant (pins nest through incrementNovel) and
-    * safe under the update scripts' concurrent prefetch pins. */
-  private val pinAqeState = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, (java.util.concurrent.atomic.AtomicInteger, String)]()
-
-  /** Run `f` (a Δ-frame materialization) with AQE off. A pinned frame is
-    * ≤ deltaCap rows by contract and its plan is broadcast-joins + one
-    * explicit repartition — AQE has nothing to re-optimize there, but it
-    * executes every query stage as its OWN job, doubling-plus the
-    * scheduling floor of the maintenance gates' many tiny pins (measured
-    * on q_owl_full_delta / q_owl_haskey_delta: −18% wall from this alone
-    * at sf0.1·local[32]). Corpus-sized actions keep AQE: only the pin's
-    * materializing action runs inside the window.
-    */
-  private def withAqeOffForPin[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.adaptive.enabled"
-    val st = pinAqeState.computeIfAbsent(spark, s =>
-      (new java.util.concurrent.atomic.AtomicInteger(0),
-        s.conf.get(key, "true")))
-    pinAqeState.synchronized {
-      if (st._1.getAndIncrement() == 0) {
-        pinAqeState.put(spark, (st._1, spark.conf.get(key, "true")))
-        spark.conf.set(key, "false")
-      }
-    }
-    try f finally {
-      pinAqeState.synchronized {
-        if (st._1.decrementAndGet() == 0)
-          spark.conf.set(key, pinAqeState.get(spark)._2)
-      }
-    }
-  }
-
   private def pinCappedN(df: DataFrame, cap: Option[Long], what: String,
                          remat: String,
                          guard: Option[(org.apache.spark.sql.Column,
@@ -342,58 +319,12 @@ object ReasonOps {
     if (sys.props.contains("graft.pins.trace"))
       pinLabelCounts.merge(what, 1L, (a, b) => a + b)
     val eff = effectiveDeltaCap(df.sparkSession, cap)
-    // Small-delta fast path: collect to a DRIVER-LOCAL relation in ONE
-    // job. Every maintenance probe is broadcast at its use sites, and a
-    // broadcast of a LocalTableScan is JOB-FREE (the exchange collects
-    // driver-side) — whereas a pinned probe pays one broadcast-exchange
-    // job per distinct use-plan, and the lazily-chained corpus plans
-    // the maintenance ops return RE-EXECUTE those exchanges in every
-    // subsequent action. Measured on q_owl_haskey_delta: 101 of 114
-    // warm-run jobs were broadcast exchanges, and localizing its
-    // probes cut it to 91. A local relation, however, RE-SHIPS its
-    // rows from the driver on every action that scans it, so
-    // localization only wins in the driver-floor regime (tiny
-    // maintenance batches, interactive sessions) — at bench scale
-    // (sf0.1, local[32], repeat-3) the re-ship cost measured
-    // q_owl_full_delta 7.6 -> 14.1 s and the other loop-heavy delta
-    // gates 2-3x SLOWER, against a driver-floor win of 114 -> 91
-    // jobs on q_owl_haskey_delta. Default OFF; do NOT flip it on for
-    // a large session — opt in with
-    // `spark.graft.reason.inlineProbeCap` (rows; probes at or under
-    // it collapse to driver-local relations) only when the session
-    // lives in the driver-job-floor regime. EMPTY probes (n == 0)
-    // always localize regardless of the cap: an empty LocalRelation
-    // re-ships nothing and lets PropagateEmptyRelation fold away the
-    // joins it feeds, so it is strictly cheaper than a pinned empty
-    // frame (this is the configuration every bench anchor was
-    // measured under — intentional, not a disabled-feature leak).
-    val icap = math.min(eff, math.max(0L,
-      df.sparkSession.conf
-        .get("spark.graft.reason.inlineProbeCap", "0").toLong))
-    // Materialize the probe NARROW (spark.graft.reason.deltaPartitions,
-    // default 1): a Δ-derived frame is ≤ deltaCap rows by the contract
-    // enforced right below — broadcastable at ANY corpus scale — but a
-    // broadcast-join output inherits the STREAMED side's partitioning,
-    // i.e. the corpus scan's width. Left that wide, every downstream
-    // use (broadcast-exchange collect per distinct use-plan, novelty
-    // counts, convergence probes) schedules one near-empty task per
-    // corpus partition. The explicit round-robin exchange moves only
-    // Δ rows once and keeps the corpus-scan stage at full width
-    // (coalesce would collapse the scan itself), so each of the many
-    // downstream jobs reads one block instead of scheduling
-    // numShufflePartitions empty tasks. Scale note: this is NOT a
-    // local[32] tune — the frame is broadcast-bound by contract, so a
-    // handful of partitions is the right width on a cluster too (the
-    // knob exists for sessions that raise deltaCap toward its 2^21
-    // default and want a few hundred MB spread over more tasks).
-    val dparts = math.max(1, df.sparkSession.conf
-      .get("spark.graft.reason.deltaPartitions", "1").toInt)
     // An already-EMPTY LocalRelation (a prior pin's empty result, or a
     // composition PropagateEmptyRelation folded away) pins job-free —
     // nothing to materialize, nothing to guard. NON-empty locals fall
     // through to the normal pin: keeping them driver-local re-ships
-    // their rows into every corpus-side derivation leg (the measured
-    // inlineProbeCap slowdown — q_owl_haskey_delta 2x worse).
+    // their rows into every corpus-side derivation leg (measured 2-3x
+    // slower on the loop-heavy delta gates).
     if (guard.isEmpty) df.queryExecution.optimizedPlan match {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
           if l.data.isEmpty =>
@@ -406,19 +337,32 @@ object ReasonOps {
           df.schema), 0L)
       case _ => ()
     }
-    val c = graft.Pins.checkpointLazy(df.repartition(dparts))
+    // Materialize the probe NARROW (DeltaPartitions): a Δ-derived
+    // frame is ≤ deltaCap rows by the contract enforced right below —
+    // broadcastable at ANY corpus scale — but a broadcast-join output
+    // inherits the STREAMED side's partitioning, i.e. the corpus scan's
+    // width. Left that wide, every downstream use (broadcast-exchange
+    // collect per distinct use-plan, novelty counts, convergence
+    // probes) schedules one near-empty task per corpus partition. The
+    // explicit round-robin exchange moves only Δ rows once and keeps
+    // the corpus-scan stage at full width (coalesce would collapse the
+    // scan itself).
+    val c = graft.Pins.checkpointLazy(df.repartition(DeltaPartitions))
     try {
       // the guard's violation count rides the same materializing job as
-      // the row count (one agg instead of count + filter-isEmpty probe);
-      // the materialization runs with AQE off (see withAqeOffForPin)
-      val n = withAqeOffForPin(df.sparkSession)(guard match {
-        case None => c.count()
-        case Some((cond, msg)) =>
-          val row = c.agg(
-            count(lit(1)), count(when(cond, lit(1)))).collect()(0)
-          require(row.getLong(1) == 0, msg())
-          row.getLong(0)
-      })
+      // the row count (one agg instead of count + filter-isEmpty probe)
+      val n = ScopedConf.withConf(df.sparkSession,
+          "spark.sql.adaptive.enabled" -> "false") { s =>
+        val cs = s.in(c)
+        guard match {
+          case None => cs.count()
+          case Some((cond, msg)) =>
+            val row = cs.agg(
+              count(lit(1)), count(when(cond, lit(1)))).collect()(0)
+            require(row.getLong(1) == 0, msg())
+            row.getLong(0)
+        }
+      }
       require(n <= eff,
         s"$what has $n rows - exceeds deltaCap=$eff. Maintenance " +
           s"broadcasts are delta-sized by contract; a change set this " +
@@ -434,16 +378,6 @@ object ReasonOps {
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           df.schema), 0L)
       }
-      if (n <= icap) {
-        // tiny probe: collect from the just-materialized blocks (one
-        // cheap cached-read job — the frame is NEVER re-evaluated) and
-        // release the pin; re-ship cost at this size is microseconds
-        val head = c.collect()
-        graft.Pins.unpin(c)
-        import scala.jdk.CollectionConverters._
-        return (df.sparkSession.createDataFrame(
-          new java.util.ArrayList(head.toSeq.asJava), df.schema), n)
-      }
       (c, n)
     } catch {
       case t: Throwable =>
@@ -451,6 +385,12 @@ object ReasonOps {
         throw t
     }
   }
+
+  /** Partitions a maintenance pin is materialized into (see
+    * [[pinCappedN]]). One is right at any scale: the frame is
+    * broadcast-bound by contract.
+    */
+  private val DeltaPartitions = 1
 
   /** Collapse a plan built PURELY over driver-local relations back to
     * one LocalRelation (one small execution, here). Catalyst only
@@ -784,8 +724,7 @@ object ReasonOps {
     // the hit set is Δ-bounded (|hits| <= |inc|) but CORPUS-derived:
     // left lazy, its broadcast re-executes the existence scan in every
     // downstream action reading the composed closure — pinCapped pays
-    // that scan exactly once (and collapses to a driver-local relation
-    // under the inline cap, making the downstream broadcast job-free)
+    // that scan exactly once
     val hitsRaw = ex.join(broadcast(probe), condE, "left_semi")
       .toDF(cols.map("__h_" + _): _*)
     val hits =
@@ -5797,9 +5736,7 @@ object ReasonOps {
     // (a necessary condition for any new full-tuple collision), then
     // the candidates' complete evidence slab (memberships + every key
     // position). Tuple assembly, grouping, and the star derivation all
-    // run over the Δ-fan-in-sized slab — under the inline cap that
-    // slab is a driver-local relation and the whole downstream
-    // derivation is broadcast-job-free.
+    // run over the Δ-fan-in-sized slab.
     val p0s = keys.map(_._2.head).distinct
     val allKeyProps = keys.flatMap(_._2).distinct
     val keyClasses = keys.map(_._1).distinct
@@ -5826,62 +5763,17 @@ object ReasonOps {
         .join(broadcast(candUnion), col("s") === col("__t"),
           "left_semi"),
       deltaCap, "hasKey candidate evidence slab", remat)
-    // DRIVER-SIDE tuple assembly when the Δ-fan-in slab collapsed to a
-    // driver-local relation (the identityMappingLocal discipline):
-    // every distributed assembly step — the per-position joins, the
-    // tuple grouping, the star join-back — schedules broadcast and
-    // aggregate jobs even over tiny local inputs, so a k-position
-    // axiom pays ~k+2 jobs per round for work the driver does in
-    // microseconds. The derivation below replays the distributed legs
-    // exactly (same membership gating, same per-position combination
-    // semantics, same UTF-8/long min for the star anchor) and returns
-    // a BARE local relation, keeping every downstream consumer
-    // job-free. Above the inline cap the distributed path is unchanged.
+    // Both pins came back EMPTY (pinCappedN returns driver-local
+    // relations only then): no candidate carries key evidence, so no
+    // tuple can collide — return the empty pair relation job-free
+    // instead of planning the assembly below over empty inputs.
     def isBareLocal(df: DataFrame): Boolean =
       df.queryExecution.analyzed
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
     if (isBareLocal(slab) && isBareLocal(candAll)) {
-      val slabRows = slab.collect().map(r => (r.get(0), r.get(1), r.get(2)))
-      val touchedSet = touched.collect().map(_.get(0)).toSet
-      val candRows = candAll.collect().map(r => (r.get(0), r.get(1)))
-      val tySet = ty.toSet
-      val pairs = scala.collection.mutable.LinkedHashSet[(Any, Any)]()
-      keys.foreach { case (cls, props) =>
-        val cand = touchedSet ++
-          candRows.collect { case (p0, s0) if p0 == props.head => s0 }
-        val members = slabRows.collect {
-          case (s0, p0, o0) if tySet(p0) && o0 == cls && cand(s0) => s0
-        }.toSet
-        val valsOf = slabRows.filter(r => members(r._1))
-          .groupBy(r => (r._1, r._2))
-          .map { case (k2, rs) => (k2, rs.map(_._3).distinct.toSeq) }
-        val groups =
-          scala.collection.mutable.HashMap[Seq[Any],
-            scala.collection.mutable.LinkedHashSet[Any]]()
-        members.foreach { m =>
-          val slots = props.map(p0 => valsOf.getOrElse((m, p0), Nil))
-          if (slots.forall(_.nonEmpty)) {
-            val combos = slots.foldLeft(Seq(Seq.empty[Any])) {
-              (accT, vs) => accT.flatMap(t2 => vs.map(v => t2 :+ v)) }
-            combos.foreach { tup =>
-              groups.getOrElseUpdate(tup,
-                scala.collection.mutable.LinkedHashSet[Any]()) += m
-            }
-          }
-        }
-        groups.values.foreach { ents =>
-          if (ents.size > 1) {
-            val mn = ents.reduceLeft((a, b) =>
-              if (minTermLess(a, b)) a else b)
-            ents.foreach(e => if (e != mn) pairs += ((mn, e)))
-          }
-        }
-      }
       val dt = slab.schema.fields.head.dataType
-      import scala.jdk.CollectionConverters._
       return rw.sparkSession.createDataFrame(
-        new java.util.ArrayList(pairs.toSeq.map(p2 =>
-          org.apache.spark.sql.Row(p2._1, p2._2)).asJava),
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq("a", "b").map(
           org.apache.spark.sql.types.StructField(_, dt,
             nullable = false))))

@@ -4218,6 +4218,13 @@ object Sparql {
       "CLEAR/DROP/CREATE, and COPY/MOVE/ADD")
   }
 
+  /** Modify solution sets at or under this row count take the broadcast
+    * probe-and-union shape in [[updateQuads]]/[[updateQuadsEnc]]; larger
+    * deltas fall back to shuffle joins plus a full checkpoint (the right
+    * trade once Δ rivals the store).
+    */
+  private val UpdateBroadcastMax = 1000000L
+
   /** Apply a SPARQL 1.1 Update script to a quad dataset and return the
     * updated (s, p, o, g) relation — pure DataFrame algebra, lazily
     * composed: ground data ops are null-safe anti-join/union deltas
@@ -4232,8 +4239,7 @@ object Sparql {
     * references the dataset MORE THAN ONCE (inserts probe-and-union,
     * modifies join their own WHERE) CHECKPOINT before the next op —
     * without this the plan doubles per op and a few chained modifies
-    * exceed Catalyst analysis memory; with it the plan stays linear and
-    * superseded intermediates release when the final state seals (the
+    * exceed Catalyst analysis memory; with it the plan stays linear (the
     * same per-op materialization discipline as the store-handle engine).
     *
     * RESULT OWNERSHIP: the returned relation is LAZY by default — the
@@ -4244,9 +4250,7 @@ object Sparql {
     * (they are reachable from the plan and must not be released), and
     * each ACTION on the result re-runs the |Δ|-sized composition legs —
     * cheap, but a consumer scanning the result many times should
-    * checkpoint it once. Set `spark.graft.update.materialize=true` to
-    * get that compaction built in: the result seals into one
-    * self-owned frame and every intermediate pin releases immediately.
+    * checkpoint it once.
     */
   def updateQuads(spark: SparkSession, quads: DataFrame,
                   updateText: String): DataFrame = {
@@ -4293,20 +4297,13 @@ object Sparql {
       df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
     def unionQ(a: DataFrame, b: DataFrame): DataFrame =
       a.unionByName(realias(b))
+    // pins materialize |Δ|-sized intermediates and cut their lineage.
+    // The invariant this buys: the BIG quad relation only ever appears
+    // ONCE in any op's un-truncated output lineage (as the streaming side
+    // of filters, broadcast anti joins and unions), so chained scripts
+    // grow the plan LINEARLY and never checkpoint the full dataset per
+    // op — the |store|-sized writes that dominated the three-modify gate.
     val pins = new graft.Pins
-    var pinned = false
-    // Materialize a |Δ|-sized intermediate and cut its lineage. The
-    // invariant this buys: the BIG quad relation only ever appears ONCE
-    // in any op's un-truncated output lineage (as the streaming side of
-    // filters, broadcast anti joins and unions), so chained scripts grow
-    // the plan LINEARLY and never checkpoint the full dataset per op —
-    // the |store|-sized writes that dominated the three-modify gate.
-    def pinSmall(df: DataFrame): DataFrame = { pinned = true; pins.pin(df) }
-    // solution sets at or under this row count take the broadcast
-    // probe-and-union shape; larger deltas fall back to shuffle joins
-    // plus a full checkpoint (the right trade once Δ rivals the store)
-    val maxBroadcastDelta =
-      spark.conf.get("spark.graft.update.broadcastMax", "1000000").toLong
     def applyOp(q: DataFrame, op: QuadOp): DataFrame = op match {
       case QNop => q
       case QGround(true, rows) =>
@@ -4317,7 +4314,7 @@ object Sparql {
         // its lineage is referenced once (the pin truncates `present`)
         val add = quadsDF(rows).dropDuplicates("s", "p", "o", "g")
         val present =
-          pinSmall(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
+          pins.pin(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
         unionQ(q, minus(add, present, smallRight = true))
       case QGround(false, rows) =>
         minus(q, quadsDF(rows), smallRight = true)
@@ -4341,10 +4338,9 @@ object Sparql {
         // materialized by the count) — the pin-then-count sequence paid
         // the per-job scheduling floor twice
         val (sols, solsCnt) = graft.Prof.t("  qmod.pinSols+count") {
-          pinned = true
           pins.pinCounted(compileGroup(env, where))
         }
-        val small = solsCnt <= maxBroadcastDelta
+        val small = solsCnt <= UpdateBroadcastMax
         def inst(t: Group): DataFrame = {
           def termCol(x: Term): Column = x match {
             case V(v) => col(v)
@@ -4380,7 +4376,7 @@ object Sparql {
         // common case (Δ fits a broadcast): the dataset STREAMS through
         // a broadcast anti join per delete template and one broadcast
         // semi probe per insert template — zero dataset shuffles, zero
-        // full checkpoints, linear plan growth (see pinSmall). Big-Δ
+        // full checkpoints, linear plan growth (see pins). Big-Δ
         // fallback: shuffle joins + one full checkpoint after the op.
         del.foreach(t => q2 = minus(q2, inst(t), smallRight = small))
         ins.foreach { t =>
@@ -4391,14 +4387,14 @@ object Sparql {
             // eager-checkpoint job)
             val add = inst(t)
             val present =
-              pinSmall(q2.join(broadcast(renamed(add)), quadCond, "left_semi"))
+              pins.pin(q2.join(broadcast(renamed(add)), quadCond, "left_semi"))
             q2 = unionQ(q2, minus(add, present, smallRight = true))
           } else {
             val add = inst(t)
             q2 = unionQ(q2, minus(add, q2, smallRight = false))
           }
         }
-        if (small) q2 else { pinned = true; pins.pin(q2) }
+        if (small) q2 else pins.pin(q2)
       case QMove(kind, from, to) =>
         // from == to parses to QNop (spec: a self-move is a no-op), so
         // the target slice can be dropped up front in every form
@@ -4425,7 +4421,7 @@ object Sparql {
             // pick the strategy); the |new|-sized result pins so the
             // dataset's lineage is referenced once downstream
             val moved = slice(from)(q).withColumn("g", toLit)
-            val fresh = pinSmall(minus(moved, slice(to)(q), smallRight = false))
+            val fresh = pins.pin(minus(moved, slice(to)(q), smallRight = false))
             unionQ(q, fresh)
         }
       case QLoad(src, into) =>
@@ -4450,21 +4446,16 @@ object Sparql {
           case Some(g) => parsed.withColumn("g", lit(g))
           case None => parsed
         }
-        val fresh = pinSmall(minus(
+        val fresh = pins.pin(minus(
           target.dropDuplicates("s", "p", "o", "g"), q, smallRight = false))
         unionQ(q, fresh)
     }
     // ops with a broadcastable Δ pin only |Δ|-sized intermediates inside
     // applyOp, so the fold itself never checkpoints the full dataset;
     // the one big-Δ fallback (QModify above) pins its own result.
-    // Like [[updateQuadsEnc]], the DEFAULT result is the LAZY
-    // composition (base + pinned broadcast deltas — the tombstone-lazy
-    // update discipline); a full-pass materialization is the COMPACTION
-    // choice behind spark.graft.update.materialize=true.
-    val result = ops.result().foldLeft(quads)(applyOp)
-    val materialize =
-      spark.conf.get("spark.graft.update.materialize", "false").toBoolean
-    if (pinned && materialize) pins.seal(result) else result
+    // Like [[updateQuadsEnc]], the result is the LAZY composition (base
+    // + pinned broadcast deltas — the tombstone-lazy update discipline).
+    ops.result().foldLeft(quads)(applyOp)
   }
 
   /** ENCODED named-graph Update — the [[updateQuads]] surface executed on
@@ -4487,8 +4478,7 @@ object Sparql {
     * dictionary round trip.
     *
     * RESULT OWNERSHIP: lazy by default with pin ownership transferred to
-    * the returned relation — see [[updateQuads]]; the same
-    * `spark.graft.update.materialize=true` compaction conf applies.
+    * the returned relation — see [[updateQuads]].
     */
   def updateQuadsEnc(spark: SparkSession, encQuads: DataFrame, dict: DataFrame,
                      updateText: String): (DataFrame, DataFrame) = {
@@ -4621,10 +4611,6 @@ object Sparql {
     def unionQ(a: DataFrame, b: DataFrame): DataFrame =
       a.unionByName(realias(b))
     val pins = new graft.Pins
-    var pinned = false
-    def pinSmall(df: DataFrame): DataFrame = { pinned = true; pins.pin(df) }
-    val maxBroadcastDelta =
-      spark.conf.get("spark.graft.update.broadcastMax", "1000000").toLong
     /** The WHERE-evaluation half of a modify op against an explicit
       * relation + dictionary SNAPSHOT — hazard-free ops prefetch it
       * CONCURRENTLY against the pre-script dataset (see the fold below);
@@ -4680,7 +4666,6 @@ object Sparql {
         Some(EncEnv(dict, ids, localDict, plainVarsOfG(where))),
         quads = Some(q.where(col("g").isNotNull)))
       graft.Prof.t("  qmod.pinSols+count") {
-        pinned = true
         pins.pinCounted(compileGroup(env, where))
       }
     }
@@ -4693,11 +4678,11 @@ object Sparql {
         : (DataFrame, Long, Option[DataFrame]) = {
       val (sols, cnt) = prepQModify(q0, dict, m.withG, m.where)
       val pres =
-        if (cnt <= maxBroadcastDelta && m.ins.size == 1) {
+        if (cnt <= UpdateBroadcastMax && m.ins.size == 1) {
           val afterDel = m.del.foldLeft(q0)((qq, t) =>
             minus(qq, instTmpl(sols, m.withG, t), smallRight = true))
           val add = instTmpl(sols, m.withG, m.ins.get)
-          Some(graft.Prof.t("  qmod.pinPresent(pre)")(pinSmall(
+          Some(graft.Prof.t("  qmod.pinPresent(pre)")(pins.pin(
             afterDel.join(broadcast(renamed(add)), quadCond, "left_semi"))))
         } else None
       (sols, cnt, pres)
@@ -4711,7 +4696,7 @@ object Sparql {
           Seq(s, pr, o) ++ g.toSeq })
         val add = quadsDF(rows).dropDuplicates("s", "p", "o", "g")
         val present =
-          pinSmall(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
+          pins.pin(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
         unionQ(q, minus(add, present, smallRight = true))
       case QGround(false, rows) =>
         // ids of absent terms match nothing — no dictionary work
@@ -4741,7 +4726,7 @@ object Sparql {
               "use Sparql.updateQuads for this script")
         }
         ins.foreach(t => extendDictLocal(templateConsts(t, withG)))
-        val small = solsCnt <= maxBroadcastDelta
+        val small = solsCnt <= UpdateBroadcastMax
         def inst(t: Group): DataFrame = instTmpl(sols, withG, t)
         var q2 = q
         del.foreach(t => q2 = minus(q2, inst(t), smallRight = small))
@@ -4755,7 +4740,7 @@ object Sparql {
             // apply-time store scan entirely
             val add = inst(t)
             val present = prePresent.getOrElse(
-              graft.Prof.t("  qmod.pinPresent")(pinSmall(
+              graft.Prof.t("  qmod.pinPresent")(pins.pin(
                 q2.join(broadcast(renamed(add)), quadCond, "left_semi"))))
             q2 = unionQ(q2, minus(add, present, smallRight = true))
           } else {
@@ -4763,7 +4748,7 @@ object Sparql {
             q2 = unionQ(q2, minus(add, q2, smallRight = false))
           }
         }
-        if (small) q2 else { pinned = true; pins.pin(q2) }
+        if (small) q2 else pins.pin(q2)
       case QMove(kind, from, to) =>
         to.foreach(t => extendDictLocal(Seq(t)))
         val fromLit = from.map(i => lit(hid(i))).getOrElse(lit(null).cast("long"))
@@ -4781,7 +4766,7 @@ object Sparql {
               when(col("g") <=> fromLit, toLit).otherwise(col("g")))
           case "ADD" =>
             val moved = slice(from)(q).withColumn("g", toLit)
-            val fresh = pinSmall(minus(moved, slice(to)(q), smallRight = false))
+            val fresh = pins.pin(minus(moved, slice(to)(q), smallRight = false))
             unionQ(q, fresh)
         }
       case QLoad(src, into) =>
@@ -4810,7 +4795,7 @@ object Sparql {
           Dictionary.termHash(col("o")).as("o"),
           when(col("g").isNull, lit(null).cast("long"))
             .otherwise(Dictionary.termHash(col("g"))).as("g"))
-        val fresh = pinSmall(minus(encTarget, q, smallRight = false))
+        val fresh = pins.pin(minus(encTarget, q, smallRight = false))
         unionQ(q, fresh)
     }
     // ASYNC WHERE PREFETCH over read/write-DISJOINT ops (same discipline
@@ -4846,19 +4831,12 @@ object Sparql {
         graft.Prof.t(s"quadsEnc.op:${op.getClass.getSimpleName}")(
           applyOp(q, op, preF.get(i).map(awaitPre)))
       } finally prePool.foreach(_.shutdown())
-    // The DEFAULT result is the LAZY composition: the unchanged base
-    // relation plus |Δ|-sized PINNED deltas applied as broadcast
-    // joins/unions — the store's own tombstone-lazy update discipline.
-    // At corpus scale a small update must never rewrite the store;
-    // materialization is a COMPACTION decision, opted into with
-    // spark.graft.update.materialize=true (pins.seal: one full pass,
-    // intermediates released). Lazily-returned results keep their
-    // delta pins alive (ownership transfers to the relation).
-    val materialize =
-      spark.conf.get("spark.graft.update.materialize", "false").toBoolean
-    (if (pinned && materialize)
-      graft.Prof.t("quadsEnc.seal")(pins.seal(result))
-    else result, d)
+    // The result is the LAZY composition: the unchanged base relation
+    // plus |Δ|-sized PINNED deltas applied as broadcast joins/unions —
+    // the store's own tombstone-lazy update discipline. At corpus scale
+    // a small update must never rewrite the store; the returned
+    // relation keeps its delta pins alive (ownership transfers to it).
+    (result, d)
   }
 
   /** Join an inline DataBlock relation into a solution frame: all-bound

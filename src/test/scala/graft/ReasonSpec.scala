@@ -1799,42 +1799,36 @@ class ReasonSpec extends SparkSpec {
         .toDF("s", "p", "o"))))
   }
 
-  "the inline-probe floor mode" should "keep maintenance exact with localized probes" in {
+  "functionalDelta then erRetract" should "match from-scratch canonicalization" in {
     import graft.ops.ReasonOps._
-    // spark.graft.reason.inlineProbeCap > 0 collapses Δ-probes to
-    // driver-local relations (job-floor regime opt-in) and routes
-    // hasKeyDeltaPairs through the DRIVER-side tuple assembly — both
-    // must be invisible to results: cross-batch key completion and the
-    // fp cascade land identically to the default executor-pinned path
-    spark.conf.set("spark.graft.reason.inlineProbeCap", "65536")
-    try {
-      val base = keyAxiom("Cust", Seq("city", "code")) ++ Seq(
-        ("acct", "a", FunctionalProperty),
-        ("e1", "a", "Cust"), ("e1", "city", "rome"),
-        ("e2", "a", "Cust"), ("e2", "city", "rome"),
-        ("e1", "code", "9"),
-        ("e1", "acct", "a1"), ("e2", "acct", "a2"),
-        ("e2", "name", "beta"))
-      val (rw0, mp0) = ReasonOps.functionalCanonicalize(
-        base.toDF("s", "p", "o"))
-      val delta = Seq(("e2", "code", "9")).toDF("s", "p", "o")
-      val (rw, mp) = ReasonOps.functionalDelta(
-        rw0.localCheckpoint(true), mp0.localCheckpoint(true), delta)
-      val (rwF, mpF) = ReasonOps.functionalCanonicalize(
-        (base :+ (("e2", "code", "9"))).toDF("s", "p", "o"))
-      tset(rw) shouldBe tset(rwF)
-      pset(mp) shouldBe pset(mpF)
-      tset(rw) should contain (("e1", "name", "beta")) // key merge + cascade
-      // retraction under the same mode
-      val orig = (base :+ (("e2", "code", "9"))).toDF("s", "p", "o")
-      val dels = Seq(("e2", "code", "9")).toDF("s", "p", "o")
-      val (rw2, mp2) = ReasonOps.erRetract(orig, dels,
-        rw.localCheckpoint(true), mp.localCheckpoint(true))
-      val (rb, mb) = ReasonOps.functionalCanonicalize(
-        orig.join(dels, Seq("s", "p", "o"), "left_anti"))
-      tset(rw2) shouldBe tset(rb)
-      pset(mp2) shouldBe pset(mb)
-    } finally spark.conf.unset("spark.graft.reason.inlineProbeCap")
+    // the delta completes e2's (city, code) key tuple, so e2 merges onto
+    // e1 and the functional acct property cascades; retracting the same
+    // row must un-merge both
+    val base = keyAxiom("Cust", Seq("city", "code")) ++ Seq(
+      ("acct", "a", FunctionalProperty),
+      ("e1", "a", "Cust"), ("e1", "city", "rome"),
+      ("e2", "a", "Cust"), ("e2", "city", "rome"),
+      ("e1", "code", "9"),
+      ("e1", "acct", "a1"), ("e2", "acct", "a2"),
+      ("e2", "name", "beta"))
+    val (rw0, mp0) = ReasonOps.functionalCanonicalize(
+      base.toDF("s", "p", "o"))
+    val delta = Seq(("e2", "code", "9")).toDF("s", "p", "o")
+    val (rw, mp) = ReasonOps.functionalDelta(
+      rw0.localCheckpoint(true), mp0.localCheckpoint(true), delta)
+    val (rwF, mpF) = ReasonOps.functionalCanonicalize(
+      (base :+ (("e2", "code", "9"))).toDF("s", "p", "o"))
+    tset(rw) shouldBe tset(rwF)
+    pset(mp) shouldBe pset(mpF)
+    tset(rw) should contain (("e1", "name", "beta")) // key merge + cascade
+    val orig = (base :+ (("e2", "code", "9"))).toDF("s", "p", "o")
+    val dels = Seq(("e2", "code", "9")).toDF("s", "p", "o")
+    val (rw2, mp2) = ReasonOps.erRetract(orig, dels,
+      rw.localCheckpoint(true), mp.localCheckpoint(true))
+    val (rb, mb) = ReasonOps.functionalCanonicalize(
+      orig.join(dels, Seq("s", "p", "o"), "left_anti"))
+    tset(rw2) shouldBe tset(rb)
+    pset(mp2) shouldBe pset(mb)
   }
 
   "ErMaintainer retract" should "un-merge through the maintained state" in {

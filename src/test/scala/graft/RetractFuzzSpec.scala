@@ -147,26 +147,13 @@ class RetractFuzzSpec extends SparkSpec {
     }
   }
 
-  // the fuzz corpora are the driver-floor regime (tiny batches, many
-  // maintenance ops), i.e. exactly the documented inlineProbeCap
-  // opt-in target — run half of each family under it so the localized
-  // probe path is fuzzed too (and the wall cost of 50 cases stays low)
-  private def withInlineProbes[A](on: Boolean)(body: => A): A =
-    if (!on) body
-    else {
-      spark.conf.set("spark.graft.reason.inlineProbeCap", "64")
-      try body
-      finally spark.conf.unset("spark.graft.reason.inlineProbeCap")
-    }
-
   "ErMaintainer under a seeded insert/retract interleave" should
       "equal from-scratch canonicalization on every final corpus" in {
-    (0 until 25).foreach(s => withInlineProbes(s % 4 < 2)(runErCase(s)))
+    (0 until 25).foreach(runErCase)
   }
 
   "ConsistencyMaintainer under a seeded insert/retract interleave" should
       "equal the from-scratch report on every final corpus" in {
-    (0 until 25).foreach(s =>
-      withInlineProbes(s % 4 < 2)(runConsistencyCase(s)))
+    (0 until 25).foreach(runConsistencyCase)
   }
 }
