@@ -75,34 +75,28 @@ final class Pins {
 
 object Pins {
   /** Eager checkpoint under the session's strategy (see class doc). */
-  private[graft] def checkpoint(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val reliable =
-      df.sparkSession.conf.get("spark.graft.pins.reliable", "auto") match {
-        case "true"  => true
-        case "false" => false
-        case _       => sc.getCheckpointDir.isDefined && !sc.isLocal
-      }
-    if (reliable) {
-      require(sc.getCheckpointDir.isDefined,
-        "spark.graft.pins.reliable=true needs sparkContext.setCheckpointDir")
-      df.checkpoint(eager = true)
-    } else df.localCheckpoint(eager = true)
-  }
+  private[graft] def checkpoint(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 
   /** LAZY checkpoint under the session's strategy — materialized by the
     * caller's next action (see [[Pins.pinCounted]]).
     */
-  private[graft] def checkpointLazy(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val reliable =
-      df.sparkSession.conf.get("spark.graft.pins.reliable", "auto") match {
-        case "true"  => true
-        case "false" => false
-        case _       => sc.getCheckpointDir.isDefined && !sc.isLocal
-      }
-    if (reliable) df.checkpoint(eager = false)
+  private[graft] def checkpointLazy(df: DataFrame): DataFrame =
+    if (reliable(df)) df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
+
+  /** Does `df`'s session checkpoint reliably (see class doc)? */
+  private def reliable(df: DataFrame): Boolean = {
+    val sc = df.sparkSession.sparkContext
+    val r = df.sparkSession.conf.get("spark.graft.pins.reliable", "auto") match {
+      case "true"  => true
+      case "false" => false
+      case _       => sc.getCheckpointDir.isDefined && !sc.isLocal
+    }
+    require(!r || sc.getCheckpointDir.isDefined,
+      "spark.graft.pins.reliable=true needs sparkContext.setCheckpointDir")
+    r
   }
 
   /** Drop the storage behind an eager checkpoint: block-manager blocks

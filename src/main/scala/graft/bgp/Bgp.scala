@@ -3,6 +3,8 @@ package graft.bgp
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.StoreHandle
+
 /** Basic-graph-pattern terms. The reference encodes variables as negative
   * longs and constants as positive dictionary ids
   * (`core/src/main/scala/com/graphula/TriplePattern.scala`,
@@ -43,10 +45,16 @@ final case class PredStats(cnt: Long, ndvS: Long, ndvO: Long)
   *   - zero-cardinality fail-fast -> `emptyDataFrame` before any job runs;
   *   - fully-bound patterns become existence probes (semi-join shaped).
   *
-  * Scale notes: each pattern scan filters on bound positions, which Catalyst
-  * pushes into the parquet scan (partition pruning on `p` for a
-  * p-partitioned store); small scans broadcast via AQE; no driver-side row
-  * movement anywhere.
+  * Scale notes: over a store handle's own relation (`StoreHandle.enc` or
+  * `triples`), a pattern with a constant predicate whose exact count in
+  * the handle's stats is at most `Dictionary.LocalCap` reads that
+  * predicate's driver-held slice (`StoreHandle.predRows`), the analog of
+  * the reference's index lookup: collected once per handle, its filters
+  * fold at plan time and its broadcast starts no job. Every other
+  * pattern scan filters the distributed relation on its bound positions,
+  * which Catalyst pushes into the scan (partition pruning on `p` for a
+  * p-partitioned store); small scans broadcast by the stats hint below
+  * or via AQE.
   */
 object Bgp {
 
@@ -134,11 +142,19 @@ object Bgp {
     if (failed) return emptyResult(spark, triples, outVars)
 
     val ordered = order(patterns, stats, totalCnt)
+    // a constant predicate reads the driver-held slice of a store
+    // handle's relation when it has one; one job fills the missing ones
+    StoreHandle.slices(triples)
+      .foreach(_.fill(patterns.collect { case TriplePattern(_, C(p), _) => p }))
 
     var current: DataFrame = null
     var boundVars = Set.empty[String]
     ordered.zipWithIndex.foreach { case (tp, i) =>
-      val scan0 = patternScan(triples, tp, i)
+      val rows = tp.p match {
+        case C(p) => StoreHandle.predRows(triples, Seq(p))
+        case _    => triples
+      }
+      val scan0 = patternScan(rows, tp, i)
       // stats-driven broadcast hint: a pattern whose estimated scan is
       // small joins WITHOUT a shuffle. AQE can only convert to broadcast
       // AFTER the map stage has run; the stats (exact counts + HLL ndv)

@@ -14,7 +14,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * rule walks those children first. Filtering a 100k-row dictionary by
   * 50k ids and collecting took ~1.7 s that way, ~0.3 s with this
   * (4-core host). A broadcast semi-join against a driver-side id
-  * relation is fast too, but costs a second job for the broadcast.
+  * relation starts no extra job either (`DriverRows`), but took ~20 ms
+  * longer per probe of that dictionary at 24, 2,000 and 50,000 ids.
   */
 object InSetColumn {
   /** `values` must be in Catalyst's internal form (boxed longs for a

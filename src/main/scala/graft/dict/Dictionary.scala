@@ -284,15 +284,23 @@ object Dictionary {
     * folds into a local relation is collected without a job.
     */
   private[graft] def collectBounded(df: DataFrame, cap: Int): Option[Array[Row]] = {
-    if (isLocal(df)) return Some(df.collect()).filter(_.length <= cap)
+    val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
+    collectRows(df, cap).map(_.map(r => toRow(r).asInstanceOf[Row]))
+  }
+
+  /** [[collectBounded]] in Catalyst's internal row form (copies the
+    * caller may keep).
+    */
+  private[graft] def collectRows(df: DataFrame, cap: Int): Option[Array[InternalRow]] = {
     val qe = df.queryExecution
+    if (isLocal(df)) return Some(qe.executedPlan.executeCollect()).filter(_.length <= cap)
     val sc = df.sparkSession.sparkContext
     SQLExecution.withNewExecutionId(qe, Some("collectBounded")) {
       val rdd = qe.toRdd
       val n = rdd.getNumPartitions
       // no partitions (e.g. AQE proved the result empty): a job over
       // them would still be posted to listeners
-      if (n == 0) return Some(Array.empty[Row])
+      if (n == 0) return Some(Array.empty[InternalRow])
       val share = (cap.toLong + n - 1) / n
       val first = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
         val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
@@ -312,10 +320,8 @@ object Dictionary {
           if (over.isEmpty) Map.empty[Int, Array[InternalRow]]
           else over.zip(sc.runJob(rdd,
             (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, over)).toMap
-        val toRow = CatalystTypeConverters.createToScalaConverter(df.schema)
         Some(first.indices.iterator.flatMap(i =>
-          refetched.getOrElse(i, first(i).toOption.get))
-          .map(r => toRow(r).asInstanceOf[Row]).toArray)
+          refetched.getOrElse(i, first(i).toOption.get)).toArray)
       }
     }
   }

@@ -3,14 +3,23 @@ package graft.functions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.execution.{ColumnarRule, DriverRows}
 
-/** Session extensions registering graft's native Catalyst expressions.
+/** Session extensions registering graft's native Catalyst expressions and
+  * the job-free broadcast of driver-held rows (`DriverRows`).
   * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.functions.GraftExtensions`; call sites
-  * then reach them via `functions.call_function("graft_dot", ...)` or SQL.
+  * then reach the functions via `functions.call_function("graft_dot", ...)`
+  * or SQL.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // AQE plans stage by stage; a plan made with AQE off (e.g. inside a
+    // ScopedConf scope) meets the rule just before its columnar pass
+    ext.injectQueryStagePrepRule(_ => DriverRows.broadcastRule)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions = DriverRows.broadcastRule
+    })
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProductD].getName, "graft_dot"),

@@ -5043,7 +5043,8 @@ object Sparql {
   private def pathRel(env: Env, path: Path, extra: Seq[Any]): DataFrame =
     path match {
       case PEdge(e) =>
-        env.triples.where(col("p") === lit(env.cval(e))).select(col("s"), col("o"))
+        graft.store.StoreHandle.predRows(env.triples, Seq(env.cval(e)))
+          .where(col("p") === lit(env.cval(e))).select(col("s"), col("o"))
       case PNegSet(preds, invPreds) =>
         // §9.1: the forward component matches edges whose predicate is
         // outside the FORWARD members; the reverse component (present
@@ -5071,7 +5072,8 @@ object Sparql {
         // edge (`:p|:p`) must keep per-branch multiplicity -> fall through
         flattenAltEdges(path) match {
           case Some(preds) if preds.distinct == preds =>
-            env.triples.where(col("p").isin(preds.map(env.cval): _*))
+            val ps = preds.map(env.cval)
+            graft.store.StoreHandle.predRows(env.triples, ps).where(col("p").isin(ps: _*))
               .select(col("s"), col("o"))
           case _ =>
             pathRel(env, l, extra).unionAll(pathRel(env, r, extra))

@@ -1,7 +1,15 @@
 package graft.store
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.CleanCheckpoint
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
+import org.apache.spark.sql.execution.{CleanCheckpoint, DriverRows}
 import org.apache.spark.sql.functions._
 import graft.bgp.PredStats
 import graft.dict.Dictionary
@@ -36,6 +44,13 @@ final class StoreHandle(val triples: DataFrame, val enc: DataFrame,
     * scale-independent ~0.1 s/op planning tax otherwise).
     */
   lazy val sketches: DataFrame = sketchesThunk
+
+  // both relations draw on one row budget: the handle's driver-held total
+  private val sliceRoom = new AtomicLong(StoreHandle.SliceRows)
+  private[graft] val encSlices: Slices =
+    StoreHandle.attach(new Slices(enc, encStats, sliceRoom))
+  private[graft] val tripleSlices: Slices =
+    StoreHandle.attach(new Slices(triples, stats, sliceRoom))
 }
 
 object StoreHandle {
@@ -45,6 +60,117 @@ object StoreHandle {
             sketches: => DataFrame): StoreHandle =
     new StoreHandle(triples, enc, dict, pureHash, stats, encStats, totalCnt,
       sketches)
+
+  /** Most rows one handle holds in its slices, over both relations. */
+  private[graft] val SliceRows: Long = 4L * Dictionary.LocalCap
+
+  /** Scan sites read slices only while this is true. Scoped per thread,
+    * so a spec can force the distributed scans
+    * (`useSlices.withValue(false) { ... }`) without touching the
+    * session's conf.
+    */
+  private[graft] val useSlices = new scala.util.DynamicVariable[Boolean](true)
+
+  // the slice set rides on its relation's analyzed plan, so a scan site
+  // that is handed the relation finds it without any registry; weakly,
+  // so later handles whose plans contain this one do not keep it alive
+  private val SliceTag = TreeNodeTag[WeakReference[Slices]]("graft.slices")
+
+  private def attach(s: Slices): Slices = {
+    s.rel.queryExecution.analyzed.setTagValue(SliceTag, new WeakReference(s))
+    s
+  }
+
+  /** The slices of `rel` if `rel` is a handle's `enc` or `triples` (by
+    * plan identity: a frame derived from it has another plan, the same
+    * relation re-bound to another session has the same one).
+    */
+  private[graft] def slices(rel: DataFrame): Option[Slices] =
+    if (!useSlices.value) None
+    else {
+      val plan = rel.queryExecution.analyzed
+      plan.getTagValue(SliceTag).flatMap(r => Option(r.get))
+        .filter(_.rel.queryExecution.analyzed eq plan)
+    }
+
+  /** The rows of `rel` whose predicate is one of `preds`: a driver-held
+    * local relation when `rel` is a handle's relation and every one of
+    * them is sliced, else `rel` itself. Callers filter on `p` either way.
+    */
+  private[graft] def predRows(rel: DataFrame, preds: Seq[Any]): DataFrame =
+    slices(rel).flatMap(_.frame(preds, rel.sparkSession)).getOrElse(rel)
+}
+
+/** Driver-held copies of one handle relation's small predicates: the
+  * analog of graphula answering a bound-predicate pattern from its index
+  * instead of a scan. A predicate whose exact count in the handle's
+  * stats is at most `Dictionary.LocalCap` is collected on first use,
+  * once, through `Dictionary.collectRows` (one job for every predicate a
+  * call asks for at once), and later scans of it read those rows as a
+  * local relation: its filters fold at plan time and its broadcast
+  * starts no job (`DriverRows`). The rows held over a handle's two
+  * relations are capped at `StoreHandle.SliceRows`; a predicate past
+  * the cap or the budget keeps the distributed scan. A handle made by
+  * an update starts with no slices.
+  */
+private[graft] final class Slices(val rel: DataFrame,
+                                  counts: Map[String, PredStats],
+                                  room: AtomicLong) {
+  // predicate (its stats key) -> its rows; None: it keeps the scan
+  private val held = new ConcurrentHashMap[String, Option[Array[InternalRow]]]()
+  private val builds = new AtomicInteger()
+
+  /** Jobs run to fill slices so far. */
+  private[graft] def buildCount: Int = builds.get
+
+  /** Rows of `rel` whose predicate is in `preds` as a local relation in
+    * `session` (the session of the frame the caller was handed, e.g. a
+    * `ScopedConf` clone), if every one of them is (or now becomes) held.
+    */
+  def frame(preds: Seq[Any], session: SparkSession): Option[DataFrame] = {
+    fill(preds)
+    val parts = preds.map(_.toString).distinct.map(p => Option(held.get(p)).flatten)
+    if (parts.isEmpty || parts.exists(_.isEmpty)) None
+    else Some(DriverRows.frame(session, rel.schema,
+      if (parts.size == 1) ArraySeq.unsafeWrapArray(parts.head.get)
+      else parts.flatMap(_.get)))
+  }
+
+  /** Decide, and collect in one job, every predicate of `preds` not yet
+    * decided. Builds of one relation are serialized, so threads that
+    * race on a fresh handle collect each predicate once.
+    */
+  def fill(preds: Seq[Any]): Unit =
+    if (preds.exists(p => !held.containsKey(p.toString))) synchronized {
+      val todo = preds.distinctBy(_.toString).filterNot(p => held.containsKey(p.toString))
+      val fits = todo.flatMap(p => counts.get(p.toString).map(_.cnt)
+        .filter(n => n <= Dictionary.LocalCap && reserve(n)).map(p -> _))
+      todo.filterNot(p => fits.exists(_._1 == p)).foreach(p => held.put(p.toString, None))
+      if (fits.nonEmpty) {
+        val want = fits.map(_._2).sum
+        builds.incrementAndGet()
+        val pi = rel.schema.fieldIndex("p")
+        val pt = rel.schema(pi).dataType
+        Dictionary.collectRows(rel.where(col("p").isin(fits.map(_._1): _*)),
+            want.toInt) match {
+          case Some(rows) =>
+            val byPred = rows.groupBy(r => String.valueOf(r.get(pi, pt)))
+            fits.foreach { case (p, _) =>
+              held.put(p.toString, Some(byPred.getOrElse(p.toString, Array.empty)))
+            }
+            room.addAndGet(want - rows.length)
+          case None => // the stats undercount: keep the scans
+            room.addAndGet(want)
+            fits.foreach { case (p, _) => held.put(p.toString, None) }
+        }
+      }
+    }
+
+  private def reserve(n: Long): Boolean = {
+    var left = room.get
+    while (left >= n && !room.compareAndSet(left, left - n)) left = room.get
+    left >= n
+  }
 }
 
 object GraftStore {

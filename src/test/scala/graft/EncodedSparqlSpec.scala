@@ -438,24 +438,6 @@ class EncodedSparqlSpec extends SparkSpec {
         |DESCRIBE <3>""".stripMargin)).size shouldBe 3
   }
 
-  /** Jobs started while `body` runs (listener events drain first). */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val out =
-      try body
-      finally {
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(l)
-      }
-    (out, jobs.get())
-  }
-
   it should "cost one collect job and one dictionary probe job for a small SELECT" in {
     val q = "SELECT ?x ?y WHERE { ?x :knows ?y }"
     select(q).collect() // warm: store artifacts and codegen

@@ -34,6 +34,11 @@ class Lubm10Spec extends SparkSpec {
 
   private val dataDir = LubmData.dir
 
+  // without the fixtures these specs register as ignored, so test
+  // reports count them as skipped rather than passed
+  private def lubm(name: String)(body: => Any): Unit =
+    if (LubmData.available) it should name in body else it should name ignore body
+
   private def golden(queryId: Int): Seq[Seq[String]] = {
     val src = Source.fromFile(s"$dataDir/answers_query$queryId.txt")
     try {
@@ -75,16 +80,16 @@ class Lubm10Spec extends SparkSpec {
   // no per-university constant: each clone answers isomorphically
   private val unanchored = Seq(2, 6, 9, 14)
 
-  "LUBM x10 clones" should "grow the store exactly 10x" in {
-    assume(LubmData.available, s"LUBM fixtures absent (${LubmData.dir})")
+  behavior of "LUBM x10 clones"
+
+  lubm("grow the store exactly 10x") {
     val one = TripleStore.parseNTriples(spark,
       s"$dataDir/university0_*.nt").count()
     store10.triples.count() shouldBe one * 10
   }
 
   anchored.foreach { qid =>
-    it should s"answer anchored query $qid with the unchanged goldens" in {
-      assume(LubmData.available, s"LUBM fixtures absent (${LubmData.dir})")
+    lubm(s"answer anchored query $qid with the unchanged goldens") {
       val got = rowsOf(Sparql.execute(spark, store10.triples,
         LubmQueries.queries(qid - 1), store10.stats))
       got.sortBy(_.mkString("\t")) shouldBe
@@ -93,8 +98,7 @@ class Lubm10Spec extends SparkSpec {
   }
 
   unanchored.foreach { qid =>
-    it should s"answer unanchored query $qid with all ten clones' rows" in {
-      assume(LubmData.available, s"LUBM fixtures absent (${LubmData.dir})")
+    lubm(s"answer unanchored query $qid with all ten clones' rows") {
       val expected = (0 until 10).flatMap(k =>
         golden(qid).map(_.map(cloneTerm(_, k))))
       val got = rowsOf(Sparql.execute(spark, store10.triples,
@@ -104,8 +108,7 @@ class Lubm10Spec extends SparkSpec {
     }
   }
 
-  it should "answer unanchored query 2 identically on the encoded store" in {
-    assume(LubmData.available, s"LUBM fixtures absent (${LubmData.dir})")
+  lubm("answer unanchored query 2 identically on the encoded store") {
     val expected = (0 until 10).flatMap(k =>
       golden(2).map(_.map(cloneTerm(_, k))))
     val got = rowsOf(Sparql.executeEncoded(spark, store10,
