@@ -578,6 +578,9 @@ object Sparql {
   }
 
   // ---------- SPARQL 1.1 UPDATE ----------
+  // One parser (`parseUpdate`, the `QuadOp` AST) and one prefetch hazard
+  // rule (`prefetchableQuadModifies`) serve two executors: the store
+  // handle's below, and the quad fold behind updateQuads/updateQuadsEnc.
 
   /** SPARQL 1.1 Update over a store handle (the reference has only the
     * programmatic add path, `Sparql.scala:115-127`; this is the full
@@ -597,10 +600,12 @@ object Sparql {
     *     `DROP` ≡ CLEAR; `CREATE [DEFAULT]` and `COPY/MOVE/ADD DEFAULT
     *     TO DEFAULT` are identities; any NAMED target errors, or is a
     *     no-op under SILENT (the spec's suppressed-failure contract)
-    * Blank nodes are forbidden in DELETE templates/data (§3.1.3); INSERT
-    * templates skolemize them per solution like CONSTRUCT. Named-graph
-    * forms (WITH/USING/GRAPH) are rejected — the store is a single graph,
-    * like the reference's.
+    * The script parses with the same parser as the quad-dataset paths and
+    * is then read under single-graph semantics ([[singleGraphOps]]):
+    * WITH, USING, GRAPH blocks and `LOAD … INTO GRAPH` are rejected — the
+    * store is a single graph, like the reference's. Blank nodes are
+    * forbidden in DELETE templates/data (§3.1.3); INSERT templates
+    * skolemize them per solution like CONSTRUCT.
     *
     * Handles are immutable: the UPDATED handle is returned and the input
     * handle (including any `GraftStore.forDir` cache entry) is untouched.
@@ -613,25 +618,9 @@ object Sparql {
     */
   def update(spark: SparkSession, store: graft.store.StoreHandle,
              updateText: String): graft.store.StoreHandle = {
-    val p = new P(tokenize(updateText))
-    var more = p.peek.nonEmpty
-    // prefixes accumulate across `;`-separated operations (each op may add
-    // its own PREFIX decls; earlier ones stay in scope)
-    var prefixes = Map.empty[String, String]
-    // PARSE the whole script first: a syntax error anywhere aborts before
-    // any op runs, and the executor below can batch runs of ground ops.
-    val ops = Vector.newBuilder[UOp]
-    while (more) {
-      prefixes = prefixes ++ parsePrefixes(p)
-      ops += parseUpdateOp(p, prefixes)
-      more = p.trySym(";") && p.peek.nonEmpty
-    }
-    // Trailing tokens mean the request was not what we executed (e.g. a
-    // missing ';' between operations would silently drop every later op).
-    // Handles are immutable, so throwing here leaves the caller's store
-    // untouched — no partial application escapes.
-    if (p.peek.nonEmpty)
-      p.fail(s"unexpected tokens after update operation: ${p.peek.get}")
+    // the whole script parses and checks before any op runs, and the
+    // executor below can batch runs of ground ops
+    val opsV = singleGraphOps(parseUpdate(updateText))
 
     // EXECUTE, batching each run of consecutive ground data ops into one
     // remove + one append: their triple sets are driver-side constants, so
@@ -645,36 +634,21 @@ object Sparql {
     // WHERE evaluation (the script's dominant jobs — store scan, bounded
     // collect, dictionary probe) depends only on the rows its patterns
     // can match, so when no EARLIER op's writes unify with this op's
-    // reads or writes (triple-pattern summaries: constants must differ
-    // in some position) the WHERE may evaluate against the PRE-SCRIPT
-    // store — and all such ops' probe jobs submit CONCURRENTLY, turning
-    // the measured per-op scheduling floor from a sum into a max. The
-    // HANDLE chain itself still applies strictly in op order.
-    val opsV = ops.result()
-    val prefetchable = prefetchableModifies(opsV)
-    val pool =
-      if (prefetchable.isEmpty) None
-      else Some(java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(prefetchable.size, 4)))
-    try {
-      val pre: Map[Int, java.util.concurrent.Future[
-          Option[(LocalSols, Map[Long, String], Set[Long])]]] =
-        pool match {
-          case None => Map.empty
-          case Some(p) => prefetchable.map { i =>
-            val m = opsV(i).asInstanceOf[UModify]
-            i -> p.submit(new java.util.concurrent.Callable[
-                Option[(LocalSols, Map[Long, String], Set[Long])]] {
-              def call() = prepareModifySols(spark, store, m.ins, m.where)
-            })
-          }.toMap
-        }
+    // reads or writes (pattern summaries, the default graph's quads) the
+    // WHERE may evaluate against the PRE-SCRIPT store — and all such ops'
+    // probe jobs submit CONCURRENTLY, turning the measured per-op
+    // scheduling floor from a sum into a max. The HANDLE chain itself
+    // still applies strictly in op order.
+    withPrefetch(prefetchableQuadModifies(opsV)) { i =>
+      val m = opsV(i).asInstanceOf[QModify]
+      prepareModifySols(spark, store, m.ins, m.where)
+    } { pre =>
       var h = store
-      var run = List.empty[UGround]
+      var run = List.empty[QGround]
       def flush(): Unit = if (run.nonEmpty) {
         val last = scala.collection.mutable.LinkedHashMap
           .empty[(String, String, String), Boolean]
-        for (g <- run; t <- g.triples) last(t) = g.insert
+        for (g <- run; (s, p, o, _) <- g.quads) last((s, p, o)) = g.insert
         val dels = last.collect { case (t, false) => t }.toSeq
         val inss = last.collect { case (t, true) => t }.toSeq
         // remove-before-append: the sets are disjoint (last-mention-wins),
@@ -686,42 +660,79 @@ object Sparql {
         run = Nil
       }
       opsV.zipWithIndex.foreach {
-        case (g: UGround, _) => run = run :+ g
-        case (UModify(del, ins, where), i) if pre.contains(i) =>
-          flush()
-          val fetched =
-            try pre(i).get()
-            catch { case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause }
-          h = applyModify(spark, h, del, ins, where, Some(fetched))
-        case (op, _) => flush(); h = execUpdateOp(spark, h, op)
+        case (g: QGround, _) => run = run :+ g
+        case (QModify(_, del, ins, where), i) =>
+          flush(); h = applyModify(spark, h, del, ins, where, pre(i))
+        case (_: QClear, _) => flush(); h = graft.store.GraftStore.empty(spark)
+        case (QLoad(src, _, _), _) => // O(Δ) append of the parsed source
+          flush(); h = graft.store.GraftStore.append(spark, h, loadTriples(spark, src))
+        case (op, _) => // singleGraphOps keeps no other op
+          throw new IllegalStateException(s"unexpected single-graph op $op")
       }
       flush()
       h
-    } finally pool.foreach(_.shutdown())
-  }
-
-  /** Triple-pattern summary for update hazard analysis: a constant per
-    * position or None = wildcard (variables, and blank-node template
-    * constants — those skolemize per solution).
-    */
-  private final case class Pat3(s: Option[String], p: Option[String],
-                                o: Option[String])
-  private def pat3Of(tp: TriplePattern): Pat3 = {
-    def c(t: Term): Option[String] = t match {
-      case C(v) if !v.toString.startsWith("_:") => Some(v.toString)
-      case _ => None
     }
-    Pat3(c(tp.s), c(tp.p), c(tp.o))
-  }
-  private def pat3sUnify(a: Pat3, b: Pat3): Boolean = {
-    def ov(x: Option[String], y: Option[String]) =
-      x.isEmpty || y.isEmpty || x == y
-    ov(a.s, b.s) && ov(a.p, b.p) && ov(a.o, b.o)
   }
 
-  /** Quad-pattern summary (the [[Pat3]] of the named-graph paths): a
-    * constant per position or None = wildcard; the graph position
+  /** Runs `prep(i)` for every index in `idx` on up to four threads, then
+    * `body` with a lookup that waits for index i's result (None when i
+    * was not prefetched; a failed prep rethrows its own exception). The
+    * pool shuts down when `body` returns.
+    */
+  private def withPrefetch[A, R](idx: Seq[Int])(prep: Int => A)(
+      body: (Int => Option[A]) => R): R = {
+    if (idx.isEmpty) return body(_ => None)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(idx.size, 4))
+    try {
+      val futures = idx.map(i => i -> pool.submit(
+        new java.util.concurrent.Callable[A] { def call() = prep(i) })).toMap
+      body(i => futures.get(i).map { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException =>
+          throw e.getCause }
+      })
+    } finally pool.shutdown()
+  }
+
+  /** A parsed script read under single-graph semantics: the ops the
+    * store-handle executor runs — ground data in the default graph,
+    * CLEAR DEFAULT/ALL, LOAD without a target, and modifies with no WITH
+    * or GRAPH block. Identities (CREATE DEFAULT, COPY/MOVE/ADD DEFAULT TO
+    * DEFAULT) drop out; a named target is an error, which the op's SILENT
+    * flag turns into a no-op (§3.2). Checks the whole script before any
+    * op runs.
+    */
+  private def singleGraphOps(ops: Vector[QuadOp]): Vector[QuadOp] = {
+    def named(silent: Boolean, what: String): Option[QuadOp] =
+      if (silent) None
+      else throw new IllegalArgumentException(s"$what on a named graph is " +
+        "not supported (single-graph store; use Sparql.updateQuads)")
+    ops.flatMap {
+      case op @ QGround(_, quads) =>
+        require(quads.forall(_._4.isEmpty), "GRAPH blocks need the " +
+          "quad-dataset path, Sparql.updateQuads (single-graph store)")
+        Some(op)
+      case op @ QClear(QDefault | QAll, _) => Some(op)
+      case QClear(_, silent) => named(silent, "CLEAR/DROP")
+      case QCreate(false, _) => None
+      case QCreate(true, silent) => named(silent, "CREATE")
+      case QMove(_, None, None, _) => None
+      case QMove(_, _, _, silent) => named(silent, "COPY/MOVE/ADD")
+      case op @ QLoad(_, None, _) => Some(op)
+      case QLoad(_, Some(_), silent) => named(silent, "LOAD INTO GRAPH")
+      case op @ QModify(withG, del, ins, where) =>
+        require(withG.isEmpty &&
+          (del.toSeq ++ ins.toSeq :+ where).forall(_.graphs.isEmpty),
+          "named graphs (WITH, GRAPH) are not supported (single-graph " +
+            "store; use Sparql.updateQuads)")
+        Some(op)
+    }
+  }
+
+  /** Quad-pattern summary for update hazard analysis: a constant per
+    * position or None = wildcard (variables, and blank-node template
+    * constants — those skolemize per solution); the graph position
     * distinguishes "any graph" (outer None — a GRAPH variable) from the
     * default graph (Some(None)) and a named constant (Some(Some(iri))).
     */
@@ -735,11 +746,15 @@ object Sparql {
     ov(a.s, b.s) && ov(a.p, b.p) && ov(a.o, b.o) && ovg(a.g, b.g)
   }
 
-  /** [[prefetchableModifies]] for the quad-dataset update paths —
-    * pattern summaries carry the graph position, and the dictionary-
-    * validity guard covers the op's WHERE-side probe constants too
-    * (their presence snapshot must not be invalidated by an earlier
-    * op's new terms).
+  /** Indices of modify ops whose WHERE may evaluate against the
+    * PRE-SCRIPT data, for every Update executor (a store handle's
+    * triples are default-graph quads): every earlier op's writes must be
+    * summarizable and unify with none of this op's read or write
+    * patterns, and no earlier op may introduce a dictionary term this op
+    * probes — its insert-template constants, and the WHERE constants
+    * that surface as solution values (path endpoints, VALUES entries) —
+    * so the prefetched claim and presence probes stay valid. The first
+    * modify op always qualifies.
     */
   private def prefetchableQuadModifies(opsV: Vector[QuadOp]): Seq[Int] = {
     def cOf(t: Term): Option[String] = t match {
@@ -774,26 +789,15 @@ object Sparql {
         Pat4(Some(s), Some(p), Some(o), Some(g)) })
       case QModify(withG, del, ins, _) =>
         Some((del.toSeq ++ ins.toSeq).flatMap(tmplPats(withG, _)))
-      case QClear(QDefault) => Some(Seq(Pat4(None, None, None, Some(None))))
-      case QClear(QNamed(i)) => Some(Seq(Pat4(None, None, None, Some(Some(i)))))
-      case QClear(_) => Some(Seq(Pat4(None, None, None, None)))
-      case QMove(_, from, to) => Some(Seq(
+      case QClear(QDefault, _) => Some(Seq(Pat4(None, None, None, Some(None))))
+      case QClear(QNamed(i), _) =>
+        Some(Seq(Pat4(None, None, None, Some(Some(i)))))
+      case QClear(_, _) => Some(Seq(Pat4(None, None, None, None)))
+      case QMove(_, from, to, _) if from == to => Some(Seq.empty)
+      case QMove(_, from, to, _) => Some(Seq(
         Pat4(None, None, None, Some(from)), Pat4(None, None, None, Some(to))))
-      case QNop => Some(Seq.empty)
+      case _: QCreate => Some(Seq.empty)
       case _: QLoad => None
-    }
-    def newTerms(op: QuadOp): Set[String] = op match {
-      case QGround(true, rows) =>
-        rows.flatMap { case (s, p, o, g) => Seq(s, p, o) ++ g.toSeq }.toSet
-      case QModify(withG, _, ins, _) =>
-        ins.toSeq.flatMap { t =>
-          (t.triples.flatMap(tp => Seq(tp.s, tp.p, tp.o)) ++
-            t.graphs.flatMap { case (gt, inner) =>
-              gt +: inner.triples.flatMap(tp => Seq(tp.s, tp.p, tp.o)) })
-            .collect { case C(v) => v.toString }
-        }.toSet ++ withG.toSet
-      case QMove(_, _, to) => to.toSet
-      case _ => Set.empty
     }
     val out = Seq.newBuilder[Int]
     var priorWrites: Option[Seq[Pat4]] = Some(Seq.empty)
@@ -830,236 +834,62 @@ object Sparql {
     out.result()
   }
 
-  /** Indices of modify ops whose WHERE may evaluate against the
-    * PRE-SCRIPT store: every earlier op's writes must be summarizable
-    * and unify with none of this op's read or write patterns, and no
-    * earlier op may introduce a dictionary term this op's insert
-    * templates also introduce (the prefetched claim probe must stay
-    * valid). The first modify op always qualifies.
+  /** Terms an op can introduce: ground INSERT DATA terms, insert-template
+    * constants (the WITH graph included) and a COPY/MOVE/ADD target label.
+    * All are parse-time constants — solution-derived inserts draw from
+    * terms already present. Drives both the prefetch hazard rule and the
+    * encoded path's script-wide dictionary pre-probe.
     */
-  private def prefetchableModifies(opsV: Vector[UOp]): Seq[Int] = {
-    def writes(op: UOp): Option[Seq[Pat3]] = op match {
-      case UModify(del, ins, _) =>
-        Some((del.toSeq ++ ins.toSeq).flatMap(_.triples).map(pat3Of))
-      case UGround(_, ts) =>
-        Some(ts.map { case (s, p, o) => Pat3(Some(s), Some(p), Some(o)) })
-      case UNoop => Some(Seq.empty)
-      case _ => None // UClear / ULoad: unbounded effect
-    }
-    def newTerms(op: UOp): Set[String] = op match {
-      case UModify(_, ins, _) =>
-        ins.toSeq.flatMap(_.triples).flatMap(tp => Seq(tp.s, tp.p, tp.o))
-          .collect { case C(v) => v.toString }.toSet
-      case UGround(true, ts) =>
-        ts.flatMap { case (s, p, o) => Seq(s, p, o) }.toSet
-      case _ => Set.empty
-    }
-    def plain(g: Group): Boolean =
-      g.optionals.isEmpty && g.unions.isEmpty && g.minuses.isEmpty &&
-        g.paths.isEmpty && g.subqueries.isEmpty && g.subgroups.isEmpty &&
-        g.existsFilters.isEmpty && g.graphs.isEmpty && g.services.isEmpty
-    val out = Seq.newBuilder[Int]
-    var priorWrites: Option[Seq[Pat3]] = Some(Seq.empty)
-    var priorTerms = Set.empty[String]
-    opsV.zipWithIndex.foreach { case (op, i) =>
-      op match {
-        case UModify(del, ins, where) if plain(where) && priorWrites.isDefined =>
-          val reads = where.triples.map(pat3Of)
-          val mine = reads ++ writes(op).get
-          // HASHED fresh-term disjointness (same reasoning as the quad
-          // path): an insert term colliding with a DIFFERENT earlier
-          // fresh term must disqualify the prefetch — its pre-script
-          // claim probe could not see the earlier op's claim, silently
-          // sharing an id where the sequential path raises externalClash
-          val h = graft.dict.Dictionary.termHashLocal _
-          val clean = priorWrites.get.forall(w => !mine.exists(pat3sUnify(w, _))) &&
-            newTerms(op).map(h).intersect(priorTerms.map(h)).isEmpty
-          if (clean) out += i
-        case _ => ()
-      }
-      priorWrites = (priorWrites, writes(op)) match {
-        case (Some(a), Some(b)) => Some(a ++ b)
-        case _ => None
-      }
-      priorTerms = priorTerms ++ newTerms(op)
-    }
-    out.result()
+  private def newTerms(op: QuadOp): Set[String] = op match {
+    case QGround(true, rows) =>
+      rows.flatMap { case (s, p, o, g) => Seq(s, p, o) ++ g.toSeq }.toSet
+    case QModify(withG, _, ins, _) =>
+      ins.toSeq.flatMap(templateConsts(_, withG)).toSet
+    case QMove(_, from, to, _) if from != to => to.toSet
+    case _ => Set.empty
   }
 
-  /** Parsed update operation. Ground data ops keep their (driver-side)
-    * triple constants so the executor can batch adjacent runs.
+  /** Constants an insert template writes (they enter the dictionary). */
+  private def templateConsts(t: Group, withG: Option[String]): Seq[String] = {
+    def ofTriples(tps: Seq[TriplePattern]): Seq[String] =
+      tps.flatMap(tp => Seq(tp.s, tp.p, tp.o).collect { case C(c) => c.toString })
+    ofTriples(t.triples) ++ withG.toSeq ++
+      t.graphs.flatMap { case (gt, inner) =>
+        (gt match { case C(c) => Seq(c.toString); case _ => Seq.empty }) ++
+          ofTriples(inner.triples)
+      }
+  }
+
+  /** A triple-format LOAD source as (s, p, o) strings, parsed
+    * distributed. Format by file extension: .ttl routes to the Turtle
+    * loader (which skolemizes per FILE already), everything else parses
+    * as N-Triples with per-SOURCE skolemization — both idempotent on
+    * re-load, no cross-file label capture (the loader's standing
+    * convention).
     */
-  private sealed trait UOp
-  private final case class UGround(insert: Boolean,
-      triples: Seq[(String, String, String)]) extends UOp
-  private case object UClear extends UOp
-  private case object UNoop extends UOp
-  private final case class ULoad(src: String) extends UOp
-  private final case class UModify(del: Option[Group], ins: Option[Group],
-      where: Group) extends UOp
+  private def loadTriples(spark: SparkSession, src: String): DataFrame =
+    if (src.endsWith(".ttl")) graft.store.TripleStore.parseTurtle(spark, src)
+    else graft.store.TripleStore.skolemize(
+      graft.store.TripleStore.parseNTriples(spark, src), src)
 
-  private def parseUpdateOp(p: P, prefixes: Map[String, String]): UOp = {
-    if (p.tryKw("WITH") || p.tryKw("USING"))
-      p.fail("named graphs are not supported (single-graph store)")
-    // a GRAPH/NAMED target on a single-graph store is an error the op's
-    // SILENT flag downgrades to a no-op (SPARQL 1.1 Update §3.2: SILENT
-    // suppresses failure and the operation has no effect)
-    def namedTarget(silent: Boolean, op: String): UOp = {
-      // swallow the rest of the target spec: <iri> / DEFAULT after GRAPH
-      p.peek match {
-        case Some(TIri(_)) => p.pos += 1
-        case _ => ()
-      }
-      if (silent) UNoop
-      else p.fail(s"$op on a named graph is not supported (single-graph store)")
-    }
-    if (p.tryKw("CLEAR") || p.tryKw("DROP")) {
-      // DROP removes a graph, CLEAR empties it — the same thing for the
-      // always-existing default graph of a single-graph store
-      val silent = p.tryKw("SILENT")
-      if (p.tryKw("GRAPH") || p.tryKw("NAMED")) return namedTarget(silent, "CLEAR/DROP")
-      p.tryKw("ALL"); p.tryKw("DEFAULT")
-      return UClear
-    }
-    if (p.tryKw("CREATE")) {
-      // CREATE makes an empty named graph; the default graph always
-      // exists, so only the named form means anything — and that is the
-      // unsupported case (no-op under SILENT)
-      val silent = p.tryKw("SILENT")
-      if (p.tryKw("GRAPH") || p.tryKw("NAMED")) return namedTarget(silent, "CREATE")
-      p.tryKw("DEFAULT")
-      return UNoop
-    }
-    if (p.tryKw("COPY") || p.tryKw("MOVE") || p.tryKw("ADD")) {
-      // DEFAULT TO DEFAULT is the identity on a single-graph store; any
-      // named endpoint is unsupported (no-op under SILENT)
-      val silent = p.tryKw("SILENT")
-      var named = false
-      def endpoint(): Unit = p.peek match {
-        case Some(TIri(_)) => named = true; p.pos += 1
-        case Some(t) if p.isKw(t, "GRAPH") => p.pos += 1; endpoint()
-        case Some(t) if p.isKw(t, "DEFAULT") => p.pos += 1
-        case t => p.fail(s"expected DEFAULT or GRAPH <iri>, got $t")
-      }
-      endpoint()
-      p.eatKw("TO")
-      endpoint()
-      if (!named) return UNoop
-      if (silent) return UNoop
-      p.fail("COPY/MOVE/ADD with a named graph is not supported (single-graph store)")
-    }
-    if (p.tryKw("LOAD")) {
-      p.tryKw("SILENT")
-      val src = p.next() match {
-        case TIri(i) => i
-        case t => p.fail(s"LOAD needs an <iri>/path source, found $t")
-      }
-      return ULoad(src)
-    }
-    if (p.tryKw("INSERT")) {
-      if (p.tryKw("DATA")) {
-        val g = parseGroup(p, prefixes)
-        return UGround(insert = true, groundTriples(g, "INSERT DATA"))
-      }
-      val ins = templateGroup(p, prefixes, "INSERT")
-      p.eatKw("WHERE")
-      val w = parseGroup(p, prefixes)
-      return UModify(None, Some(ins), w)
-    }
-    if (p.tryKw("DELETE")) {
-      if (p.tryKw("DATA")) {
-        val g = parseGroup(p, prefixes)
-        requireNoBlanks(g, "DELETE DATA")
-        return UGround(insert = false, groundTriples(g, "DELETE DATA"))
-      }
-      if (p.tryKw("WHERE")) {
-        // DELETE WHERE: the pattern is both template and WHERE clause
-        val w = parseGroup(p, prefixes)
-        require(w.filters.isEmpty && w.optionals.isEmpty && w.unions.isEmpty &&
-          w.minuses.isEmpty && w.paths.isEmpty && w.binds.isEmpty &&
-          w.subqueries.isEmpty && w.subgroups.isEmpty &&
-          w.graphs.isEmpty && w.services.isEmpty,
-          "DELETE WHERE takes a plain triple-pattern block")
-        requireNoBlanks(w, "DELETE WHERE")
-        return UModify(Some(w), None, w)
-      }
-      val del = templateGroup(p, prefixes, "DELETE")
-      requireNoBlanks(del, "DELETE template")
-      val ins = if (p.tryKw("INSERT")) Some(templateGroup(p, prefixes, "INSERT"))
-                else None
-      p.eatKw("WHERE")
-      val w = parseGroup(p, prefixes)
-      return UModify(Some(del), ins, w)
-    }
-    p.fail("expected INSERT, DELETE, LOAD, CLEAR, DROP, CREATE, COPY, MOVE or ADD")
-  }
-
-  private def execUpdateOp(spark: SparkSession, h: graft.store.StoreHandle,
-                           op: UOp): graft.store.StoreHandle = op match {
-    case UClear => graft.store.GraftStore.empty(spark)
-    case UNoop => h
-    case ULoad(src) =>
-      // LOAD <source>: distributed parse + O(Δ) append. Format by file
-      // extension: .ttl routes to the Turtle loader (which skolemizes
-      // per FILE already), everything else parses as N-Triples with
-      // per-SOURCE skolemization — both idempotent on re-load, no
-      // cross-file label capture (the loader's standing convention).
-      val parsed =
-        if (src.endsWith(".ttl"))
-          graft.store.TripleStore.parseTurtle(spark, src)
-        else graft.store.TripleStore.skolemize(
-          graft.store.TripleStore.parseNTriples(spark, src), src)
-      graft.store.GraftStore.append(spark, h, parsed)
-    case UModify(del, ins, where) => applyModify(spark, h, del, ins, where)
-    case g: UGround => // unreachable: the executor batches these
-      throw new IllegalStateException(s"unbatched ground op $g")
-  }
-
-  /** Parse a `{ ... }` template block: triple patterns only. */
-  private def templateGroup(p: P, prefixes: Map[String, String],
-                            what: String): Group = {
-    val g = parseGroup(p, prefixes)
-    require(g.filters.isEmpty && g.optionals.isEmpty && g.unions.isEmpty &&
-      g.minuses.isEmpty && g.paths.isEmpty && g.binds.isEmpty &&
-      g.subqueries.isEmpty && g.subgroups.isEmpty &&
-      g.graphs.isEmpty && g.services.isEmpty,
-      s"$what template must contain only triple patterns")
-    g
-  }
-
+  /** Blank nodes are forbidden in DELETE data and templates (§3.1.3): in
+    * the top-level triples and in every GRAPH block's triples.
+    */
   private def requireNoBlanks(g: Group, what: String): Unit =
-    require(!g.triples.exists(_.consts.exists(_.toString.startsWith("_:"))),
+    require(!(g.triples ++ g.graphs.flatMap(_._2.triples))
+      .exists(_.consts.exists(_.toString.startsWith("_:"))),
       s"$what must not contain blank nodes (SPARQL 1.1 Update)")
 
-  /** Ground triples of an INSERT/DELETE DATA block as driver-side tuples
-    * (they are parse-time constants, which is what lets the update
-    * executor batch adjacent ground ops).
+  /** Data blocks and templates are quad patterns (§3.1): triples, and
+    * GRAPH blocks of triples.
     */
-  private def groundTriples(g: Group, what: String): Seq[(String, String, String)] = {
-    val t = templateOnly(g, what)
-    require(t.forall(_.vars.isEmpty), s"$what requires ground triples")
-    t.map(tp => (tp.s.asInstanceOf[C].value.toString,
-        tp.p.asInstanceOf[C].value.toString,
-        tp.o.asInstanceOf[C].value.toString))
+  private def requireQuadPattern(g: Group, what: String): Unit = {
+    def only(x: Group, graphs: Seq[(Term, Group)]): Boolean =
+      x == Group(x.triples, Nil, Nil, Nil, graphs = graphs)
+    require(only(g, g.graphs) && g.graphs.forall(x => only(x._2, Nil)),
+      s"$what takes only triples and GRAPH blocks of triples")
   }
 
-  private def templateOnly(g: Group, what: String): Seq[TriplePattern] = {
-    require(g.filters.isEmpty && g.optionals.isEmpty && g.unions.isEmpty &&
-      g.minuses.isEmpty && g.paths.isEmpty && g.binds.isEmpty &&
-      g.subqueries.isEmpty && g.subgroups.isEmpty && g.graphs.isEmpty &&
-      g.services.isEmpty,
-      s"$what takes only triples (GRAPH targets need the quad-dataset " +
-        "path, Sparql.updateQuads)")
-    g.triples
-  }
-
-  /** DELETE/INSERT WHERE: evaluate the WHERE once against the CURRENT
-    * store — over the ENCODED relation (every join below the single
-    * decode stage moves fixed-width longs, the same lazy-decode
-    * discipline as the SELECT path) — then instantiate both templates
-    * from the same pinned decoded solutions (unbound-template rows drop,
-    * like CONSTRUCT), delete then insert.
-    */
   /** The WHERE-evaluation half of a modify op: compile against `h`,
     * bounded-collect + decode (one dictionary probe). Side-effect-free
     * on the handle, so hazard-free ops prefetch it CONCURRENTLY against
@@ -1069,9 +899,8 @@ object Sparql {
                                 h: graft.store.StoreHandle,
                                 ins: Option[Group], where: Group)
       : Option[(LocalSols, Map[Long, String], Set[Long])] = {
-    val env = graft.Prof.t("encEnvFor")(
-      encEnvFor(spark, h, where, plainVarsOfG(where)))
-    val encSols = graft.Prof.t("compileGroup")(compileGroup(env, where))
+    val env = encEnvFor(spark, h, where, plainVarsOfG(where))
+    val encSols = compileGroup(env, where)
     // insert-template constant hashes ride the solution-decode probe, so
     // the append's hash-claim check needs no second dictionary job
     // (solution-derived terms are claim-safe by construction on a
@@ -1083,10 +912,16 @@ object Sparql {
           case C(v) if !v.toString.startsWith("_:") =>
             graft.dict.Dictionary.termHashLocal(v.toString)
         }.toSet
-    graft.Prof.t("smallModifySols")(
-      smallModifySols(env, encSols, insConstIds))
+    smallModifySols(env, encSols, insConstIds)
   }
 
+  /** DELETE/INSERT WHERE: evaluate the WHERE once against the CURRENT
+    * store — over the ENCODED relation (every join below the single
+    * decode stage moves fixed-width longs, the same lazy-decode
+    * discipline as the SELECT path) — then instantiate both templates
+    * from the same pinned decoded solutions (unbound-template rows drop,
+    * like CONSTRUCT), delete then insert.
+    */
   private def applyModify(spark: SparkSession, h: graft.store.StoreHandle,
                           del: Option[Group], ins: Option[Group],
                           where: Group,
@@ -1102,7 +937,7 @@ object Sparql {
         var out = h
         del.foreach { t =>
           if (t.triples.nonEmpty) {
-            val all = graft.Prof.t("instantiate(del)")(instantiateRowsAll(t, sols))
+            val all = instantiateRowsAll(t, sols)
             // DELETE WHERE shape: the template IS the whole (single
             // pattern + filters only) WHERE group, so each UNDEDUPLICATED
             // solution row is 1:1 with a matching store row — the
@@ -1116,21 +951,20 @@ object Sparql {
               where.values.isEmpty && where.valuesMulti.isEmpty &&
               where.existsFilters.isEmpty && where.graphs.isEmpty &&
               where.services.isEmpty
-            out = graft.Prof.t("removeLocal*")(
+            out =
               if (selfDelete)
                 graft.store.GraftStore.removeLocalPrecounted(spark, out,
                   all.distinct,
                   all.groupBy(_._2).view.mapValues(_.size.toLong).toMap)
               else
-                graft.store.GraftStore.removeLocal(spark, out, all.distinct))
+                graft.store.GraftStore.removeLocal(spark, out, all.distinct)
           }
         }
         ins.foreach { t =>
           if (t.triples.nonEmpty) {
-            val rows = graft.Prof.t("instantiate(ins)")(instantiateRows(t, sols))
-            out = graft.Prof.t("appendLocal")(
-              graft.store.GraftStore.appendLocal(spark, out, rows,
-                claims, probed))
+            val rows = instantiateRows(t, sols)
+            out = graft.store.GraftStore.appendLocal(spark, out, rows,
+              claims, probed)
           }
         }
         out
@@ -1194,8 +1028,8 @@ object Sparql {
   private def smallModifySols(env: Env, encSols: DataFrame,
                               extraIds: Set[Long] = Set.empty)
       : Option[(LocalSols, Map[Long, String], Set[Long])] = {
-    val first = graft.Prof.t("smallSols.collect")(
-      graft.dict.Dictionary.collectBounded(encSols, graft.dict.Dictionary.LocalCap)) match {
+    val first = graft.dict.Dictionary.collectBounded(encSols,
+        graft.dict.Dictionary.LocalCap) match {
       case Some(rows) => rows
       case None => return None
     }
@@ -1205,8 +1039,8 @@ object Sparql {
       case (f, i) if !e.plainVars.contains(f.name) && !f.name.startsWith("__") &&
         f.dataType == org.apache.spark.sql.types.LongType => i
     }.toSet
-    val d = graft.Prof.t("smallSols.dictProbe")(graft.dict.Dictionary
-      .decodeRows(first.toSeq, schema, decodePos, env.dictAll, extraIds))
+    val d = graft.dict.Dictionary
+      .decodeRows(first.toSeq, schema, decodePos, env.dictAll, extraIds)
     // claims = STORE-dict membership only: a query-local dict entry (an
     // absent constant's rendering id) must not read as "already claimed",
     // or an insert of that term would skip its dictionary delta
@@ -2252,8 +2086,7 @@ object Sparql {
       val cols = df.columns.toSeq
         .filterNot(e.plainVars.contains).filterNot(_.startsWith("__"))
       if (cols.isEmpty) df
-      else graft.Prof.t("decodeFinal")(
-        graft.dict.Dictionary.decodeAll(df, env.dictAll, cols))
+      else graft.dict.Dictionary.decodeAll(df, env.dictAll, cols)
   }
 
   /** A result decoded on the driver is a local relation; on one
@@ -3198,7 +3031,7 @@ object Sparql {
         case other => other
       },
       having = qRaw.having.map(extractAggsB(_, exprAggs)))
-    var df = graft.Prof.t("compileQuery.group")(compileGroup(env, q.group))
+    var df = compileGroup(env, q.group)
     val aggs = q.projection.collect { case a: PAgg => a }
     // Sort keys materialize BEFORE projection (ARQ's OrderBy-then-Project
     // algebra position: keys may use non-projected vars and arbitrary
@@ -3864,32 +3697,37 @@ object Sparql {
       q.group.copy(valuesMulti = q.group.valuesMulti :+ pv))
     val env = quadEncEnv(spark, encQuads, dict, gConsts, plainVarsOf(q),
       q.fromGraphs, q.fromNamed, stats)
-    graft.Prof.t("quadsEnc.compileQuery")(compileQuery(env, q, top = true))
+    compileQuery(env, q, top = true)
   }
 
-  /** The ENCODED quad environment for one group: hash every pattern
-    * constant driver-side, probe only the surfacing set (path endpoints,
-    * VALUES entries) against the dictionary, slice the §13.2 dataset on
-    * encoded graph ids. Shared by the four encoded quad query forms.
+  /** The encoded-mode context over a certified (pure-hash) quad
+    * dictionary for one group: hash every pattern constant (and `extra`)
+    * driver-side, probe only the surfacing set (path endpoints, VALUES
+    * entries) against the dictionary for decode mappings.
+    */
+  private def hashEncEnv(spark: SparkSession, dict: DataFrame, g: Group,
+                         extra: Seq[String], plain: Set[String]): EncEnv = {
+    import graft.dict.Dictionary
+    val ids = Dictionary.hashLiterals(spark, (groupConsts(g) ++ extra).toSeq.sorted)
+    val probeSet = (pathEndpointConsts(g) ++ inlineValueConsts(g)).toSeq.sorted
+    val present = Dictionary.lookup(dict, probeSet)
+    EncEnv(dict, ids, probeSet.filterNot(present.contains).map(c => ids(c) -> c),
+      plain)
+  }
+
+  /** The ENCODED quad environment for one group ([[hashEncEnv]]), with
+    * the §13.2 dataset sliced on encoded graph ids. Shared by the four
+    * encoded quad query forms.
     */
   private def quadEncEnv(spark: SparkSession, encQuads: DataFrame,
                          dict: DataFrame, gConsts: Group,
                          plain: Set[String],
                          fromGraphs: Seq[String], fromNamed: Seq[String],
                          stats: Map[String, PredStats] = Map.empty): Env = {
-    import graft.dict.Dictionary
-    val consts =
-      (groupConsts(gConsts) ++ fromGraphs ++ fromNamed).toSeq.sorted
-    val ids = graft.Prof.t("quadsEnc.hashLiterals")(
-      Dictionary.hashLiterals(spark, consts))
-    val probeSet =
-      (pathEndpointConsts(gConsts) ++ inlineValueConsts(gConsts)).toSeq.sorted
-    val present = graft.Prof.t("quadsEnc.constProbe")(
-      Dictionary.lookup(dict, probeSet))
-    val localDict = probeSet.filterNot(present.contains).map(c => ids(c) -> c)
+    val e = hashEncEnv(spark, dict, gConsts, fromGraphs ++ fromNamed, plain)
     val explicitDataset = fromGraphs.nonEmpty || fromNamed.nonEmpty
-    val fromG = fromGraphs.map(ids)
-    val fromN = fromNamed.map(ids)
+    val fromG = fromGraphs.map(e.ids)
+    val fromN = fromNamed.map(e.ids)
     val defaultG =
       if (!explicitDataset) encQuads.where(col("g").isNull).select("s", "p", "o")
       else if (fromG.isEmpty) encQuads.where(lit(false)).select("s", "p", "o")
@@ -3900,8 +3738,7 @@ object Sparql {
       else encQuads.where(col("g").isin(fromN: _*))
     val total =
       if (stats.nonEmpty) stats.values.map(_.cnt).sum else 1000000L
-    Env(spark, defaultG, stats, total,
-      Some(EncEnv(dict, ids, localDict, plain)), quads = Some(named))
+    Env(spark, defaultG, stats, total, Some(e), quads = Some(named))
   }
 
   /** ASK over an ENCODED quad dataset: the existence probe runs on long
@@ -4083,9 +3920,10 @@ object Sparql {
       nodes => nodes.where(col("s").startsWith("_:")))
   }
 
-  // ---- SPARQL 1.1 Update over a quad dataset (§3.1 ground data ops +
-  // ---- the full §3.2 graph-management set, REAL this time — the
-  // ---- single-graph store path errors on named targets) ----
+  // ---- SPARQL 1.1 Update: the AST and parser every entry point shares,
+  // ---- and the quad executor behind updateQuads/updateQuadsEnc (§3.1
+  // ---- data and modify ops + the full §3.2 graph-management set; the
+  // ---- single-graph store path reads the same AST, see `update`) ----
 
   private sealed trait QTarget
   private case object QDefault extends QTarget
@@ -4093,16 +3931,47 @@ object Sparql {
   private case object QAllNamed extends QTarget
   private case object QAll extends QTarget
 
+  /** One parsed Update operation. Graph positions are None for the
+    * default graph; `silent` is the op's SILENT flag (§3.2: a failing op
+    * has no effect), which only the single-graph store path can need.
+    */
   private sealed trait QuadOp
   private final case class QGround(insert: Boolean,
       quads: Seq[(String, String, String, Option[String])]) extends QuadOp
-  private final case class QClear(t: QTarget) extends QuadOp
+  private final case class QClear(t: QTarget, silent: Boolean) extends QuadOp
+  /** CREATE; `named` = the op names a graph. */
+  private final case class QCreate(named: Boolean, silent: Boolean)
+      extends QuadOp
+  /** COPY/MOVE/ADD; `from == to` is an op that changes nothing (§3.2). */
   private final case class QMove(kind: String, from: Option[String],
-                                 to: Option[String]) extends QuadOp
+                                 to: Option[String], silent: Boolean)
+      extends QuadOp
   private final case class QModify(withG: Option[String], del: Option[Group],
                                    ins: Option[Group], where: Group) extends QuadOp
-  private final case class QLoad(src: String, into: Option[String]) extends QuadOp
-  private case object QNop extends QuadOp
+  private final case class QLoad(src: String, into: Option[String],
+                                 silent: Boolean) extends QuadOp
+
+  /** Parse a whole Update script: `;`-separated ops, with PREFIX decls
+    * accumulating across ops (earlier ones stay in scope). The script
+    * parses completely before any op runs, so a syntax error anywhere
+    * leaves the caller's data untouched.
+    */
+  private def parseUpdate(updateText: String): Vector[QuadOp] = {
+    val p = new P(tokenize(updateText))
+    var prefixes = Map.empty[String, String]
+    val ops = Vector.newBuilder[QuadOp]
+    var more = p.peek.nonEmpty
+    while (more) {
+      prefixes = prefixes ++ parsePrefixes(p)
+      ops += parseQuadUpdateOp(p, prefixes)
+      more = p.trySym(";") && p.peek.nonEmpty
+    }
+    // Trailing tokens mean the request was not what would execute (e.g.
+    // a missing ';' between operations would silently drop every later op)
+    if (p.peek.nonEmpty)
+      p.fail(s"unexpected tokens after update operation: ${p.peek.get}")
+    ops.result()
+  }
 
   /** Ground quads of a data block: top-level triples land in the default
     * graph (None), `GRAPH <iri> { .. }` wrappers in that named graph.
@@ -4115,13 +3984,9 @@ object Sparql {
         tp.p.asInstanceOf[C].value.toString,
         tp.o.asInstanceOf[C].value.toString, gr))
     }
-    require(g.filters.isEmpty && g.optionals.isEmpty && g.unions.isEmpty &&
-      g.minuses.isEmpty && g.paths.isEmpty && g.binds.isEmpty &&
-      g.subqueries.isEmpty && g.subgroups.isEmpty,
-      s"$what takes only triples and GRAPH blocks")
+    requireQuadPattern(g, what)
     ground(g.triples, None) ++ g.graphs.flatMap {
-      case (C(iri), inner) =>
-        ground(templateOnly(inner, what), Some(iri.toString))
+      case (C(iri), inner) => ground(inner.triples, Some(iri.toString))
       case (V(v), _) =>
         throw new IllegalArgumentException(
           s"$what needs a constant GRAPH target, found ?$v")
@@ -4140,21 +4005,21 @@ object Sparql {
     if (p.tryKw("CLEAR") || p.tryKw("DROP")) {
       // graphs exist exactly while non-empty in a relation-backed
       // dataset, so DROP ≡ CLEAR here (§3.2.2 note)
-      p.tryKw("SILENT")
+      val silent = p.tryKw("SILENT")
       val t =
         if (p.tryKw("ALL")) QAll
         else if (p.tryKw("NAMED")) QAllNamed
-        else if (p.tryKw("DEFAULT")) QDefault
+        // a bare CLEAR/DROP means the default graph
+        else if (p.tryKw("DEFAULT") || p.peek.forall(_ == TSym(";"))) QDefault
         else { p.tryKw("GRAPH"); graphEndpoint().map(QNamed(_)).getOrElse(QDefault) }
-      return QClear(t)
+      return QClear(t, silent)
     }
     if (p.tryKw("LOAD")) {
-      // LOAD [SILENT] <src> [INTO GRAPH <g>] — §3.1.4, the full form the
-      // single-graph path cannot honor. TriG/N-Quads sources carry their
-      // own graph labels (INTO GRAPH then REPLACES them, per the note
-      // that a load's target overrides); Turtle/N-Triples land in the
-      // target graph, default if absent.
-      p.tryKw("SILENT")
+      // LOAD [SILENT] <src> [INTO GRAPH <g>] — §3.1.4. TriG/N-Quads
+      // sources carry their own graph labels (INTO GRAPH then REPLACES
+      // them, per the note that a load's target overrides);
+      // Turtle/N-Triples land in the target graph, default if absent.
+      val silent = p.tryKw("SILENT")
       val src = p.next() match {
         case TIri(i) => i
         case t => p.fail(s"LOAD needs an <iri>/path source, found $t")
@@ -4162,30 +4027,30 @@ object Sparql {
       val into =
         if (p.tryKw("INTO")) { p.eatKw("GRAPH"); graphEndpoint() }
         else None
-      return QLoad(src, into)
+      return QLoad(src, into, silent)
     }
     if (p.tryKw("CREATE")) {
-      // an empty graph is indistinguishable from an absent one here
-      p.tryKw("SILENT"); p.tryKw("GRAPH"); p.tryKw("DEFAULT")
-      p.peek match { case Some(TIri(_)) => p.pos += 1; case _ => () }
-      return QNop
+      val silent = p.tryKw("SILENT")
+      val kw = p.tryKw("GRAPH") || p.tryKw("NAMED")
+      if (!kw) p.tryKw("DEFAULT")
+      val iri = p.peek match {
+        case Some(TIri(_)) => p.pos += 1; true
+        case _ => false
+      }
+      return QCreate(kw || iri, silent)
     }
     for (kind <- Seq("COPY", "MOVE", "ADD")) if (p.tryKw(kind)) {
-      p.tryKw("SILENT")
+      val silent = p.tryKw("SILENT")
       val from = graphEndpoint()
       p.eatKw("TO")
       val to = graphEndpoint()
-      return if (from == to) QNop else QMove(kind, from, to)
+      return QMove(kind, from, to, silent)
     }
     // quad templates: triples (default or WITH graph) + GRAPH wrappers
     // whose target may be a constant or a WHERE-bound variable
     def quadTemplate(what: String): Group = {
       val g = parseGroup(p, prefixes)
-      require(g.filters.isEmpty && g.optionals.isEmpty && g.unions.isEmpty &&
-        g.minuses.isEmpty && g.paths.isEmpty && g.binds.isEmpty &&
-        g.subqueries.isEmpty && g.subgroups.isEmpty,
-        s"$what template takes only triples and GRAPH blocks")
-      g.graphs.foreach { case (_, inner) => templateOnly(inner, what) }
+      requireQuadPattern(g, what)
       g
     }
     val withG = if (p.tryKw("WITH")) parseTerm(p, prefixes) match {
@@ -4196,51 +4061,55 @@ object Sparql {
       if (withG.isEmpty && p.tryKw("DATA"))
         return QGround(insert = true,
           groundQuads(parseGroup(p, prefixes), "INSERT DATA"))
-      val ins = quadTemplate("INSERT")
+      val ins = quadTemplate("INSERT template")
       p.eatKw("WHERE")
       return QModify(withG, None, Some(ins), parseGroup(p, prefixes))
     }
     if (p.tryKw("DELETE")) {
-      if (withG.isEmpty && p.tryKw("DATA"))
-        return QGround(insert = false,
-          groundQuads(parseGroup(p, prefixes), "DELETE DATA"))
+      if (withG.isEmpty && p.tryKw("DATA")) {
+        val g = parseGroup(p, prefixes)
+        requireNoBlanks(g, "DELETE DATA")
+        return QGround(insert = false, groundQuads(g, "DELETE DATA"))
+      }
       if (p.tryKw("WHERE")) { // DELETE WHERE: the pattern is the template
-        val w = parseGroup(p, prefixes)
+        val w = quadTemplate("DELETE WHERE")
+        requireNoBlanks(w, "DELETE WHERE")
         return QModify(withG, Some(w), None, w)
       }
-      val del = quadTemplate("DELETE")
-      val ins = if (p.tryKw("INSERT")) Some(quadTemplate("INSERT")) else None
+      val del = quadTemplate("DELETE template")
+      requireNoBlanks(del, "DELETE template")
+      val ins =
+        if (p.tryKw("INSERT")) Some(quadTemplate("INSERT template")) else None
       p.eatKw("WHERE")
       return QModify(withG, Some(del), ins, parseGroup(p, prefixes))
     }
-    p.fail("updateQuads supports INSERT/DELETE DATA (with GRAPH), " +
-      "[WITH <g>] DELETE/INSERT ... WHERE, DELETE WHERE, " +
-      "CLEAR/DROP/CREATE, and COPY/MOVE/ADD")
+    p.fail("expected INSERT, DELETE, WITH, LOAD, CLEAR, DROP, CREATE, " +
+      "COPY, MOVE or ADD")
   }
 
   /** Modify solution sets at or under this row count take the broadcast
-    * probe-and-union shape in [[updateQuads]]/[[updateQuadsEnc]]; larger
-    * deltas fall back to shuffle joins plus a full checkpoint (the right
-    * trade once Δ rivals the store).
+    * probe-and-union shape in the quad executor ([[runQuadUpdate]]);
+    * larger deltas fall back to shuffle joins plus a full checkpoint (the
+    * right trade once Δ rivals the store).
     */
   private val UpdateBroadcastMax = 1000000L
 
   /** Apply a SPARQL 1.1 Update script to a quad dataset and return the
-    * updated (s, p, o, g) relation — pure DataFrame algebra, lazily
-    * composed: ground data ops are null-safe anti-join/union deltas
-    * (set semantics), graph management slices and retags the relation.
-    * The input is immutable; every op sees the previous op's result
-    * (§3.1 sequential semantics). Scale shapes: ground data ops stream
-    * the dataset once against the broadcast batch (no dataset shuffle);
-    * CLEAR/DROP/COPY/MOVE are predicate filters + a retagged slice; ADD
-    * pays a graph-to-graph set difference, inherent to its merge
-    * semantics; pattern modifies evaluate their WHERE over the current
-    * state and instantiate templates like CONSTRUCT. Ops whose result
-    * references the dataset MORE THAN ONCE (inserts probe-and-union,
-    * modifies join their own WHERE) CHECKPOINT before the next op —
-    * without this the plan doubles per op and a few chained modifies
-    * exceed Catalyst analysis memory; with it the plan stays linear (the
-    * same per-op materialization discipline as the store-handle engine).
+    * updated (s, p, o, g) relation — the string-term entry of the one
+    * quad executor ([[runQuadUpdate]]), shared with [[updateQuadsEnc]].
+    * Pure DataFrame algebra, lazily composed: ground data ops are
+    * null-safe anti-join/union deltas (set semantics), graph management
+    * slices and retags the relation. The input is immutable; every op
+    * sees the previous op's result (§3.1 sequential semantics), and
+    * hazard-free modify ops evaluate their WHERE concurrently against the
+    * input (see `prefetchableQuadModifies`). Scale shapes: ground data
+    * ops stream the dataset once against the broadcast batch (no dataset
+    * shuffle); CLEAR/DROP/COPY/MOVE are predicate filters + a retagged
+    * slice; ADD pays a graph-to-graph set difference, inherent to its
+    * merge semantics; pattern modifies evaluate their WHERE over the
+    * current state and instantiate templates like CONSTRUCT. Only
+    * |Δ|-sized intermediates pin, so the plan grows linearly per op and
+    * the full dataset never checkpoints in the common case.
     *
     * RESULT OWNERSHIP: the returned relation is LAZY by default — the
     * unchanged base plus the script's pinned |Δ|-sized delta frames
@@ -4253,26 +4122,208 @@ object Sparql {
     * checkpoint it once.
     */
   def updateQuads(spark: SparkSession, quads: DataFrame,
-                  updateText: String): DataFrame = {
-    val p = new P(tokenize(updateText))
-    var prefixes = Map.empty[String, String]
-    val ops = Vector.newBuilder[QuadOp]
-    var more = p.peek.nonEmpty
-    while (more) {
-      prefixes = prefixes ++ parsePrefixes(p)
-      ops += parseQuadUpdateOp(p, prefixes)
-      more = p.trySym(";") && p.peek.nonEmpty
-    }
-    if (p.peek.nonEmpty)
-      p.fail(s"unexpected tokens after update operation: ${p.peek.get}")
+                  updateText: String): DataFrame =
+    runQuadUpdate(quads, parseUpdate(updateText), new StringTerms(spark))
+
+  /** ENCODED named-graph Update — the [[updateQuads]] surface and executor
+    * on dictionary ids: every op's joins (ground probes, template deltas,
+    * graph slicing, the modify WHERE) move fixed-width longs for s/p/o
+    * AND g, completing the encoded quad lifecycle (ingest →
+    * [[executeQuadsEncoded]] → update). Returns the (updated encoded
+    * dataset, updated dictionary).
+    *
+    * Dictionary maintenance ([[EncodedTerms]]): new terms — ground INSERT
+    * DATA rows, insert-template constants, retarget graph labels, LOAD
+    * payloads — take their certified xxhash64 id and EXTEND the
+    * dictionary; a new term whose id collides with a different existing
+    * term fails fast, like the index build (`TripleStore.encodeQuads`).
+    * Deleted terms stay in the dictionary (ids are content hashes —
+    * idempotent, and a stale entry is harmless). Pattern-modify templates
+    * must draw from id-typed WHERE vars (pattern/GRAPH positions);
+    * value-typed (BIND-computed) template vars reject with a pointer to
+    * the string path — re-entering term space mid-script would force a
+    * per-op dictionary round trip.
+    *
+    * RESULT OWNERSHIP: lazy by default with pin ownership transferred to
+    * the returned relation — see [[updateQuads]].
+    */
+  def updateQuadsEnc(spark: SparkSession, encQuads: DataFrame, dict: DataFrame,
+                     updateText: String): (DataFrame, DataFrame) = {
+    val terms = new EncodedTerms(spark, dict)
+    val out = runQuadUpdate(encQuads, parseUpdate(updateText), terms)
+    (out, terms.dictNow.get)
+  }
+
+  /** The term space of a quad dataset — the one decision the quad Update
+    * executor ([[runQuadUpdate]]) leaves open: how a constant becomes a
+    * column value (and so the type of the default graph's null `g`), the
+    * dictionary a WHERE compiles against (none: string terms), and the
+    * dictionary bookkeeping only an encoded dataset has. The no-op
+    * defaults are the string space's.
+    */
+  private sealed abstract class QuadTerms(val spark: SparkSession) {
+    /** Type of the s/p/o/g columns. */
+    def colType: org.apache.spark.sql.types.DataType
+    /** A constant as a column value. */
+    def value(term: String): Any
+    /** The dictionary as it stands; a WHERE prefetch binds the pre-script
+      * one. */
+    def dictNow: Option[DataFrame] = None
+    /** Once, before the first op runs. */
+    def begin(ops: Seq[QuadOp]): Unit = ()
+    /** Constants an op is about to write. */
+    def extend(terms: Seq[String]): Unit = ()
+    /** A LOAD payload of (s, p, o, g) strings in this term space. */
+    def loaded(quads: DataFrame): DataFrame = quads
+    /** A modify op's solutions, before its templates instantiate. */
+    def checkTemplates(sols: DataFrame, templates: Seq[Group]): Unit = ()
+  }
+
+  private final class StringTerms(spark: SparkSession)
+      extends QuadTerms(spark) {
+    def colType = org.apache.spark.sql.types.StringType
+    def value(term: String): Any = term
+  }
+
+  /** Dictionary-encoded quads: a constant is its xxhash64 id, and the
+    * terms a script writes extend the dictionary — certified against the
+    * existing terms by ONE script-wide pre-probe where possible.
+    */
+  private final class EncodedTerms(spark: SparkSession, dict0: DataFrame)
+      extends QuadTerms(spark) {
+    import graft.dict.Dictionary
     import spark.implicits._
+    private var d = dict0
+    // what `begin`'s pre-probe covered: its constants, and those of them
+    // the dictionary holds (grows as fresh ones are added)
+    private var scriptConsts = Set.empty[String]
+    private val knownPresent = scala.collection.mutable.Set.empty[String]
+    def colType = org.apache.spark.sql.types.LongType
+    def value(term: String): Any = Dictionary.termHashLocal(term)
+    override def dictNow: Option[DataFrame] = Some(d)
+
+    // SCRIPT-WIDE constant pre-probe: every term any op can introduce is
+    // a parse-time constant (`newTerms`), so ONE dictionary job answers
+    // presence + hash-claim safety for the whole script and the per-op
+    // extension becomes a driver-side set update. A LOAD op disables the
+    // shortcut: loaded terms enter the dictionary mid-script, and a later
+    // constant could clash with one of them — the per-op probe sees
+    // that, a start-of-script probe cannot.
+    override def begin(ops: Seq[QuadOp]): Unit = {
+      val hasLoad = ops.exists { case _: QLoad => true; case _ => false }
+      scriptConsts = if (hasLoad) Set.empty else ops.flatMap(newTerms).toSet
+      if (scriptConsts.nonEmpty) {
+        val (present, clash) =
+          Dictionary.probeClaims(spark, d, scriptConsts.toSeq.sorted)
+        require(!clash,
+          "xxhash64 collision between a new term and an existing one — " +
+            "use the string path (Sparql.updateQuads) for this batch")
+        // the pre-probe certifies fresh-vs-EXISTING claims; two fresh
+        // terms in ONE script colliding with each other would each pass
+        // that check and silently share an id (the old per-op path saw
+        // the first claim land before probing the second) — require the
+        // fresh set's ids to be claim-free among themselves too
+        val freshDup = scriptConsts.toSeq.filterNot(present)
+          .groupBy(Dictionary.termHashLocal).values.find(_.distinct.size > 1)
+        require(freshDup.isEmpty,
+          "xxhash64 collision between two new terms in one script " +
+            s"(${freshDup.toSeq.flatten.distinct.mkString(", ")}) — " +
+            "use the string path (Sparql.updateQuads) for this batch")
+        knownPresent ++= present
+      }
+    }
+
+    /** Driver-side dictionary extension for a bounded constant set. */
+    override def extend(terms: Seq[String]): Unit = {
+      val uniq = terms.distinct
+      val (covered, uncovered) = uniq.partition(scriptConsts.contains)
+      val freshCovered = covered.filterNot(knownPresent)
+      if (freshCovered.nonEmpty) {
+        // claim-safety came from the script-wide pre-probe; no job here
+        d = d.unionByName(freshCovered
+          .map(t => (Dictionary.termHashLocal(t), t)).toDF("id", "term"))
+        knownPresent ++= freshCovered
+      }
+      if (uncovered.nonEmpty) {
+        val present = Dictionary.lookup(d, uncovered)
+        val fresh = uncovered.filterNot(present.contains)
+          .map(t => (Dictionary.termHashLocal(t), t))
+        if (fresh.nonEmpty) {
+          val clash = d.where(col("id").isin(fresh.map(_._1): _*)).limit(1)
+          require(clash.isEmpty,
+            "xxhash64 collision between a new term and an existing one — " +
+              "use the string path (Sparql.updateQuads) for this batch")
+          d = d.unionByName(fresh.toDF("id", "term"))
+        }
+      }
+    }
+
+    /** Distributed extension for the unbounded LOAD payload, then its
+      * encode. The fresh dictionary rows checkpoint UNTRACKED — the
+      * dictionary result must outlive the executor's pin release.
+      */
+    override def loaded(quads: DataFrame): DataFrame = {
+      val terms = quads.select(
+        explode(array(col("s"), col("p"), col("o"), col("g"))).as("term"))
+      val cand = terms.select(col("term").cast("string").as("term"))
+        .where(col("term").isNotNull).distinct()
+        .select(Dictionary.termHash(col("term")).as("id"), col("term"))
+      val clash = cand.join(d.select(col("id"), col("term").as("__t2")),
+          Seq("id")).where(col("term") =!= col("__t2")).limit(1)
+      require(clash.isEmpty,
+        "xxhash64 collision between a loaded term and an existing one — " +
+          "use the string path (Sparql.updateQuads) for this source")
+      val fresh = graft.Pins.checkpoint(cand.join(d, Seq("id"), "left_anti"))
+      d = d.unionByName(fresh)
+      quads.select(
+        Dictionary.termHash(col("s")).as("s"),
+        Dictionary.termHash(col("p")).as("p"),
+        Dictionary.termHash(col("o")).as("o"),
+        when(col("g").isNull, lit(null).cast("long"))
+          .otherwise(Dictionary.termHash(col("g"))).as("g"))
+    }
+
+    /** Templates must instantiate from ID-typed columns. */
+    override def checkTemplates(sols: DataFrame, templates: Seq[Group]): Unit =
+      templates.flatMap { t =>
+        t.triples.flatMap(_.vars) ++
+          t.graphs.flatMap { case (gt, inner) =>
+            (gt match { case V(v) => Seq(v); case _ => Seq.empty }) ++
+              inner.triples.flatMap(_.vars)
+          }
+      }.distinct.foreach { v =>
+        require(sols.schema(v).dataType ==
+          org.apache.spark.sql.types.LongType,
+          s"template var ?$v is value-typed (BIND/expression) — the " +
+            "encoded path instantiates from pattern positions only; " +
+            "use Sparql.updateQuads for this script")
+      }
+  }
+
+  /** The quad Update executor behind [[updateQuads]] and
+    * [[updateQuadsEnc]]: folds the ops over the dataset in order, with
+    * the WHERE of every hazard-free modify op prefetched concurrently
+    * against the input. `terms` supplies the term space.
+    */
+  private def runQuadUpdate(quads: DataFrame, opsV: Vector[QuadOp],
+                            terms: QuadTerms): DataFrame = {
+    val spark = terms.spark
+    def v(t: String): Column = lit(terms.value(t))
+    val nullG = lit(null).cast(terms.colType)
+    terms.begin(opsV)
     def slice(g: Option[String])(q: DataFrame): DataFrame = g match {
       case None => q.where(col("g").isNull)
-      case Some(i) => q.where(col("g") === i)
+      case Some(i) => q.where(col("g") === v(i))
     }
-    def quadsDF(rows: Seq[(String, String, String, Option[String])]) =
-      rows.map { case (s, pr, o, g) => (s, pr, o, g.orNull) }
-        .toDF("s", "p", "o", "g")
+    def quadsDF(rows: Seq[(String, String, String, Option[String])]) = {
+      import org.apache.spark.sql.types.{StructField, StructType}
+      spark.createDataFrame(
+        java.util.Arrays.asList(rows.map { case (s, pr, o, g) =>
+          org.apache.spark.sql.Row(terms.value(s), terms.value(pr),
+            terms.value(o), g.map(terms.value).orNull)
+        }: _*),
+        StructType(Seq("s", "p", "o", "g").map(StructField(_, terms.colType))))
+    }
     // the renamed right side + null-safe (default-graph-aware) join
     // condition every quad set op shares
     def renamed(b: DataFrame): DataFrame =
@@ -4304,9 +4355,78 @@ object Sparql {
     // grow the plan LINEARLY and never checkpoint the full dataset per
     // op — the |store|-sized writes that dominated the three-modify gate.
     val pins = new graft.Pins
-    def applyOp(q: DataFrame, op: QuadOp): DataFrame = op match {
-      case QNop => q
+    /** Template instantiation from a pinned solution relation (shared
+      * by the apply step and the concurrent delta prefetch). Unbound
+      * template rows drop, like CONSTRUCT.
+      */
+    def instTmpl(sols: DataFrame, withG: Option[String], t: Group): DataFrame = {
+      def termCol(x: Term): Column = x match {
+        case V(n) => col(n)
+        case C(c) => v(c.toString)
+      }
+      val parts =
+        (t.triples.map(tp =>
+          (tp, Left(withG): Either[Option[String], String])) ++
+          t.graphs.flatMap { case (gt, inner) =>
+            val tgt: Either[Option[String], String] = gt match {
+              case C(c) => Left(Some(c.toString))
+              case V(n) => Right(n)
+            }
+            inner.triples.map(tp => (tp, tgt))
+          }).map { case (tp, tgt) =>
+          val gcol = tgt match {
+            case Left(g) => g.map(v).getOrElse(nullG)
+            case Right(n) => col(n)
+          }
+          val df0 = sols.select(termCol(tp.s).as("s"),
+              termCol(tp.p).as("p"), termCol(tp.o).as("o"), gcol.as("g"))
+            .where(col("s").isNotNull && col("p").isNotNull &&
+              col("o").isNotNull)
+          tgt match {
+            case Right(_) => df0.where(col("g").isNotNull)
+            case _ => df0
+          }
+        }
+      require(parts.nonEmpty, "empty modify template")
+      parts.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o", "g")
+    }
+    /** The read half of a modify op against an explicit relation +
+      * dictionary SNAPSHOT — hazard-free ops prefetch it CONCURRENTLY
+      * against the pre-script dataset (see the fold below), so the apply
+      * step runs NO jobs of its own. WITH <g> (else the true default
+      * graph) is the default slice; named graphs stay GRAPH-visible. ONE
+      * job pins the solutions AND counts them (lazy checkpoint
+      * materialized by the count — the pin-then-count sequence paid the
+      * per-job scheduling floor twice); both templates instantiate from
+      * that one relation (§3.1.3 — delete and insert see the SAME
+      * bindings), and its size picks the shape. For the broadcastable
+      * shape with an insert template, the already-present probe of the
+      * insert delta (after the deletes) is pinned here too.
+      */
+    def prepModify(q: DataFrame, dict: Option[DataFrame], m: QModify)
+        : (DataFrame, Long, Option[DataFrame]) = {
+      val enc = dict.map(hashEncEnv(spark, _, m.where, m.withG.toSeq,
+        plainVarsOfG(m.where)))
+      val env = Env(spark, slice(m.withG)(q).select("s", "p", "o"), Map.empty,
+        1000000L, enc, quads = Some(q.where(col("g").isNotNull)))
+      val (sols, cnt) = pins.pinCounted(compileGroup(env, m.where))
+      val present =
+        if (cnt <= UpdateBroadcastMax && m.ins.size == 1) {
+          val afterDel = m.del.foldLeft(q)((qq, t) =>
+            minus(qq, instTmpl(sols, m.withG, t), smallRight = true))
+          val add = instTmpl(sols, m.withG, m.ins.get)
+          Some(pins.pin(
+            afterDel.join(broadcast(renamed(add)), quadCond, "left_semi")))
+        } else None
+      (sols, cnt, present)
+    }
+    def applyOp(q: DataFrame, op: QuadOp,
+                prep: Option[(DataFrame, Long, Option[DataFrame])])
+        : DataFrame = op match {
+      case _: QCreate => q // an empty graph is indistinguishable from an absent one
       case QGround(true, rows) =>
+        terms.extend(rows.flatMap { case (s, pr, o, g) =>
+          Seq(s, pr, o) ++ g.toSeq })
         // set semantics, probe-the-big-side shape: the dataset streams
         // once against the BROADCAST ground batch to find already-present
         // quads (a bounded, pinned semi-join result), then the tiny
@@ -4317,61 +4437,19 @@ object Sparql {
           pins.pin(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
         unionQ(q, minus(add, present, smallRight = true))
       case QGround(false, rows) =>
+        // encoded: ids of absent terms match nothing — no dictionary work
         minus(q, quadsDF(rows), smallRight = true)
-      case QClear(QDefault) => q.where(col("g").isNotNull)
-      case QClear(QNamed(i)) => q.where(col("g").isNull || col("g") =!= i)
-      case QClear(QAllNamed) => q.where(col("g").isNull)
-      case QClear(QAll) => q.where(lit(false))
-      case QModify(withG, del, ins, where) =>
-        // WHERE evaluates against the CURRENT state: WITH <g> (else the
-        // true default graph) is the default slice; named graphs stay
-        // GRAPH-visible. Templates instantiate from the solutions like
-        // CONSTRUCT (unbound rows drop); delete applies before insert
-        // from the SAME solutions (§3.1.3).
-        val dflt = slice(withG)(q).select("s", "p", "o")
-        val env = stringEnv(spark, dflt, Map.empty)
-          .copy(quads = Some(q.where(col("g").isNotNull)))
-        // materialize the solution relation ONCE: both templates
-        // instantiate from it (§3.1.3 — delete and insert see the SAME
-        // bindings), and its actual size picks the physical shape below
-        // ONE job pins the solutions AND counts them (lazy checkpoint
-        // materialized by the count) — the pin-then-count sequence paid
-        // the per-job scheduling floor twice
-        val (sols, solsCnt) = graft.Prof.t("  qmod.pinSols+count") {
-          pins.pinCounted(compileGroup(env, where))
-        }
+      case QClear(QDefault, _) => q.where(col("g").isNotNull)
+      case QClear(QNamed(i), _) => q.where(col("g").isNull || col("g") =!= v(i))
+      case QClear(QAllNamed, _) => q.where(col("g").isNull)
+      case QClear(QAll, _) => q.where(lit(false))
+      case m @ QModify(withG, del, ins, _) =>
+        val (sols, solsCnt, present) =
+          prep.getOrElse(prepModify(q, terms.dictNow, m))
+        terms.checkTemplates(sols, del.toSeq ++ ins.toSeq)
+        ins.foreach(t => terms.extend(templateConsts(t, withG)))
         val small = solsCnt <= UpdateBroadcastMax
-        def inst(t: Group): DataFrame = {
-          def termCol(x: Term): Column = x match {
-            case V(v) => col(v)
-            case C(c) => lit(c.toString)
-          }
-          val parts =
-            (t.triples.map(tp =>
-              (tp, Left(withG): Either[Option[String], String])) ++
-              t.graphs.flatMap { case (gt, inner) =>
-                val tgt: Either[Option[String], String] = gt match {
-                  case C(c) => Left(Some(c.toString))
-                  case V(v) => Right(v)
-                }
-                inner.triples.map(tp => (tp, tgt))
-              }).map { case (tp, tgt) =>
-              val gcol = tgt match {
-                case Left(g) => g.map(lit(_)).getOrElse(lit(null).cast("string"))
-                case Right(v) => col(v)
-              }
-              val d = sols.select(termCol(tp.s).as("s"), termCol(tp.p).as("p"),
-                  termCol(tp.o).as("o"), gcol.as("g"))
-                .where(col("s").isNotNull && col("p").isNotNull &&
-                  col("o").isNotNull)
-              tgt match {
-                case Right(_) => d.where(col("g").isNotNull)
-                case _ => d
-              }
-            }
-          require(parts.nonEmpty, "empty modify template")
-          parts.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o", "g")
-        }
+        def inst(t: Group): DataFrame = instTmpl(sols, withG, t)
         var q2 = q
         // common case (Δ fits a broadcast): the dataset STREAMS through
         // a broadcast anti join per delete template and one broadcast
@@ -4380,28 +4458,25 @@ object Sparql {
         // fallback: shuffle joins + one full checkpoint after the op.
         del.foreach(t => q2 = minus(q2, inst(t), smallRight = small))
         ins.foreach { t =>
-          if (small) {
-            // add is a NARROW map of the pinned solutions — no pin of
-            // its own (each consumer recomputes it from sols for the
-            // cost of a small shuffle, cheaper than another
-            // eager-checkpoint job)
-            val add = inst(t)
-            val present =
-              pins.pin(q2.join(broadcast(renamed(add)), quadCond, "left_semi"))
-            q2 = unionQ(q2, minus(add, present, smallRight = true))
-          } else {
-            val add = inst(t)
-            q2 = unionQ(q2, minus(add, q2, smallRight = false))
-          }
+          // add is a NARROW map of the pinned solutions — no pin of its
+          // own (the broadcast build and the final seal each recompute it
+          // from sols for the cost of a small shuffle, cheaper than
+          // another eager-checkpoint job here)
+          val add = inst(t)
+          q2 = unionQ(q2, present match {
+            case Some(pr) => minus(add, pr, smallRight = true)
+            case None => minus(add, q2, smallRight = false)
+          })
         }
         if (small) q2 else pins.pin(q2)
-      case QMove(kind, from, to) =>
-        // from == to parses to QNop (spec: a self-move is a no-op), so
+      case QMove(_, from, to, _) if from == to => q // a self-move is a no-op
+      case QMove(kind, from, to, _) =>
+        terms.extend(to.toSeq)
         // the target slice can be dropped up front in every form
-        val fromLit = from.map(lit(_)).getOrElse(lit(null).cast("string"))
-        val toLit = to.map(lit(_)).getOrElse(lit(null).cast("string"))
+        val fromLit = from.map(v).getOrElse(nullG)
+        val toLit = to.map(v).getOrElse(nullG)
         def without(g: Option[String]) = g
-          .map(i => col("g").isNull || col("g") =!= i)
+          .map(i => col("g").isNull || col("g") =!= v(i))
           .getOrElse(col("g").isNotNull)
         kind match {
           case "COPY" =>
@@ -4424,7 +4499,7 @@ object Sparql {
             val fresh = pins.pin(minus(moved, slice(to)(q), smallRight = false))
             unionQ(q, fresh)
         }
-      case QLoad(src, into) =>
+      case QLoad(src, into, _) =>
         // parse by extension: quad formats carry their own labels
         // (INTO GRAPH then replaces them); triple formats land in the
         // target graph, default when absent. Set semantics: only rows
@@ -4434,409 +4509,32 @@ object Sparql {
             graft.store.TripleStore.parseTriG(spark, src)
           else if (src.endsWith(".nq"))
             graft.store.TripleStore.parseNQuads(spark, src)
-          else {
-            val t =
-              if (src.endsWith(".ttl"))
-                graft.store.TripleStore.parseTurtle(spark, src)
-              else graft.store.TripleStore.skolemize(
-                graft.store.TripleStore.parseNTriples(spark, src), src)
-            t.withColumn("g", lit(null).cast("string"))
-          }
-        val target = into match {
-          case Some(g) => parsed.withColumn("g", lit(g))
-          case None => parsed
-        }
-        val fresh = pins.pin(minus(
-          target.dropDuplicates("s", "p", "o", "g"), q, smallRight = false))
-        unionQ(q, fresh)
-    }
-    // ops with a broadcastable Δ pin only |Δ|-sized intermediates inside
-    // applyOp, so the fold itself never checkpoints the full dataset;
-    // the one big-Δ fallback (QModify above) pins its own result.
-    // Like [[updateQuadsEnc]], the result is the LAZY composition (base
-    // + pinned broadcast deltas — the tombstone-lazy update discipline).
-    ops.result().foldLeft(quads)(applyOp)
-  }
-
-  /** ENCODED named-graph Update — the [[updateQuads]] surface executed on
-    * dictionary ids: every op's joins (ground probes, template deltas,
-    * graph slicing, the modify WHERE) move fixed-width longs for s/p/o
-    * AND g, completing the encoded quad lifecycle (ingest →
-    * [[executeQuadsEncoded]] → update). Returns the (updated encoded
-    * dataset, updated dictionary).
-    *
-    * Dictionary maintenance: new terms — ground INSERT DATA rows,
-    * insert-template constants, retarget graph labels, LOAD payloads —
-    * take their certified xxhash64 id and EXTEND the dictionary; a new
-    * term whose id collides with a different existing term fails fast,
-    * like the index build (`TripleStore.encodeQuads`). Deleted terms
-    * stay in the dictionary (ids are content hashes — idempotent, and a
-    * stale entry is harmless). Pattern-modify templates must draw from
-    * id-typed WHERE vars (pattern/GRAPH positions); value-typed
-    * (BIND-computed) template vars reject with a pointer to the string
-    * path — re-entering term space mid-script would force a per-op
-    * dictionary round trip.
-    *
-    * RESULT OWNERSHIP: lazy by default with pin ownership transferred to
-    * the returned relation — see [[updateQuads]].
-    */
-  def updateQuadsEnc(spark: SparkSession, encQuads: DataFrame, dict: DataFrame,
-                     updateText: String): (DataFrame, DataFrame) = {
-    import graft.dict.Dictionary
-    val p = new P(tokenize(updateText))
-    var prefixes = Map.empty[String, String]
-    val ops = Vector.newBuilder[QuadOp]
-    var more = p.peek.nonEmpty
-    while (more) {
-      prefixes = prefixes ++ parsePrefixes(p)
-      ops += parseQuadUpdateOp(p, prefixes)
-      more = p.trySym(";") && p.peek.nonEmpty
-    }
-    if (p.peek.nonEmpty)
-      p.fail(s"unexpected tokens after update operation: ${p.peek.get}")
-    import spark.implicits._
-    def hid(t: String): Long = Dictionary.termHashLocal(t)
-    var d = dict
-    val opsV = ops.result()
-    /** Constants an insert template writes (they enter the dictionary). */
-    def templateConsts(t: Group, withG: Option[String]): Seq[String] = {
-      def ofTriples(tps: Seq[TriplePattern]): Seq[String] =
-        tps.flatMap(tp => Seq(tp.s, tp.p, tp.o).collect { case C(c) => c.toString })
-      ofTriples(t.triples) ++ withG.toSeq ++
-        t.graphs.flatMap { case (gt, inner) =>
-          (gt match { case C(c) => Seq(c.toString); case _ => Seq.empty }) ++
-            ofTriples(inner.triples)
-        }
-    }
-    // SCRIPT-WIDE constant pre-probe: every term any op can introduce is
-    // a parse-time constant (ground quads, insert-template constants,
-    // MOVE targets — solution-derived inserts instantiate from id-typed
-    // pattern positions and never extend the dictionary), so ONE
-    // dictionary job answers presence + hash-claim safety for the whole
-    // script and the per-op extension becomes a driver-side set update.
-    // A LOAD op disables the shortcut: loaded terms enter the dictionary
-    // mid-script, and a later constant could clash with one of them —
-    // the per-op probe sees that, a start-of-script probe cannot.
-    val hasLoad = opsV.exists { case _: QLoad => true; case _ => false }
-    val scriptConsts: Set[String] =
-      if (hasLoad) Set.empty
-      else opsV.flatMap {
-        case QGround(true, rows) =>
-          rows.flatMap { case (s, pr, o, g) => Seq(s, pr, o) ++ g.toSeq }
-        case QModify(withG, _, ins, _) =>
-          ins.toSeq.flatMap(t => templateConsts(t, withG))
-        case QMove(_, _, to) => to.toSeq
-        case _ => Seq.empty
-      }.toSet
-    val knownPresent: scala.collection.mutable.Set[String] =
-      if (scriptConsts.isEmpty) scala.collection.mutable.Set.empty
-      else {
-        val (present, clash) = graft.Prof.t("quadsEnc.preProbe")(
-          Dictionary.probeClaims(spark, d, scriptConsts.toSeq.sorted))
-        require(!clash,
-          "xxhash64 collision between a new term and an existing one — " +
-            "use the string path (Sparql.updateQuads) for this batch")
-        // the pre-probe certifies fresh-vs-EXISTING claims; two fresh
-        // terms in ONE script colliding with each other would each pass
-        // that check and silently share an id (the old per-op path saw
-        // the first claim land before probing the second) — require the
-        // fresh set's ids to be claim-free among themselves too
-        val freshDup = scriptConsts.toSeq.filterNot(present)
-          .groupBy(hid).values.find(_.distinct.size > 1)
-        require(freshDup.isEmpty,
-          "xxhash64 collision between two new terms in one script " +
-            s"(${freshDup.toSeq.flatten.distinct.mkString(", ")}) — " +
-            "use the string path (Sparql.updateQuads) for this batch")
-        scala.collection.mutable.Set(present.toSeq: _*)
-      }
-    /** Driver-side dictionary extension for a bounded constant set. */
-    def extendDictLocal(terms: Seq[String]): Unit = {
-      val uniq = terms.distinct
-      val (covered, uncovered) =
-        if (hasLoad) (Seq.empty[String], uniq)
-        else uniq.partition(scriptConsts.contains)
-      val freshCovered = covered.filterNot(knownPresent)
-      if (freshCovered.nonEmpty) {
-        // claim-safety came from the script-wide pre-probe; no job here
-        d = d.unionByName(freshCovered.map(t => (hid(t), t)).toDF("id", "term"))
-        knownPresent ++= freshCovered
-      }
-      if (uncovered.nonEmpty) {
-        val present = Dictionary.lookup(d, uncovered)
-        val fresh = uncovered.filterNot(present.contains).map(t => (hid(t), t))
-        if (fresh.nonEmpty) {
-          val clash = d.where(col("id").isin(fresh.map(_._1): _*)).limit(1)
-          require(clash.isEmpty,
-            "xxhash64 collision between a new term and an existing one — " +
-              "use the string path (Sparql.updateQuads) for this batch")
-          d = d.unionByName(fresh.toDF("id", "term"))
-        }
-      }
-    }
-    /** Distributed extension for unbounded term relations (LOAD). The
-      * fresh rows checkpoint UNTRACKED — the dictionary result must
-      * outlive this call's pin release.
-      */
-    def extendDictDF(terms: DataFrame): Unit = {
-      val cand = terms.select(col(terms.columns.head).cast("string").as("term"))
-        .where(col("term").isNotNull).distinct()
-        .select(Dictionary.termHash(col("term")).as("id"), col("term"))
-      val clash = cand.join(d.select(col("id"), col("term").as("__t2")),
-          Seq("id")).where(col("term") =!= col("__t2")).limit(1)
-      require(clash.isEmpty,
-        "xxhash64 collision between a loaded term and an existing one — " +
-          "use the string path (Sparql.updateQuads) for this source")
-      val fresh = graft.Pins.checkpoint(cand.join(d, Seq("id"), "left_anti"))
-      d = d.unionByName(fresh)
-    }
-    def slice(g: Option[String])(q: DataFrame): DataFrame = g match {
-      case None => q.where(col("g").isNull)
-      case Some(i) => q.where(col("g") === hid(i))
-    }
-    def quadsDF(rows: Seq[(String, String, String, Option[String])]) =
-      rows.map { case (s, pr, o, g) => (hid(s), hid(pr), hid(o), g.map(hid)) }
-        .toDF("s", "p", "o", "g")
-    def renamed(b: DataFrame): DataFrame =
-      b.select(col("s").as("__s2"), col("p").as("__p2"),
-        col("o").as("__o2"), col("g").as("__g2"))
-    val quadCond =
-      col("s") === col("__s2") && col("p") === col("__p2") &&
-        col("o") === col("__o2") && col("g") <=> col("__g2")
-    def minus(a: DataFrame, b: DataFrame, smallRight: Boolean): DataFrame = {
-      val r0 = renamed(b)
-      a.join(if (smallRight) broadcast(r0) else r0, quadCond, "left_anti")
-    }
-    def realias(df: DataFrame): DataFrame =
-      df.select(df.columns.map(c => col(c).as(c)).toSeq: _*)
-    def unionQ(a: DataFrame, b: DataFrame): DataFrame =
-      a.unionByName(realias(b))
-    val pins = new graft.Pins
-    /** The WHERE-evaluation half of a modify op against an explicit
-      * relation + dictionary SNAPSHOT — hazard-free ops prefetch it
-      * CONCURRENTLY against the pre-script dataset (see the fold below);
-      * ONE job pins the solutions AND counts them (lazy checkpoint
-      * materialized by the count — the pin-then-count sequence paid the
-      * per-job scheduling floor twice).
-      */
-    /** Template instantiation from a pinned solution relation (shared
-      * by the apply step and the concurrent delta prefetch). */
-    def instTmpl(sols: DataFrame, withG: Option[String], t: Group): DataFrame = {
-      def termCol(x: Term): Column = x match {
-        case V(v) => col(v)
-        case C(c) => lit(hid(c.toString))
-      }
-      val parts =
-        (t.triples.map(tp =>
-          (tp, Left(withG): Either[Option[String], String])) ++
-          t.graphs.flatMap { case (gt, inner) =>
-            val tgt: Either[Option[String], String] = gt match {
-              case C(c) => Left(Some(c.toString))
-              case V(v) => Right(v)
-            }
-            inner.triples.map(tp => (tp, tgt))
-          }).map { case (tp, tgt) =>
-          val gcol = tgt match {
-            case Left(g) =>
-              g.map(i => lit(hid(i))).getOrElse(lit(null).cast("long"))
-            case Right(v) => col(v)
-          }
-          val df0 = sols.select(termCol(tp.s).as("s"),
-              termCol(tp.p).as("p"), termCol(tp.o).as("o"), gcol.as("g"))
-            .where(col("s").isNotNull && col("p").isNotNull &&
-              col("o").isNotNull)
-          tgt match {
-            case Right(_) => df0.where(col("g").isNotNull)
-            case _ => df0
-          }
-        }
-      require(parts.nonEmpty, "empty modify template")
-      parts.reduce(_.unionByName(_)).dropDuplicates("s", "p", "o", "g")
-    }
-    def prepQModify(q: DataFrame, dict: DataFrame, withG: Option[String],
-                    where: Group): (DataFrame, Long) = {
-      val consts = (groupConsts(where) ++ withG).toSeq.sorted
-      val ids = Dictionary.hashLiterals(spark, consts)
-      val probeSet =
-        (pathEndpointConsts(where) ++ inlineValueConsts(where)).toSeq.sorted
-      val present0 = Dictionary.lookup(dict, probeSet)
-      val localDict =
-        probeSet.filterNot(present0.contains).map(c => ids(c) -> c)
-      val dflt = slice(withG)(q).select("s", "p", "o")
-      val env = Env(spark, dflt, Map.empty, 1000000L,
-        Some(EncEnv(dict, ids, localDict, plainVarsOfG(where))),
-        quads = Some(q.where(col("g").isNotNull)))
-      graft.Prof.t("  qmod.pinSols+count") {
-        pins.pinCounted(compileGroup(env, where))
-      }
-    }
-    /** The FULL delta prefetch for a hazard-free modify op against the
-      * pre-script snapshot: solutions, and — for the broadcastable
-      * single-insert shape — the already-present probe too, so the
-      * apply step runs NO jobs of its own.
-      */
-    def prepQModifyDelta(q0: DataFrame, dict: DataFrame, m: QModify)
-        : (DataFrame, Long, Option[DataFrame]) = {
-      val (sols, cnt) = prepQModify(q0, dict, m.withG, m.where)
-      val pres =
-        if (cnt <= UpdateBroadcastMax && m.ins.size == 1) {
-          val afterDel = m.del.foldLeft(q0)((qq, t) =>
-            minus(qq, instTmpl(sols, m.withG, t), smallRight = true))
-          val add = instTmpl(sols, m.withG, m.ins.get)
-          Some(graft.Prof.t("  qmod.pinPresent(pre)")(pins.pin(
-            afterDel.join(broadcast(renamed(add)), quadCond, "left_semi"))))
-        } else None
-      (sols, cnt, pres)
-    }
-    def applyOp(q: DataFrame, op: QuadOp,
-                prep: Option[(DataFrame, Long, Option[DataFrame])] = None)
-        : DataFrame = op match {
-      case QNop => q
-      case QGround(true, rows) =>
-        extendDictLocal(rows.flatMap { case (s, pr, o, g) =>
-          Seq(s, pr, o) ++ g.toSeq })
-        val add = quadsDF(rows).dropDuplicates("s", "p", "o", "g")
-        val present =
-          pins.pin(q.join(broadcast(renamed(add)), quadCond, "left_semi"))
-        unionQ(q, minus(add, present, smallRight = true))
-      case QGround(false, rows) =>
-        // ids of absent terms match nothing — no dictionary work
-        minus(q, quadsDF(rows), smallRight = true)
-      case QClear(QDefault) => q.where(col("g").isNotNull)
-      case QClear(QNamed(i)) => q.where(col("g").isNull || col("g") =!= hid(i))
-      case QClear(QAllNamed) => q.where(col("g").isNull)
-      case QClear(QAll) => q.where(lit(false))
-      case QModify(withG, del, ins, where) =>
-        val (sols, solsCnt, prePresent) = prep.getOrElse {
-          val (ss, cc) = prepQModify(q, d, withG, where)
-          (ss, cc, None)
-        }
-        // templates must instantiate from ID-typed columns
-        val tmplVars = (del.toSeq ++ ins.toSeq).flatMap { t =>
-          t.triples.flatMap(_.vars) ++
-            t.graphs.flatMap { case (gt, inner) =>
-              (gt match { case V(v) => Seq(v); case _ => Seq.empty }) ++
-                inner.triples.flatMap(_.vars)
-            }
-        }.distinct
-        tmplVars.foreach { v =>
-          require(sols.schema(v).dataType ==
-            org.apache.spark.sql.types.LongType,
-            s"template var ?$v is value-typed (BIND/expression) — the " +
-              "encoded path instantiates from pattern positions only; " +
-              "use Sparql.updateQuads for this script")
-        }
-        ins.foreach(t => extendDictLocal(templateConsts(t, withG)))
-        val small = solsCnt <= UpdateBroadcastMax
-        def inst(t: Group): DataFrame = instTmpl(sols, withG, t)
-        var q2 = q
-        del.foreach(t => q2 = minus(q2, inst(t), smallRight = small))
-        ins.foreach { t =>
-          if (small) {
-            // add is a NARROW map of the pinned solutions — no pin of
-            // its own (the broadcast build and the final seal each
-            // recompute it from sols for the cost of a small shuffle,
-            // cheaper than another eager-checkpoint job here); a
-            // prefetched present probe (hazard-free op) skips the
-            // apply-time store scan entirely
-            val add = inst(t)
-            val present = prePresent.getOrElse(
-              graft.Prof.t("  qmod.pinPresent")(pins.pin(
-                q2.join(broadcast(renamed(add)), quadCond, "left_semi"))))
-            q2 = unionQ(q2, minus(add, present, smallRight = true))
-          } else {
-            val add = inst(t)
-            q2 = unionQ(q2, minus(add, q2, smallRight = false))
-          }
-        }
-        if (small) q2 else pins.pin(q2)
-      case QMove(kind, from, to) =>
-        to.foreach(t => extendDictLocal(Seq(t)))
-        val fromLit = from.map(i => lit(hid(i))).getOrElse(lit(null).cast("long"))
-        val toLit = to.map(i => lit(hid(i))).getOrElse(lit(null).cast("long"))
-        def without(g: Option[String]) = g
-          .map(i => col("g").isNull || col("g") =!= hid(i))
-          .getOrElse(col("g").isNotNull)
-        kind match {
-          case "COPY" =>
-            q.where(without(to)).withColumn("g",
-              explode(when(col("g") <=> fromLit, array(col("g"), toLit))
-                .otherwise(array(col("g")))))
-          case "MOVE" =>
-            q.where(without(to)).withColumn("g",
-              when(col("g") <=> fromLit, toLit).otherwise(col("g")))
-          case "ADD" =>
-            val moved = slice(from)(q).withColumn("g", toLit)
-            val fresh = pins.pin(minus(moved, slice(to)(q), smallRight = false))
-            unionQ(q, fresh)
-        }
-      case QLoad(src, into) =>
-        val parsed: DataFrame =
-          if (src.endsWith(".trig"))
-            graft.store.TripleStore.parseTriG(spark, src)
-          else if (src.endsWith(".nq"))
-            graft.store.TripleStore.parseNQuads(spark, src)
-          else {
-            val t =
-              if (src.endsWith(".ttl"))
-                graft.store.TripleStore.parseTurtle(spark, src)
-              else graft.store.TripleStore.skolemize(
-                graft.store.TripleStore.parseNTriples(spark, src), src)
-            t.withColumn("g", lit(null).cast("string"))
-          }
+          else loadTriples(spark, src).withColumn("g", lit(null).cast("string"))
         val target = (into match {
           case Some(g) => parsed.withColumn("g", lit(g))
           case None => parsed
         }).dropDuplicates("s", "p", "o", "g")
-        extendDictDF(target.select(
-          explode(array(col("s"), col("p"), col("o"), col("g"))).as("term")))
-        val encTarget = target.select(
-          Dictionary.termHash(col("s")).as("s"),
-          Dictionary.termHash(col("p")).as("p"),
-          Dictionary.termHash(col("o")).as("o"),
-          when(col("g").isNull, lit(null).cast("long"))
-            .otherwise(Dictionary.termHash(col("g"))).as("g"))
-        val fresh = pins.pin(minus(encTarget, q, smallRight = false))
+        val fresh = pins.pin(minus(terms.loaded(target), q, smallRight = false))
         unionQ(q, fresh)
     }
-    // ASYNC WHERE PREFETCH over read/write-DISJOINT ops (same discipline
-    // as the triple-store path, with the GRAPH position in the pattern
-    // summaries): hazard-free modify ops evaluate their WHERE against
-    // the PRE-SCRIPT dataset + dictionary snapshot, all probe jobs
-    // in flight concurrently; the relation fold stays strictly ordered.
-    val prefIdx = prefetchableQuadModifies(opsV)
-    val prePool =
-      if (prefIdx.isEmpty) None
-      else Some(java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(prefIdx.size, 4)))
-    val d0 = d
-    val preF: Map[Int, java.util.concurrent.Future[
-        (DataFrame, Long, Option[DataFrame])]] =
-      prePool match {
-        case None => Map.empty
-        case Some(pl) => prefIdx.map { i =>
-          val m = opsV(i).asInstanceOf[QModify]
-          i -> pl.submit(new java.util.concurrent.Callable[
-              (DataFrame, Long, Option[DataFrame])] {
-            def call() = prepQModifyDelta(encQuads, d0, m)
-          })
-        }.toMap
-      }
-    def awaitPre(f: java.util.concurrent.Future[
-        (DataFrame, Long, Option[DataFrame])]) =
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause }
-    val result =
-      try opsV.zipWithIndex.foldLeft(encQuads) { case (q, (op, i)) =>
-        graft.Prof.t(s"quadsEnc.op:${op.getClass.getSimpleName}")(
-          applyOp(q, op, preF.get(i).map(awaitPre)))
-      } finally prePool.foreach(_.shutdown())
+    // ASYNC WHERE PREFETCH over read/write-DISJOINT ops (the store-handle
+    // path's discipline, see `update`): hazard-free modify ops evaluate
+    // their WHERE against the PRE-SCRIPT dataset + dictionary snapshot,
+    // all probe jobs in flight concurrently; the relation fold stays
+    // strictly ordered.
+    val d0 = terms.dictNow
     // The result is the LAZY composition: the unchanged base relation
     // plus |Δ|-sized PINNED deltas applied as broadcast joins/unions —
     // the store's own tombstone-lazy update discipline. At corpus scale
     // a small update must never rewrite the store; the returned
     // relation keeps its delta pins alive (ownership transfers to it).
-    (result, d)
+    withPrefetch(prefetchableQuadModifies(opsV)) { i =>
+      prepModify(quads, d0, opsV(i).asInstanceOf[QModify])
+    } { pre =>
+      opsV.zipWithIndex.foldLeft(quads) { case (q, (op, i)) =>
+        applyOp(q, op, pre(i))
+      }
+    }
   }
 
   /** Join an inline DataBlock relation into a solution frame: all-bound

@@ -401,7 +401,7 @@ object GraftStore {
     val cand = rowsD.filter(t => handle.stats.contains(t._2))
     val hitSet: Set[(Long, Long, Long)] =
       if (cand.isEmpty) Set.empty
-      else graft.Prof.t("appendLocal.dupProbe") {
+      else {
         val probe = cand.map(t => (hmap(t._1), hmap(t._2), hmap(t._3)))
           .toDF("s", "p", "o")
         handle.enc
@@ -433,11 +433,11 @@ object GraftStore {
     // distributed path: no silent triple loss on a 3x63-bit collision)
     val confirmed: Set[(String, String, String)] =
       if (candDup.isEmpty) Set.empty
-      else graft.Prof.t("appendLocal.confirm")(strRel
+      else strRel
         .join(broadcast(candDup.toDF("s", "p", "o")),
           Seq("s", "p", "o"), "left_semi")
         .distinct().collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet)
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     val newRows = rowsD.filterNot(confirmed)
     if (newRows.isEmpty) return handle
     // delta certificate: internal clash driver-side, claim clash in one
@@ -454,8 +454,7 @@ object GraftStore {
         val clashK = covered.exists(t => claims.get(hmap(t)).exists(_ != t))
         val (presentP, clashP) =
           if (uncovered.isEmpty) (Set.empty[String], false)
-          else graft.Prof.t("appendLocal.probeClaims")(
-            Dictionary.probeClaims(spark, handle.dict, uncovered))
+          else Dictionary.probeClaims(spark, handle.dict, uncovered)
         (presentK ++ presentP, clashK || clashP)
       }
     if (internalClash || externalClash)
@@ -521,12 +520,12 @@ object GraftStore {
       rowsD.flatMap(t => Seq(t._1, t._2, t._3)).distinct)
     val delH = rowsD.map(t => (t._2, hmap(t._1), hmap(t._2), hmap(t._3)))
       .toDF("pstr", "s", "p", "o")
-    val matched = graft.Prof.t("removeLocal.matchProbe")(handle.enc
+    val matched = handle.enc
       .join(broadcast(delH.select(col("s"), col("p"), col("o"))),
         Seq("s", "p", "o"), "left_semi")
       .join(broadcast(delH), Seq("s", "p", "o"))
       .groupBy(col("pstr").as("p")).agg(count(lit(1)).as("gone"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     removeLocalCounted(spark, handle, rowsD, hmap, matched)
   }
 
@@ -623,11 +622,10 @@ object GraftStore {
         // a codegen'd `p IN (...)` drops ~all store rows before the join
         // probe (and lets the in-memory scan skip batches by p stats)
         val pids = (delsD ++ insCand).map(t => hmap(t._2)).distinct
-        val res = graft.Prof.t("groundBatch.probe")(
-          handle.enc.where(col("p").isin(pids: _*))
-            .join(broadcast(probe), Seq("s", "p", "o"))
-            .groupBy("tag", "pstr", "s", "p", "o")
-            .agg(count(lit(1)).as("n")).collect())
+        val res = handle.enc.where(col("p").isin(pids: _*))
+          .join(broadcast(probe), Seq("s", "p", "o"))
+          .groupBy("tag", "pstr", "s", "p", "o")
+          .agg(count(lit(1)).as("n")).collect()
         val m = res.filter(_.getString(0) == "d")
           .groupBy(_.getString(1))
           .view.mapValues(_.map(_.getLong(5)).sum).toMap

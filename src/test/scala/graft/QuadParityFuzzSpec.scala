@@ -173,6 +173,52 @@ class QuadParityFuzzSpec extends SparkSpec {
     (1 to 1 + rnd.nextInt(2)).map(_ => op()).mkString(" ;\n")
   }
 
+  // default-graph-only scripts: every form the store-handle path runs
+  private def genTripleScript(rnd: scala.util.Random): String = {
+    def pick[A](xs: Seq[A]): A = xs(rnd.nextInt(xs.length))
+    def triple(): String = {
+      val s = pick(Seq("<s1>", "<s2>", "<s3>", "<n1>"))
+      val p = pick(preds)
+      s"$s <$p> ${pick(objPool(p) :+ "\"w1\"")}"
+    }
+    def ground(kw: String): String =
+      s"$kw DATA { ${(1 to 1 + rnd.nextInt(2)).map(_ => triple()).mkString(" . ")} }"
+    def op(): String = rnd.nextInt(12) match {
+      case 0 | 1 | 2 => ground("INSERT")
+      case 3 | 4 => ground("DELETE")
+      case 5 | 6 =>
+        val p = pick(preds)
+        s"DELETE { ?s <$p> ?o } INSERT { ?s <${p}2> ?o } WHERE { ?s <$p> ?o }"
+      case 7 | 8 =>
+        val o = pick(objPool("p"))
+        s"INSERT { ?s <seen> $o } WHERE { ?s <p> $o }"
+      case 9 | 10 =>
+        val p = pick(preds)
+        s"DELETE WHERE { ?s <$p> ${pick(objPool(p) :+ "?o")} }"
+      case _ => "CLEAR DEFAULT"
+    }
+    (1 to 1 + rnd.nextInt(3)).map(_ => op()).mkString(" ;\n")
+  }
+
+  "store-handle and quad updates" should "agree on 20 random default-graph scripts" in {
+    import org.apache.spark.sql.functions.col
+    val triples = quads.where(col("g").isNull)
+    val h0 = graft.store.GraftStore.ingestTriples(spark,
+      triples.select("s", "p", "o"))
+    val rnd = new scala.util.Random(4242L)
+    def canon(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
+      df.select("s", "p", "o").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    (1 to 20).foreach { i =>
+      val script = genTripleScript(rnd)
+      withClue(s"case $i:\n$script\n") {
+        val viaHandle = canon(Sparql.update(spark, h0, script).triples)
+        val viaQuads = canon(Sparql.updateQuads(spark, triples, script))
+        viaHandle shouldBe viaQuads
+      }
+    }
+  }
+
   "string and encoded quad updates" should "agree on 30 random scripts" in {
     val (enc0, dict0) = encPair
     val rnd = new scala.util.Random(777L)

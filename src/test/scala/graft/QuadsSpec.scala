@@ -487,6 +487,25 @@ class QuadsSpec extends SparkSpec {
     e.getMessage should include("updateQuads")
   }
 
+  "updateQuads and updateQuadsEnc" should "reject blank nodes in every DELETE form" in {
+    // SPARQL 1.1 Update §3.1: no blank nodes in DELETE DATA, DELETE WHERE
+    // or a DELETE template, top-level or inside a GRAPH block
+    val (enc0, dict0) = graft.store.TripleStore.encodeQuads(quads)
+    Seq(
+      "DELETE DATA { _:b <p> <o> }",
+      "DELETE DATA { GRAPH <g1> { _:b <p> <o> } }",
+      "DELETE WHERE { GRAPH <g1> { _:b <p> ?o } }",
+      "DELETE { _:b <p> ?o } WHERE { ?s <p> ?o }"
+    ).foreach { script =>
+      withClue(script) {
+        an[IllegalArgumentException] should be thrownBy
+          Sparql.updateQuads(spark, quads, script).count()
+        an[IllegalArgumentException] should be thrownBy
+          Sparql.updateQuadsEnc(spark, enc0, dict0, script)._1.count()
+      }
+    }
+  }
+
   "persistQuadsEnc/openQuadsEnc" should "answer identically through the reopened artifact" in {
     val d = "/root/testdata/sf0.001"
     val tmp = java.nio.file.Files.createTempDirectory("graft_qenc").toString

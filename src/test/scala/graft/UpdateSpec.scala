@@ -116,6 +116,31 @@ class UpdateSpec extends SparkSpec {
     rows(Sparql.update(spark, h0,
       "CREATE SILENT GRAPH <g> ; DROP SILENT GRAPH <g> ; " +
         "MOVE SILENT DEFAULT TO GRAPH <g>")) shouldBe rows(h0)
+    // every other named-graph form the single-graph store rejects
+    val f = java.nio.file.Files.createTempFile("graft-load", ".nt")
+    java.nio.file.Files.writeString(f, "<http://x/s> <http://x/p> <http://x/o> .\n")
+    try {
+      Seq(
+        "PREFIX : <>\nWITH <g> INSERT { ?s :p2 ?o } WHERE { ?s :age ?o }",
+        "PREFIX : <>\nDELETE { ?s :age ?o } USING <g> WHERE { ?s :age ?o }",
+        "CLEAR NAMED",
+        "COPY GRAPH <g> TO GRAPH <g>",
+        s"LOAD <${f.toString}> INTO GRAPH <g>",
+        "PREFIX : <>\nINSERT DATA { GRAPH <g> { <x> :p \"1\" } }",
+        "PREFIX : <>\nINSERT { ?s :p2 ?o } WHERE { GRAPH <g> { ?s :age ?o } }"
+      ).foreach { script =>
+        withClue(script) {
+          an[IllegalArgumentException] should be thrownBy
+            Sparql.update(spark, h0, script)
+        }
+      }
+      // SILENT turns the named-target ops into no-ops
+      rows(Sparql.update(spark, h0,
+        "CLEAR SILENT NAMED ; COPY SILENT GRAPH <g> TO GRAPH <g>")) shouldBe rows(h0)
+      // CLEAR ALL still empties the single graph
+      Sparql.update(spark, h0, "CLEAR ALL").totalCnt shouldBe 0L
+      rows(h0).size shouldBe 5
+    } finally java.nio.file.Files.delete(f)
   }
 
   it should "answer queries over the updated ENCODED store" in {
@@ -211,5 +236,21 @@ class UpdateSpec extends SparkSpec {
       Sparql.update(spark, h0, "CLEAR GRAPH <g>")
     }
     rows(h0).size shouldBe 5
+  }
+
+  it should "not prefetch a WHERE whose VALUES entry an earlier op inserts" in {
+    // op 2's patterns cannot match op 1's write, but its VALUES entry is
+    // the term op 1 adds to the dictionary: a WHERE evaluated against the
+    // pre-script store would see that term as new and add it again
+    val h0 = mkStore
+    h0.pureHash shouldBe true
+    val op1 = "INSERT DATA { <x> <p> <newT> }"
+    val op2 = "INSERT { ?v <q> <c> } WHERE { VALUES ?v { <newT> } }"
+    val h1 = Sparql.update(spark, h0, s"$op1 ; $op2")
+    rows(h1) shouldBe rows(Sparql.update(spark, Sparql.update(spark, h0, op1), op2))
+    rows(h1) should contain(("newT", "q", "c"))
+    h1.dict.where(org.apache.spark.sql.functions.col("term") === "newT")
+      .count() shouldBe 1L
+    invariants(h1)
   }
 }
