@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.bgp._
 import graft.dict.Dictionary
 import graft.ops.{DedupOps, JoinOps, MediaOps, SkewOps, TextOps, VectorOps}
+import graft.ops.ReasonOps.Corpus
 import graft.store.{GraftStore, TripleStore}
 
 /** Driver contract — one named query per implemented operator
@@ -2201,8 +2202,8 @@ object SparkEntry {
     val ids = ReasonOps.RdfsIds(id(ReasonOps.SubClassOf),
       id(ReasonOps.SubPropertyOf), id(ReasonOps.Domain),
       id(ReasonOps.Range), id("a"))
-    val enc = ReasonOps.rdfsClosureEncoded(
-      st.enc.select("s", "p", "o").unionAll(encTbox), ids)
+    val enc = ReasonOps.rdfsClosure(
+      st.enc.select("s", "p", "o").unionAll(encTbox), Corpus.encoded(ids))
     // the encoded discipline end-to-end: census on IDS (ids are
     // bijective with terms, so the distinct-subject counts agree), then
     // decode the ~40 census rows — never the 10^6-row closure. TBox-only
@@ -2250,7 +2251,7 @@ object SparkEntry {
       ("next", "a", ReasonOps.TransitiveProperty),
       ("prev", ReasonOps.InverseOf, "next"),
       ("borders", "a", ReasonOps.SymmetricProperty))).toDF("s", "p", "o")
-    ReasonOps.owlClosureQuads(quads, tbox)
+    ReasonOps.owlClosure(quads, Corpus.Quads, Some(tbox))
       .groupBy(coalesce(col("g"), lit("default")).as("g"), col("p"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
       .orderBy("g", "p")
@@ -2286,7 +2287,7 @@ object SparkEntry {
       ("locatedIn", ReasonOps.Domain, "Locatable"),
       ("locatedIn", ReasonOps.Range, "Place"),
       ("Locatable", ReasonOps.SubClassOf, "Thing"))).toDF("s", "p", "o")
-    ReasonOps.rdfsClosureQuads(quads, tbox)
+    ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(tbox))
       .groupBy(coalesce(col("g"), lit("default")).as("g"), col("p"),
         when(col("p") === "a", col("o")).otherwise(lit("-")).as("cls"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
@@ -2333,7 +2334,7 @@ object SparkEntry {
       id(ReasonOps.SubPropertyOf), id(ReasonOps.Domain),
       id(ReasonOps.Range), id("a"))
     val censusEnc =
-      ReasonOps.rdfsClosureQuadsEncoded(quads, tbox, ids)
+      ReasonOps.rdfsClosure(quads, Corpus.encoded(ids, quads = true), Some(tbox))
         .groupBy(coalesce(col("g"), lit(id("default"))).as("g"), col("p"),
           when(col("p") === ids.typePred, col("o")).otherwise(lit(-1L)).as("clsId"))
         .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
@@ -2383,7 +2384,8 @@ object SparkEntry {
     val ids = ReasonOps.OwlIds(id(ReasonOps.InverseOf),
       id(ReasonOps.SymmetricProperty), id(ReasonOps.TransitiveProperty),
       id("a"))
-    val censusEnc = ReasonOps.owlClosureQuadsEncoded(quads, decls, ids)
+    val censusEnc = ReasonOps.owlClosure(quads,
+      Corpus.encoded(ids, quads = true), Some(decls))
       .groupBy(coalesce(col("g"), lit(id("default"))).as("g"), col("p"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
     val censusTerms = Seq("default", "graph:west", "graph:east",
@@ -2439,9 +2441,9 @@ object SparkEntry {
       .orderBy("g", "p", "cls")
 
   /** O(Δ) maintenance of a PER-GRAPH closure: the supplier + nation
-    * graphs materialize ([[ReasonOps.rdfsClosureQuads]], session
+    * graphs materialize (quad [[ReasonOps.rdfsClosure]], session
     * artifact), the customer graph arrives as a quad DELTA maintained
-    * with [[ReasonOps.rdfsDeltaQuads]] + broadcast novelty composition —
+    * with quad [[ReasonOps.rdfsDelta]] + broadcast novelty composition —
     * the closure is never re-shuffled, and every derivation lands in
     * its premise's graph. `n_inc` counts exactly the novel rows, so the
     * oracle (full per-graph rematerialization minus base-only) pins the
@@ -2451,9 +2453,9 @@ object SparkEntry {
     import graft.ops.ReasonOps
     val tbox = rdfsQuadsTestTbox(s)
     val closure = GraftStore.reasonArtifact(s, d, "rdfs_quads_nocust") {
-      ReasonOps.rdfsClosureQuads(supplierNationQuads(s, d), tbox)
+      ReasonOps.rdfsClosure(supplierNationQuads(s, d), Corpus.Quads, Some(tbox))
     }
-    val inc = ReasonOps.rdfsDeltaQuads(tbox, customerQuads(s, d))
+    val inc = ReasonOps.rdfsDelta(tbox, customerQuads(s, d), Corpus.Quads)
     val fresh = ReasonOps.incrementNovel(closure, inc, pinHits = false)
     closure.withColumn("inc", lit(0L))
       .unionAll(fresh.withColumn("inc", lit(1L)))
@@ -2467,7 +2469,7 @@ object SparkEntry {
   /** DRed retraction on the PER-GRAPH closure: the full quad closure
     * materializes (session artifact), then every %5==0 customer's
     * nationkey quad DELETEs from graph:customer —
-    * [[ReasonOps.rdfsRetractQuads]] over-deletes, re-derives survivors
+    * quad [[ReasonOps.rdfsRetract]] over-deletes, re-derives survivors
     * from the graph-confined premise slab (other customers keep their
     * nations' derived types alive IN graph:customer; the supplier and
     * default graphs are untouched by construction), and streams the
@@ -2481,11 +2483,11 @@ object SparkEntry {
       customerQuads(s, d).unionByName(supplierNationQuads(s, d))
     }
     val closure = GraftStore.reasonArtifact(s, d, "rdfs_quads_all_closure") {
-      ReasonOps.rdfsClosureQuads(quads, tbox, pinInput = false)
+      ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(tbox), pinInput = false)
     }
     val del = customerQuads(s, d, col("c_custkey") % 5 === 0)
     quadRdfsCensus(
-      ReasonOps.rdfsRetractQuads(closure, quads, del, tbox))
+      ReasonOps.rdfsRetract(closure, quads, del, Corpus.Quads, Some(tbox)))
   }
 
   /** The per-graph closure as a PERSISTED ARTIFACT: reason once, persist
@@ -2534,7 +2536,7 @@ object SparkEntry {
       val tmp = s"${path}_w${ProcessHandle.current().pid()}"
       val quads = customerQuads(s, d).unionByName(supplierNationQuads(s, d))
       GraftStore.persistClosureQuads(
-        ReasonOps.rdfsClosureQuads(quads, rdfsQuadsTestTbox(s)), tmp)
+        ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(rdfsQuadsTestTbox(s))), tmp)
       val src = java.nio.file.Paths.get(tmp)
       try java.nio.file.Files.move(src, java.nio.file.Paths.get(path),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -2559,7 +2561,7 @@ object SparkEntry {
   /** Incremental OWL on the PER-GRAPH closure: the split next-chain
     * ([[owlQuadsQ]]) materializes WITHOUT edges 7→8 (west) and 15→16
     * (east); the two bridge edges then arrive as a quad delta —
-    * [[ReasonOps.owlDeltaQuads]] must bridge each graph's chains from
+    * quad [[ReasonOps.owlDelta]] must bridge each graph's chains from
     * Δ-sized joins keyed on the graph column, never re-squaring the
     * existing paths and never letting west chains cross into east.
     * `n_inc` pins the incremental path per (graph, predicate).
@@ -2587,9 +2589,9 @@ object SparkEntry {
       .select("s", "p", "o", "g").unionByName(borders)
     val delta = edges.where(col("k").isin(7, 15)).select("s", "p", "o", "g")
     val closure = GraftStore.reasonArtifact(s, d, "owl_quads_nobridge") {
-      ReasonOps.owlClosureQuads(base, decls)
+      ReasonOps.owlClosure(base, Corpus.Quads, Some(decls))
     }
-    val inc = ReasonOps.owlDeltaQuads(closure, delta, decls)
+    val inc = ReasonOps.owlDelta(closure, delta, decls, Corpus.Quads)
     val fresh = ReasonOps.incrementNovel(closure, inc, pinHits = false)
     closure.withColumn("inc", lit(0L))
       .unionAll(fresh.withColumn("inc", lit(1L)))
@@ -2601,7 +2603,7 @@ object SparkEntry {
 
   /** DRed retraction on the PER-GRAPH OWL closure: the split chain plus
     * a west-graph 6→9 SHORTCUT materializes, then edges 7→8 (west) and
-    * 15→16 (east) DELETE — [[ReasonOps.owlRetractQuads]] must reroute
+    * 15→16 (east) DELETE — quad [[ReasonOps.owlRetract]] must reroute
     * west paths through the shortcut (survivor frontier keyed on the
     * graph), genuinely kill everything isolated by 15→16 in east, and
     * leave the default borders graph untouched. The oracle recloses the
@@ -2634,9 +2636,9 @@ object SparkEntry {
       ("nation:15", "next", "nation:16", "graph:east")))
       .toDF("s", "p", "o", "g")
     val closure = GraftStore.reasonArtifact(s, d, "owl_quads_predelete") {
-      ReasonOps.owlClosureQuads(base, decls)
+      ReasonOps.owlClosure(base, Corpus.Quads, Some(decls))
     }
-    ReasonOps.owlRetractQuads(closure, base, del, decls)
+    ReasonOps.owlRetract(closure, base, del, decls, Corpus.Quads)
       .groupBy(coalesce(col("g"), lit("default")).as("g"), col("p"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
       .orderBy("g", "p")
@@ -2680,7 +2682,7 @@ object SparkEntry {
   }
 
   /** Query-time OWL entailment over NAMED GRAPHS: the [[owlQuadsQ]]
-    * census answered over [[ReasonOps.owlEntailedQuads]] — the lazy
+    * census answered over quad [[ReasonOps.owlEntailed]] — the lazy
     * per-graph closure relation; nothing pinned up front, only the
     * declared transitive properties square (per graph). Hash-matches
     * the materialized per-graph path's oracle.
@@ -2707,7 +2709,7 @@ object SparkEntry {
     // owlRewriteQ): only `next` is mentioned — the one declared
     // transitive property — and the subject slice bounds the question
     // to the reach sets of one node per graph
-    ReasonOps.owlEntailedQuads(quads, tbox, patternPreds = Seq("next"))
+    ReasonOps.owlEntailed(quads, Corpus.Quads, Some(tbox), patternPreds = Seq("next"))
       .where(col("p") === "next" &&
         col("s").isin("nation:6", "nation:18"))
       .groupBy(coalesce(col("g"), lit("default")).as("g"), col("s"))
@@ -3043,7 +3045,7 @@ object SparkEntry {
       .orderBy("p")
   }
 
-  /** The per-graph twin of [[owlChainQ]] ([[ReasonOps.owlClosureQuads]]):
+  /** The per-graph twin of [[owlChainQ]] (quad [[ReasonOps.owlClosure]]):
     * customers split into `even`/`odd` named graphs by key parity, the
     * geography spine lives in BOTH graphs, and every chain composition
     * (including the recursive locIn one) must stay confined to its
@@ -3064,7 +3066,7 @@ object SparkEntry {
     val quads = cust
       .unionAll(geo.withColumn("g", lit("even")))
       .unionAll(geo.withColumn("g", lit("odd")))
-    ReasonOps.owlClosureQuads(quads, owlChainTbox(s))
+    ReasonOps.owlClosure(quads, Corpus.Quads, Some(owlChainTbox(s)))
       .groupBy("g", "p")
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
       .orderBy("g", "p")
@@ -3128,7 +3130,7 @@ object SparkEntry {
       .orderBy("p", "cls")
   }
 
-  /** The per-graph twin ([[ReasonOps.owlRlClosureQuads]]): every
+  /** The per-graph twin (quad [[ReasonOps.owlRlClosure]]): every
     * customer's rows (orders included) land in the `even`/`odd` graph
     * of their key parity, so each graph's closure must equal the
     * parity-restricted characterization — a restriction joining across
@@ -3159,7 +3161,7 @@ object SparkEntry {
     val tbox = s.createDataFrame(owlRlTboxRows).toDF("s", "p", "o")
     // the closed TBox statements land in the default graph (g = null) —
     // surface them as a 'schema' census group
-    ReasonOps.owlRlClosureQuads(quads, tbox)
+    ReasonOps.owlRlClosure(quads, Corpus.Quads, Some(tbox))
       .groupBy(coalesce(col("g"), lit("schema")).as("g"), col("p"),
         when(col("p") === "a", col("o")).otherwise(lit("-")).as("cls"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
@@ -3961,7 +3963,7 @@ object SparkEntry {
   }
 
   /** Quad-corpus entity resolution
-    * ([[ReasonOps.sameAsCanonicalizeQuads]]): identity statements live
+    * (quad [[ReasonOps.sameAsCanonicalize]]): identity statements live
     * in their OWN provenance graph (`ids`), the mapping is GLOBAL, and
     * the rewrite reaches facts in every graph while each fact keeps
     * its graph — the `links` rows' subjects fold onto the nation
@@ -3982,7 +3984,7 @@ object SparkEntry {
       .unionAll(n.where(col("n_nationkey") % 2 === 0)
         .select(xk.as("s"), lit(ReasonOps.SameAs).as("p"), nk.as("o"),
           lit("ids").as("g")))
-    val (rw, mp) = ReasonOps.sameAsCanonicalizeQuads(quads)
+    val (rw, mp) = ReasonOps.sameAsCanonicalize(quads, Corpus.Quads)
     rw.unionAll(mp.select(col("member").as("s"),
         lit("__maps_to").as("p"), col("canon").as("o"),
         lit("-").as("g")))
@@ -4483,7 +4485,7 @@ object SparkEntry {
     val ids = ReasonOps.OwlIds(id(ReasonOps.InverseOf),
       id(ReasonOps.SymmetricProperty), id(ReasonOps.TransitiveProperty),
       id("a"))
-    val censusEnc = ReasonOps.owlClosureEncoded(enc, ids)
+    val censusEnc = ReasonOps.owlClosure(enc, Corpus.encoded(ids))
       .groupBy("p").agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"))
     import s.implicits._
     val predDict = Seq("next", "prev", "borders", "a", ReasonOps.InverseOf)

@@ -110,17 +110,6 @@ object GraphOps {
     pins.seal(labels)
   }
 
-  /** Deterministic seeded uniform random walks: `walksPerStart` walks of
-    * up to `steps` steps from every start node. The step choice is a
-    * CONTENT HASH — `md5(seed|start|walk|step|node)` taken modulo the
-    * node's out-degree against the per-neighbor rank — so results are
-    * reproducible across engines (DuckDB replays the identical recursion
-    * with its own md5; no engine-private PRNG). Walks truncate at
-    * dead-end nodes (no outgoing edges).
-    *
-    * Output: one row per visited position — (start, w, step, node),
-    * step 0 = the start node itself.
-    */
   /** Ranked adjacency of an edge relation: per-source neighbor ranks and
     * out-degrees — the walk engine's index, built with one window pass.
     * An ingest-time artifact at pipeline scale (every walk batch over the
@@ -154,6 +143,17 @@ object GraphOps {
     sorted.withColumn("rk", monotonically_increasing_id())
   }
 
+  /** Deterministic seeded uniform random walks: `walksPerStart` walks of
+    * up to `steps` steps from every start node. The step choice is a
+    * CONTENT HASH — `md5(seed|start|walk|step|node)` taken modulo the
+    * node's out-degree against the per-neighbor rank — so results are
+    * reproducible across engines (DuckDB replays the identical recursion
+    * with its own md5; no engine-private PRNG). Walks truncate at
+    * dead-end nodes (no outgoing edges).
+    *
+    * Output: one row per visited position — (start, w, step, node),
+    * step 0 = the start node itself.
+    */
   def randomWalks(edges: DataFrame, starts: DataFrame, steps: Int,
                   walksPerStart: Int = 1, seed: String = "42"): DataFrame =
     randomWalksRanked(rankedAdjacency(edges), starts, steps, walksPerStart, seed)
@@ -191,6 +191,10 @@ object GraphOps {
     pins.seal(out)
   }
 
+  /** Canonical edge sets of at most this many rows (2^22 ≈ 64 MB of
+    * long pairs) are broadcast into [[triangleCounts]]' closing join. */
+  val TriangleBroadcastEdges: Long = 1L << 22
+
   /** Exact per-node triangle counts via the degree-ordered wedge join
     * ("compact-forward"): every undirected edge is directed from its
     * lower-(degree, id) endpoint to the higher one, wedges form only at
@@ -220,15 +224,12 @@ object GraphOps {
         .distinct())
     // the closing join's probe side: the wedge stream is the LARGEST
     // relation in the op (Σ C(deg,2) rows) — when the canonical edge
-    // set fits `spark.graft.graph.triangleBroadcastEdges` rows
-    // (default 2^22 ≈ 64 MB of long pairs), broadcasting it turns the
+    // set fits TriangleBroadcastEdges rows, broadcasting it turns the
     // closing join into a broadcast hash join and the wedge stream is
     // never shuffled. Past the cap (cluster-scale graphs) the
     // shuffled join stands.
-    val bCap = edges.sparkSession.conf
-      .get("spark.graft.graph.triangleBroadcastEdges",
-        (1L << 22).toString).toLong
-    val canoProbe = if (nCano <= bCap) broadcast(cano) else cano
+    val canoProbe =
+      if (nCano <= TriangleBroadcastEdges) broadcast(cano) else cano
     val deg = cano.select(col("a").as("node"))
       .unionAll(cano.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -294,6 +295,16 @@ object GraphOps {
     connectedComponentsDF(edges, maxRounds)
   }
 
+  /** Changed-label sets of at most this many rows travel to the next
+    * CC round as a broadcast (see [[connectedComponentsLong]]). */
+  val CcBroadcastDelta: Long = 1L << 20
+
+  /** The delta cap the long-id CC reads: [[CcBroadcastDelta]], lowered
+    * by a spec (`ccBroadcastDelta.withValue(-1) { ... }`) to run every
+    * round through the shuffled delta join. */
+  private[graft] val ccBroadcastDelta =
+    new scala.util.DynamicVariable[Long](CcBroadcastDelta)
+
   /** The fixpoint of [[connectedComponents]] with the ROUNDS run at the
     * RDD layer: each round of a Catalyst loop re-analyzes and re-plans
     * the relax/jump shapes from scratch (~0.2-0.5 s/round of driver time
@@ -325,14 +336,10 @@ object GraphOps {
     val c0 = edges.columns(0); val c1 = edges.columns(1)
     val base = edges.select(col(c0).as("s"), col(c1).as("o"))
       .where(col("s").isNotNull && col("o").isNotNull && col("s") =!= col("o"))
-    // Partition-count knob (spark.graft.cc.partitions): measured at
-    // sf0.1 the default (=shuffle partitions) vs 8 differs by <5% —
-    // the fixpoint cost is per-round JOB latency, not per-task
-    // overhead — so the default stands; the knob exists for clusters
-    // where the pair graph is far smaller than the parallelism.
-    val part = new HashPartitioner(
-      spark.conf.get("spark.graft.cc.partitions",
-        spark.sessionState.conf.numShufflePartitions.toString).toInt)
+    // The session's shuffle width: at sf0.1 it measured within 5% of
+    // 8 partitions — the fixpoint cost is per-round JOB latency, not
+    // per-task overhead.
+    val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
     // symmetrize, place by source, dedup WITHIN partitions (an exact
     // distinct would shuffle by the pair and then again by the key;
     // duplicates cannot change a min, only message volume)
@@ -369,15 +376,14 @@ object GraphOps {
     // from a full |E| shuffle to near zero.
     var changedSrc = labels
     // sparse-round delta transport: once the changed set fits
-    // `spark.graft.cc.broadcastDelta` rows (default 2^20), ship it as a
+    // ccBroadcastDelta rows (2^20), ship it as a
     // broadcast sorted-array map and derive messages with a probe-only
     // scan of the cached adjacency — the cogroup join otherwise hash-
     // builds over EVERY adjacency row each round, which dominates the
     // sparse confirm rounds. Scale note: the gate is on the DELTA's
     // size, never the graph's, so the path is exactly the
     // broadcast-maintenance discipline of the reasoning ops.
-    val bCap = spark.conf
-      .get("spark.graft.cc.broadcastDelta", (1L << 20).toString).toLong
+    val bCap = ccBroadcastDelta.value
     var changedArr: Option[(Array[Long], Array[Long])] = None
     def deltaOf(newL: org.apache.spark.rdd.RDD[(Long, Long)],
                 oldL: org.apache.spark.rdd.RDD[(Long, Long)]) =

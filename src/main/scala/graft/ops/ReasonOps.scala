@@ -58,15 +58,14 @@ import org.apache.spark.sql.functions._
   * triples (rdfs4a/4b `rdfs:Resource` typing, container-membership
   * properties) — both explode output size without analytic value.
   *
-  * THE MAINTENANCE MATRIX (every cell string AND encoded):
+  * THE MAINTENANCE MATRIX: one entry per cell, and every entry takes a
+  * [[Corpus]] — triples or named-graph quads, string or encoded terms:
   * {{{
-  *                     triples                 named-graph quads
-  * materialize     rdfsClosure / owlClosure    rdfsClosureQuads / owlClosureQuads
-  * insert (O(Δ))   rdfsDelta / owlDelta        rdfsDeltaQuads / owlDeltaQuads
-  * delete (DRed)   rdfsRetract / owlRetract    rdfsRetractQuads / owlRetractQuads
-  * lazy entailment rdfsEntailed / owlEntailed  rdfsEntailedQuads / owlEntailedQuads
-  * streaming       rdfsDeltaStream (stateless) rdfsDeltaStreamQuads (stateless)
-  *                 rdfs/owlMaintainStream(Encoded)  rdfs/owlMaintainStreamQuads(Encoded)
+  * materialize     rdfsClosure / owlClosure / owlRlClosure / owlFullClosure
+  * insert (O(Δ))   rdfsDelta / owlDelta / owlRlDelta / owlFullDelta
+  * delete (DRed)   rdfsRetract / owlRetract
+  * lazy entailment rdfsEntailed / owlEntailed / owlRlEntailed / owlFullEntailed
+  * streaming       rdfsDeltaStream (stateless), rdfs/owl/owlRl/owlFullMaintainStream
   * compose         incrementNovel / composeIncrement   (graph-aware, null-safe)
   * persist         GraftStore.persistClosure(..Append) / persistClosureQuads(..Append)
   * identity        sameAsCanonicalize (materialize) / sameAsDelta (O(Δ) merge)
@@ -115,7 +114,65 @@ object ReasonOps {
   val EquivalentClassIri    = "http://www.w3.org/2002/07/owl#equivalentClass"
   val EquivalentPropertyIri = "http://www.w3.org/2002/07/owl#equivalentProperty"
 
-  /** The RDFS vocabulary as ENCODED ids (see [[rdfsClosureEncoded]]).
+  /** What a reasoning op reads and writes. The LAYOUT: `quads = false`
+    * is an (s, p, o) triple relation, `true` an (s, p, o, g) quad
+    * relation whose default graph is g = null. The TERMS: strings with
+    * a type predicate ([[Corpus.Strings]], both vocabulary renderings
+    * matched), or dictionary ids with the op family's id record
+    * ([[Corpus.Encoded]]: [[RdfsIds]], [[OwlIds]], [[RlIds]],
+    * `(OwlIds, RlIds)` for the joint family, [[CheckIds]], [[ErIds]],
+    * or the sameAs id). Every op has ONE entry taking a corpus; the
+    * default is string triples typed with `a`.
+    */
+  final case class Corpus[+I](quads: Boolean = false,
+                              terms: Corpus.Terms[I] = Corpus.Strings()) {
+    /** The family vocabulary: from the type predicate on string terms,
+      * from the id record on encoded ones. */
+    private[ops] def vocab[V](strings: String => V, encoded: I => V): V =
+      terms match {
+        case Corpus.Strings(typePred) => strings(typePred)
+        case Corpus.Encoded(ids) => encoded(ids)
+      }
+
+    /** The same layout and term kind over another family's ids. */
+    private[ops] def map[J](f: I => J): Corpus[J] =
+      Corpus(quads, terms match {
+        case s: Corpus.Strings => s
+        case Corpus.Encoded(ids) => Corpus.Encoded(f(ids))
+      })
+
+    /** `op` named for this corpus in a re-materialization pointer. */
+    private[ops] def remat(op: String): String = {
+      val encoded = terms.isInstanceOf[Corpus.Encoded[_]]
+      if (!quads && !encoded) op
+      else s"$op, ${if (encoded) "encoded " else ""}" +
+        (if (quads) "quads" else "triples")
+    }
+  }
+
+  object Corpus {
+    sealed trait Terms[+I]
+    final case class Strings(typePred: String = "a") extends Terms[Nothing]
+    final case class Encoded[+I](ids: I) extends Terms[I]
+
+    val Triples: Corpus[Nothing] = Corpus()
+    val Quads: Corpus[Nothing] = Corpus(quads = true)
+    def encoded[I](ids: I, quads: Boolean = false): Corpus[I] =
+      Corpus(quads, Encoded(ids))
+  }
+
+  /** The first three (triples) or four (quads) columns as s, p, o[, g]. */
+  private def normRel(df: DataFrame, quads: Boolean): DataFrame =
+    if (quads) normQuads(df) else normTriples(df)
+
+  /** The relation a corpus's schema statements are read from: the
+    * given `tboxSource`, else the data itself (every graph of a quad
+    * corpus). */
+  private def schemaRel(data: DataFrame,
+                        tboxSource: Option[DataFrame]): DataFrame =
+    normTriples(tboxSource.getOrElse(data))
+
+  /** The RDFS vocabulary as ENCODED ids (see [[rdfsClosure]]).
     * The OWL equivalence ids are optional — `None` simply means the
     * encoded TBox carries no equivalence axioms to match.
     */
@@ -141,7 +198,7 @@ object ReasonOps {
   val RdfNilIri   = "http://www.w3.org/1999/02/22-rdf-syntax-ns#nil"
 
   /** The OWL property vocabulary as ENCODED ids (see
-    * [[owlClosureEncoded]]). The chain-vocabulary ids are optional —
+    * [[owlClosure]]). The chain-vocabulary ids are optional —
     * `None` simply means the encoded TBox carries no chain axioms to
     * match (the same contract as [[RdfsIds]]' equivalence ids).
     */
@@ -272,13 +329,6 @@ object ReasonOps {
     * is unpinned before rethrowing, so the guard path never leaks the
     * oversized frame it exists to keep out of memory.
     */
-  /** Per-label pinCapped call counts, populated when the
-    * `graft.pins.trace` system property is set (JobTrace dev
-    * profiling — a pin is at least one scheduled job, so the label
-    * histogram IS the maintenance job-floor map). */
-  private[graft] val pinLabelCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def pinCapped(df: DataFrame, cap: Option[Long], what: String,
                         remat: String): DataFrame =
     pinCappedN(df, cap, what, remat)._1
@@ -316,8 +366,6 @@ object ReasonOps {
                          remat: String,
                          guard: Option[(org.apache.spark.sql.Column,
                            () => String)] = None): (DataFrame, Long) = {
-    if (sys.props.contains("graft.pins.trace"))
-      pinLabelCounts.merge(what, 1L, (a, b) => a + b)
     val eff = effectiveDeltaCap(df.sparkSession, cap)
     // An already-EMPTY LocalRelation (a prior pin's empty result, or a
     // composition PropagateEmptyRelation folded away) pins job-free —
@@ -436,56 +484,49 @@ object ReasonOps {
     }
   }
 
-  /** The RDFS closure of `triples` (columns s, p, o in the store term
-    * convention; `typePred` is the store's rdf:type predicate — the
-    * driver-testdata stores use plain "a", and the default also matches
-    * loader-emitted full `rdf:type` IRIs). Returns base UNION inferred,
+  /** The RDFS closure of `data`: string terms in the store term
+    * convention (the corpus's type predicate is the store's rdf:type
+    * predicate — the driver-testdata stores use plain "a", and the
+    * default also matches loader-emitted full `rdf:type` IRIs) or
+    * encoded ids with [[RdfsIds]]. Returns base UNION inferred,
     * deduplicated, including the closed TBox statements themselves
     * (rdfs5/rdfs11: transitive `subPropertyOf` / `subClassOf` pairs).
+    *
+    * On ENCODED terms the rule passes never touch a string. The ids are
+    * DRIVER-COMPUTABLE on a pure-hash store (`Dictionary.termHashLocal`
+    * of the store's term forms — no job, no dictionary probe); on a
+    * collision-repaired store resolve them once with
+    * `Dictionary.lookup`. Output ids all pre-exist in the dictionary
+    * (closure only recombines existing terms), so the one decode at the
+    * top is the ordinary slim-dict join.
+    *
+    * On a QUAD corpus (§13-aware reasoning) the TBox is GLOBAL
+    * (`tboxSource`: the default graph or a dedicated schema relation;
+    * without one, the statements of every graph), and every ABox rule
+    * runs with the graph column CARRIED: the rules are single-premise,
+    * so each inferred quad lands in its premise's graph and graphs never
+    * leak into each other. The closed TBox statements themselves land
+    * in the DEFAULT graph (g = null).
     */
-  def rdfsClosure(triples: DataFrame, typePred: String = "a",
-                  tboxCap: Int = 1 << 20, pinInput: Boolean = true,
-                  dedup: Boolean = true): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
+  def rdfsClosure(data: DataFrame, corpus: Corpus[RdfsIds] = Corpus.Triples,
+                  tboxSource: Option[DataFrame] = None,
+                  tboxCap: Int = 1 << 20,
+                  pinInput: Boolean = true): DataFrame = {
     // The derivation reads the input ~6x (TBox probe + one pass per rule
     // + the final union); pin it once when it fits executor storage.
     // At full-corpus scale pass pinInput=false - columnar re-scans of
     // the source (no shuffle, filters pushed) beat caching 100 TB.
-    val t0 = triples.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
+    val t0 = normRel(data, corpus.quads)
     val t = if (pinInput) t0.localCheckpoint(true) else t0
-    val voc = stringVoc(typePred)
-    val tbox = collectTbox(t, voc.tboxPreds, tboxCap)
+    val voc = rdfsVoc(corpus)
+    val tbox = collectTbox(schemaRel(t, tboxSource), voc.tboxPreds, tboxCap)
     val derived = rdfsDerive(tbox, t, resolveEmit(voc, tbox),
-      includeTboxClosure = true)
-    val all = (t +: derived).reduce(_.unionAll(_))
-    // dedup=false: callers composing several closure legs (e.g. base +
-    // incremental maintenance) dedup ONCE over the union instead of
-    // paying a full-output shuffle per leg
-    if (dedup) all.distinct() else all
-  }
-
-  /** RDFS closure over an ENCODED (long-id) triple relation — the
-    * production-currency twin of [[rdfsClosure]], proving the design
-    * thesis end-to-end: the rule passes never touch a string. The
-    * vocabulary arrives as ids ([[RdfsIds]]); on a pure-hash store they
-    * are DRIVER-COMPUTABLE (`Dictionary.termHashLocal` of the store's
-    * term forms — no job, no dictionary probe), on a collision-repaired
-    * store resolve them once with `Dictionary.lookup`. Output ids all
-    * pre-exist in the dictionary (closure only recombines existing
-    * terms), so the one decode at the top is the ordinary slim-dict
-    * join.
-    */
-  def rdfsClosureEncoded(encTriples: DataFrame, ids: RdfsIds,
-                         tboxCap: Int = 1 << 20,
-                         pinInput: Boolean = true): DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t0 = encTriples.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-    val t = if (pinInput) t0.localCheckpoint(true) else t0
-    val voc = encVoc(ids)
-    val tbox = collectTbox(t, voc.tboxPreds, tboxCap)
-    val derived = rdfsDerive(tbox, t, voc, includeTboxClosure = true)
+      includeTboxClosure = true, corpus.quads)
     (t +: derived).reduce(_.unionAll(_)).distinct()
   }
+
+  private def rdfsVoc(corpus: Corpus[RdfsIds]): Voc =
+    corpus.vocab(stringVoc, encVoc)
 
   /** QUERY-TIME RDFS entailment: the closure as a LAZY relation —
     * nothing is materialized, pinned, or shuffled up front. Query
@@ -499,30 +540,13 @@ object ReasonOps {
     * contradicts the filter constant-fold to empty. The standard
     * alternative when the corpus is too large to re-materialize; each
     * pattern pays a narrow distinct over its own slice instead of a
-    * full-closure refresh.
+    * full-closure refresh. On quads, pattern constants push through the
+    * TBox maps AND the graph column.
     */
-  def rdfsEntailed(triples: DataFrame, typePred: String = "a",
+  def rdfsEntailed(data: DataFrame, corpus: Corpus[RdfsIds] = Corpus.Triples,
+                   tboxSource: Option[DataFrame] = None,
                    tboxCap: Int = 1 << 20): DataFrame =
-    rdfsClosure(triples, typePred, tboxCap, pinInput = false)
-
-  /** [[rdfsEntailed]] over an ENCODED (long-id) triple relation. */
-  def rdfsEntailedEncoded(encTriples: DataFrame, ids: RdfsIds,
-                          tboxCap: Int = 1 << 20): DataFrame =
-    rdfsClosureEncoded(encTriples, ids, tboxCap, pinInput = false)
-
-  /** [[rdfsEntailed]] over a NAMED-GRAPH quad dataset (lazy per-graph
-    * closure relation — pattern constants push through the TBox maps
-    * AND the graph column). */
-  def rdfsEntailedQuads(quads: DataFrame, tboxSource: DataFrame,
-                        typePred: String = "a",
-                        tboxCap: Int = 1 << 20): DataFrame =
-    rdfsClosureQuads(quads, tboxSource, typePred, tboxCap, pinInput = false)
-
-  /** [[rdfsEntailedQuads]] over ENCODED (long-id) quad relations. */
-  def rdfsEntailedQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                               ids: RdfsIds,
-                               tboxCap: Int = 1 << 20): DataFrame =
-    rdfsClosureQuadsEncoded(quads, tboxSource, ids, tboxCap, pinInput = false)
+    rdfsClosure(data, corpus, tboxSource, tboxCap, pinInput = false)
 
   /** INCREMENTAL RDFS maintenance, the O(|delta|) twin of [[rdfsClosure]]
     * matching the store's O(delta) append discipline: with the TBox
@@ -535,99 +559,32 @@ object ReasonOps {
     * as long as delta carries no TBox statements — schema changes alter
     * the maps every pass used, so they require re-materialization, and
     * the op FAIL-FASTS if delta contains a TBox predicate (either
-    * rendering) rather than silently under-deriving. `tboxSource` is any
-    * relation holding the (unchanged) schema statements — typically the
-    * base graph or the already-materialized closure. Returns the
-    * increment (delta plus its derivations, deduped); fold it into the
-    * existing closure with [[composeIncrement]] — NOT a full-union
-    * distinct.
+    * rendering, or the TBox ids) rather than silently under-deriving.
+    * `tboxSource` is any relation holding the (unchanged) schema
+    * statements — typically the base graph or the already-materialized
+    * closure. Returns the increment (delta plus its derivations,
+    * deduped); fold it into the existing closure with
+    * [[composeIncrement]] — NOT a full-union distinct.
+    *
+    * On a quad corpus each inserted quad's derivations land in ITS
+    * graph, so the identity holds per graph (composed with
+    * [[composeIncrement]], graph column included in the novelty key —
+    * null-safe, so default-graph rows dedup correctly); the TBox stays
+    * GLOBAL and unchanged.
     */
   def rdfsDelta(tboxSource: DataFrame, delta: DataFrame,
-                typePred: String = "a", tboxCap: Int = 1 << 20,
-                dedup: Boolean = true,
+                corpus: Corpus[RdfsIds] = Corpus.Triples,
+                tboxCap: Int = 1 << 20,
                 deltaCap: Option[Long] = None): DataFrame = {
-    val voc = stringVoc(typePred)
-    val Seq(cs, cp, co) = delta.columns.take(3).toSeq
-    val d0 = delta.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-    val (d, _) = pinCappedGuard(d0, deltaCap, "rdfsDelta increment",
-      "rdfsClosure", col("p").isin(voc.tboxPreds: _*),
+    val voc = rdfsVoc(corpus)
+    val remat = corpus.remat("rdfsClosure")
+    val (d, _) = pinCappedGuard(normRel(delta, corpus.quads), deltaCap,
+      "rdfsDelta increment", remat, col("p").isin(voc.tboxPreds: _*),
       "delta contains TBox statements - schema changes require " +
-        "re-materialization (rdfsClosure), not incremental maintenance")
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc.tboxPreds, tboxCap)
+        s"re-materialization ($remat), not incremental maintenance")
+    val tbox = collectTbox(normTriples(tboxSource), voc.tboxPreds, tboxCap)
     val derived = rdfsDerive(tbox, d, resolveEmit(voc, tbox),
-      includeTboxClosure = false)
-    val all = (d +: derived).reduce(_.unionAll(_))
-    if (dedup) all.distinct() else all
-  }
-
-  /** [[rdfsDelta]] over ENCODED (long-id) relations — O(|Δ|) closure
-    * maintenance on the production currency, pairing with
-    * [[rdfsClosureEncoded]]. Same single-premise identity and the same
-    * fail-fast on TBox ids in the delta.
-    */
-  def rdfsDeltaEncoded(tboxSource: DataFrame, delta: DataFrame,
-                       ids: RdfsIds, tboxCap: Int = 1 << 20,
-                       deltaCap: Option[Long] = None): DataFrame = {
-    val voc = encVoc(ids)
-    val Seq(cs, cp, co) = delta.columns.take(3).toSeq
-    val d0 = delta.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-    val (d, _) = pinCappedGuard(d0, deltaCap, "rdfsDeltaEncoded increment",
-      "rdfsClosureEncoded", col("p").isin(voc.tboxPreds: _*),
-      "delta contains TBox statements - schema changes require " +
-        "re-materialization (rdfsClosureEncoded), not incremental maintenance")
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc.tboxPreds, tboxCap)
-    val derived = rdfsDerive(tbox, d, voc, includeTboxClosure = false)
-    (d +: derived).reduce(_.unionAll(_)).distinct()
-  }
-
-  /** [[rdfsDelta]] over a NAMED-GRAPH quad dataset — O(|Δ|) maintenance
-    * of a PER-GRAPH closure ([[rdfsClosureQuads]]): the rho-df rules are
-    * single-premise, so each inserted quad's derivations land in ITS
-    * graph and the incremental identity holds per graph,
-    *
-    *   rdfsClosureQuads(base ∪ Δ) ==
-    *     rdfsClosureQuads(base) ∪ rdfsDeltaQuads(tbox, Δ)
-    *
-    * (composed with [[composeIncrement]], graph column included in the
-    * novelty key — null-safe, so default-graph rows dedup correctly).
-    * The TBox stays GLOBAL (`tboxSource`) and unchanged: TBox predicates
-    * in the delta fail fast, same contract as [[rdfsDelta]].
-    */
-  def rdfsDeltaQuads(tboxSource: DataFrame, delta: DataFrame,
-                     typePred: String = "a", tboxCap: Int = 1 << 20,
-                     deltaCap: Option[Long] = None): DataFrame =
-    rdfsDeltaQuadsCore(tboxSource, delta, stringVoc(typePred), tboxCap,
-      deltaCap, "rdfsClosureQuads")
-
-  /** [[rdfsDeltaQuads]] over ENCODED (long-id) quad relations. */
-  def rdfsDeltaQuadsEncoded(tboxSource: DataFrame, delta: DataFrame,
-                            ids: RdfsIds, tboxCap: Int = 1 << 20,
-                            deltaCap: Option[Long] = None): DataFrame =
-    rdfsDeltaQuadsCore(tboxSource, delta, encVoc(ids), tboxCap, deltaCap,
-      "rdfsClosureQuadsEncoded")
-
-  private def rdfsDeltaQuadsCore(tboxSource: DataFrame, delta: DataFrame,
-                                 voc0: Voc, tboxCap: Int, deltaCap: Option[Long],
-                                 rematName: String): DataFrame = {
-    val Seq(cs, cp, co, cg) = delta.columns.take(4).toSeq
-    val d0 = delta.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val (d, _) = pinCappedGuard(d0, deltaCap, "rdfsDeltaQuads increment",
-      rematName, col("p").isin(voc0.tboxPreds: _*),
-      "delta contains TBox statements - schema changes require " +
-        s"re-materialization ($rematName), not incremental maintenance")
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val derived = rdfsDeriveQuads(tbox, d, resolveEmit(voc0, tbox),
-      includeTboxClosure = false)
+      includeTboxClosure = false, corpus.quads)
     (d +: derived).reduce(_.unionAll(_)).distinct()
   }
 
@@ -677,8 +634,9 @@ object ReasonOps {
   }
 
   /** The novelty anti-join itself, pre the constraint-stripping
-    * boundary — exposed for plan assertions. */
-  /** `pinHits = false` skips the existence-hit pin: the hit set then
+    * boundary — exposed for plan assertions.
+    *
+    * `pinHits = false` skips the existence-hit pin: the hit set then
     * stays a LAZY broadcast subplan, and the one corpus existence scan
     * runs inside the CALLER's materializing action instead of a
     * separate pin job (count + checkpoint + downstream broadcast
@@ -765,49 +723,23 @@ object ReasonOps {
     *      — it is never shuffled, the same discipline as
     *      [[incrementNovel]].
     *
+    * On a quad corpus single-premise rules never cross graphs, so the
+    * over-delete, the premise slab, and the survivor re-derivation all
+    * key on (term, graph): a deletion in one graph cannot kill — or
+    * resurrect — a derivation in another. The TBox comes from
+    * `tboxSource` when given (the quad contract: a GLOBAL schema
+    * relation) and from `base` otherwise.
+    *
     * Returns the maintained closure, set-equal to
     * `rdfsClosure(base − deletions)`.
     */
   def rdfsRetract(closure: DataFrame, base: DataFrame, deletions: DataFrame,
-                  typePred: String = "a", tboxCap: Int = 1 << 20,
+                  corpus: Corpus[RdfsIds] = Corpus.Triples,
+                  tboxSource: Option[DataFrame] = None,
+                  tboxCap: Int = 1 << 20,
                   deltaCap: Option[Long] = None): DataFrame =
-    rdfsRetractCore(closure, base, deletions, stringVoc(typePred), None,
-      tboxCap, deltaCap, "rdfsClosure", hasGraph = false)
-
-  /** [[rdfsRetract]] over ENCODED (long-id) relations. */
-  def rdfsRetractEncoded(closure: DataFrame, base: DataFrame,
-                         deletions: DataFrame, ids: RdfsIds,
-                         tboxCap: Int = 1 << 20,
-                         deltaCap: Option[Long] = None): DataFrame =
-    rdfsRetractCore(closure, base, deletions, encVoc(ids), None, tboxCap,
-      deltaCap, "rdfsClosureEncoded", hasGraph = false)
-
-  /** [[rdfsRetract]] over a NAMED-GRAPH quad dataset — DRed maintenance
-    * of a PER-GRAPH closure ([[rdfsClosureQuads]]) through quad DELETEs.
-    * Single-premise rules never cross graphs, so the over-delete, the
-    * premise slab, and the survivor re-derivation all key on
-    * (term, graph): a deletion in one graph cannot kill — or resurrect —
-    * a derivation in another. The TBox is GLOBAL (`tboxSource`), and
-    * TBox deletions fail fast as on the triple path. Returns the
-    * maintained closure, set-equal to
-    * `rdfsClosureQuads(base − deletions, tboxSource)`.
-    */
-  def rdfsRetractQuads(closure: DataFrame, base: DataFrame,
-                       deletions: DataFrame, tboxSource: DataFrame,
-                       typePred: String = "a", tboxCap: Int = 1 << 20,
-                       deltaCap: Option[Long] = None): DataFrame =
-    rdfsRetractCore(closure, base, deletions, stringVoc(typePred),
-      Some(tboxSource), tboxCap, deltaCap, "rdfsClosureQuads",
-      hasGraph = true)
-
-  /** [[rdfsRetractQuads]] over ENCODED (long-id) quad relations. */
-  def rdfsRetractQuadsEncoded(closure: DataFrame, base: DataFrame,
-                              deletions: DataFrame, tboxSource: DataFrame,
-                              ids: RdfsIds, tboxCap: Int = 1 << 20,
-                              deltaCap: Option[Long] = None): DataFrame =
-    rdfsRetractCore(closure, base, deletions, encVoc(ids),
-      Some(tboxSource), tboxCap, deltaCap, "rdfsClosureQuadsEncoded",
-      hasGraph = true)
+    rdfsRetractCore(closure, base, deletions, rdfsVoc(corpus), tboxSource,
+      tboxCap, deltaCap, corpus.remat("rdfsClosure"), corpus.quads)
 
   /** The shared DRed core, triple and quad shaped: on the quad path the
     * graph column rides every key (null-safe — derivations in the
@@ -834,8 +766,7 @@ object ReasonOps {
       a.join(broadcast(probe), eqCond(names, "__x_"), "left_anti")
     }
     def derive(df: DataFrame, tbox: Array[(Any, Any, Any)], voc: Voc) =
-      if (hasGraph) rdfsDeriveQuads(tbox, df, voc, includeTboxClosure = false)
-      else rdfsDerive(tbox, df, voc, includeTboxClosure = false)
+      rdfsDerive(tbox, df, voc, includeTboxClosure = false, hasGraph)
     val (del, _) = pinCappedGuard(norm(deletions), deltaCap,
       "retraction set", rematName, col("p").isin(voc0.tboxPreds: _*),
       "deletions contain TBox statements - schema changes require " +
@@ -875,33 +806,33 @@ object ReasonOps {
   }
 
   /** STREAMING RDFS materialization: [[rdfsDelta]] over a live triple
-    * stream. Every rho-df rule is a broadcast join against a
+    * or quad stream. Every rho-df rule is a broadcast join against a
     * driver-built table, so the whole derivation is stateless and
     * append-safe — each micro-batch emits exactly its own increment
-    * (single-premise rules never need cross-batch state). No dedup is
+    * (single-premise rules never need cross-batch state; on quads each
+    * arriving quad's derivations land in ITS graph). No dedup is
     * applied (distinct on a stream is stateful); increments may repeat
     * what an earlier batch or the base closure already holds — dedup at
     * the sink or with a watermarked dropDuplicates downstream. TBox
-    * statements ARRIVING ON THE STREAM (either rendering) fail the
-    * batch at runtime (raise_error) — schema changes re-materialize,
-    * same contract as the batch delta path.
+    * statements ARRIVING ON THE STREAM fail the batch at runtime
+    * (raise_error) — schema changes re-materialize, same contract as
+    * the batch delta path.
     */
   def rdfsDeltaStream(tboxSource: DataFrame, stream: DataFrame,
-                      typePred: String = "a",
+                      corpus: Corpus[RdfsIds] = Corpus.Triples,
                       tboxCap: Int = 1 << 20): DataFrame = {
-    val voc0 = stringVoc(typePred)
-    val Seq(cs, cp, co) = stream.columns.take(3).toSeq
-    val guard = when(col(cp).isin(voc0.tboxPreds: _*),
-      raise_error(concat(lit("TBox statement on the stream ("), col(cp),
+    val voc0 = rdfsVoc(corpus)
+    val guard = when(col("p").isin(voc0.tboxPreds: _*),
+      raise_error(concat(lit("TBox statement on the stream ("),
+        col("p").cast("string"),
         lit(") - schema changes require re-materialization"))))
-      .otherwise(col(cp))
-    val d = stream.select(col(cs).as("s"), guard.as("p"), col(co).as("o"))
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
+      .otherwise(col("p"))
+    val d = normRel(stream, corpus.quads).select(
+      Seq(col("s"), guard.as("p"), col("o")) ++
+        (if (corpus.quads) Seq(col("g")) else Nil): _*)
+    val tbox = collectTbox(normTriples(tboxSource), voc0.tboxPreds, tboxCap)
     val derived = rdfsDerive(tbox, d, resolveEmit(voc0, tbox),
-      includeTboxClosure = false)
+      includeTboxClosure = false, corpus.quads)
     (d +: derived).reduce(_.unionAll(_))
   }
 
@@ -917,132 +848,6 @@ object ReasonOps {
       s"TBox exceeds $tboxCap statements - not schema-shaped; raise tboxCap " +
         "only if the ontology is genuinely this large")
     tbox
-  }
-
-  /** RDFS closure over a NAMED-GRAPH quad dataset — §13-aware
-    * reasoning. The TBox is GLOBAL (`tboxSource`: the default graph or
-    * a dedicated schema relation), and every ABox rule runs with the
-    * graph column CARRIED: the rules are single-premise, so per-graph
-    * derivation is well-defined — each inferred quad lands in its
-    * premise's graph and graphs never leak into each other. The closed
-    * TBox statements themselves land in the DEFAULT graph (g = null).
-    */
-  def rdfsClosureQuads(quads: DataFrame, tboxSource: DataFrame,
-                       typePred: String = "a", tboxCap: Int = 1 << 20,
-                       pinInput: Boolean = true): DataFrame =
-    rdfsClosureQuadsCore(quads, tboxSource, stringVoc(typePred), tboxCap,
-      pinInput)
-
-  /** [[rdfsClosureQuads]] over ENCODED (long-id) quad relations — the
-    * production currency for named-graph corpora: per-graph derivation
-    * on fixed-width ids, vocabulary as [[RdfsIds]], one slim-dict
-    * decode at the top as usual.
-    */
-  def rdfsClosureQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                              ids: RdfsIds, tboxCap: Int = 1 << 20,
-                              pinInput: Boolean = true): DataFrame =
-    rdfsClosureQuadsCore(quads, tboxSource, encVoc(ids), tboxCap, pinInput)
-
-  private def rdfsClosureQuadsCore(quads: DataFrame, tboxSource: DataFrame,
-                                   voc0: Voc, tboxCap: Int,
-                                   pinInput: Boolean): DataFrame = {
-    val spark = quads.sparkSession
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q0 = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val q = if (pinInput) q0.localCheckpoint(true) else q0
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val voc = resolveEmit(voc0, tbox)
-    val derived = rdfsDeriveQuads(tbox, q, voc, includeTboxClosure = true)
-    (q +: derived).reduce(_.unionAll(_)).distinct()
-  }
-
-  /** The per-graph rho-df rule passes (graph column CARRIED through
-    * every rule — single-premise, so derivations land in their
-    * premise's graph) — shared by the batch quad closures and the
-    * STREAMING quad delta (stream-safe: broadcast joins and unions of
-    * append-only frames, no stateful op).
-    */
-  private def rdfsDeriveQuads(tbox: Array[(Any, Any, Any)], q: DataFrame,
-                              voc: Voc,
-                              includeTboxClosure: Boolean): Seq[DataFrame] = {
-    val spark = q.sparkSession
-    val dt = q.schema.fields.head.dataType
-    val maps = rdfsMaps(tbox, voc)
-    def pairs(ps: Seq[(Any, Any)], a: String, b: String): DataFrame =
-      pairDfAny(spark, ps, a, b, dt)
-    val derived = scala.collection.mutable.ListBuffer[DataFrame]()
-    // same driver-known predicate pre-filters as rdfsDerive (pushed
-    // scans / pruned unpivot legs on the lazy quad entailment relation)
-    def keyed(ps: Seq[(Any, Any)]): DataFrame =
-      q.where(col("p").isin(ps.map(_._1).distinct: _*))
-    if (maps.spPairs.nonEmpty)
-      derived += keyed(maps.spPairs)
-        .join(broadcast(pairs(maps.spPairs, "p", "q2")), "p")
-        .select(col("s"), col("q2").as("p"), col("o"), col("g"))
-    if (maps.domEff.nonEmpty)
-      derived += keyed(maps.domEff)
-        .join(broadcast(pairs(maps.domEff, "p", "c")), "p")
-        .select(col("s"), lit(voc.emitTy).as("p"), col("c").as("o"), col("g"))
-    if (maps.rngEff.nonEmpty)
-      derived += keyed(maps.rngEff)
-        .join(broadcast(pairs(maps.rngEff, "p", "c")), "p")
-        .select(col("o").as("s"), lit(voc.emitTy).as("p"),
-          col("c").as("o"), col("g"))
-    if (maps.scPairs.nonEmpty) {
-      val allTypes = (q.where(col("p").isin(voc.ty.toSeq: _*))
-        .select("s", "o", "g") +:
-        derived.toSeq.map(_.where(col("p").isin(voc.ty.toSeq: _*))
-          .select("s", "o", "g"))).reduce(_.unionAll(_))
-      derived += allTypes.join(broadcast(pairs(maps.scPairs, "o", "d")), "o")
-        .select(col("s"), lit(voc.emitTy).as("p"), col("d").as("o"), col("g"))
-    }
-    val tboxClosed =
-      maps.spPairs.map { case (a, b) => Seq(a, voc.emitSp, b, null) } ++
-        maps.scPairs.map { case (a, b) => Seq(a, voc.emitSc, b, null) } ++
-        maps.ecPairs.map { case (a, b) => Seq(a, voc.emitEc, b, null) } ++
-        maps.epPairs.map { case (a, b) => Seq(a, voc.emitEp, b, null) }
-    if (includeTboxClosure && tboxClosed.nonEmpty) {
-      import scala.jdk.CollectionConverters._
-      derived += spark.createDataFrame(
-        new java.util.ArrayList(
-          tboxClosed.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava),
-        org.apache.spark.sql.types.StructType(
-          Seq("s", "p", "o").map(
-            org.apache.spark.sql.types.StructField(_, dt, nullable = false)) :+
-            org.apache.spark.sql.types.StructField("g", dt, nullable = true)))
-    }
-    derived.toSeq
-  }
-
-  /** STREAMING per-named-graph RDFS maintenance: [[rdfsDeltaStream]]
-    * over a live QUAD stream — each arriving quad's derivations land in
-    * ITS graph (single-premise rules, graph column carried), the whole
-    * derivation is stateless broadcast joins (append-safe, no dedup —
-    * same contract as the triple variant), and TBox statements ARRIVING
-    * ON THE STREAM (either rendering) fail the batch at runtime.
-    */
-  def rdfsDeltaStreamQuads(tboxSource: DataFrame, stream: DataFrame,
-                           typePred: String = "a",
-                           tboxCap: Int = 1 << 20): DataFrame = {
-    val voc0 = stringVoc(typePred)
-    val Seq(cs, cp, co, cg) = stream.columns.take(4).toSeq
-    val guard = when(col(cp).isin(voc0.tboxPreds: _*),
-      raise_error(concat(lit("TBox statement on the stream ("), col(cp),
-        lit(") - schema changes require re-materialization"))))
-      .otherwise(col(cp))
-    val d = stream.select(col(cs).as("s"), guard.as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val derived = rdfsDeriveQuads(tbox, d, resolveEmit(voc0, tbox),
-      includeTboxClosure = false)
-    (d +: derived).reduce(_.unionAll(_))
   }
 
   private final case class RdfsMaps(spPairs: Seq[(Any, Any)],
@@ -1108,25 +913,20 @@ object ReasonOps {
     * AND derived types. Shared by the full, delta, streaming, retract,
     * and ENCODED paths — generic over the term type, so the same code
     * runs on string terms and on long ids (the derivation tables take
-    * `t`'s column type).
+    * `t`'s column type). With `hasGraph` the graph column is CARRIED
+    * through every rule (single-premise, so derivations land in their
+    * premise's graph; stream-safe: broadcast joins and unions of
+    * append-only frames, no stateful op).
     */
   private def rdfsDerive(tbox: Array[(Any, Any, Any)], t: DataFrame,
-                         voc: Voc,
-                         includeTboxClosure: Boolean): Seq[DataFrame] = {
+                         voc: Voc, includeTboxClosure: Boolean,
+                         hasGraph: Boolean): Seq[DataFrame] = {
     val spark = t.sparkSession
     val dt = t.schema.fields.head.dataType
     val maps = rdfsMaps(tbox, voc)
-
-    def rowsDf(rows: Seq[Seq[Any]], names: Seq[String]): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
-        new java.util.ArrayList(
-          rows.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava),
-        org.apache.spark.sql.types.StructType(names.map(
-          org.apache.spark.sql.types.StructField(_, dt, nullable = false))))
-    }
+    val g = if (hasGraph) Seq(col("g")) else Nil
     def pairDf(pairs: Seq[(Any, Any)], a: String, b: String): DataFrame =
-      rowsDf(pairs.map(x => Seq(x._1, x._2)), Seq(a, b))
+      pairDfAny(spark, pairs, a, b, dt)
 
     val derived = scala.collection.mutable.ListBuffer[DataFrame]()
     // Each rule pre-filters its scan by the DRIVER-KNOWN predicate keys
@@ -1141,41 +941,53 @@ object ReasonOps {
     if (maps.spPairs.nonEmpty)
       derived += keyed(maps.spPairs)
         .join(broadcast(pairDf(maps.spPairs, "p", "q")), "p")
-        .select(col("s"), col("q").as("p"), col("o"))
+        .select(Seq(col("s"), col("q").as("p"), col("o")) ++ g: _*)
     // rdfs2: (s p o), dom*(p) contains C  =>  (s type C)
     if (maps.domEff.nonEmpty)
       derived += keyed(maps.domEff)
         .join(broadcast(pairDf(maps.domEff, "p", "c")), "p")
-        .select(col("s"), lit(voc.emitTy).as("p"), col("c").as("o"))
+        .select(Seq(col("s"), lit(voc.emitTy).as("p"), col("c").as("o")) ++
+          g: _*)
     // rdfs3: (s p o), rng*(p) contains C  =>  (o type C)
     if (maps.rngEff.nonEmpty)
       derived += keyed(maps.rngEff)
         .join(broadcast(pairDf(maps.rngEff, "p", "c")), "p")
-        .select(col("o").as("s"), lit(voc.emitTy).as("p"), col("c").as("o"))
+        .select(Seq(col("o").as("s"), lit(voc.emitTy).as("p"),
+          col("c").as("o")) ++ g: _*)
     // rdfs9: (s type C), C sc* D  =>  (s type D) - over base AND derived
     // type assertions (domain/range-produced types expand too).
     if (maps.scPairs.nonEmpty) {
-      val allTypes = (t.where(col("p").isin(voc.ty.toSeq: _*))
-        .select("s", "o") +:
-        derived.toSeq.map(_.where(col("p").isin(voc.ty.toSeq: _*))
-          .select("s", "o")))
+      val allTypes = (t +: derived.toSeq)
+        .map(_.where(col("p").isin(voc.ty.toSeq: _*))
+          .select(Seq(col("s"), col("o")) ++ g: _*))
         .reduce(_.unionAll(_))
       derived += allTypes.join(broadcast(pairDf(maps.scPairs, "o", "d")), "o")
-        .select(col("s"), lit(voc.emitTy).as("p"), col("d").as("o"))
+        .select(Seq(col("s"), lit(voc.emitTy).as("p"), col("d").as("o")) ++
+          g: _*)
     }
     // rdfs5 / rdfs11 + the closed equivalence relations: the closed
     // hierarchy statements themselves (equivalences emit BOTH their
     // symmetric-transitive closure and, via sc/spPairs, their mutual
-    // subsumption pairs).
+    // subsumption pairs), in the default graph on quads.
+    val noGraph = if (hasGraph) Seq(null) else Nil
     val tboxClosed =
-      maps.spPairs.map { case (a, b) => Seq(a, voc.emitSp, b) } ++
+      (maps.spPairs.map { case (a, b) => Seq(a, voc.emitSp, b) } ++
         maps.scPairs.map { case (a, b) => Seq(a, voc.emitSc, b) } ++
         maps.ecPairs.map { case (a, b) => Seq(a, voc.emitEc, b) } ++
-        maps.epPairs.map { case (a, b) => Seq(a, voc.emitEp, b) }
-    if (includeTboxClosure && tboxClosed.nonEmpty)
-      derived += rowsDf(tboxClosed, Seq("s", "p", "o"))
+        maps.epPairs.map { case (a, b) => Seq(a, voc.emitEp, b) })
+        .map(_ ++ noGraph)
+    if (includeTboxClosure && tboxClosed.nonEmpty) {
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.types.{StructField, StructType}
+      derived += spark.createDataFrame(
+        new java.util.ArrayList(
+          tboxClosed.map(r => org.apache.spark.sql.Row.fromSeq(r)).asJava),
+        StructType(Seq("s", "p", "o").map(StructField(_, dt, nullable = false)) ++
+          (if (hasGraph) Seq(StructField("g", dt, nullable = true)) else Nil)))
+    }
     derived.toSeq
   }
+
 
 
   val InverseOf          = "http://www.w3.org/2002/07/owl#inverseOf"
@@ -1186,14 +998,6 @@ object ReasonOps {
   val InverseFunctionalProperty =
     "http://www.w3.org/2002/07/owl#InverseFunctionalProperty"
 
-  /** All-pairs transitive closure of an edge relation by iterated
-    * squaring: each round joins the path set with itself, so a graph of
-    * diameter d closes in ceil(log2 d) rounds — the only shape that
-    * survives long chains at scale (linear relaxation pays d rounds).
-    * Output size is the real cost ceiling (reachability can be
-    * quadratic in a component); that is inherent to materialization,
-    * not the algorithm. Self-loops are dropped (irreflexive closure).
-    */
   /** Count of fixpoint derivations STARTED (one per [[transitiveClosure]]
     * call) — lets specs assert that a lazily-entailed relation restricted
     * to non-transitive predicates ([[owlEntailed]]) runs NO fixpoint.
@@ -1211,6 +1015,14 @@ object ReasonOps {
     * the DRed twin of [[lastFixpointRounds]] for the scale probe. */
   private[graft] val lastFrontierRounds = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** All-pairs transitive closure of an edge relation by iterated
+    * squaring: each round joins the path set with itself, so a graph of
+    * diameter d closes in ceil(log2 d) rounds — the only shape that
+    * survives long chains at scale (linear relaxation pays d rounds).
+    * Output size is the real cost ceiling (reachability can be
+    * quadratic in a component); that is inherent to materialization,
+    * not the algorithm. Self-loops are dropped (irreflexive closure).
+    */
   def transitiveClosure(edges: DataFrame, maxRounds: Int = 16,
                         groupCols: Seq[String] = Nil): DataFrame = {
     fixpointRuns.incrementAndGet()
@@ -1277,20 +1089,37 @@ object ReasonOps {
     * transitivity and stays logarithmic). owl:sameAs is deliberately
     * separate ([[sameAsCanonicalize]]): identity sets are DATA-sized
     * and must never reach the driver.
+    *
+    * On a quad corpus the declarations are GLOBAL (`tboxSource`) and
+    * the rules CARRY the graph column — inverse/symmetric are
+    * single-premise (graph-preserving by construction), and each
+    * transitive property closes PER GRAPH: the squaring join keys on
+    * the graph column, so chains never cross graphs. Encoded terms run
+    * the rules and the squaring entirely on fixed-width ids.
     */
-  def owlClosure(triples: DataFrame, typePred: String = "a",
-                 tboxCap: Int = 1 << 20): DataFrame =
-    owlClosureCore(triples, InverseOf, SymmetricProperty,
-      TransitiveProperty, typePred, tboxCap, StringChainVoc)
+  def owlClosure(data: DataFrame, corpus: Corpus[OwlIds] = Corpus.Triples,
+                 tboxSource: Option[DataFrame] = None,
+                 tboxCap: Int = 1 << 20): DataFrame = {
+    val rel0 = normRel(data, corpus.quads)
+    // the quad closure pins its input; the triple closure re-reads it
+    val rel = if (corpus.quads) rel0.localCheckpoint(true) else rel0
+    val (inv, sym, trans, chains) =
+      owlDecls(tboxSource.getOrElse(rel), owlVoc(corpus), tboxCap)
+    owlCloseCore(rel, inv, sym, trans, corpus.quads, chains)
+  }
 
-  /** [[owlClosure]] over an ENCODED (long-id) triple relation — like
-    * [[rdfsClosureEncoded]], the rules and the iterated-squaring
-    * closure run entirely on fixed-width ids.
-    */
-  def owlClosureEncoded(encTriples: DataFrame, ids: OwlIds,
-                        tboxCap: Int = 1 << 20): DataFrame =
-    owlClosureCore(encTriples, ids.inverseOf, ids.symmetricProperty,
-      ids.transitiveProperty, ids.typePred, tboxCap, encChainVoc(ids))
+  /** The OWL property vocabulary of a corpus: the OWL IRIs (type
+    * predicate as given) on string terms, the [[OwlIds]] on encoded
+    * ones. */
+  private final case class OwlVoc(inverseOf: Any, symmetricProperty: Any,
+                                  transitiveProperty: Any, typePred: Any,
+                                  chains: ChainVoc)
+
+  private def owlVoc(corpus: Corpus[OwlIds]): OwlVoc = corpus.vocab(
+    typePred => OwlVoc(InverseOf, SymmetricProperty, TransitiveProperty,
+      typePred, StringChainVoc),
+    ids => OwlVoc(ids.inverseOf, ids.symmetricProperty,
+      ids.transitiveProperty, ids.typePred, encChainVoc(ids)))
 
   /** The OWL property declarations of a relation, driver-collected and
     * capped: symmetrized inverseOf pairs, symmetric-property terms,
@@ -1301,10 +1130,10 @@ object ReasonOps {
     * with the declarations — raise `tboxCap` or pre-filter; the walk
     * itself only touches nodes reachable from a chain axiom.
     */
-  private def owlDecls(rel: DataFrame, inverseOf: Any, symmetricProperty: Any,
-                       transitiveProperty: Any, typePred: Any, tboxCap: Int,
-                       chainVoc: ChainVoc)
+  private def owlDecls(rel: DataFrame, voc: OwlVoc, tboxCap: Int)
       : (Seq[(Any, Any)], Seq[Any], Seq[Any], Seq[(Any, Seq[Any])]) = {
+    val OwlVoc(inverseOf, symmetricProperty, transitiveProperty, typePred,
+      chainVoc) = voc
     val Seq(cs, cp, co) = rel.columns.take(3).toSeq
     val chainPreds = chainVoc.declPreds
     val chainCond =
@@ -1364,53 +1193,6 @@ object ReasonOps {
           s"$what for $h names an empty chain (rdf:nil object)")
         (h, buf.toSeq)
       }.sortBy(_._1.toString)
-  }
-
-  /** [[owlClosure]] over a NAMED-GRAPH quad dataset: global OWL
-    * property declarations (`tboxSource`), rules with the graph column
-    * CARRIED — inverse/symmetric are single-premise (graph-preserving
-    * by construction), and each transitive property closes PER GRAPH:
-    * the squaring join keys on the graph column, so chains never cross
-    * graphs.
-    */
-  def owlClosureQuads(quads: DataFrame, tboxSource: DataFrame,
-                      typePred: String = "a",
-                      tboxCap: Int = 1 << 20): DataFrame =
-    owlClosureQuadsCore(quads, tboxSource, InverseOf, SymmetricProperty,
-      TransitiveProperty, typePred, tboxCap, StringChainVoc)
-
-  /** [[owlClosureQuads]] over ENCODED (long-id) quad relations — the
-    * per-graph rules and squaring closures run on fixed-width ids,
-    * vocabulary as [[OwlIds]].
-    */
-  def owlClosureQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                             ids: OwlIds, tboxCap: Int = 1 << 20): DataFrame =
-    owlClosureQuadsCore(quads, tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      encChainVoc(ids))
-
-  private def owlClosureQuadsCore(quads: DataFrame, tboxSource: DataFrame,
-                                  inverseOf: Any, symmetricProperty: Any,
-                                  transitiveProperty: Any, typePred: Any,
-                                  tboxCap: Int, chainVoc: ChainVoc)
-      : DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g")).localCheckpoint(true)
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, inverseOf,
-      symmetricProperty, transitiveProperty, typePred, tboxCap, chainVoc)
-    owlCloseCore(q, inv, sym, trans, hasGraph = true, chains)
-  }
-
-  private def owlClosureCore(triples: DataFrame, inverseOf: Any,
-                             symmetricProperty: Any, transitiveProperty: Any,
-                             typePred: Any, tboxCap: Int,
-                             chainVoc: ChainVoc): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-    val (inv, sym, trans, chains) = owlDecls(t, inverseOf, symmetricProperty,
-      transitiveProperty, typePred, tboxCap, chainVoc)
-    owlCloseCore(t, inv, sym, trans, hasGraph = false, chains)
   }
 
   /** One inverse + symmetric derivation pass over a triple or quad
@@ -1592,61 +1374,20 @@ object ReasonOps {
     * `patternPreds` that avoid every chain head (and head-inverse) to
     * keep the lazy contract, or materialize with [[owlClosure]] + an
     * artifact when chain heads are genuinely queried.
+    *
+    * On quads the pattern constants prune the property slices AND the
+    * graph column; only the observable transitive properties square,
+    * per graph.
     */
-  def owlEntailed(triples: DataFrame, typePred: String = "a",
+  def owlEntailed(data: DataFrame, corpus: Corpus[OwlIds] = Corpus.Triples,
+                  tboxSource: Option[DataFrame] = None,
                   tboxCap: Int = 1 << 20,
                   patternPreds: Seq[Any] = Nil): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-    val (inv, sym, trans, chains) = owlDecls(t, InverseOf, SymmetricProperty,
-      TransitiveProperty, typePred, tboxCap, StringChainVoc)
-    owlCloseCore(t, inv, sym, transNeeded(trans, inv, patternPreds),
-      hasGraph = false, chainsNeeded(chains, inv, patternPreds))
-  }
-
-  /** [[owlEntailed]] over an ENCODED (long-id) triple relation. */
-  def owlEntailedEncoded(encTriples: DataFrame, ids: OwlIds,
-                         tboxCap: Int = 1 << 20,
-                         patternPreds: Seq[Any] = Nil): DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t = encTriples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val (inv, sym, trans, chains) = owlDecls(t, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      encChainVoc(ids))
-    owlCloseCore(t, inv, sym, transNeeded(trans, inv, patternPreds),
-      hasGraph = false, chainsNeeded(chains, inv, patternPreds))
-  }
-
-  /** [[owlEntailed]] over a NAMED-GRAPH quad dataset (lazy per-graph
-    * closure relation — pattern constants prune the property slices AND
-    * the graph column; only the observable transitive properties square,
-    * per graph). */
-  def owlEntailedQuads(quads: DataFrame, tboxSource: DataFrame,
-                       typePred: String = "a", tboxCap: Int = 1 << 20,
-                       patternPreds: Seq[Any] = Nil): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, InverseOf,
-      SymmetricProperty, TransitiveProperty, typePred, tboxCap,
-      StringChainVoc)
-    owlCloseCore(q, inv, sym, transNeeded(trans, inv, patternPreds),
-      hasGraph = true, chainsNeeded(chains, inv, patternPreds))
-  }
-
-  /** [[owlEntailedQuads]] over ENCODED (long-id) quad relations. */
-  def owlEntailedQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                              ids: OwlIds, tboxCap: Int = 1 << 20,
-                              patternPreds: Seq[Any] = Nil): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      encChainVoc(ids))
-    owlCloseCore(q, inv, sym, transNeeded(trans, inv, patternPreds),
-      hasGraph = true, chainsNeeded(chains, inv, patternPreds))
+    val rel = normRel(data, corpus.quads)
+    val (inv, sym, trans, chains) =
+      owlDecls(tboxSource.getOrElse(rel), owlVoc(corpus), tboxCap)
+    owlCloseCore(rel, inv, sym, transNeeded(trans, inv, patternPreds),
+      corpus.quads, chainsNeeded(chains, inv, patternPreds))
   }
 
   /** The transitive properties a pattern-predicate set can observe:
@@ -1683,50 +1424,23 @@ object ReasonOps {
     *     round's novel conclusions re-close through the same O(Δ)
     *     machinery until dry — the closure never re-shuffles.
     *
+    * On a quad corpus inverse/symmetric stay single-premise (graph
+    * carried), and each transitive property's bridge set composes
+    * WITHIN a graph — the bridge joins and the bridge-set squaring all
+    * key on the graph column, so new chains never cross graphs and the
+    * per-graph existing path set is only ever scanned against broadcast
+    * probes.
+    *
     * Returns the increment (deduped); fold it into the closure with
     * [[composeIncrement]]. Identity:
     * `owlClosure(base ∪ Δ) == composeIncrement(owlClosure(base), owlDelta(owlClosure(base), Δ, decls))`.
     */
   def owlDelta(closure: DataFrame, delta: DataFrame, tboxSource: DataFrame,
-               typePred: String = "a", tboxCap: Int = 1 << 20,
+               corpus: Corpus[OwlIds] = Corpus.Triples,
+               tboxCap: Int = 1 << 20,
                deltaCap: Option[Long] = None): DataFrame =
-    owlDeltaCore(closure, delta, tboxSource, InverseOf, SymmetricProperty,
-      TransitiveProperty, typePred, tboxCap, deltaCap, hasGraph = false,
-      StringChainVoc)
-
-  /** [[owlDelta]] over ENCODED (long-id) relations. */
-  def owlDeltaEncoded(closure: DataFrame, delta: DataFrame,
-                      tboxSource: DataFrame, ids: OwlIds,
-                      tboxCap: Int = 1 << 20,
-                      deltaCap: Option[Long] = None): DataFrame =
-    owlDeltaCore(closure, delta, tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      deltaCap, hasGraph = false, encChainVoc(ids))
-
-  /** [[owlDelta]] over a NAMED-GRAPH quad dataset — O(|Δ|) maintenance
-    * of a PER-GRAPH closure ([[owlClosureQuads]]): inverse/symmetric
-    * stay single-premise (graph carried), and each transitive
-    * property's bridge set composes WITHIN a graph — the bridge joins
-    * and the bridge-set squaring all key on the graph column, so new
-    * chains never cross graphs and the per-graph existing path set is
-    * only ever scanned against broadcast probes.
-    */
-  def owlDeltaQuads(closure: DataFrame, delta: DataFrame,
-                    tboxSource: DataFrame, typePred: String = "a",
-                    tboxCap: Int = 1 << 20,
-                    deltaCap: Option[Long] = None): DataFrame =
-    owlDeltaCore(closure, delta, tboxSource, InverseOf, SymmetricProperty,
-      TransitiveProperty, typePred, tboxCap, deltaCap, hasGraph = true,
-      StringChainVoc)
-
-  /** [[owlDeltaQuads]] over ENCODED (long-id) quad relations. */
-  def owlDeltaQuadsEncoded(closure: DataFrame, delta: DataFrame,
-                           tboxSource: DataFrame, ids: OwlIds,
-                           tboxCap: Int = 1 << 20,
-                           deltaCap: Option[Long] = None): DataFrame =
-    owlDeltaCore(closure, delta, tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      deltaCap, hasGraph = true, encChainVoc(ids))
+    owlDeltaCore(closure, delta, tboxSource, owlVoc(corpus), tboxCap,
+      deltaCap, corpus.quads, corpus.remat("owlClosure"))
 
   /** The declaration filter the property-family maintenance guards
     * share: inverse/symmetric/transitive declarations and chain-axiom
@@ -1735,10 +1449,10 @@ object ReasonOps {
     * existing axiom's body across the batch boundary — without any
     * declared chain there is no body to extend, and list cells are
     * ordinary ABox data). */
-  private def owlDeltaDeclCond(inverseOf: Any, symmetricProperty: Any,
-                               transitiveProperty: Any, typePred: Any,
-                               chainVoc: ChainVoc, chainsDeclared: Boolean)
+  private def owlDeltaDeclCond(voc: OwlVoc, chainsDeclared: Boolean)
       : org.apache.spark.sql.Column = {
+    val OwlVoc(inverseOf, symmetricProperty, transitiveProperty, typePred,
+      chainVoc) = voc
     val axiomPreds = chainVoc.pca.toSeq
     val listPreds = (chainVoc.first ++ chainVoc.rest).toSeq
     val axiomCond = if (axiomPreds.isEmpty) lit(false)
@@ -1752,19 +1466,16 @@ object ReasonOps {
   }
 
   private def owlDeltaCore(closure: DataFrame, delta: DataFrame,
-                           tboxSource: DataFrame, inverseOf: Any,
-                           symmetricProperty: Any, transitiveProperty: Any,
-                           typePred: Any, tboxCap: Int, deltaCap: Option[Long],
-                           hasGraph: Boolean, chainVoc: ChainVoc,
+                           tboxSource: DataFrame, voc: OwlVoc, tboxCap: Int,
+                           deltaCap: Option[Long], hasGraph: Boolean,
+                           remat: String,
                            maxRounds: Int = 16): DataFrame = {
     val width = if (hasGraph) 4 else 3
     val names = Seq("s", "p", "o", "g").take(width)
     def norm(df: DataFrame): DataFrame =
       df.select(df.columns.take(width).toSeq.zip(names)
         .map { case (c, n) => col(c).as(n) }: _*)
-    val remat = if (hasGraph) "owlClosureQuads" else "owlClosure"
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, inverseOf,
-      symmetricProperty, transitiveProperty, typePred, tboxCap, chainVoc)
+    val (inv, sym, trans, chains) = owlDecls(tboxSource, voc, tboxCap)
     // schema guard: chain-axiom rows always reject; rdf:first/rdf:rest
     // CELLS reject only when the TBox actually carries chain axioms (a
     // list cell could then extend an existing axiom's body) — ordinary
@@ -1772,8 +1483,7 @@ object ReasonOps {
     // The guard rides the pin's materializing job (pinCappedGuard).
     val (d0, _) = pinCappedGuard(norm(delta), deltaCap,
       "owlDelta increment", remat,
-      owlDeltaDeclCond(inverseOf, symmetricProperty,
-        transitiveProperty, typePred, chainVoc, chains.nonEmpty),
+      owlDeltaDeclCond(voc, chains.nonEmpty),
       "delta contains OWL property declarations (or, under declared " +
         "owl:propertyChainAxiom schemas, rdf:first/rdf:rest list cells " +
         "that could extend an axiom body) - schema changes require " +
@@ -1980,52 +1690,22 @@ object ReasonOps {
     * [[lastRetractRematerialized]] reports which path ran and
     * [[lastRetractStrata]] how many chain strata the Δ path walked.
     *
+    * On a quad corpus the over-delete path joins, the survivor
+    * frontier, and every removal probe key on the graph column
+    * (null-safe for the default graph), so a deletion in one graph never
+    * disturbs another's chains.
+    *
     * Returns the maintained closure, set-equal to
     * `owlClosure(base − deletions)`.
     */
   def owlRetract(closure: DataFrame, base: DataFrame, deletions: DataFrame,
-                 tboxSource: DataFrame, typePred: String = "a",
+                 tboxSource: DataFrame,
+                 corpus: Corpus[OwlIds] = Corpus.Triples,
                  tboxCap: Int = 1 << 20, maxRounds: Int = 16,
                  deltaCap: Option[Long] = None): DataFrame =
-    owlRetractCore(closure, base, deletions, tboxSource, InverseOf,
-      SymmetricProperty, TransitiveProperty, typePred, tboxCap, maxRounds,
-      deltaCap, hasGraph = false, StringChainVoc)
-
-  /** [[owlRetract]] over ENCODED (long-id) relations. */
-  def owlRetractEncoded(closure: DataFrame, base: DataFrame,
-                        deletions: DataFrame, tboxSource: DataFrame,
-                        ids: OwlIds, tboxCap: Int = 1 << 20,
-                        maxRounds: Int = 16,
-                        deltaCap: Option[Long] = None): DataFrame =
-    owlRetractCore(closure, base, deletions, tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      maxRounds, deltaCap, hasGraph = false, encChainVoc(ids))
-
-  /** [[owlRetract]] over a NAMED-GRAPH quad dataset — DRed maintenance
-    * of a PER-GRAPH closure ([[owlClosureQuads]]) through quad DELETEs:
-    * the over-delete path joins, the survivor frontier, and every
-    * removal probe key on the graph column (null-safe for the default
-    * graph), so a deletion in one graph never disturbs another's
-    * chains. Same declarations contract as [[owlDeltaQuads]].
-    */
-  def owlRetractQuads(closure: DataFrame, base: DataFrame,
-                      deletions: DataFrame, tboxSource: DataFrame,
-                      typePred: String = "a", tboxCap: Int = 1 << 20,
-                      maxRounds: Int = 16,
-                      deltaCap: Option[Long] = None): DataFrame =
-    owlRetractCore(closure, base, deletions, tboxSource, InverseOf,
-      SymmetricProperty, TransitiveProperty, typePred, tboxCap, maxRounds,
-      deltaCap, hasGraph = true, StringChainVoc)
-
-  /** [[owlRetractQuads]] over ENCODED (long-id) quad relations. */
-  def owlRetractQuadsEncoded(closure: DataFrame, base: DataFrame,
-                             deletions: DataFrame, tboxSource: DataFrame,
-                             ids: OwlIds, tboxCap: Int = 1 << 20,
-                             maxRounds: Int = 16,
-                             deltaCap: Option[Long] = None): DataFrame =
-    owlRetractCore(closure, base, deletions, tboxSource, ids.inverseOf,
-      ids.symmetricProperty, ids.transitiveProperty, ids.typePred, tboxCap,
-      maxRounds, deltaCap, hasGraph = true, encChainVoc(ids))
+    owlRetractCore(closure, base, deletions, tboxSource, owlVoc(corpus),
+      tboxCap, maxRounds, deltaCap, corpus.quads,
+      corpus.remat("owlClosure"))
 
   /** Whether the most recent [[owlRetract]] (any variant) took the
     * documented re-materialization fallback (chain axioms declared, or
@@ -2051,16 +1731,13 @@ object ReasonOps {
 
   private def owlRetractCore(closure: DataFrame, base: DataFrame,
                              deletions: DataFrame, tboxSource: DataFrame,
-                             inverseOf: Any, symmetricProperty: Any,
-                             transitiveProperty: Any, typePred: Any,
-                             tboxCap: Int, maxRounds: Int, deltaCap: Option[Long],
-                             hasGraph: Boolean, chainVoc: ChainVoc)
-      : DataFrame = {
+                             voc: OwlVoc, tboxCap: Int, maxRounds: Int,
+                             deltaCap: Option[Long], hasGraph: Boolean,
+                             remat: String): DataFrame = {
     val width = if (hasGraph) 4 else 3
     val names = Seq("s", "p", "o", "g").take(width)
     val abNames = Seq("a", "b") ++ (if (hasGraph) Seq("g") else Nil)
     val gsel = if (hasGraph) Seq(col("g")) else Nil
-    val remat = if (hasGraph) "owlClosureQuads" else "owlClosure"
     def norm(df: DataFrame): DataFrame =
       df.select(df.columns.take(width).toSeq.zip(names)
         .map { case (c, n) => col(c).as(n) }: _*)
@@ -2073,14 +1750,11 @@ object ReasonOps {
           col("o") === col("__x_o")) ++ gEq("__x_")).reduce(_ && _),
         "left_anti")
     }
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, inverseOf,
-      symmetricProperty, transitiveProperty, typePred, tboxCap, chainVoc)
+    val (inv, sym, trans, chains) = owlDecls(tboxSource, voc, tboxCap)
     // same conditional list-cell scope as owlDeltaCore's guard, riding
     // the pin's materializing job (pinCappedGuard)
     val (del, _) = pinCappedGuard(norm(deletions), deltaCap,
-      "retraction set", remat,
-      owlDeltaDeclCond(inverseOf, symmetricProperty,
-        transitiveProperty, typePred, chainVoc, chains.nonEmpty),
+      "retraction set", remat, owlDeltaDeclCond(voc, chains.nonEmpty),
       "deletions contain OWL property declarations (or, under declared " +
         "owl:propertyChainAxiom schemas, rdf:first/rdf:rest list cells) " +
         s"- schema changes require re-materialization ($remat), not " +
@@ -2654,84 +2328,49 @@ object ReasonOps {
     * retract by re-running this closure over the remaining base.
     * Emission uses `typePred` as passed; corpora rendered with full
     * `rdf:type` IRIs should pass the IRI.
+    *
+    * On a quad corpus the restriction declarations are GLOBAL
+    * (`tboxSource`) and rules fire per graph — every restriction join
+    * keys on the graph column, so a premise in one graph never types a
+    * subject in another.
     */
-  def owlRlClosure(triples: DataFrame, typePred: String = "a",
+  def owlRlClosure(data: DataFrame, corpus: Corpus[RlIds] = Corpus.Triples,
+                   tboxSource: Option[DataFrame] = None,
                    tboxCap: Int = 1 << 20, maxRounds: Int = 16)
       : DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val voc = stringRlVoc(typePred)
-    val schema = collectRlSchema(t, voc, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    owlRlCore(t, voc, schema,
-      df => rdfsClosure(df, typePred, tboxCap),
-      df => rdfsDerive(tbox, df, vocE, includeTboxClosure = false),
-      hasGraph = false, maxRounds)
+    val rl = rlSetup(data, corpus, tboxSource, tboxCap)
+    owlRlCore(rl.rel, rl.voc, rl.schema,
+      df => rdfsClosure(df, rl.rdfs, tboxSource, tboxCap),
+      rl.expand, corpus.quads, maxRounds)
   }
 
-  /** [[owlRlClosure]] over an ENCODED (long-id) triple relation. */
-  def owlRlClosureEncoded(encTriples: DataFrame, ids: RlIds,
-                          tboxCap: Int = 1 << 20, maxRounds: Int = 16)
-      : DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t = encTriples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val voc = encRlVoc(ids)
-    val schema = collectRlSchema(t, voc, tboxCap)
-    val voc0 = encVoc(ids.rdfs)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    owlRlCore(t, voc, schema,
-      df => rdfsClosureEncoded(df, ids.rdfs, tboxCap),
-      df => rdfsDerive(tbox, df, voc0, includeTboxClosure = false),
-      hasGraph = false, maxRounds)
+  /** What every class-family entry collects first, in this order: the
+    * restriction schema (from `tboxSource`, else the data), then the
+    * RDFS TBox and its emission vocabulary. `rdfs` is the corpus over
+    * the RDFS ids; `expand` is the one-pass rho-df expansion of
+    * derived rows. */
+  private final case class RlSetup(rel: DataFrame, voc: RlVoc,
+                                   schema: RlSchema, rdfs: Corpus[RdfsIds],
+                                   tbox: Array[(Any, Any, Any)],
+                                   rdfsVoc: Voc) {
+    def expand(df: DataFrame): Seq[DataFrame] =
+      rdfsDerive(tbox, df, rdfsVoc, includeTboxClosure = false, rdfs.quads)
   }
 
-  /** [[owlRlClosure]] over a NAMED-GRAPH quad dataset: global
-    * restriction declarations (`tboxSource`), per-graph rule firing —
-    * every restriction join keys on the graph column, so a premise in
-    * one graph never types a subject in another. */
-  def owlRlClosureQuads(quads: DataFrame, tboxSource: DataFrame,
-                        typePred: String = "a", tboxCap: Int = 1 << 20,
-                        maxRounds: Int = 16): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val voc = stringRlVoc(typePred)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    owlRlCore(q, voc, schema,
-      df => rdfsClosureQuads(df, tboxSource, typePred, tboxCap),
-      df => rdfsDeriveQuads(tbox, df, vocE, includeTboxClosure = false),
-      hasGraph = true, maxRounds)
+  private def rlSetup(data: DataFrame, corpus: Corpus[RlIds],
+                      tboxSource: Option[DataFrame], tboxCap: Int): RlSetup = {
+    val rel = normRel(data, corpus.quads)
+    val voc = rlVoc(corpus)
+    val schema = collectRlSchema(tboxSource.getOrElse(rel), voc, tboxCap)
+    val rdfs = corpus.map(_.rdfs)
+    val voc0 = rdfsVoc(rdfs)
+    val tbox = collectTbox(schemaRel(rel, tboxSource), voc0.tboxPreds,
+      tboxCap)
+    RlSetup(rel, voc, schema, rdfs, tbox, resolveEmit(voc0, tbox))
   }
 
-  /** [[owlRlClosureQuads]] over ENCODED (long-id) quad relations. */
-  def owlRlClosureQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                               ids: RlIds, tboxCap: Int = 1 << 20,
-                               maxRounds: Int = 16): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val voc = encRlVoc(ids)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    val voc0 = encVoc(ids.rdfs)
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    owlRlCore(q, voc, schema,
-      df => rdfsClosureQuadsEncoded(df, tboxSource, ids.rdfs, tboxCap),
-      df => rdfsDeriveQuads(tbox, df, voc0, includeTboxClosure = false),
-      hasGraph = true, maxRounds)
-  }
+  private def rlVoc(corpus: Corpus[RlIds]): RlVoc =
+    corpus.vocab(stringRlVoc, encRlVoc)
 
   /** One rule of the RL class family abstracted for driver-side
     * dependency analysis: reach-expanded conclusion classes/properties
@@ -2988,66 +2627,17 @@ object ReasonOps {
     * ~729 base scans, 40 s lazy vs ~3 s materialized at sf0.1).
     * Fallbacks report via [[lastRlEntailedPasses]] == -1.
     */
-  def owlRlEntailed(triples: DataFrame, typePred: String = "a",
+  def owlRlEntailed(data: DataFrame, corpus: Corpus[RlIds] = Corpus.Triples,
+                    tboxSource: Option[DataFrame] = None,
                     tboxCap: Int = 1 << 20,
                     patternConsts: Seq[Any] = Nil,
                     maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val voc = stringRlVoc(typePred)
-    val schema = collectRlSchema(t, voc, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    owlRlEntailedCore(t, voc, schema, rdfsMaps(tbox, vocE),
-      rdfsEntailed(t, typePred, tboxCap),
-      df => rdfsDerive(tbox, df, vocE, includeTboxClosure = false),
-      df => rdfsClosure(df, typePred, tboxCap),
-      hasGraph = false, patternConsts, maxPasses)
-  }
-
-  /** [[owlRlEntailed]] over an ENCODED (long-id) triple relation. */
-  def owlRlEntailedEncoded(encTriples: DataFrame, ids: RlIds,
-                           tboxCap: Int = 1 << 20,
-                           patternConsts: Seq[Any] = Nil,
-                           maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t = encTriples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val voc = encRlVoc(ids)
-    val schema = collectRlSchema(t, voc, tboxCap)
-    val voc0 = encVoc(ids.rdfs)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    owlRlEntailedCore(t, voc, schema, rdfsMaps(tbox, voc0),
-      rdfsEntailedEncoded(t, ids.rdfs, tboxCap),
-      df => rdfsDerive(tbox, df, voc0, includeTboxClosure = false),
-      df => rdfsClosureEncoded(df, ids.rdfs, tboxCap),
-      hasGraph = false, patternConsts, maxPasses)
-  }
-
-  /** [[owlRlEntailed]] over a NAMED-GRAPH quad dataset (lazy per-graph
-    * restriction entailment; global declarations from `tboxSource`). */
-  def owlRlEntailedQuads(quads: DataFrame, tboxSource: DataFrame,
-                         typePred: String = "a", tboxCap: Int = 1 << 20,
-                         patternConsts: Seq[Any] = Nil,
-                         maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val voc = stringRlVoc(typePred)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"), col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    owlRlEntailedCore(q, voc, schema, rdfsMaps(tbox, vocE),
-      rdfsEntailedQuads(q, tboxSource, typePred, tboxCap),
-      df => rdfsDeriveQuads(tbox, df, vocE, includeTboxClosure = false),
-      df => rdfsClosureQuads(df, tboxSource, typePred, tboxCap),
-      hasGraph = true, patternConsts, maxPasses)
+    val rl = rlSetup(data, corpus, tboxSource, tboxCap)
+    owlRlEntailedCore(rl.rel, rl.voc, rl.schema, rdfsMaps(rl.tbox, rl.rdfsVoc),
+      rdfsEntailed(rl.rel, rl.rdfs, tboxSource, tboxCap),
+      rl.expand,
+      df => rdfsClosure(df, rl.rdfs, tboxSource, tboxCap),
+      corpus.quads, patternConsts, maxPasses)
   }
 
   /** Kept-rule count and pass plan of the most recent
@@ -3136,83 +2726,21 @@ object ReasonOps {
     * to the counted [[owlFullClosure]] ([[lastFullEntailedPasses]] ==
     * -1), exact everywhere. Unmentioned constants are under-derived,
     * the same documented price as both parents. */
-  def owlFullEntailed(triples: DataFrame, typePred: String = "a",
+  def owlFullEntailed(data: DataFrame,
+                      corpus: Corpus[(OwlIds, RlIds)] = Corpus.Triples,
+                      tboxSource: Option[DataFrame] = None,
                       tboxCap: Int = 1 << 20,
                       patternPreds: Seq[Any] = Nil,
                       patternConsts: Seq[Any] = Nil,
                       maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val rlv = stringRlVoc(typePred)
-    val schema = collectRlSchema(t, rlv, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    val (inv, sym, trans, chains) = owlDecls(t, InverseOf,
-      SymmetricProperty, TransitiveProperty, typePred, tboxCap,
-      StringChainVoc)
-    owlFullEntailedCore(rlv, schema, rdfsMaps(tbox, vocE), inv, sym,
-      trans, chains,
-      df => rdfsEntailed(df, typePred, tboxCap),
-      df => rdfsDerive(tbox, df, vocE, includeTboxClosure = false),
-      t, hasGraph = false, patternPreds, patternConsts, maxPasses,
-      () => owlFullClosure(t, typePred, tboxCap))
-  }
-
-  /** [[owlFullEntailed]] over ENCODED (long-id) relations. */
-  def owlFullEntailedEncoded(encTriples: DataFrame, owlIds: OwlIds,
-                             rlIds: RlIds, tboxCap: Int = 1 << 20,
-                             patternPreds: Seq[Any] = Nil,
-                             patternConsts: Seq[Any] = Nil,
-                             maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t = encTriples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    val rlv = encRlVoc(rlIds)
-    val schema = collectRlSchema(t, rlv, tboxCap)
-    val voc0 = encVoc(rlIds.rdfs)
-    val tbox = collectTbox(t, voc0.tboxPreds, tboxCap)
-    val (inv, sym, trans, chains) = owlDecls(t, owlIds.inverseOf,
-      owlIds.symmetricProperty, owlIds.transitiveProperty,
-      owlIds.typePred, tboxCap, encChainVoc(owlIds))
-    owlFullEntailedCore(rlv, schema, rdfsMaps(tbox, voc0), inv, sym,
-      trans, chains,
-      df => rdfsEntailedEncoded(df, rlIds.rdfs, tboxCap),
-      df => rdfsDerive(tbox, df, voc0, includeTboxClosure = false),
-      t, hasGraph = false, patternPreds, patternConsts, maxPasses,
-      () => owlFullClosureEncoded(t, owlIds, rlIds, tboxCap))
-  }
-
-  /** [[owlFullEntailed]] over a NAMED-GRAPH quad dataset (lazy
-    * per-graph joint entailment; global declarations from
-    * `tboxSource`). */
-  def owlFullEntailedQuads(quads: DataFrame, tboxSource: DataFrame,
-                           typePred: String = "a", tboxCap: Int = 1 << 20,
-                           patternPreds: Seq[Any] = Nil,
-                           patternConsts: Seq[Any] = Nil,
-                           maxPasses: Int = 12): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val rlv = stringRlVoc(typePred)
-    val schema = collectRlSchema(tboxSource, rlv, tboxCap)
-    val voc0 = stringVoc(typePred)
-    val Seq(ts, tp, to) = tboxSource.columns.take(3).toSeq
-    val tbox = collectTbox(
-      tboxSource.select(col(ts).as("s"), col(tp).as("p"),
-        col(to).as("o")),
-      voc0.tboxPreds, tboxCap)
-    val vocE = resolveEmit(voc0, tbox)
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, InverseOf,
-      SymmetricProperty, TransitiveProperty, typePred, tboxCap,
-      StringChainVoc)
-    owlFullEntailedCore(rlv, schema, rdfsMaps(tbox, vocE), inv, sym,
-      trans, chains,
-      df => rdfsEntailedQuads(df, tboxSource, typePred, tboxCap),
-      df => rdfsDeriveQuads(tbox, df, vocE, includeTboxClosure = false),
-      q, hasGraph = true, patternPreds, patternConsts, maxPasses,
-      () => owlFullClosureQuads(q, tboxSource, typePred, tboxCap))
+    val rl = rlSetup(data, corpus.map(_._2), tboxSource, tboxCap)
+    val (inv, sym, trans, chains) = owlDecls(tboxSource.getOrElse(rl.rel),
+      owlVoc(corpus.map(_._1)), tboxCap)
+    owlFullEntailedCore(rl.voc, rl.schema, rdfsMaps(rl.tbox, rl.rdfsVoc),
+      inv, sym, trans, chains,
+      df => rdfsEntailed(df, rl.rdfs, tboxSource, tboxCap),
+      rl.expand, rl.rel, corpus.quads, patternPreds, patternConsts,
+      maxPasses, () => owlFullClosure(rl.rel, corpus, tboxSource, tboxCap))
   }
 
   /** One seminaive restriction pass for the delta path: per
@@ -3317,13 +2845,12 @@ object ReasonOps {
                              voc: RlVoc, schema: RlSchema,
                              rdfsDeltaFn: DataFrame => DataFrame,
                              hasGraph: Boolean, deltaCap: Option[Long],
-                             maxRounds: Int): DataFrame = {
+                             maxRounds: Int, remat: String): DataFrame = {
     val width = if (hasGraph) 4 else 3
     val names = Seq("s", "p", "o", "g").take(width)
     def norm(df: DataFrame): DataFrame =
       df.select(df.columns.take(width).toSeq.zip(names)
         .map { case (c, n) => col(c).as(n) }: _*)
-    val remat = if (hasGraph) "owlRlClosureQuads" else "owlRlClosure"
     val d0 = pinCapped(norm(delta), deltaCap, "owlRlDelta increment", remat)
     // restriction/intersection/union axiom rows always reject; the
     // rdf:first/rdf:rest list-cell predicates reject only when the TBox
@@ -3390,57 +2917,15 @@ object ReasonOps {
     * `owlRlClosure(base ∪ Δ) == composeIncrement(owlRlClosure(base), owlRlDelta(closure, Δ, tbox))`.
     */
   def owlRlDelta(closure: DataFrame, delta: DataFrame,
-                 tboxSource: DataFrame, typePred: String = "a",
+                 tboxSource: DataFrame,
+                 corpus: Corpus[RlIds] = Corpus.Triples,
                  tboxCap: Int = 1 << 20, deltaCap: Option[Long] = None,
                  maxRounds: Int = 16): DataFrame = {
-    val voc = stringRlVoc(typePred)
+    val voc = rlVoc(corpus)
     val schema = collectRlSchema(tboxSource, voc, tboxCap)
     owlRlDeltaCore(closure, delta, voc, schema,
-      d => rdfsDelta(tboxSource, d, typePred, tboxCap,
-        deltaCap = deltaCap),
-      hasGraph = false, deltaCap, maxRounds)
-  }
-
-  /** [[owlRlDelta]] over ENCODED (long-id) relations. */
-  def owlRlDeltaEncoded(closure: DataFrame, delta: DataFrame,
-                        tboxSource: DataFrame, ids: RlIds,
-                        tboxCap: Int = 1 << 20,
-                        deltaCap: Option[Long] = None,
-                        maxRounds: Int = 16): DataFrame = {
-    val voc = encRlVoc(ids)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    owlRlDeltaCore(closure, delta, voc, schema,
-      d => rdfsDeltaEncoded(tboxSource, d, ids.rdfs, tboxCap, deltaCap),
-      hasGraph = false, deltaCap, maxRounds)
-  }
-
-  /** [[owlRlDelta]] over a NAMED-GRAPH quad dataset — per-graph O(Δ)
-    * maintenance of [[owlRlClosureQuads]]: every seminaive restriction
-    * variant keys on the graph column. */
-  def owlRlDeltaQuads(closure: DataFrame, delta: DataFrame,
-                      tboxSource: DataFrame, typePred: String = "a",
-                      tboxCap: Int = 1 << 20,
-                      deltaCap: Option[Long] = None,
-                      maxRounds: Int = 16): DataFrame = {
-    val voc = stringRlVoc(typePred)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    owlRlDeltaCore(closure, delta, voc, schema,
-      d => rdfsDeltaQuads(tboxSource, d, typePred, tboxCap, deltaCap),
-      hasGraph = true, deltaCap, maxRounds)
-  }
-
-  /** [[owlRlDeltaQuads]] over ENCODED (long-id) quad relations. */
-  def owlRlDeltaQuadsEncoded(closure: DataFrame, delta: DataFrame,
-                             tboxSource: DataFrame, ids: RlIds,
-                             tboxCap: Int = 1 << 20,
-                             deltaCap: Option[Long] = None,
-                             maxRounds: Int = 16): DataFrame = {
-    val voc = encRlVoc(ids)
-    val schema = collectRlSchema(tboxSource, voc, tboxCap)
-    owlRlDeltaCore(closure, delta, voc, schema,
-      d => rdfsDeltaQuadsEncoded(tboxSource, d, ids.rdfs, tboxCap,
-        deltaCap),
-      hasGraph = true, deltaCap, maxRounds)
+      d => rdfsDelta(tboxSource, d, corpus.map(_.rdfs), tboxCap, deltaCap),
+      corpus.quads, deltaCap, maxRounds, corpus.remat("owlRlClosure"))
   }
 
   // ------------------------------------------------------------------
@@ -3657,45 +3142,24 @@ object ReasonOps {
     *     twice — the n-ary post-merge contradiction.
     *
     * Returns columns `(kind, s, p, o)` (`g` carried on the quad path —
-    * checks run per graph). Run it on the CLOSURE to validate
+    * every check keys on the graph column, so a violation needs both
+    * premises in ONE graph; declarations come from the global
+    * `tboxSource`, else from the data). Run it on the CLOSURE to validate
     * entailed facts too — on the base to validate only assertions.
     * Declarations driver-collect capped; an empty result is the
     * consistency proof.
     */
-  def consistencyReport(triples: DataFrame, typePred: String = "a",
-                        tboxCap: Int = 1 << 20): DataFrame =
-    consistencyCore(triples, stringCheckVoc(typePred), hasGraph = false,
-      tboxCap)
-
-  /** [[consistencyReport]] over an ENCODED (long-id) relation. */
-  def consistencyReportEncoded(encTriples: DataFrame, ids: CheckIds,
-                               tboxCap: Int = 1 << 20): DataFrame =
-    consistencyCore(encTriples, encCheckVoc(ids), hasGraph = false,
-      tboxCap)
-
-  /** [[consistencyReport]] over a NAMED-GRAPH quad dataset — every
-    * check keys on the graph column (a violation needs both premises
-    * in ONE graph); declarations come from the global `tboxSource`. */
-  def consistencyReportQuads(quads: DataFrame, tboxSource: DataFrame,
-                             typePred: String = "a",
-                             tboxCap: Int = 1 << 20): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyCoreDecls(q, tboxSource, stringCheckVoc(typePred),
-      hasGraph = true, tboxCap)
+  def consistencyReport(data: DataFrame,
+                        corpus: Corpus[CheckIds] = Corpus.Triples,
+                        tboxSource: Option[DataFrame] = None,
+                        tboxCap: Int = 1 << 20): DataFrame = {
+    val rel = normRel(data, corpus.quads)
+    consistencyCoreDecls(rel, tboxSource.getOrElse(rel), checkVoc(corpus),
+      corpus.quads, tboxCap)
   }
 
-  /** [[consistencyReportQuads]] over ENCODED (long-id) quads. */
-  def consistencyReportQuadsEncoded(quads: DataFrame,
-                                    tboxSource: DataFrame, ids: CheckIds,
-                                    tboxCap: Int = 1 << 20): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyCoreDecls(q, tboxSource, encCheckVoc(ids),
-      hasGraph = true, tboxCap)
-  }
+  private def checkVoc(corpus: Corpus[CheckIds]): CheckVoc =
+    corpus.vocab(stringCheckVoc, encCheckVoc)
 
   /** The collected `owl:NegativePropertyAssertion` nodes as (source,
     * property, target) triples (targetIndividual OR targetValue) —
@@ -3770,20 +3234,20 @@ object ReasonOps {
     * property slice to members (and, qualified, the values to the
     * class), then the group-min star — never all-pairs within a
     * group. Returns (a, b) pairs with a = the group min; feed them to
-    * [[identityMapping]] / [[sameAsCanonicalize]].
+    * [[identityMapping]] / [[sameAsCanonicalize]]. On encoded terms
+    * the bounds resolve through `literalZero`/`literalOne` in
+    * [[CheckIds]].
     */
-  def cardinalityIdentityPairs(triples: DataFrame, typePred: String = "a",
-                               tboxCap: Int = 1 << 20): DataFrame =
-    cardinalityIdentityPairsCore(triples, stringCheckVoc(typePred),
-      tboxCap)
+  def cardinalityIdentityPairs(data: DataFrame,
+                               corpus: Corpus[CheckIds] = Corpus.Triples,
+                               tboxCap: Int = 1 << 20): DataFrame = {
+    requireTriples(corpus, "cardinalityIdentityPairs")
+    cardinalityIdentityPairsCore(data, checkVoc(corpus), tboxCap)
+  }
 
-  /** [[cardinalityIdentityPairs]] over an ENCODED (long-id) relation
-    * (bounds resolve through `literalZero`/`literalOne` in
-    * [[CheckIds]]). */
-  def cardinalityIdentityPairsEncoded(encTriples: DataFrame,
-                                      ids: CheckIds,
-                                      tboxCap: Int = 1 << 20): DataFrame =
-    cardinalityIdentityPairsCore(encTriples, encCheckVoc(ids), tboxCap)
+  /** Identity pairs and entity resolution are defined over triples. */
+  private def requireTriples(corpus: Corpus[Any], op: String): Unit =
+    require(!corpus.quads, s"$op takes a triple corpus")
 
   private def cardinalityIdentityPairsCore(triples: DataFrame,
                                            voc: CheckVoc, tboxCap: Int)
@@ -3863,52 +3327,14 @@ object ReasonOps {
     * validates clean). On a violation-free corpus,
     * `consistencyDelta(corpus, Δ) == consistencyReport(corpus ∪ Δ)`.
     */
-  def consistencyDelta(corpus: DataFrame, delta: DataFrame,
-                       typePred: String = "a", tboxCap: Int = 1 << 20,
+  def consistencyDelta(data: DataFrame, delta: DataFrame,
+                       corpus: Corpus[CheckIds] = Corpus.Triples,
+                       tboxSource: Option[DataFrame] = None,
+                       tboxCap: Int = 1 << 20,
                        deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co) = corpus.columns.take(3).toSeq
-    val c = corpus.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    consistencyDeltaCore(c, delta, c, stringCheckVoc(typePred),
-      hasGraph = false, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyDelta]] over ENCODED (long-id) relations. */
-  def consistencyDeltaEncoded(corpus: DataFrame, delta: DataFrame,
-                              ids: CheckIds, tboxCap: Int = 1 << 20,
-                              deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co) = corpus.columns.take(3).toSeq
-    val c = corpus.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    consistencyDeltaCore(c, delta, c, encCheckVoc(ids),
-      hasGraph = false, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyDelta]] over a NAMED-GRAPH quad dataset — per-graph
-    * batch validation (a violation needs both premises in ONE graph);
-    * declarations from the global `tboxSource`. */
-  def consistencyDeltaQuads(quads: DataFrame, delta: DataFrame,
-                            tboxSource: DataFrame, typePred: String = "a",
-                            tboxCap: Int = 1 << 20,
-                            deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyDeltaCore(q, delta, tboxSource, stringCheckVoc(typePred),
-      hasGraph = true, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyDeltaQuads]] over ENCODED (long-id) quads. */
-  def consistencyDeltaQuadsEncoded(quads: DataFrame, delta: DataFrame,
-                                   tboxSource: DataFrame, ids: CheckIds,
-                                   tboxCap: Int = 1 << 20,
-                                   deltaCap: Option[Long] = None)
-      : DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyDeltaCore(q, delta, tboxSource, encCheckVoc(ids),
-      hasGraph = true, tboxCap, deltaCap)
+    val rel = normRel(data, corpus.quads)
+    consistencyDeltaCore(rel, delta, tboxSource.getOrElse(rel),
+      checkVoc(corpus), corpus.quads, tboxCap, deltaCap)
   }
 
   private def consistencyDeltaCore(corpus: DataFrame, delta: DataFrame,
@@ -4197,55 +3623,15 @@ object ReasonOps {
     * `consistencyRetract(c, consistencyReport(c), Δ⁻) ==
     *  consistencyReport(c ∖ Δ⁻)`.
     */
-  def consistencyRetract(corpus: DataFrame, report: DataFrame,
-                         deletions: DataFrame, typePred: String = "a",
+  def consistencyRetract(data: DataFrame, report: DataFrame,
+                         deletions: DataFrame,
+                         corpus: Corpus[CheckIds] = Corpus.Triples,
+                         tboxSource: Option[DataFrame] = None,
                          tboxCap: Int = 1 << 20,
                          deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co) = corpus.columns.take(3).toSeq
-    val c = corpus.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    consistencyRetractCore(c, report, deletions, c,
-      stringCheckVoc(typePred), hasGraph = false, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyRetract]] over ENCODED (long-id) relations. */
-  def consistencyRetractEncoded(corpus: DataFrame, report: DataFrame,
-                                deletions: DataFrame, ids: CheckIds,
-                                tboxCap: Int = 1 << 20,
-                                deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co) = corpus.columns.take(3).toSeq
-    val c = corpus.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    consistencyRetractCore(c, report, deletions, c, encCheckVoc(ids),
-      hasGraph = false, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyRetract]] over a NAMED-GRAPH quad dataset — per-graph
-    * maintenance; declarations from the global `tboxSource`. */
-  def consistencyRetractQuads(quads: DataFrame, report: DataFrame,
-                              deletions: DataFrame, tboxSource: DataFrame,
-                              typePred: String = "a",
-                              tboxCap: Int = 1 << 20,
-                              deltaCap: Option[Long] = None): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyRetractCore(q, report, deletions, tboxSource,
-      stringCheckVoc(typePred), hasGraph = true, tboxCap, deltaCap)
-  }
-
-  /** [[consistencyRetractQuads]] over ENCODED (long-id) quads. */
-  def consistencyRetractQuadsEncoded(quads: DataFrame, report: DataFrame,
-                                     deletions: DataFrame,
-                                     tboxSource: DataFrame, ids: CheckIds,
-                                     tboxCap: Int = 1 << 20,
-                                     deltaCap: Option[Long] = None)
-      : DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    consistencyRetractCore(q, report, deletions, tboxSource,
-      encCheckVoc(ids), hasGraph = true, tboxCap, deltaCap)
+    val rel = normRel(data, corpus.quads)
+    consistencyRetractCore(rel, report, deletions, tboxSource.getOrElse(rel),
+      checkVoc(corpus), corpus.quads, tboxCap, deltaCap)
   }
 
   private def normTriples(df: DataFrame): DataFrame = {
@@ -4257,12 +3643,15 @@ object ReasonOps {
     df.select(col(a).as("s"), col(b).as("p"), col(c).as("o"),
       col(g).as("g"))
   }
+  /** `corpus` minus the `dels` rows (broadcast anti-join); the graph
+    * key is null-safe, so default-graph quads (g = null) match. */
   private def antiRows(corpus: DataFrame, dels: DataFrame,
                        width: Int): DataFrame = {
     val names = Seq("s", "p", "o", "g").take(width)
     corpus.join(broadcast(dels.select(
         names.map(n => col(n).as("__x" + n)): _*)),
-      names.map(n => col(n) === col("__x" + n)).reduce(_ && _),
+      names.map(n => if (n == "g") col(n) <=> col("__x" + n)
+                     else col(n) === col("__x" + n)).reduce(_ && _),
       "left_anti")
   }
 
@@ -4275,81 +3664,26 @@ object ReasonOps {
     * report of `corpus` (freshly computed or a reopened artifact).
     * Deletions go through the maintainer's synchronous `retract`
     * ([[consistencyRetract]]). */
-  def consistencyMaintainStream(corpus: DataFrame, report: DataFrame,
-                                typePred: String = "a",
+  def consistencyMaintainStream(data: DataFrame, report: DataFrame,
+                                corpus: Corpus[CheckIds] = Corpus.Triples,
+                                tboxSource: Option[DataFrame] = None,
                                 tboxCap: Int = 1 << 20,
                                 deltaCap: Option[Long] = None)
-      : ConsistencyMaintainer =
-    new ConsistencyMaintainer(normTriples(corpus), report,
+      : ConsistencyMaintainer = {
+    def norm(df: DataFrame): DataFrame = normRel(df, corpus.quads)
+    new ConsistencyMaintainer(norm(data), report,
       (c, r, b) => {
-        val viol = consistencyDelta(c, b, typePred, tboxCap, deltaCap)
-        (c.unionAll(incrementNovel(c, normTriples(b), deltaCap)),
-          r.unionAll(incrementNovel(r, viol, deltaCap)))
-      },
-      (c, r, d) => {
-        val r2 = consistencyRetract(c, r, d, typePred, tboxCap, deltaCap)
-        (antiRows(c, normTriples(d), 3), r2)
-      })
-
-  /** [[consistencyMaintainStream]] over ENCODED (long-id) relations. */
-  def consistencyMaintainStreamEncoded(corpus: DataFrame,
-                                       report: DataFrame, ids: CheckIds,
-                                       tboxCap: Int = 1 << 20,
-                                       deltaCap: Option[Long] = None)
-      : ConsistencyMaintainer =
-    new ConsistencyMaintainer(normTriples(corpus), report,
-      (c, r, b) => {
-        val viol = consistencyDeltaEncoded(c, b, ids, tboxCap, deltaCap)
-        (c.unionAll(incrementNovel(c, normTriples(b), deltaCap)),
-          r.unionAll(incrementNovel(r, viol, deltaCap)))
-      },
-      (c, r, d) => {
-        val r2 = consistencyRetractEncoded(c, r, d, ids, tboxCap,
+        val viol = consistencyDelta(c, b, corpus, tboxSource, tboxCap,
           deltaCap)
-        (antiRows(c, normTriples(d), 3), r2)
-      })
-
-  /** [[consistencyMaintainStream]] over a NAMED-GRAPH quad dataset —
-    * per-graph validation, declarations from the static `tboxSource`. */
-  def consistencyMaintainStreamQuads(quads: DataFrame, report: DataFrame,
-                                     tboxSource: DataFrame,
-                                     typePred: String = "a",
-                                     tboxCap: Int = 1 << 20,
-                                     deltaCap: Option[Long] = None)
-      : ConsistencyMaintainer =
-    new ConsistencyMaintainer(normQuads(quads), report,
-      (c, r, b) => {
-        val viol = consistencyDeltaQuads(c, b, tboxSource, typePred,
-          tboxCap, deltaCap)
-        (c.unionAll(incrementNovel(c, normQuads(b), deltaCap)),
+        (c.unionAll(incrementNovel(c, norm(b), deltaCap)),
           r.unionAll(incrementNovel(r, viol, deltaCap)))
       },
       (c, r, d) => {
-        val r2 = consistencyRetractQuads(c, r, d, tboxSource, typePred,
-          tboxCap, deltaCap)
-        (antiRows(c, normQuads(d), 4), r2)
+        val r2 = consistencyRetract(c, r, d, corpus, tboxSource, tboxCap,
+          deltaCap)
+        (antiRows(c, norm(d), if (corpus.quads) 4 else 3), r2)
       })
-
-  /** [[consistencyMaintainStreamQuads]] over ENCODED (long-id) quads. */
-  def consistencyMaintainStreamQuadsEncoded(quads: DataFrame,
-                                            report: DataFrame,
-                                            tboxSource: DataFrame,
-                                            ids: CheckIds,
-                                            tboxCap: Int = 1 << 20,
-                                            deltaCap: Option[Long] = None)
-      : ConsistencyMaintainer =
-    new ConsistencyMaintainer(normQuads(quads), report,
-      (c, r, b) => {
-        val viol = consistencyDeltaQuadsEncoded(c, b, tboxSource, ids,
-          tboxCap, deltaCap)
-        (c.unionAll(incrementNovel(c, normQuads(b), deltaCap)),
-          r.unionAll(incrementNovel(r, viol, deltaCap)))
-      },
-      (c, r, d) => {
-        val r2 = consistencyRetractQuadsEncoded(c, r, d, tboxSource,
-          ids, tboxCap, deltaCap)
-        (antiRows(c, normQuads(d), 4), r2)
-      })
+  }
 
   private def consistencyRetractCore(corpus: DataFrame, report: DataFrame,
                                      deletions: DataFrame,
@@ -4434,10 +3768,7 @@ object ReasonOps {
     val tyCond = col("p").isin(voc.ty.toSeq: _*)
     // post-delete corpus (the deletion broadcast-antis; the corpus
     // only ever streams through per-family scoped legs)
-    val t2 = t.join(broadcast(dd.select(
-        names.map(n => col(n).as("__x" + n)): _*)),
-      names.map(n => col(n) === col("__x" + n)).reduce(_ && _),
-      "left_anti")
+    val t2 = antiRows(t, dd, width)
     val types2 = t2.where(tyCond)
     val dTypes = dd.where(tyCond)
     val rnames = Seq("kind", "s", "p", "o", "g").take(width + 1)
@@ -4628,14 +3959,6 @@ object ReasonOps {
         "left_anti")
     }
     (kept +: adds.toSeq).reduce(_.unionAll(_)).distinct()
-  }
-
-  private def consistencyCore(triples: DataFrame, voc: CheckVoc,
-                              hasGraph: Boolean, tboxCap: Int): DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    consistencyCoreDecls(t, t, voc, hasGraph, tboxCap)
   }
 
   private def consistencyCoreDecls(rel: DataFrame, declSource: DataFrame,
@@ -4932,62 +4255,20 @@ object ReasonOps {
     * round just confirms). Insert maintenance has an O(Δ) twin that
     * alternates the family deltas until dry ([[owlFullDelta]], plus
     * the streaming [[owlFullMaintainStream]]); retraction re-runs this
-    * closure over the remaining base.
+    * closure over the remaining base. Encoded terms take the property
+    * vocabulary as [[OwlIds]] and the class vocabulary as [[RlIds]];
+    * on quads both families run per graph with the global
+    * `tboxSource`.
     */
-  def owlFullClosure(triples: DataFrame, typePred: String = "a",
+  def owlFullClosure(data: DataFrame,
+                     corpus: Corpus[(OwlIds, RlIds)] = Corpus.Triples,
+                     tboxSource: Option[DataFrame] = None,
                      tboxCap: Int = 1 << 20, maxRounds: Int = 8)
-      : DataFrame = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    owlFullCore(t,
-      df => owlClosure(df, typePred, tboxCap),
-      df => owlRlClosure(df, typePred, tboxCap),
+      : DataFrame =
+    owlFullCore(normRel(data, corpus.quads),
+      df => owlClosure(df, corpus.map(_._1), tboxSource, tboxCap),
+      df => owlRlClosure(df, corpus.map(_._2), tboxSource, tboxCap),
       maxRounds)
-  }
-
-  /** [[owlFullClosure]] over ENCODED (long-id) relations — the
-    * property vocabulary as [[OwlIds]], the class vocabulary as
-    * [[RlIds]]. */
-  def owlFullClosureEncoded(encTriples: DataFrame, owlIds: OwlIds,
-                            rlIds: RlIds, tboxCap: Int = 1 << 20,
-                            maxRounds: Int = 8): DataFrame = {
-    val Seq(cs, cp, co) = encTriples.columns.take(3).toSeq
-    val t = encTriples.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"))
-    owlFullCore(t,
-      df => owlClosureEncoded(df, owlIds, tboxCap),
-      df => owlRlClosureEncoded(df, rlIds, tboxCap),
-      maxRounds)
-  }
-
-  /** [[owlFullClosure]] over a NAMED-GRAPH quad dataset — both
-    * families run per graph with the global `tboxSource`. */
-  def owlFullClosureQuads(quads: DataFrame, tboxSource: DataFrame,
-                          typePred: String = "a", tboxCap: Int = 1 << 20,
-                          maxRounds: Int = 8): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    owlFullCore(q,
-      df => owlClosureQuads(df, tboxSource, typePred, tboxCap),
-      df => owlRlClosureQuads(df, tboxSource, typePred, tboxCap),
-      maxRounds)
-  }
-
-  /** [[owlFullClosureQuads]] over ENCODED (long-id) quad relations. */
-  def owlFullClosureQuadsEncoded(quads: DataFrame, tboxSource: DataFrame,
-                                 owlIds: OwlIds, rlIds: RlIds,
-                                 tboxCap: Int = 1 << 20,
-                                 maxRounds: Int = 8): DataFrame = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    owlFullCore(q,
-      df => owlClosureQuadsEncoded(df, tboxSource, owlIds, tboxCap),
-      df => owlRlClosureQuadsEncoded(df, tboxSource, rlIds, tboxCap),
-      maxRounds)
-  }
 
   /** INCREMENTAL maintenance of the JOINT property+class closure — the
     * O(Δ) twin of [[owlFullClosure]], closing the maintenance matrix's
@@ -5021,65 +4302,18 @@ object ReasonOps {
     * composeIncrement(owlFullClosure(base), owlFullDelta(closure, Δ, tbox))`.
     */
   def owlFullDelta(closure: DataFrame, delta: DataFrame,
-                   tboxSource: DataFrame, typePred: String = "a",
+                   tboxSource: DataFrame,
+                   corpus: Corpus[(OwlIds, RlIds)] = Corpus.Triples,
                    tboxCap: Int = 1 << 20, deltaCap: Option[Long] = None,
-                   maxRounds: Int = 8): DataFrame =
-    owlFullDeltaCore(closure, delta, hasGraph = false,
-      (acc, d) => owlDelta(acc, d, tboxSource, typePred, tboxCap, deltaCap),
-      (acc, d) => owlRlDelta(acc, d, tboxSource, typePred, tboxCap,
+                   maxRounds: Int = 8): DataFrame = {
+    val owl = corpus.map(_._1)
+    owlFullDeltaCore(closure, delta, corpus.quads,
+      (acc, d) => owlDelta(acc, d, tboxSource, owl, tboxCap, deltaCap),
+      (acc, d) => owlRlDelta(acc, d, tboxSource, corpus.map(_._2), tboxCap,
         deltaCap),
-      propRelevantCond(tboxSource, InverseOf, SymmetricProperty,
-        TransitiveProperty, typePred, tboxCap, StringChainVoc),
-      deltaCap, maxRounds, "owlFullClosure")
-
-  /** [[owlFullDelta]] over ENCODED (long-id) relations. */
-  def owlFullDeltaEncoded(closure: DataFrame, delta: DataFrame,
-                          tboxSource: DataFrame, owlIds: OwlIds,
-                          rlIds: RlIds, tboxCap: Int = 1 << 20,
-                          deltaCap: Option[Long] = None,
-                          maxRounds: Int = 8): DataFrame =
-    owlFullDeltaCore(closure, delta, hasGraph = false,
-      (acc, d) => owlDeltaEncoded(acc, d, tboxSource, owlIds, tboxCap,
-        deltaCap),
-      (acc, d) => owlRlDeltaEncoded(acc, d, tboxSource, rlIds, tboxCap,
-        deltaCap),
-      propRelevantCond(tboxSource, owlIds.inverseOf,
-        owlIds.symmetricProperty, owlIds.transitiveProperty,
-        owlIds.typePred, tboxCap, encChainVoc(owlIds)),
-      deltaCap, maxRounds, "owlFullClosureEncoded")
-
-  /** [[owlFullDelta]] over a NAMED-GRAPH quad dataset — per-graph O(Δ)
-    * maintenance of [[owlFullClosureQuads]] (each family's quad delta
-    * keys every join on the graph column). */
-  def owlFullDeltaQuads(closure: DataFrame, delta: DataFrame,
-                        tboxSource: DataFrame, typePred: String = "a",
-                        tboxCap: Int = 1 << 20,
-                        deltaCap: Option[Long] = None,
-                        maxRounds: Int = 8): DataFrame =
-    owlFullDeltaCore(closure, delta, hasGraph = true,
-      (acc, d) => owlDeltaQuads(acc, d, tboxSource, typePred, tboxCap,
-        deltaCap),
-      (acc, d) => owlRlDeltaQuads(acc, d, tboxSource, typePred, tboxCap,
-        deltaCap),
-      propRelevantCond(tboxSource, InverseOf, SymmetricProperty,
-        TransitiveProperty, typePred, tboxCap, StringChainVoc),
-      deltaCap, maxRounds, "owlFullClosureQuads")
-
-  /** [[owlFullDeltaQuads]] over ENCODED (long-id) quad relations. */
-  def owlFullDeltaQuadsEncoded(closure: DataFrame, delta: DataFrame,
-                               tboxSource: DataFrame, owlIds: OwlIds,
-                               rlIds: RlIds, tboxCap: Int = 1 << 20,
-                               deltaCap: Option[Long] = None,
-                               maxRounds: Int = 8): DataFrame =
-    owlFullDeltaCore(closure, delta, hasGraph = true,
-      (acc, d) => owlDeltaQuadsEncoded(acc, d, tboxSource, owlIds,
-        tboxCap, deltaCap),
-      (acc, d) => owlRlDeltaQuadsEncoded(acc, d, tboxSource, rlIds,
-        tboxCap, deltaCap),
-      propRelevantCond(tboxSource, owlIds.inverseOf,
-        owlIds.symmetricProperty, owlIds.transitiveProperty,
-        owlIds.typePred, tboxCap, encChainVoc(owlIds)),
-      deltaCap, maxRounds, "owlFullClosureQuadsEncoded")
+      propRelevantCond(tboxSource, owlVoc(owl), tboxCap),
+      deltaCap, maxRounds, corpus.remat("owlFullClosure"))
+  }
 
   /** The property-family RELEVANCE filter for [[owlFullDeltaCore]]'s
     * short-circuit: a row can matter to the property delta iff its
@@ -5091,19 +4325,14 @@ object ReasonOps {
     * pure identity, which the core then skips — saving the full family
     * call's job floor per round. Collected ONCE per maintenance call.
     */
-  private def propRelevantCond(tboxSource: DataFrame, inverseOf: Any,
-                               symmetricProperty: Any,
-                               transitiveProperty: Any, typePred: Any,
-                               tboxCap: Int, chainVoc: ChainVoc)
-      : org.apache.spark.sql.Column = {
-    val (inv, sym, trans, chains) = owlDecls(tboxSource, inverseOf,
-      symmetricProperty, transitiveProperty, typePred, tboxCap, chainVoc)
+  private def propRelevantCond(tboxSource: DataFrame, voc: OwlVoc,
+                               tboxCap: Int): org.apache.spark.sql.Column = {
+    val (inv, sym, trans, chains) = owlDecls(tboxSource, voc, tboxCap)
     val rulePreds = (trans ++ sym ++ inv.flatMap(p => Seq(p._1, p._2)) ++
       chains.flatMap(_._2) ++ chains.map(_._1)).distinct
     val ruleCond = if (rulePreds.isEmpty) lit(false)
       else col("p").isin(rulePreds: _*)
-    ruleCond || owlDeltaDeclCond(inverseOf, symmetricProperty,
-      transitiveProperty, typePred, chainVoc, chains.nonEmpty)
+    ruleCond || owlDeltaDeclCond(voc, chains.nonEmpty)
   }
 
   private def owlFullDeltaCore(closure: DataFrame, delta: DataFrame,
@@ -5182,25 +4411,13 @@ object ReasonOps {
     * satisfying restriction premises and vice versa) compose across
     * batches exactly as the batch op proves. */
   def owlFullMaintainStream(initialClosure: DataFrame,
-                            tboxSource: DataFrame, typePred: String = "a",
+                            tboxSource: DataFrame,
+                            corpus: Corpus[(OwlIds, RlIds)] = Corpus.Triples,
                             tboxCap: Int = 1 << 20,
                             deltaCap: Option[Long] = None)
       : ClosureMaintainer =
     new ClosureMaintainer(initialClosure,
-      (c, b) => owlFullDelta(c, b, tboxSource, typePred, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[owlFullMaintainStream]] over a NAMED-GRAPH quad stream
-    * ([[owlFullDeltaQuads]] per batch). */
-  def owlFullMaintainStreamQuads(initialClosure: DataFrame,
-                                 tboxSource: DataFrame,
-                                 typePred: String = "a",
-                                 tboxCap: Int = 1 << 20,
-                                 deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (c, b) => owlFullDeltaQuads(c, b, tboxSource, typePred, tboxCap,
-        deltaCap),
+      (c, b) => owlFullDelta(c, b, tboxSource, corpus, tboxCap, deltaCap),
       deltaCap)
 
   /** STREAMING OWL RL maintenance: a [[ClosureMaintainer]] folding
@@ -5210,12 +4427,13 @@ object ReasonOps {
     * with existing types and vice versa, so the delta runs under
     * `foreachBatch`). */
   def owlRlMaintainStream(initialClosure: DataFrame,
-                          tboxSource: DataFrame, typePred: String = "a",
+                          tboxSource: DataFrame,
+                          corpus: Corpus[RlIds] = Corpus.Triples,
                           tboxCap: Int = 1 << 20,
                           deltaCap: Option[Long] = None)
       : ClosureMaintainer =
     new ClosureMaintainer(initialClosure,
-      (c, b) => owlRlDelta(c, b, tboxSource, typePred, tboxCap, deltaCap),
+      (c, b) => owlRlDelta(c, b, tboxSource, corpus, tboxCap, deltaCap),
       deltaCap)
 
   /** STREAMING OWL maintenance: a [[ClosureMaintainer]] folding each
@@ -5231,22 +4449,11 @@ object ReasonOps {
     * (e.g. a [[graft.store.GraftStore.reasonArtifact]]).
     */
   def owlMaintainStream(initialClosure: DataFrame, tboxSource: DataFrame,
-                        typePred: String = "a", tboxCap: Int = 1 << 20,
+                        corpus: Corpus[OwlIds] = Corpus.Triples,
+                        tboxCap: Int = 1 << 20,
                         deltaCap: Option[Long] = None): ClosureMaintainer =
     new ClosureMaintainer(initialClosure,
-      (c, b) => owlDelta(c, b, tboxSource, typePred, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[owlMaintainStream]] over a NAMED-GRAPH quad stream — per-graph
-    * closure maintenance through [[owlDeltaQuads]]. */
-  def owlMaintainStreamQuads(initialClosure: DataFrame,
-                             tboxSource: DataFrame,
-                             typePred: String = "a",
-                             tboxCap: Int = 1 << 20,
-                             deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (c, b) => owlDeltaQuads(c, b, tboxSource, typePred, tboxCap, deltaCap),
+      (c, b) => owlDelta(c, b, tboxSource, corpus, tboxCap, deltaCap),
       deltaCap)
 
   /** STREAMING RDFS maintenance as a STATEFUL closure (the
@@ -5256,77 +4463,20 @@ object ReasonOps {
     * batches folds increments here instead: each micro-batch runs
     * [[rdfsDelta]] (TBox-in-batch fail-fast included) + broadcast
     * novelty composition into one pinned state frame. Single-premise
-    * rules make batches compose exactly regardless of chaining.
-    */
-  def rdfsMaintainStream(initialClosure: DataFrame, tboxSource: DataFrame,
-                         typePred: String = "a", tboxCap: Int = 1 << 20,
-                         deltaCap: Option[Long] = None): ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (_, b) => rdfsDelta(tboxSource, b, typePred, tboxCap,
-        deltaCap = deltaCap),
-      deltaCap)
-
-  /** [[rdfsMaintainStream]] over a NAMED-GRAPH quad stream — per-graph
-    * closure maintenance through [[rdfsDeltaQuads]]. */
-  def rdfsMaintainStreamQuads(initialClosure: DataFrame,
-                              tboxSource: DataFrame,
-                              typePred: String = "a",
-                              tboxCap: Int = 1 << 20,
-                              deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (_, b) => rdfsDeltaQuads(tboxSource, b, typePred, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[rdfsMaintainStream]] on the ENCODED (long-id) currency — the
-    * production wiring: the stream carries id triples, the maintained
-    * closure stays id-typed end to end ([[rdfsDeltaEncoded]] per batch).
-    * Recover after a restart by constructing from a persisted artifact
+    * rules make batches compose exactly regardless of chaining. On the
+    * ENCODED currency (the production wiring) the stream carries id
+    * rows and the maintained closure stays id-typed end to end; recover
+    * after a restart by constructing from a persisted artifact
     * ([[graft.store.GraftStore.openClosure]]) and attaching with a
     * `checkpointLocation` so the source replays from its committed
     * offsets (see [[ClosureMaintainer.attach]]).
     */
-  def rdfsMaintainStreamEncoded(initialClosure: DataFrame,
-                                tboxSource: DataFrame, ids: RdfsIds,
-                                tboxCap: Int = 1 << 20,
-                                deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
+  def rdfsMaintainStream(initialClosure: DataFrame, tboxSource: DataFrame,
+                         corpus: Corpus[RdfsIds] = Corpus.Triples,
+                         tboxCap: Int = 1 << 20,
+                         deltaCap: Option[Long] = None): ClosureMaintainer =
     new ClosureMaintainer(initialClosure,
-      (_, b) => rdfsDeltaEncoded(tboxSource, b, ids, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[rdfsMaintainStreamQuads]] on the ENCODED currency
-    * ([[rdfsDeltaQuadsEncoded]] per batch). */
-  def rdfsMaintainStreamQuadsEncoded(initialClosure: DataFrame,
-                                     tboxSource: DataFrame, ids: RdfsIds,
-                                     tboxCap: Int = 1 << 20,
-                                     deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (_, b) => rdfsDeltaQuadsEncoded(tboxSource, b, ids, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[owlMaintainStream]] on the ENCODED currency ([[owlDeltaEncoded]]
-    * per batch; same restart story as [[rdfsMaintainStreamEncoded]]). */
-  def owlMaintainStreamEncoded(initialClosure: DataFrame,
-                               tboxSource: DataFrame, ids: OwlIds,
-                               tboxCap: Int = 1 << 20,
-                               deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (c, b) => owlDeltaEncoded(c, b, tboxSource, ids, tboxCap, deltaCap),
-      deltaCap)
-
-  /** [[owlMaintainStreamQuads]] on the ENCODED currency
-    * ([[owlDeltaQuadsEncoded]] per batch). */
-  def owlMaintainStreamQuadsEncoded(initialClosure: DataFrame,
-                                    tboxSource: DataFrame, ids: OwlIds,
-                                    tboxCap: Int = 1 << 20,
-                                    deltaCap: Option[Long] = None)
-      : ClosureMaintainer =
-    new ClosureMaintainer(initialClosure,
-      (c, b) => owlDeltaQuadsEncoded(c, b, tboxSource, ids, tboxCap,
-        deltaCap),
+      (_, b) => rdfsDelta(tboxSource, b, corpus, tboxCap, deltaCap),
       deltaCap)
 
   /** owl:sameAs smushing, the entity-resolution canonicalization: the
@@ -5340,15 +4490,23 @@ object ReasonOps {
     * sameAs statements dropped, the member → canonical mapping for
     * provenance). The mapping join is plan-hinted broadcast only by
     * Spark's own size estimate — no assumption that identities are
-    * small.
+    * small. The sameAs predicate is the OWL IRI on string terms and the
+    * corpus's id on encoded ones (`Corpus.encoded(sameAsId)`).
+    *
+    * On a quad corpus the identity graph is GLOBAL (sameAs statements
+    * from every graph merge into one mapping — two aliases asserted
+    * identical in a provenance graph canonicalize the whole dataset),
+    * while the rewritten facts keep their graphs.
     */
-  def sameAsCanonicalize(triples: DataFrame, sameAsPred: Any = SameAs)
+  def sameAsCanonicalize(data: DataFrame,
+                         corpus: Corpus[Any] = Corpus.Triples)
       : (DataFrame, DataFrame) = {
-    val Seq(cs, cp, co) = triples.columns.take(3).toSeq
-    val t = triples.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
+    val sameAsPred = corpus.vocab(_ => SameAs, identity)
+    val t = normRel(data, corpus.quads)
     val mapping = identityMapping(
       t.where(col("p") === sameAsPred).select("s", "o"))
-    (applyMapping(t.where(col("p") =!= sameAsPred), mapping), mapping)
+    (applyMapping(t.where(col("p") =!= sameAsPred), mapping, corpus),
+      mapping)
   }
 
   /** The member → canonical mapping of an identity-pair relation
@@ -5357,8 +4515,8 @@ object ReasonOps {
     *
     * Two physical paths, the broadcast-small discipline Spark itself
     * applies to joins: an identity graph whose EDGE COUNT fits
-    * `spark.graft.identity.driverCap` (default 2²⁰) collapses with a
-    * driver-side union-find — one count job + one collect instead of
+    * [[IdentityDriverCap]] (2²⁰) collapses with a driver-side
+    * union-find — one count job + one collect instead of
     * the rank/CC/jump job chain, which is pure scheduling latency for
     * the Δ-sized pair sets the functional fixpoint and sameAs
     * maintenance produce. Larger graphs (corpus-scale entity
@@ -5372,8 +4530,7 @@ object ReasonOps {
   def identityMapping(pairs0: DataFrame): DataFrame = {
     val Seq(ca, cb) = pairs0.columns.take(2).toSeq
     val pairs = pairs0.select(col(ca).as("s"), col(cb).as("o"))
-    val cap = pairs0.sparkSession.conf
-      .get("spark.graft.identity.driverCap", (1L << 20).toString).toLong
+    val cap = identityDriverCap.value
     val pinned = graft.Pins.checkpointLazy(pairs)
     val n = pinned.count()
     if (n <= cap) identityMappingLocal(pinned)
@@ -5394,6 +4551,16 @@ object ReasonOps {
         .localCheckpoint(true)
     }
   }
+
+  /** Identity graphs of at most this many edges take the driver
+    * union-find in [[identityMapping]]. */
+  val IdentityDriverCap: Long = 1L << 20
+
+  /** The edge cap [[identityMapping]] reads: [[IdentityDriverCap]],
+    * lowered by a spec (`identityDriverCap.withValue(-1) { ... }`) to
+    * run small graphs through the distributed path. */
+  private[graft] val identityDriverCap =
+    new scala.util.DynamicVariable[Long](IdentityDriverCap)
 
   /** UTF-8 byte order for driver-side canon selection — MUST match the
     * executor path's min semantics (Spark compares strings as binary
@@ -5448,49 +4615,25 @@ object ReasonOps {
         org.apache.spark.sql.types.StructField(_, dt, nullable = false))))
   }
 
-  /** Rewrite a triple relation's subjects and objects through a
+  /** Rewrite a relation's subjects and objects through a
     * member → canonical mapping (two left joins + coalesce, deduped).
     * The mapping join broadcasts only by Spark's own size estimate —
-    * identity sets are data-sized by contract.
-    */
-  def applyMapping(t: DataFrame, mapping: DataFrame): DataFrame =
-    t.join(mapping.withColumnRenamed("member", "s"), Seq("s"), "left")
-      .select(coalesce(col("canon"), col("s")).as("s"), col("p"), col("o"))
-      .join(mapping.withColumnRenamed("member", "o")
-        .withColumnRenamed("canon", "canon2"), Seq("o"), "left")
-      .select(col("s"), col("p"), coalesce(col("canon2"), col("o")).as("o"))
-      .distinct()
-
-  /** [[applyMapping]] over a NAMED-GRAPH quad relation — the graph
+    * identity sets are data-sized by contract. On quads the graph
     * column is CARRIED (identity is global, facts stay in their
-    * graphs), and a merge that makes two quads identical within one
-    * graph dedups while the same fact in different graphs stays
-    * distinct. */
-  def applyMappingQuads(q: DataFrame, mapping: DataFrame): DataFrame =
-    q.join(mapping.withColumnRenamed("member", "s"), Seq("s"), "left")
-      .select(coalesce(col("canon"), col("s")).as("s"), col("p"),
-        col("o"), col("g"))
+    * graphs): a merge that makes two quads identical within one graph
+    * dedups, while the same fact in different graphs stays distinct.
+    */
+  def applyMapping(t: DataFrame, mapping: DataFrame,
+                   corpus: Corpus[Any] = Corpus.Triples): DataFrame = {
+    val g = if (corpus.quads) Seq(col("g")) else Nil
+    t.join(mapping.withColumnRenamed("member", "s"), Seq("s"), "left")
+      .select(Seq(coalesce(col("canon"), col("s")).as("s"), col("p"),
+        col("o")) ++ g: _*)
       .join(mapping.withColumnRenamed("member", "o")
         .withColumnRenamed("canon", "canon2"), Seq("o"), "left")
-      .select(col("s"), col("p"),
-        coalesce(col("canon2"), col("o")).as("o"), col("g"))
+      .select(Seq(col("s"), col("p"),
+        coalesce(col("canon2"), col("o")).as("o")) ++ g: _*)
       .distinct()
-
-  /** [[sameAsCanonicalize]] over a NAMED-GRAPH quad dataset: the
-    * identity graph is GLOBAL (sameAs statements from every graph
-    * merge into one mapping — two aliases asserted identical in a
-    * provenance graph canonicalize the whole dataset), while the
-    * rewritten facts keep their graphs. Returns (rewritten quads with
-    * the sameAs statements dropped, the member → canonical mapping).
-    */
-  def sameAsCanonicalizeQuads(quads: DataFrame, sameAsPred: Any = SameAs)
-      : (DataFrame, DataFrame) = {
-    val Seq(cs, cp, co, cg) = quads.columns.take(4).toSeq
-    val q = quads.select(col(cs).as("s"), col(cp).as("p"),
-      col(co).as("o"), col(cg).as("g"))
-    val mapping = identityMapping(
-      q.where(col("p") === sameAsPred).select("s", "o"))
-    (applyMappingQuads(q.where(col("p") =!= sameAsPred), mapping), mapping)
   }
 
   /** INCREMENTAL owl:sameAs maintenance — the O(Δ) twin of
@@ -5645,14 +4788,16 @@ object ReasonOps {
     * group), which is connectivity-equivalent to all pairs for the CC
     * that consumes them. Returns (a, b) pairs with a = the group min.
     */
-  def functionalIdentityPairs(triples: DataFrame, typePred: String = "a",
+  def functionalIdentityPairs(data: DataFrame,
+                              corpus: Corpus[ErIds] = Corpus.Triples,
                               tboxCap: Int = 1 << 20): DataFrame =
-    functionalIdentityPairsCore(triples, stringErVoc(typePred), tboxCap)
+    functionalIdentityPairsCore(data, erVoc(corpus, "functionalIdentityPairs"),
+      tboxCap)
 
-  /** [[functionalIdentityPairs]] over an ENCODED (long-id) relation. */
-  def functionalIdentityPairsEncoded(encTriples: DataFrame, ids: ErIds,
-                                     tboxCap: Int = 1 << 20): DataFrame =
-    functionalIdentityPairsCore(encTriples, encErVoc(ids), tboxCap)
+  private def erVoc(corpus: Corpus[ErIds], op: String): ErVoc = {
+    requireTriples(corpus, op)
+    corpus.vocab(stringErVoc, encErVoc)
+  }
 
   private def functionalIdentityPairsCore(triples: DataFrame, voc: ErVoc,
                                           tboxCap: Int): DataFrame = {
@@ -5695,15 +4840,11 @@ object ReasonOps {
     * [[sameAsCanonicalize]], or use [[functionalCanonicalize]], which
     * folds key collisions into its merge-cascade fixpoint.
     */
-  def hasKeyIdentityPairs(triples: DataFrame, typePred: String = "a",
+  def hasKeyIdentityPairs(data: DataFrame,
+                          corpus: Corpus[ErIds] = Corpus.Triples,
                           tboxCap: Int = 1 << 20): DataFrame =
-    hasKeyIdentityPairsCore(triples, stringErVoc(typePred), tboxCap)
-
-  /** [[hasKeyIdentityPairs]] over an ENCODED (long-id) relation (the
-    * key-list ids ride [[ErIds]]). */
-  def hasKeyIdentityPairsEncoded(encTriples: DataFrame, ids: ErIds,
-                                 tboxCap: Int = 1 << 20): DataFrame =
-    hasKeyIdentityPairsCore(encTriples, encErVoc(ids), tboxCap)
+    hasKeyIdentityPairsCore(data, erVoc(corpus, "hasKeyIdentityPairs"),
+      tboxCap)
 
   private def hasKeyIdentityPairsCore(triples: DataFrame, voc: ErVoc,
                                       tboxCap: Int): DataFrame = {
@@ -5835,10 +4976,8 @@ object ReasonOps {
       .getOrElse(t.select(col("s").as("a"), col("o").as("b")).limit(0))
   }
 
-  /** Collect + cap the functional / inverse-functional property
-    * declarations (schema-sized by contract). */
   /** The entity-resolution vocabulary as ENCODED ids — the production
-    * currency for [[functionalCanonicalizeEncoded]] and friends.
+    * currency for [[functionalCanonicalize]] and friends.
     * Optional ids simply match no declarations of their kind; the
     * list ids enable `owl:hasKey`. */
   final case class ErIds(typePred: Long, sameAs: Long,
@@ -5894,6 +5033,8 @@ object ReasonOps {
       ids.onProperty.toSet[Any], ids.onClass.toSet[Any],
       ids.literalZero.toSet[Any], ids.literalOne.toSet[Any])
 
+  /** Collect + cap the functional / inverse-functional property
+    * declarations (schema-sized by contract). */
   private def functionalDecls(t: DataFrame, voc: ErVoc, tboxCap: Int)
       : (Seq[Any], Seq[Any]) = {
     val charObjs = (voc.fp ++ voc.ifp).toSeq
@@ -6001,23 +5142,17 @@ object ReasonOps {
     * participate too (cls-maxc2/maxqc3, [[cardinalityIdentityPairs]]'
     * rule over the slice): a subject merge that unions two members'
     * value sets cascades into a cardinality merge the same way.
+    *
+    * On encoded terms (vocabulary as [[ErIds]]) the collision groups,
+    * the CC (long min = canonical id), and the corpus rewrite all run
+    * on fixed-width ids.
     */
-  def functionalCanonicalize(triples: DataFrame, typePred: String = "a",
+  def functionalCanonicalize(data: DataFrame,
+                             corpus: Corpus[ErIds] = Corpus.Triples,
                              tboxCap: Int = 1 << 20, maxRounds: Int = 8)
       : (DataFrame, DataFrame) =
-    functionalCanonicalizeCore(triples, stringErVoc(typePred), tboxCap,
-      maxRounds)
-
-  /** [[functionalCanonicalize]] over an ENCODED (long-id) relation —
-    * production-currency entity resolution: the collision groups, the
-    * CC (long min = canonical id), and the corpus rewrite all run on
-    * fixed-width ids; vocabulary as [[ErIds]]. */
-  def functionalCanonicalizeEncoded(encTriples: DataFrame, ids: ErIds,
-                                    tboxCap: Int = 1 << 20,
-                                    maxRounds: Int = 8)
-      : (DataFrame, DataFrame) =
-    functionalCanonicalizeCore(encTriples, encErVoc(ids), tboxCap,
-      maxRounds)
+    functionalCanonicalizeCore(data, erVoc(corpus, "functionalCanonicalize"),
+      tboxCap, maxRounds)
 
   /** The identity-evidence filter of an ER vocabulary given collected
     * declarations: declared-property rows plus key/restriction/
@@ -6175,21 +5310,13 @@ object ReasonOps {
     *  functionalCanonicalize(t ∪ Δ)` (set-equality on both frames).
     */
   def functionalDelta(rewritten: DataFrame, mapping: DataFrame,
-                      newTriples: DataFrame, typePred: String = "a",
+                      newTriples: DataFrame,
+                      corpus: Corpus[ErIds] = Corpus.Triples,
                       tboxCap: Int = 1 << 20, maxRounds: Int = 8,
                       deltaCap: Option[Long] = None)
       : (DataFrame, DataFrame) =
     functionalDeltaCore(rewritten, mapping, newTriples,
-      stringErVoc(typePred), tboxCap, maxRounds, deltaCap)
-
-  /** [[functionalDelta]] over an ENCODED (long-id) relation. */
-  def functionalDeltaEncoded(rewritten: DataFrame, mapping: DataFrame,
-                             newTriples: DataFrame, ids: ErIds,
-                             tboxCap: Int = 1 << 20, maxRounds: Int = 8,
-                             deltaCap: Option[Long] = None)
-      : (DataFrame, DataFrame) =
-    functionalDeltaCore(rewritten, mapping, newTriples, encErVoc(ids),
-      tboxCap, maxRounds, deltaCap)
+      erVoc(corpus, "functionalDelta"), tboxCap, maxRounds, deltaCap)
 
   /** STREAMING entity resolution: an [[ErMaintainer]] folding each
     * micro-batch of new triples into a maintained (rewritten corpus,
@@ -6204,24 +5331,14 @@ object ReasonOps {
     * re-canonicalize), the [[rdfsDeltaStream]] contract.
     */
   def erMaintainStream(rewritten: DataFrame, mapping: DataFrame,
-                       typePred: String = "a", tboxCap: Int = 1 << 20,
+                       corpus: Corpus[ErIds] = Corpus.Triples,
+                       tboxCap: Int = 1 << 20,
                        deltaCap: Option[Long] = None): ErMaintainer =
     new ErMaintainer(rewritten, mapping,
-      (r, m, b) => functionalDelta(r, m, b, typePred, tboxCap,
+      (r, m, b) => functionalDelta(r, m, b, corpus, tboxCap,
         deltaCap = deltaCap),
-      (orig, dels, r, m) => erRetract(orig, dels, r, m, typePred,
-        tboxCap, deltaCap = deltaCap))
-
-  /** [[erMaintainStream]] on the ENCODED (long-id) currency
-    * ([[functionalDeltaEncoded]] per batch). */
-  def erMaintainStreamEncoded(rewritten: DataFrame, mapping: DataFrame,
-                              ids: ErIds, tboxCap: Int = 1 << 20,
-                              deltaCap: Option[Long] = None): ErMaintainer =
-    new ErMaintainer(rewritten, mapping,
-      (r, m, b) => functionalDeltaEncoded(r, m, b, ids, tboxCap,
-        deltaCap = deltaCap),
-      (orig, dels, r, m) => erRetractEncoded(orig, dels, r, m, ids,
-        tboxCap, deltaCap = deltaCap))
+      (orig, dels, r, m) => erRetract(orig, dels, r, m, corpus, tboxCap,
+        deltaCap = deltaCap))
 
   /** Touched-group count of the most recent [[erRetract]] (old canons
     * whose merge groups the deletion dissolved or whose rows the patch
@@ -6333,20 +5450,12 @@ object ReasonOps {
     */
   def erRetract(original: DataFrame, deletions: DataFrame,
                 rewritten: DataFrame, mapping: DataFrame,
-                typePred: String = "a", tboxCap: Int = 1 << 20,
+                corpus: Corpus[ErIds] = Corpus.Triples,
+                tboxCap: Int = 1 << 20,
                 maxRounds: Int = 8, deltaCap: Option[Long] = None)
       : (DataFrame, DataFrame) =
     erRetractCore(original, deletions, rewritten, mapping,
-      stringErVoc(typePred), tboxCap, maxRounds, deltaCap)
-
-  /** [[erRetract]] over ENCODED (long-id) relations. */
-  def erRetractEncoded(original: DataFrame, deletions: DataFrame,
-                       rewritten: DataFrame, mapping: DataFrame,
-                       ids: ErIds, tboxCap: Int = 1 << 20,
-                       maxRounds: Int = 8, deltaCap: Option[Long] = None)
-      : (DataFrame, DataFrame) =
-    erRetractCore(original, deletions, rewritten, mapping,
-      encErVoc(ids), tboxCap, maxRounds, deltaCap)
+      erVoc(corpus, "erRetract"), tboxCap, maxRounds, deltaCap)
 
   private def erRetractCore(original: DataFrame, deletions: DataFrame,
                             rewritten: DataFrame, mapping: DataFrame,
@@ -6879,8 +5988,8 @@ final class ErMaintainer private[ops] (
   }
 
   /** Retract a batch of SOURCE rows through
-    * [[ReasonOps.erRetract]]'s group-scoped un-merge (the encoded
-    * maintainer routes through `erRetractEncoded`). Synchronous by
+    * [[ReasonOps.erRetract]]'s group-scoped un-merge (over the
+    * maintainer's own corpus kind). Synchronous by
     * design (deletions are an operator decision, not append-stream
     * data), and it needs the caller's durable pre-canonicalization
     * corpus — the maintainer holds only the rewritten state. The
@@ -6890,35 +5999,29 @@ final class ErMaintainer private[ops] (
     * The contract is CHECKED cheaply before patching: every deleted
     * row must exist in `original` (one streaming pass of the corpus
     * through a broadcast semi — a stale or divergent original would
-    * otherwise produce a silently wrong maintained state). Sessions
-    * that own the contract can skip the pass with
-    * `spark.graft.er.retractCheck=off`. */
+    * otherwise produce a silently wrong maintained state). */
   def retract(original: DataFrame, deletions: DataFrame): Unit =
     synchronized {
       if (!deletions.isEmpty) {
         import org.apache.spark.sql.functions.{broadcast, col}
-        if (original.sparkSession.conf
-            .get("spark.graft.er.retractCheck", "on") != "off") {
-          val Seq(os, op, oo) = original.columns.take(3).toSeq
-          val o3 = original.select(col(os).as("s"), col(op).as("p"),
-            col(oo).as("o"))
-          val Seq(ds, dp, dob) = deletions.columns.take(3).toSeq
-          val d3 = deletions.select(col(ds).as("s"), col(dp).as("p"),
-            col(dob).as("o")).distinct().localCheckpoint(true)
-          val need = d3.count()
-          val have = o3
-            .join(broadcast(d3.toDF("__s", "__p", "__o")),
-              col("s") === col("__s") && col("p") === col("__p") &&
-                col("o") === col("__o"), "left_semi")
-            .distinct().count()
-          require(have == need,
-            s"ErMaintainer.retract: ${need - have} of $need deleted " +
-              "rows are absent from the caller-supplied original " +
-              "corpus - `original` must equal base + every folded " +
-              "batch (a stale or divergent original silently corrupts " +
-              "the maintained state); disable this check only with " +
-              "spark.graft.er.retractCheck=off")
-        }
+        val Seq(os, op, oo) = original.columns.take(3).toSeq
+        val o3 = original.select(col(os).as("s"), col(op).as("p"),
+          col(oo).as("o"))
+        val Seq(ds, dp, dob) = deletions.columns.take(3).toSeq
+        val d3 = deletions.select(col(ds).as("s"), col(dp).as("p"),
+          col(dob).as("o")).distinct().localCheckpoint(true)
+        val need = d3.count()
+        val have = o3
+          .join(broadcast(d3.toDF("__s", "__p", "__o")),
+            col("s") === col("__s") && col("p") === col("__p") &&
+              col("o") === col("__o"), "left_semi")
+          .distinct().count()
+        require(have == need,
+          s"ErMaintainer.retract: ${need - have} of $need deleted " +
+            "rows are absent from the caller-supplied original " +
+            "corpus - `original` must equal base + every folded " +
+            "batch (a stale or divergent original silently corrupts " +
+            "the maintained state)")
         commit(retractFn(original, deletions, stateV._1, stateV._2))
       }
     }
@@ -6953,7 +6056,7 @@ final class ErMaintainer private[ops] (
 
 /** Streaming consistency state: maintains a (corpus, violation report)
   * pair under micro-batches of new rows — built by
-  * [[ReasonOps.consistencyMaintainStream]] (+Quads/Encoded). Inserts
+  * [[ReasonOps.consistencyMaintainStream]] (any corpus). Inserts
   * are MONOTONE for violations (every family is premise-positive, so
   * new rows can only ADD violations): each batch validates at Δ cost
   * through [[ReasonOps.consistencyDelta]] and the novel violations
@@ -7048,8 +6151,9 @@ final class ConsistencyMaintainer private[ops] (
 
 /** Streaming closure state: folds micro-batches of new edges into a
   * MATERIALIZED closure with a batch O(Δ) delta function — built by
-  * [[ReasonOps.owlMaintainStream]] / [[ReasonOps.owlMaintainStreamQuads]]
-  * / [[ReasonOps.rdfsMaintainStream]] (+Quads). Each batch arrives as a
+  * [[ReasonOps.rdfsMaintainStream]], [[ReasonOps.owlMaintainStream]],
+  * [[ReasonOps.owlRlMaintainStream]] or [[ReasonOps.owlFullMaintainStream]]
+  * (any corpus). Each batch arrives as a
   * STATIC frame (`foreachBatch`), so the whole batch maintenance
   * machinery — bridge-set fixpoints, deltaCap guards, declaration
   * fail-fasts — applies unchanged, and batches compose exactly: after

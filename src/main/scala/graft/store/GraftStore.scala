@@ -1064,14 +1064,14 @@ object GraftStore {
   }
 
   /** PER-GRAPH closure artifacts — the quad analog of [[persistClosure]]:
-    * a materialized `rdfsClosureQuads`/`owlClosureQuads` persists in the
-    * GRAPH-partitioned layout (`TripleStore.persistQuads`: one directory
-    * per named graph, default graph in the null partition), so a
-    * `GRAPH <g>` / FROM NAMED slice over the closure directory-prunes
+    * a materialized `rdfsClosure`/`owlClosure` of a quad corpus persists
+    * in the GRAPH-partitioned layout (`TripleStore.persistQuads`: one
+    * directory per named graph, default graph in the null partition), so
+    * a `GRAPH <g>` / FROM NAMED slice over the closure directory-prunes
     * exactly like a base quad scan. Query sessions OPEN the artifact
     * instead of re-deriving; maintenance batches fold increments with
-    * `persistClosureQuadsAppend` (`rdfsDeltaQuads` output) or re-persist
-    * after a retraction (`rdfsRetractQuads` / `owlRetractQuads`) — the
+    * `persistClosureQuadsAppend` (quad `rdfsDelta` output) or re-persist
+    * after a retraction (quad `rdfsRetract` / `owlRetract`) — the
     * ingest-once / open-many lifecycle the triple closure has.
     */
   def persistClosureQuads(closure: DataFrame, path: String): Unit =

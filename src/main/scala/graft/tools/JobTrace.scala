@@ -76,8 +76,6 @@ object JobTrace {
     graft.dict.Dictionary.localDecodeCap.withValue(decodeCap)(gates.foreach { gate =>
       val fn = graft.SparkEntry.queries(gate)
       fn(spark, dir).collect() // warm (artifacts build here)
-      sys.props("graft.pins.trace") = "1"
-      graft.ops.ReasonOps.pinLabelCounts.clear()
       counts.clear(); wall.clear(); total.set(0)
       tracing = true
       val t0 = System.nanoTime()
@@ -92,11 +90,6 @@ object JobTrace {
         val w = Option(wall.get(cs)).map(_.longValue).getOrElse(0L) / 1e3
         println(f"$n%5d  $w%7.2fs  $cs")
       }
-      println("== pinCapped calls by label ==")
-      graft.ops.ReasonOps.pinLabelCounts.asScala.toSeq
-        .sortBy(-_._2.longValue).foreach { case (w, n) =>
-          println(f"${n.longValue}%5d  $w")
-        }
     })
     spark.stop()
   }

@@ -126,6 +126,23 @@ class GraphOpsSpec extends SparkSpec {
     viaDf shouldBe viaGraphx
   }
 
+  it should "give the same components when every round ships its delta shuffled" in {
+    // a 300-node chain of long ids plus a detached 3-cycle: the default
+    // run moves each round's changed labels as a broadcast (the set
+    // stays under CcBroadcastDelta); a cap of -1 sends every round
+    // through the shuffled delta join instead
+    val ids = (0 until 300).map(i => 10000L + i)
+    val chain = ids.zip(ids.tail) ++ Seq((1L, 2L), (2L, 3L), (3L, 1L))
+    val edges = chain.toDF("s", "o")
+    def comps(): Map[Long, Long] = GraphOps.connectedComponents(edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val viaBroadcast = comps()
+    val viaShuffle = GraphOps.ccBroadcastDelta.withValue(-1L)(comps())
+    viaShuffle shouldBe viaBroadcast
+    viaBroadcast.size shouldBe 303
+    viaBroadcast.values.toSet shouldBe Set(ids.min, 1L)
+  }
+
   "orderRanks" should "assign order-preserving ranks, so min(rank) ≡ min(node)" in {
     val nodes = Seq("m", "a", "z", "k", "a").toDF("node")
     val rk = GraphOps.orderRanks(nodes).collect()

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.ReasonOps
+import graft.ops.ReasonOps.Corpus
 import org.apache.spark.sql.functions.col
 import graft.ops.ReasonOps.{Domain, Range, SubClassOf, SubPropertyOf}
 
@@ -120,9 +121,9 @@ class ReasonSpec extends SparkSpec {
         .map { case (s, p, o) =>
           (inv.getOrElse(s, s), inv.getOrElse(p, p), inv.getOrElse(o, o)) }
     }
-    val encClosure = ReasonOps.rdfsClosureEncoded(
+    val encClosure = ReasonOps.rdfsClosure(
       g.map { case (s, p, o) => (id(s), id(p), id(o)) }.toDF("s", "p", "o"),
-      ReasonOps.RdfsIds(id("sc"), id("sp"), id("dom"), id("rng"), id("ty")))
+      Corpus.encoded(ReasonOps.RdfsIds(id("sc"), id("sp"), id("dom"), id("rng"), id("ty"))))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     encClosure shouldBe strClosure.map { case (s, p, o) => (id(s), id(p), id(o)) }
   }
@@ -137,7 +138,7 @@ class ReasonSpec extends SparkSpec {
       ("c", "p", "d", "g2"),
       ("e", "a", "C", null.asInstanceOf[String])  // default graph
     ).toDF("s", "p", "o", "g")
-    val got = ReasonOps.rdfsClosureQuads(quads, tbox).collect()
+    val got = ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(tbox)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         Option(r.getString(3)).getOrElse("default"))).toSet
     got shouldBe Set(
@@ -162,7 +163,7 @@ class ReasonSpec extends SparkSpec {
       ("x", "p", "y", "g1"), ("y", "p", "z", "g1"), // chain inside g1
       ("y", "p", "w", "g2")                          // y->w lives in g2
     ).toDF("s", "p", "o", "g")
-    val got = ReasonOps.owlClosureQuads(quads, tbox).collect()
+    val got = ReasonOps.owlClosure(quads, Corpus.Quads, Some(tbox)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getString(3))).toSet
     got shouldBe Set(
@@ -184,10 +185,10 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(("p", "sp", "q"), ("q", "dom", "C"), ("C", "sc", "A"))
     val base = tbox ++ Seq(("x", "p", "y"))
     val delta = Seq(("z", "p", "x"), ("y", "ty", "C"))
-    val full = ReasonOps.rdfsClosureEncoded(enc(base ++ delta), ids)
+    val full = ReasonOps.rdfsClosure(enc(base ++ delta), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val incremental = ReasonOps.rdfsClosureEncoded(enc(base), ids)
-      .unionAll(ReasonOps.rdfsDeltaEncoded(enc(tbox), enc(delta), ids))
+    val incremental = ReasonOps.rdfsClosure(enc(base), Corpus.encoded(ids))
+      .unionAll(ReasonOps.rdfsDelta(enc(tbox), enc(delta), Corpus.encoded(ids)))
       .distinct()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     incremental shouldBe full
@@ -202,7 +203,7 @@ class ReasonSpec extends SparkSpec {
       (20L, 5L, 99L),
       (98L, 5L, 30L)
     ).toDF("s", "p", "o")
-    val (rewritten, _) = ReasonOps.sameAsCanonicalize(g, sameAsPred = 1L)
+    val (rewritten, _) = ReasonOps.sameAsCanonicalize(g, Corpus.encoded(1L))
     rewritten.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet shouldBe Set((10L, 5L, 99L), (98L, 5L, 10L))
   }
@@ -256,8 +257,8 @@ class ReasonSpec extends SparkSpec {
       ("e", "a", "C", null.asInstanceOf[String]))
     val src = MemoryStream[(String, String, String, String)]
     src.addData(rows: _*)
-    val out = ReasonOps.rdfsDeltaStreamQuads(tbox,
-      src.toDF().toDF("s", "p", "o", "g"))
+    val out = ReasonOps.rdfsDeltaStream(tbox,
+      src.toDF().toDF("s", "p", "o", "g"), Corpus.Quads)
     out.isStreaming shouldBe true
     val q = out.writeStream.format("memory").queryName("rdfs_qstream_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -282,8 +283,8 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(("C", SubClassOf, "D")).toDF("s", "p", "o")
     val src = MemoryStream[(String, String, String, String)]
     src.addData(("A", SubClassOf, "B", "g1"))
-    val out = ReasonOps.rdfsDeltaStreamQuads(tbox,
-      src.toDF().toDF("s", "p", "o", "g"))
+    val out = ReasonOps.rdfsDeltaStream(tbox,
+      src.toDF().toDF("s", "p", "o", "g"), Corpus.Quads)
     val q = out.writeStream.format("memory").queryName("rdfs_qstream_bad")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
@@ -344,21 +345,21 @@ class ReasonSpec extends SparkSpec {
     val p1 = java.nio.file.Files.createTempDirectory("graft-qclosure1").toString
     val p2 = java.nio.file.Files.createTempDirectory("graft-qclosure2").toString
     // persist the materialized per-graph closure, fold an O(Δ) increment
-    GraftStore.persistClosureQuads(ReasonOps.rdfsClosureQuads(base, tbox), p1)
+    GraftStore.persistClosureQuads(ReasonOps.rdfsClosure(base, Corpus.Quads, Some(tbox)), p1)
     GraftStore.persistClosureQuadsAppend(
-      ReasonOps.rdfsDeltaQuads(tbox, delta), p1)
+      ReasonOps.rdfsDelta(tbox, delta, Corpus.Quads), p1)
     val reopened = GraftStore.openClosureQuads(spark, p1)
     qs(reopened.distinct()) shouldBe
-      qs(ReasonOps.rdfsClosureQuads(base.unionByName(delta), tbox))
+      qs(ReasonOps.rdfsClosure(base.unionByName(delta), Corpus.Quads, Some(tbox)))
     // retract against the REOPENED artifact, re-persist (compaction)
     val del = Seq(("a", "worksFor", "x", "g1")).toDF("s", "p", "o", "g")
-    val maintained = ReasonOps.rdfsRetractQuads(reopened.distinct(),
-      base.unionByName(delta), del, tbox)
+    val maintained = ReasonOps.rdfsRetract(reopened.distinct(),
+      base.unionByName(delta), del, Corpus.Quads, Some(tbox))
     GraftStore.persistClosureQuads(maintained, p2)
     qs(GraftStore.openClosureQuads(spark, p2)) shouldBe
-      qs(ReasonOps.rdfsClosureQuads(
+      qs(ReasonOps.rdfsClosure(
         Seq(("b", "worksFor", "x", "g2"), ("c", "worksFor", "y", "g1"))
-          .toDF("s", "p", "o", "g"), tbox))
+          .toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
   }
 
   it should "reject TBox statements in a delta" in {
@@ -511,9 +512,9 @@ class ReasonSpec extends SparkSpec {
     val g = Seq(("p", "sp", "q"), ("q", "dom", "C"), ("C", "sc", "A"),
       ("x", "p", "y"))
       .map { case (s, p, o) => (id(s), id(p), id(o)) }.toDF("s", "p", "o")
-    val got = ReasonOps.rdfsEntailedEncoded(g, ids)
+    val got = ReasonOps.rdfsEntailed(g, Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    got shouldBe ReasonOps.rdfsClosureEncoded(g, ids)
+    got shouldBe ReasonOps.rdfsClosure(g, Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
   }
 
@@ -522,10 +523,10 @@ class ReasonSpec extends SparkSpec {
       .toDF("s", "p", "o")
     val quads = Seq(("x", "p", "y", "g1"), ("z", "p", "w", "g2"))
       .toDF("s", "p", "o", "g")
-    val ent = ReasonOps.rdfsEntailedQuads(quads, tbox)
+    val ent = ReasonOps.rdfsEntailed(quads, Corpus.Quads, Some(tbox))
     val got = ent.collect().map(r => (r.getString(0), r.getString(1),
       r.getString(2), Option(r.getString(3)))).toSet
-    val mat = ReasonOps.rdfsClosureQuads(quads, tbox).collect()
+    val mat = ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(tbox)).collect()
       .map(r => (r.getString(0), r.getString(1),
         r.getString(2), Option(r.getString(3)))).toSet
     got shouldBe mat
@@ -641,10 +642,10 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(("p", "sp", "q"), ("q", "dom", "C"), ("C", "sc", "A"))
     val base = tbox ++ Seq(("x", "p", "y"), ("z", "p", "y"))
     val del = Seq(("x", "p", "y"))
-    val closure = ReasonOps.rdfsClosureEncoded(enc(base), ids).localCheckpoint(true)
-    val maintained = ReasonOps.rdfsRetractEncoded(closure, enc(base), enc(del), ids)
+    val closure = ReasonOps.rdfsClosure(enc(base), Corpus.encoded(ids)).localCheckpoint(true)
+    val maintained = ReasonOps.rdfsRetract(closure, enc(base), enc(del), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val remat = ReasonOps.rdfsClosureEncoded(enc(base.filterNot(del.contains)), ids)
+    val remat = ReasonOps.rdfsClosure(enc(base.filterNot(del.contains)), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     maintained shouldBe remat
   }
@@ -726,11 +727,11 @@ class ReasonSpec extends SparkSpec {
       ("n1", "next", "n2"), ("n2", "next", "n3"), ("n3", "next", "n4"),
       ("n2", "next", "n4"))
     val del = Seq(("n3", "next", "n4"))
-    val closure = ReasonOps.owlClosureEncoded(enc(base), ids).localCheckpoint(true)
-    val maintained = ReasonOps.owlRetractEncoded(closure, enc(base),
-      enc(del), enc(decls), ids)
+    val closure = ReasonOps.owlClosure(enc(base), Corpus.encoded(ids)).localCheckpoint(true)
+    val maintained = ReasonOps.owlRetract(closure, enc(base),
+      enc(del), enc(decls), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val remat = ReasonOps.owlClosureEncoded(enc(base.filterNot(del.contains)), ids)
+    val remat = ReasonOps.owlClosure(enc(base.filterNot(del.contains)), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     maintained shouldBe remat
   }
@@ -761,7 +762,8 @@ class ReasonSpec extends SparkSpec {
     val rQuads = Seq(("u", "p", "b", "g1"), ("c", "p", "d", "g2"),
       ("e", "ty", "C", null))
     val rids = ReasonOps.RdfsIds(id("sc"), id("sp"), id("dom"), id("rng"), id("ty"))
-    val gotR = ReasonOps.rdfsClosureQuadsEncoded(encQ(rQuads), encT(rTbox), rids)
+    val gotR = ReasonOps.rdfsClosure(encQ(rQuads),
+      Corpus.encoded(rids, quads = true), Some(encT(rTbox)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     // expected: the id-image of the string-path result on the same shape
@@ -771,7 +773,7 @@ class ReasonSpec extends SparkSpec {
       ("e", "a", "C", null.asInstanceOf[String])).toDF("s", "p", "o", "g")
     val m = Map(SubPropertyOf -> "sp", SubClassOf -> "sc", Domain -> "dom",
       Range -> "rng", "a" -> "ty")
-    val expR = ReasonOps.rdfsClosureQuads(strQuads, strTbox).collect()
+    val expR = ReasonOps.rdfsClosure(strQuads, Corpus.Quads, Some(strTbox)).collect()
       .map { r =>
         def f(t: String) = id(m.getOrElse(t, t))
         (f(r.getString(0)), f(r.getString(1)), f(r.getString(2)),
@@ -784,13 +786,14 @@ class ReasonSpec extends SparkSpec {
     val oQuads = Seq(("x", "p", "y", "g1"), ("y", "p", "z", "g1"),
       ("y", "p", "w", "g2"))
     val oids = ReasonOps.OwlIds(id("inv"), id("symP"), id("transP"), id("ty"))
-    val gotO = ReasonOps.owlClosureQuadsEncoded(encQ(oQuads), oDecls, oids)
+    val gotO = ReasonOps.owlClosure(encQ(oQuads),
+      Corpus.encoded(oids, quads = true), Some(oDecls))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     val strODecls = Seq(("p", "a", ReasonOps.TransitiveProperty),
       ("r", ReasonOps.InverseOf, "p")).toDF("s", "p", "o")
     val strOQuads = oQuads.toDF("s", "p", "o", "g")
-    val expO = ReasonOps.owlClosureQuads(strOQuads, strODecls).collect()
+    val expO = ReasonOps.owlClosure(strOQuads, Corpus.Quads, Some(strODecls)).collect()
       .map(r => (id(r.getString(0)), id(r.getString(1)), id(r.getString(2)),
         if (r.isNullAt(3)) -1L else id(r.getString(3)))).toSet
     gotO shouldBe expO
@@ -807,11 +810,11 @@ class ReasonSpec extends SparkSpec {
     val delta = Seq(("c", "p", "d", "g2"), ("f", "p", "h", "g1"))
     def qdf(rows: Seq[(String, String, String, String)]) =
       rows.toDF("s", "p", "o", "g")
-    val closure = ReasonOps.rdfsClosureQuads(qdf(base), tbox)
+    val closure = ReasonOps.rdfsClosure(qdf(base), Corpus.Quads, Some(tbox))
       .localCheckpoint(true)
-    val inc = ReasonOps.rdfsDeltaQuads(tbox, qdf(delta))
+    val inc = ReasonOps.rdfsDelta(tbox, qdf(delta), Corpus.Quads)
     val maintained = ReasonOps.composeIncrement(closure, inc)
-    val full = ReasonOps.rdfsClosureQuads(qdf(base ++ delta), tbox)
+    val full = ReasonOps.rdfsClosure(qdf(base ++ delta), Corpus.Quads, Some(tbox))
     qset(maintained) shouldBe qset(full)
     // derivations land in the DELTA quad's graph, not anywhere else
     qset(maintained) should contain(("c", "q", "d", "g2"))
@@ -829,14 +832,15 @@ class ReasonSpec extends SparkSpec {
     val ids = ReasonOps.RdfsIds(id("sc"), id("sp"), id("dom"), id("rng"), id("ty"))
     val encBase = base.map { case (s, p, o, g) =>
       (s, if (p == "a") "ty" else p, o, g) }
-    val encClosure = ReasonOps.rdfsClosureQuadsEncoded(encQ(encBase), encTbox, ids)
+    val encClosure = ReasonOps.rdfsClosure(encQ(encBase),
+      Corpus.encoded(ids, quads = true), Some(encTbox))
       .localCheckpoint(true)
-    val encInc = ReasonOps.rdfsDeltaQuadsEncoded(encTbox, encQ(delta), ids)
+    val encInc = ReasonOps.rdfsDelta(encTbox, encQ(delta), Corpus.encoded(ids, quads = true))
     val encMaint = ReasonOps.composeIncrement(encClosure, encInc)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val encFull = ReasonOps.rdfsClosureQuadsEncoded(
-        encQ(encBase ++ delta), encTbox, ids)
+    val encFull = ReasonOps.rdfsClosure(
+        encQ(encBase ++ delta), Corpus.encoded(ids, quads = true), Some(encTbox))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     encMaint shouldBe encFull
@@ -852,12 +856,12 @@ class ReasonSpec extends SparkSpec {
     val del = Seq(("u", "p", "b", "g1"))
     def qdf(rows: Seq[(String, String, String, String)]) =
       rows.toDF("s", "p", "o", "g")
-    val closure = ReasonOps.rdfsClosureQuads(qdf(base), tbox)
+    val closure = ReasonOps.rdfsClosure(qdf(base), Corpus.Quads, Some(tbox))
       .localCheckpoint(true)
-    val maintained = ReasonOps.rdfsRetractQuads(closure, qdf(base),
-      qdf(del), tbox)
-    val remat = ReasonOps.rdfsClosureQuads(qdf(base.filterNot(del.contains)),
-      tbox)
+    val maintained = ReasonOps.rdfsRetract(closure, qdf(base),
+      qdf(del), Corpus.Quads, Some(tbox))
+    val remat = ReasonOps.rdfsClosure(qdf(base.filterNot(del.contains)),
+      Corpus.Quads, Some(tbox))
     qset(maintained) shouldBe qset(remat)
     qset(maintained) should not contain (("u", "q", "b", "g1"))
     qset(maintained) should contain(("u", "q", "b", "g2"))
@@ -873,14 +877,15 @@ class ReasonSpec extends SparkSpec {
     val encTbox = Seq((id("p"), id("sp"), id("q")), (id("q"), id("dom"), id("C")),
       (id("C"), id("sc"), id("D"))).toDF("s", "p", "o")
     val ids = ReasonOps.RdfsIds(id("sc"), id("sp"), id("dom"), id("rng"), id("ty"))
-    val encClosure = ReasonOps.rdfsClosureQuadsEncoded(encQ(base), encTbox, ids)
+    val encClosure = ReasonOps.rdfsClosure(encQ(base),
+      Corpus.encoded(ids, quads = true), Some(encTbox))
       .localCheckpoint(true)
-    val encMaint = ReasonOps.rdfsRetractQuadsEncoded(encClosure, encQ(base),
-        encQ(del), encTbox, ids)
+    val encMaint = ReasonOps.rdfsRetract(encClosure, encQ(base),
+        encQ(del), Corpus.encoded(ids, quads = true), Some(encTbox))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
-    val encRemat = ReasonOps.rdfsClosureQuadsEncoded(
-        encQ(base.filterNot(del.contains)), encTbox, ids)
+    val encRemat = ReasonOps.rdfsClosure(
+        encQ(base.filterNot(del.contains)), Corpus.encoded(ids, quads = true), Some(encTbox))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         if (r.isNullAt(3)) -1L else r.getLong(3))).toSet
     encMaint shouldBe encRemat
@@ -894,11 +899,11 @@ class ReasonSpec extends SparkSpec {
     val delta = Seq(("z", "p", "w", "g1"), ("y", "p", "v", "g2"))
     def qdf(rows: Seq[(String, String, String, String)]) =
       rows.toDF("s", "p", "o", "g")
-    val closure = ReasonOps.owlClosureQuads(qdf(base), decls)
+    val closure = ReasonOps.owlClosure(qdf(base), Corpus.Quads, Some(decls))
       .localCheckpoint(true)
-    val inc = ReasonOps.owlDeltaQuads(closure, qdf(delta), decls)
+    val inc = ReasonOps.owlDelta(closure, qdf(delta), decls, Corpus.Quads)
     val maintained = ReasonOps.composeIncrement(closure, inc)
-    val full = ReasonOps.owlClosureQuads(qdf(base ++ delta), decls)
+    val full = ReasonOps.owlClosure(qdf(base ++ delta), Corpus.Quads, Some(decls))
     qset(maintained) shouldBe qset(full)
     // bridge crossing existing prefix in g1, and its pass-2 inverse
     qset(maintained) should contain(("x", "p", "w", "g1"))
@@ -920,12 +925,12 @@ class ReasonSpec extends SparkSpec {
     val del = Seq(("n2", "p", "n3", "g1"))
     def qdf(rows: Seq[(String, String, String, String)]) =
       rows.toDF("s", "p", "o", "g")
-    val closure = ReasonOps.owlClosureQuads(qdf(base), decls)
+    val closure = ReasonOps.owlClosure(qdf(base), Corpus.Quads, Some(decls))
       .localCheckpoint(true)
-    val maintained = ReasonOps.owlRetractQuads(closure, qdf(base),
-      qdf(del), decls)
-    val remat = ReasonOps.owlClosureQuads(qdf(base.filterNot(del.contains)),
-      decls)
+    val maintained = ReasonOps.owlRetract(closure, qdf(base),
+      qdf(del), decls, Corpus.Quads)
+    val remat = ReasonOps.owlClosure(qdf(base.filterNot(del.contains)),
+      Corpus.Quads, Some(decls))
     qset(maintained) shouldBe qset(remat)
     qset(maintained) should contain(("n1", "p", "n4", "g1")) // via shortcut
     qset(maintained) should not contain (("n2", "p", "n3", "g1"))
@@ -997,11 +1002,11 @@ class ReasonSpec extends SparkSpec {
       ("r", ReasonOps.InverseOf, "p")).toDF("s", "p", "o")
     val quads = Seq(("x", "p", "y", "g1"), ("y", "p", "z", "g1"),
       ("y", "p", "w", "g2")).toDF("s", "p", "o", "g")
-    qset(ReasonOps.owlEntailedQuads(quads, decls)) shouldBe
-      qset(ReasonOps.owlClosureQuads(quads, decls))
+    qset(ReasonOps.owlEntailed(quads, Corpus.Quads, Some(decls))) shouldBe
+      qset(ReasonOps.owlClosure(quads, Corpus.Quads, Some(decls)))
     // non-transitive pattern predicates skip the per-graph fixpoints too
     val before = ReasonOps.fixpointRuns.get()
-    ReasonOps.owlEntailedQuads(quads, decls, patternPreds = Seq("q"))
+    ReasonOps.owlEntailed(quads, Corpus.Quads, Some(decls), patternPreds = Seq("q"))
       .where(col("p") === "q").collect()
     ReasonOps.fixpointRuns.get() shouldBe before
   }
@@ -1055,8 +1060,8 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(("p", SubPropertyOf, "q"), ("q", Domain, "C"))
       .toDF("s", "p", "o")
     val base = Seq(("u", "p", "b", "g1")).toDF("s", "p", "o", "g")
-    val m = ReasonOps.rdfsMaintainStreamQuads(
-      ReasonOps.rdfsClosureQuads(base, tbox), tbox)
+    val m = ReasonOps.rdfsMaintainStream(
+      ReasonOps.rdfsClosure(base, Corpus.Quads, Some(tbox)), tbox, Corpus.Quads)
     val src = MemoryStream[(String, String, String, String)]
     val q = m.attach(src.toDF().toDF("s", "p", "o", "g"))
     try {
@@ -1065,9 +1070,9 @@ class ReasonSpec extends SparkSpec {
       src.addData(("e", "p", "f", "g1"))
       q.processAllAvailable()
     } finally q.stop()
-    val full = ReasonOps.rdfsClosureQuads(
+    val full = ReasonOps.rdfsClosure(
       (Seq(("u", "p", "b", "g1"), ("c", "p", "d", "g2"),
-        ("e", "p", "f", "g1"))).toDF("s", "p", "o", "g"), tbox)
+        ("e", "p", "f", "g1"))).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
     qset(m.current) shouldBe qset(full)
     qset(m.current) should contain(("c", "a", "C", "g2"))
     qset(m.current) should not contain (("c", "a", "C", "g1"))
@@ -1104,21 +1109,22 @@ class ReasonSpec extends SparkSpec {
     val decls = Seq(("p", "a", ReasonOps.TransitiveProperty))
       .toDF("s", "p", "o")
     val base = Seq(("x", "p", "y", "g1"), ("x", "p", "y", "g2"))
-    val m = ReasonOps.owlMaintainStreamQuads(
-      ReasonOps.owlClosureQuads(base.toDF("s", "p", "o", "g"), decls), decls)
+    val m = ReasonOps.owlMaintainStream(
+      ReasonOps.owlClosure(base.toDF("s", "p", "o", "g"), Corpus.Quads, Some(decls)),
+      decls, Corpus.Quads)
     val src = MemoryStream[(String, String, String, String)]
     val q = m.attach(src.toDF().toDF("s", "p", "o", "g"))
     try {
       src.addData(("y", "p", "z", "g1"))
       q.processAllAvailable()
     } finally q.stop()
-    val full = ReasonOps.owlClosureQuads(
-      (base :+ ("y", "p", "z", "g1")).toDF("s", "p", "o", "g"), decls)
+    val full = ReasonOps.owlClosure(
+      (base :+ ("y", "p", "z", "g1")).toDF("s", "p", "o", "g"), Corpus.Quads, Some(decls))
     qset(m.current) shouldBe qset(full)
     qset(m.current) should contain(("x", "p", "z", "g1"))
     qset(m.current) should not contain (("x", "p", "z", "g2"))
     // a declaration arriving ON the stream fails its batch
-    val m2 = ReasonOps.owlMaintainStreamQuads(m.current, decls)
+    val m2 = ReasonOps.owlMaintainStream(m.current, decls, Corpus.Quads)
     val src2 = MemoryStream[(String, String, String, String)]
     val q2 = m2.attach(src2.toDF().toDF("s", "p", "o", "g"))
     try {
@@ -1213,7 +1219,7 @@ class ReasonSpec extends SparkSpec {
     // per-graph quads: equivalence-driven derivations stay in graph
     val quads = Seq(("x", "a", "Customer", "g1"),
       ("z", "inNation", "n2", "g2")).toDF("s", "p", "o", "g")
-    val qc = ReasonOps.rdfsClosureQuads(quads, tbox)
+    val qc = ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(tbox))
     qset(qc) should contain(("x", "a", "Agent", "g1"))
     qset(qc) should contain(("z", "nationkey", "n2", "g2"))
     qset(qc) should contain(("z", "a", "Locatable", "g2"))
@@ -1240,7 +1246,7 @@ class ReasonSpec extends SparkSpec {
       equivalentProperty = Some(id(EquivalentProperty)))
     val enc = (strTbox ++ strAbox).map { case (a, b, c) =>
       (id(a), id(b), id(c)) }.toDF("s", "p", "o")
-    val got = ReasonOps.rdfsClosureEncoded(enc, ids).collect()
+    val got = ReasonOps.rdfsClosure(enc, Corpus.encoded(ids)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val exp = ReasonOps.rdfsClosure(
       (strTbox ++ strAbox).toDF("s", "p", "o")).collect()
@@ -1251,7 +1257,7 @@ class ReasonSpec extends SparkSpec {
     // derivation through them fires
     val idsNoEq = ReasonOps.RdfsIds(id(SubClassOf), id(SubPropertyOf),
       id(Domain), id(Range), id("a"))
-    val gotNoEq = ReasonOps.rdfsClosureEncoded(enc, idsNoEq).collect()
+    val gotNoEq = ReasonOps.rdfsClosure(enc, Corpus.encoded(idsNoEq)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     gotNoEq should not contain ((id("x"), id("a"), id("Agent")))
   }
@@ -1546,13 +1552,13 @@ class ReasonSpec extends SparkSpec {
       (100L, 60L, 900L), (101L, 60L, 900L),
       (100L, 61L, 800L), (101L, 61L, 801L),
       (102L, 61L, 801L)).toDF("s", "p", "o")
-    val (erw, emp) = ReasonOps.functionalCanonicalizeEncoded(eb, ids)
+    val (erw, emp) = ReasonOps.functionalCanonicalize(eb, Corpus.encoded(ids))
     val edels = Seq((101L, 60L, 900L)).toDF("s", "p", "o")
-    val (erw2, emp2) = ReasonOps.erRetractEncoded(eb, edels,
-      erw.localCheckpoint(true), emp.localCheckpoint(true), ids)
-    val (erb, emb) = ReasonOps.functionalCanonicalizeEncoded(
+    val (erw2, emp2) = ReasonOps.erRetract(eb, edels,
+      erw.localCheckpoint(true), emp.localCheckpoint(true), Corpus.encoded(ids))
+    val (erb, emb) = ReasonOps.functionalCanonicalize(
       eb.join(edels.toDF("s", "p", "o"), Seq("s", "p", "o"), "left_anti"),
-      ids)
+      Corpus.encoded(ids))
     erw2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet shouldBe
       erb.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -1620,9 +1626,9 @@ class ReasonSpec extends SparkSpec {
     val tbox = strTbox.map { case (a, b, c) => (id(a), id(b), id(c)) }
       .toDF("s", "p", "o")
     val base = Seq((id("u"), id("p"), id("b")))
-    val closure0 = ReasonOps.rdfsClosureEncoded(
-      base.toDF("s", "p", "o").unionAll(tbox), ids)
-    val m = ReasonOps.rdfsMaintainStreamEncoded(closure0, tbox, ids)
+    val closure0 = ReasonOps.rdfsClosure(
+      base.toDF("s", "p", "o").unionAll(tbox), Corpus.encoded(ids))
+    val m = ReasonOps.rdfsMaintainStream(closure0, tbox, Corpus.encoded(ids))
     val src = MemoryStream[(Long, Long, Long)]
     val q = m.attach(src.toDF().toDF("s", "p", "o"))
     try {
@@ -1631,9 +1637,9 @@ class ReasonSpec extends SparkSpec {
       src.addData((id("t"), id("q"), id("r")))
       q.processAllAvailable()
     } finally q.stop()
-    val expected = ReasonOps.rdfsClosureEncoded(
+    val expected = ReasonOps.rdfsClosure(
       (base ++ Seq((id("v"), id("p"), id("w")), (id("t"), id("q"), id("r"))))
-        .toDF("s", "p", "o").unionAll(tbox), ids)
+        .toDF("s", "p", "o").unionAll(tbox), Corpus.encoded(ids))
     m.current.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet shouldBe
       expected.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -1649,7 +1655,7 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(("p", SubPropertyOf, "q"), ("q", Domain, "C"))
       .toDF("s", "p", "o")
     val baseQuads = Seq(("u", "p", "b", "g1")).toDF("s", "p", "o", "g")
-    val closure0 = ReasonOps.rdfsClosureQuads(baseQuads, tbox)
+    val closure0 = ReasonOps.rdfsClosure(baseQuads, Corpus.Quads, Some(tbox))
     // batch 1 arrives while the first maintainer is attached
     Seq(("v", "p", "w", "g1")).toDF("s", "p", "o", "g")
       .write.parquet(s"$srcDir/b1")
@@ -1658,21 +1664,21 @@ class ReasonSpec extends SparkSpec {
       m.attach(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$srcDir/*"),
         checkpointLocation = Some(ckpt))
-    val m1 = ReasonOps.rdfsMaintainStreamQuads(closure0, tbox)
+    val m1 = ReasonOps.rdfsMaintainStream(closure0, tbox, Corpus.Quads)
     val q1 = attachStream(m1)
     try q1.processAllAvailable() finally q1.stop()
     // persist the maintained closure, "crash", and recover: reopen the
     // artifact, rebuild the maintainer, re-attach on the SAME checkpoint
     GraftStore.persistClosureQuads(m1.current, art)
     val recovered = GraftStore.openClosureQuads(spark, art)
-    val m2 = ReasonOps.rdfsMaintainStreamQuads(recovered, tbox)
+    val m2 = ReasonOps.rdfsMaintainStream(recovered, tbox, Corpus.Quads)
     Seq(("t", "q", "r", "g2")).toDF("s", "p", "o", "g")
       .write.parquet(s"$srcDir/b2")
     val q2 = attachStream(m2)
     try q2.processAllAvailable() finally q2.stop()
-    val expected = ReasonOps.rdfsClosureQuads(
+    val expected = ReasonOps.rdfsClosure(
       baseQuads.unionAll(Seq(("v", "p", "w", "g1"), ("t", "q", "r", "g2"))
-        .toDF("s", "p", "o", "g")), tbox)
+        .toDF("s", "p", "o", "g")), Corpus.Quads, Some(tbox))
     qset(m2.current) shouldBe qset(expected)
   }
 
@@ -1968,7 +1974,7 @@ class ReasonSpec extends SparkSpec {
       ("a", "par", "b", "g2"), // g2 lacks the second hop
       ("b", "par", "c", "g3")
     ).toDF("s", "p", "o", "g")
-    val got = ReasonOps.owlClosureQuads(q, tbox)
+    val got = ReasonOps.owlClosure(q, Corpus.Quads, Some(tbox))
       .where(col("p") === "grand").collect()
       .map(r => (r.getString(0), r.getString(2), r.getString(3))).toSet
     got shouldBe Set(("a", "c", "g1")) // premises never combine across graphs
@@ -1986,7 +1992,7 @@ class ReasonSpec extends SparkSpec {
       transitiveProperty = 92L, typePred = 93L,
       propertyChainAxiom = Some(10L), listFirst = Some(11L),
       listRest = Some(12L), listNil = Some(13L))
-    val got = ReasonOps.owlClosureEncoded(enc, ids).collect()
+    val got = ReasonOps.owlClosure(enc, Corpus.encoded(ids)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     got should contain ((100L, 2L, 102L))
   }
@@ -2013,12 +2019,12 @@ class ReasonSpec extends SparkSpec {
     val tbox = chainAxiom("grand", Seq("par", "par")).toDF("s", "p", "o")
     val base = Seq(("a", "par", "b", "g1"), ("a", "par", "b", "g2"))
     val delta = Seq(("b", "par", "c", "g1")) // completes g1 only
-    val closure = ReasonOps.owlClosureQuads(base.toDF("s", "p", "o", "g"), tbox)
-    val inc = ReasonOps.owlDeltaQuads(closure,
-      delta.toDF("s", "p", "o", "g"), tbox)
+    val closure = ReasonOps.owlClosure(base.toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
+    val inc = ReasonOps.owlDelta(closure,
+      delta.toDF("s", "p", "o", "g"), tbox, Corpus.Quads)
     val got = qset(ReasonOps.composeIncrement(closure, inc))
-    got shouldBe qset(ReasonOps.owlClosureQuads(
-      (base ++ delta).toDF("s", "p", "o", "g"), tbox))
+    got shouldBe qset(ReasonOps.owlClosure(
+      (base ++ delta).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
     got should contain (("a", "grand", "c", "g1"))
     got.map(t => (t._1, t._2, t._3, t._4)).filter(_._2 == "grand")
       .map(_._4) shouldBe Set("g1")
@@ -2120,13 +2126,13 @@ class ReasonSpec extends SparkSpec {
       ("c1", "cn", "n1", "g2"), ("n1", "nr", "r1", "g2"),
       ("n1", "locIn", "r1", "g1"), ("r1", "locIn", "w", "g1"))
     val del = Seq(("c1", "cn", "n1", "g1"), ("n1", "locIn", "r1", "g1"))
-    val closure = ReasonOps.owlClosureQuads(
-      base.toDF("s", "p", "o", "g"), tbox)
-    val got = qset(ReasonOps.owlRetractQuads(closure,
-      base.toDF("s", "p", "o", "g"), del.toDF("s", "p", "o", "g"), tbox))
+    val closure = ReasonOps.owlClosure(
+      base.toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
+    val got = qset(ReasonOps.owlRetract(closure,
+      base.toDF("s", "p", "o", "g"), del.toDF("s", "p", "o", "g"), tbox, Corpus.Quads))
     ReasonOps.lastRetractRematerialized.get() shouldBe false
-    got shouldBe qset(ReasonOps.owlClosureQuads(
-      base.filterNot(del.contains).toDF("s", "p", "o", "g"), tbox))
+    got shouldBe qset(ReasonOps.owlClosure(
+      base.filterNot(del.contains).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
     got should not contain (("c1", "cr", "r1", "g1")) // premise deleted
     got should contain (("c1", "cr", "r1", "g2"))     // other graph intact
     got should not contain (("n1", "locIn", "w", "g1")) // transitive DRed
@@ -2359,7 +2365,7 @@ class ReasonSpec extends SparkSpec {
         domain = 7L, range = 8L, typePred = 2L),
       onProperty = 10L, someValuesFrom = 11L, allValuesFrom = 12L,
       hasValue = 13L)
-    val got = ReasonOps.owlRlClosureEncoded(enc, ids).collect()
+    val got = ReasonOps.owlRlClosure(enc, Corpus.encoded(ids)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     got should contain ((100L, 2L, 4L))
   }
@@ -2373,7 +2379,7 @@ class ReasonSpec extends SparkSpec {
       ("c1", "placed", "o1", "g1"), ("o1", "a", "Order", "g1"),
       ("c2", "placed", "o2", "g2"), ("o2", "a", "Order", "g3")
     ).toDF("s", "p", "o", "g")
-    val got = qset(ReasonOps.owlRlClosureQuads(q, tbox))
+    val got = qset(ReasonOps.owlRlClosure(q, Corpus.Quads, Some(tbox)))
     got should contain (("c1", "a", "HasOrder", "g1"))
     // c2's premise types o2 in ANOTHER graph: no cross-graph firing
     got.filter(t => t._1 == "c2" && t._2 == "a") shouldBe empty
@@ -2436,13 +2442,13 @@ class ReasonSpec extends SparkSpec {
       ("HasOrder", SomeValuesFrom, "Order")).toDF("s", "p", "o")
     val base = Seq(("o1", "a", "Order", "g1"), ("o1", "a", "Order", "g2"))
     val delta = Seq(("c1", "placed", "o1", "g1")) // fires in g1 only
-    val closure = ReasonOps.owlRlClosureQuads(
-      base.toDF("s", "p", "o", "g"), tbox)
-    val inc = ReasonOps.owlRlDeltaQuads(closure,
-      delta.toDF("s", "p", "o", "g"), tbox)
+    val closure = ReasonOps.owlRlClosure(
+      base.toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
+    val inc = ReasonOps.owlRlDelta(closure,
+      delta.toDF("s", "p", "o", "g"), tbox, Corpus.Quads)
     val got = qset(ReasonOps.composeIncrement(closure, inc))
-    got shouldBe qset(ReasonOps.owlRlClosureQuads(
-      (base ++ delta).toDF("s", "p", "o", "g"), tbox))
+    got shouldBe qset(ReasonOps.owlRlClosure(
+      (base ++ delta).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
     got should contain (("c1", "a", "HasOrder", "g1"))
     got.filter(t => t._3 == "HasOrder").map(_._4) shouldBe Set("g1")
   }
@@ -2457,19 +2463,19 @@ class ReasonSpec extends SparkSpec {
         domain = 7L, range = 8L, typePred = 2L),
       onProperty = 10L, someValuesFrom = 11L, allValuesFrom = 12L,
       hasValue = 13L)
-    val closure = ReasonOps.owlRlClosureEncoded(
-      base.toDF("s", "p", "o"), ids)
-    val inc = ReasonOps.owlRlDeltaEncoded(closure,
-      delta.toDF("s", "p", "o"), tbox, ids)
+    val closure = ReasonOps.owlRlClosure(
+      base.toDF("s", "p", "o"), Corpus.encoded(ids))
+    val inc = ReasonOps.owlRlDelta(closure,
+      delta.toDF("s", "p", "o"), tbox, Corpus.encoded(ids))
     val got = ReasonOps.composeIncrement(closure, inc).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    got shouldBe ReasonOps.owlRlClosureEncoded(
-      (base ++ delta).toDF("s", "p", "o"), ids).collect()
+    got shouldBe ReasonOps.owlRlClosure(
+      (base ++ delta).toDF("s", "p", "o"), Corpus.encoded(ids)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     got should contain ((100L, 2L, 4L))
     (the[IllegalArgumentException] thrownBy
-      ReasonOps.owlRlDeltaEncoded(closure,
-        Seq((9L, 10L, 1L)).toDF("s", "p", "o"), tbox, ids).count())
+      ReasonOps.owlRlDelta(closure,
+        Seq((9L, 10L, 1L)).toDF("s", "p", "o"), tbox, Corpus.encoded(ids)).count())
       .getMessage should include ("re-materialization")
   }
 
@@ -2552,7 +2558,7 @@ class ReasonSpec extends SparkSpec {
       ("a2", "located", "b2", "g2"), ("b2", "located", "world", "g2")
       // g2 has no Place typing: no Reaches membership there
     ).toDF("s", "p", "o", "g")
-    val got = qset(ReasonOps.owlFullClosureQuads(q, tbox))
+    val got = qset(ReasonOps.owlFullClosure(q, Corpus.Quads, Some(tbox)))
     got should contain allOf (
       ("a1", "located", "world", "g1"),
       ("a1", "a", "Reaches", "g1"),
@@ -2571,7 +2577,7 @@ class ReasonSpec extends SparkSpec {
         domain = 7L, range = 8L, typePred = 2L),
       onProperty = 10L, someValuesFrom = 11L, allValuesFrom = 12L,
       hasValue = 13L)
-    val gotE = ReasonOps.owlFullClosureEncoded(enc, owlIds, rlIds)
+    val gotE = ReasonOps.owlFullClosure(enc, Corpus.encoded((owlIds, rlIds)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     gotE should contain allOf ((100L, 1L, 300L), (100L, 2L, 4L))
   }
@@ -2805,21 +2811,21 @@ class ReasonSpec extends SparkSpec {
       ("world", "a", "Place", "g1"), ("world", "a", "Place", "g2"),
       ("b1", "located", "world", "g1"), ("b2", "located", "world", "g2"))
     val delta = Seq(("a1", "located", "b1", "g1")) // g1 only
-    val closure = ReasonOps.owlFullClosureQuads(
-      base.toDF("s", "p", "o", "g"), tbox)
-    val inc = ReasonOps.owlFullDeltaQuads(closure,
-      delta.toDF("s", "p", "o", "g"), tbox)
+    val closure = ReasonOps.owlFullClosure(
+      base.toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
+    val inc = ReasonOps.owlFullDelta(closure,
+      delta.toDF("s", "p", "o", "g"), tbox, Corpus.Quads)
     val got = qset(ReasonOps.composeIncrement(closure, inc))
-    got shouldBe qset(ReasonOps.owlFullClosureQuads(
-      (base ++ delta).toDF("s", "p", "o", "g"), tbox))
+    got shouldBe qset(ReasonOps.owlFullClosure(
+      (base ++ delta).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
     got should contain allOf (
       ("a1", "located", "world", "g1"), ("a1", "a", "Reaches", "g1"))
     got should not contain (("a1", "a", "Reaches", "g2"))
     // a restriction declaration arriving in the batch fails loudly
     (the[IllegalArgumentException] thrownBy
-      ReasonOps.owlFullDeltaQuads(closure,
+      ReasonOps.owlFullDelta(closure,
         Seq(("New", OnProperty, "located", "g1"))
-          .toDF("s", "p", "o", "g"), tbox).count())
+          .toDF("s", "p", "o", "g"), tbox, Corpus.Quads).count())
       .getMessage should include ("re-materialization")
   }
 
@@ -2919,7 +2925,7 @@ class ReasonSpec extends SparkSpec {
       ("x1", "a", "Person", "g1"), ("x1", "a", "Company", "g1"),
       ("x2", "a", "Person", "g1"), ("x2", "a", "Company", "g2")
     ).toDF("s", "p", "o", "g")
-    val got = ReasonOps.consistencyReportQuads(q, tbox).collect()
+    val got = ReasonOps.consistencyReport(q, Corpus.Quads, Some(tbox)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(4))).toSet
     got shouldBe Set(("cax-dw", "x1", "g1"))
 
@@ -2931,7 +2937,7 @@ class ReasonSpec extends SparkSpec {
     ).toDF("s", "p", "o")
     val ids = ReasonOps.CheckIds(typePred = 2L,
       disjointWith = Some(20L), functionalProperty = Some(21L))
-    val gotE = ReasonOps.consistencyReportEncoded(enc, ids).collect()
+    val gotE = ReasonOps.consistencyReport(enc, Corpus.encoded(ids)).collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     gotE shouldBe Set(("cax-dw", 100L),
       ("functional-conflict", 101L))
@@ -3053,11 +3059,11 @@ class ReasonSpec extends SparkSpec {
     val tbox = Seq(
       ("OneCar", OnProperty, "owns"), ("OneCar", OnClass, "Car"),
       ("OneCar", MaxQualifiedCardinality, "1")).toDF("s", "p", "o")
-    ReasonOps.consistencyDeltaQuads(baseQ,
+    ReasonOps.consistencyDelta(baseQ,
       Seq(("v2", "a", "Car", "g2")).toDF("s", "p", "o", "g"),
-      tbox).isEmpty shouldBe true
-    ReasonOps.consistencyDeltaQuads(baseQ,
-        Seq(("v2", "a", "Car", "g1")).toDF("s", "p", "o", "g"), tbox)
+      Corpus.Quads, Some(tbox)).isEmpty shouldBe true
+    ReasonOps.consistencyDelta(baseQ,
+        Seq(("v2", "a", "Car", "g1")).toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(4)))
       .toSet shouldBe Set(("cls-maxqc", "m", "g1"))
   }
@@ -3068,9 +3074,9 @@ class ReasonSpec extends SparkSpec {
       .toDF("s", "p", "o")
     val base = Seq(("x1", "a", "Person", "g1"), ("x1", "a", "Person", "g2"))
     val delta = Seq(("x1", "a", "Company", "g1")) // g1 only
-    val got = ReasonOps.consistencyDeltaQuads(
+    val got = ReasonOps.consistencyDelta(
         base.toDF("s", "p", "o", "g"), delta.toDF("s", "p", "o", "g"),
-        tbox).collect()
+        Corpus.Quads, Some(tbox)).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(4))).toSet
     got shouldBe Set(("cax-dw", "x1", "g1"))
   }
@@ -3158,11 +3164,11 @@ class ReasonSpec extends SparkSpec {
       ("x1", "a", "Person", "g1"), ("x1", "a", "Company", "g1"),
       ("x1", "a", "Person", "g2"), ("x1", "a", "Company", "g2"))
       .toDF("s", "p", "o", "g")
-    val repQ = ReasonOps.consistencyReportQuads(baseQ, tbox)
+    val repQ = ReasonOps.consistencyReport(baseQ, Corpus.Quads, Some(tbox))
       .localCheckpoint(true)
-    val gotQ = ReasonOps.consistencyRetractQuads(baseQ,
+    val gotQ = ReasonOps.consistencyRetract(baseQ,
       repQ, Seq(("x1", "a", "Company", "g1")).toDF("s", "p", "o", "g"),
-      tbox)
+      Corpus.Quads, Some(tbox))
     gotQ.collect().map(r => (r.getString(0), r.getString(1),
       r.getString(4))).toSet shouldBe Set(("cax-dw", "x1", "g2"))
     // schema deletions fail fast
@@ -3394,7 +3400,7 @@ class ReasonSpec extends SparkSpec {
     val ids = ReasonOps.CheckIds(typePred = 2L,
       maxCardinality = Some(20L), onProperty = Some(10L),
       literalZero = Some(70L), literalOne = Some(71L))
-    ReasonOps.cardinalityIdentityPairsEncoded(enc, ids).collect()
+    ReasonOps.cardinalityIdentityPairs(enc, Corpus.encoded(ids)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe
       Set((500L, 501L))
   }
@@ -3595,31 +3601,33 @@ class ReasonSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
 
-    val rl = qs(ReasonOps.owlRlClosureQuadsEncoded(q, tbox, rlIds))
+    val rl = qs(ReasonOps.owlRlClosure(q, Corpus.encoded(rlIds, quads = true), Some(tbox)))
     rl should contain ((100L, 2L, 4L, 900L)) // svf fires in g900 only
     rl.filter(t => t._3 == 4L).map(_._4) shouldBe Set(900L)
 
     // delta parity: the Order typing for g901 arrives as a batch
     val d = Seq((200L, 2L, 3L, 901L)).toDF("s", "p", "o", "g")
-    val inc = ReasonOps.owlRlDeltaQuadsEncoded(
-      ReasonOps.owlRlClosureQuadsEncoded(q, tbox, rlIds), d, tbox, rlIds)
+    val inc = ReasonOps.owlRlDelta(
+      ReasonOps.owlRlClosure(q, Corpus.encoded(rlIds, quads = true), Some(tbox)), d,
+      tbox, Corpus.encoded(rlIds, quads = true))
     qs(ReasonOps.composeIncrement(
-      ReasonOps.owlRlClosureQuadsEncoded(q, tbox, rlIds), inc)) shouldBe
-      qs(ReasonOps.owlRlClosureQuadsEncoded(q.unionAll(d), tbox, rlIds))
+      ReasonOps.owlRlClosure(q, Corpus.encoded(rlIds, quads = true), Some(tbox)), inc)) shouldBe
+      qs(ReasonOps.owlRlClosure(q.unionAll(d), Corpus.encoded(rlIds, quads = true), Some(tbox)))
 
     // joint fixpoint: placed is transitive; c0 -> c1 -> o1 reaches the
     // Order only through the property phase, then svf types c0
     val q2 = q.unionAll(Seq((99L, 1L, 100L, 900L))
       .toDF("s", "p", "o", "g"))
-    qs(ReasonOps.owlFullClosureQuadsEncoded(q2, tbox, owlIds, rlIds)) should
+    qs(ReasonOps.owlFullClosure(q2, Corpus.encoded((owlIds, rlIds), quads = true),
+      Some(tbox))) should
       contain ((99L, 2L, 4L, 900L))
 
     // consistency: HasOrder disjointWith Bad — c1 holds both in g900
-    val closure = ReasonOps.owlRlClosureQuadsEncoded(q, tbox, rlIds)
+    val closure = ReasonOps.owlRlClosure(q, Corpus.encoded(rlIds, quads = true), Some(tbox))
     val checkIds = ReasonOps.CheckIds(typePred = 2L,
       disjointWith = Some(20L))
-    val viol = ReasonOps.consistencyReportQuadsEncoded(closure, tbox,
-      checkIds).collect()
+    val viol = ReasonOps.consistencyReport(closure,
+      Corpus.encoded(checkIds, quads = true), Some(tbox)).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(4))).toSet
     viol shouldBe Set(("cax-dw", 100L, 900L))
   }
@@ -3641,8 +3649,8 @@ class ReasonSpec extends SparkSpec {
       (100L, 60L, 900L), (101L, 60L, 900L),
       (100L, 61L, 800L), (101L, 61L, 801L),
       (102L, 61L, 801L), (103L, 61L, 802L))
-    val (rw, mp) = ReasonOps.functionalCanonicalizeEncoded(
-      base.toDF("s", "p", "o"), ids)
+    val (rw, mp) = ReasonOps.functionalCanonicalize(
+      base.toDF("s", "p", "o"), Corpus.encoded(ids))
     val m = mp.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     m(101L) shouldBe 100L // long min is the canonical id
     m(801L) shouldBe 800L // the round-2 value merge
@@ -3651,13 +3659,13 @@ class ReasonSpec extends SparkSpec {
     ReasonOps.lastFunctionalRounds.get() should be >= 2L
 
     // O(Δ) twin: a fresh ssn collision folds in incrementally
-    val (rw2, mp2) = ReasonOps.functionalDeltaEncoded(rw, mp,
-      Seq((104L, 60L, 900L)).toDF("s", "p", "o"), ids)
+    val (rw2, mp2) = ReasonOps.functionalDelta(rw, mp,
+      Seq((104L, 60L, 900L)).toDF("s", "p", "o"), Corpus.encoded(ids))
     val m2 = mp2.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     m2(104L) shouldBe 100L
     // parity with a from-scratch re-canonicalization
-    val (rwAll, _) = ReasonOps.functionalCanonicalizeEncoded(
-      (base :+ (104L, 60L, 900L)).toDF("s", "p", "o"), ids)
+    val (rwAll, _) = ReasonOps.functionalCanonicalize(
+      (base :+ (104L, 60L, 900L)).toDF("s", "p", "o"), Corpus.encoded(ids))
     rw2.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet shouldBe
       rwAll.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -3668,9 +3676,36 @@ class ReasonSpec extends SparkSpec {
       (70L, 53L, 300L), (300L, 54L, 62L), (300L, 55L, 56L),
       (200L, 2L, 70L), (201L, 2L, 70L), (202L, 2L, 70L),
       (200L, 62L, 700L), (201L, 62L, 700L), (202L, 62L, 701L))
-    ReasonOps.hasKeyIdentityPairsEncoded(keyed.toDF("s", "p", "o"), ids)
+    ReasonOps.hasKeyIdentityPairs(keyed.toDF("s", "p", "o"), Corpus.encoded(ids))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe
       Set((200L, 201L))
   }
 
+  "ReasonOps.identityMapping" should "give the same mapping on the driver and distributed paths" in {
+    // U+FFFD sorts BEFORE U+1F600 in UTF-8 bytes (EF.. < F0..) but AFTER
+    // it in UTF-16 (FFFD > D83D): both paths must pick the UTF-8 minimum,
+    // Spark's binary string order. The long terms share a 4,000-char
+    // prefix, so only their tails decide.
+    val emoji = "a\uD83D\uDE00"
+    val repl = "a\uFFFD"
+    val pre = "t" * 4000
+    val (l1, l2, l3) = (pre + "b", pre + "a", pre + "\uD83D\uDE00")
+    val g = Seq(
+      (emoji, ReasonOps.SameAs, repl), (repl, ReasonOps.SameAs, "b"),
+      (l1, ReasonOps.SameAs, l2), (l3, ReasonOps.SameAs, l1),
+      (emoji, "p", "o"), ("b", "q", emoji), (l3, "p", l1), ("c", "r", "d"))
+      .toDF("s", "p", "o")
+    def run(): (Set[Seq[Any]], Set[Seq[Any]]) = {
+      val (rw, mp) = ReasonOps.sameAsCanonicalize(g)
+      (rw.collect().map(_.toSeq).toSet, mp.collect().map(_.toSeq).toSet)
+    }
+    val (rwDriver, mpDriver) = run()
+    val (rwDist, mpDist) = ReasonOps.identityDriverCap.withValue(-1L)(run())
+    mpDist shouldBe mpDriver
+    rwDist shouldBe rwDriver
+    mpDriver shouldBe Set(Seq(emoji, repl), Seq(repl, repl), Seq("b", repl),
+      Seq(l1, l2), Seq(l2, l2), Seq(l3, l2))
+    rwDriver shouldBe Set(Seq(repl, "p", "o"), Seq(repl, "q", repl),
+      Seq(l2, "p", l2), Seq("c", "r", "d"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.ReasonOps
+import graft.ops.ReasonOps.Corpus
 import graft.ops.ReasonOps.{DisjointWith, FunctionalProperty,
   InverseFunctionalProperty, SameAs}
 
@@ -73,10 +74,10 @@ class RetractFuzzSpec extends SparkSpec {
     (0 until 4).foreach(_ => original += randRow())
     val baseDf = mk(encoded, original)
     val (rw0, mp0) =
-      if (encoded) ReasonOps.functionalCanonicalizeEncoded(baseDf, erIds)
+      if (encoded) ReasonOps.functionalCanonicalize(baseDf, Corpus.encoded(erIds))
       else ReasonOps.functionalCanonicalize(baseDf)
     val m =
-      if (encoded) ReasonOps.erMaintainStreamEncoded(rw0, mp0, erIds)
+      if (encoded) ReasonOps.erMaintainStream(rw0, mp0, Corpus.encoded(erIds))
       else ReasonOps.erMaintainStream(rw0, mp0)
     (0 until 4).foreach { _ =>
       val deletable = original.toSeq.filter(_ != decl)
@@ -93,7 +94,7 @@ class RetractFuzzSpec extends SparkSpec {
     }
     val finalDf = mk(encoded, original)
     val (rwF, mpF) =
-      if (encoded) ReasonOps.functionalCanonicalizeEncoded(finalDf, erIds)
+      if (encoded) ReasonOps.functionalCanonicalize(finalDf, Corpus.encoded(erIds))
       else ReasonOps.functionalCanonicalize(finalDf)
     withClue(s"seed=$seed encoded=$encoded corpus=${original.toSeq}: ") {
       aset3(m.current._1) shouldBe aset3(rwF)
@@ -115,11 +116,11 @@ class RetractFuzzSpec extends SparkSpec {
     (0 until 3).foreach(_ => original += randRow())
     val baseDf = mk(encoded, original)
     val rep0 =
-      if (encoded) ReasonOps.consistencyReportEncoded(baseDf, chkIds)
+      if (encoded) ReasonOps.consistencyReport(baseDf, Corpus.encoded(chkIds))
       else ReasonOps.consistencyReport(baseDf)
     val m =
       if (encoded)
-        ReasonOps.consistencyMaintainStreamEncoded(baseDf, rep0, chkIds)
+        ReasonOps.consistencyMaintainStream(baseDf, rep0, Corpus.encoded(chkIds))
       else ReasonOps.consistencyMaintainStream(baseDf, rep0)
     (0 until 4).foreach { _ =>
       val deletable = original.toSeq.filterNot(decls.contains)
@@ -136,7 +137,7 @@ class RetractFuzzSpec extends SparkSpec {
     }
     val finalDf = mk(encoded, original)
     val repF =
-      if (encoded) ReasonOps.consistencyReportEncoded(finalDf, chkIds)
+      if (encoded) ReasonOps.consistencyReport(finalDf, Corpus.encoded(chkIds))
       else ReasonOps.consistencyReport(finalDf)
     withClue(s"seed=$seed encoded=$encoded corpus=${original.toSeq}: ") {
       aset3(m.current._1) shouldBe aset3(finalDf)
