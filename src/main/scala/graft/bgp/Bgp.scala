@@ -1,9 +1,18 @@
 package graft.bgp
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
 
-import graft.store.StoreHandle
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.DriverRows
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.dict.Dictionary
+import graft.store.{Slices, StoreHandle}
 
 /** Basic-graph-pattern terms. The reference encodes variables as negative
   * longs and constants as positive dictionary ids
@@ -50,13 +59,24 @@ final case class PredStats(cnt: Long, ndvS: Long, ndvO: Long)
   * the handle's stats is at most `Dictionary.LocalCap` reads that
   * predicate's driver-held slice (`StoreHandle.predRows`), the analog of
   * the reference's index lookup: collected once per handle, its filters
-  * fold at plan time and its broadcast starts no job. Every other
-  * pattern scan filters the distributed relation on its bound positions,
-  * which Catalyst pushes into the scan (partition pruning on `p` for a
+  * fold at plan time and its broadcast starts no job. When EVERY
+  * pattern reads a slice, no Catalyst plan is built at all: the BGP is
+  * matched on the driver the reference's way, binding by binding
+  * through per-(predicate, s|o) hash indexes beside the slices, and
+  * comes back as a local relation (no job; a caller's decode collects
+  * it without one). The matcher falls back to the join plan once a
+  * step passes `Dictionary.LocalCap` bindings. Every other pattern scan
+  * filters the distributed relation on its bound positions, which
+  * Catalyst pushes into the scan (partition pruning on `p` for a
   * p-partitioned store); small scans broadcast by the stats hint below
   * or via AQE.
   */
 object Bgp {
+
+  /** One end (`s` or `o`) of a pattern matched on the driver: its
+    * column, and a constant's internal value or a variable's slot.
+    */
+  private final case class End(pos: String, col: Int, const: Option[Any], slot: Int)
 
   /** Estimated result size of a single pattern given stats — mirrors the
     * reference's cardinality fetch (`Graphula.scala:144-167`): bound
@@ -123,6 +143,13 @@ object Bgp {
 
   /** Compile a BGP over a triples DataFrame with columns (s, p, o).
     * Output: one column per variable, in first-appearance order.
+    *
+    * Over a store handle's relation whose slices hold every pattern's
+    * (constant) predicate, the greedy order is matched on the driver
+    * ([[matchHeld]]) into a local relation with the same bag and
+    * schema. A variable predicate, a predicate not held, a relation
+    * that is not a handle's, `StoreHandle.useSlices` set to false, or a
+    * step past `Dictionary.LocalCap` bindings builds the join plan.
     */
   def compile(spark: SparkSession, triples: DataFrame,
               patterns: Seq[TriplePattern],
@@ -144,9 +171,18 @@ object Bgp {
     val ordered = order(patterns, stats, totalCnt)
     // a constant predicate reads the driver-held slice of a store
     // handle's relation when it has one; one job fills the missing ones
-    StoreHandle.slices(triples)
-      .foreach(_.fill(patterns.collect { case TriplePattern(_, C(p), _) => p }))
+    val slices = StoreHandle.slices(triples)
+    slices.foreach(_.fill(patterns.collect { case TriplePattern(_, C(p), _) => p }))
+    slices.flatMap(matchHeld(_, triples.sparkSession, ordered, outVars))
+      .getOrElse(joinPlan(triples, ordered, outVars, stats, totalCnt))
+  }
 
+  /** The Catalyst plan of a BGP in the order given: one pattern scan
+    * per pattern, joined on shared variables.
+    */
+  private def joinPlan(triples: DataFrame, ordered: Seq[TriplePattern],
+                       outVars: Seq[String], stats: Map[String, PredStats],
+                       totalCnt: Long): DataFrame = {
     var current: DataFrame = null
     var boundVars = Set.empty[String]
     ordered.zipWithIndex.foreach { case (tp, i) =>
@@ -186,6 +222,85 @@ object Bgp {
       boundVars ++= tp.vars
     }
     current.select(outVars.map(col): _*)
+  }
+
+  /** The BGP matched on the driver over the held rows of `sl`, as
+    * graphula matches it over its index (`Graphula.scala:195-338`):
+    * patterns in the order given, each extending every partial binding
+    * by the rows a hash-index lookup on a bound position returns.
+    * The bag equals [[joinPlan]]'s: a pattern binding a new variable
+    * joins, one whose variables are all bound (or that has none) keeps
+    * a binding if any row matches — except a first all-constant pattern,
+    * which [[joinPlan]] scans as is. The result is a local relation in
+    * `session` with [[joinPlan]]'s column names, types and nullability.
+    * None when a predicate is not a held constant, a constant is not of
+    * its column's type, or a step passes `Dictionary.LocalCap` bindings.
+    */
+  private def matchHeld(sl: Slices, session: SparkSession,
+                        ordered: Seq[TriplePattern],
+                        outVars: Seq[String]): Option[DataFrame] = {
+    val schema = sl.rel.schema
+    val types = schema.fields.map(_.dataType)
+    def internal(v: Any, pos: String): Option[Any] = (v, schema(pos).dataType) match {
+      case (l: Long, LongType) => Some(l)
+      case (t: String, StringType) => Some(UTF8String.fromString(t))
+      case _ => None
+    }
+    val slot = outVars.zipWithIndex.toMap
+    // per pattern: its predicate and held rows, and its s and o ends (a
+    // constant's internal value, or a variable's slot)
+    val steps = ordered.map { tp =>
+      val held = tp.p match {
+        case C(p) if internal(p, "p").isDefined => sl.rows(p).map(p -> _)
+        case _ => None
+      }
+      held -> Seq("s" -> tp.s, "o" -> tp.o).map {
+        case (pos, C(v)) => End(pos, schema.fieldIndex(pos), internal(v, pos), -1)
+        case (pos, V(n)) => End(pos, schema.fieldIndex(pos), None, slot(n))
+      }
+    }
+    if (steps.exists { case (held, ends) =>
+      held.isEmpty || ends.exists(e => e.slot < 0 && e.const.isEmpty) }) return None
+    val fields = new Array[StructField](outVars.size)
+    var out = ArrayBuffer(new Array[Any](outVars.size))
+    for (((held, ends), i) <- steps.zipWithIndex) {
+      // keyed ends must equal a constant or a bound variable; fresh ones
+      // bind, and a variable at both ends needs s = o
+      val (keyed, fresh) = ends.partition(e => e.slot < 0 || fields(e.slot) != null)
+      val twice = fresh.size == 2 && fresh(0).slot == fresh(1).slot
+      val binds = if (twice) fresh.take(1) else fresh
+      val (p, rows) = held.get
+      // a keyed end's index: the rows whose value there equals its key
+      val lookup = keyed.headOption.map(e => e -> sl.index(p, e.pos).get)
+      def value(r: InternalRow, e: End): Any =
+        if (r.isNullAt(e.col)) null else r.get(e.col, types(e.col))
+      def key(b: Array[Any], e: End): Any = e.const.getOrElse(b(e.slot))
+      def equal(a: Any, b: Any): Boolean = a != null && a == b
+      def candidates(b: Array[Any]): Iterator[InternalRow] =
+        lookup.fold(rows) { case (e, ix) => ix.getOrElse(key(b, e), Array.empty[InternalRow]) }
+          .iterator.filter(r => keyed.forall(e => equal(value(r, e), key(b, e))) &&
+            (!twice || equal(value(r, fresh(0)), value(r, fresh(1)))))
+      // with no bound variable among its keys, every binding gets the
+      // same rows: find them once
+      val same = if (keyed.exists(_.slot >= 0)) None else Some(candidates(null).toArray)
+      def matching(b: Array[Any]): Iterator[InternalRow] =
+        same.fold(candidates(b))(_.iterator)
+      if (fresh.isEmpty && i > 0) out = out.filter(b => matching(b).hasNext)
+      else {
+        val next = ArrayBuffer.empty[Array[Any]]
+        out.foreach(b => matching(b).foreach { r =>
+          val nb = b.clone()
+          binds.foreach(e => nb(e.slot) = value(r, e))
+          next += nb
+          if (next.size > Dictionary.LocalCap) return None
+        })
+        binds.foreach(e => fields(e.slot) =
+          StructField(outVars(e.slot), types(e.col), schema(e.col).nullable))
+        out = next
+      }
+    }
+    Some(DriverRows.frame(session, StructType(fields.toSeq), ArraySeq.unsafeWrapArray(
+      out.iterator.map(b => new GenericInternalRow(b): InternalRow).toArray)))
   }
 
   /** Incremental BGP over a live triple stream — full delta decomposition:

@@ -134,6 +134,19 @@ object ReasonOps {
         case Corpus.Encoded(ids) => encoded(ids)
       }
 
+    /** Fails unless each of `consts` (named `what`) is a term of this
+      * corpus: a `Long` dictionary id on encoded terms, a string on
+      * string ones. A constant of the other kind matches no term, so
+      * the rules it prunes would silently under-derive. */
+    private[ops] def requireTerms(what: String, consts: Seq[Any]): Unit = {
+      val encoded = terms.isInstanceOf[Corpus.Encoded[_]]
+      consts.foreach(c => require(
+        if (encoded) c.isInstanceOf[Long] else c.isInstanceOf[String],
+        s"$what constant $c is not a " +
+          (if (encoded) "Long dictionary id of an encoded" else "string term of a string") +
+          " corpus"))
+    }
+
     /** The same layout and term kind over another family's ids. */
     private[ops] def map[J](f: I => J): Corpus[J] =
       Corpus(quads, terms match {
@@ -1383,6 +1396,7 @@ object ReasonOps {
                   tboxSource: Option[DataFrame] = None,
                   tboxCap: Int = 1 << 20,
                   patternPreds: Seq[Any] = Nil): DataFrame = {
+    corpus.requireTerms("patternPreds", patternPreds)
     val rel = normRel(data, corpus.quads)
     val (inv, sym, trans, chains) =
       owlDecls(tboxSource.getOrElse(rel), owlVoc(corpus), tboxCap)
@@ -2632,6 +2646,7 @@ object ReasonOps {
                     tboxCap: Int = 1 << 20,
                     patternConsts: Seq[Any] = Nil,
                     maxPasses: Int = 12): DataFrame = {
+    corpus.requireTerms("patternConsts", patternConsts)
     val rl = rlSetup(data, corpus, tboxSource, tboxCap)
     owlRlEntailedCore(rl.rel, rl.voc, rl.schema, rdfsMaps(rl.tbox, rl.rdfsVoc),
       rdfsEntailed(rl.rel, rl.rdfs, tboxSource, tboxCap),
@@ -2733,6 +2748,8 @@ object ReasonOps {
                       patternPreds: Seq[Any] = Nil,
                       patternConsts: Seq[Any] = Nil,
                       maxPasses: Int = 12): DataFrame = {
+    corpus.requireTerms("patternPreds", patternPreds)
+    corpus.requireTerms("patternConsts", patternConsts)
     val rl = rlSetup(data, corpus.map(_._2), tboxSource, tboxCap)
     val (inv, sym, trans, chains) = owlDecls(tboxSource.getOrElse(rl.rel),
       owlVoc(corpus.map(_._1)), tboxCap)

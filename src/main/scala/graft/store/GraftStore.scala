@@ -112,16 +112,40 @@ object StoreHandle {
   * relations are capped at `StoreHandle.SliceRows`; a predicate past
   * the cap or the budget keeps the distributed scan. A handle made by
   * an update starts with no slices.
+  *
+  * Beside the rows, a held predicate gets a hash index per position
+  * (`s` or `o`): its rows by their value there, built on first use,
+  * once, on the driver (`Bgp.compile`'s driver matcher looks bindings
+  * up in them). An index refers to each held row at most once and
+  * holds no row of its own, so a handle's indexes hold at most
+  * 2 × `StoreHandle.SliceRows` row references.
   */
 private[graft] final class Slices(val rel: DataFrame,
                                   counts: Map[String, PredStats],
                                   room: AtomicLong) {
   // predicate (its stats key) -> its rows; None: it keeps the scan
   private val held = new ConcurrentHashMap[String, Option[Array[InternalRow]]]()
+  // (predicate, position) -> the predicate's rows by their value there
+  private val indexes = new ConcurrentHashMap[(String, String), Map[Any, Array[InternalRow]]]()
   private val builds = new AtomicInteger()
 
   /** Jobs run to fill slices so far. */
   private[graft] def buildCount: Int = builds.get
+
+  /** The held rows of predicate `p`, if it is held. */
+  def rows(p: Any): Option[Array[InternalRow]] = Option(held.get(p.toString)).flatten
+
+  /** The held rows of `p` by their (non-null, internal) value at `pos`,
+    * `s` or `o`, if `p` is held.
+    */
+  def index(p: Any, pos: String): Option[Map[Any, Array[InternalRow]]] =
+    rows(p).map { rs =>
+      indexes.computeIfAbsent((p.toString, pos), _ => {
+        val i = rel.schema.fieldIndex(pos)
+        val t = rel.schema(i).dataType
+        rs.filterNot(_.isNullAt(i)).groupBy(_.get(i, t))
+      })
+    }
 
   /** Rows of `rel` whose predicate is in `preds` as a local relation in
     * `session` (the session of the frame the caller was handed, e.g. a
@@ -129,7 +153,7 @@ private[graft] final class Slices(val rel: DataFrame,
     */
   def frame(preds: Seq[Any], session: SparkSession): Option[DataFrame] = {
     fill(preds)
-    val parts = preds.map(_.toString).distinct.map(p => Option(held.get(p)).flatten)
+    val parts = preds.map(_.toString).distinct.map(rows)
     if (parts.isEmpty || parts.exists(_.isEmpty)) None
     else Some(DriverRows.frame(session, rel.schema,
       if (parts.size == 1) ArraySeq.unsafeWrapArray(parts.head.get)

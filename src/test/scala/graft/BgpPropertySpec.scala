@@ -25,30 +25,6 @@ class BgpPropertySpec extends SparkSpec {
     o <- termGen(idGen)
   } yield TriplePattern(s, p, o)
 
-  /** Brute-force matcher: fold patterns over the binding set. */
-  private def brute(triples: Set[(String, String, String)],
-                    patterns: Seq[TriplePattern]): Set[Map[String, String]] = {
-    def unify(t: Term, v: String, b: Map[String, String]): Option[Map[String, String]] =
-      t match {
-        case C(c) => if (c.toString == v) Some(b) else None
-        case V(n) => b.get(n) match {
-          case Some(x) => if (x == v) Some(b) else None
-          case None => Some(b + (n -> v))
-        }
-      }
-    patterns.foldLeft(Set(Map.empty[String, String])) { (acc, tp) =>
-      acc.flatMap { b0 =>
-        triples.flatMap { case (s, p, o) =>
-          for {
-            b1 <- unify(tp.s, s, b0)
-            b2 <- unify(tp.p, p, b1)
-            b3 <- unify(tp.o, o, b2)
-          } yield b3
-        }
-      }
-    }
-  }
-
   "Bgp.compile" should "agree with a brute-force matcher on random graphs" in {
     (1 to 8).foreach { round =>
       val seed = Seed(1000L + round)
@@ -68,9 +44,35 @@ class BgpPropertySpec extends SparkSpec {
       val got = df.collect()
         .map(r => vars.zipWithIndex.map { case (v, i) => v -> r.getString(i) }.toMap)
         .toSet
-      val want = brute(triples, patterns).map(_.filter(kv => vars.contains(kv._1)))
+      val want = BgpPropertySpec.brute(triples, patterns).map(_.filter(kv => vars.contains(kv._1)))
       withClue(s"round $round patterns=$patterns\n") {
         got shouldBe want
+      }
+    }
+  }
+}
+
+object BgpPropertySpec {
+  /** Brute-force matcher: fold patterns over the binding set. */
+  def brute(triples: Set[(String, String, String)],
+            patterns: Seq[TriplePattern]): Set[Map[String, String]] = {
+    def unify(t: Term, v: String, b: Map[String, String]): Option[Map[String, String]] =
+      t match {
+        case C(c) => if (c.toString == v) Some(b) else None
+        case V(n) => b.get(n) match {
+          case Some(x) => if (x == v) Some(b) else None
+          case None => Some(b + (n -> v))
+        }
+      }
+    patterns.foldLeft(Set(Map.empty[String, String])) { (acc, tp) =>
+      acc.flatMap { b0 =>
+        triples.flatMap { case (s, p, o) =>
+          for {
+            b1 <- unify(tp.s, s, b0)
+            b2 <- unify(tp.p, p, b1)
+            b3 <- unify(tp.o, o, b2)
+          } yield b3
+        }
       }
     }
   }

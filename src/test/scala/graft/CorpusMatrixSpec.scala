@@ -198,6 +198,23 @@ class CorpusMatrixSpec extends SparkSpec {
     }
   }
 
+  "Pattern constants" should "be in the corpus's term space" in {
+    val enc = cells(rlIds, quads = false).last
+    val err = intercept[IllegalArgumentException](ReasonOps.owlRlEntailed(
+      enc.df(base), enc.corpus, patternConsts = Seq("R")))
+    err.getMessage should include("patternConsts constant R")
+    val str = cells(rlIds, quads = false).head
+    val want = str.rows(ReasonOps.owlRlEntailed(str.df(base), str.corpus,
+      patternConsts = Seq("R")))
+    want should contain allOf (Seq("ann", ty, "R"), Seq("bob", ty, "R"))
+    enc.rows(ReasonOps.owlRlEntailed(enc.df(base), enc.corpus,
+      patternConsts = Seq(id("R")))) shouldBe want
+    an[IllegalArgumentException] should be thrownBy ReasonOps.owlEntailed(
+      enc.df(base), Corpus.encoded(owlIds), patternPreds = Seq("knows"))
+    an[IllegalArgumentException] should be thrownBy ReasonOps.owlFullEntailed(
+      str.df(base), patternConsts = Seq(id("R")))
+  }
+
   "The consistency family" should "agree on every corpus cell, and delta/retract equal from-scratch" in {
     val cs = cells(checkIds)
     def rep(c: Cell[CheckIds], rows: Seq[T]) =

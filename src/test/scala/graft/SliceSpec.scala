@@ -40,7 +40,7 @@ class SliceSpec extends SparkSpec {
   private def id(st: StoreHandle, term: String): Long =
     Dictionary.lookup(st.dict, Seq(term))(term)
 
-  "A hop1 SELECT over small predicates" should "start at most 2 jobs and match the scan path" in {
+  "A hop1 SELECT over small predicates" should "start one job and match the scan path" in {
     val scan = StoreHandle.useSlices.withValue(false) {
       Sparql.executeEncoded(spark, store, hop1).collect() // warm
       jobsDuring(rowSet(Sparql.executeEncoded(spark, store, hop1)))
@@ -49,7 +49,7 @@ class SliceSpec extends SparkSpec {
     val (rows, jobs) = jobsDuring(rowSet(Sparql.executeEncoded(spark, store, hop1)))
     rows shouldBe scan._1
     rows.size shouldBe 8
-    jobs should be <= 2
+    jobs shouldBe 1
     scan._2 should be > 2
   }
 
@@ -81,6 +81,20 @@ class SliceSpec extends SparkSpec {
     val q = Sparql.execute(spark, store.triples, hop1, store.stats)
     scanned(q) shouldBe false
     rowSet(q) shouldBe rowSet(Sparql.executeEncoded(spark, store, hop1))
+  }
+
+  "A BGP over held predicates" should "start one job to compile, decode and collect" in {
+    val tp = Seq(TriplePattern(V("o"), C(id(store, "custkey")), C(id(store, "customer:2"))),
+      TriplePattern(V("o"), C(id(store, "status")), V("st")),
+      TriplePattern(V("o"), C(id(store, "date")), V("d")))
+    def run(): Set[Seq[Any]] = rowSet(Dictionary.decodeAll(
+      Bgp.compile(spark, store.enc, tp, store.encStats, store.totalCnt),
+      store.dict, Seq("o", "st", "d")))
+    run() // fills the slices
+    val (rows, jobs) = jobsDuring(run())
+    jobs shouldBe 1 // the dictionary probe
+    rows shouldBe StoreHandle.useSlices.withValue(false)(run())
+    rows.size shouldBe 8
   }
 
   "A predicate above the cap" should "keep the distributed scan" in {
