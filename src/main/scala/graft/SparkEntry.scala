@@ -7,6 +7,7 @@ import graft.bgp._
 import graft.dict.Dictionary
 import graft.ops.{DedupOps, JoinOps, MediaOps, SkewOps, TextOps, VectorOps}
 import graft.ops.ReasonOps.Corpus
+import graft.sparql.Sparql.Dataset
 import graft.store.{GraftStore, TripleStore}
 
 /** Driver contract — one named query per implemented operator
@@ -1337,7 +1338,7 @@ object SparkEntry {
 
   private def sparqlOver(s: SparkSession, d: String, q: String): DataFrame = {
     val st = GraftStore.forDir(s, d)
-    graft.sparql.Sparql.execute(s, st.triples, q, st.stats)
+    graft.sparql.Sparql.execute(s, Dataset.Triples(st.triples, st.stats), q)
   }
 
   /** Same query surface over the ENCODED store: every join/shuffle moves
@@ -1345,7 +1346,7 @@ object SparkEntry {
     * operators) and once at the top for projected columns.
     */
   private def sparqlEncOver(s: SparkSession, d: String, q: String): DataFrame =
-    graft.sparql.Sparql.executeEncoded(s, GraftStore.forDir(s, d), q)
+    graft.sparql.Sparql.execute(s, GraftStore.forDir(s, d), q)
 
   /** SPARQL text -> BGP chain (same semantics as q_bgp_chain). */
   private def sparqlChain(s: SparkSession, d: String): DataFrame =
@@ -1396,7 +1397,7 @@ object SparkEntry {
     * reference's full execution lifecycle in one call.
     */
   private def sparqlEncoded(s: SparkSession, d: String): DataFrame =
-    graft.sparql.Sparql.executeEncoded(s, GraftStore.forDir(s, d),
+    graft.sparql.Sparql.execute(s, GraftStore.forDir(s, d),
       """PREFIX : <>
         |SELECT ?c ?n ?r WHERE {
         |  ?c a "Customer" .
@@ -1428,9 +1429,9 @@ object SparkEntry {
     */
   private def sparqlDescribe(s: SparkSession, d: String): DataFrame = {
     val st = GraftStore.forDir(s, d)
-    graft.sparql.Sparql.describe(s, st.triples,
+    graft.sparql.Sparql.describe(s, Dataset.Triples(st.triples, st.stats),
       """PREFIX c: <customer:>
-        |DESCRIBE c:1""".stripMargin, st.stats)
+        |DESCRIBE c:1""".stripMargin)
       .orderBy("s", "p", "o")
   }
 
@@ -1532,7 +1533,7 @@ object SparkEntry {
     */
   private def sparqlGraphQ(s: SparkSession, d: String): DataFrame = {
     val quads = GraftStore.quadDataset(s, d)
-    graft.sparql.Sparql.executeQuads(s, quads,
+    graft.sparql.Sparql.execute(s, Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?g (COUNT(?s) AS ?cnt) WHERE { GRAPH ?g { ?s :name ?nm } }
         |GROUP BY ?g ORDER BY ?g""".stripMargin)
@@ -1553,7 +1554,7 @@ object SparkEntry {
         |MOVE GRAPH <graph:nation> TO GRAPH <graph:nation2> ;
         |CLEAR GRAPH <graph:supplier> ;
         |DELETE DATA { GRAPH <graph:extra> { <probe:1> <flag> "on" } }""".stripMargin)
-    graft.sparql.Sparql.executeQuads(s, updated,
+    graft.sparql.Sparql.execute(s, Dataset.Quads(updated),
       """SELECT ?g (COUNT(?s) AS ?cnt) WHERE { GRAPH ?g { ?s ?p ?o } }
         |GROUP BY ?g ORDER BY ?g""".stripMargin)
   }
@@ -1571,7 +1572,7 @@ object SparkEntry {
         |DELETE WHERE { GRAPH <graph:region> { ?s <a> "Region" } } ;
         |INSERT { GRAPH ?g { ?s <audit> "seen" } }
         |WHERE { GRAPH ?g { ?s <a> "Supplier" } }""".stripMargin)
-    graft.sparql.Sparql.executeQuads(s, updated,
+    graft.sparql.Sparql.execute(s, Dataset.Quads(updated),
       """SELECT ?g ?p (COUNT(?s) AS ?cnt) WHERE {
         |  GRAPH ?g { ?s ?p ?o }
         |  FILTER(?p IN ("name", "name2", "a", "audit"))
@@ -1595,7 +1596,7 @@ object SparkEntry {
         |MOVE GRAPH <graph:nation> TO GRAPH <graph:nation2> ;
         |CLEAR GRAPH <graph:supplier> ;
         |DELETE DATA { GRAPH <graph:extra> { <probe:1> <flag> "on" } }""".stripMargin)
-    graft.sparql.Sparql.executeQuadsEncoded(s, enc2, dict2,
+    graft.sparql.Sparql.execute(s, Dataset.QuadsEncoded(enc2, dict2),
       """SELECT ?g (COUNT(?s) AS ?cnt) WHERE { GRAPH ?g { ?s ?p ?o } }
         |GROUP BY ?g ORDER BY ?g""".stripMargin)
   }
@@ -1612,7 +1613,7 @@ object SparkEntry {
         |DELETE WHERE { GRAPH <graph:region> { ?s <a> "Region" } } ;
         |INSERT { GRAPH ?g { ?s <audit> "seen" } }
         |WHERE { GRAPH ?g { ?s <a> "Supplier" } }""".stripMargin)
-    graft.sparql.Sparql.executeQuadsEncoded(s, enc2, dict2,
+    graft.sparql.Sparql.execute(s, Dataset.QuadsEncoded(enc2, dict2),
       """SELECT ?g ?p (COUNT(?s) AS ?cnt) WHERE {
         |  GRAPH ?g { ?s ?p ?o }
         |  FILTER(?p IN ("name", "name2", "a", "audit"))
@@ -1671,7 +1672,8 @@ object SparkEntry {
     * independent of the graph count).
     */
   private def quadAlgebraQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?g ?s ?rk WHERE {
         |  GRAPH ?g {
@@ -1679,8 +1681,7 @@ object SparkEntry {
         |    OPTIONAL { ?s :regionkey ?rk }
         |    MINUS { ?s :name "ALGERIA" }
         |  }
-        |} ORDER BY ?g ?s ?rk""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?g ?s ?rk""".stripMargin)
   }
 
   /** Non-closure property path under a VARIABLE graph target: the
@@ -1689,12 +1690,12 @@ object SparkEntry {
     * no per-graph enumeration, the carried column does the confinement.
     */
   private def quadPathQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?g ?y WHERE {
         |  GRAPH ?g { <part:1> :brand/^:brand ?y }
-        |} ORDER BY ?y""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?y""".stripMargin)
   }
 
   /** The quad-algebra gate on the ENCODED path: same query and oracle
@@ -1704,7 +1705,8 @@ object SparkEntry {
     */
   private def quadEncAlgebraQ(s: SparkSession, d: String): DataFrame = {
     val (enc, dict) = GraftStore.quadDatasetEnc(s, d)
-    graft.sparql.Sparql.executeQuadsEncoded(s, enc, dict,
+    graft.sparql.Sparql.execute(s,
+      Dataset.QuadsEncoded(enc, dict, GraftStore.quadStats(s, d)._2),
       """PREFIX : <>
         |SELECT ?g ?s ?rk WHERE {
         |  GRAPH ?g {
@@ -1712,8 +1714,7 @@ object SparkEntry {
         |    OPTIONAL { ?s :regionkey ?rk }
         |    MINUS { ?s :name "ALGERIA" }
         |  }
-        |} ORDER BY ?g ?s ?rk""".stripMargin,
-      GraftStore.quadStats(s, d)._2)
+        |} ORDER BY ?g ?s ?rk""".stripMargin)
   }
 
   /** Subquery under a VARIABLE graph (§13.3: evaluated once per active
@@ -1721,12 +1722,12 @@ object SparkEntry {
     * group, so ONE aggregation computes every graph's count.
     */
   private def quadSubqueryQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?g ?cnt WHERE {
         |  GRAPH ?g { { SELECT (COUNT(?s) AS ?cnt) WHERE { ?s :name ?o } } }
-        |} ORDER BY ?g""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?g""".stripMargin)
   }
 
   /** Per-graph LIMIT: a subquery with ORDER BY + LIMIT under `GRAPH ?g`
@@ -1735,14 +1736,14 @@ object SparkEntry {
     * column: ONE shuffle on ?g, no graph enumeration, no global sort.
     */
   private def quadLimitQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?g ?s ?n WHERE {
         |  GRAPH ?g {
         |    { SELECT ?s ?n WHERE { ?s :name ?n } ORDER BY ?n ?s LIMIT 2 }
         |  }
-        |} ORDER BY ?g ?n ?s""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?g ?n ?s""".stripMargin)
   }
 
   /** [[quadLimitQ]] over the ENCODED quad dataset — the window keys
@@ -1750,14 +1751,14 @@ object SparkEntry {
     */
   private def quadEncLimitQ(s: SparkSession, d: String): DataFrame = {
     val (enc, dict) = GraftStore.quadDatasetEnc(s, d)
-    graft.sparql.Sparql.executeQuadsEncoded(s, enc, dict,
+    graft.sparql.Sparql.execute(s,
+      Dataset.QuadsEncoded(enc, dict, GraftStore.quadStats(s, d)._2),
       """PREFIX : <>
         |SELECT ?g ?s ?n WHERE {
         |  GRAPH ?g {
         |    { SELECT ?s ?n WHERE { ?s :name ?n } ORDER BY ?n ?s LIMIT 2 }
         |  }
-        |} ORDER BY ?g ?n ?s""".stripMargin,
-      GraftStore.quadStats(s, d)._2)
+        |} ORDER BY ?g ?n ?s""".stripMargin)
   }
 
   /** Closure under a VARIABLE graph: one all-graphs doubling fixpoint
@@ -1765,12 +1766,12 @@ object SparkEntry {
     * closure without enumerating graphs.
     */
   private def quadClosureQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?g ?n WHERE {
         |  GRAPH ?g { <region:0> ^:regionkey+ ?n }
-        |} ORDER BY ?n""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?n""".stripMargin)
   }
 
   /** The per-graph closure on the ENCODED quad path: the inverse
@@ -1779,12 +1780,12 @@ object SparkEntry {
     */
   private def quadEncClosureQ(s: SparkSession, d: String): DataFrame = {
     val (enc, dict) = GraftStore.quadDatasetEnc(s, d)
-    graft.sparql.Sparql.executeQuadsEncoded(s, enc, dict,
+    graft.sparql.Sparql.execute(s,
+      Dataset.QuadsEncoded(enc, dict, GraftStore.quadStats(s, d)._2),
       """PREFIX : <>
         |SELECT ?g ?n WHERE {
         |  GRAPH ?g { <region:0> ^:regionkey+ ?n }
-        |} ORDER BY ?n""".stripMargin,
-      GraftStore.quadStats(s, d)._2)
+        |} ORDER BY ?n""".stripMargin)
   }
 
   /** Full algebra inside a CONSTANT GRAPH block: the named slice becomes
@@ -1792,19 +1793,19 @@ object SparkEntry {
     * compiler — here a property-path alternation.
     */
   private def quadConstAlgebraQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.executeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.execute(s,
+      Dataset.Quads(GraftStore.quadDataset(s, d), GraftStore.quadStats(s, d)._1),
       """PREFIX : <>
         |SELECT ?s ?v WHERE {
         |  GRAPH <graph:nation> { ?s :name|:regionkey ?v }
-        |} ORDER BY ?s ?v""".stripMargin,
-      GraftStore.quadStats(s, d)._1)
+        |} ORDER BY ?s ?v""".stripMargin)
   }
 
   /** CONSTRUCT over the quad dataset: template instantiation from
     * graph-confined matches — the result is a plain (s, p, o) graph.
     */
   private def quadConstructQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.constructQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.construct(s, Dataset.Quads(GraftStore.quadDataset(s, d)),
       """PREFIX : <>
         |CONSTRUCT { ?s :from ?g } WHERE { GRAPH ?g { ?s :a "Region" } }""".stripMargin)
       .orderBy("s", "p", "o")
@@ -1815,7 +1816,7 @@ object SparkEntry {
     * described resource, wherever they live.
     */
   private def quadDescribeQ(s: SparkSession, d: String): DataFrame = {
-    graft.sparql.Sparql.describeQuads(s, GraftStore.quadDataset(s, d),
+    graft.sparql.Sparql.describe(s, Dataset.Quads(GraftStore.quadDataset(s, d)),
       "DESCRIBE <nation:3>").orderBy("s", "p", "o")
   }
 
@@ -1825,7 +1826,7 @@ object SparkEntry {
     */
   private def quadEncConstructQ(s: SparkSession, d: String): DataFrame = {
     val (enc, dict) = GraftStore.quadDatasetEnc(s, d)
-    graft.sparql.Sparql.constructQuadsEncoded(s, enc, dict,
+    graft.sparql.Sparql.construct(s, Dataset.QuadsEncoded(enc, dict),
       """PREFIX : <>
         |CONSTRUCT { ?s :from ?g } WHERE { GRAPH ?g { ?s :a "Region" } }""".stripMargin)
       .orderBy("s", "p", "o")
@@ -1837,7 +1838,7 @@ object SparkEntry {
     */
   private def quadEncDescribeQ(s: SparkSession, d: String): DataFrame = {
     val (enc, dict) = GraftStore.quadDatasetEnc(s, d)
-    graft.sparql.Sparql.describeQuadsEncoded(s, enc, dict,
+    graft.sparql.Sparql.describe(s, Dataset.QuadsEncoded(enc, dict),
       "DESCRIBE <nation:3>").orderBy("s", "p", "o")
   }
 
@@ -2492,7 +2493,7 @@ object SparkEntry {
 
   /** The per-graph closure as a PERSISTED ARTIFACT: reason once, persist
     * in the graph-partitioned layout
-    * ([[GraftStore.persistClosureQuads]]), and census the REOPENED
+    * ([[GraftStore.persistClosure]] with `Corpus.Quads`), and census the REOPENED
     * relation — the ingest-once / open-many lifecycle for named-graph
     * corpora, hash-identical to deriving in place (q_rdfs_quads'
     * oracle). The persist runs once per testdata dir (an ingest step, a
@@ -2504,7 +2505,7 @@ object SparkEntry {
     // so the two gates hash independently against their OWN oracles —
     // a stale or truncated reopened artifact cannot hide behind the
     // sibling gate's hash
-    GraftStore.openClosureQuads(s, cachedQuadClosureArtifact(s, d))
+    GraftStore.openClosure(s, cachedQuadClosureArtifact(s, d), Corpus.Quads)
       .groupBy(coalesce(col("g"), lit("default")).as("g"), col("p"),
         when(col("p") === "a", col("o")).otherwise(lit("-")).as("cls"))
       .agg(count(lit(1)).as("n"), countDistinct(col("s")).as("ns"),
@@ -2535,8 +2536,9 @@ object SparkEntry {
     if (!new java.io.File(s"$path/closure_quads/_SUCCESS").exists()) {
       val tmp = s"${path}_w${ProcessHandle.current().pid()}"
       val quads = customerQuads(s, d).unionByName(supplierNationQuads(s, d))
-      GraftStore.persistClosureQuads(
-        ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(rdfsQuadsTestTbox(s))), tmp)
+      GraftStore.persistClosure(
+        ReasonOps.rdfsClosure(quads, Corpus.Quads, Some(rdfsQuadsTestTbox(s))), tmp,
+        Corpus.Quads)
       val src = java.nio.file.Paths.get(tmp)
       try java.nio.file.Files.move(src, java.nio.file.Paths.get(path),
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -3356,7 +3358,7 @@ object SparkEntry {
         ("Reaches", SomeValuesFrom, "Place"),
         ("HQ", OnProperty, "located"),
         ("HQ", HasValue, "nation:0"))).toDF("s", "p", "o"))
-    graft.sparql.Sparql.execute(s, ReasonOps.owlFullClosure(abox),
+    graft.sparql.Sparql.execute(s, Dataset.Triples(ReasonOps.owlFullClosure(abox)),
       """PREFIX : <>
         |SELECT ?cls (COUNT(?x) AS ?n) WHERE {
         |  ?x :located "world" .
@@ -4372,9 +4374,9 @@ object SparkEntry {
     */
   private def rdfsSparqlQ(s: SparkSession, d: String): DataFrame =
     graft.sparql.Sparql.execute(s,
-      GraftStore.reasonArtifact(s, d, "rdfs_full_closure") {
+      Dataset.Triples(GraftStore.reasonArtifact(s, d, "rdfs_full_closure") {
         rdfsClosureOver(s, d)
-      },
+      }),
       """PREFIX : <>
         |SELECT ?r (COUNT(?x) AS ?n) WHERE {
         |  ?x :within ?r .
@@ -4395,8 +4397,8 @@ object SparkEntry {
     */
   private def rdfsRewriteQ(s: SparkSession, d: String): DataFrame =
     graft.sparql.Sparql.execute(s,
-      graft.ops.ReasonOps.rdfsEntailed(
-        TripleStore.tableTriples(s, d).unionAll(rdfsTestTbox(s))),
+      Dataset.Triples(graft.ops.ReasonOps.rdfsEntailed(
+        TripleStore.tableTriples(s, d).unionAll(rdfsTestTbox(s)))),
       """PREFIX : <>
         |SELECT ?r (COUNT(?x) AS ?n) WHERE {
         |  ?x :within ?r .
@@ -4509,7 +4511,7 @@ object SparkEntry {
       |""".stripMargin
 
   private def lubm2Q(s: SparkSession, d: String): DataFrame =
-    graft.sparql.Sparql.executeEncoded(s, GraftStore.forNTriples(s, lubmData),
+    graft.sparql.Sparql.execute(s, GraftStore.forNTriples(s, lubmData),
       lubmPrologue +
         """SELECT ?x ?y ?z WHERE {
           |  ?z rdf:type ub:Department . ?z ub:subOrganizationOf ?y .
@@ -4518,7 +4520,7 @@ object SparkEntry {
           |} ORDER BY ?x ?y ?z""".stripMargin)
 
   private def lubm9Q(s: SparkSession, d: String): DataFrame =
-    graft.sparql.Sparql.executeEncoded(s, GraftStore.forNTriples(s, lubmData),
+    graft.sparql.Sparql.execute(s, GraftStore.forNTriples(s, lubmData),
       lubmPrologue +
         """SELECT ?x ?y ?z WHERE {
           |  ?y rdf:type ub:Faculty . ?y ub:teacherOf ?z . ?x ub:advisor ?y .
@@ -4572,14 +4574,26 @@ object SparkEntry {
       concat(lit("region:"), col("r_regionkey")).as("s"),
       lit("rname").as("p"),
       col("r_name").as("o"))
-    graft.sparql.Sparql.registerEndpoint(s, "graft://endpoints/region", ep)
-    sparqlOver(s, d,
-      """PREFIX : <>
-        |SELECT ?n ?nm ?rn WHERE {
-        |  ?n a "Nation" ; :name ?nm ; :regionkey ?r .
-        |  SERVICE <graft://endpoints/region> { ?r :rname ?rn }
-        |  SERVICE SILENT <graft://endpoints/missing> { ?r :nope ?x }
-        |} ORDER BY ?n""".stripMargin)
+    withEndpoint(s, "graft://endpoints/region", ep) {
+      sparqlOver(s, d,
+        """PREFIX : <>
+          |SELECT ?n ?nm ?rn WHERE {
+          |  ?n a "Nation" ; :name ?nm ; :regionkey ?r .
+          |  SERVICE <graft://endpoints/region> { ?r :rname ?rn }
+          |  SERVICE SILENT <graft://endpoints/missing> { ?r :nope ?x }
+          |} ORDER BY ?n""".stripMargin)
+    }
+  }
+
+  /** Run `query` with `triples` registered as the SERVICE endpoint `iri`,
+    * and unregister it after, so no later query on the session sees it.
+    * A SERVICE block resolves its endpoint while the query compiles,
+    * inside `query`, so the result does not depend on the registry later.
+    */
+  private def withEndpoint(s: SparkSession, iri: String, triples: DataFrame)
+                          (query: => DataFrame): DataFrame = {
+    graft.sparql.Sparql.registerEndpoint(s, iri, triples)
+    try query finally graft.sparql.Sparql.unregisterEndpoint(s, iri)
   }
 
   /** The SAME federated query over the ENCODED store: the SERVICE block
@@ -4594,14 +4608,15 @@ object SparkEntry {
       concat(lit("region:"), col("r_regionkey")).as("s"),
       lit("rname").as("p"),
       col("r_name").as("o"))
-    graft.sparql.Sparql.registerEndpoint(s, "graft://endpoints/region", ep)
-    sparqlEncOver(s, d,
-      """PREFIX : <>
-        |SELECT ?n ?nm ?rn WHERE {
-        |  ?n a "Nation" ; :name ?nm ; :regionkey ?r .
-        |  SERVICE <graft://endpoints/region> { ?r :rname ?rn }
-        |  SERVICE SILENT <graft://endpoints/missing> { ?r :nope ?x }
-        |} ORDER BY ?n""".stripMargin)
+    withEndpoint(s, "graft://endpoints/region", ep) {
+      sparqlEncOver(s, d,
+        """PREFIX : <>
+          |SELECT ?n ?nm ?rn WHERE {
+          |  ?n a "Nation" ; :name ?nm ; :regionkey ?r .
+          |  SERVICE <graft://endpoints/region> { ?r :rname ?rn }
+          |  SERVICE SILENT <graft://endpoints/missing> { ?r :nope ?x }
+          |} ORDER BY ?n""".stripMargin)
+    }
   }
 
   /** SPARQL DISTINCT + ORDER + LIMIT (top-k plan via Catalyst). */

@@ -67,7 +67,7 @@ import org.apache.spark.sql.functions._
   * lazy entailment rdfsEntailed / owlEntailed / owlRlEntailed / owlFullEntailed
   * streaming       rdfsDeltaStream (stateless), rdfs/owl/owlRl/owlFullMaintainStream
   * compose         incrementNovel / composeIncrement   (graph-aware, null-safe)
-  * persist         GraftStore.persistClosure(..Append) / persistClosureQuads(..Append)
+  * persist         GraftStore.persistClosure(corpus, append) / openClosure(corpus)
   * identity        sameAsCanonicalize (materialize) / sameAsDelta (O(Δ) merge)
   * }}}
   * The RDFS rows (and through them every maintenance cell) also handle
@@ -6195,10 +6195,9 @@ final class ConsistencyMaintainer private[ops] (
   * restart loses it. The durable recover path is persist-open-replay:
   * checkpoint the SOURCE by attaching with a `checkpointLocation`
   * ([[attach]]), periodically persist [[current]]
-  * ([[graft.store.GraftStore.persistClosure]] /
-  * `persistClosureQuads`), and on restart construct the maintainer
-  * from the reopened artifact ([[graft.store.GraftStore.openClosure]] /
-  * `openClosureQuads`) — re-attaching with the same checkpoint replays
+  * ([[graft.store.GraftStore.persistClosure]], with the corpus's
+  * layout), and on restart construct the maintainer from the reopened
+  * artifact ([[graft.store.GraftStore.openClosure]]) — re-attaching with the same checkpoint replays
   * exactly the batches committed after the persisted generation
   * (updates are idempotent: [[ReasonOps.incrementNovel]] composition
   * makes a replayed batch a no-op on a closure that already holds it).

@@ -3,6 +3,7 @@ package graft.sparql
 import graft.bgp.{Bgp, C, PredStats, Term, TriplePattern, V}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.language.implicitConversions
 
 /** SPARQL 1.1 SELECT front-end.
   *
@@ -97,7 +98,7 @@ object Sparql {
                          valuesMulti: Seq[(Seq[String], Seq[Seq[String]])] = Seq.empty,
                          // GRAPH ?g { .. } / GRAPH <iri> { .. } blocks —
                          // matched against the NAMED part of a quad
-                         // dataset (executeQuads)
+                         // dataset (Dataset.Quads / QuadsEncoded)
                          graphs: Seq[(Term, Group)] = Seq.empty,
                          // SERVICE [SILENT] <iri> { .. } blocks (§SPARQL
                          // 1.1 Federated Query): evaluated against a
@@ -248,39 +249,112 @@ object Sparql {
       "ISNUMERIC", "STRSTARTS", "STRENDS", "CONTAINS", "LANGMATCHES",
       "SAMETERM")
 
-  /** ASK: does the pattern have at least one solution? The reference
-    * throws on ASK (`CustomQueryExecution.scala:175`); here it compiles
-    * to the SELECT pipeline with an early-out limit(1).
+  /** The data a query reads, one case per kind of relation:
+    *   - [[Dataset.Triples]]: an (s, p, o) relation of term strings.
+    *   - [[Dataset.Store]]: a store handle; its dictionary-encoded
+    *     triples are queried on long ids and decoded once at the top.
+    *   - [[Dataset.Quads]]: an (s, p, o, g) relation of term strings;
+    *     rows with a null `g` form the default graph, the others the
+    *     named graphs (§13).
+    *   - [[Dataset.QuadsEncoded]]: the same on certified xxhash64 ids,
+    *     with its dictionary (`GraftStore.quadDatasetEnc`, or
+    *     `TripleStore.encodeQuads` directly).
+    * Only quads take GRAPH blocks and the FROM / FROM NAMED clauses.
+    * `stats` are per-predicate counts, keyed by the predicate term (by
+    * the encoded id's decimal string for encoded quads,
+    * `GraftStore.quadStats`); they order patterns and never change
+    * results.
     */
-  def ask(spark: SparkSession, triples: DataFrame, queryText: String,
-          stats: Map[String, PredStats] = Map.empty): Boolean = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("ASK")
-    p.tryKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val q = Query(distinct = false, projection = Seq.empty, group = group,
-      groupBy = Seq.empty, orderBy = Seq.empty, limit = None)
-    compileQuery(stringEnv(spark, triples, stats), q).limit(1).count() > 0
+  sealed trait Dataset
+  object Dataset {
+    final case class Triples(triples: DataFrame,
+                             stats: Map[String, PredStats] = Map.empty) extends Dataset
+    final case class Store(handle: graft.store.StoreHandle) extends Dataset
+    final case class Quads(quads: DataFrame,
+                           stats: Map[String, PredStats] = Map.empty) extends Dataset
+    final case class QuadsEncoded(encQuads: DataFrame, dict: DataFrame,
+                                  stats: Map[String, PredStats] = Map.empty)
+        extends Dataset
+
+    /** A store handle passes wherever a dataset is expected. */
+    implicit def fromStore(handle: graft.store.StoreHandle): Dataset =
+      Store(handle)
   }
 
-  /** ASK over the ENCODED store: the existence check runs entirely on
-    * long keys — no decode stage at all.
+  /** SELECT. On encoded data this is the reference's execution model
+    * end to end (`GraphulaStageGenerator.scala:33-131`,
+    * `BindingAdapter.scala:21-82`): parse -> encode every
+    * pattern-position constant driver-side -> compile the WHOLE algebra
+    * (BGP joins, OPTIONAL, UNION, MINUS, property paths, VALUES, EXISTS,
+    * subqueries, aggregates) over long keys -> decode lazily, only at
+    * operators that inspect term values (FILTER / BIND / aggregate args /
+    * ORDER BY) and once at the top for the projected columns. At scale
+    * every shuffle in the plan moves fixed-width longs, never strings —
+    * the cost model the reference gets from its LMDB ids.
+    *
+    * Constants absent from the dictionary get query-local ids (negative on
+    * a repaired store; content hashes on a certified one), so they match
+    * nothing yet still decode back to themselves — preserving e.g. the
+    * zero-length-path solution `<absent> p* <absent>`. A var that is BOTH
+    * a BIND/alias output (value-typed) and a pattern var (id-typed) is
+    * demoted to its term string at every pattern-machinery source
+    * (`demoteToTerms`), so the whole plan sees one type for it.
+    *
+    * The top-level decode runs eagerly, inside this call
+    * (`Dictionary.decodeAll`): the encoded result is pinned and collected
+    * in one bounded job; if it holds at most `Dictionary.LocalCap` rows,
+    * one dictionary probe job decodes it on the driver and the returned
+    * DataFrame is a local relation, so collecting it starts no job. A
+    * larger result falls back to the distributed decode over the same
+    * pin, and the driver never receives more than the cap. String
+    * datasets return the lazy plan.
     */
-  def ask(spark: SparkSession, store: graft.store.StoreHandle,
-          queryText: String): Boolean = {
+  def execute(spark: SparkSession, ds: Dataset, queryText: String): DataFrame = {
+    val q = parse(queryText)
+    // trailing-ValuesClause entries are pattern-position constants too —
+    // fold them into the const-encoding walk as a synthetic inline block
+    val gConsts = q.postValues.fold(q.group)(pv =>
+      q.group.copy(valuesMulti = q.group.valuesMulti :+ pv))
+    compileQuery(
+      datasetEnv(spark, ds, gConsts, plainVarsOf(q), q.fromGraphs, q.fromNamed),
+      q, top = true)
+  }
+
+  /** [[execute]] over a store handle, kept because the benchmark in
+    * `perfbench/` calls it by this name.
+    */
+  def executeEncoded(spark: SparkSession, store: graft.store.StoreHandle,
+                     queryText: String): DataFrame =
+    execute(spark, Dataset.Store(store), queryText)
+
+  /** ASK: does the pattern have at least one solution? The reference
+    * throws on ASK (`CustomQueryExecution.scala:175`); here the WHERE
+    * group compiles with an early-out limit(1). On encoded data the
+    * existence check runs on long keys, with no decode at all.
+    */
+  def ask(spark: SparkSession, ds: Dataset, queryText: String): Boolean = {
     val p = new P(tokenize(queryText))
     val prefixes = parsePrefixes(p)
     p.eatKw("ASK")
-    p.tryKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val env = encEnvFor(spark, store, group, plainVarsOfG(group))
+    val (group, env) = parseWhere(spark, ds, p, prefixes)
     compileGroup(env, group).limit(1).count() > 0
   }
 
-  /** Dataset clauses (§13.2), legal on every query form: FROM <g> merges
-    * graphs into the query's default graph; FROM NAMED <g> restricts the
-    * GRAPH-visible set.
+  /** The tail ASK and CONSTRUCT share — DatasetClause* WhereClause
+    * ValuesClause (§19.8; the WHERE keyword is optional) — and the
+    * environment of `ds` for its group.
+    */
+  private def parseWhere(spark: SparkSession, ds: Dataset, p: P,
+                         prefixes: Map[String, String]): (Group, Env) = {
+    val (fromGraphs, fromNamed) = parseDatasetClauses(p, prefixes)
+    p.tryKw("WHERE")
+    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
+    (group, datasetEnv(spark, ds, group, plainVarsOfG(group), fromGraphs, fromNamed))
+  }
+
+  /** Dataset clauses (§13.2), parsed on every query form and legal over
+    * quads only ([[datasetEnv]]): FROM <g> merges graphs into the query's
+    * default graph; FROM NAMED <g> restricts the GRAPH-visible set.
     */
   private def parseDatasetClauses(p: P, prefixes: Map[String, String])
       : (Seq[String], Seq[String]) = {
@@ -313,6 +387,8 @@ object Sparql {
     * solution; the result is a deduplicated (s, p, o) graph, and template
     * triples with unbound variables are dropped (SPARQL 1.1 §16.2). The
     * reference throws on CONSTRUCT (`CustomQueryExecution.scala:215`).
+    * Over quads the WHERE pattern sees the full §13 dataset, and the
+    * result is still one plain graph, not a quad set (§16.2).
     *
     * Template blank nodes (`_:label`) instantiate FRESH per solution: the
     * blank id is skolemized from the label plus a content hash of the
@@ -321,52 +397,34 @@ object Sparql {
     * the reference's `_:` id convention (`Dictionary.scala:232-261`),
     * made deterministic (per DISTINCT solution) so results stay
     * oracle-comparable, like the GROUP_CONCAT sort.
+    *
+    * On encoded data the WHERE algebra runs on long keys, and
+    * `decodeFinal` decodes every solution column that holds ids (all but
+    * the value-typed ones) in one pass before the template instantiates
+    * from the term strings — so blank skolem ids are IDENTICAL to those
+    * of the string datasets for the same solutions.
     */
-  def construct(spark: SparkSession, triples: DataFrame, queryText: String,
-                stats: Map[String, PredStats] = Map.empty): DataFrame = {
+  def construct(spark: SparkSession, ds: Dataset, queryText: String): DataFrame = {
     val p = new P(tokenize(queryText))
     val prefixes = parsePrefixes(p)
-    p.eatKw("CONSTRUCT")
-    val template = templateAnonBlanks(parseGroup(p, prefixes))
-    require(template.filters.isEmpty && template.optionals.isEmpty &&
-      template.unions.isEmpty && template.minuses.isEmpty &&
-      template.paths.isEmpty && template.binds.isEmpty &&
-      template.subqueries.isEmpty && template.subgroups.isEmpty &&
-      template.graphs.isEmpty && template.services.isEmpty,
-      "CONSTRUCT template must contain only triple patterns")
-    p.eatKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val sols = compileGroup(stringEnv(spark, triples, stats), group)
-    instantiate(template, sols)
-  }
-
-  /** CONSTRUCT over the ENCODED store: the WHERE algebra runs on long
-    * keys; solutions decode once (the single decode stage) and the
-    * template instantiates from the decoded strings, so blank skolem ids
-    * are IDENTICAL to the string path's for the same solutions.
-    */
-  def construct(spark: SparkSession, store: graft.store.StoreHandle,
-                queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("CONSTRUCT")
-    val template = templateAnonBlanks(parseGroup(p, prefixes))
-    require(template.filters.isEmpty && template.optionals.isEmpty &&
-      template.unions.isEmpty && template.minuses.isEmpty &&
-      template.paths.isEmpty && template.binds.isEmpty &&
-      template.subqueries.isEmpty && template.subgroups.isEmpty &&
-      template.graphs.isEmpty && template.services.isEmpty,
-      "CONSTRUCT template must contain only triple patterns")
-    p.eatKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val env = encEnvFor(spark, store, group, plainVarsOfG(group))
+    val template = parseConstructTemplate(p, prefixes)
+    val (group, env) = parseWhere(spark, ds, p, prefixes)
     instantiate(template, decodeFinal(env, compileGroup(env, group)))
   }
 
-  /** Template instantiation over decoded solutions (shared by both
-    * CONSTRUCT paths): one select per template triple, unbound-variable
-    * rows dropped, `_:label` blanks skolemized per solution row.
+  /** `CONSTRUCT { template }`, shared by [[construct]] and
+    * [[constructStream]]: the template may hold only triple patterns.
     */
+  private def parseConstructTemplate(p: P, prefixes: Map[String, String]): Group = {
+    p.eatKw("CONSTRUCT")
+    val template = templateAnonBlanks(parseGroup(p, prefixes))
+    require(template == emptyGroup.copy(triples = template.triples),
+      "CONSTRUCT template must contain only triple patterns")
+    template
+  }
+
+  private val emptyGroup = Group(Seq.empty, Seq.empty, Seq.empty, Seq.empty)
+
   /** CONSTRUCT templates: an anonymous `[ ... ]` is a TEMPLATE blank
     * node — fresh per solution (SPARQL 1.1 sec 16.2.1) — so the parser's
     * hidden `__bn` vars rewrite to labeled blank constants and skolemize
@@ -384,6 +442,10 @@ object Sparql {
       TriplePattern(fix(tp.s), fix(tp.p), fix(tp.o))))
   }
 
+  /** Template instantiation over decoded solutions: one select per
+    * template triple, unbound-variable rows dropped, `_:label` blanks
+    * skolemized per solution row, the graph deduplicated.
+    */
   private def instantiate(template: Group, sols: DataFrame): DataFrame =
     instantiateBag(template, sols).distinct()
 
@@ -423,14 +485,7 @@ object Sparql {
                       stats: Map[String, PredStats] = Map.empty): DataFrame = {
     val p = new P(tokenize(queryText))
     val prefixes = parsePrefixes(p)
-    p.eatKw("CONSTRUCT")
-    val template = templateAnonBlanks(parseGroup(p, prefixes))
-    require(template.filters.isEmpty && template.optionals.isEmpty &&
-      template.unions.isEmpty && template.minuses.isEmpty &&
-      template.paths.isEmpty && template.binds.isEmpty &&
-      template.subqueries.isEmpty && template.subgroups.isEmpty &&
-      template.graphs.isEmpty && template.services.isEmpty,
-      "CONSTRUCT template must contain only triple patterns")
+    val template = parseConstructTemplate(p, prefixes)
     p.eatKw("WHERE")
     val group = parseGroup(p, prefixes)
     val q = Query(distinct = false, projection = Seq.empty, group = group,
@@ -443,49 +498,26 @@ object Sparql {
   /** DESCRIBE as a concise bounded description (the result shape is
     * implementation-defined by SPARQL 1.1 §16.4; CBD is the common
     * convention): the described resources' OUTGOING triples, their
-    * INCOMING edges, and the blank-node closure — any `_:` object pulled
+    * INCOMING edges, and the blank-node closure — any blank object pulled
     * in recursively contributes its own outgoing triples, to fixpoint.
     * Forms: `DESCRIBE <iri>` and `DESCRIBE ?v [WHERE { ... }]`. The
     * reference throws on DESCRIBE (`CustomQueryExecution.scala:239`).
+    *
+    * Over quads the subjects resolve against the §13 dataset (WHERE may
+    * use GRAPH blocks) and the description expands over the UNION of the
+    * default graph and the GRAPH-visible named graphs — the most useful
+    * bounded description when a resource's triples span graphs. On
+    * encoded data the expansion runs on long keys, blanks are recognized
+    * by a semi-join against the dictionary's `_:` ids, and the
+    * description decodes once at the end.
     */
-  def describe(spark: SparkSession, triples: DataFrame, queryText: String,
-               stats: Map[String, PredStats] = Map.empty): DataFrame = {
+  def describe(spark: SparkSession, ds: Dataset, queryText: String): DataFrame = {
     val p = new P(tokenize(queryText))
     val prefixes = parsePrefixes(p)
     val (vars, consts, whereG, fromG, fromN) = parseDescribeHeader(p, prefixes)
-    require(fromG.isEmpty && fromN.isEmpty,
-      "FROM/FROM NAMED need a quad dataset - use Sparql.describeQuads")
-    import spark.implicits._
-    val varSubjects = whereG match {
-      case Some(g) =>
-        val sols = compileGroup(stringEnv(spark, triples, stats), g)
-        vars.filter(sols.columns.contains)
-          .map(v => sols.select(col(v).as("s")))
-      case None => Seq.empty
-    }
-    val constSubjects =
-      if (consts.isEmpty) Seq.empty else Seq(consts.toDF("s"))
-    val subjects = (varSubjects ++ constSubjects)
-      .reduce(_.unionAll(_)).distinct()
-    cbd(triples, subjects,
-      nodes => nodes.where(col("s").startsWith("_:")))
-  }
-
-  /** DESCRIBE over the ENCODED store: subjects resolve to ids, the CBD
-    * expansion (outgoing + incoming + blank closure) runs on long keys —
-    * blanks are recognized by a semi-join against the dictionary's `_:`
-    * rows — and the result decodes once at the top.
-    */
-  def describe(spark: SparkSession, store: graft.store.StoreHandle,
-               queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    val (vars, consts, whereG, fromG, fromN) = parseDescribeHeader(p, prefixes)
-    require(fromG.isEmpty && fromN.isEmpty,
-      "FROM/FROM NAMED need a quad dataset - use Sparql.describeQuads")
-    val g = whereG.getOrElse(Group(Seq.empty, Seq.empty, Seq.empty, Seq.empty))
-    val env = encEnvFor(spark, store, g,
-      whereG.map(plainVarsOfG).getOrElse(Set.empty), consts.toSet)
+    val g = whereG.getOrElse(emptyGroup)
+    val env = datasetEnv(spark, ds, g, plainVarsOfG(g), fromG, fromN,
+      extra = consts)
     import spark.implicits._
     val varSubjects = whereG match {
       case Some(_) =>
@@ -496,16 +528,23 @@ object Sparql {
     }
     val constSubjects =
       if (consts.isEmpty) Seq.empty
+      else if (env.enc.isEmpty) Seq(consts.toDF("s"))
       else Seq(consts.map(c => env.cval(c).asInstanceOf[Long]).toDF("s"))
     val subjects = (varSubjects ++ constSubjects)
       .reduce(_.unionAll(_)).distinct()
-    val blankIds = store.dict.where(col("term").startsWith("_:"))
-      .select(col("id").as("s"))
-    // cbd seals its result, so the decode pass reads a pinned frame already
-    val described = cbd(store.enc, subjects,
-      nodes => nodes.join(blankIds, Seq("s"), "left_semi"))
-    graft.dict.Dictionary.decodeAll(described, env.dictAll, Seq("s", "p", "o"))
-      .select(col("s"), col("p"), col("o"))
+    val relation = env.quads.fold(env.triples)(named =>
+      env.triples.unionByName(named.select("s", "p", "o")))
+    env.enc match {
+      case None =>
+        cbd(relation, subjects, _.where(col("s").startsWith("_:")))
+      case Some(e) =>
+        val blankIds =
+          broadcast(e.dict.where(col("term").startsWith("_:")).select(col("id").as("s")))
+        // cbd seals its result, so the decode reads a pinned frame already
+        val described = cbd(relation, subjects, _.join(blankIds, Seq("s"), "left_semi"))
+        graft.dict.Dictionary.decodeAll(described, env.dictAll, Seq("s", "p", "o"))
+          .select("s", "p", "o")
+    }
   }
 
   private def parseDescribeHeader(p: P, prefixes: Map[String, String])
@@ -534,7 +573,7 @@ object Sparql {
     val withVals =
       if (p.peek.exists(p.isKw(_, "VALUES")))
         Some(withTrailingValues(p, prefixes,
-          whereG.getOrElse(Group(Seq.empty, Seq.empty, Seq.empty, Seq.empty))))
+          whereG.getOrElse(emptyGroup)))
       else whereG
     (vars, consts, withVals, fromGraphs, fromNamed)
   }
@@ -899,7 +938,7 @@ object Sparql {
                                 h: graft.store.StoreHandle,
                                 ins: Option[Group], where: Group)
       : Option[(LocalSols, Map[Long, String], Set[Long])] = {
-    val env = encEnvFor(spark, h, where, plainVarsOfG(where))
+    val env = datasetEnv(spark, Dataset.Store(h), where, plainVarsOfG(where))
     val encSols = compileGroup(env, where)
     // insert-template constant hashes ride the solution-decode probe, so
     // the append's hash-claim check needs no second dictionary job
@@ -972,7 +1011,7 @@ object Sparql {
         // oversized solutions: recompile against the CURRENT handle (a
         // prefetched big-sols result carries no data) and run the
         // pinned distributed flow
-        val env = encEnvFor(spark, h, where, plainVarsOfG(where))
+        val env = datasetEnv(spark, Dataset.Store(h), where, plainVarsOfG(where))
         val encSols = compileGroup(env, where)
         val pins = new graft.Pins
         val solsRaw = decodeFinal(env, encSols)
@@ -1791,7 +1830,8 @@ object Sparql {
                                enc: Option[EncEnv],
                                // NAMED part of a quad dataset (s,p,o,g),
                                // already restricted per FROM NAMED —
-                               // present only via executeQuads
+                               // present only for a quad Dataset
+                               // (datasetEnv) and the quad Update WHERE
                                quads: Option[DataFrame] = None) {
     /** Encode a pattern-position constant (dictionary id in encoded mode). */
     def cval(v: Any): Any = enc match {
@@ -1822,9 +1862,85 @@ object Sparql {
     }
   }
 
-  private def stringEnv(spark: SparkSession, triples: DataFrame,
-                        stats: Map[String, PredStats]): Env =
-    Env(spark, triples, stats, 1000000L, None)
+  /** The compilation environment of `ds` for one query group — the one
+    * place the four datasets differ before their common compile:
+    *   - the relation the patterns scan, and its stats;
+    *   - for encoded data, the driver-side encoding of the group's
+    *     constants and of `extra` ([[encEnv]]);
+    *   - for quads, the §13.2 dataset. With no FROM/FROM NAMED the
+    *     default graph is the g-null slice and every named graph is
+    *     GRAPH-visible; FROM <g> MERGES the listed graphs into the
+    *     default graph, FROM NAMED <g> restricts the GRAPH-visible set,
+    *     and a query carrying either clause describes its dataset
+    *     exhaustively (an absent FROM with FROM NAMED present means an
+    *     empty default graph, and vice versa). Graph ids go through
+    *     `cval`, so one slicing serves both term spaces.
+    * Triples and a store handle are a single graph and reject FROM and
+    * FROM NAMED.
+    */
+  private def datasetEnv(spark: SparkSession, ds: Dataset,
+                         g: Group = emptyGroup, plain: Set[String] = Set.empty,
+                         fromGraphs: Seq[String] = Seq.empty,
+                         fromNamed: Seq[String] = Seq.empty,
+                         extra: Seq[String] = Seq.empty): Env = {
+    val explicitDataset = fromGraphs.nonEmpty || fromNamed.nonEmpty
+    def quadEnv(whole: Env): Env = {
+      def in(graphs: Seq[String]): Column =
+        if (graphs.isEmpty) lit(false) else col("g").isin(graphs.map(whole.cval): _*)
+      val (default, named) =
+        if (explicitDataset) (in(fromGraphs), in(fromNamed))
+        else (col("g").isNull, col("g").isNotNull)
+      whole.copy(triples = whole.triples.where(default).select("s", "p", "o"),
+        quads = Some(whole.triples.where(named)))
+    }
+    ds match {
+      case Dataset.Quads(quads, stats) =>
+        quadEnv(Env(spark, quads, stats, 1000000L, None))
+      case Dataset.QuadsEncoded(encQuads, dict, stats) =>
+        val total = if (stats.nonEmpty) stats.values.map(_.cnt).sum else 1000000L
+        quadEnv(Env(spark, encQuads, stats, total, Some(encEnv(spark, dict,
+          pureHash = true, g, plain, extra ++ fromGraphs ++ fromNamed))))
+      case _ if explicitDataset =>
+        throw new IllegalArgumentException(
+          "FROM/FROM NAMED need a quad dataset - use Sparql.Dataset.Quads " +
+            "or Sparql.Dataset.QuadsEncoded")
+      case Dataset.Triples(triples, stats) =>
+        Env(spark, triples, stats, 1000000L, None)
+      case Dataset.Store(h) =>
+        Env(spark, h.enc, h.encStats, h.totalCnt,
+          Some(encEnv(spark, h.dict, h.pureHash, g, plain, extra)))
+    }
+  }
+
+  /** The encoded-mode context for one group over `dict`: every
+    * pattern-position constant of `g`, and every `extra` term, resolved
+    * to its id driver-side. On a certified (pure-hash) dictionary ids
+    * come from hashing alone, and the dictionary is probed only for the
+    * constants that can surface in output while absent from it — path
+    * endpoints (a zero-length path matches a constant endpoint against
+    * itself) and VALUES entries (they bind vars) — usually an empty set,
+    * so most queries skip the probe job entirely. A repaired store
+    * resolves every constant through the dictionary; absent ones get
+    * fresh negative ids.
+    */
+  private def encEnv(spark: SparkSession, dict: DataFrame, pureHash: Boolean,
+                     g: Group, plain: Set[String],
+                     extra: Seq[String] = Seq.empty): EncEnv = {
+    import graft.dict.Dictionary
+    val consts = (groupConsts(g) ++ extra).toSeq.sorted
+    val probeSet =
+      if (pureHash) (pathEndpointConsts(g) ++ inlineValueConsts(g)).toSeq.sorted
+      else consts
+    val present = Dictionary.lookup(dict, probeSet)
+    val ids: Map[String, Long] =
+      if (pureHash) Dictionary.hashLiterals(spark, consts)
+      else {
+        val fresh = Iterator.from(1)
+        consts.map(c => c -> present.getOrElse(c, -fresh.next().toLong)).toMap
+      }
+    EncEnv(dict, ids, probeSet.filterNot(present.contains).map(c => ids(c) -> c),
+      plain)
+  }
 
   /** SPARQL 1.1 Federated Query endpoint registry: `SERVICE <iri>`
     * evaluates against the triple relation registered here under that
@@ -2210,81 +2326,6 @@ object Sparql {
       childGroups(g).flatMap(serviceBoundVars) ++
       g.subqueries.flatMap(sq => serviceBoundVars(sq.group))
 
-  /** Full SPARQL lifecycle over the ENCODED store — the reference's
-    * execution model end-to-end (`GraphulaStageGenerator.scala:33-131`,
-    * `BindingAdapter.scala:21-82`): parse -> encode every pattern-position
-    * constant driver-side -> compile the WHOLE algebra (BGP joins,
-    * OPTIONAL, UNION, MINUS, property paths, VALUES, EXISTS, subqueries,
-    * aggregates) over long keys -> decode lazily, only at operators that
-    * inspect term values (FILTER / BIND / aggregate args / ORDER BY) and
-    * once at the top for the projected columns. At scale every shuffle in
-    * the plan moves fixed-width longs, never strings — the cost model the
-    * reference gets from its LMDB ids.
-    *
-    * Constants absent from the dictionary get query-local ids (negative on
-    * a repaired store; content hashes on a certified one), so they match
-    * nothing yet still decode back to themselves — preserving e.g. the
-    * zero-length-path solution `<absent> p* <absent>`.
-    *
-    * The top-level decode runs eagerly, inside this call
-    * (`Dictionary.decodeAll`): the encoded result is pinned and collected
-    * in one bounded job; if it holds at most `Dictionary.LocalCap` rows,
-    * one dictionary probe job decodes it on the driver and the returned
-    * DataFrame is a local relation, so collecting it starts no job. A
-    * larger result falls back to the distributed decode over the same
-    * pin, and the driver never receives more than the cap.
-    */
-  def executeEncoded(spark: SparkSession, store: graft.store.StoreHandle,
-                     queryText: String): DataFrame = {
-    val q = parse(queryText)
-    val plain = plainVarsOf(q)
-    // trailing-ValuesClause entries are pattern-position constants too —
-    // fold them into the const-encoding walk as a synthetic inline block
-    val gConsts = q.postValues.fold(q.group)(pv =>
-      q.group.copy(valuesMulti = q.group.valuesMulti :+ pv))
-    // A var can be BOTH a BIND/alias output (value-typed) and a pattern
-    // var (id-typed) — e.g. a subquery alias joined by an outer pattern,
-    // or a BIND target reused by a later pattern. Such vars are DEMOTED
-    // to their term strings at every pattern-machinery source
-    // (`demoteToTerms`), so the whole downstream plan sees one consistent
-    // type; the (small) cost is paid only for the contaminated vars,
-    // everything else still joins on long ids.
-    compileQuery(encEnvFor(spark, store, gConsts, plain), q, top = true)
-  }
-
-  /** Build the encoded-mode environment for a group: resolve every
-    * pattern-position constant to its id driver-side. On a certified
-    * store ids come from hashing alone and the dictionary is probed only
-    * for path ENDPOINT constants (the one position where an absent
-    * constant must still decode back to itself, plus any `extraProbe`
-    * terms the caller needs decodable) — usually an empty set, so most
-    * queries skip the probe job entirely. A repaired store resolves every
-    * constant through the dictionary.
-    */
-  private def encEnvFor(spark: SparkSession, store: graft.store.StoreHandle,
-                        g: Group, plain: Set[String],
-                        extraProbe: Set[String] = Set.empty): Env = {
-    import graft.dict.Dictionary
-    val consts = (groupConsts(g) ++ extraProbe).toSeq.sorted
-    val probeSet =
-      if (store.pureHash)
-        // path endpoints can surface while absent; VALUES entries always
-        // surface (they bind vars) — both need decode mappings
-        (pathEndpointConsts(g) ++ inlineValueConsts(g) ++ extraProbe)
-          .toSeq.sorted
-      else consts
-    val present = Dictionary.lookup(store.dict, probeSet)
-    val ids: Map[String, Long] =
-      if (store.pureHash) Dictionary.hashLiterals(spark, consts)
-      else {
-        val fresh = Iterator.from(1)
-        consts.map(c => c -> present.getOrElse(c, -fresh.next().toLong)).toMap
-      }
-    val localDict = probeSet.filterNot(present.contains).map(c => ids(c) -> c)
-    Env(spark, store.enc, store.encStats, store.totalCnt,
-      Some(EncEnv(store.dict, ids, localDict, plain)))
-  }
-
   /** Continuous SPARQL over a live triple stream (BGP+FILTER subset, the
     * reference is strictly batch — this is the Structured-Streaming
     * extension path): the FULL per-pattern delta — every pattern takes a
@@ -2662,7 +2703,7 @@ object Sparql {
     // arms' rows, as in the batch compiler
     var df = armChoices.map(arm)
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val senv = stringEnv(spark, staticTriples, stats)
+    val senv = datasetEnv(spark, Dataset.Triples(staticTriples, stats))
     // property paths read the STATIC store only: the path relation is
     // bounded, so the constrain/extend join is append-safe. Stream edges
     // do NOT extend traversals — a path over live edges would need
@@ -2688,7 +2729,7 @@ object Sparql {
     // the stream-endpoint join is append-safe like a subquery's
     q.group.services.foreach { case (iri, inner, silent) =>
       serviceSolutions(spark, iri, silent,
-        remote => compileGroup(stringEnv(spark, remote, Map.empty), inner))
+        remote => compileGroup(datasetEnv(spark, Dataset.Triples(remote)), inner))
         .foreach { svc =>
           val shared = df.columns.intersect(svc.columns).toSeq
           df = if (shared.isEmpty) df.crossJoin(svc)
@@ -2951,10 +2992,6 @@ object Sparql {
         date_format(col("w.end"), "yyyy-MM-dd HH:mm:ss").as("window_end")) ++
         q.groupBy.map(col) ++ aggs.map(a => col(a.alias)): _*)
   }
-
-  def execute(spark: SparkSession, triples: DataFrame, queryText: String,
-              stats: Map[String, PredStats] = Map.empty): DataFrame =
-    compileQuery(stringEnv(spark, triples, stats), parse(queryText))
 
   /** Rewrite aggregate calls inside projection expressions / HAVING to
     * references of internally-aliased aggregate columns (SPARQL 1.1
@@ -3271,7 +3308,7 @@ object Sparql {
       // SILENT on an unreachable endpoint: the unit solution —
       // join-identity, outer solutions pass through unchanged
       serviceSolutions(env.spark, iri, silent,
-        remote => compileGroup(stringEnv(env.spark, remote, Map.empty), inner))
+        remote => compileGroup(datasetEnv(env.spark, Dataset.Triples(remote)), inner))
         .foreach(joinIn)
     }
     // GRAPH blocks match the NAMED part of the quad dataset
@@ -3430,13 +3467,14 @@ object Sparql {
     * and subqueries under a variable graph would need per-graph closure
     * state and stay rejected with a clear error.
     *
-    * Runs on the string path (executeQuads); statistics-based pattern
-    * ordering is skipped — the named part has no per-predicate stats.
+    * Serves both quad datasets: on encoded quads the graph column and
+    * every constant are ids (`cval`).
     */
   private def compileGraphBlock(env: Env, gterm: Term,
                                 inner: Group): DataFrame = {
     val quads = env.quads.getOrElse(throw new IllegalArgumentException(
-      "GRAPH requires a quad dataset — use Sparql.executeQuads"))
+      "GRAPH requires a quad dataset — use Sparql.Dataset.Quads or " +
+        "Sparql.Dataset.QuadsEncoded"))
     gterm match {
       case C(v) =>
         val slice = quads.where(col("g") === lit(env.cval(v)))
@@ -3555,7 +3593,7 @@ object Sparql {
         // active graph — same join-in as at group level
         inner.services.foreach { case (iri, ig, silent) =>
           serviceSolutions(env.spark, iri, silent,
-            remote => compileGroup(stringEnv(env.spark, remote, Map.empty), ig))
+            remote => compileGroup(datasetEnv(env.spark, Dataset.Triples(remote)), ig))
             .foreach(joinIn)
         }
         inner.unions.foreach { case (l, r) =>
@@ -3633,291 +3671,6 @@ object Sparql {
         inner.filters.foreach(f => df = applyFilter(env, df, f))
         df
     }
-  }
-
-  /** SPARQL over a QUAD dataset — the named-graph surface the reference
-    * lacks entirely (its store is a single graph; named-graph Update
-    * targets error, §2.4). The dataset is one DataFrame (s, p, o, g):
-    * rows with NULL g form the default graph, non-null g the named
-    * graphs. §13.2 dataset clauses apply: with no FROM/FROM NAMED the
-    * default graph is the g-null slice and every named graph is
-    * GRAPH-visible; FROM <g> MERGES the listed graphs into the query's
-    * default graph, FROM NAMED <g> restricts the GRAPH-visible set, and
-    * per the spec a query carrying either clause describes its dataset
-    * exhaustively (an absent FROM with FROM NAMED present means an empty
-    * default graph, and vice versa).
-    */
-  def executeQuads(spark: SparkSession, quads: DataFrame, queryText: String,
-                   stats: Map[String, PredStats] = Map.empty): DataFrame = {
-    val q = parse(queryText)
-    val env = quadEnv(spark, quads, q.fromGraphs, q.fromNamed, stats)
-    compileQuery(env, q)
-  }
-
-  /** §13.2 dataset construction over a quad relation: the (possibly
-    * FROM-merged) default graph becomes the env's triple relation, the
-    * (possibly FROM NAMED-restricted) named part stays GRAPH-visible.
-    * A query carrying either clause describes its dataset exhaustively.
-    */
-  private def quadEnv(spark: SparkSession, quads: DataFrame,
-                      fromGraphs: Seq[String], fromNamed: Seq[String],
-                      stats: Map[String, PredStats] = Map.empty): Env = {
-    val explicitDataset = fromGraphs.nonEmpty || fromNamed.nonEmpty
-    val defaultG =
-      if (!explicitDataset) quads.where(col("g").isNull).select("s", "p", "o")
-      else if (fromGraphs.isEmpty) quads.where(lit(false)).select("s", "p", "o")
-      else quads.where(col("g").isin(fromGraphs: _*)).select("s", "p", "o")
-    val named =
-      if (!explicitDataset) quads.where(col("g").isNotNull)
-      else if (fromNamed.isEmpty) quads.where(lit(false))
-      else quads.where(col("g").isin(fromNamed: _*))
-    stringEnv(spark, defaultG, stats).copy(quads = Some(named))
-  }
-
-  /** ENCODED quad execution — the triple side's lazy-decode discipline
-    * applied to named graphs: every join (pattern scans, graph
-    * confinement, per-graph closures, subqueries) shuffles fixed-width
-    * longs for s/p/o AND g, and projected columns decode once at the
-    * top. `encQuads` + `dict` come from `GraftStore.quadDatasetEnc` (or
-    * `TripleStore.encodeQuads` directly): certified xxhash64 ids, so
-    * query constants resolve by hashing alone — no driver probe except
-    * for the surfacing set (path endpoints, VALUES entries).
-    */
-  def executeQuadsEncoded(spark: SparkSession, encQuads: DataFrame,
-                          dict: DataFrame, queryText: String,
-                          // per-predicate stats keyed by the ENCODED id's
-                          // decimal string (certified stores hash
-                          // deterministically, so GraftStore.quadStats
-                          // derives them driver-side) — advisory: they
-                          // drive pattern ordering, never results
-                          stats: Map[String, PredStats] = Map.empty)
-      : DataFrame = {
-    val q = parse(queryText)
-    val gConsts = q.postValues.fold(q.group)(pv =>
-      q.group.copy(valuesMulti = q.group.valuesMulti :+ pv))
-    val env = quadEncEnv(spark, encQuads, dict, gConsts, plainVarsOf(q),
-      q.fromGraphs, q.fromNamed, stats)
-    compileQuery(env, q, top = true)
-  }
-
-  /** The encoded-mode context over a certified (pure-hash) quad
-    * dictionary for one group: hash every pattern constant (and `extra`)
-    * driver-side, probe only the surfacing set (path endpoints, VALUES
-    * entries) against the dictionary for decode mappings.
-    */
-  private def hashEncEnv(spark: SparkSession, dict: DataFrame, g: Group,
-                         extra: Seq[String], plain: Set[String]): EncEnv = {
-    import graft.dict.Dictionary
-    val ids = Dictionary.hashLiterals(spark, (groupConsts(g) ++ extra).toSeq.sorted)
-    val probeSet = (pathEndpointConsts(g) ++ inlineValueConsts(g)).toSeq.sorted
-    val present = Dictionary.lookup(dict, probeSet)
-    EncEnv(dict, ids, probeSet.filterNot(present.contains).map(c => ids(c) -> c),
-      plain)
-  }
-
-  /** The ENCODED quad environment for one group ([[hashEncEnv]]), with
-    * the §13.2 dataset sliced on encoded graph ids. Shared by the four
-    * encoded quad query forms.
-    */
-  private def quadEncEnv(spark: SparkSession, encQuads: DataFrame,
-                         dict: DataFrame, gConsts: Group,
-                         plain: Set[String],
-                         fromGraphs: Seq[String], fromNamed: Seq[String],
-                         stats: Map[String, PredStats] = Map.empty): Env = {
-    val e = hashEncEnv(spark, dict, gConsts, fromGraphs ++ fromNamed, plain)
-    val explicitDataset = fromGraphs.nonEmpty || fromNamed.nonEmpty
-    val fromG = fromGraphs.map(e.ids)
-    val fromN = fromNamed.map(e.ids)
-    val defaultG =
-      if (!explicitDataset) encQuads.where(col("g").isNull).select("s", "p", "o")
-      else if (fromG.isEmpty) encQuads.where(lit(false)).select("s", "p", "o")
-      else encQuads.where(col("g").isin(fromG: _*)).select("s", "p", "o")
-    val named =
-      if (!explicitDataset) encQuads.where(col("g").isNotNull)
-      else if (fromN.isEmpty) encQuads.where(lit(false))
-      else encQuads.where(col("g").isin(fromN: _*))
-    val total =
-      if (stats.nonEmpty) stats.values.map(_.cnt).sum else 1000000L
-    Env(spark, defaultG, stats, total, Some(e), quads = Some(named))
-  }
-
-  /** ASK over an ENCODED quad dataset: the existence probe runs on long
-    * keys end-to-end — no decode stage at all.
-    */
-  def askQuadsEncoded(spark: SparkSession, encQuads: DataFrame,
-                      dict: DataFrame, queryText: String): Boolean = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("ASK")
-    val (fromG, fromN) = parseDatasetClauses(p, prefixes)
-    p.tryKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val env = quadEncEnv(spark, encQuads, dict, group, plainVarsOfG(group),
-      fromG, fromN)
-    compileGroup(env, group).limit(1).count() > 0
-  }
-
-  /** CONSTRUCT over an ENCODED quad dataset: the WHERE pattern compiles
-    * on long keys; ONLY the template's variables decode (one slim pass),
-    * then the template instantiates exactly like the string path.
-    */
-  def constructQuadsEncoded(spark: SparkSession, encQuads: DataFrame,
-                            dict: DataFrame, queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("CONSTRUCT")
-    val template = templateAnonBlanks(parseGroup(p, prefixes))
-    require(template.filters.isEmpty && template.optionals.isEmpty &&
-      template.unions.isEmpty && template.minuses.isEmpty &&
-      template.paths.isEmpty && template.binds.isEmpty &&
-      template.subqueries.isEmpty && template.subgroups.isEmpty &&
-      template.graphs.isEmpty,
-      "CONSTRUCT template must contain only triple patterns")
-    val (fromG, fromN) = parseDatasetClauses(p, prefixes)
-    p.eatKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    val env = quadEncEnv(spark, encQuads, dict, group, plainVarsOfG(group),
-      fromG, fromN)
-    instantiate(template, decodeFinal(env, compileGroup(env, group)))
-  }
-
-  /** DESCRIBE over an ENCODED quad dataset — [[describeQuads]] semantics
-    * (CBD over the merged default + GRAPH-visible graphs) with the
-    * expansion on long keys: subjects resolve encoded, blank-node ids
-    * come from ONE dictionary slice (`_:` prefix scan), and only the
-    * final description decodes.
-    */
-  def describeQuadsEncoded(spark: SparkSession, encQuads: DataFrame,
-                           dict: DataFrame, queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    val (vars, consts, whereG, fromG, fromN) = parseDescribeHeader(p, prefixes)
-    val emptyG = Group(Seq.empty, Seq.empty, Seq.empty, Seq.empty)
-    val env = quadEncEnv(spark, encQuads, dict,
-      whereG.getOrElse(emptyG), plainVarsOfG(whereG.getOrElse(emptyG)),
-      fromG, fromN)
-    import spark.implicits._
-    val varSubjects = whereG match {
-      case Some(g) =>
-        val sols = compileGroup(env, g)
-        vars.filter(sols.columns.contains)
-          .map(v => sols.select(col(v).as("s")))
-      case None => Seq.empty
-    }
-    val constSubjects =
-      if (consts.isEmpty) Seq.empty
-      else Seq(consts.map(graft.dict.Dictionary.termHashLocal).toDF("s"))
-    val subjects = (varSubjects ++ constSubjects)
-      .reduce(_.unionAll(_)).distinct()
-    val merged = env.triples.unionByName(
-      env.quads.get.select("s", "p", "o"))
-    // blank ids: one slim dictionary scan — the CBD recursion tests
-    // blankness by (broadcast) semi-join instead of a string prefix test
-    val blanks = dict.where(col("term").startsWith("_:")).select(col("id"))
-    val out = cbdEncoded(spark, merged, subjects, blanks)
-    graft.dict.Dictionary.decodeAll(out, env.dictAll, Seq("s", "p", "o"))
-  }
-
-  /** Concise Bounded Description over an ENCODED triple relation — the
-    * exact shape of the string-path [[cbd]]: outgoing ∪ incoming edges
-    * of the subjects, then the blank-OBJECT closure folds each blank's
-    * own outgoing description in (blank membership via the broadcast
-    * blank-id set instead of a string prefix test).
-    */
-  private def cbdEncoded(spark: SparkSession, triples: DataFrame,
-                         subjects0: DataFrame, blanks: DataFrame): DataFrame = {
-    val pins = new graft.Pins
-    val subjects = pins.pin(subjects0.select(col("s")).distinct())
-    val outgoing = triples.join(broadcast(subjects), Seq("s"), "left_semi")
-    val incoming = triples.join(
-      broadcast(subjects.select(col("s").as("o"))), Seq("o"), "left_semi")
-      .select(col("s"), col("p"), col("o"))
-    var described = outgoing.unionAll(incoming)
-    var expanded = subjects
-    def blankObjs(df: DataFrame): DataFrame =
-      pins.pin(df.select(col("o").as("s")).distinct()
-        .join(broadcast(blanks.select(col("id").as("s"))), Seq("s"), "left_semi")
-        .join(expanded, Seq("s"), "left_anti"))
-    var frontier = blankObjs(described)
-    var rounds = 0
-    while (!frontier.isEmpty) {
-      if (rounds >= 50)
-        throw new IllegalStateException(
-          s"DESCRIBE blank-node closure did not converge after $rounds rounds")
-      val step = pins.pin(triples.join(broadcast(frontier), Seq("s"), "left_semi"))
-      described = described.unionAll(step)
-      expanded = pins.pin(expanded.unionAll(frontier))
-      frontier = blankObjs(step)
-      rounds += 1
-    }
-    pins.seal(described.distinct())
-  }
-
-  /** ASK over a quad dataset — GRAPH blocks and dataset clauses apply. */
-  def askQuads(spark: SparkSession, quads: DataFrame,
-               queryText: String): Boolean = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("ASK")
-    val (fromG, fromN) = parseDatasetClauses(p, prefixes)
-    p.tryKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    compileGroup(quadEnv(spark, quads, fromG, fromN), group)
-      .limit(1).count() > 0
-  }
-
-  /** CONSTRUCT over a quad dataset: the WHERE pattern sees the full
-    * §13 dataset (GRAPH blocks, FROM/FROM NAMED); the template
-    * instantiates one (s, p, o) graph — per §16.2 the constructed
-    * result is a plain RDF graph, not a quad set.
-    */
-  def constructQuads(spark: SparkSession, quads: DataFrame,
-                     queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    p.eatKw("CONSTRUCT")
-    val template = templateAnonBlanks(parseGroup(p, prefixes))
-    require(template.filters.isEmpty && template.optionals.isEmpty &&
-      template.unions.isEmpty && template.minuses.isEmpty &&
-      template.paths.isEmpty && template.binds.isEmpty &&
-      template.subqueries.isEmpty && template.subgroups.isEmpty &&
-      template.graphs.isEmpty,
-      "CONSTRUCT template must contain only triple patterns")
-    val (fromG, fromN) = parseDatasetClauses(p, prefixes)
-    p.eatKw("WHERE")
-    val group = withTrailingValues(p, prefixes, parseGroup(p, prefixes))
-    instantiate(template, compileGroup(quadEnv(spark, quads, fromG, fromN), group))
-  }
-
-  /** DESCRIBE over a quad dataset: subjects resolve against the §13
-    * dataset (WHERE may use GRAPH blocks); the CBD then expands over the
-    * UNION of the default graph and the GRAPH-visible named graphs —
-    * DESCRIBE's result form is implementation-defined (§16.4), and the
-    * merged dataset is the most useful bounded description when a
-    * resource's triples span graphs.
-    */
-  def describeQuads(spark: SparkSession, quads: DataFrame,
-                    queryText: String): DataFrame = {
-    val p = new P(tokenize(queryText))
-    val prefixes = parsePrefixes(p)
-    val (vars, consts, whereG, fromG, fromN) = parseDescribeHeader(p, prefixes)
-    val env = quadEnv(spark, quads, fromG, fromN)
-    import spark.implicits._
-    val varSubjects = whereG match {
-      case Some(g) =>
-        val sols = compileGroup(env, g)
-        vars.filter(sols.columns.contains)
-          .map(v => sols.select(col(v).as("s")))
-      case None => Seq.empty
-    }
-    val constSubjects =
-      if (consts.isEmpty) Seq.empty else Seq(consts.toDF("s"))
-    val subjects = (varSubjects ++ constSubjects)
-      .reduce(_.unionAll(_)).distinct()
-    val merged = env.triples.unionByName(
-      env.quads.get.select("s", "p", "o"))
-    cbd(merged, subjects,
-      nodes => nodes.where(col("s").startsWith("_:")))
   }
 
   // ---- SPARQL 1.1 Update: the AST and parser every entry point shares,
@@ -4129,7 +3882,7 @@ object Sparql {
     * on dictionary ids: every op's joins (ground probes, template deltas,
     * graph slicing, the modify WHERE) move fixed-width longs for s/p/o
     * AND g, completing the encoded quad lifecycle (ingest →
-    * [[executeQuadsEncoded]] → update). Returns the (updated encoded
+    * [[execute]] over `Dataset.QuadsEncoded` → update). Returns the (updated encoded
     * dataset, updated dictionary).
     *
     * Dictionary maintenance ([[EncodedTerms]]): new terms — ground INSERT
@@ -4405,8 +4158,8 @@ object Sparql {
       */
     def prepModify(q: DataFrame, dict: Option[DataFrame], m: QModify)
         : (DataFrame, Long, Option[DataFrame]) = {
-      val enc = dict.map(hashEncEnv(spark, _, m.where, m.withG.toSeq,
-        plainVarsOfG(m.where)))
+      val enc = dict.map(encEnv(spark, _, pureHash = true, m.where,
+        plainVarsOfG(m.where), m.withG.toSeq))
       val env = Env(spark, slice(m.withG)(q).select("s", "p", "o"), Map.empty,
         1000000L, enc, quads = Some(q.where(col("g").isNotNull)))
       val (sols, cnt) = pins.pinCounted(compileGroup(env, m.where))

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.{CleanCheckpoint, DriverRows}
 import org.apache.spark.sql.functions._
 import graft.bgp.PredStats
 import graft.dict.Dictionary
+import graft.ops.ReasonOps
 
 /** Ingested store handle: the analog of the reference's opened LMDB
   * environment (`Graphula.scala:34-48`). The reference ingests N-Triples
@@ -1060,53 +1061,47 @@ object GraftStore {
     h
   }
 
-  /** The materialized RDFS closure as an INGEST ARTIFACT beside the ANN
-    * indexes: reason once at ingest (`ReasonOps.rdfsClosure`), persist
-    * in the same predicate-partitioned layout as the base store (so
-    * constant-predicate scans over the closure directory-prune exactly
-    * like base scans), and query sessions OPEN it instead of
-    * re-deriving. Later O(Δ) appends maintain it durably:
-    * `persistClosureAppend(ReasonOps.rdfsDelta(tbox, delta), path)`
-    * writes only the increment's files (dedup across increments is the
-    * documented cost of append-mode maintenance — compact by
-    * re-persisting the distinct closure when the overlap grows).
+  /** The materialized closure of a corpus as an INGEST ARTIFACT beside
+    * the ANN indexes: reason once at ingest (`ReasonOps.rdfsClosure`,
+    * `owlClosure`), persist, and let query sessions OPEN it instead of
+    * re-deriving. The corpus's layout picks the directory:
+    *   - triples: `rdfs_closure`, in the base store's predicate-partitioned
+    *     layout, so constant-predicate scans over the closure
+    *     directory-prune exactly like base scans;
+    *   - quads (`corpus.quads`): `closure_quads`, graph-partitioned
+    *     (`TripleStore.persistQuads`: one directory per named graph, the
+    *     default graph in the null partition), so a `GRAPH <g>` / FROM
+    *     NAMED slice over the closure prunes like a base quad scan.
+    * `append = true` folds an O(Δ) increment in, e.g.
+    * `persistClosure(ReasonOps.rdfsDelta(tbox, delta), path, append = true)`:
+    * it writes only the increment's files (dedup across increments is
+    * the documented cost of append-mode maintenance). After a retraction
+    * (`rdfsRetract` / `owlRetract`), or when the overlap grows, re-persist
+    * the distinct closure.
     */
-  def persistClosure(closure: DataFrame, path: String): Unit =
-    TripleStore.persist(closure, s"$path/rdfs_closure")
+  def persistClosure(closure: DataFrame, path: String,
+                     corpus: ReasonOps.Corpus[Any] = ReasonOps.Corpus.Triples,
+                     append: Boolean = false): Unit =
+    if (corpus.quads)
+      TripleStore.persistQuads(closure, s"$path/closure_quads",
+        mode = if (append) "append" else "overwrite")
+    else if (append) TripleStore.persistAppend(closure, s"$path/rdfs_closure")
+    else TripleStore.persist(closure, s"$path/rdfs_closure")
 
-  def persistClosureAppend(increment: DataFrame, path: String): Unit =
-    TripleStore.persistAppend(increment, s"$path/rdfs_closure")
-
-  def openClosure(spark: SparkSession, path: String): DataFrame = {
-    // explicit schema: same partition-column-typing pin as `open`
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("o", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
-    spark.read.schema(schema).parquet(s"$path/rdfs_closure")
-      .select("s", "p", "o")
-  }
-
-  /** PER-GRAPH closure artifacts — the quad analog of [[persistClosure]]:
-    * a materialized `rdfsClosure`/`owlClosure` of a quad corpus persists
-    * in the GRAPH-partitioned layout (`TripleStore.persistQuads`: one
-    * directory per named graph, default graph in the null partition), so
-    * a `GRAPH <g>` / FROM NAMED slice over the closure directory-prunes
-    * exactly like a base quad scan. Query sessions OPEN the artifact
-    * instead of re-deriving; maintenance batches fold increments with
-    * `persistClosureQuadsAppend` (quad `rdfsDelta` output) or re-persist
-    * after a retraction (quad `rdfsRetract` / `owlRetract`) — the
-    * ingest-once / open-many lifecycle the triple closure has.
-    */
-  def persistClosureQuads(closure: DataFrame, path: String): Unit =
-    TripleStore.persistQuads(closure, s"$path/closure_quads")
-
-  def persistClosureQuadsAppend(increment: DataFrame, path: String): Unit =
-    TripleStore.persistQuads(increment, s"$path/closure_quads",
-      mode = "append")
-
-  def openClosureQuads(spark: SparkSession, path: String): DataFrame =
-    TripleStore.openQuads(spark, s"$path/closure_quads")
+  /** Reopen the artifact [[persistClosure]] wrote for `corpus`'s layout. */
+  def openClosure(spark: SparkSession, path: String,
+                  corpus: ReasonOps.Corpus[Any] = ReasonOps.Corpus.Triples)
+      : DataFrame =
+    if (corpus.quads) TripleStore.openQuads(spark, s"$path/closure_quads")
+    else {
+      // explicit schema: same partition-column-typing pin as `open`
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("o", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("p", org.apache.spark.sql.types.StringType)))
+      spark.read.schema(schema).parquet(s"$path/rdfs_closure")
+        .select("s", "p", "o")
+    }
 
   private val gramCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Lazily[DataFrame]]
@@ -1251,8 +1246,8 @@ object GraftStore {
   }
 
   /** Durable ENCODED quad dataset: the certified (ids, dictionary) pair
-    * written as parquet — the ingest artifact behind
-    * `Sparql.executeQuadsEncoded`/`updateQuadsEnc`, shipped so query
+    * written as parquet — the ingest artifact behind a
+    * `Sparql.Dataset.QuadsEncoded` and `Sparql.updateQuadsEnc`, shipped so query
     * sessions skip the encode pass entirely.
     */
   def persistQuadsEnc(spark: SparkSession, sfDir: String,
@@ -1385,9 +1380,11 @@ object GraftStore {
     .empty[(SparkSession, String), Lazily[(DataFrame, DataFrame)]]
 
   /** ENCODED quad dataset + dictionary, certified at build
-    * (`TripleStore.encodeQuads`) — the ingest artifact behind
-    * `Sparql.executeQuadsEncoded`: every named-graph join moves
-    * fixed-width longs, one decode at the top.
+    * (`TripleStore.encodeQuads`), built and cached once per (session,
+    * dir): the pair a `Sparql.Dataset.QuadsEncoded` takes, so the four
+    * query forms run every named-graph join on fixed-width longs and
+    * decode once at the end (`GraftStore.quadStats(...)._2` are its
+    * stats).
     */
   def quadDatasetEnc(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {

@@ -257,7 +257,7 @@ object TripleStore {
     * analog of `parseNTriples` (public N-Quads 1.1 grammar): an optional
     * fourth graph-label term before the terminating dot. Lines without
     * one land in the default graph (g = NULL), matching the quad-dataset
-    * convention everywhere else (`Sparql.executeQuads`). The non-greedy
+    * convention everywhere else (`Sparql.Dataset.Quads`). The non-greedy
     * object group backtracks correctly around literals that contain
     * `<...>` text: the graph group must be followed by the final dot.
     */
@@ -407,7 +407,7 @@ object TripleStore {
 
   /** Reopen a graph-partitioned quad dataset. Spark reads the partition
     * column back as `g` (null for the default-graph directory), so the
-    * result plugs straight into `Sparql.executeQuads`. Partition-column
+    * result plugs straight into `Sparql.Dataset.Quads`. Partition-column
     * TYPE INFERENCE is a trap here: a numeric-looking graph label like
     * "42" or "01" would reopen as an int `g` ("01" → 1), silently
     * breaking `GRAPH <g>` / FROM NAMED string equality after a
@@ -430,7 +430,7 @@ object TripleStore {
     * distinct term set under the same hash. The build CERTIFIES the
     * encoding the way triple ingest does: any id claimed by two
     * distinct terms is a collision and fails fast here, so downstream
-    * equality on ids is sound (`Sparql.executeQuadsEncoded`).
+    * equality on ids is sound (`Sparql.Dataset.QuadsEncoded`).
     */
   def encodeQuads(quads: DataFrame): (DataFrame, DataFrame) = {
     import graft.dict.Dictionary
@@ -442,7 +442,7 @@ object TripleStore {
       .agg(count(lit(1)).as("n")).where(col("n") > 1)
     require(collisions.isEmpty,
       "xxhash64 collision in quad term set — use the string path " +
-        "(Sparql.executeQuads) for this dataset")
+        "(Sparql.Dataset.Quads) for this dataset")
     val enc = quads.select(
       Dictionary.termHash(col("s")).as("s"),
       Dictionary.termHash(col("p")).as("p"),

@@ -6,8 +6,8 @@ import graft.store.GraftStore
 /** The full SPARQL surface must produce IDENTICAL results on the string
   * store and the encoded store (the reference runs every ARQ operator over
   * encoded longs with lazy decode, `BindingAdapter.scala:21-82`,
-  * `LazyJenaNode.scala:14-53`; here `executeEncoded` compiles the same
-  * algebra over `store.enc`). Each case runs one query both ways and
+  * `LazyJenaNode.scala:14-53`; here `execute` over a store handle
+  * compiles the same algebra over `store.enc`). Each case runs one query both ways and
   * compares row sets, so any divergence in encode/decode placement fails
   * loudly.
   */
@@ -22,9 +22,9 @@ class EncodedSparqlSpec extends SparkSpec {
   ).toDF("s", "p", "o"))
 
   private def both(q: String): Seq[Seq[Any]] = {
-    val viaStrings = Sparql.execute(spark, store.triples, q, store.stats)
+    val viaStrings = Sparql.execute(spark, Sparql.Dataset.Triples(store.triples, store.stats), q)
       .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
-    val viaEncoded = Sparql.executeEncoded(spark, store, q)
+    val viaEncoded = Sparql.execute(spark, store, q)
       .collect().map(_.toSeq).toSeq.sortBy(_.mkString("\u0000"))
     viaEncoded shouldBe viaStrings
     viaStrings
@@ -203,7 +203,7 @@ class EncodedSparqlSpec extends SparkSpec {
       """PREFIX : <>
         |ASK { ?x :knows ?y . ?y :knows ?z }""".stripMargin
     Sparql.ask(spark, store, askQ) shouldBe
-      Sparql.ask(spark, store.triples, askQ, store.stats)
+      Sparql.ask(spark, Sparql.Dataset.Triples(store.triples, store.stats), askQ)
     Sparql.ask(spark, store,
       """PREFIX : <>
         |ASK { ?x :nope ?y }""".stripMargin) shouldBe false
@@ -211,7 +211,7 @@ class EncodedSparqlSpec extends SparkSpec {
       """PREFIX : <>
         |CONSTRUCT { ?a :via _:hop . _:hop :to ?c }
         |WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin
-    val conStr = Sparql.construct(spark, store.triples, conQ, store.stats)
+    val conStr = Sparql.construct(spark, Sparql.Dataset.Triples(store.triples, store.stats), conQ)
       .collect().map(_.toSeq).toSet
     val conEnc = Sparql.construct(spark, store, conQ)
       .collect().map(_.toSeq).toSet
@@ -220,11 +220,24 @@ class EncodedSparqlSpec extends SparkSpec {
     val desQ =
       """PREFIX : <>
         |DESCRIBE <3>""".stripMargin
-    val desStr = Sparql.describe(spark, store.triples, desQ, store.stats)
+    val desStr = Sparql.describe(spark, Sparql.Dataset.Triples(store.triples, store.stats), desQ)
       .collect().map(_.toSeq).toSet
     Sparql.describe(spark, store, desQ)
       .collect().map(_.toSeq).toSet shouldBe desStr
     desStr should not be empty
+    // a store handle is one graph: every form rejects FROM / FROM NAMED
+    Seq(
+      () => Sparql.execute(spark, store,
+        "PREFIX : <>\nSELECT ?x FROM <g1> WHERE { ?x :knows ?y }"),
+      () => Sparql.ask(spark, store,
+        "PREFIX : <>\nASK FROM NAMED <g1> { ?x :knows ?y }"),
+      () => Sparql.construct(spark, store,
+        "PREFIX : <>\nCONSTRUCT { ?x :k ?y } FROM <g1> WHERE { ?x :knows ?y }"),
+      () => Sparql.describe(spark, store, "DESCRIBE <3> FROM <g1>")
+    ).foreach { form =>
+      intercept[IllegalArgumentException](form()).getMessage should
+        include ("need a quad dataset")
+    }
   }
 
   it should "follow blank-node closure in encoded DESCRIBE via the dictionary" in {
@@ -250,17 +263,17 @@ class EncodedSparqlSpec extends SparkSpec {
       .toDF("id", "term")
     val st = GraftStore.ingestEncoded(spark, enc, dict)
     st.pureHash shouldBe false
-    Sparql.executeEncoded(spark, st,
+    Sparql.execute(spark, st,
       """PREFIX : <>
         |SELECT ?x WHERE { "a:1" :knows + ?x } ORDER BY ?x""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("a:1", "a:2", "a:3")
     // OPTIONAL + aggregate over the arbitrary-id store
-    Sparql.executeEncoded(spark, st,
+    Sparql.execute(spark, st,
       """PREFIX : <>
         |SELECT (COUNT(?y) AS ?n) WHERE { ?x :knows ?y }""".stripMargin)
       .head().getLong(0) shouldBe 3L
     // absent constant gets a query-local NEGATIVE id and still zero-matches
-    Sparql.executeEncoded(spark, st,
+    Sparql.execute(spark, st,
       """PREFIX : <>
         |SELECT ?x WHERE { "zz" :knows * ?x }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("zz")
@@ -400,7 +413,7 @@ class EncodedSparqlSpec extends SparkSpec {
   }
 
   private def select(q: String) =
-    Sparql.executeEncoded(spark, store, "PREFIX : <>\n" + q)
+    Sparql.execute(spark, store, "PREFIX : <>\n" + q)
 
   "The top-level decode" should "give the same rows on the driver as distributed" in {
     // OPTIONAL leaves nulls
@@ -476,7 +489,7 @@ class EncodedSparqlSpec extends SparkSpec {
           |INSERT { ?x :seen "1" } WHERE { ?x :name ?n } ;
           |INSERT DATA { <d> :knows <e> }""".stripMargin)
       reads.get().foreach(_ shouldBe expected)
-      Sparql.executeEncoded(spark, after,
+      Sparql.execute(spark, after,
         "PREFIX : <>\nSELECT ?y ?x WHERE { ?y :back ?x }").count() shouldBe 3L
     } finally {
       pool.shutdown()

@@ -23,7 +23,7 @@ class FederationSpec extends SparkSpec {
   ).toDF("s", "p", "o")
 
   def run(q: String): Seq[Seq[String]] =
-    Sparql.execute(spark, local, q).collect()
+    Sparql.execute(spark, Sparql.Dataset.Triples(local), q).collect()
       .map(r => (0 until r.length).map(i => if (r.isNullAt(i)) null else r.getString(i)))
       .toSeq
 
@@ -83,7 +83,7 @@ class FederationSpec extends SparkSpec {
       ("p1", "worksAt", "org1", "urn:gA"),
       ("p2", "worksAt", "org2", "urn:gB")
     ).toDF("s", "p", "o", "g")
-    val res = Sparql.executeQuads(spark, quads,
+    val res = Sparql.execute(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?p ?l WHERE {
         |  GRAPH <urn:gA> { ?p :worksAt ?o }
@@ -99,7 +99,7 @@ class FederationSpec extends SparkSpec {
       ("p1", "worksAt", "org1", "urn:gA"),
       ("p2", "worksAt", "org2", "urn:gB")
     ).toDF("s", "p", "o", "g")
-    val res = Sparql.executeQuads(spark, quads,
+    val res = Sparql.execute(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?g ?p ?l WHERE {
         |  GRAPH ?g { ?p :worksAt ?o SERVICE <graft://orgs> { ?o :label ?l } }
@@ -123,7 +123,7 @@ class FederationSpec extends SparkSpec {
         |  SERVICE SILENT <graft://nowhere> { ?o :nope ?x }
         |} ORDER BY ?p""".stripMargin
     val viaString = run(q)
-    val viaEncoded = Sparql.executeEncoded(spark, st, q).collect()
+    val viaEncoded = Sparql.execute(spark, st, q).collect()
       .map(r => (0 until r.length).map(i =>
         if (r.isNullAt(i)) null else r.getString(i))).toSeq
     viaEncoded shouldBe viaString
@@ -137,7 +137,7 @@ class FederationSpec extends SparkSpec {
       ("p2", "worksAt", "org2", "urn:gB")
     ).toDF("s", "p", "o", "g")
     val (enc, dict) = graft.store.TripleStore.encodeQuads(quads)
-    val res = Sparql.executeQuadsEncoded(spark, enc, dict,
+    val res = Sparql.execute(spark, Sparql.Dataset.QuadsEncoded(enc, dict),
       """PREFIX : <>
         |SELECT ?g ?p ?l WHERE {
         |  GRAPH ?g { ?p :worksAt ?o }
@@ -183,7 +183,7 @@ class FederationSpec extends SparkSpec {
         |  ?p :worksAt ?o .
         |  SERVICE <graft://orgs> { ?o :label ?l }
         |} ORDER BY ?p""".stripMargin
-    val viaEncoded = Sparql.executeEncoded(spark, st, q).collect()
+    val viaEncoded = Sparql.execute(spark, st, q).collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2)))
     viaEncoded shouldBe Array(
       ("p1", "org1", "\"Acme\""), ("p2", "org2", "\"Globex\""))

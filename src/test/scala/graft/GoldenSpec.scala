@@ -361,7 +361,7 @@ class GoldenSpec extends SparkSpec {
 
   queries.foreach { case (name, q) =>
     "SPARQL golden corpus" should s"reproduce $name exactly" in {
-      val got = tsvOf(Sparql.execute(spark, triples, q))
+      val got = tsvOf(Sparql.execute(spark, Sparql.Dataset.Triples(triples), q))
       val want = golden(name)
       if (want == Seq("NO ANSWERS.")) got.length shouldBe 1
       else got shouldBe want
@@ -375,7 +375,7 @@ class GoldenSpec extends SparkSpec {
     Sparql.registerEndpoint(spark, "graft://regions",
       triples.where(col("s").startsWith("region:")))
     try {
-      val got = tsvOf(Sparql.execute(spark, triples,
+      val got = tsvOf(Sparql.execute(spark, Sparql.Dataset.Triples(triples),
         """PREFIX : <>
           |SELECT ?ep ?x ?nm WHERE { SERVICE ?ep { ?x :name ?nm } }
           |ORDER BY ?ep ?x ?nm""".stripMargin))
@@ -389,7 +389,7 @@ class GoldenSpec extends SparkSpec {
   "SPARQL golden corpus" should
     "reproduce sparql_values_postagg_undef on the ENCODED store byte-identically" in {
     val st = graft.store.GraftStore.ingestTriples(spark, triples)
-    val got = tsvOf(Sparql.executeEncoded(spark, st,
+    val got = tsvOf(Sparql.execute(spark, st,
       queries("sparql_values_postagg_undef")))
     got shouldBe golden("sparql_values_postagg_undef")
   }
@@ -398,7 +398,7 @@ class GoldenSpec extends SparkSpec {
     "SPARQL UPDATE golden corpus" should s"reproduce $name exactly" in {
       val h0 = graft.store.GraftStore.ingestTriples(spark, triples)
       val h1 = Sparql.update(spark, h0, script)
-      val got = tsvOf(Sparql.execute(spark, h1.triples, sel, h1.stats))
+      val got = tsvOf(Sparql.execute(spark, Sparql.Dataset.Triples(h1.triples, h1.stats), sel))
       got shouldBe golden(name)
     }
   }

@@ -90,8 +90,8 @@ class Lubm10Spec extends SparkSpec {
 
   anchored.foreach { qid =>
     lubm(s"answer anchored query $qid with the unchanged goldens") {
-      val got = rowsOf(Sparql.execute(spark, store10.triples,
-        LubmQueries.queries(qid - 1), store10.stats))
+      val got = rowsOf(Sparql.execute(spark, Sparql.Dataset.Triples(store10.triples, store10.stats),
+        LubmQueries.queries(qid - 1)))
       got.sortBy(_.mkString("\t")) shouldBe
         golden(qid).sortBy(_.mkString("\t"))
     }
@@ -101,8 +101,8 @@ class Lubm10Spec extends SparkSpec {
     lubm(s"answer unanchored query $qid with all ten clones' rows") {
       val expected = (0 until 10).flatMap(k =>
         golden(qid).map(_.map(cloneTerm(_, k))))
-      val got = rowsOf(Sparql.execute(spark, store10.triples,
-        LubmQueries.queries(qid - 1), store10.stats))
+      val got = rowsOf(Sparql.execute(spark, Sparql.Dataset.Triples(store10.triples, store10.stats),
+        LubmQueries.queries(qid - 1)))
       got.sortBy(_.mkString("\t")) shouldBe
         expected.sortBy(_.mkString("\t"))
     }
@@ -111,7 +111,7 @@ class Lubm10Spec extends SparkSpec {
   lubm("answer unanchored query 2 identically on the encoded store") {
     val expected = (0 until 10).flatMap(k =>
       golden(2).map(_.map(cloneTerm(_, k))))
-    val got = rowsOf(Sparql.executeEncoded(spark, store10,
+    val got = rowsOf(Sparql.execute(spark, store10,
       LubmQueries.queries(1)))
     got.sortBy(_.mkString("\t")) shouldBe
       expected.sortBy(_.mkString("\t"))

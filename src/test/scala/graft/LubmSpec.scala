@@ -59,8 +59,8 @@ class LubmSpec extends SparkSpec {
 
   (1 to 14).foreach { qid =>
     lubm(s"reproduce query $qid on the string store") {
-      val got = rowsOf(Sparql.execute(spark, store.triples,
-        queries(qid - 1), store.stats))
+      val got = rowsOf(Sparql.execute(spark, Sparql.Dataset.Triples(store.triples, store.stats),
+        queries(qid - 1)))
       got.sortBy(_.mkString("\t")) shouldBe
         golden(qid).sortBy(_.mkString("\t"))
     }
@@ -70,7 +70,7 @@ class LubmSpec extends SparkSpec {
   // ALL 14, since the encoded path is the production one
   (1 to 14).foreach { qid =>
     lubm(s"reproduce query $qid on the encoded store") {
-      val got = rowsOf(Sparql.executeEncoded(spark, store, queries(qid - 1)))
+      val got = rowsOf(Sparql.execute(spark, store, queries(qid - 1)))
       got.sortBy(_.mkString("\t")) shouldBe
         golden(qid).sortBy(_.mkString("\t"))
     }

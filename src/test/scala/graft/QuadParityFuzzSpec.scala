@@ -241,29 +241,79 @@ class QuadParityFuzzSpec extends SparkSpec {
   // deeper local hunts: sbt -Dgraft.fuzz.n=500 "testOnly graft.QuadParityFuzzSpec"
   private val fuzzN = sys.props.getOrElse("graft.fuzz.n", "100").toInt
 
+  // the default graph as a single-graph dataset, string and encoded
+  lazy val defaultTriples: org.apache.spark.sql.DataFrame =
+    quads.where(org.apache.spark.sql.functions.col("g").isNull).select("s", "p", "o")
+  lazy val defaultStore = graft.store.GraftStore.ingestTriples(spark, defaultTriples)
+
+  /** A result as a bag: columns by name, rows sorted. */
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
+    val cols = df.columns.sorted
+    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq
+      .map(r => (0 until r.length).map(j =>
+        if (r.isNullAt(j)) null else r.get(j).toString))
+      .sortBy(_.mkString(""))
+  }
+
   "string and encoded quad paths" should "agree on 100 random algebra compositions" in {
     val (enc, dict) = encPair
     val rnd = new scala.util.Random(20260814L)
     var nonEmpty = 0
+    var singleGraph = 0
     (1 to fuzzN).foreach { i =>
       val q = gen(rnd)
       withClue(s"case $i: $q\n") {
-        def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
-          val cols = df.columns.sorted
-          df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-            .collect().toSeq
-            .map(r => (0 until r.length).map(j =>
-              if (r.isNullAt(j)) null else r.get(j).toString))
-            .sortBy(_.mkString(""))
-        }
-        val viaStrings = rows(Sparql.executeQuads(spark, quads, q))
-        val viaEnc = rows(Sparql.executeQuadsEncoded(spark, enc, dict, q))
+        val viaStrings = rows(Sparql.execute(spark, Sparql.Dataset.Quads(quads), q))
+        val viaEnc = rows(Sparql.execute(spark, Sparql.Dataset.QuadsEncoded(enc, dict), q))
         viaEnc shouldBe viaStrings
         if (viaStrings.nonEmpty) nonEmpty += 1
+        // a default-graph composition reads the same graph as the
+        // single-graph datasets: triples and a store handle agree too
+        if (!q.contains("GRAPH")) {
+          rows(Sparql.execute(spark, Sparql.Dataset.Triples(defaultTriples), q)) shouldBe
+            viaStrings
+          rows(Sparql.execute(spark, defaultStore, q)) shouldBe viaStrings
+          singleGraph += 1
+        }
       }
     }
+    singleGraph should be >= fuzzN / 5
     // the generator must actually exercise joins, not vacuous empties
     // (the eq-filter family empties some compositions by design)
     nonEmpty should be >= fuzzN / 4
+  }
+
+  "the four datasets" should "agree on fixed ASK, CONSTRUCT and DESCRIBE queries" in {
+    // the default graph gains a blank chain e:1 -> _:a1 -> _:g1, which
+    // lives only there, so its DESCRIBE reads the same triples in every
+    // dataset (DESCRIBE over quads also reads the named graphs)
+    val chain = Seq(("e:1", "addr", "_:a1"), ("_:a1", "geo", "_:g1"),
+      ("_:g1", "lat", "47"), ("e:2", "addr", "_:a2"), ("_:a2", "geo", "46"))
+    val quadsB = quads.unionByName(chain.map { case (s, p, o) => (s, p, o, null: String) }
+      .toDF("s", "p", "o", "g"))
+    val triplesB = defaultTriples.unionByName(chain.toDF("s", "p", "o"))
+    val (enc, dict) = graft.store.TripleStore.encodeQuads(quadsB)
+    val cells = Seq(
+      "quads" -> Sparql.Dataset.Quads(quadsB),
+      "encoded quads" -> Sparql.Dataset.QuadsEncoded(enc, dict),
+      "triples" -> Sparql.Dataset.Triples(triplesB),
+      "store" -> Sparql.Dataset.Store(graft.store.GraftStore.ingestTriples(spark, triplesB)))
+    def agree[A](what: String, run: Sparql.Dataset => A): A = {
+      val out = cells.map { case (name, ds) => name -> run(ds) }
+      out.foreach { case (name, got) =>
+        withClue(s"$what over $name: ")(got shouldBe out.head._2) }
+      out.head._2
+    }
+    agree("ASK", Sparql.ask(spark, _, "ASK { ?x <q> ?y . ?y <p> \"1\" }")) shouldBe true
+    agree("ASK", Sparql.ask(spark, _, "ASK { ?x <q> ?y . ?y <p> \"7\" }")) shouldBe false
+    // a template blank skolemizes from the decoded solution: the same
+    // ids in every dataset
+    agree("CONSTRUCT", ds => rows(Sparql.construct(spark, ds,
+      "CONSTRUCT { ?y <back> ?x . ?x <via> _:b } WHERE { ?x <q> ?y . ?y <r> ?v }")))
+      .size shouldBe 12
+    // (o, p, s): `rows` orders columns by name
+    agree("DESCRIBE", ds => rows(Sparql.describe(spark, ds, "DESCRIBE <e:1>"))) shouldBe
+      Seq(Seq("47", "lat", "_:g1"), Seq("_:a1", "addr", "e:1"), Seq("_:g1", "geo", "_:a1"))
   }
 }

@@ -22,7 +22,7 @@ class QuadsSpec extends SparkSpec {
   ).toDF("s", "p", "o", "g")
 
   private def run(q: String): Set[Seq[String]] =
-    Sparql.executeQuads(spark, quads, q).collect()
+    Sparql.execute(spark, Sparql.Dataset.Quads(quads), q).collect()
       .map(r => (0 until r.length).map(i =>
         if (r.isNullAt(i)) null else r.getString(i)): Seq[String]).toSet
 
@@ -90,7 +90,7 @@ class QuadsSpec extends SparkSpec {
   }
 
   it should "aggregate per graph" in {
-    val got = Sparql.executeQuads(spark, quads,
+    val got = Sparql.execute(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?g (COUNT(?s) AS ?n) WHERE { GRAPH ?g { ?s ?p ?o } }
         |GROUP BY ?g ORDER BY ?g""".stripMargin)
@@ -101,7 +101,7 @@ class QuadsSpec extends SparkSpec {
   it should "handle repeated variables inside a quad pattern" in {
     val q2 = Seq(("a", "p", "a", "g1"), ("a", "p", "b", "g1"))
       .toDF("s", "p", "o", "g")
-    Sparql.executeQuads(spark, q2,
+    Sparql.execute(spark, Sparql.Dataset.Quads(q2),
       """PREFIX : <>
         |SELECT ?s WHERE { GRAPH ?g { ?s :p ?s } }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("a")
@@ -225,7 +225,7 @@ class QuadsSpec extends SparkSpec {
   it should "round-trip with executeQuads" in {
     val out = Sparql.updateQuads(spark, quads,
       "MOVE GRAPH <g2> TO GRAPH <g9> ; CLEAR GRAPH <g1>")
-    Sparql.executeQuads(spark, out,
+    Sparql.execute(spark, Sparql.Dataset.Quads(out),
       """PREFIX : <>
         |SELECT ?g (COUNT(?s) AS ?n) WHERE { GRAPH ?g { ?s ?p ?o } }
         |GROUP BY ?g ORDER BY ?g""".stripMargin)
@@ -262,7 +262,7 @@ class QuadsSpec extends SparkSpec {
   }
 
   it should "run a subquery inside a constant GRAPH" in {
-    Sparql.executeQuads(spark, quads,
+    Sparql.execute(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?s ?n WHERE { GRAPH <g1> {
         |  ?s :q ?v . { SELECT ?s (COUNT(?o) AS ?n) WHERE { ?s :p ?o } GROUP BY ?s }
@@ -309,24 +309,24 @@ class QuadsSpec extends SparkSpec {
   // ---- ASK / CONSTRUCT / DESCRIBE over the quad dataset ----
 
   "quad query forms" should "answer ASK with GRAPH blocks and dataset clauses" in {
-    Sparql.askQuads(spark, quads,
+    Sparql.ask(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |ASK { GRAPH ?g { ?s :p "9" } }""".stripMargin) shouldBe true
-    Sparql.askQuads(spark, quads,
+    Sparql.ask(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |ASK { GRAPH ?g { ?s :p "77" } }""".stripMargin) shouldBe false
     // FROM NAMED restricts the GRAPH-visible set: :p 9 lives in g2 only
-    Sparql.askQuads(spark, quads,
+    Sparql.ask(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |ASK FROM NAMED <g1> { GRAPH ?g { ?s :p "9" } }""".stripMargin) shouldBe false
     // FROM merges a named graph into the default graph
-    Sparql.askQuads(spark, quads,
+    Sparql.ask(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |ASK FROM <g2> { ?s :p "9" }""".stripMargin) shouldBe true
   }
 
   it should "CONSTRUCT a plain graph from graph-confined matches" in {
-    val g = Sparql.constructQuads(spark, quads,
+    val g = Sparql.construct(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |CONSTRUCT { ?s :from ?g } WHERE { GRAPH ?g { ?s :p "1" } }""".stripMargin)
     g.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -334,13 +334,28 @@ class QuadsSpec extends SparkSpec {
     g.columns.toSeq shouldBe Seq("s", "p", "o") // a graph, not a quad set
   }
 
+  it should "reject a SERVICE block in a CONSTRUCT template on both quad paths" in {
+    // a template instantiates triple patterns only: a SERVICE there
+    // cannot add triples, so it is rejected rather than ignored
+    val (enc, dict) = graft.store.TripleStore.encodeQuads(quads)
+    val q =
+      """PREFIX : <>
+        |CONSTRUCT { ?s :from ?g . SERVICE <graft://endpoints/none> { ?s :x ?g } }
+        |WHERE { GRAPH ?g { ?s :p "1" } }""".stripMargin
+    Seq(Sparql.Dataset.Quads(quads), Sparql.Dataset.QuadsEncoded(enc, dict))
+      .foreach { ds =>
+        intercept[IllegalArgumentException](Sparql.construct(spark, ds, q))
+          .getMessage should include ("only triple patterns")
+      }
+  }
+
   it should "DESCRIBE across the merged dataset" in {
     // a's triples span g1 and g2; the CBD merges both named graphs
-    Sparql.describeQuads(spark, quads, "DESCRIBE <a>")
+    Sparql.describe(spark, Sparql.Dataset.Quads(quads), "DESCRIBE <a>")
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       .toSet shouldBe Set(("a", "p", "1"), ("a", "q", "2"), ("a", "p", "9"))
     // WHERE-resolved subjects via a GRAPH block
-    Sparql.describeQuads(spark, quads,
+    Sparql.describe(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |DESCRIBE ?s WHERE { GRAPH <g2> { ?s :p "1" } }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -350,7 +365,7 @@ class QuadsSpec extends SparkSpec {
   it should "reject dataset clauses on the single-graph DESCRIBE path" in {
     val triples = quads.where(col("g").isNull).select("s", "p", "o")
     an[IllegalArgumentException] should be thrownBy
-      Sparql.describe(spark, triples, "DESCRIBE <x> FROM <g1>")
+      Sparql.describe(spark, Sparql.Dataset.Triples(triples), "DESCRIBE <x> FROM <g1>")
   }
 
   it should "evaluate non-closure property paths under a VARIABLE graph" in {
@@ -360,13 +375,13 @@ class QuadsSpec extends SparkSpec {
       ("a", "p", "m", "g3"), ("m", "p", "z", "g3"),
       ("a", "p", "m", "g1"), ("m", "p", "z", "g2")
     ).toDF("s", "p", "o", "g"))
-    Sparql.executeQuads(spark, chained,
+    Sparql.execute(spark, Sparql.Dataset.Quads(chained),
       """PREFIX : <>
         |SELECT ?g ?x ?y WHERE { GRAPH ?g { ?x :p/:p ?y } }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       .toSet shouldBe Set(("g3", "a", "z"))
     // alternation + inverse carry the graph column too
-    Sparql.executeQuads(spark, quads,
+    Sparql.execute(spark, Sparql.Dataset.Quads(quads),
       """PREFIX : <>
         |SELECT ?g ?v WHERE { GRAPH ?g { "1" ^(:p|:q) ?v } }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1)))
@@ -382,7 +397,7 @@ class QuadsSpec extends SparkSpec {
       quads.collect().map(r => (r.getString(0), r.getString(3))).toSet
     // a constant GRAPH target scans ONE graph directory: the g filter
     // lands in PartitionFilters (directory pruning), not data filters
-    val res = Sparql.executeQuads(spark, reopened,
+    val res = Sparql.execute(spark, Sparql.Dataset.Quads(reopened),
       """PREFIX : <>
         |SELECT ?s ?o WHERE { GRAPH <g2> { ?s :p ?o } }""".stripMargin)
     val plan = res.queryExecution.executedPlan.toString
@@ -394,7 +409,7 @@ class QuadsSpec extends SparkSpec {
     // §13.3: a subquery INSIDE GRAPH ?g evaluates once per active graph
     // — the aggregate counts each graph's own :p triples
     def runAny(q: String): Set[Seq[String]] =
-      Sparql.executeQuads(spark, quads, q).collect()
+      Sparql.execute(spark, Sparql.Dataset.Quads(quads), q).collect()
         .map(r => (0 until r.length).map(i =>
           if (r.isNullAt(i)) null else r.get(i).toString): Seq[String]).toSet
     runAny("""PREFIX : <>
@@ -516,7 +531,7 @@ class QuadsSpec extends SparkSpec {
               |GROUP BY ?g ORDER BY ?g""".stripMargin
     def rows(enc: org.apache.spark.sql.DataFrame,
              dict: org.apache.spark.sql.DataFrame) =
-      Sparql.executeQuadsEncoded(spark, enc, dict, q).collect()
+      Sparql.execute(spark, Sparql.Dataset.QuadsEncoded(enc, dict), q).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
     rows(enc2, dict2) shouldBe rows(enc1, dict1)
   }
@@ -524,10 +539,10 @@ class QuadsSpec extends SparkSpec {
   "executeQuadsEncoded" should "match the string path across the quad algebra" in {
     val (enc, dict) = graft.store.TripleStore.encodeQuads(quads)
     def both(q: String): Set[Seq[String]] = {
-      val viaStrings = Sparql.executeQuads(spark, quads, q).collect()
+      val viaStrings = Sparql.execute(spark, Sparql.Dataset.Quads(quads), q).collect()
         .map(r => (0 until r.length).map(i =>
           if (r.isNullAt(i)) null else r.get(i).toString): Seq[String]).toSet
-      val viaEnc = Sparql.executeQuadsEncoded(spark, enc, dict, q).collect()
+      val viaEnc = Sparql.execute(spark, Sparql.Dataset.QuadsEncoded(enc, dict), q).collect()
         .map(r => (0 until r.length).map(i =>
           if (r.isNullAt(i)) null else r.get(i).toString): Seq[String]).toSet
       viaEnc shouldBe viaStrings
@@ -580,13 +595,13 @@ class QuadsSpec extends SparkSpec {
   "the other encoded quad query forms" should "match their string twins" in {
     val (enc, dict) = graft.store.TripleStore.encodeQuads(quads)
     // ASK: encoded existence probes agree with the string path
-    Sparql.askQuadsEncoded(spark, enc, dict,
+    Sparql.ask(spark, Sparql.Dataset.QuadsEncoded(enc, dict),
       """PREFIX : <>
         |ASK { GRAPH ?g { ?s :p "1" . ?s :q "2" } }""".stripMargin) shouldBe
-      Sparql.askQuads(spark, quads,
+      Sparql.ask(spark, Sparql.Dataset.Quads(quads),
         """PREFIX : <>
           |ASK { GRAPH ?g { ?s :p "1" . ?s :q "2" } }""".stripMargin)
-    Sparql.askQuadsEncoded(spark, enc, dict,
+    Sparql.ask(spark, Sparql.Dataset.QuadsEncoded(enc, dict),
       "PREFIX : <>\nASK { GRAPH <g1> { ?s :p \"nope\" } }") shouldBe false
     // CONSTRUCT: the instantiated graphs are identical
     def rows(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
@@ -594,11 +609,11 @@ class QuadsSpec extends SparkSpec {
     val cq =
       """PREFIX : <>
         |CONSTRUCT { ?s :inGraph ?g } WHERE { GRAPH ?g { ?s :p ?o } }""".stripMargin
-    rows(Sparql.constructQuadsEncoded(spark, enc, dict, cq)) shouldBe
-      rows(Sparql.constructQuads(spark, quads, cq))
+    rows(Sparql.construct(spark, Sparql.Dataset.QuadsEncoded(enc, dict), cq)) shouldBe
+      rows(Sparql.construct(spark, Sparql.Dataset.Quads(quads), cq))
     // DESCRIBE: the CBDs agree (incoming + outgoing edges of <a>)
-    rows(Sparql.describeQuadsEncoded(spark, enc, dict, "DESCRIBE <a>")) shouldBe
-      rows(Sparql.describeQuads(spark, quads, "DESCRIBE <a>"))
+    rows(Sparql.describe(spark, Sparql.Dataset.QuadsEncoded(enc, dict), "DESCRIBE <a>")) shouldBe
+      rows(Sparql.describe(spark, Sparql.Dataset.Quads(quads), "DESCRIBE <a>"))
   }
 
   "updateQuads LOAD" should "load TriG with its own labels and Turtle INTO a graph" in {
@@ -633,7 +648,7 @@ class QuadsSpec extends SparkSpec {
       ("a", "p", "m", "g3"), ("m", "p", "z", "g3"),
       ("a", "p", "m", "g4"), ("m", "p", "z", "g5")
     ).toDF("s", "p", "o", "g"))
-    Sparql.executeQuads(spark, chained,
+    Sparql.execute(spark, Sparql.Dataset.Quads(chained),
       """PREFIX : <>
         |SELECT ?g ?y WHERE { GRAPH ?g { <a> :p+ ?y } }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1)))

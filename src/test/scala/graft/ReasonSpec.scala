@@ -302,7 +302,7 @@ class ReasonSpec extends SparkSpec {
     val delta = Seq(("b", "a", "Person")).toDF("s", "p", "o")
     val path = java.nio.file.Files.createTempDirectory("graft-closure").toString
     GraftStore.persistClosure(ReasonOps.rdfsClosure(base), path)
-    GraftStore.persistClosureAppend(ReasonOps.rdfsDelta(tbox, delta), path)
+    GraftStore.persistClosure(ReasonOps.rdfsDelta(tbox, delta), path, append = true)
     val reopened = GraftStore.openClosure(spark, path)
     tset(reopened.distinct()) shouldBe
       tset(ReasonOps.rdfsClosure(base.unionAll(delta)))
@@ -345,18 +345,19 @@ class ReasonSpec extends SparkSpec {
     val p1 = java.nio.file.Files.createTempDirectory("graft-qclosure1").toString
     val p2 = java.nio.file.Files.createTempDirectory("graft-qclosure2").toString
     // persist the materialized per-graph closure, fold an O(Δ) increment
-    GraftStore.persistClosureQuads(ReasonOps.rdfsClosure(base, Corpus.Quads, Some(tbox)), p1)
-    GraftStore.persistClosureQuadsAppend(
-      ReasonOps.rdfsDelta(tbox, delta, Corpus.Quads), p1)
-    val reopened = GraftStore.openClosureQuads(spark, p1)
+    GraftStore.persistClosure(ReasonOps.rdfsClosure(base, Corpus.Quads, Some(tbox)), p1,
+      Corpus.Quads)
+    GraftStore.persistClosure(
+      ReasonOps.rdfsDelta(tbox, delta, Corpus.Quads), p1, Corpus.Quads, append = true)
+    val reopened = GraftStore.openClosure(spark, p1, Corpus.Quads)
     qs(reopened.distinct()) shouldBe
       qs(ReasonOps.rdfsClosure(base.unionByName(delta), Corpus.Quads, Some(tbox)))
     // retract against the REOPENED artifact, re-persist (compaction)
     val del = Seq(("a", "worksFor", "x", "g1")).toDF("s", "p", "o", "g")
     val maintained = ReasonOps.rdfsRetract(reopened.distinct(),
       base.unionByName(delta), del, Corpus.Quads, Some(tbox))
-    GraftStore.persistClosureQuads(maintained, p2)
-    qs(GraftStore.openClosureQuads(spark, p2)) shouldBe
+    GraftStore.persistClosure(maintained, p2, Corpus.Quads)
+    qs(GraftStore.openClosure(spark, p2, Corpus.Quads)) shouldBe
       qs(ReasonOps.rdfsClosure(
         Seq(("b", "worksFor", "x", "g2"), ("c", "worksFor", "y", "g1"))
           .toDF("s", "p", "o", "g"), Corpus.Quads, Some(tbox)))
@@ -1669,8 +1670,8 @@ class ReasonSpec extends SparkSpec {
     try q1.processAllAvailable() finally q1.stop()
     // persist the maintained closure, "crash", and recover: reopen the
     // artifact, rebuild the maintainer, re-attach on the SAME checkpoint
-    GraftStore.persistClosureQuads(m1.current, art)
-    val recovered = GraftStore.openClosureQuads(spark, art)
+    GraftStore.persistClosure(m1.current, art, Corpus.Quads)
+    val recovered = GraftStore.openClosure(spark, art, Corpus.Quads)
     val m2 = ReasonOps.rdfsMaintainStream(recovered, tbox, Corpus.Quads)
     Seq(("t", "q", "r", "g2")).toDF("s", "p", "o", "g")
       .write.parquet(s"$srcDir/b2")

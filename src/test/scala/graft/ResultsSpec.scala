@@ -17,7 +17,7 @@ class ResultsSpec extends SparkSpec {
     ("person:1", "knows", "_:b0")
   ).toDF("s", "p", "o")
 
-  private def q(sel: String) = Sparql.execute(spark, triples,
+  private def q(sel: String) = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
     s"""PREFIX : <>
        |SELECT ?p ?o WHERE { <person:1> ?p ?o } $sel""".stripMargin)
 
@@ -48,7 +48,7 @@ class ResultsSpec extends SparkSpec {
   }
 
   "toTurtle" should "group, compact and sort a CONSTRUCT graph" in {
-    val g = Sparql.construct(spark, triples,
+    val g = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?s ?p ?o } WHERE { ?s ?p ?o }""".stripMargin)
     val ttl = Results.toTurtle(g,
@@ -94,7 +94,7 @@ class ResultsSpec extends SparkSpec {
   }
 
   it should "omit unbound variables and refuse oversized results" in {
-    val df = Sparql.execute(spark, triples,
+    val df = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?p ?x WHERE { <person:1> ?p ?o
         |  OPTIONAL { ?o :nope ?x } } ORDER BY ?p""".stripMargin)

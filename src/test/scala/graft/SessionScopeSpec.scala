@@ -65,7 +65,7 @@ class SessionScopeSpec extends SparkSpec {
     digest(GraphOps.stronglyConnectedComponents(spark, edges))
   private def update(): Seq[String] =
     digest(Sparql.updateQuads(spark, quads, script))
-  private def read(): Seq[String] = digest(Sparql.executeEncoded(spark,
+  private def read(): Seq[String] = digest(Sparql.execute(spark,
     store, "PREFIX : <>\nSELECT ?x ?y WHERE { ?x :knows ?y }"))
 
   /** The properties of every job started while `body` runs. */

@@ -42,11 +42,11 @@ class SliceSpec extends SparkSpec {
 
   "A hop1 SELECT over small predicates" should "start one job and match the scan path" in {
     val scan = StoreHandle.useSlices.withValue(false) {
-      Sparql.executeEncoded(spark, store, hop1).collect() // warm
-      jobsDuring(rowSet(Sparql.executeEncoded(spark, store, hop1)))
+      Sparql.execute(spark, store, hop1).collect() // warm
+      jobsDuring(rowSet(Sparql.execute(spark, store, hop1)))
     }
-    Sparql.executeEncoded(spark, store, hop1).collect() // fills the slices
-    val (rows, jobs) = jobsDuring(rowSet(Sparql.executeEncoded(spark, store, hop1)))
+    Sparql.execute(spark, store, hop1).collect() // fills the slices
+    val (rows, jobs) = jobsDuring(rowSet(Sparql.execute(spark, store, hop1)))
     rows shouldBe scan._1
     rows.size shouldBe 8
     jobs shouldBe 1
@@ -77,10 +77,10 @@ class SliceSpec extends SparkSpec {
   }
 
   it should "answer the string store from its own slices" in {
-    Sparql.execute(spark, store.triples, hop1, store.stats).collect()
-    val q = Sparql.execute(spark, store.triples, hop1, store.stats)
+    Sparql.execute(spark, Sparql.Dataset.Triples(store.triples, store.stats), hop1).collect()
+    val q = Sparql.execute(spark, Sparql.Dataset.Triples(store.triples, store.stats), hop1)
     scanned(q) shouldBe false
-    rowSet(q) shouldBe rowSet(Sparql.executeEncoded(spark, store, hop1))
+    rowSet(q) shouldBe rowSet(Sparql.execute(spark, store, hop1))
   }
 
   "A BGP over held predicates" should "start one job to compile, decode and collect" in {
@@ -121,16 +121,16 @@ class SliceSpec extends SparkSpec {
 
   "A handle made by an update" should "start with no slices and see its own triples" in {
     val h0 = fresh()
-    Sparql.executeEncoded(spark, h0, hop1).collect()
+    Sparql.execute(spark, h0, hop1).collect()
     h0.encSlices.buildCount shouldBe 1
     val gone = ("order:7", "status", "O")
     val h1 = GraftStore.remove(spark, h0, Seq(gone).toDF("s", "p", "o"))
     h1.encSlices.buildCount shouldBe 0
     def both(h: StoreHandle): Set[Seq[Any]] = {
-      val enc = rowSet(Sparql.executeEncoded(spark, h, hop1))
-      rowSet(Sparql.execute(spark, h.triples, hop1, h.stats)) shouldBe enc
+      val enc = rowSet(Sparql.execute(spark, h, hop1))
+      rowSet(Sparql.execute(spark, Sparql.Dataset.Triples(h.triples, h.stats), hop1)) shouldBe enc
       StoreHandle.useSlices.withValue(false)(
-        rowSet(Sparql.executeEncoded(spark, h, hop1))) shouldBe enc
+        rowSet(Sparql.execute(spark, h, hop1))) shouldBe enc
       enc
     }
     val after1 = both(h1)
@@ -143,7 +143,7 @@ class SliceSpec extends SparkSpec {
     val after2 = both(h2)
     after2 should contain(Seq("order:7", "X", "1995-01-17"))
     after2.size shouldBe 8
-    rowSet(Sparql.executeEncoded(spark, h0, hop1)) should contain(
+    rowSet(Sparql.execute(spark, h0, hop1)) should contain(
       Seq("order:7", "O", "1995-01-17"))
   }
 
@@ -154,7 +154,7 @@ class SliceSpec extends SparkSpec {
     try {
       val runs = (1 to 2).map(_ => pool.submit(() => {
         go.await()
-        rowSet(Sparql.executeEncoded(spark, h, hop1))
+        rowSet(Sparql.execute(spark, h, hop1))
       }))
       go.countDown()
       val out = runs.map(_.get())

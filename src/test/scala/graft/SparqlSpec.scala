@@ -17,7 +17,7 @@ class SparqlSpec extends SparkSpec {
   ).toDF("s", "p", "o")
 
   def run(q: String): Seq[Seq[String]] =
-    Sparql.execute(spark, triples, q).collect()
+    Sparql.execute(spark, Sparql.Dataset.Triples(triples), q).collect()
       .map(r => (0 until r.length).map(i => if (r.isNullAt(i)) null else r.getString(i)))
       .toSeq
 
@@ -26,6 +26,11 @@ class SparqlSpec extends SparkSpec {
       """PREFIX : <>
         |SELECT ?a ?c WHERE { ?a :2 ?b . ?b :4 ?c } ORDER BY ?c""".stripMargin)
     res shouldBe Seq(Seq("1", "5"), Seq("1", "6"))
+    // a single graph has no dataset to slice: FROM is rejected, not ignored
+    intercept[IllegalArgumentException](run(
+      """PREFIX : <>
+        |SELECT ?a ?c FROM <g1> WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin))
+      .getMessage should include ("need a quad dataset")
   }
 
   it should "return empty on a failing existence check" in {
@@ -34,7 +39,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "evaluate XPath constructor casts with error -> NULL" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |PREFIX xsd: <http://www.w3.org/2001/XMLSchema#>
         |SELECT ?i ?b ?bad WHERE {
@@ -113,7 +118,7 @@ class SparqlSpec extends SparkSpec {
   it should "join a trailing ValuesClause AFTER aggregation" in {
     // groups: y=3 (n=1), y=5 (n=2); the trailing block filters the
     // aggregated solutions (§18.2.4.4 runs after §18.2.4.2)
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y (COUNT(?x) AS ?n) WHERE { ?x :2 ?y }
         |GROUP BY ?y VALUES ?y { "5" }""".stripMargin)
@@ -164,16 +169,16 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "accept a trailing ValuesClause on ASK" in {
-    Sparql.ask(spark, triples,
+    Sparql.ask(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |ASK { ?x :2 ?y } VALUES ?y { "5" }""".stripMargin) shouldBe true
-    Sparql.ask(spark, triples,
+    Sparql.ask(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |ASK { ?x :2 ?y } VALUES ?y { "99" }""".stripMargin) shouldBe false
   }
 
   it should "accept a trailing ValuesClause on CONSTRUCT" in {
-    val res = Sparql.construct(spark, triples,
+    val res = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?x :tagged "yes" } WHERE { ?x :2 ?y } VALUES ?x { "5" }""".stripMargin)
       .collect().map(_.toSeq).toSeq
@@ -196,7 +201,7 @@ class SparqlSpec extends SparkSpec {
 
   it should "aggregate over the DISTINCT value set for SUM and AVG" in {
     // objects of :2 are 3, 5, 5 -> distinct {3, 5}
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT (SUM(DISTINCT ?o) AS ?s) (AVG(DISTINCT ?o) AS ?a)
         |  (SUM(?o) AS ?sa) WHERE { ?x :2 ?o }""".stripMargin)
@@ -212,7 +217,7 @@ class SparqlSpec extends SparkSpec {
     val t = Seq(("a", "v", "1"), ("b", "v", "01"), ("c", "v", "1.0"),
       ("d", "v", "01"))
       .toDF("s", "p", "o")
-    val res = Sparql.execute(spark, t,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(t),
       """PREFIX : <>
         |SELECT (COUNT(DISTINCT ?o) AS ?c) (SUM(DISTINCT ?o) AS ?s)
         |  (AVG(DISTINCT ?o) AS ?a)
@@ -221,7 +226,7 @@ class SparqlSpec extends SparkSpec {
     res.head shouldBe ((3L, 3.0, 1.0))
     // same query, encoded store: identical domain discipline
     val store = graft.store.GraftStore.ingestTriples(spark, t)
-    val enc = graft.sparql.Sparql.executeEncoded(spark, store,
+    val enc = graft.sparql.Sparql.execute(spark, store,
       """PREFIX : <>
         |SELECT (COUNT(DISTINCT ?o) AS ?c) (SUM(DISTINCT ?o) AS ?s)
         |  (AVG(DISTINCT ?o) AS ?a)
@@ -276,7 +281,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "hide internal variables from SELECT *" in {
-    val df = Sparql.execute(spark, triples,
+    val df = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT * WHERE { ?x :2 [ :4 ?y ] }""".stripMargin)
     df.columns.toSeq.sorted shouldBe Seq("x", "y")
@@ -309,16 +314,16 @@ class SparqlSpec extends SparkSpec {
         |SELECT ?c ?n WHERE { ?c :nationkey ?n . ?n :regionkey ?r . ?r :name "ASIA" }
         |ORDER BY ?c ?n""".stripMargin
     val st = graft.store.GraftStore.forDir(spark, sfDir)
-    val viaStrings = Sparql.execute(spark, st.triples, q, st.stats)
+    val viaStrings = Sparql.execute(spark, Sparql.Dataset.Triples(st.triples, st.stats), q)
       .collect().map(_.toSeq).toSeq
-    val viaEncoded = Sparql.executeEncoded(spark, st, q)
+    val viaEncoded = Sparql.execute(spark, st, q)
       .collect().map(_.toSeq).toSeq
     viaEncoded shouldBe viaStrings
     viaStrings should not be empty
   }
 
   it should "aggregate with GROUP BY and COUNT" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y (COUNT(?x) AS ?n) WHERE { ?x :2 ?y } GROUP BY ?y ORDER BY ?y""".stripMargin)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -326,7 +331,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "aggregate globally without GROUP BY" in {
-    val n = Sparql.execute(spark, triples,
+    val n = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT (COUNT(*) AS ?n) WHERE { ?x :2 ?y }""".stripMargin)
       .head().getLong(0)
@@ -334,7 +339,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "compute MIN/MAX/AVG over numeric terms" in {
-    val r = Sparql.execute(spark, triples,
+    val r = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT (MIN(?y) AS ?mn) (MAX(?y) AS ?mx) (AVG(?y) AS ?av)
         |WHERE { ?x :2 ?y }""".stripMargin).head()
@@ -451,7 +456,7 @@ class SparqlSpec extends SparkSpec {
     val cyc = Seq(("a", "p", "b"), ("b", "p", "c"), ("c", "p", "a"), ("c", "p", "d"))
       .toDF("s", "p", "o")
     def runC(q: String): Seq[String] =
-      Sparql.execute(spark, cyc, q).collect().map(_.getString(0)).toSeq
+      Sparql.execute(spark, Sparql.Dataset.Triples(cyc), q).collect().map(_.getString(0)).toSeq
     // a->b->c->a cycle: + from a reaches everything INCLUDING a itself
     runC("""PREFIX : <>
            |SELECT ?x WHERE { "a" :p + ?x } ORDER BY ?x""".stripMargin)
@@ -510,7 +515,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "aggregate with GROUP_CONCAT and SAMPLE" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y (GROUP_CONCAT(?x ; SEPARATOR ",") AS ?xs) (SAMPLE(?x) AS ?m)
         |WHERE { ?x :2 ?y } GROUP BY ?y ORDER BY ?y""".stripMargin)
@@ -519,7 +524,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "filter groups with HAVING" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y (COUNT(?x) AS ?n) WHERE { ?x :2 ?y }
         |GROUP BY ?y HAVING (?n > 1)""".stripMargin)
@@ -528,7 +533,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "join a subquery on shared variables" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT DISTINCT ?y ?n WHERE {
         |  ?y :4 ?w .
@@ -551,17 +556,17 @@ class SparqlSpec extends SparkSpec {
       ("p:1", "knows", "p:2"),
       ("p:2", "label", "plain")
     ).toDF("s", "p", "o")
-    val r1 = Sparql.execute(spark, litTriples,
+    val r1 = Sparql.execute(spark, Sparql.Dataset.Triples(litTriples),
       """PREFIX : <>
         |SELECT ?s (STR(?o) AS ?v) WHERE { ?s :label ?o . FILTER (LANG(?o) = "en") }""".stripMargin)
       .collect().map(_.toSeq).toSeq
     r1 shouldBe Seq(Seq("p:1", "Bob"))
-    val r2 = Sparql.execute(spark, litTriples,
+    val r2 = Sparql.execute(spark, Sparql.Dataset.Triples(litTriples),
       """PREFIX : <>
         |SELECT ?o WHERE { ?s :knows ?o . FILTER (isIRI(?o)) }""".stripMargin)
       .collect().map(_.toSeq).toSeq
     r2 shouldBe Seq(Seq("p:2"))
-    val r3 = Sparql.execute(spark, litTriples,
+    val r3 = Sparql.execute(spark, Sparql.Dataset.Triples(litTriples),
       """PREFIX : <>
         |SELECT ?s WHERE { ?s :label ?o . FILTER (isLiteral(?o) && STRSTARTS(?o, "pl")) }""".stripMargin)
       .collect().map(_.toSeq).toSeq
@@ -610,13 +615,13 @@ class SparqlSpec extends SparkSpec {
 
   it should "group by anonymous expression and bare builtin-call keys" in {
     // same grouping as the aliased form, but the key is not projectable
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT (COUNT(?x) AS ?n) WHERE { ?x ?p ?y }
         |GROUP BY (CONCAT("k", ?p)) ORDER BY ?n""".stripMargin)
       .collect().map(_.getLong(0)).toSeq
     res shouldBe Seq(2L, 3L)
-    val res2 = Sparql.execute(spark, triples,
+    val res2 = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT (COUNT(?x) AS ?n) WHERE { ?x ?p ?y }
         |GROUP BY STR(?p) ORDER BY ?n""".stripMargin)
@@ -626,7 +631,7 @@ class SparqlSpec extends SparkSpec {
 
   it should "group by expression keys" in {
     // key = CONCAT("k", ?p): predicate 2 -> k2 (3 triples), 4 -> k4 (2)
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?k (COUNT(?x) AS ?n) WHERE { ?x ?p ?y }
         |GROUP BY (CONCAT("k", ?p) AS ?k) ORDER BY ?k""".stripMargin)
@@ -704,7 +709,7 @@ class SparqlSpec extends SparkSpec {
       ("d:2", "name", "gamma"),
       ("d:1", "size", "7")
     ).toDF("s", "p", "o")
-    val r = Sparql.execute(spark, docs,
+    val r = Sparql.execute(spark, Sparql.Dataset.Triples(docs),
       """PREFIX : <>
         |SELECT ?s (SUBSTR(?nm, 1, 5) AS ?head) (STRBEFORE(?nm, "-") AS ?pre)
         |       (STRAFTER(?nm, "-") AS ?post) (REPLACE(?nm, "a", "_") AS ?repl)
@@ -713,7 +718,7 @@ class SparqlSpec extends SparkSpec {
     r shouldBe Seq(
       Seq("d:1", "alpha", "alpha", "beta", "_lph_-bet_"),
       Seq("d:2", "gamma", "", "", "g_mm_"))
-    val n = Sparql.execute(spark, docs,
+    val n = Sparql.execute(spark, Sparql.Dataset.Triples(docs),
       """PREFIX : <>
         |SELECT (ABS(?sz - 10) AS ?a) (CEIL(?sz / 2) AS ?c) (FLOOR(?sz / 2) AS ?f)
         |WHERE { ?s :size ?sz }""".stripMargin).head()
@@ -727,12 +732,12 @@ class SparqlSpec extends SparkSpec {
       ("o:1", "orderdate", "1994-03-15"),
       ("p:1", "label", "\"chat\"@fr-BE")
     ).toDF("s", "p", "o")
-    val d = Sparql.execute(spark, t,
+    val d = Sparql.execute(spark, Sparql.Dataset.Triples(t),
       """PREFIX : <>
         |SELECT (YEAR(?d) AS ?y) (MONTH(?d) AS ?m) (DAY(?d) AS ?dd)
         |WHERE { ?s :orderdate ?d }""".stripMargin).head()
     (d.getInt(0), d.getInt(1), d.getInt(2)) shouldBe ((1994, 3, 15))
-    Sparql.execute(spark, t,
+    Sparql.execute(spark, Sparql.Dataset.Triples(t),
       """PREFIX : <>
         |SELECT ?s WHERE { ?s :label ?v . FILTER (LANGMATCHES(LANG(?v), "fr")) }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("p:1")
@@ -765,13 +770,13 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "project aggregate expressions and filter HAVING on aggregates" in {
-    val res = Sparql.execute(spark, triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y ((COUNT(?x) * 10) AS ?tens) ((MAX(?x * 1) - MIN(?x * 1)) AS ?spread)
         |WHERE { ?x :2 ?y } GROUP BY ?y ORDER BY ?y""".stripMargin)
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
     res shouldBe Seq(("3", 10.0, 0.0), ("5", 20.0, 1.0))
-    val hav = Sparql.execute(spark, triples,
+    val hav = Sparql.execute(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |SELECT ?y WHERE { ?x :2 ?y } GROUP BY ?y
         |HAVING (COUNT(?x) > 1)""".stripMargin)
@@ -780,26 +785,34 @@ class SparqlSpec extends SparkSpec {
   }
 
   "Sparql.ask" should "answer boolean existence queries" in {
-    Sparql.ask(spark, triples,
+    Sparql.ask(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |ASK WHERE { ?x :2 ?y . ?y :4 ?z }""".stripMargin) shouldBe true
-    Sparql.ask(spark, triples,
+    Sparql.ask(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |ASK { "1" :99 ?x }""".stripMargin) shouldBe false
+    intercept[IllegalArgumentException](Sparql.ask(spark, Sparql.Dataset.Triples(triples),
+      """PREFIX : <>
+        |ASK FROM NAMED <g1> { ?x :2 ?y }""".stripMargin))
+      .getMessage should include ("need a quad dataset")
   }
 
   "Sparql.construct" should "build a deduplicated result graph" in {
-    val res = Sparql.construct(spark, triples,
+    val res = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?a :reaches ?c . ?a :kind "start" }
         |WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     res shouldBe Set(
       ("1", "reaches", "5"), ("1", "reaches", "6"), ("1", "kind", "start"))
+    intercept[IllegalArgumentException](Sparql.construct(spark, Sparql.Dataset.Triples(triples),
+      """PREFIX : <>
+        |CONSTRUCT { ?a :reaches ?b } FROM <g1> WHERE { ?a :2 ?b }""".stripMargin))
+      .getMessage should include ("need a quad dataset")
   }
 
   it should "drop template triples with unbound variables" in {
-    val res = Sparql.construct(spark, triples,
+    val res = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?x :opt ?z }
         |WHERE { ?x :2 ?y . OPTIONAL { ?y :4 ?z } }""".stripMargin)
@@ -811,16 +824,20 @@ class SparqlSpec extends SparkSpec {
     val cbd = Set(
       ("3", "4", "5"), ("3", "4", "6"), // outgoing
       ("1", "2", "3"))                  // incoming edge
-    val direct = Sparql.describe(spark, triples,
+    val direct = Sparql.describe(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |DESCRIBE <3>""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     direct shouldBe cbd
-    val viaWhere = Sparql.describe(spark, triples,
+    val viaWhere = Sparql.describe(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |DESCRIBE ?y WHERE { "1" :2 ?y }""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     viaWhere shouldBe cbd
+    intercept[IllegalArgumentException](Sparql.describe(spark, Sparql.Dataset.Triples(triples),
+      """PREFIX : <>
+        |DESCRIBE <3> FROM <g1>""".stripMargin))
+      .getMessage should include ("need a quad dataset")
   }
 
   it should "fold blank-node objects' descriptions in (blank closure)" in {
@@ -829,7 +846,7 @@ class SparqlSpec extends SparkSpec {
       ("_:a1", "geo", "_:g1"), ("_:g1", "lat", "\"47.4\""),
       ("e:2", "addr", "_:a2"), ("_:a2", "city", "\"Bern\"")
     ).toDF("s", "p", "o")
-    val res = Sparql.describe(spark, withBlanks,
+    val res = Sparql.describe(spark, Sparql.Dataset.Triples(withBlanks),
       """PREFIX : <>
         |DESCRIBE <e:1>""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
@@ -841,7 +858,7 @@ class SparqlSpec extends SparkSpec {
   }
 
   it should "skolemize CONSTRUCT template blanks fresh per solution" in {
-    val res = Sparql.construct(spark, triples,
+    val res = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?a :via _:hop . _:hop :to ?c }
         |WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin)
@@ -858,7 +875,7 @@ class SparqlSpec extends SparkSpec {
   it should "treat anonymous [] in CONSTRUCT templates as fresh template blanks" in {
     // [ :to ?c ] is sugar for a labeled template blank (SPARQL §16.2.1):
     // fresh per solution, shared across the expansion's triples
-    val res = Sparql.construct(spark, triples,
+    val res = Sparql.construct(spark, Sparql.Dataset.Triples(triples),
       """PREFIX : <>
         |CONSTRUCT { ?a :via [ :to ?c ] }
         |WHERE { ?a :2 ?b . ?b :4 ?c }""".stripMargin)
@@ -876,7 +893,7 @@ class SparqlSpec extends SparkSpec {
       ("d", "v", "iri:x"), ("e", "v", "two words")
     ).toDF("s", "p", "o")
     def one(q: String): Seq[Seq[String]] =
-      Sparql.execute(spark, t2, q).collect()
+      Sparql.execute(spark, Sparql.Dataset.Triples(t2), q).collect()
         .map(r => (0 until r.length).map(i =>
           if (r.isNullAt(i)) null else r.getString(i))).toSeq
     one("""PREFIX : <>
@@ -917,7 +934,7 @@ class SparqlSpec extends SparkSpec {
     res shouldBe Seq(Seq("1", "5"), Seq("1", "6"))
     // '#' inside quoted literals and IRIs is content, not a comment
     Sparql.execute(spark,
-      Seq(("x", "brand", "Brand#17")).toDF("s", "p", "o"),
+      Sparql.Dataset.Triples(Seq(("x", "brand", "Brand#17")).toDF("s", "p", "o")),
       """PREFIX : <>
         |SELECT ?x WHERE { ?x :brand "Brand#17" }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("x")

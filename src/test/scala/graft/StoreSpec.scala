@@ -246,7 +246,7 @@ class StoreSpec extends SparkSpec {
     // exact count merge without a store re-scan
     appended.stats("knows").cnt shouldBe 3L
     // the encoded path decodes the NEW term through the unioned dictionary
-    graft.sparql.Sparql.executeEncoded(spark, appended,
+    graft.sparql.Sparql.execute(spark, appended,
       """PREFIX : <>
         |SELECT ?x WHERE { "b:3" :knows ?x }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("b:4")
@@ -274,12 +274,12 @@ class StoreSpec extends SparkSpec {
       .collect().map(_.toSeq) shouldBe Array(Seq("a:1", "a:2", "a:3"))
     // encoded path end-to-end through the SPARQL lifecycle: constants
     // resolve via the supplied dictionary, not hashing
-    graft.sparql.Sparql.executeEncoded(spark, st,
+    graft.sparql.Sparql.execute(spark, st,
       """PREFIX : <>
         |SELECT ?x WHERE { "a:1" :knows ?x }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("a:2")
     // dictionary-miss fail-fast: unknown constant -> empty, no job
-    graft.sparql.Sparql.executeEncoded(spark, st,
+    graft.sparql.Sparql.execute(spark, st,
       """PREFIX : <>
         |SELECT ?x WHERE { "nope" :knows ?x }""".stripMargin)
       .count() shouldBe 0L
@@ -305,7 +305,7 @@ class StoreSpec extends SparkSpec {
     b shouldBe a
     a should not be empty
     // the encoded lifecycle works against the reopened store too
-    graft.sparql.Sparql.executeEncoded(spark, reopened,
+    graft.sparql.Sparql.execute(spark, reopened,
       """PREFIX : <>
         |SELECT ?r WHERE { ?r :name "ASIA" }""".stripMargin)
       .collect().map(_.getString(0)).toSeq should not be empty
@@ -350,7 +350,7 @@ class StoreSpec extends SparkSpec {
     again.stats.view.mapValues(_.cnt).toMap shouldBe
       appended.stats.view.mapValues(_.cnt).toMap
     again.triples.count() shouldBe 3L
-    graft.sparql.Sparql.executeEncoded(spark, again,
+    graft.sparql.Sparql.execute(spark, again,
       """PREFIX : <>
         |SELECT ?x WHERE { "i:3" :knows ?x }""".stripMargin)
       .collect().map(_.getString(0)).toSeq shouldBe Seq("i:4")

@@ -500,9 +500,9 @@ class StreamingBgpSpec extends SparkSpec {
     // every batch solution here uses >= 1 streamed edge, so the stream
     // must emit exactly the batch answer over static ∪ streamed
     val batch = graft.sparql.Sparql.execute(spark,
-        static2.union(Seq(
+        graft.sparql.Sparql.Dataset.Triples(static2.union(Seq(
           ("customer:1", "nationkey", "nation:3"),
-          ("nation:1", "altregion", "region:9")).toDF("s", "p", "o")), query)
+          ("nation:1", "altregion", "region:9")).toDF("s", "p", "o"))), query)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     got shouldBe batch
     batch shouldBe Set(("customer:1", "region:4"),
@@ -547,9 +547,9 @@ class StreamingBgpSpec extends SparkSpec {
     // every batch solution here uses exactly one streamed edge (the
     // delta contract), so the stream must emit the full batch answer
     val batch = graft.sparql.Sparql.execute(spark,
-        static2.union(Seq(
+        graft.sparql.Sparql.Dataset.Triples(static2.union(Seq(
           ("customer:1", "nationkey", "nation:3"),
-          ("nation:1", "altregion", "region:9")).toDF("s", "p", "o")), query)
+          ("nation:1", "altregion", "region:9")).toDF("s", "p", "o"))), query)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     got shouldBe batch
     batch shouldBe Set(

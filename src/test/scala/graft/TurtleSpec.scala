@@ -174,7 +174,7 @@ class TurtleSpec extends SparkSpec {
           |GRAPH :g2 { :b :p :v1 . }
           |""".stripMargin)
       val quads = TripleStore.parseTriG(spark, dir.toString + "/*.trig")
-      val res = graft.sparql.Sparql.executeQuads(spark, quads,
+      val res = graft.sparql.Sparql.execute(spark, graft.sparql.Sparql.Dataset.Quads(quads),
         """PREFIX : <n:>
           |SELECT ?g ?s WHERE { GRAPH ?g { ?s :p :v1 . ?s :q :v2 } }""".stripMargin)
         .collect().map(r => (r.getString(0), r.getString(1)))
@@ -207,7 +207,7 @@ class TurtleSpec extends SparkSpec {
           |:bob :knows :carol .
           |""".stripMargin)
       val st = graft.store.GraftStore.forTurtle(spark, dir.toString + "/*.ttl")
-      val res = graft.sparql.Sparql.executeEncoded(spark, st,
+      val res = graft.sparql.Sparql.execute(spark, st,
         """PREFIX : <urn:g:>
           |SELECT ?x ?z WHERE { ?x :knows ?y . ?y :knows ?z }""".stripMargin)
         .collect().map(r => (r.getString(0), r.getString(1)))

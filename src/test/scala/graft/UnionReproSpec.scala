@@ -18,10 +18,9 @@ class UnionReproSpec extends SparkSpec {
     val h1 = Sparql.update(spark, h0,
       """PREFIX : <>
         |INSERT DATA { <region:9> :a "Region" . <region:9> :name "R_NINE" }""".stripMargin)
-    val res = Sparql.execute(spark, h1.triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(h1.triples, h1.stats),
       """PREFIX : <>
-        |SELECT ?nm WHERE { ?r a "Region" . ?r :name ?nm } ORDER BY ?nm""".stripMargin,
-      h1.stats)
+        |SELECT ?nm WHERE { ?r a "Region" . ?r :name ?nm } ORDER BY ?nm""".stripMargin)
       .collect().map(_.getString(0)).toSeq
     res should contain("R_NINE")
     res.length shouldBe 6 // the 5 stored regions + the inserted one

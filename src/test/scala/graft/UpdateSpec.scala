@@ -148,7 +148,7 @@ class UpdateSpec extends SparkSpec {
       """PREFIX : <>
         |DELETE { ?s :age ?o } WHERE { ?s :age ?o . FILTER (?o > 40) } ;
         |INSERT DATA { <frank> :age "29" }""".stripMargin)
-    val res = Sparql.executeEncoded(spark, h1,
+    val res = Sparql.execute(spark, h1,
       """PREFIX : <>
         |SELECT ?s ?v WHERE { ?s :age ?v } ORDER BY ?s""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -204,9 +204,9 @@ class UpdateSpec extends SparkSpec {
     GraftStore.persist(hc, dir)
     val ho = GraftStore.open(spark, dir)
     rows(ho) shouldBe rows(h1)
-    val res = Sparql.execute(spark, ho.triples,
+    val res = Sparql.execute(spark, Sparql.Dataset.Triples(ho.triples, ho.stats),
       """PREFIX : <>
-        |SELECT ?s ?v WHERE { ?s :age ?v } ORDER BY ?s""".stripMargin, ho.stats)
+        |SELECT ?s ?v WHERE { ?s :age ?v } ORDER BY ?s""".stripMargin)
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     res shouldBe Seq(("alice", "39"), ("bob", "41"), ("dan", "23"))
   }
