@@ -89,23 +89,6 @@ object SparkEntry {
     * runs as long-key equi-joins, and decode pays a single pass over the
     * s/o term universe semi-filtered down to the (small) result ids.
     */
-  private def gcMillis: Long = {
-    import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.asScala
-      .map(_.getCollectionTime).sum
-  }
-
-  private def prof[T](label: String)(f: => T): T = {
-    if (!sys.env.contains("GRAFT_PROF")) f
-    else {
-      val t0 = System.nanoTime()
-      val g0 = gcMillis
-      val r = f
-      System.err.println(f"[graft-prof] $label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2f s  gc=${(gcMillis - g0) / 1000.0}%6.2f s")
-      r
-    }
-  }
-
   private def bgpEncoded(s: SparkSession, d: String): DataFrame = {
     // Ingest happens once per (session, dir) in GraftStore: triple scan,
     // collision certificate, encoded relation, predicate stats. Queries
@@ -119,18 +102,17 @@ object SparkEntry {
       if (st.pureHash) Dictionary.hashLiterals(s, constants)
       else Dictionary.lookup(st.dict, constants)
     // Query: BGP joins over long keys.
-    val res = prof("bgp joins")(Bgp.compile(s, st.enc, Seq(
+    val res = Bgp.compile(s, st.enc, Seq(
       TriplePattern(V("c"), C(ids("a")), C(ids("Customer"))),
       TriplePattern(V("c"), C(ids("nationkey")), V("n")),
       TriplePattern(V("n"), C(ids("regionkey")), V("r")),
-      TriplePattern(V("r"), C(ids("name")), C(ids("ASIA")))), st.encStats, st.totalCnt))
+      TriplePattern(V("r"), C(ids("name")), C(ids("ASIA")))), st.encStats, st.totalCnt)
     // Lazy decode (reference `LazyBinding.scala:22-28`) against the
     // dictionary materialized at ingest: decodeAll pins the (small)
     // result, collects it and resolves its ids with one dictionary probe.
     // No per-query re-scan of the triple store.
-    prof("decode joins")(
-      Dictionary.decodeAll(res, st.dict, Seq("c", "n", "r"))
-        .select("c", "n", "r").orderBy("c", "n", "r"))
+    Dictionary.decodeAll(res, st.dict, Seq("c", "n", "r"))
+      .select("c", "n", "r").orderBy("c", "n", "r")
   }
 
   // ---- Relational operator surface (SURVEY §2.4/§2.6) ----------------
@@ -841,17 +823,16 @@ object SparkEntry {
   }
 
   /** Connected-components cluster assignment over verified near-dup pairs
-    * (GraphX; cluster id = min doc_id in the component).
+    * (`DedupOps.clusters`; cluster id = min doc_id in the component).
     */
   private def dedupClusters(s: SparkSession, d: String): DataFrame =
-    DedupOps.clusters(s, GraftStore.docDupPairs(s, d, threshold = 0.5))
+    DedupOps.clusters(GraftStore.docDupPairs(s, d, threshold = 0.5))
       .orderBy("doc_id")
 
-  /** The same cluster assignment through the pure-DataFrame convergence
-    * CC (`GraphOps.connectedComponents`) instead of driver-coalesced
-    * GraphX Pregel — the shape that holds when the near-dup pair graph
-    * itself outgrows a handful of partitions. Identical output contract
-    * (component = min doc_id), so the two gates share one oracle.
+  /** The same cluster assignment called on `GraphOps.connectedComponents`
+    * directly (the operator `DedupOps.clusters` renames). Identical
+    * output contract (component = min doc_id), so the two gates share
+    * one oracle.
     */
   private def dedupClustersDist(s: SparkSession, d: String): DataFrame =
     graft.ops.GraphOps.connectedComponents(
@@ -868,7 +849,7 @@ object SparkEntry {
     * cluster-partitioned window; the corpus never self-joins.
     */
   private def dedupKeepBest(s: SparkSession, d: String): DataFrame = {
-    val cl = DedupOps.clusters(s, GraftStore.docDupPairs(s, d, threshold = 0.5))
+    val cl = DedupOps.clusters(GraftStore.docDupPairs(s, d, threshold = 0.5))
     val scored = Tables.loadPar(s, d, "documents").join(cl, Seq("doc_id"))
       .select(col("cluster"), col("doc_id"),
         TextOps.qualityScore(col("text")).as("quality"))
@@ -2098,12 +2079,11 @@ object SparkEntry {
   /** Connected components to CONVERGENCE over the customer—order—lineitem
     * forest (one component per customer subtree — many components of
     * unknown diameter, the case bounded-round label propagation cannot
-    * answer): the pointer-jumped min-label fixpoint of
-    * `GraphOps.connectedComponents`, iterated on dense order-preserving
-    * ranks (fixed-width long shuffles) and decoded once at the top. The
-    * oracle replays the fixpoint ROUND-STRUCTURE-INDEPENDENTLY as
-    * reachability-min: component id = min node reachable in the
-    * undirected closure.
+    * answer), through `GraphOps.connectedComponents` on the string node
+    * names (its driver union-find at this size; past 2^20 edges its
+    * fixpoint over order ranks). The oracle replays the result
+    * ROUND-STRUCTURE-INDEPENDENTLY as reachability-min: component id =
+    * min node reachable in the undirected closure.
     */
   private def componentsQ(s: SparkSession, d: String): DataFrame = {
     val ord = t(s, d, "orders"); val li = t(s, d, "lineitem")
@@ -2114,20 +2094,7 @@ object SparkEntry {
         concat(lit("lineitem:"), col("l_orderkey"), lit("-"),
           col("l_linenumber")).as("s"),
         concat(lit("order:"), col("l_orderkey")).as("o")))
-    val ranks = graft.ops.GraphOps.orderRanks(
-        edges.select(col("s")).unionAll(edges.select(col("o").as("s"))))
-      .localCheckpoint(true)
-    val enc = edges
-      .join(ranks.select(col("node").as("s"), col("rk").as("srk")), Seq("s"))
-      .join(ranks.select(col("node").as("o"), col("rk").as("ork")), Seq("o"))
-      .select(col("srk").as("s"), col("ork").as("o"))
-    val cc = graft.ops.GraphOps.connectedComponents(enc)
-    cc.join(ranks.select(col("rk").as("node"), col("node").as("nodeName")),
-        Seq("node"))
-      .join(ranks.select(col("rk").as("component"), col("node").as("compName")),
-        Seq("component"))
-      .select(col("nodeName").as("node"), col("compName").as("component"))
-      .orderBy("node")
+    graft.ops.GraphOps.connectedComponents(edges).orderBy("node")
   }
 
   /** RDFS materialization over the driver-testdata store: a schema-sized
@@ -3920,9 +3887,9 @@ object SparkEntry {
     * form directed 4-cycles (each quad of consecutive keys rings
     * through a window-closed successor edge) bridged by ONE-WAY
     * group-to-group edges — the bridges must NOT merge components, so
-    * each SCC is exactly its quad with the minimum key as the id
-    * (GraphX Pregel over the coalesced derived graph; the undirected
-    * corpus-scale sibling is the pointer-jumped
+    * each SCC is exactly its quad with the minimum key as the id (the
+    * forward/backward min-label peeling of
+    * `GraphOps.stronglyConnectedComponents`; the undirected sibling is
     * [[graft.ops.GraphOps.connectedComponents]]). */
   private def sccQ(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -5856,8 +5823,8 @@ object SparkEntry {
       |FROM nation WHERE n_regionkey = 0 ORDER BY n""".stripMargin
 
   /** The near-dup cluster-assignment replay (recursive reachability-min
-    * over the verified pair graph) — shared by the GraphX gate and its
-    * distributed-CC twin (identical output contract).
+    * over the verified pair graph) — shared by `q_dedup_clusters` and
+    * `q_dedup_clusters_dist` (identical output contract).
     */
   private lazy val dedupClustersOracleSql: String =
     "WITH RECURSIVE " + gramPairsCteBody + """,

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for training-data pipelines, built Spark-first:
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   *     ~linear in near-dup density, not quadratic in corpus size);
   *   - 32-bit SimHash fingerprints from per-token polynomial hashes
   *     (identical fold as TextOps.polyHash, so DuckDB can replay it);
-  *   - connected components over the verified near-dup pair graph (GraphX),
-  *     assigning each duplicate document its cluster representative.
+  *   - connected components over the verified near-dup pair graph
+  *     (`GraphOps.connectedComponents`), assigning each duplicate
+  *     document its cluster representative.
   */
 object DedupOps {
 
@@ -461,26 +462,16 @@ object DedupOps {
     */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** Connected components over an undirected pair graph (doc_a, doc_b) —
-    * each vertex gets the smallest doc_id reachable from it (GraphX CC
-    * converges to the component's minimum vertex id). This is the cluster
-    * assignment step after near-dup pair mining; at 100 TB the pair graph
-    * is tiny relative to the corpus, so Pregel iterations are cheap.
+  /** Connected components over an undirected pair graph (doc_a, doc_b)
+    * — each vertex gets the smallest doc_id reachable from it: the
+    * cluster assignment step after near-dup pair mining, as
+    * [[GraphOps.connectedComponents]] (a driver union-find while the
+    * pair graph holds at most 2^20 edges, the distributed fixpoint past
+    * that) under the (doc_id, cluster) names.
     */
-  def clusters(spark: SparkSession, pairs: DataFrame,
-               aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
-    // Pin the (small) pair set: Pregel iterates over the edge RDD. The
-    // near-dup pair graph is orders of magnitude smaller than the corpus,
-    // so collapse to a few partitions — Pregel latency is per-stage, and
-    // 32 near-empty tasks per iteration would dominate. At a scale where
-    // the pair graph itself is big, raise the coalesce target.
-    val edges = pairs.select(col(aCol).cast("long"), col(bCol).cast("long"))
-      .localCheckpoint(true)
-      .coalesce(4)
-      .rdd.map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val cc = Graph.fromEdges(edges, 0).connectedComponents().vertices
-    spark.createDataFrame(cc.map { case (v, c) => (v.toLong, c.toLong) })
+  def clusters(pairs: DataFrame,
+               aCol: String = "doc_a", bCol: String = "doc_b"): DataFrame =
+    GraphOps.connectedComponents(
+        pairs.select(col(aCol).cast("long").as("s"), col(bCol).cast("long").as("o")))
       .toDF("doc_id", "cluster")
-  }
 }

@@ -1,9 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.ScopedConf
+import graft.dict.Dictionary
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.TypeUtils
+import org.apache.spark.sql.execution.{DriverRows, ScopedConf}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Graph sampling over the edge relation — the operator family behind
   * DeepWalk/node2vec-style embedding training data. The reference carried
@@ -19,9 +23,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Round count of the most recent connectedComponents convergence —
-    * scale-evidence telemetry (tools.ScaleProbe records it at two SFs to
-    * confirm the O(log d) round count stays flat under 10× data).
+  /** Round count of the most recent [[connectedComponents]] fixpoint
+    * (0 when the driver union-find served the call) — scale-evidence
+    * telemetry (tools.ScaleProbe records it at two SFs to confirm the
+    * round count stays flat under 10× data).
     */
   private[graft] val lastCcRounds = new java.util.concurrent.atomic.AtomicLong(0)
 
@@ -261,136 +266,202 @@ object GraphOps {
     * node id in its component. `minLabelPropagation` bounds the radius
     * (labels travel `iterations` hops); this runs until a fixpoint, so it
     * is correct on ANY diameter — the requirement when the component
-    * structure is unknown (corpus-scale dedup graphs, entity resolution),
-    * where GraphX Pregel on a driver-coalesced edge list (the tiny-pair-
-    * graph shape of [[graft.ops.DedupOps.clusters]]) stops being an
-    * option.
+    * structure is unknown (dedup pair graphs, the identity graphs of
+    * entity resolution). It is the one connected-components operator:
+    * [[graft.ops.DedupOps.clusters]] and [[ReasonOps.identityMapping]]
+    * rename its columns.
     *
-    * Each round is min-label relaxation PLUS pointer jumping
-    * (`lab ← lab(lab)`, the Shiloach-Vishkin shortcut): labels hop to
-    * their label's label, so label trees halve in depth every round and
-    * convergence is O(log diameter) rounds instead of O(diameter) — on a
-    * 1000-hop chain ~10 rounds, not 1000. Per round: one adjacency join +
-    * one min-aggregate (relaxation), one self-join (jump), one bounded
-    * change probe. Labels are (node, lab) pairs — fixed-width when the
-    * caller iterates on ranks (see [[orderRanks]]) — and every
-    * intermediate is Pins-checkpointed, so lineage stays flat across
-    * rounds. Pure order comparisons: a SQL oracle replays the fixpoint as
-    * reachability-min (component id = min reachable node), independent of
-    * round structure.
+    * The physical path follows the measured input, not a setting:
+    *   - at most [[IdentityDriverCap]] (2^20) edges: a bounded collect
+    *     ([[graft.dict.Dictionary.collectBounded]], one job) brings the
+    *     edges to the driver, a union-find (union by min) labels them,
+    *     and the result is a local relation — a fixpoint's rounds would
+    *     be pure scheduling latency at that size;
+    *   - long ids over the cap: the RDD fixpoint of [[ccRounds]];
+    *   - any other node type over the cap: the same fixpoint over
+    *     [[orderRanks]] (order-preserving, so the min rank is the rank of
+    *     the min node), decoded once at the end.
+    * "Smallest" is Spark's ordering of the node type on every path
+    * (binary UTF-8 for strings), so the paths agree row for row.
     *
-    * Input: any (s, o) edge relation — direction, duplicates and
-    * self-loops are ignored; nodes with no edge are absent (union
-    * singletons at the call site if needed). Output: (node, component).
+    * Input: the first two columns of `edges` (the second is cast to the
+    * first's type); direction and duplicates are ignored, and an edge
+    * with a null end is dropped. A self-loop (x, x) makes x a node like
+    * any other edge does: x is present, labelled with its component's
+    * minimum (x itself when the loop is its only edge). Nodes with no
+    * edge are absent. Output: (node, component), both of the node type.
+    * `maxRounds` bounds the fixpoint loudly.
     */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // LONG node ids — the documented production currency (encoded ids /
-    // orderRanks) — take the RDD-core loop: zero Catalyst planning per
-    // round and a partitioner shared across rounds, so the adjacency
-    // never reshuffles after its initial placement. String graphs keep
-    // the DataFrame loop below.
-    val longTyped = edges.schema.fields.take(2).forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (longTyped) return connectedComponentsLong(edges, maxRounds)
-    connectedComponentsDF(edges, maxRounds)
+    val Seq(c0, c1) = edges.columns.take(2).toSeq
+    val dt = edges.schema(c0).dataType
+    val base0 = edges.select(col(c0).as("s"), col(c1).cast(dt).as("o"))
+      .where(col("s").isNotNull && col("o").isNotNull)
+    // an unmaterialized input gets a lazy pin, filled by the bounded
+    // collect's job: over the cap the fixpoint reads it instead of
+    // re-running the input's plan
+    val base =
+      if (Dictionary.isLocal(base0) || graft.Pins.isMaterialized(edges)) base0
+      else graft.Pins.checkpointLazy(base0)
+    val cap = identityDriverCap.value
+    val onDriver = if (cap < 0) None else Dictionary.collectRows(base, cap)
+    val out = onDriver match {
+      case Some(rows) =>
+        lastCcRounds.set(0)
+        unionFind(edges.sparkSession, rows, dt)
+      case None if dt == LongType => ccRounds(base, maxRounds)
+      case None =>
+        val ranks = graft.Pins.checkpoint(
+          orderRanks(base.select(col("s")).unionAll(base.select(col("o")))))
+        val cc = ccRounds(base
+            .join(ranks.toDF("s", "srk"), "s").join(ranks.toDF("o", "ork"), "o")
+            .select("srk", "ork"), maxRounds)
+        val decoded = graft.Pins.checkpoint(cc
+          .join(ranks.toDF("n", "node"), "node")
+          .join(ranks.toDF("c", "component"), "component")
+          .select(col("n").as("node"), col("c").as("component")))
+        Seq(ranks, cc).foreach(graft.Pins.unpin)
+        decoded
+    }
+    if (base ne base0) graft.Pins.unpin(base)
+    out
+  }
+
+  /** Edge sets of at most this many rows take the driver union-find of
+    * [[connectedComponents]]. */
+  val IdentityDriverCap: Int = 1 << 20
+
+  /** The edge cap [[connectedComponents]] reads: [[IdentityDriverCap]],
+    * lowered by a spec or probe (`identityDriverCap.withValue(-1) {...}`)
+    * to run small graphs through the distributed fixpoint. */
+  private[graft] val identityDriverCap =
+    new scala.util.DynamicVariable[Int](IdentityDriverCap)
+
+  /** Driver union-find over collected (s, o) rows, union by min under
+    * Spark's ordering of `dt`, so every root stays its component's
+    * minimum. */
+  private def unionFind(spark: SparkSession, edges: Array[InternalRow],
+                        dt: DataType): DataFrame = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) {
+        val nx = parent.get(c); parent.put(c, r); c = nx
+      }
+      r
+    }
+    edges.foreach { row =>
+      val a = InternalRow.copyValue(row.get(0, dt))
+      val b = InternalRow.copyValue(row.get(1, dt))
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) {
+        if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    DriverRows.frame(spark,
+      StructType(Seq("node", "component").map(StructField(_, dt, nullable = false))),
+      parent.keySet.asScala.toSeq.map(k => InternalRow(k, find(k))))
   }
 
   /** Changed-label sets of at most this many rows travel to the next
-    * CC round as a broadcast (see [[connectedComponentsLong]]). */
+    * CC round as a broadcast (see [[ccRounds]]). */
   val CcBroadcastDelta: Long = 1L << 20
 
-  /** The delta cap the long-id CC reads: [[CcBroadcastDelta]], lowered
+  /** The delta cap [[ccRounds]] reads: [[CcBroadcastDelta]], lowered
     * by a spec (`ccBroadcastDelta.withValue(-1) { ... }`) to run every
     * round through the shuffled delta join. */
   private[graft] val ccBroadcastDelta =
     new scala.util.DynamicVariable[Long](CcBroadcastDelta)
 
-  /** The fixpoint of [[connectedComponents]] with the ROUNDS run at the
-    * RDD layer: each round of a Catalyst loop re-analyzes and re-plans
-    * the relax/jump shapes from scratch (~0.2-0.5 s/round of driver time
-    * that is SCALE-INDEPENDENT — at 100 TB it is pure waste), while an
-    * RDD loop compiles its closures once. The partitioner discipline is
-    * the real scale win: adjacency and labels share one HashPartitioner,
-    * so the relax join is NARROW every round — the |E| adjacency is
-    * shuffled exactly once at setup, and each round moves only the
-    * (neighbor, label) messages. Same algorithm as the DataFrame loop
-    * (first relaxation folded into init, min-label relax, pointer jump,
-    * converged when no label changed), identical output.
+  /** The distributed fixpoint of [[connectedComponents]] over (s, o)
+    * long ids, with the rounds run at the RDD layer: a Catalyst loop
+    * re-analyzes and re-plans its round shapes every round, while an RDD
+    * loop compiles its closures once. Adjacency and labels share one
+    * HashPartitioner, so the relax join is NARROW every round — the |E|
+    * adjacency is shuffled once at setup, and each round moves only the
+    * (neighbor, label) messages.
+    *
+    * A round is min-label relaxation with ROOT HOOKING, then (from round
+    * 2 on) a pointer jump, converged when no label changed:
+    *   - relax: lab(v) ← min(lab(v), msg(v)), msg(v) the least label a
+    *     neighbor sent;
+    *   - hook (FastSV, Zhang, Azad & Hu, SIAM ACDA 2020): the same
+    *     message also lowers the label of v's round-start label,
+    *     lab(lab(v)) ← min(lab(lab(v)), msg(v)) — one reduceByKey and a
+    *     narrow left-outer join inside the round's job;
+    *   - jump: lab(v) ← lab(lab(v)) (Shiloach-Vishkin shortcut).
+    * Relax and jump alone halve label trees only where ids grow along
+    * the paths; elsewhere labels crawl one hop per round, O(diameter):
+    * a 300-id chain took 231 rounds in scrambled id order and 88 in a
+    * random one. A hook moves a whole label tree under the smaller label
+    * at once and the jump flattens it: both chains take 8 rounds, a
+    * 5,000-id random-order chain 12, while ascending ids (9) and
+    * TPC-H-shaped order trees (2) keep their counts
+    * (`plans/one_cc/cc_rounds.tsv`, local[4]).
+    *
+    * Labels are node ids of the same component and only decrease, and
+    * every label change is re-sent (below), so the fixpoint gives each
+    * component its minimum id. Output (node, component), checkpointed.
     */
-  private def connectedComponentsLong(edges: DataFrame,
-                                      maxRounds: Int): DataFrame = {
+  private def ccRounds(base: DataFrame, maxRounds: Int): DataFrame = {
     import org.apache.spark.HashPartitioner
+    import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    // dev trace (-Dgraft.cc.trace): per-phase wall to stderr
-    val trace = sys.props.contains("graft.cc.trace")
-    def tt[A](label: String)(f: => A): A = {
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[cc-core] $label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-    }
-    val c0 = edges.columns(0); val c1 = edges.columns(1)
-    val base = edges.select(col(c0).as("s"), col(c1).as("o"))
-      .where(col("s").isNotNull && col("o").isNotNull && col("s") =!= col("o"))
+    val spark = base.sparkSession
     // The session's shuffle width: at sf0.1 it measured within 5% of
     // 8 partitions — the fixpoint cost is per-round JOB latency, not
     // per-task overhead.
     val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val minOf = (a: Long, b: Long) => math.min(a, b)
     // symmetrize, place by source, dedup WITHIN partitions (an exact
     // distinct would shuffle by the pair and then again by the key;
     // duplicates cannot change a min, only message volume)
-    val und = tt("und setup")(base.rdd.map(r => (r.getLong(0), r.getLong(1)))
+    val und = base.rdd.map(r => (r.getLong(0), r.getLong(1)))
       .flatMap { case (s, o) => Iterator((s, o), (o, s)) }
       .partitionBy(part)
       .mapPartitions({ it =>
         val seen = new java.util.HashSet[(Long, Long)]()
         it.filter(seen.add)
       }, preservesPartitioning = true)
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    val toRelease = scala.collection.mutable.ListBuffer(und)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val toRelease = scala.collection.mutable.ListBuffer[RDD[_]](und)
     // init with the first relaxation folded in: lab0(v) = min(v, nbrs)
     // — reduceByKey over the co-partitioned adjacency is map-side only
-    var labels = tt("init labels")(und
+    var labels = und
       .mapPartitions({ it =>
         it.map { case (s, o) => (s, math.min(s, o)) }
       }, preservesPartitioning = true)
-      .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+      .reduceByKey(part, minOf)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     toRelease += labels
     var round = 0
     var done = false
-    // DELTA MESSAGING: a node re-broadcasts its label only in the round
-    // after it changed. Sound because min is monotone and idempotent —
-    // an unchanged neighbor's label was already folded into v's label
-    // the round it last changed, and labels only decrease — so dropping
-    // its repeat message cannot change any min. Round 1 sends from
-    // everything (init); after a pointer jump, jump-changed nodes
-    // re-enter the changed set (the delta is taken against the labels
-    // at ROUND START, so relax- and jump-changes both re-broadcast).
-    // Message volume per round tracks the still-moving frontier instead
-    // of |E| — on shallow graphs the fixpoint-confirm round shrinks
-    // from a full |E| shuffle to near zero.
-    var changedSrc = labels
+    // DELTA MESSAGING: a node re-sends its label only in the round after
+    // it changed. Sound because min is monotone and idempotent — an
+    // unchanged neighbor's label was already folded into v's label the
+    // round it last changed, and labels only decrease — so dropping its
+    // repeat message cannot change any min. Round 1 sends from
+    // everything (init); the delta is taken against the labels at ROUND
+    // START, so relax-, hook- and jump-changes all re-send. Message
+    // volume per round tracks the still-moving frontier instead of |E|.
+    var changedSrc: RDD[(Long, Long)] = labels
     // sparse-round delta transport: once the changed set fits
-    // ccBroadcastDelta rows (2^20), ship it as a
-    // broadcast sorted-array map and derive messages with a probe-only
-    // scan of the cached adjacency — the cogroup join otherwise hash-
-    // builds over EVERY adjacency row each round, which dominates the
-    // sparse confirm rounds. Scale note: the gate is on the DELTA's
-    // size, never the graph's, so the path is exactly the
-    // broadcast-maintenance discipline of the reasoning ops.
+    // ccBroadcastDelta rows (2^20), ship it as a broadcast sorted-array
+    // map and derive messages with a probe-only scan of the cached
+    // adjacency — the cogroup join otherwise hash-builds over EVERY
+    // adjacency row each round, which dominates the sparse confirm
+    // rounds. The gate is on the DELTA's size, never the graph's.
     val bCap = ccBroadcastDelta.value
     var changedArr: Option[(Array[Long], Array[Long])] = None
-    def deltaOf(newL: org.apache.spark.rdd.RDD[(Long, Long)],
-                oldL: org.apache.spark.rdd.RDD[(Long, Long)]) =
+    def deltaOf(newL: RDD[(Long, Long)], oldL: RDD[(Long, Long)]) =
       newL.join(oldL).filter { case (_, (nl, ol)) => nl != ol }
         .mapValues(_._1)
-    def setChanged(delta: org.apache.spark.rdd.RDD[(Long, Long)],
-                   n: Long): Unit =
+    def setChanged(delta: RDD[(Long, Long)], n: Long): Unit =
       if (n <= bCap) {
         val rows = delta.collect().sortBy(_._1)
         changedArr = Some((rows.map(_._1), rows.map(_._2)))
@@ -402,9 +473,7 @@ object GraphOps {
         s"connectedComponents did not converge in $maxRounds rounds")
       // relax: ONE shuffle of the (changed-neighbor, label) messages
       // onto `part`, then a NARROW left-outer join against the
-      // co-partitioned labels for the self leg — a union+reduceByKey
-      // discarded the labels' partitioner and re-shuffled the full |V|
-      // label set every round on top of the messages
+      // co-partitioned labels
       val rawMsgs = changedArr match {
         case Some((ks, vs)) =>
           val b = spark.sparkContext.broadcast((ks, vs))
@@ -418,40 +487,43 @@ object GraphOps {
         case None =>
           und.join(changedSrc).map { case (_, (nbr, lab)) => (nbr, lab) }
       }
-      val msgs = rawMsgs
-        .reduceByKey(part, (a: Long, b: Long) => math.min(a, b))
-      val relax = labels.leftOuterJoin(msgs, part)
-        .mapValues { case (old, upd) =>
-          math.min(old, upd.getOrElse(Long.MaxValue)) }
+      val msgs = rawMsgs.reduceByKey(part, minOf)
+      val received = labels.leftOuterJoin(msgs, part)
+      // hook: (round-start label, better message) onto `part`
+      val hooks = received
+        .flatMap { case (_, (old, m)) => m.filter(_ < old).map(old -> _) }
+        .reduceByKey(part, minOf)
+      val relax = received
+        .mapValues { case (old, m) => m.fold(old)(math.min(old, _)) }
+        .leftOuterJoin(hooks, part)
+        .mapValues { case (l, h) => h.fold(l)(math.min(l, _)) }
         .persist(StorageLevel.MEMORY_AND_DISK)
       toRelease += relax
       // delta vs round-start labels: narrow co-partitioned join whose
       // count doubles as the materializing action AND the convergence
       // probe AND the broadcast-gate size
       val relaxDelta = deltaOf(relax, labels)
-      val nChanged = tt(s"relax+probe r$round")(relaxDelta.count())
+      val nChanged = relaxDelta.count()
       if (nChanged == 0) {
         labels = relax
         done = true
       } else if (round == 1) {
         // skip the jump while label trees are still depth<=2 (the common
         // shallow-graph case converges in 2-3 relaxes and never needs
-        // one); from round 2 on the Shiloach-Vishkin halving kicks in,
-        // keeping O(log d) rounds on deep graphs at the cost of one
-        // extra round overall
+        // one)
         setChanged(relaxDelta, nChanged)
         labels = relax
       } else {
-        // jump: lab(v) <- lab(lab(v)) — Shiloach-Vishkin label-tree
-        // halving; labels are node ids, so the inner join always hits
+        // jump: lab(v) <- lab(lab(v)); labels are node ids, so the
+        // inner join always hits
         val jumped = relax.map { case (v, l) => (l, v) }
           .join(relax, part)
           .map { case (_, (v, l2)) => (v, l2) }
           .partitionBy(part)
           .persist(StorageLevel.MEMORY_AND_DISK)
         toRelease += jumped
-        tt(s"jump r$round")(jumped.count())
-        // re-broadcast everything that moved this round, jump included
+        jumped.count()
+        // re-send everything that moved this round, jump included
         val jd = deltaOf(jumped, labels)
         setChanged(jd, jd.count())
         labels = jumped
@@ -460,67 +532,12 @@ object GraphOps {
     lastCcRounds.set(round)
     // seal: the result frame owns its blocks (Pins discipline), every
     // loop intermediate is released immediately
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.LongType, nullable = false)))
+    val schema = StructType(Seq("node", "component")
+      .map(StructField(_, LongType, nullable = false)))
     val out = graft.Pins.checkpoint(spark.createDataFrame(
       labels.map { case (v, l) => org.apache.spark.sql.Row(v, l) }, schema))
     toRelease.foreach(_.unpersist(blocking = false))
     out
-  }
-
-  private def connectedComponentsDF(edges: DataFrame, maxRounds: Int): DataFrame = {
-    val pins = new graft.Pins
-    val base = edges.select(col("s"), col("o"))
-      .where(col("s").isNotNull && col("o").isNotNull && col("s") =!= col("o"))
-    val und = pins.pin(
-      base.unionAll(base.select(col("o").as("s"), col("s").as("o"))).distinct())
-    // seed labels with the FIRST relaxation folded in: lab₀(v) =
-    // min(v, neighbors of v) comes straight off the adjacency with one
-    // aggregate — same cost as the plain distinct-nodes init, one full
-    // relax round (join + aggregate) cheaper overall
-    var labels = pins.pin(
-      und.select(col("s").as("node"), col("o").as("lab"))
-        .unionAll(und.select(col("s").as("node"), col("s").as("lab")))
-        .groupBy("node").agg(min(col("lab")).as("lab")))
-    var round = 0
-    var done = false
-    while (!done) {
-      round += 1
-      require(round <= maxRounds,
-        s"connectedComponents did not converge in $maxRounds rounds")
-      // relax: lab'(v) = min(lab(v), min over neighbors u of lab(u)).
-      // The self leg carries the node's PREVIOUS label through the same
-      // aggregate (min ignores the neighbor leg's nulls), so convergence
-      // is read off the pinned relax result with a filter — no separate
-      // old-vs-new probe join per round.
-      val relaxed = pins.pin(
-        und.join(labels, und("s") === labels("node"))
-          .select(und("o").as("node"), col("lab"),
-            when(lit(false), col("lab")).as("labOld"))
-          .unionAll(labels.select(col("node"), col("lab"),
-            col("lab").as("labOld")))
-          .groupBy("node")
-          .agg(min(col("lab")).as("lab"), min(col("labOld")).as("labOld")))
-      if (relaxed.where(col("lab") =!= col("labOld")).isEmpty) {
-        // relax fixpoint: labels are constant per component already —
-        // skip the final round's (now idempotent) jump
-        labels = relaxed.select(col("node"), col("lab"))
-        done = true
-      } else {
-        // jump: lab''(v) = lab'(lab'(v)) — the Shiloach-Vishkin shortcut;
-        // labels are node ids, so the inner join always hits
-        val r = relaxed.select(col("node"), col("lab"))
-        labels = pins.pin(
-          r.join(r.select(col("node").as("lab"), col("lab").as("lab2")),
-              Seq("lab"))
-            .select(col("node"), col("lab2").as("lab")))
-      }
-    }
-    lastCcRounds.set(round)
-    pins.seal(labels.select(col("node"), col("lab").as("component")))
   }
 
   /** Minimum hop distance from a seed set, bounded at `rounds` hops —
@@ -672,6 +689,17 @@ object GraphOps {
   private[graft] val lastSccEdgeBudgetTrips =
     new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** SCC reach doubling keeps a composed edge set only while it holds
+    * at most this many times the input's edges (see
+    * [[stronglyConnectedComponents]]). */
+  val SccEdgeBudgetFactor: Long = 8
+
+  /** The budget factor SCC reads: [[SccEdgeBudgetFactor]], lowered by a
+    * spec (`sccEdgeBudgetFactor.withValue(1) { ... }`) to trip the
+    * budget on a small graph. */
+  private[graft] val sccEdgeBudgetFactor =
+    new scala.util.DynamicVariable[Long](SccEdgeBudgetFactor)
+
   /** Strongly connected components of a DIRECTED edge relation — the
     * directed sibling of [[connectedComponents]], completing the graph
     * family (PageRank, label propagation, walks, triangles, BFS, CC).
@@ -701,8 +729,7 @@ object GraphOps {
     * set can grow toward the remainder's transitive closure on dense
     * deep graphs, so every doubling is BUDGETED: the candidate is
     * counted and accepted only while it stays within
-    * `spark.graft.graph.sccEdgeBudgetFactor` (default 8) times the
-    * input edge count — past that the pass degrades LOUDLY to plain
+    * [[SccEdgeBudgetFactor]] (8) times the input edge count — past that the pass degrades LOUDLY to plain
     * rounds (stderr + [[lastSccEdgeBudgetTrips]], sizes in
     * [[lastSccEdges]]), still exact and still bounded by `maxRounds`.
     * Shuffle-shaped like [[connectedComponents]] (keyed equi-joins,
@@ -724,8 +751,7 @@ object GraphOps {
     var remN = pins.pin(remE.select(col("a").as("node"))
       .unionAll(remE.select(col("b").as("node"))).distinct())
     val e0 = remE.count()
-    val budgetFactor = spark.conf
-      .get("spark.graft.graph.sccEdgeBudgetFactor", "8").toLong
+    val budgetFactor = sccEdgeBudgetFactor.value
     val edgeBudget = math.max(e0, 1L) * math.max(budgetFactor, 1L)
     lastSccEdges.set(e0)
     lastSccEdgeBudgetTrips.set(0)
@@ -761,9 +787,7 @@ object GraphOps {
             "condensation DAG is adversarially deep; raise maxRounds" +
             (if (lastSccEdgeBudgetTrips.get() > 0)
                " (reach doubling hit the composed-edge budget " +
-                 s"${lastSccEdgeBudgetTrips.get()} time(s); raising " +
-                 "spark.graft.graph.sccEdgeBudgetFactor trades memory " +
-                 "for rounds)"
+                 s"${lastSccEdgeBudgetTrips.get()} time(s))"
              else "")
         )
         // deep propagation: double the reach so labels travel 2^k hops
@@ -783,9 +807,7 @@ object GraphOps {
             System.err.println(
               s"[graft] SCC reach doubling rejected: composed edge set " +
                 s"$n2 exceeds budget $edgeBudget (= input $e0 x factor " +
-                s"$budgetFactor); degrading this pass to plain rounds - " +
-                "raise spark.graft.graph.sccEdgeBudgetFactor to trade " +
-                "memory for rounds")
+                s"$budgetFactor); degrading this pass to plain rounds")
           } else {
             e = e2
             lastSccEdges.updateAndGet(m => math.max(m, n2))

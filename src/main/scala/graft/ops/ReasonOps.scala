@@ -4498,10 +4498,9 @@ object ReasonOps {
 
   /** owl:sameAs smushing, the entity-resolution canonicalization: the
     * sameAs statements form an undirected identity graph whose
-    * connected components are computed DISTRIBUTED (GraphOps CC over
-    * rank-encoded long ids, O(log d) pointer-jumped rounds — sameAs
-    * sets are data-sized outputs of entity resolution, never
-    * driver-collectable), each cluster takes its minimum member as the
+    * connected components come from [[identityMapping]] (a driver
+    * union-find for small identity graphs, the distributed fixpoint for
+    * data-sized ones), each cluster takes its minimum member as the
     * canonical term, and every subject/object rewrites through the
     * mapping with two joins. Returns (rewritten triples with the
     * sameAs statements dropped, the member → canonical mapping for
@@ -4528,109 +4527,15 @@ object ReasonOps {
 
   /** The member → canonical mapping of an identity-pair relation
     * (canonical = each connected component's minimum member; one row
-    * per identity-graph node, roots included), pinned.
-    *
-    * Two physical paths, the broadcast-small discipline Spark itself
-    * applies to joins: an identity graph whose EDGE COUNT fits
-    * [[IdentityDriverCap]] (2²⁰) collapses with a driver-side
-    * union-find — one count job + one collect instead of
-    * the rank/CC/jump job chain, which is pure scheduling latency for
-    * the Δ-sized pair sets the functional fixpoint and sameAs
-    * maintenance produce. Larger graphs (corpus-scale entity
-    * resolution — identity sets are DATA-sized by contract) take the
-    * distributed path: CC over rank-encoded ids (component id = min
-    * rank = rank of the min member, since [[GraphOps.orderRanks]] is
-    * order-preserving), decoded back through the rank table. String
-    * ordering on the driver path compares UTF-8 BYTES, matching
-    * Spark's binary string ordering exactly.
+    * per identity-graph node, roots included; a term whose only pair is
+    * (x, x) maps to itself): [[GraphOps.connectedComponents]] under the
+    * member/canon names. Small (Δ-sized) pair sets take its driver
+    * union-find, identity graphs of corpus-scale entity resolution its
+    * distributed fixpoint; both pick the minimum in Spark's ordering of
+    * the term type (UTF-8 bytes for strings).
     */
-  def identityMapping(pairs0: DataFrame): DataFrame = {
-    val Seq(ca, cb) = pairs0.columns.take(2).toSeq
-    val pairs = pairs0.select(col(ca).as("s"), col(cb).as("o"))
-    val cap = identityDriverCap.value
-    val pinned = graft.Pins.checkpointLazy(pairs)
-    val n = pinned.count()
-    if (n <= cap) identityMappingLocal(pinned)
-    else {
-      val nodes = pinned.select(col("s").as("node"))
-        .unionAll(pinned.select(col("o").as("node")))
-      val ranks = GraphOps.orderRanks(nodes).localCheckpoint(true)
-      val enc = pinned
-        .join(ranks.select(col("node").as("s"), col("rk").as("srk")), Seq("s"))
-        .join(ranks.select(col("node").as("o"), col("rk").as("ork")), Seq("o"))
-        .select(col("srk").as("s"), col("ork").as("o"))
-      val cc = GraphOps.connectedComponents(enc)
-      cc.join(ranks.select(col("rk").as("node"), col("node").as("member")),
-          Seq("node"))
-        .join(ranks.select(col("rk").as("component"), col("node").as("canon")),
-          Seq("component"))
-        .select(col("member"), col("canon"))
-        .localCheckpoint(true)
-    }
-  }
-
-  /** Identity graphs of at most this many edges take the driver
-    * union-find in [[identityMapping]]. */
-  val IdentityDriverCap: Long = 1L << 20
-
-  /** The edge cap [[identityMapping]] reads: [[IdentityDriverCap]],
-    * lowered by a spec (`identityDriverCap.withValue(-1) { ... }`) to
-    * run small graphs through the distributed path. */
-  private[graft] val identityDriverCap =
-    new scala.util.DynamicVariable[Long](IdentityDriverCap)
-
-  /** UTF-8 byte order for driver-side canon selection — MUST match the
-    * executor path's min semantics (Spark compares strings as binary
-    * UTF-8; JVM String.compareTo differs on supplementary characters).
-    */
-  private def minTermLess(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: java.lang.Long, y: java.lang.Long) => x < y
-    case (x: String, y: String) =>
-      val xb = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val yb = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val m = math.min(xb.length, yb.length)
-      var i = 0
-      while (i < m) {
-        val c = (xb(i) & 0xff) - (yb(i) & 0xff)
-        if (c != 0) return c < 0
-        i += 1
-      }
-      xb.length < yb.length
-    case (x, y) => x.toString < y.toString
-  }
-
-  /** Driver union-find over a capped edge set, union-by-min so every
-    * root stays its component's minimum member. */
-  private def identityMappingLocal(pairs: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val dt = pairs.schema.fields.head.dataType
-    val parent = new java.util.HashMap[Any, Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.get(r) != r) r = parent.get(r)
-      var c = x
-      while (parent.get(c) != r) {
-        val nx = parent.get(c); parent.put(c, r); c = nx
-      }
-      r
-    }
-    pairs.collect().foreach { row =>
-      val a = row.get(0); val b = row.get(1)
-      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (minTermLess(ra, rb)) parent.put(rb, ra)
-        else parent.put(ra, rb)
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    val rows = parent.keySet().asScala.toSeq
-      .map(k => org.apache.spark.sql.Row(k, find(k)))
-    spark.createDataFrame(
-      new java.util.ArrayList(rows.asJava),
-      org.apache.spark.sql.types.StructType(Seq("member", "canon").map(
-        org.apache.spark.sql.types.StructField(_, dt, nullable = false))))
-  }
+  def identityMapping(pairs: DataFrame): DataFrame =
+    GraphOps.connectedComponents(pairs).toDF("member", "canon")
 
   /** Rewrite a relation's subjects and objects through a
     * member → canonical mapping (two left joins + coalesce, deduped).

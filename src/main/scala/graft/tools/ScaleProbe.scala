@@ -4,13 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Scale-evidence spot-run: execute the iterative / heaviest gates at
   * two scale factors and record, per gate, the wall time AND the
-  * fixpoint ROUND count (connected-components pointer-jump rounds,
-  * transitive-closure squaring rounds). The design claim under test is
-  * that round counts track graph DIAMETER, not row count — so at 10×
-  * the data the rounds must stay ~flat and only per-round work grows;
-  * a round count that climbs with SF (or a plan that flips to a
-  * nested-loop join) is the scale bug this probe exists to catch
-  * before a 100× cluster run does.
+  * fixpoint ROUND count (connected-components rounds, transitive-closure
+  * squaring rounds). Connected components take their distributed
+  * fixpoint at every size here: its rounds are under test. The design
+  * claim under test is that round counts track graph DIAMETER, not row
+  * count — so at 10× the data the rounds must stay ~flat and only
+  * per-round work grows; a round count that climbs with SF (or a plan
+  * that flips to a nested-loop join) is the scale bug this probe exists
+  * to catch before a 100× cluster run does.
   *
   *   sbt "runMain graft.tools.ScaleProbe"         # sf0.01 then sf0.1
   *
@@ -104,7 +105,10 @@ object ScaleProbe {
           graft.ops.ReasonOps.lastFunctionalRounds.set(0)
           jobCounter.set(0)
           val t0 = System.nanoTime()
-          fn(spark, dir).collect()
+          // CC takes its distributed fixpoint (not the driver
+          // union-find), so ccRounds counts fixpoint rounds
+          graft.ops.GraphOps.identityDriverCap.withValue(-1)(
+            fn(spark, dir).collect())
           val sec = (System.nanoTime() - t0) / 1e9
           if (sec < best) best = sec
           // counters from the FIRST (cold) run: session artifacts cache

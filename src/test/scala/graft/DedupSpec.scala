@@ -143,7 +143,7 @@ class DedupSpec extends SparkSpec {
 
   "clusters" should "compute connected components with min-id representative" in {
     val pairs = Seq((1L, 2L), (2L, 5L), (7L, 9L)).toDF("doc_a", "doc_b")
-    val cc = DedupOps.clusters(spark, pairs).collect()
+    val cc = DedupOps.clusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     cc(1L) shouldBe 1L
     cc(2L) shouldBe 1L

@@ -74,13 +74,37 @@ class GraphOpsSpec extends SparkSpec {
     one("c") shouldBe "b"
   }
 
+  /** Node → minimum member of its component, by a plain union-find. */
+  private def bruteComponents[A](pairs: Seq[(A, A)])(implicit ord: Ordering[A]): Map[A, A] = {
+    val parent = scala.collection.mutable.Map[A, A]()
+    def find(x: A): A = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ord.max(ra, rb)) = ord.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  /** `connectedComponents` of string edges on the driver union-find and,
+    * through the cap seam, on the rank-encoded distributed fixpoint —
+    * both must give the same map, which is returned. */
+  private def stringComponentsBothPaths(edges: org.apache.spark.sql.DataFrame): Map[String, String] = {
+    def run() = GraphOps.connectedComponents(edges)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val onDriver = run()
+    GraphOps.identityDriverCap.withValue(-1)(run()) shouldBe onDriver
+    onDriver
+  }
+
   "connectedComponents" should "converge past any fixed round bound on a long chain" in {
     // a 40-node path: diameter 39, far beyond what bounded-round label
-    // propagation covers — pointer jumping must still converge (in
-    // O(log 40) rounds, inside the op's default round guard)
+    // propagation covers — the distributed fixpoint must still converge
+    // inside the op's default round guard
     val chain = (0 until 39).map(i => (f"n$i%02d", f"n${i + 1}%02d")).toDF("s", "o")
-    val cc = GraphOps.connectedComponents(chain)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val cc = stringComponentsBothPaths(chain)
     cc.size shouldBe 40
     cc.values.toSet shouldBe Set("n00")
   }
@@ -95,52 +119,64 @@ class GraphOpsSpec extends SparkSpec {
     } yield (f"n$i%02d", f"n$j%02d")
     val messy = pairs ++ pairs.map(_.swap) ++ pairs.take(7) ++
       Seq(("n03", "n03"))
-    val got = GraphOps.connectedComponents(messy.toDF("s", "o"))
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // brute force union-find
-    val parent = scala.collection.mutable.Map[String, String]()
-    def find(x: String): String = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(if (ra < rb) rb else ra) = if (ra < rb) ra else rb
-    }
-    val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
-    val comp = nodes.map { v =>
-      v -> nodes.filter(u => find(u) == find(v)).min
-    }.toMap
+    val got = stringComponentsBothPaths(messy.toDF("s", "o"))
+    val comp = bruteComponents(pairs)
     comp.values.toSet.size should be > 3 // fixture has several components
     got shouldBe comp
   }
 
   it should "agree with the GraphX Pregel clusters on the pair-graph shape" in {
-    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 1L))
-      .toDF("doc_a", "doc_b")
-    val viaGraphx = graft.ops.DedupOps.clusters(spark, pairs)
+    // GraphX's own connected components, an independent implementation
+    import org.apache.spark.graphx.{Edge, Graph}
+    val raw = Seq((1L, 2L), (2L, 3L), (5L, 6L), (8L, 9L), (9L, 1L))
+    val viaGraphx = Graph.fromEdges(
+        spark.sparkContext.parallelize(raw.map { case (a, b) => Edge(a, b, 1) }), 0)
+      .connectedComponents().vertices.collect().toMap
+    val pairs = raw.toDF("doc_a", "doc_b")
+    val viaClusters = graft.ops.DedupOps.clusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaDf = GraphOps.connectedComponents(
-        pairs.select(col("doc_a").as("s"), col("doc_b").as("o")))
+    val viaCc = GraphOps.identityDriverCap.withValue(-1)(
+      GraphOps.connectedComponents(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    viaDf shouldBe viaGraphx
+    viaClusters shouldBe viaGraphx
+    viaCc shouldBe viaGraphx
   }
 
   it should "give the same components when every round ships its delta shuffled" in {
-    // a 300-node chain of long ids plus a detached 3-cycle: the default
-    // run moves each round's changed labels as a broadcast (the set
-    // stays under CcBroadcastDelta); a cap of -1 sends every round
-    // through the shuffled delta join instead
+    // long ids on the distributed fixpoint (the cap seam at -1): the
+    // default run moves each round's changed labels as a broadcast (the
+    // set stays under CcBroadcastDelta); a delta cap of -1 sends every
+    // round through the shuffled delta join instead. Inputs: a 300-node
+    // ascending chain plus a detached 3-cycle; the same chain in
+    // scrambled and in seeded random id order — ids that do not grow
+    // along the chain, which min-label relaxation alone walks one hop
+    // per round (root hooking keeps them to a handful)
     val ids = (0 until 300).map(i => 10000L + i)
-    val chain = ids.zip(ids.tail) ++ Seq((1L, 2L), (2L, 3L), (3L, 1L))
-    val edges = chain.toDF("s", "o")
-    def comps(): Map[Long, Long] = GraphOps.connectedComponents(edges)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaBroadcast = comps()
-    val viaShuffle = GraphOps.ccBroadcastDelta.withValue(-1L)(comps())
-    viaShuffle shouldBe viaBroadcast
-    viaBroadcast.size shouldBe 303
-    viaBroadcast.values.toSet shouldBe Set(ids.min, 1L)
+    val scrambled = (0 until 300).map(i => (i * 7919L) % 1009 + 10000L)
+    val shuffled = new scala.util.Random(20261019L).shuffle((0 until 300).map(_ + 20000L))
+    val graphs = Seq(
+      ids.zip(ids.tail) ++ Seq((1L, 2L), (2L, 3L), (3L, 1L)),
+      scrambled.zip(scrambled.tail),
+      shuffled.zip(shuffled.tail))
+    graphs.foreach { pairs =>
+      val edges = pairs.toDF("s", "o")
+      def comps(): Map[Long, Long] = {
+        val cc = GraphOps.connectedComponents(edges)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        GraphOps.lastCcRounds.get() should (be >= 1L and be <= 16L)
+        cc
+      }
+      val (viaBroadcast, viaShuffle) = GraphOps.identityDriverCap.withValue(-1)(
+        (comps(), GraphOps.ccBroadcastDelta.withValue(-1L)(comps())))
+      val expected = bruteComponents(pairs)
+      viaBroadcast shouldBe expected
+      viaShuffle shouldBe expected
+      // the driver union-find (the default at this size) agrees
+      GraphOps.connectedComponents(edges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe expected
+      GraphOps.lastCcRounds.get() shouldBe 0L
+    }
+    bruteComponents(graphs.head).values.toSet shouldBe Set(ids.min, 1L)
   }
 
   "orderRanks" should "assign order-preserving ranks, so min(rank) ≡ min(node)" in {
@@ -383,8 +419,7 @@ class GraphOpsSpec extends SparkSpec {
     // budget factor pinned to 1 every composed candidate exceeds the
     // budget, the pass degrades to plain rounds (telemetered), and the
     // result stays exact (a path is all singleton SCCs)
-    spark.conf.set("spark.graft.graph.sccEdgeBudgetFactor", "1")
-    try {
+    GraphOps.sccEdgeBudgetFactor.withValue(1) {
       val edges = (1 until 24).map(i => (i.toLong + 1, i.toLong))
       val got = GraphOps.stronglyConnectedComponents(spark,
         edges.toDF("a", "b"))
@@ -396,7 +431,7 @@ class GraphOpsSpec extends SparkSpec {
       // the rejected composition was counted and recorded, and it never
       // replaced the working edge set (which stayed at the input size)
       GraphOps.lastSccEdges.get() should be > 23L
-    } finally spark.conf.unset("spark.graft.graph.sccEdgeBudgetFactor")
+    }
     // under the default factor a shallow graph never trips the budget
     val dag = Seq((1L, 2L), (2L, 3L), (1L, 3L))
     GraphOps.stronglyConnectedComponents(spark, dag.toDF("a", "b"))

@@ -3686,7 +3686,8 @@ class ReasonSpec extends SparkSpec {
     // U+FFFD sorts BEFORE U+1F600 in UTF-8 bytes (EF.. < F0..) but AFTER
     // it in UTF-16 (FFFD > D83D): both paths must pick the UTF-8 minimum,
     // Spark's binary string order. The long terms share a 4,000-char
-    // prefix, so only their tails decide.
+    // prefix, so only their tails decide. A pair (x, x) maps x to itself
+    // on both paths.
     val emoji = "a\uD83D\uDE00"
     val repl = "a\uFFFD"
     val pre = "t" * 4000
@@ -3694,6 +3695,7 @@ class ReasonSpec extends SparkSpec {
     val g = Seq(
       (emoji, ReasonOps.SameAs, repl), (repl, ReasonOps.SameAs, "b"),
       (l1, ReasonOps.SameAs, l2), (l3, ReasonOps.SameAs, l1),
+      ("x", ReasonOps.SameAs, "x"),
       (emoji, "p", "o"), ("b", "q", emoji), (l3, "p", l1), ("c", "r", "d"))
       .toDF("s", "p", "o")
     def run(): (Set[Seq[Any]], Set[Seq[Any]]) = {
@@ -3701,11 +3703,11 @@ class ReasonSpec extends SparkSpec {
       (rw.collect().map(_.toSeq).toSet, mp.collect().map(_.toSeq).toSet)
     }
     val (rwDriver, mpDriver) = run()
-    val (rwDist, mpDist) = ReasonOps.identityDriverCap.withValue(-1L)(run())
+    val (rwDist, mpDist) = graft.ops.GraphOps.identityDriverCap.withValue(-1)(run())
     mpDist shouldBe mpDriver
     rwDist shouldBe rwDriver
     mpDriver shouldBe Set(Seq(emoji, repl), Seq(repl, repl), Seq("b", repl),
-      Seq(l1, l2), Seq(l2, l2), Seq(l3, l2))
+      Seq(l1, l2), Seq(l2, l2), Seq(l3, l2), Seq("x", "x"))
     rwDriver shouldBe Set(Seq(repl, "p", "o"), Seq(repl, "q", repl),
       Seq(l2, "p", l2), Seq("c", "r", "d"))
   }
