@@ -1826,6 +1826,8 @@ object SparkEntry {
   /** Fixed-iteration PageRank over the shared undirected entity
     * adjacency: 3 iterations, integer-pico contribution sums (order
     * independent, so the DuckDB oracle replays the recursion exactly).
+    * At this size `GraphOps.pageRank` collects the adjacency once and
+    * iterates on the driver (the same sums, so the same bits).
     */
   private def pageRankQ(s: SparkSession, d: String): DataFrame = {
     // iterate on encoded node ids (fixed-width long shuffles), decode
@@ -1845,7 +1847,9 @@ object SparkEntry {
     * representatives), exactly replayable in SQL — but the ITERATION
     * runs on dense order-preserving node ranks (min(rank) ≡ min(node)),
     * so each round shuffles fixed-width longs and the strings appear
-    * only in the single decode join at the top.
+    * only in the single decode join at the top. At this size
+    * `GraphOps.minLabelPropagation` collects the ranked adjacency once
+    * and runs the rounds on the driver.
     */
   private def labelPropQ(s: SparkSession, d: String): DataFrame = {
     val (adjRk, ranks) = GraftStore.entityAdjacencyRanked(s, d)
@@ -2058,11 +2062,12 @@ object SparkEntry {
       .orderBy("s", "p", "o", "g")
   }
 
-  /** Delta-frontier BFS over the shared entity adjacency: minimum hop
+  /** Layered BFS over the shared entity adjacency: minimum hop
     * distance from the region nodes within 3 hops. Iterates on dense
-    * node ranks (fixed-width long shuffles; see `labelPropQ`) and
-    * decodes once at the top; the oracle unrolls the same three
-    * min-distance rounds.
+    * node ranks (see `labelPropQ`) and decodes once at the top; at this
+    * size `GraphOps.bfsDistances` runs the layers on the driver over one
+    * bounded collect of the adjacency and one of the seeds. The oracle
+    * unrolls the same three min-distance rounds.
     */
   private def bfsDistQ(s: SparkSession, d: String): DataFrame = {
     val (adjRk, ranks) = GraftStore.entityAdjacencyRanked(s, d)
@@ -3887,9 +3892,10 @@ object SparkEntry {
     * form directed 4-cycles (each quad of consecutive keys rings
     * through a window-closed successor edge) bridged by ONE-WAY
     * group-to-group edges — the bridges must NOT merge components, so
-    * each SCC is exactly its quad with the minimum key as the id (the
-    * forward/backward min-label peeling of
-    * `GraphOps.stronglyConnectedComponents`; the undirected sibling is
+    * each SCC is exactly its quad with the minimum key as the id
+    * (`GraphOps.stronglyConnectedComponents`: at this size one bounded
+    * collect and Tarjan on the driver, past 2^20 edges its
+    * forward/backward min-label peeling; the undirected sibling is
     * [[graft.ops.GraphOps.connectedComponents]]). */
   private def sccQ(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -3915,7 +3921,9 @@ object SparkEntry {
     * mixes both step sizes (offset o costs 3·⌊o/2⌋ + 2·(o mod 2)), so
     * a relaxation that settles nodes too early (pure BFS) or ignores
     * weights breaks the closed-form oracle; the frontier drains in
-    * ≤ 4 hops regardless of customer count. */
+    * ≤ 4 hops regardless of customer count. At this size the rounds run
+    * on the driver over one bounded collect of the edges and one of the
+    * sources, and the final sort sorts that local relation in place. */
   private def shortestPathsQ(s: SparkSession, d: String): DataFrame = {
     val cu = t(s, d, "customer").select(col("c_custkey").as("k"))
     val keys = cu.select(col("k").as("b"))

@@ -6,8 +6,9 @@ package org.apache.spark.sql.execution
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.expressions.{Attribute, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.LazilyGeneratedOrdering
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
@@ -15,8 +16,8 @@ import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.types.StructType
 
-/** Rows the driver already holds: frames over them, and broadcasts of
-  * them that start no Spark job.
+/** Rows the driver already holds: frames over them, and broadcasts and
+  * global sorts of them that start no Spark job.
   *
   * `BroadcastExchangeExec` reads its child through
   * `executeCollectIterator`, which `LocalTableScanExec` does not
@@ -28,7 +29,8 @@ import org.apache.spark.sql.types.StructType
   * driver alone. `GraftExtensions` installs the rule both as an AQE
   * query-stage preparation rule and, for plans made with AQE off, as a
   * pre-columnar-transition rule (after `EnsureRequirements` has placed
-  * the exchanges).
+  * the exchanges). [[sortRule]], an optimizer rule, sorts a local
+  * relation where it is.
   */
 object DriverRows {
 
@@ -40,6 +42,21 @@ object DriverRows {
             rows: Seq[InternalRow]): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession],
       LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** A global sort directly over a (batch) local relation becomes the
+    * local relation with its rows sorted on the driver, by Spark's own
+    * ordering of the `SortOrder`s (direction and null order kept). The
+    * distributed sort of rows the driver holds ships them out and back
+    * in three jobs (sample, range exchange, collect).
+    */
+  val sortRule: Rule[LogicalPlan] = new Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+      case Sort(order, true, l: LocalRelation, _)
+          if !l.isStreaming && order.forall(o =>
+            o.deterministic && !SubqueryExpression.hasSubquery(o)) =>
+        l.copy(data = l.data.sorted(new LazilyGeneratedOrdering(order, l.output)))
+    }
+  }
 
   val broadcastRule: Rule[SparkPlan] = new Rule[SparkPlan] {
     override def apply(plan: SparkPlan): SparkPlan = plan.transform {

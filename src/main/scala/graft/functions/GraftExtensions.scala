@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.execution.{ColumnarRule, DriverRows}
 
 /** Session extensions registering graft's native Catalyst expressions and
-  * the job-free broadcast of driver-held rows (`DriverRows`).
+  * the job-free broadcast and global sort of driver-held rows
+  * (`DriverRows`).
   * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.functions.GraftExtensions`; call sites
   * then reach the functions via `functions.call_function("graft_dot", ...)`
@@ -20,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions = DriverRows.broadcastRule
     })
+    ext.injectOptimizerRule(_ => DriverRows.sortRule)
     ext.injectFunction((
       new FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProductD].getName, "graft_dot"),

@@ -4,10 +4,11 @@ import graft.dict.Dictionary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
-import org.apache.spark.sql.execution.{DriverRows, ScopedConf}
+import org.apache.spark.sql.execution.DriverRows
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StructField,
+  StructType}
 
 /** Graph sampling over the edge relation — the operator family behind
   * DeepWalk/node2vec-style embedding training data. The reference carried
@@ -32,26 +33,38 @@ object GraphOps {
 
   /** Fixed-iteration PageRank over a ranked adjacency (use an UNDIRECTED
     * adjacency and every node has out-degree ≥ 1, so no dangling-mass
-    * term is needed). Per iteration: one join (ranks → edges) and one
-    * aggregate (contributions → targets); contributions accumulate in
-    * integer PICO units (`floor(r/deg · 1e12 + 0.5)` as long — the
-    * engine-neutral half-up discipline, since BigDecimal HALF_UP and a
-    * float-multiply `round()` diverge on decimal half-boundaries), so
-    * the sum is order-independent and the whole recursion replays
-    * bit-identically in a SQL oracle — the engine-portable determinism
-    * discipline used across this codebase (centroids, surprisal, walks).
+    * term is needed). Per iteration every node sends `r/deg` along each
+    * out-edge; contributions accumulate in integer PICO units
+    * (`floor(r/deg · 1e12 + 0.5)` as long — the engine-neutral half-up
+    * discipline, since BigDecimal HALF_UP and a float-multiply `round()`
+    * diverge on decimal half-boundaries), so the sum is
+    * order-independent and the whole recursion replays bit-identically
+    * in a SQL oracle — the engine-portable determinism discipline used
+    * across this codebase (centroids, surprisal, walks). A node's next
+    * rank is `base + d · csum/1e12`; the output rounds it to 1e-9.
     *
-    * Scale shape: ranks are a (node, double) relation re-pinned per
-    * iteration; edges are scanned once per iteration with the rank join
-    * shuffling on the source key. Iterations are explicit (fixed-point
-    * analytics), not convergence-driven — the common production setup.
+    * The plan follows the measured input ([[gated]]): an adjacency of
+    * at most [[GraphDriverCap]] rows is collected once and iterated on
+    * the driver (the same integer sums, so the same bits); a larger one
+    * runs one join (ranks → edges) and one aggregate (contributions →
+    * targets) per iteration, with the edges scanned once per iteration
+    * and the rank join shuffling on the source key. Iterations are
+    * explicit (fixed-point analytics), not convergence-driven — the
+    * common production setup. Reads the `s`, `o`, `rk`, `deg` columns.
     */
   def pageRank(rankedAdj: DataFrame, iterations: Int,
                damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, "need iterations >= 1")
+    gated(rankedAdj.select("s", "o", "rk", "deg"), graft.Pins.isMaterialized(rankedAdj))(
+      pageRankOnDriver(rankedAdj.sparkSession, _, rankedAdj.schema, iterations, damping))(
+      pageRankRounds(_, iterations, damping))
+  }
+
+  /** [[pageRank]]'s distributed rounds over an adjacency that is already
+    * materialized (or a projection of one). */
+  private def pageRankRounds(adj: DataFrame, iterations: Int,
+                             damping: Double): DataFrame = {
     val pins = new graft.Pins
-    val adj =
-      if (graft.Pins.isMaterialized(rankedAdj)) rankedAdj else pins.pin(rankedAdj)
     // one row per source is already marked in the ranked adjacency
     // (rk = 1) — a filter off the cache, NOT a distinct (which paid a
     // full |E| exchange + a checkpoint job per call)
@@ -83,19 +96,75 @@ object GraphOps {
       (floor(col("r") * 1e9 + 0.5) / 1e9).as("rank")))
   }
 
+  /** [[pageRankRounds]] on collected (s, o, rk, deg) rows, as the SQL
+    * evaluates it: the rk = 1 rows (counted with multiplicity) are the
+    * start set, a node's rank exists after a round only if some edge
+    * reached it, and every double operation runs in the plan's order.
+    * None (the distributed plan takes the input) for null ends or
+    * degrees, a zero degree, ends of two types, or an rk/deg type the
+    * driver does not read. */
+  private def pageRankOnDriver(spark: SparkSession, rows: Array[InternalRow],
+                               schema: StructType, iterations: Int,
+                               damping: Double): Option[DataFrame] = {
+    val Seq(dt, ot, rkT, degT) = Seq("s", "o", "rk", "deg").map(schema(_).dataType)
+    val integral = Set[DataType](IntegerType, LongType)
+    if (dt != ot || !integral(rkT) || !(integral(degT) || degT == DoubleType) ||
+        hasNull(rows, 0, 1, 3))
+      return None
+    val deg = rows.map(_.get(3, degT).asInstanceOf[Number].doubleValue)
+    if (deg.exists(_ == 0.0)) return None
+    val (nodes, Seq(s, o)) = denseIds(rows, dt, 0, 1)
+    // a node's rank rows: only the start set can repeat a node
+    var mult = new Array[Long](nodes.length)
+    rows.indices.foreach(i => if (rkIsOne(rows(i), rkT)) mult(s(i)) += 1)
+    val n = mult.sum
+    val base = (1.0 - damping) / n
+    var rank = Array.fill(nodes.length)(1.0 / n)
+    for (_ <- 1 to iterations) {
+      val csum = new Array[Long](nodes.length)
+      val got = new Array[Long](nodes.length)
+      rows.indices.foreach { i =>
+        val v = s(i)
+        if (mult(v) > 0) {
+          csum(o(i)) += math.floor((rank(v) / deg(i)) * 1e12 + 0.5).toLong * mult(v)
+          got(o(i)) = 1
+        }
+      }
+      rank = csum.map(c => base + damping * (c.toDouble / 1e12))
+      mult = got
+    }
+    Some(DriverRows.frame(spark,
+      StructType(Seq(StructField("node", dt, nullable = false),
+        StructField("rank", DoubleType, nullable = false))),
+      nodes.indices.filter(mult(_) > 0).map(v =>
+        InternalRow(nodes(v), math.floor(rank(v) * 1e9 + 0.5).toLong.toDouble / 1e9))))
+  }
+
   /** Fixed-iteration MIN-LABEL propagation: after `iterations` rounds
     * every node's label is the smallest node id within graph distance
     * `iterations` — the bounded-round connected-components/blocking
     * primitive (duplicate blocks, community seeds). Pure order
     * comparisons — no floats — so a SQL oracle replays it exactly on any
-    * term type. One join + one min-aggregate per round over the pinned
-    * adjacency; labels re-pin per round and seal at the end.
+    * term type. The rk = 1 rows' sources start labelled with themselves;
+    * each synchronous round a node takes the minimum (Spark's ordering
+    * of the node type) of its label and its in-neighbors' labels.
+    *
+    * The plan follows the measured input ([[gated]]): an adjacency of at
+    * most [[GraphDriverCap]] rows runs its rounds on the driver; a
+    * larger one runs one join + one min-aggregate per round over the
+    * pinned adjacency, labels re-pinned per round and sealed at the end.
     */
   def minLabelPropagation(rankedAdj: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "need iterations >= 1")
+    gated(rankedAdj.select("s", "o", "rk"), graft.Pins.isMaterialized(rankedAdj))(
+      labelPropOnDriver(rankedAdj.sparkSession, _, rankedAdj.schema, iterations))(
+      labelPropRounds(_, iterations))
+  }
+
+  /** [[minLabelPropagation]]'s distributed rounds over an adjacency that
+    * is already materialized (or a projection of one). */
+  private def labelPropRounds(adj: DataFrame, iterations: Int): DataFrame = {
     val pins = new graft.Pins
-    val adj =
-      if (graft.Pins.isMaterialized(rankedAdj)) rankedAdj else pins.pin(rankedAdj)
     // init: one row per source is already marked in the ranked adjacency
     // (rk = 1) — a filter off the cache, NOT a distinct (full exchange)
     var labels = adj.where(col("rk") === 1)
@@ -113,6 +182,47 @@ object GraphOps {
           .groupBy("node").agg(min(col("lab")).as("lab")))
     }
     pins.seal(labels)
+  }
+
+  /** [[labelPropRounds]] on collected (s, o, rk) rows; None (the
+    * distributed plan takes the input) for null ends, ends of two types
+    * or a non-integral rk. */
+  private def labelPropOnDriver(spark: SparkSession, rows: Array[InternalRow],
+                                schema: StructType, iterations: Int): Option[DataFrame] = {
+    val Seq(dt, ot, rkT) = Seq("s", "o", "rk").map(schema(_).dataType)
+    if (dt != ot || !Set[DataType](IntegerType, LongType)(rkT) || hasNull(rows, 0, 1))
+      return None
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val (nodes, Seq(s, o)) = denseIds(rows, dt, 0, 1)
+    // each node's label as a dense id, -1 while it has none
+    var labels = Array.fill(nodes.length)(-1)
+    rows.indices.foreach(i => if (rkIsOne(rows(i), rkT)) labels(s(i)) = s(i))
+    for (_ <- 1 to iterations) {
+      val next = labels.clone()
+      rows.indices.foreach { i =>
+        val l = labels(s(i))
+        if (l >= 0 && (next(o(i)) < 0 || ord.lt(nodes(l), nodes(next(o(i)))))) next(o(i)) = l
+      }
+      labels = next
+    }
+    Some(DriverRows.frame(spark,
+      StructType(Seq("node", "lab").map(StructField(_, dt, nullable = false))),
+      nodes.indices.filter(labels(_) >= 0).map(v => InternalRow(nodes(v), nodes(labels(v))))))
+  }
+
+  /** Dense ids for the node values (of type `dt`) in columns `cols` of
+    * collected rows: the distinct values, and per column each row's id
+    * into them. */
+  private def denseIds(rows: Array[InternalRow], dt: DataType,
+                       cols: Int*): (Array[Any], Seq[Array[Int]]) = {
+    val id = new java.util.HashMap[Any, Integer]()
+    val values = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val perCol = cols.map(c => rows.map { r =>
+      val v = r.get(c, dt)
+      val i = id.putIfAbsent(v, values.length)
+      if (i == null) { values += v; values.length - 1 } else i.intValue
+    })
+    (values.toArray, perCol)
   }
 
   /** Ranked adjacency of an edge relation: per-source neighbor ranks and
@@ -271,12 +381,11 @@ object GraphOps {
     * [[graft.ops.DedupOps.clusters]] and [[ReasonOps.identityMapping]]
     * rename its columns.
     *
-    * The physical path follows the measured input, not a setting:
-    *   - at most [[IdentityDriverCap]] (2^20) edges: a bounded collect
-    *     ([[graft.dict.Dictionary.collectBounded]], one job) brings the
-    *     edges to the driver, a union-find (union by min) labels them,
-    *     and the result is a local relation — a fixpoint's rounds would
-    *     be pure scheduling latency at that size;
+    * The physical path follows the measured input ([[gated]]), not a
+    * setting:
+    *   - at most [[GraphDriverCap]] (2^20) edges: a union-find (union by
+    *     min) labels the collected edges on the driver, and the result is
+    *     a local relation;
     *   - long ids over the cap: the RDD fixpoint of [[ccRounds]];
     *   - any other node type over the cap: the same fixpoint over
     *     [[orderRanks]] (order-preserving, so the min rank is the rank of
@@ -295,25 +404,17 @@ object GraphOps {
   def connectedComponents(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
     val Seq(c0, c1) = edges.columns.take(2).toSeq
     val dt = edges.schema(c0).dataType
-    val base0 = edges.select(col(c0).as("s"), col(c1).cast(dt).as("o"))
+    val base = edges.select(col(c0).as("s"), col(c1).cast(dt).as("o"))
       .where(col("s").isNotNull && col("o").isNotNull)
-    // an unmaterialized input gets a lazy pin, filled by the bounded
-    // collect's job: over the cap the fixpoint reads it instead of
-    // re-running the input's plan
-    val base =
-      if (Dictionary.isLocal(base0) || graft.Pins.isMaterialized(edges)) base0
-      else graft.Pins.checkpointLazy(base0)
-    val cap = identityDriverCap.value
-    val onDriver = if (cap < 0) None else Dictionary.collectRows(base, cap)
-    val out = onDriver match {
-      case Some(rows) =>
-        lastCcRounds.set(0)
-        unionFind(edges.sparkSession, rows, dt)
-      case None if dt == LongType => ccRounds(base, maxRounds)
-      case None =>
+    gated(base, graft.Pins.isMaterialized(edges)) { rows =>
+      lastCcRounds.set(0)
+      Some(unionFind(edges.sparkSession, rows, dt))
+    } {
+      case in if dt == LongType => ccRounds(in, maxRounds)
+      case in =>
         val ranks = graft.Pins.checkpoint(
-          orderRanks(base.select(col("s")).unionAll(base.select(col("o")))))
-        val cc = ccRounds(base
+          orderRanks(in.select(col("s")).unionAll(in.select(col("o")))))
+        val cc = ccRounds(in
             .join(ranks.toDF("s", "srk"), "s").join(ranks.toDF("o", "ork"), "o")
             .select("srk", "ork"), maxRounds)
         val decoded = graft.Pins.checkpoint(cc
@@ -323,19 +424,47 @@ object GraphOps {
         Seq(ranks, cc).foreach(graft.Pins.unpin)
         decoded
     }
-    if (base ne base0) graft.Pins.unpin(base)
-    out
   }
 
-  /** Edge sets of at most this many rows take the driver union-find of
-    * [[connectedComponents]]. */
-  val IdentityDriverCap: Int = 1 << 20
+  /** Graph inputs of at most this many rows (2^20 edges) run on the
+    * driver: each graph fixpoint here ([[connectedComponents]],
+    * [[stronglyConnectedComponents]], [[bfsDistances]],
+    * [[shortestPaths]], [[pageRank]], [[minLabelPropagation]]) collects
+    * them in one bounded job and runs a sequential algorithm over the
+    * rows — at that size a fixpoint's rounds are pure scheduling
+    * latency, and one thread beats any dataflow plan. */
+  val GraphDriverCap: Int = 1 << 20
 
-  /** The edge cap [[connectedComponents]] reads: [[IdentityDriverCap]],
-    * lowered by a spec or probe (`identityDriverCap.withValue(-1) {...}`)
-    * to run small graphs through the distributed fixpoint. */
-  private[graft] val identityDriverCap =
-    new scala.util.DynamicVariable[Int](IdentityDriverCap)
+  /** The cap the graph fixpoints read: [[GraphDriverCap]], lowered by a
+    * spec or probe (`graphDriverCap.withValue(-1) {...}`) to run small
+    * graphs through the distributed plans. */
+  private[graft] val graphDriverCap =
+    new scala.util.DynamicVariable[Int](GraphDriverCap)
+
+  /** The rows of `df` when it holds at most [[graphDriverCap]] of them
+    * (one bounded-collect job, none for a local relation), else None. */
+  private def driverRows(df: DataFrame): Option[Array[InternalRow]] = {
+    val cap = graphDriverCap.value
+    if (cap < 0) None else Dictionary.collectRows(df, cap)
+  }
+
+  /** The size gate of every graph fixpoint: `onDriver` over the rows of
+    * `input` when [[driverRows]] returns them and `onDriver` takes them
+    * (None: an input its driver algorithm does not read, e.g. null
+    * ends), else `distributed` over `input`. An input that is neither
+    * local nor materialized (`materialized`: the caller's frame is a
+    * checkpoint or cached) is pinned lazily first, so the collect's one
+    * job fills the pin and the distributed plan reads it instead of
+    * re-running the input's plan; the pin is dropped on return (both
+    * paths materialize their result). */
+  private def gated[T](input: DataFrame, materialized: Boolean)(
+      onDriver: Array[InternalRow] => Option[T])(distributed: DataFrame => T): T = {
+    val in =
+      if (materialized || Dictionary.isLocal(input)) input
+      else graft.Pins.checkpointLazy(input)
+    try driverRows(in).flatMap(onDriver).getOrElse(distributed(in))
+    finally if (in ne input) graft.Pins.unpin(in)
+  }
 
   /** Driver union-find over collected (s, o) rows, union by min under
     * Spark's ordering of `dt`, so every root stays its component's
@@ -540,29 +669,63 @@ object GraphOps {
     out
   }
 
-  /** Minimum hop distance from a seed set, bounded at `rounds` hops —
-    * the DELTA-FRONTIER BFS: each round expands only the nodes first
-    * discovered in the previous round (one equi-join of the frontier
-    * against the pinned adjacency + one anti-join against the settled
-    * set), so total work is O(Σ|frontier_k| · d̄) — edges incident to
-    * settled nodes are never rescanned, unlike the min-aggregate
-    * relaxation (label-prop shape) which re-expands the whole reached
-    * set every round. Frontiers shrink to empty on exhausted components
-    * and the loop exits early (one bounded count per round).
+  /** Minimum hop distance from a seed set, bounded at `rounds` hops: a
+    * layered BFS in which each round expands only the nodes first
+    * discovered in the previous round, exiting early once a frontier is
+    * empty.
+    *
+    * The plan follows the measured input ([[gated]]): an adjacency of at
+    * most [[GraphDriverCap]] rows, with at most as many sources (a local
+    * sources frame costs no job), runs the layers on the driver.
+    * Otherwise it is the DELTA-FRONTIER BFS: one equi-join of the
+    * frontier against the pinned adjacency + one anti-join against the
+    * settled set per round, so total work is O(Σ|frontier_k| · d̄) —
+    * edges incident to settled nodes are never rescanned, unlike the
+    * min-aggregate relaxation (label-prop shape) which re-expands the
+    * whole reached set every round — with one bounded count per round.
     *
     * Output: (node, dist) for every node within `rounds` hops of any
     * seed; unreachable nodes are absent. Deterministic — BFS layers are
     * set-valued, no tie-breaking — so a SQL oracle replays it exactly.
+    * Reads the `s`, `o` columns and the first column of `sources`.
     */
   def bfsDistances(rankedAdj: DataFrame, sources: DataFrame,
                    rounds: Int): DataFrame = {
     require(rounds >= 0, "need rounds >= 0")
+    val src = sources.select(col(sources.columns.head).as("node"))
+    val spark = rankedAdj.sparkSession
+    gated(rankedAdj.select("s", "o"), graft.Pins.isMaterialized(rankedAdj)) { rows =>
+      val dt = src.schema.head.dataType
+      if (!sameNodeType(rankedAdj.schema, "s", "o", dt) || hasNull(rows, 0, 1)) None
+      else driverRows(src).filterNot(hasNull(_, 0)).map { seeds =>
+        val succ = successors(rows, dt)
+        val dist = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
+        seeds.foreach(r => dist(r.get(0, dt)) = 0L)
+        var frontier = dist.keys.toVector
+        var k = 1
+        while (k <= rounds && frontier.nonEmpty) {
+          val found = scala.collection.mutable.LinkedHashSet.empty[Any]
+          frontier.foreach(v => succ.get(v).foreach(_.foreach { e =>
+            val w = e.get(1, dt)
+            if (!dist.contains(w)) found += w
+          }))
+          found.foreach(dist(_) = k.toLong)
+          frontier = found.toVector
+          k += 1
+        }
+        DriverRows.frame(spark,
+          StructType(Seq(StructField("node", dt, nullable = false),
+            StructField("dist", LongType, nullable = false))),
+          dist.iterator.map { case (v, d) => InternalRow(v, d) }.toSeq)
+      }
+    }(bfsRounds(_, src, rounds))
+  }
+
+  /** [[bfsDistances]]' distributed rounds over an adjacency that is
+    * already materialized (or a projection of one). */
+  private def bfsRounds(adj: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
     val pins = new graft.Pins
-    val adj =
-      if (graft.Pins.isMaterialized(rankedAdj)) rankedAdj else pins.pin(rankedAdj)
-    var dist = pins.pin(
-      sources.select(col(sources.columns.head).as("node")).distinct()
-        .withColumn("dist", lit(0L)))
+    var dist = pins.pin(sources.distinct().withColumn("dist", lit(0L)))
     var frontier = dist.select(col("node"))
     var k = 1
     var exhausted = false
@@ -587,6 +750,32 @@ object GraphOps {
     pins.seal(dist)
   }
 
+  /** Do columns `a` and `b` of `schema` both hold `dt`? The driver
+    * paths read node values of one type; any other input takes the
+    * distributed plan, whose joins coerce. */
+  private def sameNodeType(schema: StructType, a: String, b: String,
+                           dt: DataType): Boolean =
+    schema(a).dataType == dt && schema(b).dataType == dt
+
+  /** `rk = 1` on a collected (s, o, rk, …) row with an integral rk. */
+  private def rkIsOne(r: InternalRow, rkT: DataType): Boolean =
+    !r.isNullAt(2) && r.get(2, rkT).asInstanceOf[Number].longValue == 1L
+
+  /** Does any row hold a null in one of `cols`? */
+  private def hasNull(rows: Array[InternalRow], cols: Int*): Boolean =
+    rows.exists(r => cols.exists(r.isNullAt))
+
+  /** Out-neighbors per node of collected (s, o, …) rows of node type
+    * `dt`, in row order. */
+  private def successors(rows: Array[InternalRow], dt: DataType)
+      : scala.collection.mutable.HashMap[Any, scala.collection.mutable.ArrayBuffer[InternalRow]] = {
+    val succ = scala.collection.mutable.HashMap
+      .empty[Any, scala.collection.mutable.ArrayBuffer[InternalRow]]
+    rows.foreach(r => succ.getOrElseUpdate(r.get(0, dt),
+      scala.collection.mutable.ArrayBuffer.empty[InternalRow]) += r)
+    succ
+  }
+
   /** Round count of the most recent [[shortestPaths]] call (relaxation
     * rounds actually executed) and whether its frontier DRAINED before
     * the `rounds` bound: an undrained frontier leaves OVERESTIMATED —
@@ -601,9 +790,9 @@ object GraphOps {
   /** Weighted single-source(-set) shortest paths — the weighted
     * sibling of [[bfsDistances]]: non-negative edge weights (ENFORCED
     * loudly — a negative weight breaks frontier relaxation silently),
-    * frontier relaxation (each round extends only the nodes whose
-    * distance just improved, so settled regions never re-join), exact
-    * on any DAG or graph once the frontier drains (Bellman-Ford
+    * synchronous frontier relaxation (each round extends only the nodes
+    * whose distance just improved, so settled regions never re-join),
+    * exact on any DAG or graph once the frontier drains (Bellman-Ford
     * convergence; rounds track the HOP COUNT of the weighted-shortest
     * paths, so bound `rounds` by the expected path depth like the BFS
     * contract). If the bound hits before the frontier drains, PRESENT
@@ -614,25 +803,76 @@ object GraphOps {
     * distance 0. Returns (node, dist: double) for every reached
     * node — the same deterministic set-valued shape as BFS, so a SQL
     * oracle replays it.
+    *
+    * The plan follows the measured input ([[gated]]): at most
+    * [[GraphDriverCap]] edges and as many sources run the same rounds
+    * on the driver (same overestimates, same telemetry); larger inputs
+    * run one join + aggregate per round over the pinned edges.
     */
   def shortestPaths(edges: DataFrame, sources: DataFrame,
                     rounds: Int): DataFrame = {
     require(rounds >= 0, "need rounds >= 0")
     val Seq(ca, cb, cw) = edges.columns.take(3).toSeq
-    val pins = new graft.Pins
-    val e = pins.pin(edges.select(col(ca).as("a"), col(cb).as("b"),
-      col(cw).cast("double").as("w")))
-    // one one-row aggregate job over the pinned edges: the
-    // non-negativity contract is load-bearing (frontier relaxation
-    // assumes settled regions never improve), so violate it loudly
-    val minW = e.agg(min(col("w"))).collect()(0)
-    require(minW.isNullAt(0) || minW.getDouble(0) >= 0.0,
+    val src = sources.select(col(sources.columns.head).as("node"))
+    val spark = edges.sparkSession
+    gated(edges.select(col(ca).as("a"), col(cb).as("b"), col(cw).cast("double").as("w")),
+        graft.Pins.isMaterialized(edges)) { rows =>
+      requireNonNegative(rows.iterator.filterNot(_.isNullAt(2)).map(_.getDouble(2))
+        .reduceOption((x, y) => if (dlt(y, x)) y else x))
+      val dt = src.schema.head.dataType
+      if (!sameNodeType(edges.schema, ca, cb, dt) || hasNull(rows, 0, 1, 2)) None
+      else driverRows(src).filterNot(hasNull(_, 0)).map { seeds =>
+        val succ = successors(rows, dt)
+        val dist = scala.collection.mutable.HashMap.empty[Any, Double]
+        seeds.foreach(r => dist(r.get(0, dt)) = 0.0)
+        var frontier = dist.toVector
+        var k = 1
+        var drained = false
+        while (k <= rounds && !drained) {
+          val cand = scala.collection.mutable.LinkedHashMap.empty[Any, Double]
+          frontier.foreach { case (v, dv) =>
+            succ.get(v).foreach(_.foreach { e =>
+              val (w, cd) = (e.get(1, dt), dv + e.getDouble(2))
+              if (cand.get(w).forall(dlt(cd, _))) cand(w) = cd
+            })
+          }
+          val improved = cand.filter { case (w, cd) => dist.get(w).forall(dlt(cd, _)) }
+          if (improved.isEmpty) drained = true
+          else { dist ++= improved; frontier = improved.toVector }
+          k += 1
+        }
+        lastShortestPathsRounds.set(k - 1L)
+        lastShortestPathsDrained.set(drained)
+        DriverRows.frame(spark,
+          StructType(Seq(StructField("node", dt, nullable = false),
+            StructField("dist", DoubleType, nullable = false))),
+          dist.iterator.map { case (v, d) => InternalRow(v, d) }.toSeq)
+      }
+    }(shortestPathRounds(_, src, rounds))
+  }
+
+  /** Spark's `<` on doubles: NaN above every number, -0.0 = 0.0. */
+  private def dlt(x: Double, y: Double): Boolean =
+    org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(x, y) < 0
+
+  /** [[shortestPaths]]' weight contract on the least weight (None: no
+    * non-null weight). */
+  private def requireNonNegative(minW: Option[Double]): Unit =
+    require(minW.forall(_ >= 0.0),
       "shortestPaths requires non-negative edge weights (found " +
-        (if (minW.isNullAt(0)) "null" else minW.getDouble(0).toString) +
-        ")")
-    var dist = pins.pin(
-      sources.select(col(sources.columns.head).as("node")).distinct()
-        .withColumn("dist", lit(0.0)))
+        minW.get.toString + ")")
+
+  /** [[shortestPaths]]' distributed rounds over (a, b, w: double) edges
+    * that are already materialized (or a projection of them). */
+  private def shortestPathRounds(e: DataFrame, sources: DataFrame,
+                                 rounds: Int): DataFrame = {
+    val pins = new graft.Pins
+    // one one-row aggregate job over the edges: the non-negativity
+    // contract is load-bearing (frontier relaxation assumes settled
+    // regions never improve), so violate it loudly
+    val minW = e.agg(min(col("w"))).collect()(0)
+    requireNonNegative(if (minW.isNullAt(0)) None else Some(minW.getDouble(0)))
+    var dist = pins.pin(sources.distinct().withColumn("dist", lit(0.0)))
     var frontier = dist
     var k = 1
     var drained = false
@@ -662,18 +902,12 @@ object GraphOps {
   }
 
   /** Round count of the most recent [[stronglyConnectedComponents]]
-    * call (total min-label propagation rounds across all peeling
-    * passes) — scale-evidence telemetry: rounds track SCC diameters
-    * plus min-anchored DAG layering, not row count. */
+    * call (total min-label propagation rounds across its distributed
+    * peeling passes; 0 when the whole input ran on the driver) —
+    * scale-evidence telemetry: rounds track SCC diameters plus
+    * min-anchored DAG layering, not row count. */
   private[graft] val lastSccRounds =
     new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** SCC passes over a remainder of at most this many edges and nodes
-    * run in the small-pass scope of [[stronglyConnectedComponents]]. */
-  private val SccSmallPassRows = 1L << 20
-
-  /** Shuffle width cap inside SCC's small-pass scope. */
-  private val SccSmallPassParts = 16
 
   /** Largest edge-relation size the most recent
     * [[stronglyConnectedComponents]] call worked with (input edges or
@@ -703,8 +937,14 @@ object GraphOps {
   /** Strongly connected components of a DIRECTED edge relation — the
     * directed sibling of [[connectedComponents]], completing the graph
     * family (PageRank, label propagation, walks, triangles, BFS, CC).
-    * Each vertex maps to its component's MINIMUM vertex id.
+    * Each vertex maps to its component's MINIMUM vertex id. Input: the
+    * first two columns cast to long; an edge with a null end is
+    * dropped, duplicates are ignored, and a self-loop (x, x) makes x a
+    * vertex (its own component unless a cycle joins it to others).
     *
+    * The plan follows the measured input ([[gated]]): at most
+    * [[GraphDriverCap]] edges are collected once and split by an
+    * iterative Tarjan on the driver. A larger input runs
     * DataFrame-native min-label forward/backward INTERSECTION PEELING
     * (the FW-BW family): per pass, every vertex propagates the minimum
     * label it can reach FORWARD and the minimum that reaches it
@@ -721,7 +961,10 @@ object GraphOps {
     * intra-class edges can be intra-SCC — a k-layer chain-of-SCCs
     * condensation splits into its k independent classes after ONE pass
     * and finishes on the next, instead of peeling k min-anchored
-    * layers. Deep propagation inside a pass adaptively DOUBLES the
+    * layers. Since peeling keeps every intra-SCC edge, the remainder's
+    * SCCs are the input's: once the remainder's edges and vertices both
+    * fit the cap, it is collected (one job) and Tarjan finishes it.
+    * Deep propagation inside a pass adaptively DOUBLES the
     * remainder's reach (every 8 rounds the edge set unions its own
     * composition — reachability, and therefore every label and SCC,
     * is unchanged while label travel distance doubles), so rounds
@@ -729,32 +972,42 @@ object GraphOps {
     * set can grow toward the remainder's transitive closure on dense
     * deep graphs, so every doubling is BUDGETED: the candidate is
     * counted and accepted only while it stays within
-    * [[SccEdgeBudgetFactor]] (8) times the input edge count — past that the pass degrades LOUDLY to plain
-    * rounds (stderr + [[lastSccEdgeBudgetTrips]], sizes in
-    * [[lastSccEdges]]), still exact and still bounded by `maxRounds`.
-    * Shuffle-shaped like [[connectedComponents]] (keyed equi-joins,
-    * nothing driver-side), so it scales with the edge relation up to
-    * the budget; `maxRounds` bounds the total loudly. A pass over a
-    * remainder of at most 2^20 edges and nodes runs in a clone of the
-    * session with AQE off and at most 16 shuffle partitions
-    * ([[ScopedConf]]); the caller's session settings are never
-    * written, and the returned frame is bound to the caller's session.
+    * [[SccEdgeBudgetFactor]] (8) times the input edge count — past
+    * that the pass degrades LOUDLY to plain rounds (stderr +
+    * [[lastSccEdgeBudgetTrips]], sizes in [[lastSccEdges]]), still
+    * exact and still bounded by `maxRounds`. The passes are
+    * shuffle-shaped (keyed equi-joins) under the caller's session
+    * settings, fwd and bwd on two driver threads.
     */
   def stronglyConnectedComponents(spark: org.apache.spark.sql.SparkSession,
                                   edges: DataFrame,
                                   maxRounds: Int = 256): DataFrame = {
     val Seq(ca, cb) = edges.columns.take(2).toSeq
+    lastSccEdgeBudgetTrips.set(0)
+    lastSccRounds.set(0)
+    // no distinct before the collect: it would add a shuffle (and its
+    // AQE jobs) ahead of the one job, and duplicates do not change
+    // Tarjan's components
+    gated(edges.select(col(ca).cast("long").as("a"), col(cb).cast("long").as("b"))
+        .where(col("a").isNotNull && col("b").isNotNull),
+        graft.Pins.isMaterialized(edges)) { rows =>
+      lastSccEdges.set(rows.length)
+      Some(tarjan(spark, Iterator.empty, rows.iterator.map(r => (r.getLong(0), r.getLong(1)))))
+    }(sccPeeling(spark, _, maxRounds))
+  }
+
+  /** [[stronglyConnectedComponents]]' distributed peeling over (a, b)
+    * long edges without nulls. */
+  private def sccPeeling(spark: SparkSession, base: DataFrame,
+                         maxRounds: Int): DataFrame = {
     val pins = new graft.Pins
-    var remE = pins.pin(edges
-      .select(col(ca).cast("long").as("a"), col(cb).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull).distinct())
+    var remE = pins.pin(base.distinct())
     var remN = pins.pin(remE.select(col("a").as("node"))
       .unionAll(remE.select(col("b").as("node"))).distinct())
     val e0 = remE.count()
     val budgetFactor = sccEdgeBudgetFactor.value
     val edgeBudget = math.max(e0, 1L) * math.max(budgetFactor, 1L)
     lastSccEdges.set(e0)
-    lastSccEdgeBudgetTrips.set(0)
     // total propagation rounds across all passes — atomic because the
     // fwd/bwd fixpoints of one pass run on parallel driver threads
     val rounds = new java.util.concurrent.atomic.AtomicLong(0)
@@ -771,8 +1024,7 @@ object GraphOps {
       val c = pins.track(graft.Pins.checkpointLazy(df))
       (c, labSum(c))
     }
-    def minReach(eIn: DataFrame, nodes: DataFrame,
-                 small: Boolean): DataFrame = {
+    def minReach(eIn: DataFrame, nodes: DataFrame): DataFrame = {
       var e = eIn
       var (lab, s) = pinSummed(
         nodes.select(col("node"), col("node").as("lab")))
@@ -813,13 +1065,8 @@ object GraphOps {
             lastSccEdges.updateAndGet(m => math.max(m, n2))
           }
         }
-        // in the small-pass scope AQE is off, so the runtime broadcast
-        // conversion it would apply to this ≤SccSmallPassRows-row label
-        // side must be explicit — without the hint the static planner
-        // sees an unsized LogicalRDD and falls back to sort-merge
-        val labJ = if (small) broadcast(lab) else lab
         val (next, s2) = pinSummed(
-          lab.unionAll(e.join(labJ, e("b") === labJ("node"))
+          lab.unionAll(e.join(lab, e("b") === lab("node"))
               .select(e("a").as("node"), col("lab")))
             .groupBy("node").agg(min(col("lab")).as("lab")))
         done = s2.compareTo(s) == 0
@@ -834,22 +1081,29 @@ object GraphOps {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     while (remaining > 0) {
-      // one peeling pass: advances remN/remaining (and remE/curE while
-      // vertices remain) and returns the vertices it determined
-      def pass(small: Boolean): DataFrame = {
-        // fwd and bwd are INDEPENDENT fixpoints over the same remainder
-        // (guide §2.6 overlap independent jobs): bwd runs on a second
-        // driver thread so each propagation round's scheduling floor is
-        // paid once per PAIR of rounds, and the tail tasks of one
-        // fixpoint back-fill cores the other leaves idle.
+      val cap = graphDriverCap.value
+      if (math.max(curE, remaining) <= cap) {
+        // hand-off: the remainder fits the gate, so one job brings its
+        // edges and vertices (b = null) to the driver's Tarjan
+        val rows = Dictionary.collectRows(remE.unionAll(
+            remN.select(col("node").as("a"), lit(null).cast("long").as("b"))),
+          (curE + remaining).toInt).get
+        parts += tarjan(spark,
+          rows.iterator.filter(_.isNullAt(1)).map(_.getLong(0)),
+          rows.iterator.filterNot(_.isNullAt(1)).map(r => (r.getLong(0), r.getLong(1))))
+        remaining = 0
+      } else {
+        // one peeling pass. fwd and bwd are INDEPENDENT fixpoints over
+        // the same remainder (guide §2.6 overlap independent jobs): bwd
+        // runs on a second driver thread so each propagation round's
+        // scheduling floor is paid once per PAIR of rounds, and the tail
+        // tasks of one fixpoint back-fill cores the other leaves idle.
         val bwdF = Future(minReach(
-          remE.select(col("b").as("a"), col("a").as("b")), remN, small))
-        val fwd = minReach(remE, remN, small)
+          remE.select(col("b").as("a"), col("a").as("b")), remN))
+        val fwd = minReach(remE, remN)
         val bwd = Await.result(bwdF, Duration.Inf)
-        val bwdJ = bwd.toDF("node", "lab2")
-        val both = pins.pin(
-          fwd.join(if (small) broadcast(bwdJ) else bwdJ, "node"))
-        val det = both.where(col("lab") === col("lab2"))
+        val both = pins.pin(fwd.join(bwd.toDF("node", "lab2"), "node"))
+        parts += both.where(col("lab") === col("lab2"))
           .select(col("node"), col("lab").as("scc"))
         // lazy pin + count = one job (the count materializes it)
         val (remN2, nRem) = pins.pinCounted(
@@ -860,51 +1114,80 @@ object GraphOps {
         // pairs at both ends, and determined classes are exactly those
         // with fwd == bwd — keeping unequal-pair-matched edges drops
         // both the determined classes' edges and every cross-class one
-        val pr = both.select(col("node"), col("lab").as("f"),
-          col("lab2").as("b2"))
         if (remaining > 0) {
-          val prA = pr.toDF("a", "fa", "ba")
-          val prB = pr.toDF("b", "fb", "bb")
+          val pr = both.select(col("node"), col("lab").as("f"),
+            col("lab2").as("b2"))
           val (remE2, nE2) = pins.pinCounted(remE
-            .join(if (small) broadcast(prA) else prA, "a")
-            .join(if (small) broadcast(prB) else prB, "b")
+            .join(pr.toDF("a", "fa", "ba"), "a")
+            .join(pr.toDF("b", "fb", "bb"), "b")
             .where(col("fa") === col("fb") && col("ba") === col("bb") &&
               col("fa") =!= col("ba"))
             .select("a", "b"))
           remE = remE2
           curE = nE2
         }
-        det
-      }
-      // SMALL-PASS scope, gated on the MEASURED remainder (never the
-      // input's, and the doubling budget keeps in-pass growth
-      // ≤ budgetFactor × SccSmallPassRows): the pass runs in a session
-      // clone with AQE off and the shuffle width capped. A fixpoint
-      // round is one action over a join+aggregate plan; with AQE on,
-      // every query stage of every round is submitted as its OWN job,
-      // so the ~1-job round becomes 3-4 jobs of pure scheduling floor —
-      // and the rounds are SEQUENTIAL, so the floor multiplies by the
-      // round count (measured on q_scc: the dominant cost at
-      // sf0.1·local[32]). AQE's value on these frames would be
-      // coalescing tiny shuffle partitions; the width cap does that
-      // directly. Large remainders keep AQE and full width. Everything
-      // the pass keeps is re-bound to the caller's session on the way
-      // out, so the final seal plans under the caller's settings.
-      if (math.max(curE, remaining) > SccSmallPassRows)
-        parts += pass(small = false)
-      else ScopedConf.withConf(spark,
-          "spark.sql.adaptive.enabled" -> "false",
-          "spark.sql.shuffle.partitions" -> math.min(SccSmallPassParts,
-            spark.conf.get("spark.sql.shuffle.partitions").toInt).toString) {
-        s =>
-          remE = s.in(remE); remN = s.in(remN)
-          val det = pass(small = true)
-          parts += s.out(det); remN = s.out(remN); remE = s.out(remE)
       }
     }
     lastSccRounds.set(rounds.get())
     if (parts.isEmpty)
       pins.seal(remN.select(col("node"), col("node").as("scc")))
     else pins.seal(parts.reduce(_.unionAll(_)))
+  }
+
+  /** Tarjan's strongly connected components on the driver, iterative
+    * (no recursion depth limit): every vertex of `nodes` or `edges`
+    * maps to the minimum id of its component. A local (node, scc)
+    * relation. */
+  private def tarjan(spark: SparkSession, nodes: Iterator[Long],
+                     edges: Iterator[(Long, Long)]): DataFrame = {
+    val id = scala.collection.mutable.LongMap.empty[Int]
+    val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def idOf(v: Long): Int = id.getOrElseUpdate(v, { ids += v; ids.length - 1 })
+    nodes.foreach(idOf)
+    val src = scala.collection.mutable.ArrayBuilder.make[Int]
+    val dst = scala.collection.mutable.ArrayBuilder.make[Int]
+    edges.foreach { case (a, b) => src += idOf(a); dst += idOf(b) }
+    val (from, to, n) = (src.result(), dst.result(), ids.length)
+    // successors in CSR form
+    val start = new Array[Int](n + 1)
+    from.foreach(v => start(v + 1) += 1)
+    for (v <- 0 until n) start(v + 1) += start(v)
+    val succ = new Array[Int](from.length)
+    val fill = start.clone()
+    from.indices.foreach { i => succ(fill(from(i))) = to(i); fill(from(i)) += 1 }
+    val index = Array.fill(n)(-1)
+    val low = new Array[Int](n)
+    val onStack = new Array[Boolean](n)
+    val stack = new Array[Int](n); var sp = 0
+    val call = new Array[Int](n); val next = new Array[Int](n); var cp = 0
+    val comp = new Array[Long](n)
+    var counter = 0
+    def visit(v: Int): Unit = {
+      index(v) = counter; low(v) = counter; counter += 1
+      stack(sp) = v; sp += 1; onStack(v) = true
+      call(cp) = v; next(cp) = start(v); cp += 1
+    }
+    for (root <- 0 until n if index(root) < 0) {
+      visit(root)
+      while (cp > 0) {
+        val v = call(cp - 1)
+        if (next(cp - 1) < start(v + 1)) {
+          val w = succ(next(cp - 1)); next(cp - 1) += 1
+          if (index(w) < 0) visit(w)
+          else if (onStack(w)) low(v) = math.min(low(v), index(w))
+        } else {
+          cp -= 1
+          if (cp > 0) low(call(cp - 1)) = math.min(low(call(cp - 1)), low(v))
+          if (low(v) == index(v)) {
+            var m = Long.MaxValue; var i = sp
+            do { i -= 1; m = math.min(m, ids(stack(i))) } while (stack(i) != v)
+            while (sp > i) { sp -= 1; onStack(stack(sp)) = false; comp(stack(sp)) = m }
+          }
+        }
+      }
+    }
+    DriverRows.frame(spark,
+      StructType(Seq("node", "scc").map(StructField(_, LongType, nullable = false))),
+      (0 until n).map(v => InternalRow(ids(v), comp(v))))
   }
 }

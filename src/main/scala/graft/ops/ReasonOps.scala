@@ -4529,8 +4529,9 @@ object ReasonOps {
     * (canonical = each connected component's minimum member; one row
     * per identity-graph node, roots included; a term whose only pair is
     * (x, x) maps to itself): [[GraphOps.connectedComponents]] under the
-    * member/canon names. Small (Δ-sized) pair sets take its driver
-    * union-find, identity graphs of corpus-scale entity resolution its
+    * member/canon names. Small (Δ-sized) pair sets, up to
+    * [[GraphOps.GraphDriverCap]] edges, take its driver union-find,
+    * identity graphs of corpus-scale entity resolution its
     * distributed fixpoint; both pick the minimum in Spark's ordering of
     * the term type (UTF-8 bytes for strings).
     */

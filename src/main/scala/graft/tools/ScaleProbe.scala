@@ -105,9 +105,9 @@ object ScaleProbe {
           graft.ops.ReasonOps.lastFunctionalRounds.set(0)
           jobCounter.set(0)
           val t0 = System.nanoTime()
-          // CC takes its distributed fixpoint (not the driver
-          // union-find), so ccRounds counts fixpoint rounds
-          graft.ops.GraphOps.identityDriverCap.withValue(-1)(
+          // the graph ops take their distributed plans (not the driver
+          // algorithms), so ccRounds and sccRounds count fixpoint rounds
+          graft.ops.GraphOps.graphDriverCap.withValue(-1)(
             fn(spark, dir).collect())
           val sec = (System.nanoTime() - t0) / 1e9
           if (sec < best) best = sec

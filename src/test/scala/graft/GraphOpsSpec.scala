@@ -65,14 +65,30 @@ class GraphOpsSpec extends SparkSpec {
     // two components: {a,b,c} path and {x,y} pair (undirected edges)
     val g = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"),
       ("x", "y"), ("y", "x")).toDF("s", "o")
-    val labs = GraphOps.minLabelPropagation(GraphOps.rankedAdjacency(g), 3)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val labs = bothPaths(GraphOps.minLabelPropagation(GraphOps.rankedAdjacency(g), 3)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
     labs shouldBe Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x")
     // with ONE round, c only sees b's initial label
-    val one = GraphOps.minLabelPropagation(GraphOps.rankedAdjacency(g), 1)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val one = bothPaths(GraphOps.minLabelPropagation(GraphOps.rankedAdjacency(g), 1)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
     one("c") shouldBe "b"
   }
+
+  /** `run` at the default cap (the driver algorithms at these sizes)
+    * and under `graphDriverCap.withValue(-1)` (the distributed plans):
+    * both must give the same result, which is returned. */
+  private def bothPaths[T](run: => T): T = {
+    val onDriver = run
+    GraphOps.graphDriverCap.withValue(-1)(run) shouldBe onDriver
+    onDriver
+  }
+
+  /** PageRank's (node → rank) on both paths, bit for bit. */
+  private def pageRankBothPaths(adj: org.apache.spark.sql.DataFrame,
+                                iterations: Int): Map[String, Double] =
+    bothPaths(GraphOps.pageRank(adj, iterations).collect()
+      .map(r => r.getString(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap)
+      .map { case (k, v) => k -> java.lang.Double.longBitsToDouble(v) }
 
   /** Node → minimum member of its component, by a plain union-find. */
   private def bruteComponents[A](pairs: Seq[(A, A)])(implicit ord: Ordering[A]): Map[A, A] = {
@@ -92,11 +108,8 @@ class GraphOpsSpec extends SparkSpec {
     * through the cap seam, on the rank-encoded distributed fixpoint —
     * both must give the same map, which is returned. */
   private def stringComponentsBothPaths(edges: org.apache.spark.sql.DataFrame): Map[String, String] = {
-    def run() = GraphOps.connectedComponents(edges)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val onDriver = run()
-    GraphOps.identityDriverCap.withValue(-1)(run()) shouldBe onDriver
-    onDriver
+    bothPaths(GraphOps.connectedComponents(edges)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
   }
 
   "connectedComponents" should "converge past any fixed round bound on a long chain" in {
@@ -135,7 +148,7 @@ class GraphOpsSpec extends SparkSpec {
     val pairs = raw.toDF("doc_a", "doc_b")
     val viaClusters = graft.ops.DedupOps.clusters(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaCc = GraphOps.identityDriverCap.withValue(-1)(
+    val viaCc = GraphOps.graphDriverCap.withValue(-1)(
       GraphOps.connectedComponents(pairs))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     viaClusters shouldBe viaGraphx
@@ -166,7 +179,7 @@ class GraphOpsSpec extends SparkSpec {
         GraphOps.lastCcRounds.get() should (be >= 1L and be <= 16L)
         cc
       }
-      val (viaBroadcast, viaShuffle) = GraphOps.identityDriverCap.withValue(-1)(
+      val (viaBroadcast, viaShuffle) = GraphOps.graphDriverCap.withValue(-1)(
         (comps(), GraphOps.ccBroadcastDelta.withValue(-1L)(comps())))
       val expected = bruteComponents(pairs)
       viaBroadcast shouldBe expected
@@ -226,15 +239,13 @@ class GraphOpsSpec extends SparkSpec {
   "pageRank" should "be stationary on a symmetric pair and rank hubs above leaves" in {
     // undirected pair: uniform 1/2 is the fixpoint at any damping
     val pair = Seq(("a", "b"), ("b", "a")).toDF("s", "o")
-    val pr = GraphOps.pageRank(GraphOps.rankedAdjacency(pair), iterations = 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val pr = pageRankBothPaths(GraphOps.rankedAdjacency(pair), iterations = 3)
     pr("a") shouldBe 0.5 +- 1e-9
     pr("b") shouldBe 0.5 +- 1e-9
     // undirected star: the center out-ranks the leaves, mass sums to ~1
     val star = Seq(("c", "x"), ("c", "y"), ("x", "c"), ("y", "c"))
       .toDF("s", "o")
-    val ps = GraphOps.pageRank(GraphOps.rankedAdjacency(star), iterations = 3)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val ps = pageRankBothPaths(GraphOps.rankedAdjacency(star), iterations = 3)
     ps("c") should be > ps("x")
     ps("x") shouldBe ps("y")
     (ps("c") + ps("x") + ps("y")) shouldBe 1.0 +- 1e-6
@@ -243,16 +254,20 @@ class GraphOpsSpec extends SparkSpec {
   it should "run identically under the RELIABLE checkpoint strategy" in {
     // the cluster-durability path: loop intermediates become reliable
     // checkpoints (files under the checkpoint dir that survive executor
-    // loss), forced on here since local masters auto-select local ones
+    // loss), forced on here since local masters auto-select local ones.
+    // The distributed plan (the cap seam at -1) is the one that pins;
+    // the driver path at the default cap must give the same bits
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     spark.conf.set("spark.graft.pins.reliable", "true")
     try {
       val pair = Seq(("a", "b"), ("b", "a")).toDF("s", "o")
-      val pr = GraphOps.pageRank(GraphOps.rankedAdjacency(pair), iterations = 3)
+      val pr = GraphOps.graphDriverCap.withValue(-1)(
+        GraphOps.pageRank(GraphOps.rankedAdjacency(pair), iterations = 3))
       val got = pr.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       got("a") shouldBe 0.5 +- 1e-9
       got("b") shouldBe 0.5 +- 1e-9
+      pageRankBothPaths(GraphOps.rankedAdjacency(pair), iterations = 3) shouldBe got
       // the sealed result really is a reliable checkpoint, not a local one
       Pins.isPinned(pr) shouldBe true
       import org.apache.spark.sql.execution.LogicalRDD
@@ -309,12 +324,12 @@ class GraphOpsSpec extends SparkSpec {
     val chain = Seq(("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("a", "d"))
     val und = chain ++ chain.map(_.swap)
     val adj = GraphOps.rankedAdjacency(und.toDF("s", "o"))
-    val d2 = GraphOps.bfsDistances(adj, Seq("a").toDF("n"), rounds = 2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val d2 = bothPaths(GraphOps.bfsDistances(adj, Seq("a").toDF("n"), rounds = 2)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     d2 shouldBe Map("a" -> 0L, "b" -> 1L, "d" -> 1L, "c" -> 2L, "e" -> 2L)
     // bound 1: only the immediate neighborhood
-    val d1 = GraphOps.bfsDistances(adj, Seq("a").toDF("n"), rounds = 1)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val d1 = bothPaths(GraphOps.bfsDistances(adj, Seq("a").toDF("n"), rounds = 1)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     d1 shouldBe Map("a" -> 0L, "b" -> 1L, "d" -> 1L)
   }
 
@@ -323,8 +338,8 @@ class GraphOpsSpec extends SparkSpec {
     // early on the empty frontier instead of running all 10
     val comp = Seq(("a", "b"), ("b", "a"), ("x", "y"), ("y", "x"))
     val adj = GraphOps.rankedAdjacency(comp.toDF("s", "o"))
-    val d = GraphOps.bfsDistances(adj, Seq("a", "y").toDF("n"), rounds = 10)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val d = bothPaths(GraphOps.bfsDistances(adj, Seq("a", "y").toDF("n"), rounds = 10)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     d shouldBe Map("a" -> 0L, "b" -> 1L, "y" -> 0L, "x" -> 1L)
   }
 
@@ -332,25 +347,25 @@ class GraphOpsSpec extends SparkSpec {
     // the 2-hop route 1->3->2 (1+2=3) beats the direct edge (10); a
     // frontier that settles node 2 on first touch returns 10
     val e = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 2L, 2L))
-    val got = GraphOps.shortestPaths(e.toDF("a", "b", "w"),
+    val got = bothPaths(GraphOps.shortestPaths(e.toDF("a", "b", "w"),
         Seq(1L).toDF("n"), rounds = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     got shouldBe Map(1L -> 0.0, 3L -> 1.0, 2L -> 3.0)
     GraphOps.lastShortestPathsDrained.get() shouldBe true
     // rounds bound caps hop depth (not weight): 1 round misses the
     // improvement through 3 — present rows are OVERESTIMATES and the
     // drained telemetry says so
-    val g1 = GraphOps.shortestPaths(e.toDF("a", "b", "w"),
+    val g1 = bothPaths(GraphOps.shortestPaths(e.toDF("a", "b", "w"),
         Seq(1L).toDF("n"), rounds = 1)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     g1 shouldBe Map(1L -> 0.0, 2L -> 10.0, 3L -> 1.0)
     GraphOps.lastShortestPathsDrained.get() shouldBe false
     GraphOps.lastShortestPathsRounds.get() shouldBe 1L
     // multi-source takes the minimum; unreachable nodes stay absent
     val e2 = Seq((1L, 2L, 5L), (9L, 2L, 1L), (7L, 8L, 1L))
-    val ms = GraphOps.shortestPaths(e2.toDF("a", "b", "w"),
+    val ms = bothPaths(GraphOps.shortestPaths(e2.toDF("a", "b", "w"),
         Seq(1L, 9L).toDF("n"), rounds = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     ms shouldBe Map(1L -> 0.0, 9L -> 0.0, 2L -> 1.0)
   }
 
@@ -358,17 +373,36 @@ class GraphOpsSpec extends SparkSpec {
     // fractional weights must not truncate: 0.5 + 0.25 = 0.75 beats
     // the direct 1.0 edge (a long cast would read both as 0 resp. 1)
     val e = Seq((1L, 2L, 1.0), (1L, 3L, 0.5), (3L, 2L, 0.25))
-    val got = GraphOps.shortestPaths(e.toDF("a", "b", "w"),
+    val got = bothPaths(GraphOps.shortestPaths(e.toDF("a", "b", "w"),
         Seq(1L).toDF("n"), rounds = 5)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     got shouldBe Map(1L -> 0.0, 3L -> 0.5, 2L -> 0.75)
     // negative weights break frontier relaxation — loud, not silent
     val neg = Seq((1L, 2L, 1.0), (2L, 3L, -0.5))
-    val ex = intercept[IllegalArgumentException] {
+    val msg = bothPaths(intercept[IllegalArgumentException] {
       GraphOps.shortestPaths(neg.toDF("a", "b", "w"),
         Seq(1L).toDF("n"), rounds = 5)
+    }.getMessage)
+    msg should include("non-negative")
+    msg should include("-0.5")
+  }
+
+  it should "report the same undrained telemetry on both paths at rounds = 1" in {
+    // 1 -> 3 -> 2 beats 1 -> 2 only after two hops: one round leaves an
+    // overestimate for 2 and a frontier that has not drained
+    val e = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 2L, 2L)).toDF("a", "b", "w")
+    def run() = {
+      val rows = GraphOps.shortestPaths(e, Seq(1L).toDF("n"), rounds = 1)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      (rows, GraphOps.lastShortestPathsRounds.get(),
+        GraphOps.lastShortestPathsDrained.get())
     }
-    ex.getMessage should include("non-negative")
+    bothPaths(run()) shouldBe ((Map(1L -> 0.0, 2L -> 10.0, 3L -> 1.0), 1L, false))
+    // rounds = 0 runs no round and never drains
+    bothPaths {
+      GraphOps.shortestPaths(e, Seq(1L).toDF("n"), rounds = 0).collect().length
+      (GraphOps.lastShortestPathsRounds.get(), GraphOps.lastShortestPathsDrained.get())
+    } shouldBe ((0L, false))
   }
 
   "GraphOps.stronglyConnectedComponents" should "peel a deep chain-of-cycles condensation" in {
@@ -381,9 +415,9 @@ class GraphOpsSpec extends SparkSpec {
       (0 until 4).map(i =>
         (base + i, if (i == 3) base else base + i + 1))
     } ++ (0 until 9).map(g => (g * 4 + 1L, g * 4 + 5L))
-    val got = GraphOps.stronglyConnectedComponents(spark,
+    val got = bothPaths(GraphOps.stronglyConnectedComponents(spark,
       edges.toDF("a", "b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     got.filter(_._1 <= 4L) shouldBe
       Set((1L, 1L), (2L, 1L), (3L, 1L), (4L, 1L))
     got.groupBy(_._2).keySet shouldBe
@@ -395,22 +429,28 @@ class GraphOpsSpec extends SparkSpec {
     // per layer with diameter-long propagation (O(layers²) rounds);
     // the pair partition must split every ring into its own class
     // after pass one, and the adaptive reach-doubling must keep the
-    // first pass's propagation logarithmic in the 200-hop depth
+    // first pass's propagation logarithmic in the 200-hop depth. The
+    // peeling is the distributed plan (the cap seam at -1); the driver's
+    // Tarjan at the default cap must agree
     val edges = (0 until 50).flatMap { g =>
       val base = g * 4 + 1L
       (0 until 4).map(i =>
         (base + i, if (i == 3) base else base + i + 1))
     } ++ (0 until 49).map(g => (g * 4 + 1L, g * 4 + 5L))
-    val got = GraphOps.stronglyConnectedComponents(spark,
+    def run() = GraphOps.stronglyConnectedComponents(spark,
       edges.toDF("a", "b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = GraphOps.graphDriverCap.withValue(-1)(run())
+    val rounds = GraphOps.lastSccRounds.get()
+    run() shouldBe got
+    GraphOps.lastSccRounds.get() shouldBe 0L
     got.groupBy(_._2).keySet shouldBe
       (0 until 50).map(g => g * 4 + 1L).toSet
     got.filter(_._2 == 197L) shouldBe
       Set((197L, 197L), (198L, 197L), (199L, 197L), (200L, 197L))
     // log-bounded, not layer-bounded: far under the default maxRounds
     // a 50-pass peel would blow through
-    GraphOps.lastSccRounds.get() should be < 80L
+    rounds should be < 80L
   }
 
   it should "budget reach doubling and degrade loudly to plain rounds" in {
@@ -418,8 +458,9 @@ class GraphOpsSpec extends SparkSpec {
     // round per hop, so the round-8 reach-doubling fires — with the
     // budget factor pinned to 1 every composed candidate exceeds the
     // budget, the pass degrades to plain rounds (telemetered), and the
-    // result stays exact (a path is all singleton SCCs)
-    GraphOps.sccEdgeBudgetFactor.withValue(1) {
+    // result stays exact (a path is all singleton SCCs); the peeling is
+    // the distributed plan (the cap seam at -1)
+    GraphOps.sccEdgeBudgetFactor.withValue(1)(GraphOps.graphDriverCap.withValue(-1) {
       val edges = (1 until 24).map(i => (i.toLong + 1, i.toLong))
       val got = GraphOps.stronglyConnectedComponents(spark,
         edges.toDF("a", "b"))
@@ -431,26 +472,69 @@ class GraphOpsSpec extends SparkSpec {
       // the rejected composition was counted and recorded, and it never
       // replaced the working edge set (which stayed at the input size)
       GraphOps.lastSccEdges.get() should be > 23L
-    }
+    })
     // under the default factor a shallow graph never trips the budget
     val dag = Seq((1L, 2L), (2L, 3L), (1L, 3L))
-    GraphOps.stronglyConnectedComponents(spark, dag.toDF("a", "b"))
-      .collect()
+    GraphOps.graphDriverCap.withValue(-1)(
+      GraphOps.stronglyConnectedComponents(spark, dag.toDF("a", "b")).collect())
     GraphOps.lastSccEdgeBudgetTrips.get() shouldBe 0L
   }
 
   it should "keep directed semantics: a DAG is all singletons" in {
     val dag = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 3L))
-    val got = GraphOps.stronglyConnectedComponents(spark,
+    val got = bothPaths(GraphOps.stronglyConnectedComponents(spark,
       dag.toDF("a", "b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     got shouldBe Set((1L, 1L), (2L, 2L), (3L, 3L), (4L, 4L))
     // and a 2-cycle hanging off the DAG merges exactly itself
     val mixed = dag ++ Seq((3L, 5L), (5L, 6L), (6L, 5L))
-    val got2 = GraphOps.stronglyConnectedComponents(spark,
+    val got2 = bothPaths(GraphOps.stronglyConnectedComponents(spark,
       mixed.toDF("a", "b"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     got2 should contain allOf ((5L, 5L), (6L, 5L))
     got2.filter(t => t._1 <= 4L).map(_._2) shouldBe Set(1L, 2L, 3L, 4L)
+  }
+
+  /** Vertex → minimum vertex of its SCC, by brute force: u and v share
+    * a component iff each reaches the other. */
+  private def bruteScc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val succ = edges.groupBy(_._1).map { case (a, es) => a -> es.map(_._2) }
+    def reach(v: Long): Set[Long] = {
+      val seen = scala.collection.mutable.Set(v)
+      var frontier = List(v)
+      while (frontier.nonEmpty) {
+        frontier = frontier.flatMap(succ.getOrElse(_, Nil)).filter(seen.add)
+      }
+      seen.toSet
+    }
+    val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val r = verts.map(v => v -> reach(v)).toMap
+    verts.map(v => v -> verts.filter(u => r(v)(u) && r(u)(v)).min).toMap
+  }
+
+  it should "hand a remainder within the cap to the driver after a distributed pass" in {
+    // 10 chained 4-rings plus a seeded sprinkle of extra edges, with
+    // duplicates and a self-loop: 49 + 12 + 3 input rows, over a cap of
+    // 50, so pass 1 peels on the cluster; its remainder (every ring but
+    // the first, with only intra-ring edges left) fits the cap, and
+    // Tarjan on the driver finishes it
+    val rings = (0 until 10).flatMap { g =>
+      val base = g * 4 + 1L
+      (0 until 4).map(i => (base + i, if (i == 3) base else base + i + 1))
+    } ++ (0 until 9).map(g => (g * 4 + 1L, g * 4 + 5L))
+    val rnd = new scala.util.Random(20261019L)
+    val extra = Seq.fill(12) {
+      val a = 1L + rnd.nextInt(40); (a, math.min(40L, a + 1 + rnd.nextInt(6)))
+    }
+    val edges = rings ++ extra ++ rings.take(2) :+ ((7L, 7L))
+    def run() = GraphOps.stronglyConnectedComponents(spark, edges.toDF("a", "b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val handedOff = GraphOps.graphDriverCap.withValue(50)(run())
+    GraphOps.lastSccRounds.get() should be > 0L
+    val expected = bruteScc(edges)
+    expected.values.toSet.size should be > 1
+    handedOff shouldBe expected
+    GraphOps.graphDriverCap.withValue(-1)(run()) shouldBe expected
+    run() shouldBe expected
   }
 }

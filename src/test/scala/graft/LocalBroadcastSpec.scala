@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ScopedConf
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** A broadcast of rows the driver already holds (a `createDataFrame`
   * relation) starts no Spark job, with AQE on, with AQE off, and in a
-  * `ScopedConf` clone; a broadcast of distributed rows keeps its job.
+  * `ScopedConf` clone; a broadcast of distributed rows keeps its job. A
+  * global sort of such rows starts no job either and gives the
+  * distributed sort's sequence.
   */
 class LocalBroadcastSpec extends SparkSpec {
   import spark.implicits._
@@ -52,5 +54,30 @@ class LocalBroadcastSpec extends SparkSpec {
     def build = spark.range(0, 12, 4).toDF("k").select($"k", $"k".cast("string").as("v"))
     run(join(spark, build)) shouldBe
       (Set(Seq(0L, "0"), Seq(4L, "4"), Seq(8L, "8")) -> 2)
+  }
+
+  "A global sort of a local relation" should
+      "start no job and give the distributed sort's sequence" in {
+    // string keys whose UTF-8 and UTF-16 orders disagree (U+FFFD vs
+    // U+1F600), nulls in both key columns, and a unique id last so every
+    // order is total
+    val rows = Seq[(String, java.lang.Long, Long)](
+      ("b", 3L, 1), (null, 2L, 2), ("\uFFFD", null, 3), ("a", 3L, 4),
+      ("\uD83D\uDE00", -1L, 5), ("a", null, 6), (null, 7L, 7), ("", 0L, 8))
+    val local = rows.toDF("s", "n", "id")
+    val spread = spark.createDataFrame(local.rdd.repartition(3), local.schema)
+    Seq(
+      Seq(col("s").asc, col("id")), Seq(col("s").desc, col("id")),
+      Seq(col("s").asc_nulls_last, col("id")), Seq(col("s").desc_nulls_first, col("id")),
+      Seq(col("n").asc, col("id").desc), Seq(col("n").desc_nulls_last, col("s"), col("id")),
+      Seq(col("n").asc_nulls_last, col("s").desc_nulls_first, col("id"))
+    ).foreach { order =>
+      val sorted = local.orderBy(order: _*)
+      sorted.collect() // warm codegen
+      val (got, jobs) = jobsDuring(sorted.collect())
+      jobs shouldBe 0
+      sorted.queryExecution.optimizedPlan.getClass.getSimpleName shouldBe "LocalRelation"
+      got.toSeq shouldBe spread.orderBy(order: _*).collect().toSeq
+    }
   }
 }

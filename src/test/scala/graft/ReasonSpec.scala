@@ -3703,7 +3703,7 @@ class ReasonSpec extends SparkSpec {
       (rw.collect().map(_.toSeq).toSet, mp.collect().map(_.toSeq).toSet)
     }
     val (rwDriver, mpDriver) = run()
-    val (rwDist, mpDist) = graft.ops.GraphOps.identityDriverCap.withValue(-1)(run())
+    val (rwDist, mpDist) = graft.ops.GraphOps.graphDriverCap.withValue(-1)(run())
     mpDist shouldBe mpDriver
     rwDist shouldBe rwDriver
     mpDriver shouldBe Set(Seq(emoji, repl), Seq(repl, repl), Seq("b", repl),

@@ -5,13 +5,15 @@ import graft.sparql.Sparql
 import graft.store.GraftStore
 import org.apache.spark.sql.DataFrame
 
-/** Ops that need their own SQL settings — the maintenance pins
-  * (AQE off for the materializing count) and SCC's small passes (AQE
-  * off, capped shuffle width) — run them in a clone of the caller's
-  * session. Two properties follow: concurrent work on the caller's
-  * session never sees those settings, and the scoped work still sees
-  * every runtime conf the caller set. Job properties carry the SQL
-  * confs an execution was planned under, so both are asserted per job.
+/** Ops that need their own SQL settings — the maintenance pins (AQE
+  * off for the materializing count) — run them in a clone of the
+  * caller's session. Two properties follow: concurrent work on the
+  * caller's session never sees those settings, and the scoped work
+  * still sees every runtime conf the caller set. Job properties carry
+  * the SQL confs an execution was planned under, so both are asserted
+  * per job. SCC rides along as a concurrent writer on its distributed
+  * plan (the graph cap seam at -1), whose backward fixpoint runs on a
+  * second driver thread.
   */
 class SessionScopeSpec extends SparkSpec {
   import spark.implicits._
@@ -37,7 +39,7 @@ class SessionScopeSpec extends SparkSpec {
     Seq(("eve", "teaches", "c2"), ("fay", "advises", "gus")).toDF("s", "p", "o")
   private lazy val deletes = Seq(("bob", "a", "Student")).toDF("s", "p", "o")
 
-  // 3 directed 4-rings bridged one-way: a small remainder on every pass
+  // 3 directed 4-rings bridged one-way: two peeling passes
   private lazy val edges = ((0 until 3).flatMap { g =>
     val b = g * 4 + 1L
     (0 until 4).map(i => (b + i, if (i == 3) b else b + i + 1))
@@ -61,8 +63,10 @@ class SessionScopeSpec extends SparkSpec {
       ReasonOps.rdfsDelta(base, inserts))
     digest(novel) ++ digest(ReasonOps.rdfsRetract(closure, base, deletes))
   }
-  private def scc(): Seq[String] =
-    digest(GraphOps.stronglyConnectedComponents(spark, edges))
+  private def sccDistributed(): DataFrame =
+    GraphOps.graphDriverCap.withValue(-1)(
+      GraphOps.stronglyConnectedComponents(spark, edges))
+  private def scc(): Seq[String] = digest(sccDistributed())
   private def update(): Seq[String] =
     digest(Sparql.updateQuads(spark, quads, script))
   private def read(): Seq[String] = digest(Sparql.execute(spark,
@@ -130,7 +134,7 @@ class SessionScopeSpec extends SparkSpec {
     spark.conf.set(Reliable, "false")
     val (frames, props) =
       try jobProps {
-        val sccOut = GraphOps.stronglyConnectedComponents(spark, edges)
+        val sccOut = sccDistributed()
         val inc = ReasonOps.rdfsDelta(base, inserts)
         val novel = ReasonOps.incrementNovel(closure, inc)
         val kept = ReasonOps.rdfsRetract(closure, base, deletes)
