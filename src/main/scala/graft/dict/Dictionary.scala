@@ -326,6 +326,31 @@ object Dictionary {
     }
   }
 
+  /** `df`'s rows when it holds at most `cap` of them ([[collectRows]]:
+    * one bounded job, none for a local relation), else None; a negative
+    * `cap` (a spec's or probe's forced distributed path) returns None
+    * without a job. */
+  private[graft] def rowsWithin(df: DataFrame, cap: Int): Option[Array[InternalRow]] =
+    if (cap < 0) None else collectRows(df, cap)
+
+  /** The size gate of the driver paths: `onDriver` over the rows of
+    * `input` when [[rowsWithin]] `cap` returns them and `onDriver` takes
+    * them (None: rows its driver algorithm does not read, e.g. null
+    * terms), else `distributed` over `input`. An input that is neither
+    * local nor `materialized` (a checkpoint or cached frame) is pinned
+    * lazily first, so the collect's one job fills the pin and the
+    * distributed plan reads it instead of re-running the input's plan;
+    * the pin is dropped on return (both paths materialize or pin what
+    * they keep). */
+  private[graft] def gated[T](input: DataFrame, materialized: Boolean, cap: Int)(
+      onDriver: Array[InternalRow] => Option[T])(distributed: DataFrame => T): T = {
+    val in =
+      if (materialized || isLocal(input)) input
+      else graft.Pins.checkpointLazy(input)
+    try rowsWithin(in, cap).flatMap(onDriver).getOrElse(distributed(in))
+    finally if (in ne input) graft.Pins.unpin(in)
+  }
+
   /** Driver-side point lookup (D2): ids for a small set of query constants.
     * Returns only the terms present; a missing term means the query can be
     * failed fast (reference: `GraphulaStageGenerator.scala:107-110`).

@@ -443,28 +443,15 @@ object GraphOps {
 
   /** The rows of `df` when it holds at most [[graphDriverCap]] of them
     * (one bounded-collect job, none for a local relation), else None. */
-  private def driverRows(df: DataFrame): Option[Array[InternalRow]] = {
-    val cap = graphDriverCap.value
-    if (cap < 0) None else Dictionary.collectRows(df, cap)
-  }
+  private def driverRows(df: DataFrame): Option[Array[InternalRow]] =
+    Dictionary.rowsWithin(df, graphDriverCap.value)
 
-  /** The size gate of every graph fixpoint: `onDriver` over the rows of
-    * `input` when [[driverRows]] returns them and `onDriver` takes them
-    * (None: an input its driver algorithm does not read, e.g. null
-    * ends), else `distributed` over `input`. An input that is neither
-    * local nor materialized (`materialized`: the caller's frame is a
-    * checkpoint or cached) is pinned lazily first, so the collect's one
-    * job fills the pin and the distributed plan reads it instead of
-    * re-running the input's plan; the pin is dropped on return (both
-    * paths materialize their result). */
+  /** The size gate of every graph fixpoint ([[Dictionary.gated]] under
+    * [[graphDriverCap]]): `onDriver` over the collected rows, else
+    * `distributed` over the (lazily pinned) input. */
   private def gated[T](input: DataFrame, materialized: Boolean)(
-      onDriver: Array[InternalRow] => Option[T])(distributed: DataFrame => T): T = {
-    val in =
-      if (materialized || Dictionary.isLocal(input)) input
-      else graft.Pins.checkpointLazy(input)
-    try driverRows(in).flatMap(onDriver).getOrElse(distributed(in))
-    finally if (in ne input) graft.Pins.unpin(in)
-  }
+      onDriver: Array[InternalRow] => Option[T])(distributed: DataFrame => T): T =
+    Dictionary.gated(input, materialized, graphDriverCap.value)(onDriver)(distributed)
 
   /** Driver union-find over collected (s, o) rows, union by min under
     * Spark's ordering of `dt`, so every root stays its component's

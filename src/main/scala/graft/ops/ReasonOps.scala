@@ -1,8 +1,12 @@
 package graft.ops
 
+import graft.dict.Dictionary
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.ScopedConf
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.{DriverRows, ScopedConf}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /** RDFS forward-chaining materialization (the rho-df core: rdfs2/3 domain
   * and range, rdfs5/7 sub-property, rdfs9/11 sub-class), Spark-first.
@@ -380,22 +384,24 @@ object ReasonOps {
                          guard: Option[(org.apache.spark.sql.Column,
                            () => String)] = None): (DataFrame, Long) = {
     val eff = effectiveDeltaCap(df.sparkSession, cap)
-    // An already-EMPTY LocalRelation (a prior pin's empty result, or a
-    // composition PropagateEmptyRelation folded away) pins job-free —
-    // nothing to materialize, nothing to guard. NON-empty locals fall
-    // through to the normal pin: keeping them driver-local re-ships
-    // their rows into every corpus-side derivation leg (measured 2-3x
-    // slower on the loop-heavy delta gates).
+    // A LocalRelation (rows a driver path returned, a prior pin's empty
+    // result, or a composition PropagateEmptyRelation folded away) pins
+    // job-free: its rows are counted and capped on the driver, and its
+    // broadcasts start no job (`DriverRows`). It comes back as a FRESH
+    // LocalRelation over the same rows, not df itself: df's analyzed
+    // tree may carry constraints that trip Spark 4.1's Union rewrite
+    // downstream (the same bug incrementNovelRaw's round-trip guards
+    // against). Pinning non-empty locals instead was measured 2-3x
+    // slower while every broadcast of a local relation still cost a
+    // job; keeping them local now starts no gate more jobs (sf0.01,
+    // local[4]: q_owl_haskey_delta 108 -> 94, q_owl_functional_delta
+    // 72 -> 60, q_sameas_delta 32 -> 22; q_owl_full_delta 160 and
+    // q_owl_rl_delta 57 unchanged) at the same warm wall within run
+    // noise (plans/driver_reason/pin_local.tsv).
     if (guard.isEmpty) df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-          if l.data.isEmpty =>
-        // return a FRESH empty LocalRelation, not df itself: df's
-        // analyzed tree may carry constraints that trip Spark 4.1's
-        // Union rewrite downstream (the same bug incrementNovelRaw's
-        // round-trip guards against)
-        return (df.sparkSession.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          df.schema), 0L)
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        requireCap(l.data.length, eff, what, remat)
+        return (DriverRows.frame(df.sparkSession, df.schema, l.data), l.data.length)
       case _ => ()
     }
     // Materialize the probe NARROW (DeltaPartitions): a Δ-derived
@@ -424,12 +430,7 @@ object ReasonOps {
             row.getLong(0)
         }
       }
-      require(n <= eff,
-        s"$what has $n rows - exceeds deltaCap=$eff. Maintenance " +
-          s"broadcasts are delta-sized by contract; a change set this " +
-          s"large is faster and safer to re-materialize ($remat). Raise " +
-          "deltaCap (explicit parameter, or spark.graft.reason.deltaCap " +
-          "session-wide) only if the driver can hold the broadcast.")
+      requireCap(n, eff, what, remat)
       if (n == 0) {
         // the count just proved the frame empty — build the empty
         // LocalRelation driver-side (no collect job) and release the
@@ -446,6 +447,16 @@ object ReasonOps {
         throw t
     }
   }
+
+  /** The `deltaCap` contract on a Δ-derived set of `n` rows, `what`
+    * named in the failure with its re-materialization pointer. */
+  private def requireCap(n: Long, eff: Long, what: String, remat: String): Unit =
+    require(n <= eff,
+      s"$what has $n rows - exceeds deltaCap=$eff. Maintenance " +
+        s"broadcasts are delta-sized by contract; a change set this " +
+        s"large is faster and safer to re-materialize ($remat). Raise " +
+        "deltaCap (explicit parameter, or spark.graft.reason.deltaCap " +
+        "session-wide) only if the driver can hold the broadcast.")
 
   /** Partitions a maintenance pin is materialized into (see
     * [[pinCappedN]]). One is right at any scale: the frame is
@@ -584,6 +595,14 @@ object ReasonOps {
     * [[composeIncrement]], graph column included in the novelty key —
     * null-safe, so default-graph rows dedup correctly); the TBox stays
     * GLOBAL and unchanged.
+    *
+    * A delta of at most [[rdfsDriverCap]] rows whose terms are non-null
+    * and of one type (string or long) is collected once (one bounded
+    * job, none for a local relation) and derived on the driver
+    * ([[rdfsDeriveRows]]): the TBox guard and the `deltaCap` check run
+    * on the collected rows, and the increment comes back as a local
+    * relation, so its broadcasts start no job. Any other delta takes
+    * the plan: a capped pin of the delta, one broadcast join per rule.
     */
   def rdfsDelta(tboxSource: DataFrame, delta: DataFrame,
                 corpus: Corpus[RdfsIds] = Corpus.Triples,
@@ -591,14 +610,27 @@ object ReasonOps {
                 deltaCap: Option[Long] = None): DataFrame = {
     val voc = rdfsVoc(corpus)
     val remat = corpus.remat("rdfsClosure")
-    val (d, _) = pinCappedGuard(normRel(delta, corpus.quads), deltaCap,
-      "rdfsDelta increment", remat, col("p").isin(voc.tboxPreds: _*),
-      "delta contains TBox statements - schema changes require " +
-        s"re-materialization ($remat), not incremental maintenance")
-    val tbox = collectTbox(normTriples(tboxSource), voc.tboxPreds, tboxCap)
-    val derived = rdfsDerive(tbox, d, resolveEmit(voc, tbox),
-      includeTboxClosure = false, corpus.quads)
-    (d +: derived).reduce(_.unionAll(_)).distinct()
+    val tboxMsg = "delta contains TBox statements - schema changes require " +
+      s"re-materialization ($remat), not incremental maintenance"
+    def tbox() = collectTbox(normTriples(tboxSource), voc.tboxPreds, tboxCap)
+    val input = normRel(delta, corpus.quads)
+    gatedRows(input) { rows0 =>
+      termRows(input.schema, rows0).map { rows =>
+        requireNoTbox(rows, voc, tboxMsg)
+        requireCap(rows.length, effectiveDeltaCap(input.sparkSession, deltaCap),
+          "rdfsDelta increment", remat)
+        val tb = tbox()
+        val v = resolveEmit(voc, tb)
+        termFrame(input, (rows ++ rdfsDeriveRows(rdfsMaps(tb, v), v, rows)).distinct)
+      }
+    } { in =>
+      val (d, _) = pinCappedGuard(in, deltaCap, "rdfsDelta increment", remat,
+        col("p").isin(voc.tboxPreds: _*), tboxMsg)
+      val tb = tbox()
+      val derived = rdfsDerive(tb, d, resolveEmit(voc, tb),
+        includeTboxClosure = false, corpus.quads)
+      (d +: derived).reduce(_.unionAll(_)).distinct()
+    }
   }
 
   /** The rows of `increment` NOT already present in `existing`, computed
@@ -617,33 +649,67 @@ object ReasonOps {
     * derivation exists to avoid. Here the only work proportional to the
     * closure is one columnar scan. PlanSpec asserts the plan carries no
     * shuffle exchange.
+    *
+    * An increment of string and long columns with at most
+    * [[rdfsDriverCap]] rows is collected once (no job when it is already
+    * a local relation) and its `deltaCap` checked on the driver; the
+    * existence probe is ONE job (the semi-join above, its broadcast of
+    * the local increment job-free), and the anti-join runs on the
+    * driver, so the novel rows come back as a local relation. A larger
+    * increment keeps the plan ([[incrementNovelRaw]]), and so does a
+    * `pinHits = false` caller whose increment is not local: there the
+    * eager probe would add a job the caller's one action already pays.
     */
   def incrementNovel(existing: DataFrame, increment: DataFrame,
                      deltaCap: Option[Long] = None,
                      pinHits: Boolean = true): DataFrame = {
-    val raw = incrementNovelRaw(existing, increment, deltaCap, pinHits)
-    // constraint-stripping boundary on the Δ-sized output: the
-    // null-safe anti-join's constraints reference the dropped probe
-    // attributes, and Spark 4.1's Union constraint rewrite throws
-    // "key not found" when the novel rows later feed a union (the
-    // normal composition). When both anti-join sides collapsed to
-    // driver-local relations (the small-delta path), strip by
-    // collecting to ONE LocalRelation — constraint-free like the RDD
-    // round-trip, but every downstream action and broadcast of the
-    // composed closure's novelty leg stays job-free (an RDD-backed
-    // plan re-executes per read). Distributed inputs keep the RDD
-    // round-trip; the broadcast-only shape below the boundary is
-    // unchanged (PlanSpec asserts it on the raw plan).
-    val allLocal = raw.queryExecution.optimizedPlan.collectLeaves().forall {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        true
-      case _ => false
+    def plan(inc: DataFrame): DataFrame = {
+      val raw = incrementNovelRaw(existing, inc, deltaCap, pinHits)
+      // constraint-stripping boundary on the Δ-sized output: the
+      // null-safe anti-join's constraints reference the dropped probe
+      // attributes, and Spark 4.1's Union constraint rewrite throws
+      // "key not found" when the novel rows later feed a union (the
+      // normal composition). When both anti-join sides collapsed to
+      // driver-local relations, strip by collecting to ONE
+      // LocalRelation — constraint-free like the RDD round-trip, but
+      // every downstream action and broadcast of the composed closure's
+      // novelty leg stays job-free (an RDD-backed plan re-executes per
+      // read). Distributed inputs keep the RDD round-trip; the
+      // broadcast-only shape below the boundary is unchanged (PlanSpec
+      // asserts it on the raw plan).
+      val local = relocal(raw)
+      if (local ne raw) local
+      else existing.sparkSession.createDataFrame(raw.rdd, raw.schema)
     }
-    if (allLocal) {
-      import scala.jdk.CollectionConverters._
-      existing.sparkSession.createDataFrame(
-        new java.util.ArrayList(raw.collect().toSeq.asJava), raw.schema)
-    } else existing.sparkSession.createDataFrame(raw.rdd, raw.schema)
+    val keyed = increment.schema.forall(f =>
+      f.dataType == StringType || f.dataType == LongType)
+    if (!keyed || (!pinHits && !Dictionary.isLocal(increment))) plan(increment)
+    else gatedRows(increment)(rows =>
+      novelRows(existing, increment.schema, rows, deltaCap))(plan)
+  }
+
+  /** [[incrementNovel]]'s driver path over the collected increment
+    * `rows`: None when the existence hits outgrow [[rdfsDriverCap]]. */
+  private def novelRows(existing: DataFrame, schema: StructType,
+                        rows: Array[InternalRow],
+                        deltaCap: Option[Long]): Option[DataFrame] = {
+    val spark = existing.sparkSession
+    val eff = effectiveDeltaCap(spark, deltaCap)
+    requireCap(rows.length, eff, "incrementNovel increment", "the full closure")
+    val cols = schema.fieldNames.toSeq
+    def key(r: InternalRow): Vector[Any] =
+      Vector.tabulate(cols.length)(i => r.get(i, schema(i).dataType))
+    val inc = DriverRows.frame(spark, schema, rows.toSeq)
+    if (rows.isEmpty) return Some(inc)
+    val probe = inc.toDF(cols.map("__i_" + _): _*)
+    val condE = cols.map(c => col(c) <=> col("__i_" + c)).reduce(_ && _)
+    capRows(existing.select(cols.map(col): _*)
+        .join(broadcast(probe), condE, "left_semi")).map { hits =>
+      requireCap(hits.length, eff, "incrementNovel existence hits",
+        "the full closure")
+      val seen = hits.iterator.map(key).toSet
+      DriverRows.frame(spark, schema, rows.filterNot(r => seen(key(r))).toSeq)
+    }
   }
 
   /** The novelty anti-join itself, pre the constraint-stripping
@@ -725,7 +791,7 @@ object ReasonOps {
     *
     *   1. over-delete O = deletions ∪ derive(deletions) — every
     *      consequence the removed triples could have contributed
-    *      (one broadcast-join pass, |Δ|-sized);
+    *      (|Δ|-sized);
     *   2. every surviving derivation's base premise shares a subject or
     *      object with some over-deleted row's SUBJECT, so the candidate
     *      premise slab is the remaining base semi-joined (broadcast)
@@ -736,12 +802,26 @@ object ReasonOps {
     *      — it is never shuffled, the same discipline as
     *      [[incrementNovel]].
     *
+    * Where the steps run: a deletion set of at most [[rdfsDriverCap]]
+    * rows whose terms are non-null and of one type (string or long, the
+    * base's too) is collected once (one bounded job, none for a local
+    * relation); its TBox guard and `deltaCap`, step 1 and the
+    * over-delete's `deltaCap` run on the driver ([[rdfsDeriveRows]]).
+    * Step 2's slab is ONE bounded job (the semi-joins' broadcasts of the
+    * local key set start none); when it holds at most [[rdfsDriverCap]]
+    * rows, step 3 runs on the driver too and R is a local relation, so
+    * step 4 stays lazy with a job-free broadcast. A larger slab is
+    * pinned and re-derived by the plan. Any other deletion set takes the
+    * plan for every step: capped pins of the deletions, the over-delete
+    * and the slab, one broadcast join per rule.
+    *
     * On a quad corpus single-premise rules never cross graphs, so the
     * over-delete, the premise slab, and the survivor re-derivation all
     * key on (term, graph): a deletion in one graph cannot kill — or
-    * resurrect — a derivation in another. The TBox comes from
-    * `tboxSource` when given (the quad contract: a GLOBAL schema
-    * relation) and from `base` otherwise.
+    * resurrect — a derivation in another. The graph column rides every
+    * key null-safely (derivations in the default graph carry g = null).
+    * The TBox comes from `tboxSource` when given (the quad contract: a
+    * GLOBAL schema relation) and from `base` otherwise.
     *
     * Returns the maintained closure, set-equal to
     * `rdfsClosure(base − deletions)`.
@@ -750,21 +830,10 @@ object ReasonOps {
                   corpus: Corpus[RdfsIds] = Corpus.Triples,
                   tboxSource: Option[DataFrame] = None,
                   tboxCap: Int = 1 << 20,
-                  deltaCap: Option[Long] = None): DataFrame =
-    rdfsRetractCore(closure, base, deletions, rdfsVoc(corpus), tboxSource,
-      tboxCap, deltaCap, corpus.remat("rdfsClosure"), corpus.quads)
-
-  /** The shared DRed core, triple and quad shaped: on the quad path the
-    * graph column rides every key (null-safe — derivations in the
-    * default graph carry g = null) so retraction stays confined to each
-    * deletion's graph. The TBox comes from `tboxSource` when given (the
-    * quad contract: global schema relation) and from `base` otherwise.
-    */
-  private def rdfsRetractCore(closure: DataFrame, base: DataFrame,
-                              deletions: DataFrame, voc0: Voc,
-                              tboxSource: Option[DataFrame], tboxCap: Int,
-                              deltaCap: Option[Long], rematName: String,
-                              hasGraph: Boolean): DataFrame = {
+                  deltaCap: Option[Long] = None): DataFrame = {
+    val hasGraph = corpus.quads
+    val voc0 = rdfsVoc(corpus)
+    val rematName = corpus.remat("rdfsClosure")
     val width = if (hasGraph) 4 else 3
     val names = Seq("s", "p", "o", "g").take(width)
     def norm(df: DataFrame): DataFrame =
@@ -780,21 +849,17 @@ object ReasonOps {
     }
     def derive(df: DataFrame, tbox: Array[(Any, Any, Any)], voc: Voc) =
       rdfsDerive(tbox, df, voc, includeTboxClosure = false, hasGraph)
-    val (del, _) = pinCappedGuard(norm(deletions), deltaCap,
-      "retraction set", rematName, col("p").isin(voc0.tboxPreds: _*),
-      "deletions contain TBox statements - schema changes require " +
-        s"re-materialization ($rematName), not incremental retraction")
+    val tboxMsg = "deletions contain TBox statements - schema changes " +
+      s"require re-materialization ($rematName), not incremental retraction"
     val b = norm(base)
-    val tbox = collectTbox(tboxSource.map { ts =>
-        val Seq(xs, xp, xo) = ts.columns.take(3).toSeq
-        ts.select(col(xs).as("s"), col(xp).as("p"), col(xo).as("o"))
-      }.getOrElse(b.select("s", "p", "o")),
-      voc0.tboxPreds, tboxCap)
-    val voc = resolveEmit(voc0, tbox)
-    // 1. over-delete: the deleted rows and every direct consequence
-    val over = pinCapped(
-      (del +: derive(del, tbox, voc)).reduce(_.unionAll(_)).distinct(),
-      deltaCap, "over-delete set", rematName)
+    def tboxOf(): (Array[(Any, Any, Any)], Voc) = {
+      val tbox = collectTbox(tboxSource.map { ts =>
+          val Seq(xs, xp, xo) = ts.columns.take(3).toSeq
+          ts.select(col(xs).as("s"), col(xp).as("p"), col(xo).as("o"))
+        }.getOrElse(b.select("s", "p", "o")),
+        voc0.tboxPreds, tboxCap)
+      (tbox, resolveEmit(voc0, tbox))
+    }
     // 2. candidate premise slab: remaining base rows sharing a subject
     //    or object with an over-deleted SUBJECT — in the SAME graph on
     //    the quad path (single-premise rules only ever move a
@@ -802,18 +867,62 @@ object ReasonOps {
     //    position, and never across graphs) — broadcast semi-joins,
     //    narrow scans
     val keyCols = if (hasGraph) Seq("s", "g") else Seq("s")
-    val keys = over.select(keyCols.map(c => col(c).as("__k_" + c)): _*)
-      .distinct()
-    def semiOn(pos: String): DataFrame = {
-      val cond = (col(pos) === col("__k_s")) +:
-        (if (hasGraph) Seq(col("g") <=> col("__k_g")) else Nil)
-      b.join(broadcast(keys), cond.reduce(_ && _), "left_semi")
+    def slabOf(keys: DataFrame, del: DataFrame): DataFrame = {
+      def semiOn(pos: String): DataFrame = {
+        val cond = (col(pos) === col("__k_s")) +:
+          (if (hasGraph) Seq(col("g") <=> col("__k_g")) else Nil)
+        b.join(broadcast(keys), cond.reduce(_ && _), "left_semi")
+      }
+      anti(semiOn("s").unionAll(semiOn("o")), del)
     }
-    val slab = pinCapped(anti(semiOn("s").unionAll(semiOn("o")), del),
-      deltaCap, "premise slab (fan-in of the over-delete)", rematName)
-    // 3. survivors re-derive from the slab; R = over-deleted minus them
-    val rederived = (slab +: derive(slab, tbox, voc)).reduce(_.unionAll(_))
-    val removal = anti(over, rederived)
+    val slabWhat = "premise slab (fan-in of the over-delete)"
+    // 3. survivors re-derive from the pinned slab; R = over-deleted
+    //    minus them
+    def planRemoval(over: DataFrame, del: DataFrame,
+                    tbox: Array[(Any, Any, Any)], voc: Voc): DataFrame = {
+      val keys = over.select(keyCols.map(c => col(c).as("__k_" + c)): _*)
+        .distinct()
+      val slab = pinCapped(slabOf(keys, del), deltaCap, slabWhat, rematName)
+      anti(over, (slab +: derive(slab, tbox, voc)).reduce(_.unionAll(_)))
+    }
+    val delIn = norm(deletions)
+    val removal = gatedRows(delIn) { rows0 =>
+      termRows(delIn.schema, rows0)
+        .filter(_ => b.schema.forall(_.dataType == delIn.schema.head.dataType))
+        .map { del =>
+          requireNoTbox(del, voc0, tboxMsg)
+          val eff = effectiveDeltaCap(delIn.sparkSession, deltaCap)
+          requireCap(del.length, eff, "retraction set", rematName)
+          val (tbox, voc) = tboxOf()
+          val maps = rdfsMaps(tbox, voc)
+          // 1. over-delete, on the driver
+          val over = (del ++ rdfsDeriveRows(maps, voc, del)).distinct
+          requireCap(over.length, eff, "over-delete set", rematName)
+          val overF = termFrame(delIn, over)
+          val delF = termFrame(delIn, del)
+          val keyPos = keyCols.map(delIn.schema.fieldIndex)
+          val keys = termFrame(delIn.select(keyCols.map(c => col(c).as("__k_" + c)): _*),
+            over.map(r => keyPos.map(r).toVector).distinct)
+          capRows(slabOf(keys, delF)) match {
+            case Some(slabRows) =>
+              requireCap(slabRows.length, eff, slabWhat, rematName)
+              val slab = slabRows.toSeq.map(r =>
+                Vector.tabulate(width)(i => r.get(i, b.schema(i).dataType)))
+              val survivors = (slab ++ rdfsDeriveRows(maps, voc, slab)).toSet
+              termFrame(delIn, over.filterNot(survivors))
+            case None => planRemoval(overF, delF, tbox, voc)
+          }
+        }
+    } { in =>
+      val (del, _) = pinCappedGuard(in, deltaCap, "retraction set", rematName,
+        col("p").isin(voc0.tboxPreds: _*), tboxMsg)
+      val (tbox, voc) = tboxOf()
+      // 1. over-delete: the deleted rows and every direct consequence
+      val over = pinCapped(
+        (del +: derive(del, tbox, voc)).reduce(_.unionAll(_)).distinct(),
+        deltaCap, "over-delete set", rematName)
+      planRemoval(over, del, tbox, voc)
+    }
     // 4. the closure streams through one broadcast anti-join — no shuffle
     anti(norm(closure), removal)
   }
@@ -850,17 +959,18 @@ object ReasonOps {
   }
 
   /** Collect + cap the schema statements (driver-sized by contract) —
-    * generic over the term type (string terms or encoded long ids).
+    * generic over the term type (string terms or encoded long ids). One
+    * bounded-collect job over every partition ([[Dictionary.collectBounded]]),
+    * none for a local relation; a `limit` collect would scan the
+    * partitions in up to three growing jobs.
     */
   private def collectTbox(t: DataFrame, preds: Seq[Any], tboxCap: Int)
       : Array[(Any, Any, Any)] = {
-    val tbox = t.where(col("p").isin(preds: _*))
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(tbox.length <= tboxCap,
+    val tbox = Dictionary.collectBounded(t.where(col("p").isin(preds: _*)), tboxCap)
+    require(tbox.isDefined,
       s"TBox exceeds $tboxCap statements - not schema-shaped; raise tboxCap " +
         "only if the ontology is genuinely this large")
-    tbox
+    tbox.get.map(r => (r.get(0), r.get(1), r.get(2)))
   }
 
   private final case class RdfsMaps(spPairs: Seq[(Any, Any)],
@@ -999,6 +1109,81 @@ object ReasonOps {
           (if (hasGraph) Seq(StructField("g", dt, nullable = true)) else Nil)))
     }
     derived.toSeq
+  }
+
+  /** Maintenance inputs of at most this many rows are maintained on the
+    * driver ([[rdfsDelta]], [[incrementNovel]], [[rdfsRetract]]): the
+    * decode cap, [[Dictionary.LocalCap]]. A spec or probe lowers it
+    * (`rdfsDriverCap.withValue(-1) {...}`) to run small inputs through
+    * the plans. */
+  private[graft] val rdfsDriverCap =
+    new scala.util.DynamicVariable[Int](Dictionary.LocalCap)
+
+  /** `df`'s rows when it holds at most [[rdfsDriverCap]] of them (one
+    * bounded job, none for a local relation), else None. */
+  private def capRows(df: DataFrame): Option[Array[InternalRow]] =
+    Dictionary.rowsWithin(df, rdfsDriverCap.value)
+
+  /** The size gate of the RDFS maintenance entries ([[Dictionary.gated]]
+    * under [[rdfsDriverCap]]): `onDriver` over the collected rows, else
+    * `plan` over the (lazily pinned) input; the plan pins what it keeps. */
+  private def gatedRows[T](input: DataFrame)(
+      onDriver: Array[InternalRow] => Option[T])(plan: DataFrame => T): T =
+    Dictionary.gated(input, graft.Pins.isMaterialized(input),
+      rdfsDriverCap.value)(onDriver)(plan)
+
+  /** Collected (s, p, o[, g]) rows as Catalyst term values, when the
+    * driver rule evaluator reads them: every column of one type, string
+    * or long, and no null s, p or o. */
+  private def termRows(schema: StructType, rows: Array[InternalRow])
+      : Option[IndexedSeq[Vector[Any]]] = {
+    val dt = schema.head.dataType
+    val oneType = (dt == StringType || dt == LongType) &&
+      schema.forall(_.dataType == dt)
+    if (!oneType || rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
+      None
+    else Some(rows.toIndexedSeq.map(r =>
+      Vector.tabulate(schema.length)(i => r.get(i, dt))))
+  }
+
+  /** A local relation over driver-held term rows, laid out as `like`. */
+  private def termFrame(like: DataFrame, rows: Seq[Vector[Any]]): DataFrame =
+    DriverRows.frame(like.sparkSession, like.schema,
+      rows.map(r => new GenericInternalRow(r.toArray[Any])))
+
+  /** The TBox guard of the maintenance entries on driver-held rows. */
+  private def requireNoTbox(rows: Seq[Vector[Any]], voc: Voc, msg: String): Unit = {
+    val preds = voc.tboxPreds.map(CatalystTypeConverters.convertToCatalyst).toSet
+    require(!rows.exists(r => preds(r(1))), msg)
+  }
+
+  /** [[rdfsDerive]]'s rules on the driver, over rows of Catalyst term
+    * values (s, p, o[, g]): rdfs7, rdfs2 and rdfs3 per row off the same
+    * [[rdfsMaps]], then rdfs9 over the type assertions among the rows
+    * and those derivations, each derivation in its premise's graph.
+    * Returns the bag the plan's rule legs return (callers dedup); the
+    * closed TBox statements are not emitted. */
+  private def rdfsDeriveRows(maps: RdfsMaps, voc: Voc,
+                             rows: Seq[Vector[Any]]): Seq[Vector[Any]] = {
+    def term(x: Any): Any = CatalystTypeConverters.convertToCatalyst(x)
+    def index(pairs: Seq[(Any, Any)]): Map[Any, Seq[Any]] =
+      pairs.groupBy(pr => term(pr._1)).map { case (k, ps) => k -> ps.map(pr => term(pr._2)) }
+    val sp = index(maps.spPairs)
+    val dom = index(maps.domEff)
+    val rng = index(maps.rngEff)
+    val sc = index(maps.scPairs)
+    val ty = voc.ty.map(term)
+    val emitTy = term(voc.emitTy)
+    val out = scala.collection.mutable.ArrayBuffer.empty[Vector[Any]]
+    rows.foreach { r =>
+      val g = r.drop(3)
+      sp.getOrElse(r(1), Nil).foreach(q => out += Vector(r(0), q, r(2)) ++ g)
+      dom.getOrElse(r(1), Nil).foreach(c => out += Vector(r(0), emitTy, c) ++ g)
+      rng.getOrElse(r(1), Nil).foreach(c => out += Vector(r(2), emitTy, c) ++ g)
+    }
+    (rows ++ out).filter(r => ty(r(1))).foreach(r =>
+      sc.getOrElse(r(2), Nil).foreach(d => out += Vector(r(0), emitTy, d) ++ r.drop(3)))
+    out.toSeq
   }
 
 

@@ -156,6 +156,49 @@ class CorpusMatrixSpec extends SparkSpec {
     }.size should be > base.size
   }
 
+  "The RDFS maintenance entries" should "return the same row bags on the driver path and the plan on every corpus cell" in {
+    // a delta with duplicate rows and with rows the base closure holds
+    val insDup = ins ++ ins.take(2) ++ Seq(("ann", "worksFor", "acme"))
+    // (acme a Org) survives (bob worksFor acme)'s deletion through
+    // (ann worksFor acme)'s range, a premise only the slab holds
+    val dels2 = dels :+ (("ann", "knows", "bob"))
+    def bag(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    def bothPaths(what: String)(op: => DataFrame): DataFrame = {
+      val driver = op
+      val plan = ReasonOps.rdfsDriverCap.withValue(-1)(op)
+      withClue(s"$what: ")(bag(driver) shouldBe bag(plan))
+      driver
+    }
+    cells(rdfsIds).foreach { c =>
+      withClue(s"${c.corpus}: ") {
+        val closure = ReasonOps.rdfsClosure(c.df(base), c.corpus, c.tbox(base))
+          .localCheckpoint(true)
+        val inc = bothPaths("rdfsDelta")(
+          ReasonOps.rdfsDelta(c.df(base), c.df(insDup), c.corpus))
+        graft.dict.Dictionary.isLocal(inc) shouldBe true
+        // incrementNovel over a local and over a materialized increment;
+        // duplicate increment rows stay duplicated
+        val raw = c.df(insDup ++ insDup.take(1)).localCheckpoint(true)
+        Seq(inc, raw).foreach { i =>
+          graft.dict.Dictionary.isLocal(bothPaths("incrementNovel")(
+            ReasonOps.incrementNovel(closure, i))) shouldBe true
+        }
+        val kept = bothPaths("rdfsRetract")(ReasonOps.rdfsRetract(closure,
+          c.df(base), c.df(dels2), c.corpus, c.tbox(base)))
+        c.rows(kept) shouldBe c.rows(ReasonOps.rdfsClosure(c.df(minus(base, dels2)),
+          c.corpus, c.tbox(base)))
+        c.rows(kept) should contain(Seq("acme", ty, "Org"))
+        c.rows(kept) should not contain Seq("bob", ty, "Person")
+        // a delta row with a null object takes the plan
+        val nullO = c.df(ins).union(c.df(ins.take(1))
+          .withColumn("o", org.apache.spark.sql.functions.lit(null).cast(
+            c.df(ins).schema("o").dataType)))
+        graft.dict.Dictionary.isLocal(bothPaths("rdfsDelta, null object")(
+          ReasonOps.rdfsDelta(c.df(base), nullO, c.corpus))) shouldBe false
+      }
+    }
+  }
+
   "The OWL property family" should "agree on every corpus cell, and delta/retract equal from-scratch" in {
     val cs = cells(owlIds)
     agree(cs)(c => ReasonOps.owlEntailed(c.df(base), c.corpus, c.tbox(base),

@@ -1055,6 +1055,47 @@ class ReasonSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.reason.deltaCap")
   }
 
+  "RDFS maintenance on the driver" should "fail the deltaCap contract with the plan's messages" in {
+    val tbox = Seq(("p", SubPropertyOf, "q"), ("q", Domain, "C"))
+    val base = (tbox ++ (1 to 5).map(i => (s"s$i", "p", s"o$i"))).toDF("s", "p", "o")
+    val closure = ReasonOps.rdfsClosure(base).localCheckpoint(true)
+    val five = (1 to 5).map(i => (s"s$i", "p", s"o$i")).toDF("s", "p", "o")
+    val inc = (1 to 5).map(i => (s"n$i", "p", s"o$i")).toDF("s", "p", "o")
+    def capMessages(cap: Option[Long]): Seq[String] = Seq(
+      intercept[IllegalArgumentException](
+        ReasonOps.rdfsDelta(tbox.toDF("s", "p", "o"), five, deltaCap = cap)),
+      intercept[IllegalArgumentException](
+        ReasonOps.incrementNovel(closure, inc, deltaCap = cap)),
+      intercept[IllegalArgumentException](
+        ReasonOps.rdfsRetract(closure, base, five, deltaCap = cap))
+    ).map(_.getMessage)
+    def check(cap: Option[Long]): Unit = {
+      val driver = capMessages(cap)
+      driver.zip(Seq("rdfsDelta increment", "incrementNovel increment",
+        "retraction set")).foreach { case (m, what) =>
+        m should include(s"$what has 5 rows - exceeds deltaCap=2.")
+      }
+      ReasonOps.rdfsDriverCap.withValue(-1)(capMessages(cap)) shouldBe driver
+    }
+    check(Some(2))
+    spark.conf.set("spark.graft.reason.deltaCap", "2")
+    try check(None)
+    finally spark.conf.unset("spark.graft.reason.deltaCap")
+  }
+
+  it should "raise the TBox guard on a local delta or deletion set before any job" in {
+    val g = Seq(("A", SubClassOf, "B"), ("x", "a", "A")).toDF("s", "p", "o")
+    val closure = ReasonOps.rdfsClosure(g)
+    val (delta, deltaJobs) = jobsDuring(intercept[IllegalArgumentException](
+      ReasonOps.rdfsDelta(g, g)))
+    delta.getMessage should include("delta contains TBox statements")
+    deltaJobs shouldBe 0
+    val (retract, retractJobs) = jobsDuring(intercept[IllegalArgumentException](
+      ReasonOps.rdfsRetract(closure, g, g)))
+    retract.getMessage should include("deletions contain TBox statements")
+    retractJobs shouldBe 0
+  }
+
   "ReasonOps.rdfsMaintainStream" should "maintain per-graph quad closures across batches" in {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

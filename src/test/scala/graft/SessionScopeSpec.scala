@@ -135,9 +135,12 @@ class SessionScopeSpec extends SparkSpec {
     val (frames, props) =
       try jobProps {
         val sccOut = sccDistributed()
-        val inc = ReasonOps.rdfsDelta(base, inserts)
-        val novel = ReasonOps.incrementNovel(closure, inc)
-        val kept = ReasonOps.rdfsRetract(closure, base, deletes)
+        // the pinned plans: their pins are the scoped (AQE-off) jobs
+        val (inc, novel, kept) = ReasonOps.rdfsDriverCap.withValue(-1) {
+          val inc = ReasonOps.rdfsDelta(base, inserts)
+          (inc, ReasonOps.incrementNovel(closure, inc),
+            ReasonOps.rdfsRetract(closure, base, deletes))
+        }
         Seq(digest(sccOut), digest(novel) ++ digest(kept)) shouldBe expected
         Seq(sccOut, inc, novel, kept)
       } finally saved.foreach {
