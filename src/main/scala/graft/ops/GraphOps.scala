@@ -429,15 +429,18 @@ object GraphOps {
   /** Graph inputs of at most this many rows (2^20 edges) run on the
     * driver: each graph fixpoint here ([[connectedComponents]],
     * [[stronglyConnectedComponents]], [[bfsDistances]],
-    * [[shortestPaths]], [[pageRank]], [[minLabelPropagation]]) collects
-    * them in one bounded job and runs a sequential algorithm over the
-    * rows — at that size a fixpoint's rounds are pure scheduling
-    * latency, and one thread beats any dataflow plan. */
+    * [[shortestPaths]], [[pageRank]], [[minLabelPropagation]],
+    * [[transitiveClosure]]) collects them in one bounded job and runs a
+    * sequential algorithm over the rows — at that size a fixpoint's
+    * rounds are pure scheduling latency, and one thread beats any
+    * dataflow plan. [[reachableFrom]] probes instead of collecting, and
+    * reads the cap as a bound on its driver rows. */
   val GraphDriverCap: Int = 1 << 20
 
   /** The cap the graph fixpoints read: [[GraphDriverCap]], lowered by a
     * spec or probe (`graphDriverCap.withValue(-1) {...}`) to run small
-    * graphs through the distributed plans. */
+    * graphs through the distributed plans (the reachability probes
+    * included). */
   private[graft] val graphDriverCap =
     new scala.util.DynamicVariable[Int](GraphDriverCap)
 
@@ -735,6 +738,248 @@ object GraphOps {
       k += 1
     }
     pins.seal(dist)
+  }
+
+  /** Count of reachability calls ([[transitiveClosure]] and
+    * [[reachableFrom]]) — lets specs assert that a lazily entailed
+    * relation restricted to non-transitive predicates runs none. */
+  private[graft] val fixpointRuns = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Rounds of the most recent reachability call's distributed plan
+    * (doubling or frontier rounds; 0 when the driver BFS served it) —
+    * scale-evidence telemetry: rounds track graph DIAMETER, not row
+    * count. */
+  private[graft] val lastFixpointRounds = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** All-pairs reachability: every (a, b, groups…) joined by a path of
+    * length ≥ 1 inside one group — the SPARQL `p+` relation, the OWL
+    * transitive properties, the OWL delta bridge. The first two columns
+    * of `edges` are the ends (the output keeps their names); `groupCols`
+    * partition the graph (a named-graph column: paths never leave a
+    * group), compared null-safe, so a null group is one group. A pair
+    * (x, x) is kept when x lies on a cycle, as SPARQL `+` requires;
+    * callers wanting the irreflexive closure filter a ≠ b, which loses
+    * nothing (a path between two different nodes can always be made
+    * simple). A null end is kept as an end but never extends a path.
+    *
+    * The plan follows the measured input ([[gated]]): at most
+    * [[GraphDriverCap]] edges are collected once and every source runs
+    * the driver BFS ([[reach]]), while the output stays within as many
+    * pairs; past either cap the pairs close by iterated squaring
+    * ([[doubling]]), `maxRounds` bounding it loudly (diameter d closes
+    * in ⌈log2 d⌉ rounds). Output distinct.
+    */
+  def transitiveClosure(edges: DataFrame, groupCols: Seq[String] = Nil,
+                        maxRounds: Int): DataFrame = {
+    fixpointRuns.incrementAndGet()
+    val Seq(c0, c1) = edges.columns.take(2).toSeq
+    val in = edges.select(col(c0) +: col(c1) +: groupCols.map(col): _*)
+    gated(in, graft.Pins.isMaterialized(edges)) { rows =>
+      val dts = in.schema.map(_.dataType)
+      if (dts(0) != dts(1)) None
+      else {
+        val succ = new java.util.HashMap[Any, List[(Any, Seq[Any])]]()
+        val origins = new java.util.LinkedHashSet[(Any, Seq[Any])]()
+        rows.foreach { r =>
+          val Seq(s, o) = Seq(0, 1).map(r.get(_, dts(0)))
+          val gs = groupCols.indices.map(i => r.get(i + 2, dts(i + 2)))
+          succ.put(s, (o, gs) :: succ.getOrDefault(s, Nil))
+          origins.add((s, gs))
+        }
+        import scala.jdk.CollectionConverters._
+        reach(origins.asScala.toIndexedSeq, graphDriverCap.value)(
+          _ => Some((v: Any) => succ.getOrDefault(v, Nil))).map { pairs =>
+          lastFixpointRounds.set(0)
+          DriverRows.frame(in.sparkSession, in.schema,
+            pairs.map { case (a, b, gs) => InternalRow.fromSeq(a +: b +: gs) })
+        }
+      }
+    }(doubling(_, groupCols, maxRounds))
+  }
+
+  /** Seeded reachability: the (seed, b, groups…) pairs of
+    * [[transitiveClosure]] whose first end is a value of `seeds`' first
+    * column, without closing the rest of the graph — graphula/TripleRush
+    * expands from the bound side, and so does this. A seed takes the
+    * group of its first edge, so with `groupCols` it yields its pairs in
+    * every group it has an edge in.
+    *
+    * Plans, by measured size: at most 64 distinct seeds run the driver
+    * BFS ([[reach]]) with one bounded probe of the LAZY edge plan per
+    * round (an `isin` over the frontier's nodes, so bound filters stay
+    * pushed into the scan and a small reach over a large predicate
+    * stays cheap), while the frontier holds at most 1,024 nodes, the
+    * rounds stay under 500 and the probes collect at most 100,000 rows
+    * in all (fewer under a lowered [[graphDriverCap]]). Past any of
+    * these the broadcast-frontier rounds take it ([[frontierRounds]]).
+    * Output distinct.
+    */
+  def reachableFrom(edges: DataFrame, seeds: DataFrame,
+                    groupCols: Seq[String] = Nil): DataFrame = {
+    fixpointRuns.incrementAndGet()
+    val Seq(c0, c1) = edges.columns.take(2).toSeq
+    val in = edges.select(col(c0) +: col(c1) +: groupCols.map(col): _*)
+    val seed = seeds.select(col(seeds.columns.head).as(c0)).distinct()
+    var rowBudget = math.min(100000, graphDriverCap.value)
+    var rounds = 0
+    val onDriver = for {
+      seedRows <- if (rowBudget < 0) None else Dictionary.collectBounded(seed, 64)
+      pairs <- reach(seedRows.toIndexedSeq.map(r => (r.get(0), null: Seq[Any])),
+          graphDriverCap.value) { nodes =>
+        rounds += 1
+        if (rounds > 500 || nodes.size > 1024) None
+        else if (nodes.isEmpty) Some((_: Any) => Nil)
+        else Dictionary.collectBounded(
+            in.where(col(c0).isin(nodes: _*)).distinct(), rowBudget).map { rows =>
+          rowBudget -= rows.length
+          val byNode = rows.toSeq.groupBy(_.get(0))
+          (v: Any) => byNode.getOrElse(v, Nil).map(r => (r.get(1), r.toSeq.drop(2)))
+        }
+      }
+    } yield {
+      lastFixpointRounds.set(0)
+      import scala.jdk.CollectionConverters._
+      in.sparkSession.createDataFrame(pairs.map { case (a, b, gs) =>
+        org.apache.spark.sql.Row.fromSeq(a +: b +: gs) }.asJava, in.schema)
+    }
+    onDriver.getOrElse(frontierRounds(in, seed, groupCols))
+  }
+
+  /** Reachability pairs of driver-held edges (a schema hierarchy): every
+    * (a, b) joined by a path of length ≥ 1, self pairs of cycles
+    * included ([[reach]] with no budget). */
+  private[graft] def reachPairs(edges: Seq[(Any, Any)]): Seq[(Any, Any)] = {
+    val succ = edges.groupBy(_._1).map { case (a, es) => a -> es.map(e => (e._2, Nil)) }
+    reach(succ.keys.toIndexedSeq.map(a => (a, Nil)), Long.MaxValue)(
+      _ => Some((v: Any) => succ.getOrElse(v, Nil))).get.map { case (a, b, _) => (a, b) }
+  }
+
+  /** The driver BFS of every reachability plan: level-synchronous and
+    * multi-origin, a state being (origin, node, group values). An origin
+    * is a (node, groups) key; a null groups means any group (a seed takes
+    * the group of its first edge). `out(nodes)` gives the next level's
+    * out-edges, (o, groups) per non-null frontier node — from collected
+    * rows, or from one bounded probe per round — and None gives up; so
+    * does reaching more than `budget` states. A null node is reached but
+    * never expanded (a join never matches null), and a state back at its
+    * origin is not expanded again (level 0 did). Returns (origin node,
+    * node, groups) per reached state. */
+  private def reach(origins: IndexedSeq[(Any, Seq[Any])], budget: Long)(
+      out: Seq[Any] => Option[Any => Iterable[(Any, Seq[Any])]])
+      : Option[Seq[(Any, Any, Seq[Any])]] = {
+    val reached = new java.util.LinkedHashSet[(Int, Any, Seq[Any])]()
+    var frontier: Seq[(Int, Any, Seq[Any])] =
+      origins.indices.map(i => (i, origins(i)._1, origins(i)._2))
+    var level0 = true
+    while (frontier.nonEmpty) {
+      val nodes = frontier.iterator.map(_._2).filter(_ != null).toSeq.distinct
+      val adj = out(nodes).getOrElse(return None)
+      val next = scala.collection.mutable.ArrayBuffer.empty[(Int, Any, Seq[Any])]
+      frontier.foreach { case (i, v, gs) =>
+        if (v != null || level0) adj(v).foreach { case (w, wg) =>
+          if (gs == null || gs == wg) {
+            val st = (i, w, wg)
+            if (reached.add(st)) {
+              if (reached.size > budget) return None
+              if (w != origins(i)._1) next += st
+            }
+          }
+        }
+      }
+      frontier = next.toSeq
+      level0 = false
+    }
+    import scala.jdk.CollectionConverters._
+    Some(reached.asScala.toSeq.map { case (i, w, wg) => (origins(i)._1, w, wg) })
+  }
+
+  /** [[transitiveClosure]]'s distributed plan over distinct-able (a, b,
+    * groups…) edges: iterated squaring, paths ∪ paths∘paths per round,
+    * converged when the count stops growing (the union only adds). A
+    * LAZY checkpoint + count is ONE job per round. */
+  private def doubling(in: DataFrame, groupCols: Seq[String],
+                       maxRounds: Int): DataFrame = {
+    val Seq(a, b) = in.columns.take(2).toSeq
+    var paths = graft.Pins.checkpointLazy(in.distinct())
+    var n = paths.count()
+    var round = 0
+    var done = n == 0
+    while (!done) {
+      round += 1
+      require(round <= maxRounds,
+        s"transitiveClosure did not converge in $maxRounds doubling rounds")
+      val cond = groupCols.foldLeft(col(s"x.$b") === col(s"y.$a")) {
+        (c, g) => c && (col(s"x.$g") <=> col(s"y.$g"))
+      }
+      val step0 = paths.as("x").join(paths.as("y"), cond)
+        .select(col(s"x.$a").as(a) +: col(s"y.$b").as(b) +:
+          groupCols.map(g => col(s"x.$g").as(g)): _*)
+      // grouped mode strips the join's constraints before the union:
+      // Spark 4.1's Union constraint rewrite trips over the null-safe
+      // self-join condition's dropped y-side attributes ("key not
+      // found" in UnionBase.rewriteConstraints). localCheckpoint is NOT
+      // enough (LogicalRDD retains origin constraints); an RDD
+      // round-trip produces a constraint-free leaf.
+      val step =
+        if (groupCols.isEmpty) step0
+        else in.sparkSession.createDataFrame(step0.rdd, step0.schema)
+      val next = graft.Pins.checkpointLazy(step.unionByName(paths).distinct())
+      val m = next.count()
+      // the squared set supersedes the previous round's checkpoint
+      graft.Pins.unpin(paths)
+      done = m == n
+      paths = next; n = m
+    }
+    lastFixpointRounds.set(round)
+    paths
+  }
+
+  /** [[reachableFrom]]'s distributed plan: each round hash-joins the
+    * pinned edges against the BROADCAST frontier of (seed, node,
+    * groups…) states — sound because the frontier is bounded by the
+    * reachable set, the premise of seeding at all — and only states
+    * never expanded before re-enter it, which ends it on cycles. The
+    * seeds' first step joins on the node alone (a seed takes every
+    * group), later steps on node and groups null-safe. One job per
+    * round: the step's lazy pin fills inside the fresh states' count. */
+  private def frontierRounds(in: DataFrame, seeds: DataFrame,
+                             groupCols: Seq[String]): DataFrame = {
+    val pins = new graft.Pins
+    val Seq(a, b) = in.columns.take(2).toSeq
+    // unique names on both sides of every join: the frontier's states
+    // (__a seed, __b node, __g* groups), the edges' (__n, __o, __h*)
+    val gs = groupCols.indices
+    val e = pins.pin(in).toDF(Seq("__n", "__o") ++ gs.map(i => s"__h$i"): _*)
+    def states(df: DataFrame) = df.toDF(Seq("__a", "__b") ++ gs.map(i => s"__g$i"): _*)
+    var frontier = seeds.select(col(a).as("__a"), col(a).as("__b"))
+    val steps = scala.collection.mutable.ListBuffer.empty[DataFrame]
+    var expanded: Option[DataFrame] = None
+    var rounds = 0
+    var done = false
+    while (!done) {
+      rounds += 1
+      val groupEq = if (rounds == 1) Nil else gs.map(i => col(s"__g$i") <=> col(s"__h$i"))
+      val step = pins.track(graft.Pins.checkpointLazy(
+        broadcast(frontier).join(e, ((col("__b") === col("__n")) +: groupEq).reduce(_ && _))
+          .select(col("__a").as(a) +: col("__o").as(b) +:
+            gs.map(i => col(s"__h$i").as(groupCols(i))): _*).distinct()))
+      steps += step
+      // a seed's own node was expanded in every group by the first step
+      val cand = step.where(!(col(a) <=> col(b)))
+      val (fresh, n) = pins.pinCounted(expanded.fold(cand) { x =>
+        cand.join(states(x),
+          ((col(a) <=> col("__a")) +: (col(b) <=> col("__b")) +:
+            gs.map(i => col(groupCols(i)) <=> col(s"__g$i"))).reduce(_ && _),
+          "left_anti")
+      })
+      if (n == 0) done = true
+      else {
+        expanded = Some(expanded.fold(fresh)(_.unionAll(fresh)))
+        frontier = states(fresh)
+      }
+    }
+    lastFixpointRounds.set(rounds)
+    pins.seal(steps.reduce(_.unionAll(_)).distinct())
   }
 
   /** Do columns `a` and `b` of `schema` both hold `dt`? The driver

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.dict.Dictionary
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.{DriverRows, ScopedConf}
@@ -486,27 +486,18 @@ object ReasonOps {
   }
 
   /** Proper transitive closure of a (small, driver-side) edge list:
-    * every (a, b) with a path a -> ... -> b of length >= 1 and a != b.
-    * BFS with a visited set, so cycles terminate (a cycle member reaches
-    * every other member but never itself — reflexive pairs carry no
-    * information for expansion and are dropped).
+    * every (a, b) with a path a -> ... -> b of length >= 1 and a != b
+    * ([[GraphOps.reachPairs]] without the self pairs of cycles, which
+    * carry no information for expansion), ordered by source, then
+    * target rendering.
     */
   private[graft] def transitive(edges: Seq[(String, String)]): Seq[(String, String)] =
-    transitiveAny(edges).map { case (a, b) =>
+    closeTbox(edges).map { case (a, b) =>
       (a.asInstanceOf[String], b.asInstanceOf[String]) }
 
-  private def transitiveAny(edges: Seq[(Any, Any)]): Seq[(Any, Any)] = {
-    val adj = edges.groupBy(_._1).map { case (k, es) => (k, es.map(_._2).distinct) }
-    adj.keys.toSeq.sortBy(_.toString).flatMap { a =>
-      val seen = scala.collection.mutable.Set[Any]()
-      val queue = scala.collection.mutable.Queue(adj(a): _*)
-      while (queue.nonEmpty) {
-        val b = queue.dequeue()
-        if (seen.add(b)) queue ++= adj.getOrElse(b, Nil)
-      }
-      (seen - a).toSeq.sortBy(_.toString).map((a, _))
-    }
-  }
+  private def closeTbox(edges: Seq[(Any, Any)]): Seq[(Any, Any)] =
+    GraphOps.reachPairs(edges).filter { case (a, b) => a != b }
+      .sortBy { case (a, b) => (a.toString, b.toString) }
 
   /** The RDFS closure of `data`: string terms in the store term
     * convention (the corpus's type predicate is the store's rdf:type
@@ -543,7 +534,8 @@ object ReasonOps {
     val t0 = normRel(data, corpus.quads)
     val t = if (pinInput) t0.localCheckpoint(true) else t0
     val voc = rdfsVoc(corpus)
-    val tbox = collectTbox(schemaRel(t, tboxSource), voc.tboxPreds, tboxCap)
+    val tbox = collectTbox(schemaRel(t, tboxSource),
+      col("p").isin(voc.tboxPreds: _*), tboxCap)()
     val derived = rdfsDerive(tbox, t, resolveEmit(voc, tbox),
       includeTboxClosure = true, corpus.quads)
     (t +: derived).reduce(_.unionAll(_)).distinct()
@@ -612,7 +604,8 @@ object ReasonOps {
     val remat = corpus.remat("rdfsClosure")
     val tboxMsg = "delta contains TBox statements - schema changes require " +
       s"re-materialization ($remat), not incremental maintenance"
-    def tbox() = collectTbox(normTriples(tboxSource), voc.tboxPreds, tboxCap)
+    def tbox() = collectTbox(normTriples(tboxSource),
+      col("p").isin(voc.tboxPreds: _*), tboxCap)()
     val input = normRel(delta, corpus.quads)
     gatedRows(input) { rows0 =>
       termRows(input.schema, rows0).map { rows =>
@@ -857,7 +850,7 @@ object ReasonOps {
           val Seq(xs, xp, xo) = ts.columns.take(3).toSeq
           ts.select(col(xs).as("s"), col(xp).as("p"), col(xo).as("o"))
         }.getOrElse(b.select("s", "p", "o")),
-        voc0.tboxPreds, tboxCap)
+        col("p").isin(voc0.tboxPreds: _*), tboxCap)()
       (tbox, resolveEmit(voc0, tbox))
     }
     // 2. candidate premise slab: remaining base rows sharing a subject
@@ -952,24 +945,27 @@ object ReasonOps {
     val d = normRel(stream, corpus.quads).select(
       Seq(col("s"), guard.as("p"), col("o")) ++
         (if (corpus.quads) Seq(col("g")) else Nil): _*)
-    val tbox = collectTbox(normTriples(tboxSource), voc0.tboxPreds, tboxCap)
+    val tbox = collectTbox(normTriples(tboxSource),
+      col("p").isin(voc0.tboxPreds: _*), tboxCap)()
     val derived = rdfsDerive(tbox, d, resolveEmit(voc0, tbox),
       includeTboxClosure = false, corpus.quads)
     (d +: derived).reduce(_.unionAll(_))
   }
 
   /** Collect + cap the schema statements (driver-sized by contract) —
-    * generic over the term type (string terms or encoded long ids). One
+    * generic over the term type (string terms or encoded long ids): the
+    * first three columns of the rows of `t` matching `cond`, failing with
+    * `overCap` past `tboxCap` of them. One
     * bounded-collect job over every partition ([[Dictionary.collectBounded]]),
     * none for a local relation; a `limit` collect would scan the
     * partitions in up to three growing jobs.
     */
-  private def collectTbox(t: DataFrame, preds: Seq[Any], tboxCap: Int)
+  private def collectTbox(t: DataFrame, cond: Column, tboxCap: Int)(
+      overCap: String = s"TBox exceeds $tboxCap statements - not schema-shaped; " +
+        "raise tboxCap only if the ontology is genuinely this large")
       : Array[(Any, Any, Any)] = {
-    val tbox = Dictionary.collectBounded(t.where(col("p").isin(preds: _*)), tboxCap)
-    require(tbox.isDefined,
-      s"TBox exceeds $tboxCap statements - not schema-shaped; raise tboxCap " +
-        "only if the ontology is genuinely this large")
+    val tbox = Dictionary.collectBounded(t.where(cond), tboxCap)
+    require(tbox.isDefined, overCap)
     tbox.get.map(r => (r.get(0), r.get(1), r.get(2)))
   }
 
@@ -1000,9 +996,9 @@ object ReasonOps {
         .flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct.toSeq
     val ecSym = sym(voc.ec)
     val epSym = sym(voc.ep)
-    val spPairs = transitiveAny(tbox.collect {
+    val spPairs = closeTbox(tbox.collect {
       case (s, p, o) if voc.sp.contains(p) => (s, o) }.toSeq ++ epSym)
-    val scPairs = transitiveAny(tbox.collect {
+    val scPairs = closeTbox(tbox.collect {
       case (s, p, o) if voc.sc.contains(p) => (s, o) }.toSeq ++ ecSym)
     val spMap = spPairs.groupBy(_._1).map { case (k, v) => (k, v.map(_._2)) }
     def effective(decl: Seq[(Any, Any)]): Seq[(Any, Any)] = {
@@ -1017,7 +1013,7 @@ object ReasonOps {
     RdfsMaps(spPairs, scPairs,
       effective(tbox.collect { case (s, p, o) if voc.dom.contains(p) => (s, o) }),
       effective(tbox.collect { case (s, p, o) if voc.rng.contains(p) => (s, o) }),
-      transitiveAny(ecSym), transitiveAny(epSym))
+      closeTbox(ecSym), closeTbox(epSym))
   }
 
   private def pairDfAny(spark: SparkSession, pairs: Seq[(Any, Any)],
@@ -1196,81 +1192,11 @@ object ReasonOps {
   val InverseFunctionalProperty =
     "http://www.w3.org/2002/07/owl#InverseFunctionalProperty"
 
-  /** Count of fixpoint derivations STARTED (one per [[transitiveClosure]]
-    * call) — lets specs assert that a lazily-entailed relation restricted
-    * to non-transitive predicates ([[owlEntailed]]) runs NO fixpoint.
-    */
-  private[graft] val fixpointRuns = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** Round count of the most recent [[transitiveClosure]] convergence —
-    * scale-evidence telemetry (rounds must stay ~flat under 10× data:
-    * they track graph DIAMETER, not row count).
-    */
-  private[graft] val lastFixpointRounds = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Round count of the most recent [[owlRetract]] survivor-frontier
     * convergence (max across the retraction's transitive properties) —
-    * the DRed twin of [[lastFixpointRounds]] for the scale probe. */
+    * the DRed twin of [[GraphOps.lastFixpointRounds]] for the scale
+    * probe. */
   private[graft] val lastFrontierRounds = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** All-pairs transitive closure of an edge relation by iterated
-    * squaring: each round joins the path set with itself, so a graph of
-    * diameter d closes in ceil(log2 d) rounds — the only shape that
-    * survives long chains at scale (linear relaxation pays d rounds).
-    * Output size is the real cost ceiling (reachability can be
-    * quadratic in a component); that is inherent to materialization,
-    * not the algorithm. Self-loops are dropped (irreflexive closure).
-    */
-  def transitiveClosure(edges: DataFrame, maxRounds: Int = 16,
-                        groupCols: Seq[String] = Nil): DataFrame = {
-    fixpointRuns.incrementAndGet()
-    // groupCols partition the closure (e.g. a named-graph column):
-    // chains only extend WITHIN a group — the squaring join adds the
-    // group columns to its key, so per-group reachability never leaks
-    val Seq(c0, c1) = edges.columns.take(2).toSeq
-    val gsel = groupCols.map(col)
-    // LAZY checkpoint + count = ONE job per round (the eager
-    // pin-then-count sequence paid the per-job scheduling floor twice)
-    var paths = graft.Pins.checkpointLazy(
-      edges.select(col(c0).as("a") +: col(c1).as("b") +: gsel: _*)
-        .where(col("a") =!= col("b")).distinct())
-    var n = paths.count()
-    var round = 0
-    var done = n == 0
-    while (!done) {
-      round += 1
-      require(round <= maxRounds,
-        s"transitiveClosure did not converge in $maxRounds doubling rounds")
-      val cond = groupCols.foldLeft(col("x.b") === col("y.a")) {
-        (c, g) => c && (col(s"x.$g") <=> col(s"y.$g"))
-      }
-      val step0 = paths.as("x")
-        .join(paths.as("y"), cond)
-        .select(col("x.a").as("a") +: col("y.b").as("b") +:
-          groupCols.map(g => col(s"x.$g").as(g)): _*)
-        .where(col("a") =!= col("b"))
-      // grouped mode strips the join's constraints before the union:
-      // Spark 4.1's Union constraint rewrite trips over the null-safe
-      // self-join condition's dropped y-side attributes ("key not
-      // found" in UnionBase.rewriteConstraints). localCheckpoint is NOT
-      // enough (LogicalRDD retains origin constraints); an RDD
-      // round-trip produces a constraint-free leaf. Grouped path sets
-      // are the small per-graph relations, so the lost codegen span is
-      // noise.
-      val step =
-        if (groupCols.nonEmpty)
-          edges.sparkSession.createDataFrame(step0.rdd, step0.schema)
-        else step0
-      val next = graft.Pins.checkpointLazy(
-        step.unionByName(paths).distinct())
-      val m = next.count()
-      // next ⊇ paths (union), so equal counts == fixpoint
-      done = m == n
-      paths = next; n = m
-    }
-    lastFixpointRounds.set(round)
-    paths
-  }
 
   /** OWL property-rule materialization (the horn subset RDFS lacks):
     * `owl:inverseOf` (both directions), `owl:SymmetricProperty`,
@@ -1279,9 +1205,11 @@ object ReasonOps {
     * is made symmetric; a property inverse to a symmetric one is
     * itself symmetric-closed through the derived pass; chain axioms'
     * rdf:lists walk on the driver), inverse/symmetric derivation is
-    * one broadcast join, each declared transitive property closes by
-    * iterated squaring over ITS edge set only (after inverse/symmetric
-    * derivation, so inverse edges participate in chains), and property
+    * one broadcast join, each declared transitive property closes
+    * ([[GraphOps.transitiveClosure]]: a driver BFS under the graph size
+    * gate, iterated squaring past it) over ITS edge set only (after
+    * inverse/symmetric derivation, so inverse edges participate in
+    * chains), and property
     * chains iterate with the other rules to fixpoint
     * ([[owlCloseCore]]'s chain loop — a self-chain `p∘p ⊑ p` IS
     * transitivity and stays logarithmic). owl:sameAs is deliberately
@@ -1291,9 +1219,9 @@ object ReasonOps {
     * On a quad corpus the declarations are GLOBAL (`tboxSource`) and
     * the rules CARRY the graph column — inverse/symmetric are
     * single-premise (graph-preserving by construction), and each
-    * transitive property closes PER GRAPH: the squaring join keys on
-    * the graph column, so chains never cross graphs. Encoded terms run
-    * the rules and the squaring entirely on fixed-width ids.
+    * transitive property closes PER GRAPH: the graph column groups the
+    * closure, so chains never cross graphs. Encoded terms run the rules
+    * and the closure entirely on fixed-width ids.
     */
   def owlClosure(data: DataFrame, corpus: Corpus[OwlIds] = Corpus.Triples,
                  tboxSource: Option[DataFrame] = None,
@@ -1336,15 +1264,11 @@ object ReasonOps {
     val chainPreds = chainVoc.declPreds
     val chainCond =
       if (chainPreds.isEmpty) lit(false) else col("p").isin(chainPreds: _*)
-    val tbox = rel
-      .select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-      .where(col("p") === inverseOf ||
+    val tbox = collectTbox(rel.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o")),
+      col("p") === inverseOf ||
         (col("p") === typePred &&
           col("o").isin(symmetricProperty, transitiveProperty)) ||
-        chainCond)
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(tbox.length <= tboxCap,
+        chainCond, tboxCap)(
       s"OWL property declarations exceed $tboxCap — not schema-shaped")
     val inv = tbox.collect { case (a, p, b) if p == inverseOf => (a, b) }
       .flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct.toSeq
@@ -1420,9 +1344,10 @@ object ReasonOps {
     *
     *   - pass 1: inverse/symmetric over the input, so derived edges
     *     join chains;
-    *   - each declared transitive property closes over ITS edge set by
-    *     iterated squaring (PER GRAPH on the quad path: the squaring
-    *     join keys on the graph column, chains never cross graphs);
+    *   - each declared transitive property closes over ITS edge set
+    *     ([[GraphOps.transitiveClosure]], a ≠ b kept; PER GRAPH on the
+    *     quad path: the graph column groups it, chains never cross
+    *     graphs);
     *   - pass 2: inverse/symmetric of the closure-derived edges. This
     *     is the fixpoint for the declared rules:
     *     closure(inverse(S)) = inverse(closure(S)), so a transitive q
@@ -1438,9 +1363,9 @@ object ReasonOps {
     val closed = trans.map { pp =>
       val edges = withInv.where(col("p") === pp)
         .select(Seq(col("s"), col("o")) ++ gsel: _*)
-      transitiveClosure(edges, groupCols = if (hasGraph) Seq("g") else Nil)
-        .select(Seq(col("a").as("s"), lit(pp).as("p"),
-          col("b").as("o")) ++ gsel: _*)
+      GraphOps.transitiveClosure(edges, if (hasGraph) Seq("g") else Nil, maxRounds = 16)
+        .where(col("s") =!= col("o"))
+        .select(Seq(col("s"), lit(pp).as("p"), col("o")) ++ gsel: _*)
     }
     val pass2 = closed.flatMap(c => owlInvSym(c, inv, sym, hasGraph))
     (Seq(withInv) ++ closed ++ pass2).reduce(_.unionAll(_)).distinct()
@@ -1513,8 +1438,8 @@ object ReasonOps {
     * iterates derive-chains → re-close until the row count converges.
     * Each round re-squares ONLY the [[chainFeedable]] transitive slices
     * (the others are untouched and already closed — re-running their
-    * [[transitiveClosure]] from a closed set would converge in one
-    * round but still pay the slice self-join). Materialization-shaped
+    * [[GraphOps.transitiveClosure]] from a closed set would converge in
+    * one round but still pay the slice self-join). Materialization-shaped
     * on purpose: round-1 chain conclusions are output-sized, so the
     * loop shuffles (distinct) rather than broadcasting — the O(Δ)
     * broadcast discipline belongs to [[owlDeltaCore]]'s seminaive twin.
@@ -1806,8 +1731,8 @@ object ReasonOps {
       (d0 +: owlInvSym(d0, inv, sym, hasGraph)).reduce(_.unionAll(_))
         .distinct(),
       deltaCap, "owlDelta inverse/symmetric pass", remat)
-    // per transitive property: bridge set B = D ∪ (E ⋈ D), close B by
-    // squaring (|Δ|-sized, per graph when hasGraph), then one existing
+    // per transitive property: bridge set B = D ∪ (E ⋈ D), close B
+    // (|Δ|-sized, per graph when hasGraph), then one existing
     // suffix — E only streams against broadcast probes
     val newClosed = trans.map { pp =>
       val dEdges = pinCapped(
@@ -1825,8 +1750,8 @@ object ReasonOps {
             .select(Seq(col("a"), col("__d_b").as("b")) ++ gsel: _*))
         .where(col("a") =!= col("b")).distinct()
       val bPlus = pinCapped(
-        transitiveClosure(bridge,
-          groupCols = if (hasGraph) Seq("g") else Nil),
+        GraphOps.transitiveClosure(bridge, if (hasGraph) Seq("g") else Nil, maxRounds = 16)
+          .where(col("a") =!= col("b")),
         deltaCap, "owlDelta closed bridge set", remat)
       val bProbe = bPlus.toDF(
         Seq("__b_a", "__b_b") ++ (if (hasGraph) Seq("__b_g") else Nil): _*)
@@ -2345,11 +2270,8 @@ object ReasonOps {
     val allPreds =
       (voc.declPreds ++ voc.int ++ voc.uni ++ voc.oneOf ++
         voc.first ++ voc.rest).distinct
-    val rows = rel.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o"))
-      .where(col("p").isin(allPreds: _*))
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(rows.length <= tboxCap,
+    val rows = collectTbox(rel.select(col(cs).as("s"), col(cp).as("p"), col(co).as("o")),
+      col("p").isin(allPreds: _*), tboxCap)(
       s"OWL restriction declarations exceed $tboxCap — not schema-shaped")
     val on = rows.filter(r => voc.on(r._2)).groupBy(_._1)
     def mk(kindSet: Set[Any], kind: Int): Seq[Restriction] =
@@ -2563,8 +2485,8 @@ object ReasonOps {
     val schema = collectRlSchema(tboxSource.getOrElse(rel), voc, tboxCap)
     val rdfs = corpus.map(_.rdfs)
     val voc0 = rdfsVoc(rdfs)
-    val tbox = collectTbox(schemaRel(rel, tboxSource), voc0.tboxPreds,
-      tboxCap)
+    val tbox = collectTbox(schemaRel(rel, tboxSource),
+      col("p").isin(voc0.tboxPreds: _*), tboxCap)()
     RlSetup(rel, voc, schema, rdfs, tbox, resolveEmit(voc0, tbox))
   }
 
@@ -3461,7 +3383,7 @@ object ReasonOps {
       (voc.maxc ++ voc.maxqc ++ voc.onp ++ voc.onc).toSeq
     if ((voc.maxc ++ voc.maxqc).isEmpty)
       return t.select(col("s").as("a"), col("o").as("b")).limit(0)
-    val decls = collectTbox(t, declPreds, tboxCap)
+    val decls = collectTbox(t, col("p").isin(declPreds: _*), tboxCap)()
     val (maxc, maxqc) = cardRestrOf(decls, voc)
     val legs = cardStarLegs(t,
       t.where(col("p").isin(voc.ty.toSeq: _*)), maxc, maxqc)
@@ -3508,7 +3430,7 @@ object ReasonOps {
       : (Seq[(Any, Any, Int)], Seq[(Any, Any, Any, Int)]) = {
     if ((voc.maxc ++ voc.maxqc).isEmpty) return (Nil, Nil)
     val preds = (voc.maxc ++ voc.maxqc ++ voc.onp ++ voc.onc).toSeq
-    cardRestrOf(collectTbox(t, preds, tboxCap), voc.cardView)
+    cardRestrOf(collectTbox(t, col("p").isin(preds: _*), tboxCap)(), voc.cardView)
   }
 
   /** INCREMENTAL consistency checking — the O(Δ) twin of
@@ -3578,14 +3500,10 @@ object ReasonOps {
       "batch contains consistency-vocabulary declarations - schema " +
         "changes require a full consistencyReport, not incremental " +
         "validation")
-    val decls = declSource
+    val decls = collectTbox(declSource
       .select(col(declSource.columns.head).as("s"),
         col(declSource.columns(1)).as("p"),
-        col(declSource.columns(2)).as("o"))
-      .where(declCondOf(schemaPreds))
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(decls.length <= tboxCap,
+        col(declSource.columns(2)).as("o")), declCondOf(schemaPreds), tboxCap)(
       s"consistency declarations exceed $tboxCap — not schema-shaped")
     val dwPairs = decls.collect {
       case (a, p, b) if voc.dw(p) => ("cax-dw", a, b) }.distinct.toSeq
@@ -3924,14 +3842,10 @@ object ReasonOps {
       "retraction batch deletes consistency-vocabulary declarations - " +
         "schema changes require a full consistencyReport, not " +
         "incremental maintenance")
-    val decls = declSource
+    val decls = collectTbox(declSource
       .select(col(declSource.columns.head).as("s"),
         col(declSource.columns(1)).as("p"),
-        col(declSource.columns(2)).as("o"))
-      .where(declCond)
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(decls.length <= tboxCap,
+        col(declSource.columns(2)).as("o")), declCond, tboxCap)(
       s"consistency declarations exceed $tboxCap — not schema-shaped")
     val dwPairs = decls.collect {
       case (a, p, b) if voc.dw(p) => ("cax-dw", a, b) }.distinct.toSeq
@@ -4184,12 +4098,9 @@ object ReasonOps {
     val charCond =
       if (charObjs.isEmpty) lit(false)
       else col("p").isin(voc.ty.toSeq: _*) && col("o").isin(charObjs: _*)
-    val decls = declSource
-      .select(col(ds).as("s"), col(dp).as("p"), col(dob).as("o"))
-      .where(declCond || charCond)
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(decls.length <= tboxCap,
+    val decls = collectTbox(
+      declSource.select(col(ds).as("s"), col(dp).as("p"), col(dob).as("o")),
+      declCond || charCond, tboxCap)(
       s"consistency declarations exceed $tboxCap — not schema-shaped")
     // cax-dw keeps the DECLARED orientation only — the report row
     // names both classes, so the mirrored leg would just duplicate it;
@@ -4928,10 +4839,7 @@ object ReasonOps {
       : Seq[(Any, Seq[Any])] = {
     val preds = (voc.hk ++ voc.first ++ voc.rest).toSeq
     if (voc.hk.isEmpty) return Nil
-    val rows = t.where(col("p").isin(preds: _*))
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(rows.length <= tboxCap,
+    val rows = collectTbox(t, col("p").isin(preds: _*), tboxCap)(
       s"owl:hasKey declarations exceed $tboxCap - not schema-shaped")
     walkRdfLists(rows, voc.hk, voc.first, voc.rest, voc.nil,
       "owl:hasKey")
@@ -5147,16 +5055,11 @@ object ReasonOps {
       : (Seq[Any], Seq[Any]) = {
     val charObjs = (voc.fp ++ voc.ifp).toSeq
     if (charObjs.isEmpty) return (Nil, Nil)
-    val declRows = t.where(col("p").isin(voc.ty: _*) &&
-        col("o").isin(charObjs: _*))
-      .limit(tboxCap + 1).collect()
-    require(declRows.length <= tboxCap,
+    val declRows = collectTbox(t,
+      col("p").isin(voc.ty: _*) && col("o").isin(charObjs: _*), tboxCap)(
       s"functional-property declarations exceed $tboxCap - not schema-shaped")
-    (declRows.collect {
-        case r if voc.fp(r.get(2)) => r.get(0) }.distinct.toSeq,
-      declRows.collect {
-        case r if voc.ifp(r.get(2)) => r.get(0)
-      }.distinct.toSeq)
+    (declRows.collect { case (s, _, o) if voc.fp(o) => s }.distinct.toSeq,
+      declRows.collect { case (s, _, o) if voc.ifp(o) => s }.distinct.toSeq)
   }
 
   /** ALL the ER vocabulary's declarations in ONE collect job — the
@@ -5180,10 +5083,7 @@ object ReasonOps {
         Some(col("p").isin(cardPreds: _*))
       else None).flatten
     if (conds.isEmpty) return (Nil, Nil, Nil, Nil, Nil)
-    val rows = t.where(conds.reduce(_ || _))
-      .limit(tboxCap + 1).collect()
-      .map(r => (r.get(0), r.get(1), r.get(2)))
-    require(rows.length <= tboxCap,
+    val rows = collectTbox(t, conds.reduce(_ || _), tboxCap)(
       s"ER declarations exceed $tboxCap - not schema-shaped")
     val tyP = voc.ty.toSet
     val fps = rows.collect {
@@ -6051,8 +5951,8 @@ object ReasonOps {
   * triples into a MAINTAINED (rewritten corpus, member → canonical
   * mapping) pair — built by [[ReasonOps.erMaintainStream]]. The same
   * reader-safety and restart contracts as [[ClosureMaintainer]]
-  * (frames retire `retireDepth` generations late per
-  * `spark.graft.stream.retireDepth`; recover by persisting both frames
+  * (frames retire one generation late, [[MaintainedState]]; recover by
+  * persisting both frames
   * and re-attaching with a `checkpointLocation` — [[ReasonOps.functionalDelta]]
   * updates are idempotent on a state that already holds a batch).
   *
@@ -6076,23 +5976,20 @@ final class ErMaintainer private[ops] (
                 org.apache.spark.sql.DataFrame)
       => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) {
   import org.apache.spark.sql.DataFrame
-  @volatile private var stateV: (DataFrame, DataFrame) =
-    (rw0.localCheckpoint(true), mp0.localCheckpoint(true))
-  private val retireDepth: Int = math.max(1,
-    rw0.sparkSession.conf
-      .get("spark.graft.stream.retireDepth", "1").toInt)
-  private val retiring =
-    scala.collection.mutable.Queue[(DataFrame, DataFrame)]()
+  private val state = new MaintainedState(Seq(rw0, mp0))
 
   /** The latest maintained (rewritten corpus, mapping) pair (pinned;
-    * valid at least until `retireDepth + 1` batch commits). */
-  def current: (DataFrame, DataFrame) = stateV
+    * valid at least until two batch commits later). */
+  def current: (DataFrame, DataFrame) = { val Seq(rw, mp) = state.frames; (rw, mp) }
+
+  private def commit(next: (DataFrame, DataFrame)): Unit =
+    state.commit(Seq(next._1, next._2))
 
   /** Fold one batch of new triples into the state (synchronized — the
     * streaming engine serializes foreachBatch calls, but direct
     * callers may race). */
   def update(batch: DataFrame): Unit = synchronized {
-    if (!batch.isEmpty) commit(deltaFn(stateV._1, stateV._2, batch))
+    if (!batch.isEmpty) { val (rw, mp) = current; commit(deltaFn(rw, mp, batch)) }
   }
 
   /** Retract a batch of SOURCE rows through
@@ -6130,36 +6027,18 @@ final class ErMaintainer private[ops] (
             "corpus - `original` must equal base + every folded " +
             "batch (a stale or divergent original silently corrupts " +
             "the maintained state)")
-        commit(retractFn(original, deletions, stateV._1, stateV._2))
+        val (rw, mp) = current
+        commit(retractFn(original, deletions, rw, mp))
       }
     }
-
-  private def commit(next: (DataFrame, DataFrame)): Unit = {
-    val prev = stateV
-    // constraint-stripping RDD round-trip before the pins — the same
-    // Spark 4.1 localCheckpoint/Union constraint-rewrite hazard as
-    // ClosureMaintainer.update
-    def pin(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-        .localCheckpoint(true)
-    stateV = (pin(next._1), pin(next._2))
-    retiring.enqueue(prev)
-    while (retiring.size > retireDepth) {
-      val (r, m) = retiring.dequeue()
-      graft.Pins.unpin(r); graft.Pins.unpin(m)
-    }
-  }
 
   /** Attach to a streaming triple relation: one [[update]] per
     * micro-batch (pass `checkpointLocation` on restart-surviving
     * streams, the [[ClosureMaintainer.attach]] contract). */
   def attach(stream: org.apache.spark.sql.DataFrame,
              checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => update(b))
-    checkpointLocation.fold(w)(w.option("checkpointLocation", _)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    MaintainedState.attach(stream, checkpointLocation)(update)
 }
 
 /** Streaming consistency state: maintains a (corpus, violation report)
@@ -6177,9 +6056,9 @@ final class ErMaintainer private[ops] (
   * tombstone batch on the insert stream would be silently wrong.
   * Declarations arriving in any batch fail fast (schema change →
   * re-run [[ReasonOps.consistencyReport]]). Same reader-safety /
-  * restart contracts as [[ClosureMaintainer]] (retirement
-  * `spark.graft.stream.retireDepth` generations late; recover by
-  * persisting both frames and re-attaching with a
+  * restart contracts as [[ClosureMaintainer]] (retirement one
+  * generation late; recover by persisting both frames and
+  * re-attaching with a
   * `checkpointLocation` — replayed batches are no-ops through the
   * novelty compositions).
   */
@@ -6193,44 +6072,25 @@ final class ConsistencyMaintainer private[ops] (
                 org.apache.spark.sql.DataFrame)
       => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) {
   import org.apache.spark.sql.DataFrame
-  @volatile private var stateV: (DataFrame, DataFrame) =
-    (corpus0.localCheckpoint(true), report0.localCheckpoint(true))
-  private val retireDepth: Int = math.max(1,
-    corpus0.sparkSession.conf
-      .get("spark.graft.stream.retireDepth", "1").toInt)
-  private val retiring =
-    scala.collection.mutable.Queue[(DataFrame, DataFrame)]()
+  private val state = new MaintainedState(Seq(corpus0, report0))
 
   /** The latest maintained (corpus, report) pair (pinned; valid at
-    * least until `retireDepth + 1` batch commits). */
-  def current: (DataFrame, DataFrame) = stateV
+    * least until two batch commits later). */
+  def current: (DataFrame, DataFrame) = { val Seq(c, r) = state.frames; (c, r) }
 
   /** The latest maintained violation report. */
-  def currentReport: DataFrame = stateV._2
+  def currentReport: DataFrame = current._2
 
-  private def commit(next: (DataFrame, DataFrame),
-                     prev: (DataFrame, DataFrame)): Unit = {
-    // constraint-stripping RDD round-trip before the pins — the same
-    // Spark 4.1 localCheckpoint/Union constraint-rewrite hazard as
-    // ClosureMaintainer.update
-    def pin(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-        .localCheckpoint(true)
-    stateV = (pin(next._1), pin(next._2))
-    retiring.enqueue(prev)
-    while (retiring.size > retireDepth) {
-      val (c, r) = retiring.dequeue()
-      graft.Pins.unpin(c); graft.Pins.unpin(r)
-    }
-  }
+  private def commit(next: (DataFrame, DataFrame)): Unit =
+    state.commit(Seq(next._1, next._2))
 
   /** Validate and fold one batch of new rows into the state
     * (synchronized — the streaming engine serializes foreachBatch
     * calls, but direct callers may race). */
   def update(batch: DataFrame): Unit = synchronized {
     if (!batch.isEmpty) {
-      val prev = stateV
-      commit(foldFn(prev._1, prev._2, batch), prev)
+      val (c, r) = current
+      commit(foldFn(c, r, batch))
     }
   }
 
@@ -6240,8 +6100,8 @@ final class ConsistencyMaintainer private[ops] (
     * operator decision, not the append stream. */
   def retract(deletions: DataFrame): Unit = synchronized {
     if (!deletions.isEmpty) {
-      val prev = stateV
-      commit(retractFn(prev._1, prev._2, deletions), prev)
+      val (c, r) = current
+      commit(retractFn(c, r, deletions))
     }
   }
 
@@ -6250,11 +6110,8 @@ final class ConsistencyMaintainer private[ops] (
     * [[ClosureMaintainer.attach]] contract). */
   def attach(stream: org.apache.spark.sql.DataFrame,
              checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => update(b))
-    checkpointLocation.fold(w)(w.option("checkpointLocation", _)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    MaintainedState.attach(stream, checkpointLocation)(update)
 }
 
 /** Streaming closure state: folds micro-batches of new edges into a
@@ -6267,15 +6124,13 @@ final class ConsistencyMaintainer private[ops] (
   * fail-fasts — applies unchanged, and batches compose exactly: after
   * batches b1..bn, `current == closure(base ∪ b1 ∪ … ∪ bn)`.
   *
-  * State storage and reader safety: a frame returned by [[current]]
-  * stays VALID until `retireDepth + 1` subsequent batch commits — each
-  * update retires superseded closures `retireDepth` GENERATIONS late
-  * (default 1: the superseded frame is released only when the next
-  * update supersedes its successor), so a reader that grabbed `current`
-  * and is still executing while one batch lands never has its
-  * checkpoint blocks unpersisted under it. Readers racing FASTER
-  * commits raise `spark.graft.stream.retireDepth` (read at
-  * construction) — storage is bounded at `retireDepth + 1` closure
+  * State storage and reader safety ([[MaintainedState]]): a frame
+  * returned by [[current]] stays VALID until two subsequent batch
+  * commits — each update retires superseded closures one GENERATION
+  * late (the superseded frame is released only when the next update
+  * supersedes its successor), so a reader that grabbed `current` and is
+  * still executing while one batch lands never has its checkpoint
+  * blocks unpersisted under it. Storage is bounded at two closure
   * frames plus the in-flight batch's Δ-sized intermediates (those
   * release via ContextCleaner after a driver GC — on a long-running
   * stream keep `spark.cleaner.periodicGC.interval` modest). Readers
@@ -6300,41 +6155,25 @@ final class ClosureMaintainer private[ops] (
     deltaCap: Option[Long] = None) {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions.col
-  @volatile private var closureV: DataFrame = initial.localCheckpoint(true)
-  // retirement queue, bounded at retireDepth frames (see class doc)
-  private val retireDepth: Int = math.max(1,
-    initial.sparkSession.conf
-      .get("spark.graft.stream.retireDepth", "1").toInt)
-  private val retiring = scala.collection.mutable.Queue[DataFrame]()
+  private val state = new MaintainedState(Seq(initial))
 
-  /** The latest maintained closure (pinned; valid at least until
-    * `retireDepth + 1` batch commits after this call). */
-  def current: DataFrame = closureV
+  /** The latest maintained closure (pinned; valid at least until two
+    * batch commits after this call). */
+  def current: DataFrame = state.frames.head
 
   /** Fold one batch of new edges into the closure (synchronized — the
     * streaming engine serializes foreachBatch calls, but direct callers
     * may race). */
   def update(batch: DataFrame): Unit = synchronized {
     if (!batch.isEmpty) {
-      val prev = closureV
+      val prev = current
       val inc = deltaFn(prev, batch)
       // the composition honors the SAME cap the delta ran under;
       // pinHits=false: the union below materializes ONCE into the new
       // pinned state, so the existence scan runs inside that job
       val fresh = ReasonOps.incrementNovel(prev, inc, deltaCap,
         pinHits = false)
-      val u = prev.unionAll(fresh.select(prev.columns.map(col): _*))
-      // constraint-stripping RDD round-trip before the pin: the same
-      // Spark 4.1 localCheckpoint/Union constraint-rewrite hazard as
-      // ReasonOps.incrementNovelRaw
-      closureV = u.sparkSession.createDataFrame(u.rdd, u.schema)
-        .localCheckpoint(true)
-      // retire `retireDepth` generations late: `prev` may still back a
-      // reader's in-flight `current` query; a frame leaving the queue
-      // had `retireDepth` full batch intervals for its readers to
-      // finish, per the documented contract
-      retiring.enqueue(prev)
-      while (retiring.size > retireDepth) graft.Pins.unpin(retiring.dequeue())
+      state.commit(Seq(prev.unionAll(fresh.select(prev.columns.map(col): _*))))
     }
   }
 
@@ -6346,9 +6185,48 @@ final class ClosureMaintainer private[ops] (
     * replays exactly the uncommitted tail.
     */
   def attach(stream: DataFrame, checkpointLocation: Option[String] = None)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    MaintainedState.attach(stream, checkpointLocation)(update)
+}
+
+/** The state discipline the streaming maintainers ([[ClosureMaintainer]],
+  * [[ErMaintainer]], [[ConsistencyMaintainer]]) share. The maintained
+  * frames are pinned; a commit pins the next generation and retires the
+  * superseded one a GENERATION late: `prev` may still back a reader's
+  * in-flight query, so it is released only when the next commit
+  * supersedes its successor, and a frame read from [[frames]] stays
+  * valid until two commits later.
+  */
+private[ops] final class MaintainedState(initial: Seq[org.apache.spark.sql.DataFrame]) {
+  import org.apache.spark.sql.DataFrame
+  @volatile private var framesV: Seq[DataFrame] = initial.map(_.localCheckpoint(true))
+  private var retiring: Seq[DataFrame] = Nil
+
+  /** The latest maintained frames. */
+  def frames: Seq[DataFrame] = framesV
+
+  /** Pin `next` as the new generation and retire the one before the
+    * superseded generation. */
+  def commit(next: Seq[DataFrame]): Unit = synchronized {
+    val prev = framesV
+    // constraint-stripping RDD round-trip before the pins: Spark 4.1's
+    // localCheckpoint/Union constraint-rewrite hazard (as in
+    // ReasonOps.incrementNovelRaw)
+    framesV = next.map(df =>
+      df.sparkSession.createDataFrame(df.rdd, df.schema).localCheckpoint(true))
+    retiring.foreach(graft.Pins.unpin)
+    retiring = prev
+  }
+}
+
+private[ops] object MaintainedState {
+  /** One `update` per micro-batch of `stream` (pass `checkpointLocation`
+    * on a stream that must survive a driver restart). */
+  def attach(stream: org.apache.spark.sql.DataFrame, checkpointLocation: Option[String])(
+      update: org.apache.spark.sql.DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val w = stream.writeStream.outputMode("append")
-      .foreachBatch((b: DataFrame, _: Long) => update(b))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => update(b))
     checkpointLocation.fold(w)(w.option("checkpointLocation", _)).start()
   }
 }

@@ -1,6 +1,7 @@
 package graft.sparql
 
 import graft.bgp.{Bgp, C, PredStats, Term, TriplePattern, V}
+import graft.ops.GraphOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.language.implicitConversions
@@ -3624,17 +3625,20 @@ object Sparql {
           // a closure with a BOUND endpoint expands a per-graph frontier
           // from the constant — cost proportional to the reachable set
           // in each graph, never the global closure (the quad analog of
-          // pathRelSeeded's discipline)
+          // pathRelSeeded's discipline); zero-length adds (c, c, g) for
+          // every graph that mentions c (§9.3), as self-loop edges at c
+          // (they reach nothing new)
+          def closureFrom(step: DataFrame, c: Any, zero: Boolean): DataFrame =
+            GraphOps.reachableFrom(
+              if (zero) step.unionAll(quadIdentityRel(quads).where(col("s") === lit(c)))
+              else step,
+              env.spark.range(1).select(lit(c).as("n")), Seq("g"))
+          def swap(df: DataFrame) = df.select(col("o").as("s"), col("s").as("o"), col("g"))
           var rel = (sT, oT, pth) match {
             case (C(v), _, PClosure(x, z)) =>
-              quadClosureSeeded(quads, quadPathRel(env, quads, x),
-                env.cval(v), z)
+              closureFrom(quadPathRel(env, quads, x), env.cval(v), z)
             case (_, C(v), PClosure(x, z)) =>
-              quadClosureSeeded(quads,
-                  quadPathRel(env, quads, x)
-                    .select(col("o").as("s"), col("s").as("o"), col("g")),
-                  env.cval(v), z)
-                .select(col("o").as("s"), col("s").as("o"), col("g"))
+              swap(closureFrom(swap(quadPathRel(env, quads, x)), env.cval(v), z))
             case _ => quadPathRel(env, quads, pth)
           }
           sT match { case C(v) => rel = rel.where(col("s") === lit(env.cval(v))); case _ => }
@@ -4369,11 +4373,12 @@ object Sparql {
     withExtra.distinct().select(col("n").as("s"), col("n").as("o"))
   }
 
-  /** Non-closure path over a QUAD relation → (s, o, g): the per-graph
-    * path algebra for `GRAPH ?var` blocks. Sequences join on (mid, g) so
-    * a multi-hop path never crosses graphs; alternation unions (bag
-    * semantics, like `pathRel`); inverse swaps endpoints within the
-    * graph. Closures reject — they would need a per-graph fixpoint.
+  /** Path over a QUAD relation → (s, o, g): the per-graph path algebra
+    * for `GRAPH ?var` blocks. Sequences join on (mid, g) so a multi-hop
+    * path never crosses graphs; alternation unions (bag semantics, like
+    * `pathRel`); inverse swaps endpoints within the graph; closures run
+    * [[GraphOps.transitiveClosure]] grouped by g (the driver BFS under
+    * the graph size gate, iterated squaring past it).
     */
   private def quadPathRel(env: Env, quads: DataFrame, p: Path): DataFrame = p match {
     case PEdge(e) =>
@@ -4402,80 +4407,15 @@ object Sparql {
     case PAlt(l, r) =>
       quadPathRel(env, quads, l).unionAll(quadPathRel(env, quads, r))
     case PClosure(x, includeZero) =>
-      // ONE doubling fixpoint with g in the join key closes EVERY
-      // graph's relation simultaneously — no per-graph enumeration, no
-      // per-graph driver loops; a graph only pays for its own reachable
-      // pairs. Zero-length matches all terms OF THAT graph (§9.3).
-      val c = quadEdgesClosure(quadPathRel(env, quads, x))
+      // ONE closure grouped by g closes EVERY graph's relation at once —
+      // no per-graph enumeration; a graph only pays for its own
+      // reachable pairs. Zero-length matches all terms OF THAT graph
+      // (§9.3).
+      val c = GraphOps.transitiveClosure(quadPathRel(env, quads, x), Seq("g"),
+        maxRounds = 60)
       if (includeZero) c.unionAll(quadIdentityRel(quads)).distinct() else c
     case POpt(x) =>
       quadPathRel(env, quads, x).unionAll(quadIdentityRel(quads)).distinct()
-  }
-
-  /** Transitive closure of an (s, o, g) relation: the `edgesClosure`
-    * doubling loop with the graph column riding in the join key, so
-    * edges never compose across graphs.
-    */
-  private def quadEdgesClosure(edgesRaw: DataFrame): DataFrame = {
-    val edges = edgesRaw.distinct().localCheckpoint(true)
-    var closure = edges
-    var size = closure.count()
-    var prev = -1L
-    var iter = 0
-    while (size != prev) {
-      if (iter >= 60)
-        throw new IllegalStateException(
-          s"per-graph transitive closure did not converge after $iter rounds")
-      prev = size
-      val next = closure.as("l").join(closure.as("r"),
-          col("l.o") === col("r.s") && col("l.g") === col("r.g"))
-        .select(col("l.s").as("s"), col("r.o").as("o"), col("l.g").as("g"))
-      val grown = closure.unionByName(next).distinct().localCheckpoint(true)
-      size = grown.count()
-      if (closure ne edges) graft.Pins.unpin(closure)
-      closure = grown
-      iter += 1
-    }
-    if (closure ne edges) graft.Pins.unpin(edges)
-    closure
-  }
-
-  /** Per-graph closure seeded at one constant start node: linear
-    * frontier BFS joining the step relation on (node, graph), so each
-    * graph pays only for ITS reachable set. Returns (s=const, o, g)
-    * rows; zero-length (when included) adds (const, const, g) for every
-    * graph that mentions the constant (§9.3).
-    */
-  private def quadClosureSeeded(quads: DataFrame, step: DataFrame,
-                                const: Any, includeZero: Boolean): DataFrame = {
-    val pins = new graft.Pins
-    val rel = pins.pin(step)
-    var frontier = pins.pin(
-      rel.where(col("s") === lit(const)).select(col("o"), col("g")).distinct())
-    var reached = frontier
-    var grew = true
-    var iter = 0
-    while (grew) {
-      if (iter >= 60)
-        throw new IllegalStateException(
-          s"seeded per-graph closure did not converge after $iter rounds")
-      val next = pins.pin(
-        rel.join(frontier.select(col("o").as("s"), col("g")), Seq("s", "g"))
-          .select(col("o"), col("g")).distinct()
-          .join(reached, Seq("o", "g"), "left_anti"))
-      if (next.isEmpty) grew = false
-      else {
-        reached = pins.pin(reached.unionByName(next))
-        frontier = next
-      }
-      iter += 1
-    }
-    val base = reached.select(lit(const).as("s"), col("o"), col("g"))
-    val out =
-      if (!includeZero) base
-      else base.unionByName(
-        quadIdentityRel(quads).where(col("s") === lit(const))).distinct()
-    pins.seal(out)
   }
 
   /** Per-graph zero-length relation: (n, n, g) for every term mentioned
@@ -4530,7 +4470,7 @@ object Sparql {
             pathRel(env, l, extra).unionAll(pathRel(env, r, extra))
         }
       case PClosure(x, includeZero) =>
-        val c = edgesClosure(pathRel(env, x, extra))
+        val c = GraphOps.transitiveClosure(pathRel(env, x, extra), maxRounds = 60)
         if (includeZero) c.unionAll(identityRel(env, extra)).distinct() else c
       case POpt(x) =>
         pathRel(env, x, extra).unionAll(identityRel(env, extra)).distinct()
@@ -4554,10 +4494,10 @@ object Sparql {
   /** Path evaluation seeded by a start-node set (single column `n`):
     * returns the path's (s, o) pairs whose s is in the seed set, WITHOUT
     * materializing the global path relation. The payoff is in closures:
-    * `<c> p+ ?x` expands a frontier from c — each round semi-joins the
-    * edge relation against the (small) frontier, so total cost is
-    * proportional to the REACHABLE set, not to the predicate's full
-    * transitive closure. This mirrors the reference's adaptive
+    * `<c> p+ ?x` expands a frontier from c ([[GraphOps.reachableFrom]]:
+    * each round probes the edge relation with the (small) frontier), so
+    * total cost is proportional to the REACHABLE set, not to the
+    * predicate's full transitive closure. This mirrors the reference's adaptive
     * cheapest-first expansion, which naturally explores from the bound
     * side (`core/src/main/scala/com/graphula/Graphula.scala:120-190,220-224`).
     */
@@ -4591,159 +4531,17 @@ object Sparql {
         .unionAll(seeds.select(col("n").as("s"), col("n").as("o")))
         .distinct()
     case PClosure(x, includeZero) =>
-      // frontier expansion: edges materialized ONCE (linear in the inner
-      // path's relation — never a closure-with-itself self-join), then the
-      // frontier expands from the seeds. Small frontiers expand
-      // DRIVER-SIDE with IN-list-pushed probe scans (the analog of the
-      // reference's per-candidate index probes, `Graphula.scala:220-253`);
-      // if the reach outgrows the driver bounds, fall back to the
-      // distributed broadcast-frontier loop.
-      // driver BFS probes the LAZY edge plan (bound-position filters stay
-      // pushed into the scan each round); only the distributed fallback
-      // pays the one-time edge materialization
+      // frontier expansion from the seeds over the LAZY inner relation
+      // (GraphOps.reachableFrom: a driver BFS probing it once per round
+      // while the reach is small, the broadcast frontier past that).
+      // Zero-length matches pair each seed with itself, even when absent
+      // from the graph (§9.3, as ARQ does): a self-loop edge at every
+      // seed adds exactly those pairs and reaches nothing new
       val edges = pathRel(env, x, extra)
-      seededClosureDriver(edges, seeds, includeZero)
-        .getOrElse(seededClosureDistributed(edges, seeds, includeZero))
-  }
-
-  /** Driver-side BFS over a (bounded) seed set: per round, one job scans
-    * the materialized edge relation with an `isin(frontier)` predicate and
-    * collects the step pairs; per-origin reachability is tracked in BitSets
-    * (<= 64 origins). Returns None — falling back to the distributed loop —
-    * if the frontier or a step exceeds the driver bounds. This is the
-    * adaptive piece: a bound-endpoint closure almost always touches a tiny
-    * reachable set, and 1 job/round beats 3 checkpoint jobs/round.
-    */
-  private def seededClosureDriver(edges: DataFrame, seeds: DataFrame,
-                                  includeZero: Boolean): Option[DataFrame] = {
-    val spark = edges.sparkSession
-    val seedRows = graft.dict.Dictionary.collectBounded(seeds.distinct(), 64) match {
-      case Some(rows) => rows
-      case None => return None
-    }
-    val origins: Array[Any] = seedRows.map(_.get(0))
-    val originIdx = origins.zipWithIndex.toMap
-    import scala.collection.mutable
-    val reached = mutable.Map.empty[Any, mutable.BitSet]   // node -> origins (length>=1)
-    val expanded = mutable.Map.empty[Any, mutable.BitSet]  // node -> origins already expanded from it
-    var frontier: mutable.Map[Any, mutable.BitSet] =
-      mutable.Map(origins.toIndexedSeq.map(o => o -> mutable.BitSet(originIdx(o))): _*)
-    origins.foreach(o => expanded(o) = mutable.BitSet(originIdx(o)))
-    var rounds = 0
-    // CUMULATIVE driver-row budget across all rounds (not per round): the
-    // frontier only ever holds newly-expanded nodes, so the sum of step
-    // collects is bounded by the reachable subgraph's edges — a hostile
-    // graph therefore pays at most ~100k collected rows TOTAL before the
-    // distributed fallback takes over, instead of 100k × rounds
-    var budget = 100000
-    while (frontier.nonEmpty) {
-      if (rounds >= 500 || frontier.size > 1024) return None
-      val nodes = frontier.keys.toSeq
-      val step = graft.dict.Dictionary.collectBounded(
-        edges.where(col("s").isin(nodes: _*)).select(col("s"), col("o")).distinct(),
-        budget) match {
-        case Some(rows) => rows
-        case None => return None
-      }
-      budget -= step.length
-      val next = mutable.Map.empty[Any, mutable.BitSet]
-      step.foreach { r =>
-        val (s, o) = (r.get(0), r.get(1))
-        val bits = frontier(s)
-        reached.getOrElseUpdate(o, mutable.BitSet.empty) |= bits
-        val fresh = bits &~ expanded.getOrElseUpdate(o, mutable.BitSet.empty)
-        if (fresh.nonEmpty) {
-          expanded(o) |= fresh
-          next.getOrElseUpdate(o, mutable.BitSet.empty) |= fresh
-        }
-      }
-      frontier = next
-      rounds += 1
-    }
-    val pairs = reached.toSeq.flatMap { case (node, bits) =>
-      bits.toSeq.map(i => (origins(i), node))
-    } ++ (if (includeZero) origins.map(o => (o, o)).toSeq else Seq.empty)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      edges.schema("s"), edges.schema("o")))
-    Some(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        pairs.distinct.map(p => org.apache.spark.sql.Row(p._1, p._2)), 1),
-      schema))
-  }
-
-  /** Distributed frontier expansion (the scale fallback): each round
-    * hash-joins the materialized edges against the BROADCAST frontier. The
-    * broadcast is sound because the frontier is bounded by the reachable
-    * set — the premise of taking the seeded path at all; a checkpointed
-    * frontier has no catalog stats, so without the hint every round would
-    * re-shuffle the whole edge relation.
-    */
-  private def seededClosureDistributed(edgesRaw: DataFrame, seeds: DataFrame,
-                                       includeZero: Boolean): DataFrame = {
-    val pins = new graft.Pins
-    val edges = pins.pin(edgesRaw)
-    val zero = pins.pin(seeds.distinct()
-      .select(col("n").as("s"), col("n").as("o")))
-    var frontier = zero          // (origin, current-node) pairs to expand
-    var expanded = zero          // per-origin nodes already expanded
-    var result = pins.pin(zero.limit(0))
-    var rounds = 0
-    var done = false
-    while (!done) {
-      if (rounds >= 10000)
-        throw new IllegalStateException(
-          s"seeded closure frontier did not converge after $rounds rounds")
-      val step = pins.pin(broadcast(frontier.withColumnRenamed("o", "__c"))
-        .join(edges.withColumnRenamed("s", "__c"), "__c")
-        .select(col("s"), col("o")).distinct())
-      // every stepped pair is a valid length>=1 match (including cycles
-      // back to already-expanded nodes)...
-      result = result.unionAll(step)
-      // ...but only never-expanded (origin, node) pairs re-enter the
-      // frontier, which is what guarantees termination on cycles
-      val fresh = pins.pin(step.join(expanded, Seq("s", "o"), "left_anti"))
-      if (fresh.isEmpty) done = true
-      else {
-        expanded = pins.pin(expanded.unionAll(fresh))
-        frontier = fresh
-      }
-      rounds += 1
-    }
-    // seal materializes the closure once and frees every per-round block
-    pins.seal(
-      if (includeZero) result.unionAll(zero).distinct() else result.distinct())
-  }
-
-  /** One-or-more-step reachability over an arbitrary (s, o) edge relation:
-    * path-doubling expansion with eager checkpoints — joining the closure
-    * with ITSELF each round squares the reachable path length, so `r`
-    * rounds cover diameter 2^r and the 60-round safety bound can only trip
-    * on a non-converging plan bug, never on a deep-but-finite hierarchy.
-    * Runs until a fixpoint; throws instead of silently truncating.
-    */
-  private def edgesClosure(edgesRaw: DataFrame): DataFrame = {
-    val edges = edgesRaw.distinct().localCheckpoint(true)
-    var closure = edges
-    var size = closure.count()
-    var prev = -1L
-    var iter = 0
-    while (size != prev) {
-      if (iter >= 60)
-        throw new IllegalStateException(
-          s"transitive closure did not converge after $iter doubling rounds")
-      prev = size
-      val next = closure.as("l").join(closure.as("r"), col("l.o") === col("r.s"))
-        .select(col("l.s").as("s"), col("r.o").as("o"))
-      val grown = closure.unionByName(next).distinct().localCheckpoint(true)
-      size = grown.count()
-      // the doubled closure strictly supersedes the previous round's
-      // checkpoint — free its blocks now instead of waiting for a GC
-      if (closure ne edges) graft.Pins.unpin(closure)
-      closure = grown
-      iter += 1
-    }
-    if (closure ne edges) graft.Pins.unpin(edges)
-    closure
+      GraphOps.reachableFrom(
+        if (includeZero) edges.unionAll(seeds.select(col("n").as("s"), col("n").as("o")))
+        else edges,
+        seeds)
   }
 
   // ---------- Expression compilation ----------

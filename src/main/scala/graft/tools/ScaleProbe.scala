@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** Scale-evidence spot-run: execute the iterative / heaviest gates at
   * two scale factors and record, per gate, the wall time AND the
   * fixpoint ROUND count (connected-components rounds, transitive-closure
-  * squaring rounds). Connected components take their distributed
-  * fixpoint at every size here: its rounds are under test. The design
+  * squaring rounds). Connected components and transitive closures take
+  * their distributed fixpoints at every size here: their rounds are
+  * under test. The design
   * claim under test is that round counts track graph DIAMETER, not row
   * count — so at 10× the data the rounds must stay ~flat and only
   * per-round work grows; a round count that climbs with SF (or a plan
@@ -97,7 +98,7 @@ object ScaleProbe {
           System.gc()
           graft.ops.GraphOps.lastCcRounds.set(0)
           graft.ops.GraphOps.lastSccRounds.set(0)
-          graft.ops.ReasonOps.lastFixpointRounds.set(0)
+          graft.ops.GraphOps.lastFixpointRounds.set(0)
           graft.ops.ReasonOps.lastFrontierRounds.set(0)
           graft.ops.ReasonOps.lastChainRounds.set(0)
           graft.ops.ReasonOps.lastRlRounds.set(0)
@@ -106,7 +107,8 @@ object ScaleProbe {
           jobCounter.set(0)
           val t0 = System.nanoTime()
           // the graph ops take their distributed plans (not the driver
-          // algorithms), so ccRounds and sccRounds count fixpoint rounds
+          // algorithms), so ccRounds, sccRounds and fixpointRounds count
+          // fixpoint rounds
           graft.ops.GraphOps.graphDriverCap.withValue(-1)(
             fn(spark, dir).collect())
           val sec = (System.nanoTime() - t0) / 1e9
@@ -115,7 +117,7 @@ object ScaleProbe {
           // from run 2 on, so later runs under-report derivation rounds
           if (i == 1) {
             cc = graft.ops.GraphOps.lastCcRounds.get()
-            fp = graft.ops.ReasonOps.lastFixpointRounds.get()
+            fp = graft.ops.GraphOps.lastFixpointRounds.get()
             fr = graft.ops.ReasonOps.lastFrontierRounds.get()
             ch = graft.ops.ReasonOps.lastChainRounds.get()
             rl = graft.ops.ReasonOps.lastRlRounds.get()

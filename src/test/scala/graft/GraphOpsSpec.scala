@@ -537,4 +537,53 @@ class GraphOpsSpec extends SparkSpec {
     GraphOps.graphDriverCap.withValue(-1)(run()) shouldBe expected
     run() shouldBe expected
   }
+
+  "GraphOps reachability" should "match a brute-force BFS on both plans, grouped and seeded" in {
+    // (s, o, g) edges: targets reachable by a path of length >= 1 inside
+    // one group (a null g is a group of its own; g = "*" merges them all)
+    def brute(edges: Seq[(String, String, String)], from: String, g: String): Set[String] = {
+      val succ = edges.filter(e => g == "*" || e._3 == g).groupBy(_._1)
+        .map { case (k, es) => k -> es.map(_._2) }
+      val seen = scala.collection.mutable.Set.empty[String]
+      var frontier = succ.getOrElse(from, Nil).filter(seen.add)
+      while (frontier.nonEmpty)
+        frontier = frontier.flatMap(succ.getOrElse(_, Nil)).filter(seen.add)
+      seen.toSet
+    }
+    val groups = Seq("g1", "g2", null)
+    Seq(20261020L, 7L).foreach { seed =>
+      // per group a random graph over 12 nodes (cycles and self-loops
+      // arise), plus a fixed 2-cycle, a self-loop and duplicate edges
+      val rnd = new scala.util.Random(seed)
+      def node() = s"n${rnd.nextInt(12)}"
+      val base = groups.flatMap(g => Seq.fill(18)((node(), node(), g))) ++
+        Seq(("n1", "n1", "g1"), ("n2", "n3", "g2"), ("n3", "n2", "g2"))
+      val edges = base ++ base.take(9)
+      val df = edges.toDF("s", "o", "g")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect()
+        .map(r => (r.getString(0), r.getString(1),
+          if (r.length > 2) r.getString(2) else "*")).toSet
+      val sources = edges.map(e => (e._1, e._3)).distinct
+      val expectedGrouped =
+        sources.flatMap { case (a, g) => brute(edges, a, g).map((a, _, g)) }.toSet
+      val expectedAll = sources.map(_._1).distinct
+        .flatMap(a => brute(edges, a, "*").map((a, _, "*"))).toSet
+      expectedGrouped.exists(t => t._1 == t._2) shouldBe true // cycles give self pairs
+      val runs = GraphOps.fixpointRuns.get()
+      bothPaths(rows(GraphOps.transitiveClosure(df, Seq("g"), maxRounds = 60))) shouldBe
+        expectedGrouped
+      GraphOps.lastFixpointRounds.get() should be > 0L // the forced doubling ran last
+      bothPaths(rows(GraphOps.transitiveClosure(df.select("s", "o"), maxRounds = 60))) shouldBe
+        expectedAll
+      val seeds = Seq("n0", "n1", "n2", "absent")
+      val seedDf = seeds.toDF("n")
+      bothPaths(rows(GraphOps.reachableFrom(df, seedDf, Seq("g")))) shouldBe
+        (for (a <- seeds; g <- groups; b <- brute(edges, a, g)) yield (a, b, g)).toSet
+      bothPaths(rows(GraphOps.reachableFrom(df.select("s", "o"), seedDf))) shouldBe
+        seeds.flatMap(a => brute(edges, a, "*").map((a, _, "*"))).toSet
+      GraphOps.fixpointRuns.get() shouldBe runs + 8 // every call counts, on both plans
+      GraphOps.reachableFrom(df, seedDf, Seq("g")).collect()
+      GraphOps.lastFixpointRounds.get() shouldBe 0L // the driver BFS served it
+    }
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.ReasonOps
+import graft.ops.{GraphOps, ReasonOps}
 import graft.ops.ReasonOps.Corpus
 import org.apache.spark.sql.functions.col
 import graft.ops.ReasonOps.{Domain, Range, SubClassOf, SubPropertyOf}
@@ -372,18 +372,24 @@ class ReasonSpec extends SparkSpec {
     e.getMessage should include("re-materialization")
   }
 
-  "ReasonOps.transitiveClosure" should "close a chain in log rounds" in {
+  "GraphOps.transitiveClosure" should "close a chain in log rounds" in {
     val e = Seq(("1", "2"), ("2", "3"), ("3", "4")).toDF("a", "b")
-    // diameter 3 closes in 2 doubling rounds + 1 fixpoint-confirm round
-    ReasonOps.transitiveClosure(e, maxRounds = 3).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
-      Set("1" -> "2", "1" -> "3", "1" -> "4",
-        "2" -> "3", "2" -> "4", "3" -> "4")
+    // diameter 3 closes in 2 doubling rounds + 1 fixpoint-confirm round:
+    // under the seam the doubling runs, bounded by maxRounds = 3; at the
+    // default cap the driver BFS serves it
+    Seq(-1, GraphOps.GraphDriverCap).foreach { cap =>
+      GraphOps.graphDriverCap.withValue(cap)(
+        GraphOps.transitiveClosure(e, maxRounds = 3).collect())
+        .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
+        Set("1" -> "2", "1" -> "3", "1" -> "4",
+          "2" -> "3", "2" -> "4", "3" -> "4")
+    }
   }
 
   it should "terminate on cycles without self pairs" in {
     val e = Seq(("a", "b"), ("b", "a")).toDF("a", "b")
-    ReasonOps.transitiveClosure(e).collect()
+    // the closure keeps (x, x) on a cycle; the OWL callers drop a = b
+    GraphOps.transitiveClosure(e, maxRounds = 16).where(col("a") =!= col("b")).collect()
       .map(r => (r.getString(0), r.getString(1))).toSet shouldBe
       Set("a" -> "b", "b" -> "a")
   }
@@ -985,17 +991,17 @@ class ReasonSpec extends SparkSpec {
       ("borders", "a", ReasonOps.SymmetricProperty),
       ("n1", "next", "n2"), ("n2", "next", "n3"),
       ("a", "borders", "b")).toDF("s", "p", "o")
-    val before = ReasonOps.fixpointRuns.get()
+    val before = GraphOps.fixpointRuns.get()
     val borders = ReasonOps.owlEntailed(base, patternPreds = Seq("borders"))
       .where(col("p") === "borders")
     tset(borders) shouldBe Set(("a", "borders", "b"), ("b", "borders", "a"))
-    ReasonOps.fixpointRuns.get() shouldBe before // no squaring round ran
+    GraphOps.fixpointRuns.get() shouldBe before // no squaring round ran
     // the INVERSE of a transitive property still needs its fixpoint:
     // prev exposes inverse(closure(next)) through pass 2
     val prevRel = ReasonOps.owlEntailed(base, patternPreds = Seq("prev"))
       .where(col("p") === "prev")
     tset(prevRel) should contain(("n3", "prev", "n1"))
-    ReasonOps.fixpointRuns.get() should be > before
+    GraphOps.fixpointRuns.get() should be > before
   }
 
   it should "cover quad datasets lazily with per-graph confinement" in {
@@ -1006,10 +1012,10 @@ class ReasonSpec extends SparkSpec {
     qset(ReasonOps.owlEntailed(quads, Corpus.Quads, Some(decls))) shouldBe
       qset(ReasonOps.owlClosure(quads, Corpus.Quads, Some(decls)))
     // non-transitive pattern predicates skip the per-graph fixpoints too
-    val before = ReasonOps.fixpointRuns.get()
+    val before = GraphOps.fixpointRuns.get()
     ReasonOps.owlEntailed(quads, Corpus.Quads, Some(decls), patternPreds = Seq("q"))
       .where(col("p") === "q").collect()
-    ReasonOps.fixpointRuns.get() shouldBe before
+    GraphOps.fixpointRuns.get() shouldBe before
   }
 
   "rendering discipline" should "fail fast on a TBox mixing short and IRI renderings" in {
