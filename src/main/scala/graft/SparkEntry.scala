@@ -109,8 +109,8 @@ object SparkEntry {
       TriplePattern(V("r"), C(ids("name")), C(ids("ASIA")))), st.encStats, st.totalCnt)
     // Lazy decode (reference `LazyBinding.scala:22-28`) against the
     // dictionary materialized at ingest: decodeAll pins the (small)
-    // result, collects it and resolves its ids with one dictionary probe.
-    // No per-query re-scan of the triple store.
+    // result, collects it and resolves its ids from the dictionary's
+    // driver-held index. No per-query re-scan of the triple store.
     Dictionary.decodeAll(res, st.dict, Seq("c", "n", "r"))
       .select("c", "n", "r").orderBy("c", "n", "r")
   }

@@ -29,10 +29,13 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   *   - decode touches only the SELECTed output columns — the analog of the
   *     reference's lazy per-variable decode (`LazyBinding.scala:22-28`).
   *     `decodeAll` decodes a result of at most `localDecodeCap` rows on the
-  *     driver, as graphula does in process: one bounded collect plus one
-  *     dictionary probe, returned as a local relation. A larger result
-  *     falls back to a distributed decode: one dictionary pass for any
-  *     number of output columns, joined back per column.
+  *     driver, as graphula does in process: one bounded collect (none for
+  *     a local relation), then each id is looked up in the dictionary's
+  *     driver-held [[TermIndex]] (a store dictionary of at most
+  *     `TermIndex.Cap` terms; other dictionaries get one probe job), and
+  *     the rows come back as a local relation. A larger result falls back
+  *     to a distributed decode: one dictionary pass for any number of
+  *     output columns, joined back per column.
   */
 object Dictionary {
 
@@ -184,19 +187,23 @@ object Dictionary {
 
   /** Decode the id columns `cols` of `df` to their terms, keeping `df`'s
     * column order and every other column as it is. Ids with no entry
-    * render as `_:<id>`; null ids stay null. Runs eagerly.
+    * render as `_:<id>`; null ids stay null. Runs eagerly. `local` adds
+    * (id, term) entries over `dict` (a query's constants absent from the
+    * store).
     *
     * `df` is pinned once (lazily, through `Pins`, unless it already is a
-    * pin), and ONE bounded-collect job materializes it
-    * ([[collectBounded]]). A result of at most `localDecodeCap` rows is
-    * decoded on the driver: one dictionary probe job for the distinct ids
-    * of all `cols`, then the rows come back as a local relation — the
+    * pin or a local relation), and ONE bounded-collect job materializes
+    * it ([[collectBounded]]; none for a local relation). A result of at
+    * most `localDecodeCap` rows is decoded on the driver by
+    * [[decodeRows]] — from `dict`'s driver-held index with no job, else
+    * one dictionary probe job — and comes back as a local relation: the
     * caller's collect starts no job. A larger result (or a non-long id
     * column) keeps the distributed decode over the same pin: semi-filter
     * the dictionary down to the ids that appear, pin that slim mapping,
     * broadcast-join it per column.
     */
-  def decodeAll(df: DataFrame, dict: DataFrame, cols: Seq[String]): DataFrame = {
+  def decodeAll(df: DataFrame, dict: DataFrame, cols: Seq[String],
+                local: Seq[(Long, String)] = Nil): DataFrame = {
     val pinned =
       if (graft.Pins.isPinned(df) || isLocal(df)) df else graft.Pins.checkpointLazy(df)
     val decodePos = cols.map(df.schema.fieldIndex).toSet
@@ -207,7 +214,7 @@ object Dictionary {
     rows match {
       case Some(rs) =>
         if (pinned ne df) graft.Pins.unpin(pinned)
-        val d = decodeRows(rs.toSeq, df.schema, decodePos, dict)
+        val d = decodeRows(rs.toSeq, df.schema, decodePos, dict, local = local)
         df.sparkSession.createDataFrame(
           scala.jdk.CollectionConverters.SeqHasAsJava(d.rows).asJava, d.schema)
       case None =>
@@ -220,7 +227,7 @@ object Dictionary {
         // serve a |delta|-sized decode. Overlapping entries are identical
         // (id, term) pairs along an update chain, so the pick is stable.
         val slim = graft.Pins.checkpoint(
-          dict.join(ids, Seq("id"), "left_semi").dropDuplicates("id"))
+          withLocal(dict, local).join(ids, Seq("id"), "left_semi").dropDuplicates("id"))
         cols.foldLeft(pinned)((d, c) => decode(d, broadcast(slim), c))
           .select(df.columns.toSeq.map(col): _*)
     }
@@ -234,8 +241,8 @@ object Dictionary {
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
 
   /** Collected rows with their id columns decoded (see [[decodeRows]]):
-    * the rows and schema, plus the probe's result — id → term for every
-    * probed id the dictionary holds — and the full probed id set.
+    * the rows and schema, plus id → term for every probed id the
+    * dictionary (or `local`) holds, and the full probed id set.
     */
   private[graft] final case class DecodedRows(rows: Seq[Row], schema: StructType,
                                               terms: Map[Long, String],
@@ -243,22 +250,31 @@ object Dictionary {
 
   /** Driver-side decode of collected rows: the long columns at
     * `decodePos` become their terms (`_:<id>` when absent, null stays
-    * null) through ONE dictionary probe job over the distinct ids of all
-    * of them, plus `extraIds` — callers can resolve other ids in the same
-    * job. Every other column keeps its type and value, so expressions
-    * over the result (e.g. a CONSTRUCT skolem's row hash) match the
-    * distributed decode bit for bit.
+    * null), resolved together with `extraIds` — callers can resolve other
+    * ids at the same time. The ids are looked up in `dict`'s driver-held
+    * [[TermIndex]] with no job, `local` entries over it; a dictionary
+    * without a held index costs ONE probe job over the distinct ids of
+    * `dict` ∪ `local`. Every other column keeps its type and value, so
+    * expressions over the result (e.g. a CONSTRUCT skolem's row hash)
+    * match the distributed decode bit for bit.
     */
   private[graft] def decodeRows(rows: Seq[Row], schema: StructType,
                                 decodePos: Set[Int], dict: DataFrame,
-                                extraIds: Set[Long] = Set.empty): DecodedRows = {
+                                extraIds: Set[Long] = Set.empty,
+                                local: Seq[(Long, String)] = Nil): DecodedRows = {
     val probed = rows.iterator.flatMap(r =>
       decodePos.iterator.filter(i => !r.isNullAt(i)).map(r.getLong)).toSet ++ extraIds
     val terms: Map[Long, String] =
       if (probed.isEmpty) Map.empty
-      else dict.where(InSetColumn(col("id"), probed.map(i => i: Any)))
-        .select("id", "term").collect()
-        .map(r => r.getLong(0) -> r.getString(1)).toMap
+      else TermIndex.held(dict) match {
+        case Some(index) =>
+          val over = local.toMap
+          probed.iterator.flatMap(i => over.get(i).orElse(index.get(i)).map(i -> _)).toMap
+        case None =>
+          withLocal(dict, local).where(InSetColumn(col("id"), probed.map(i => i: Any)))
+            .select("id", "term").collect()
+            .map(r => r.getLong(0) -> r.getString(1)).toMap
+      }
     val outSchema = StructType(schema.fields.zipWithIndex.map { case (f, i) =>
       if (decodePos(i)) StructField(f.name, StringType, f.nullable) else f
     })
@@ -271,6 +287,14 @@ object Dictionary {
     }
     DecodedRows(out, outSchema, terms, probed)
   }
+
+  /** `dict` with the (id, term) entries `local` after its own rows. */
+  private def withLocal(dict: DataFrame, local: Seq[(Long, String)]): DataFrame =
+    if (local.isEmpty) dict
+    else {
+      import dict.sparkSession.implicits._
+      dict.unionByName(local.toDF("id", "term"))
+    }
 
   /** `df`'s rows on the driver if it holds at most `cap` of them, else
     * None — in ONE job over every partition. Each task materializes its
@@ -353,13 +377,22 @@ object Dictionary {
 
   /** Driver-side point lookup (D2): ids for a small set of query constants.
     * Returns only the terms present; a missing term means the query can be
-    * failed fast (reference: `GraphulaStageGenerator.scala:107-110`).
+    * failed fast (reference: `GraphulaStageGenerator.scala:107-110`). On
+    * a pure-hash dictionary with a driver-held [[TermIndex]] each term is
+    * hashed and compared with the entry under its id, with no job; any
+    * other dictionary is scanned.
     */
   def lookup(dict: DataFrame, terms: Seq[String]): Map[String, Long] = {
     if (terms.isEmpty) return Map.empty
-    dict.where(col("term").isin(terms: _*))
-      .select("term", "id").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    TermIndex.hashed(dict) match {
+      case Some(index) =>
+        terms.iterator.map(t => t -> termHashLocal(t))
+          .filter { case (t, id) => index.get(id).contains(t) }.toMap
+      case None =>
+        dict.where(col("term").isin(terms: _*))
+          .select("term", "id").collect()
+          .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
   }
 
   /** One dictionary scan answering, for a small driver-side term set on a
@@ -367,20 +400,27 @@ object Dictionary {
     * which terms are present, and whether any term's content hash is
     * claimed by a DIFFERENT term — the one case where expression-encoded
     * constants would alias a store term (so callers must fall back to the
-    * string path). Returns (present terms, clash?).
+    * string path). Returns (present terms, clash?). With a driver-held
+    * [[TermIndex]] the scan is one hash and one lookup per term, no job.
     */
   def probeClaims(spark: SparkSession, dict: DataFrame, terms: Seq[String])
       : (Set[String], Boolean) = {
     if (terms.isEmpty) return (Set.empty, false)
-    import spark.implicits._
-    // hash through the same codegen'd expression the store encode uses
-    // (driver-side local relation — Catalyst folds it without a job)
-    val probe = terms.toDF("pterm")
-      .select(termHash(col("pterm")).as("hid"), col("pterm"))
-    val hits = dict.join(broadcast(probe), col("id") === col("hid"))
-      .select(col("pterm"), col("term")).collect()
-    (hits.filter(r => r.getString(0) == r.getString(1)).map(_.getString(0)).toSet,
-      hits.exists(r => r.getString(0) != r.getString(1)))
+    // (probe term, held term) for every term whose hash id is claimed
+    val hits: Seq[(String, String)] = TermIndex.hashed(dict) match {
+      case Some(index) => terms.flatMap(t => index.get(termHashLocal(t)).map(t -> _))
+      case None =>
+        import spark.implicits._
+        // hash through the same codegen'd expression the store encode uses
+        // (driver-side local relation — Catalyst folds it without a job)
+        val probe = terms.toDF("pterm")
+          .select(termHash(col("pterm")).as("hid"), col("pterm"))
+        dict.join(broadcast(probe), col("id") === col("hid"))
+          .select(col("pterm"), col("term")).collect()
+          .map(r => r.getString(0) -> r.getString(1)).toSeq
+    }
+    (hits.collect { case (t, held) if t == held => t }.toSet,
+      hits.exists { case (t, held) => t != held })
   }
 
   /** Driver-side twin of `termHash`: the EXACT xxhash64(seed 42) Catalyst

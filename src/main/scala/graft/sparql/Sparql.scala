@@ -303,8 +303,10 @@ object Sparql {
     *
     * The top-level decode runs eagerly, inside this call
     * (`Dictionary.decodeAll`): the encoded result is pinned and collected
-    * in one bounded job; if it holds at most `Dictionary.LocalCap` rows,
-    * one dictionary probe job decodes it on the driver and the returned
+    * in one bounded job (none when the BGP matched on the driver); if it
+    * holds at most `Dictionary.LocalCap` rows it is decoded on the driver
+    * from the store dictionary's driver-held index (no job; a dictionary
+    * past the index's cap costs one probe job), and the returned
     * DataFrame is a local relation, so collecting it starts no job. A
     * larger result falls back to the distributed decode over the same
     * pin, and the driver never receives more than the cap. String
@@ -403,14 +405,27 @@ object Sparql {
     * `decodeFinal` decodes every solution column that holds ids (all but
     * the value-typed ones) in one pass before the template instantiates
     * from the term strings — so blank skolem ids are IDENTICAL to those
-    * of the string datasets for the same solutions.
+    * of the string datasets for the same solutions. Solutions the driver
+    * holds (a decode within its cap) instantiate there
+    * ([[instantiateRows]]) into a local relation when the plan's s, p, o
+    * are strings; others instantiate in the distributed plan.
     */
   def construct(spark: SparkSession, ds: Dataset, queryText: String): DataFrame = {
     val p = new P(tokenize(queryText))
     val prefixes = parsePrefixes(p)
     val template = parseConstructTemplate(p, prefixes)
     val (group, env) = parseWhere(spark, ds, p, prefixes)
-    instantiate(template, decodeFinal(env, compileGroup(env, group)))
+    val sols = decodeFinal(env, compileGroup(env, group))
+    val planned = instantiate(template, sols) // lazy: analysis only
+    if (!graft.dict.Dictionary.isLocal(sols) ||
+        planned.schema.exists(_.dataType != org.apache.spark.sql.types.StringType)) planned
+    else {
+      val utf8 = org.apache.spark.unsafe.types.UTF8String.fromString _
+      org.apache.spark.sql.execution.DriverRows.frame(spark, planned.schema,
+        instantiateRows(template, LocalSols(spark, sols.collect().toSeq, sols.schema))
+          .map { case (s, p, o) =>
+            org.apache.spark.sql.catalyst.InternalRow(utf8(s), utf8(p), utf8(o)) })
+    }
   }
 
   /** `CONSTRUCT { template }`, shared by [[construct]] and
@@ -543,7 +558,7 @@ object Sparql {
           broadcast(e.dict.where(col("term").startsWith("_:")).select(col("id").as("s")))
         // cbd seals its result, so the decode reads a pinned frame already
         val described = cbd(relation, subjects, _.join(blankIds, Seq("s"), "left_semi"))
-        graft.dict.Dictionary.decodeAll(described, env.dictAll, Seq("s", "p", "o"))
+        graft.dict.Dictionary.decodeAll(described, e.dict, Seq("s", "p", "o"), e.localDict)
           .select("s", "p", "o")
     }
   }
@@ -931,7 +946,7 @@ object Sparql {
   }
 
   /** The WHERE-evaluation half of a modify op: compile against `h`,
-    * bounded-collect + decode (one dictionary probe). Side-effect-free
+    * bounded-collect + driver-side decode. Side-effect-free
     * on the handle, so hazard-free ops prefetch it CONCURRENTLY against
     * the pre-script store (see [[update]]).
     */
@@ -941,8 +956,8 @@ object Sparql {
       : Option[(LocalSols, Map[Long, String], Set[Long])] = {
     val env = datasetEnv(spark, Dataset.Store(h), where, plainVarsOfG(where))
     val encSols = compileGroup(env, where)
-    // insert-template constant hashes ride the solution-decode probe, so
-    // the append's hash-claim check needs no second dictionary job
+    // insert-template constant hashes are resolved with the solutions, so
+    // the append's hash-claim check needs no second dictionary read
     // (solution-derived terms are claim-safe by construction on a
     // pure-hash store: their id IS their content hash)
     val insConstIds: Set[Long] =
@@ -968,8 +983,8 @@ object Sparql {
                           pre: Option[Option[(LocalSols, Map[Long, String],
                             Set[Long])]] = None): graft.store.StoreHandle = {
     // Driver fast path: one bounded collect of the ENCODED solutions (the
-    // only execution of the WHERE), ids decoded in a single dictionary
-    // probe, templates instantiated driver-side — feeding the driver-side
+    // only execution of the WHERE), ids decoded on the driver in one
+    // pass, templates instantiated driver-side — feeding the driver-side
     // batch paths with zero intermediate checkpoints. Oversized solution
     // sets fall back to the pinned distributed flow.
     pre.getOrElse(prepareModifySols(spark, h, ins, where)) match {
@@ -1053,16 +1068,17 @@ object Sparql {
   /** Bounded collect (at most `Dictionary.LocalCap` rows, the cap of the
     * batch paths in GraftStore) + driver-side decode of an encoded
     * solution relation:
-    * id-typed columns become their terms (one dictionary probe for ALL
-    * columns), everything else — plain-valued vars, internal shadows —
+    * id-typed columns become their terms (`Dictionary.decodeRows`: the
+    * dictionary's driver-held index, or one probe for ALL columns),
+    * everything else — plain-valued vars, internal shadows —
     * keeps its exact type and value, so downstream template evaluation
     * (including the skolem row hash over all columns) is bit-identical to
     * the distributed decodeFinal + instantiate flow.
     *
-    * `extraIds` ride along in the same dictionary probe (one scan serves
-    * both solution decode AND the append path's hash-claim check — see
+    * `extraIds` are resolved in the same pass (one read serves both
+    * solution decode AND the append path's hash-claim check — see
     * `GraftStore.appendLocal`); the returned (claims, probed) pair is
-    * that shared-probe result: id→term for every probed id found in the
+    * that shared result: id→term for every probed id found in the
     * dictionary, and the full probed id set.
     */
   private def smallModifySols(env: Env, encSols: DataFrame,
@@ -1080,7 +1096,7 @@ object Sparql {
         f.dataType == org.apache.spark.sql.types.LongType => i
     }.toSet
     val d = graft.dict.Dictionary
-      .decodeRows(first.toSeq, schema, decodePos, env.dictAll, extraIds)
+      .decodeRows(first.toSeq, schema, decodePos, e.dict, extraIds, e.localDict)
     // claims = STORE-dict membership only: a query-local dict entry (an
     // absent constant's rendering id) must not read as "already claimed",
     // or an insert of that term would skip its dictionary delta
@@ -1916,13 +1932,14 @@ object Sparql {
   /** The encoded-mode context for one group over `dict`: every
     * pattern-position constant of `g`, and every `extra` term, resolved
     * to its id driver-side. On a certified (pure-hash) dictionary ids
-    * come from hashing alone, and the dictionary is probed only for the
+    * come from hashing alone, and membership is checked only for the
     * constants that can surface in output while absent from it — path
     * endpoints (a zero-length path matches a constant endpoint against
-    * itself) and VALUES entries (they bind vars) — usually an empty set,
-    * so most queries skip the probe job entirely. A repaired store
-    * resolves every constant through the dictionary; absent ones get
-    * fresh negative ids.
+    * itself) and VALUES entries (they bind vars) — usually an empty set;
+    * `Dictionary.lookup` answers it from the store dictionary's
+    * driver-held index with no job, or probes a dictionary without one.
+    * A repaired store resolves every constant through a dictionary scan;
+    * absent ones get fresh negative ids.
     */
   private def encEnv(spark: SparkSession, dict: DataFrame, pureHash: Boolean,
                      g: Group, plain: Set[String],
@@ -2195,7 +2212,8 @@ object Sparql {
   /** Final lazy decode of the projected id columns (encoded mode) — the
     * single decode at the top of the plan, through `Dictionary.decodeAll`:
     * a result within its cap decodes on the driver (one bounded collect,
-    * one dictionary probe), a larger one by the distributed decode.
+    * none for a driver-matched result, then the dictionary's driver-held
+    * index), a larger one by the distributed decode.
     */
   private def decodeFinal(env: Env, df: DataFrame): DataFrame = env.enc match {
     case None => df
@@ -2203,7 +2221,7 @@ object Sparql {
       val cols = df.columns.toSeq
         .filterNot(e.plainVars.contains).filterNot(_.startsWith("__"))
       if (cols.isEmpty) df
-      else graft.dict.Dictionary.decodeAll(df, env.dictAll, cols)
+      else graft.dict.Dictionary.decodeAll(df, e.dict, cols, e.localDict)
   }
 
   /** A result decoded on the driver is a local relation; on one

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.{CleanCheckpoint, DriverRows}
 import org.apache.spark.sql.functions._
 import graft.bgp.PredStats
-import graft.dict.Dictionary
+import graft.dict.{Dictionary, TermIndex}
 import graft.ops.ReasonOps
 
 /** Ingested store handle: the analog of the reference's opened LMDB
@@ -21,23 +21,28 @@ import graft.ops.ReasonOps
   * handle materializes, once per (session, dir):
   *   - the string triple relation (eager local checkpoint),
   *   - the hash-encoded triple relation + its collision certificate,
-  *   - the (id, term) dictionary — materialized at INGEST so query-time
-  *     decode is a semi-join against a compact table, never a re-scan of
-  *     the full triple store (the reference pays O(result) LMDB point
-  *     lookups per query, `LazyBinding.scala:22-28`; this pays O(dict)
-  *     once, then O(result) per query),
+  *   - the (id, term) dictionary — materialized at INGEST, never a
+  *     re-scan of the full triple store. The reference pays O(result)
+  *     in-process lookups per query (`LazyBinding.scala:22-28`); so does
+  *     this handle's driver-held [[graft.dict.TermIndex]] over a
+  *     dictionary of at most `TermIndex.Cap` terms (built on first
+  *     decode, one job), and a larger dictionary is probed for the ids
+  *     a result holds (one job per decode),
   *   - per-predicate statistics (the `Index.valueCount` analog) for
   *     greedy BGP ordering and zero-cardinality fail-fast.
   * On a cluster these are parquet tables written by an ingest job; here
   * they are checkpointed in-session because the driver gate is
-  * self-contained per process.
+  * self-contained per process. A handle made by an update that keeps
+  * the dictionary frame keeps its index; `appendLocal`'s new dictionary
+  * gets an index derived from its parent's with no job.
   */
 final class StoreHandle(val triples: DataFrame, val enc: DataFrame,
                         val dict: DataFrame, val pureHash: Boolean,
                         val stats: Map[String, PredStats],
                         val encStats: Map[String, PredStats],
                         val totalCnt: Long,
-                        sketchesThunk: => DataFrame) {
+                        sketchesThunk: => DataFrame,
+                        index: Option[TermIndex]) {
   /** Per-predicate sketch relation, composed LAZILY: only persist /
     * compact / reopened-append readers force it. Update ops chain the
     * merge thunks instead of paying eager Catalyst analysis of the
@@ -52,15 +57,20 @@ final class StoreHandle(val triples: DataFrame, val enc: DataFrame,
     StoreHandle.attach(new Slices(enc, encStats, sliceRoom))
   private[graft] val tripleSlices: Slices =
     StoreHandle.attach(new Slices(triples, stats, sliceRoom))
+  // held here; `dict`'s plan holds it weakly
+  private[graft] val dictIndex: TermIndex =
+    index.map(TermIndex.attach).getOrElse(TermIndex.of(dict, pureHash))
 }
 
 object StoreHandle {
+  /** `index`: the dictionary's index when the caller derived it, else
+    * the one `dict` carries or a fresh lazy one. */
   def apply(triples: DataFrame, enc: DataFrame, dict: DataFrame,
             pureHash: Boolean, stats: Map[String, PredStats],
             encStats: Map[String, PredStats], totalCnt: Long,
-            sketches: => DataFrame): StoreHandle =
+            sketches: => DataFrame, index: Option[TermIndex] = None): StoreHandle =
     new StoreHandle(triples, enc, dict, pureHash, stats, encStats, totalCnt,
-      sketches)
+      sketches, index)
 
   /** Most rows one handle holds in its slices, over both relations. */
   private[graft] val SliceRows: Long = 4L * Dictionary.LocalCap
@@ -405,11 +415,12 @@ object GraftStore {
     * when the batch is small. Semantics are identical; repaired
     * (non-certified) stores delegate to the distributed path.
     */
-  /** `claims`/`probed`: an optional ALREADY-RUN dictionary probe (id→term
+  /** `claims`/`probed`: an optional ALREADY-RUN dictionary read (id→term
     * for found ids, full probed id set) the caller shared with its
     * solution decode — terms whose content hash was probed resolve their
     * hash-claim status driver-side; only uncovered terms (rare: e.g. a
-    * blank-rendering of an absent id) still cost a dictionary job.
+    * blank-rendering of an absent id) go to `Dictionary.probeClaims`
+    * (the driver-held index, or a dictionary job without one).
     */
   def appendLocal(spark: SparkSession, handle: StoreHandle,
                   rows: Seq[(String, String, String)],
@@ -465,12 +476,12 @@ object GraftStore {
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     val newRows = rowsD.filterNot(confirmed)
     if (newRows.isEmpty) return handle
-    // delta certificate: internal clash driver-side, claim clash in one
-    // dictionary scan
+    // delta certificate: internal clash driver-side, claim clash from
+    // the dictionary (`probeClaims`)
     val terms = newRows.flatMap(t => Seq(t._1, t._2, t._3)).distinct
     val internalClash = terms.groupBy(hmap).exists(_._2.size > 1)
     // claim status from the caller's shared probe where it covers the
-    // term's hash; a dictionary job only for the uncovered remainder
+    // term's hash; `probeClaims` only for the uncovered remainder
     val (covered, uncovered) = terms.partition(t => probed(hmap(t)))
     val (present, externalClash) =
       if (internalClash) (Set.empty[String], false)
@@ -490,6 +501,11 @@ object GraftStore {
       if (newOnly.isEmpty) None
       else Some(newOnly.map(t => (hmap(t), t)).toDF("id", "term"))
     val dict = dictDelta.fold(handle.dict)(handle.dict.unionByName)
+    // the new dictionary's index: the parent's plus the delta's pairs,
+    // resolved on the driver when first read
+    val index =
+      if (newOnly.isEmpty) None
+      else Some(TermIndex.derived(dict, Seq(handle.dictIndex), newOnly.map(t => (hmap(t), t))))
     val newT = newRows.toDF("s", "p", "o")
     val newEnc = newRows.map(t => (hmap(t._1), hmap(t._2), hmap(t._3)))
       .toDF("s", "p", "o")
@@ -524,7 +540,7 @@ object GraftStore {
       StoreHandle(shield(handle.triples).unionAll(newT),
         shield(handle.enc).unionAll(newEnc),
         dict, handle.pureHash, stats, encStats,
-        stats.values.map(_.cnt).sum, sketches),
+        stats.values.map(_.cnt).sum, sketches, index),
       handle, newT, newEnc, dictDelta)
   }
 
@@ -792,18 +808,19 @@ object GraftStore {
     val newEnc = Seq("s", "p", "o")
       .foldLeft(newT)((df, c) => Dictionary.encode(df, slim, c))
       .localCheckpoint(true)
-    // batch-scoped intermediates are superseded once the delta is encoded:
-    // `newTerms` fed the (materialized) existing/newOnly split, `existing`
-    // fed the slim encode dictionary — free their blocks now rather than
-    // leaking one pinned set per append in a long-lived streaming session.
-    // (On the pure-hash path `existing` is lazy over the small `hits`
-    // checkpoint, which ContextCleaner reaps — unpin is a no-op there.)
-    graft.Pins.unpin(newTerms)
-    graft.Pins.unpin(existing)
     val sketches = TripleStore.mergeSketches(
       handle.sketches,
       if (handle.pureHash) TripleStore.predSketchesHash(newT)
       else TripleStore.predSketchesEnc(newEnc, slim)).localCheckpoint(true)
+    // batch-scoped intermediates are superseded once the delta is encoded
+    // and sketched: `newTerms` fed the (materialized) existing/newOnly
+    // split, `existing` the slim encode dictionary (which the repaired
+    // path's sketches read) — free their blocks now rather than leaking
+    // one pinned set per append in a long-lived streaming session. (On
+    // the pure-hash path `existing` is lazy over the small `hits`
+    // checkpoint, which ContextCleaner reaps — unpin is a no-op there.)
+    graft.Pins.unpin(newTerms)
+    graft.Pins.unpin(existing)
     val stats = statsOf(sketches)
     val encStats = encStatsOf(spark, dict, handle.pureHash, stats)
     // strip origin constraints from checkpointed union arms: a later
@@ -1471,7 +1488,8 @@ object GraftStore {
     * legs re-run per ACTION, so every multi-pass consumer here seals
     * first — `decodeAll` pins the co-group output before it decodes (one
     * execution of `after.enc`/`before.enc`) and reads the union
-    * dictionary exactly once (one probe for a small diff, one slim
+    * dictionary at most once (for a small diff no read when both
+    * snapshots' driver-held indexes are held, else one probe; one slim
     * semi-join for a large one). Each input relation executes exactly
     * once per diff.
     */
@@ -1494,8 +1512,13 @@ object GraftStore {
       .where(col("__a").isNull || col("__b").isNull)
       .withColumn("change", when(col("__b").isNull, lit("+")).otherwise(lit("-")))
       .select(col("change") +: keys.map(col): _*)
-    Dictionary.decodeAll(delta, after.dict.unionByName(before.dict), keys)
+    // the union's index reads both snapshots' indexes (no job when held)
+    val dict = after.dict.unionByName(before.dict)
+    val index = TermIndex.attach(
+      TermIndex.derived(dict, Seq(after.dictIndex, before.dictIndex), Nil))
+    try Dictionary.decodeAll(delta, dict, keys)
       .select(col("change"), col("s"), col("p"), col("o"))
+    finally java.lang.ref.Reference.reachabilityFence(index)
   }
 
   private val adjRankCache = scala.collection.concurrent.TrieMap

@@ -1,6 +1,9 @@
 package graft
 
-import graft.dict.Dictionary
+import graft.dict.{Dictionary, TermIndex}
+import graft.sparql.Sparql
+import graft.store.{GraftStore, StoreHandle}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -105,5 +108,106 @@ class DictionarySpec extends SparkSpec {
       d.collect().map(_.toSeq).toSeq.sortBy(_.head.toString) shouldBe expected
     }
     local.schema shouldBe dist.schema
+  }
+
+  // ---- the driver-held term index against the forced dictionary probe ----
+
+  private val people: Seq[(String, String, String)] = Seq(
+    ("alice", "knows", "bob"), ("bob", "knows", "carol"), ("carol", "knows", "alice"),
+    ("alice", "name", "\"Alice\"@en"), ("bob", "age", "42"), ("dave", "knows", "bob"))
+
+  private def rowSet(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** `f` read from the held index and under the forced probe: the same. */
+  private def heldEqualsProbe[T](f: => T): T = {
+    val held = f
+    StoreHandle.useSlices.withValue(false)(f) shouldBe held
+    held
+  }
+
+  /** The index's entries, and the dictionary frame collected. */
+  private def indexAndFrame(h: StoreHandle): (Option[Map[Long, String]], Map[Long, String]) =
+    (h.dictIndex.entries.map(_.toMap),
+      h.dict.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
+
+  "The driver-held term index" should
+      "render absent ids as _:<id> and keep null ids null, as the probe does" in {
+    import spark.implicits._
+    val st = GraftStore.ingestTriples(spark, people.toDF("s", "p", "o"))
+    val alice = Dictionary.termHashLocal("alice")
+    val df = Seq[(java.lang.Long, java.lang.Long, Double)](
+      (alice, Dictionary.termHashLocal("knows"), 1.0), (7L, null, 2.0), (null, alice, 3.0))
+      .toDF("x", "y", "v")
+    val got = heldEqualsProbe(rowSet(Dictionary.decodeAll(df, st.dict, Seq("x", "y"))))
+    got shouldBe Set(Seq("alice", "knows", 1.0), Seq("_:7", null, 2.0), Seq(null, "alice", 3.0))
+    st.dictIndex.entries.map(_.size) shouldBe Some(9)
+  }
+
+  it should "decode a zero-length path endpoint absent from the store through the local entries" in {
+    import spark.implicits._
+    val st = GraftStore.ingestTriples(spark, people.toDF("s", "p", "o"))
+    val q = "PREFIX : <>\nSELECT ?x WHERE { <zed> :knows* ?x }"
+    heldEqualsProbe(rowSet(Sparql.execute(spark, st, q))) shouldBe Set(Seq("zed"))
+    val v = "PREFIX : <>\nSELECT ?x WHERE { VALUES ?x { <alice> <nobody> } }"
+    heldEqualsProbe(rowSet(Sparql.execute(spark, st, v))) shouldBe
+      Set(Seq("alice"), Seq("nobody"))
+  }
+
+  it should "decode a repaired (terribleHasher) store and keep its term probes exact" in {
+    import spark.implicits._
+    val terrible = (c: org.apache.spark.sql.Column) => pmod(xxhash64(c), lit(10L))
+    val triples = people.toDF("s", "p", "o")
+    val dict = Dictionary.build(
+      triples.select(explode(array(col("s"), col("p"), col("o"))).as("t")), terrible)
+    val enc = Seq("s", "p", "o").foldLeft(triples)((d, c) => Dictionary.encode(d, dict, c))
+    val st = GraftStore.ingestEncoded(spark, enc, dict)
+    st.pureHash shouldBe false
+    val q = "PREFIX : <>\nSELECT ?a ?b WHERE { ?a :knows ?b . ?b :knows ?c }"
+    heldEqualsProbe(rowSet(Sparql.execute(spark, st, q))) shouldBe
+      Set(Seq("alice", "bob"), Seq("bob", "carol"), Seq("carol", "alice"), Seq("dave", "bob"))
+    st.dictIndex.entries should not be empty
+    val ids = heldEqualsProbe(Dictionary.lookup(st.dict, Seq("alice", "knows", "nobody")))
+    ids shouldBe st.dict.where(col("term").isin("alice", "knows")).collect()
+      .map(r => r.getString(1) -> r.getLong(0)).toMap
+    ids("alice") should not be Dictionary.termHashLocal("alice") // a repaired id
+  }
+
+  it should "keep the probe for a dictionary over its cap" in {
+    val dict = spark.range(TermIndex.Cap + 1L)
+      .select(col("id"), concat(lit("t"), col("id").cast("string")).as("term"))
+    val index = TermIndex.attach(TermIndex.of(dict, pureHash = true))
+    TermIndex.held(dict) shouldBe None
+    index.entries shouldBe None
+    import spark.implicits._
+    val df = Seq((3L, 1L), (TermIndex.Cap + 5L, 2L)).toDF("x", "n")
+    heldEqualsProbe(rowSet(Dictionary.decodeAll(df, dict, Seq("x")))) shouldBe
+      Set(Seq("t3", 1L), Seq(s"_:${TermIndex.Cap + 5L}", 2L))
+  }
+
+  it should "equal the collected dictionary along a random update chain" in {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    def batch(n: Int): Seq[(String, String, String)] = Seq.fill(n)(
+      (s"e${rnd.nextInt(30)}", s"p${rnd.nextInt(4)}", s"e${rnd.nextInt(30)}"))
+    val pure = GraftStore.ingestTriples(spark, people.toDF("s", "p", "o"))
+    val repaired = GraftStore.ingestEncoded(spark, pure.enc, pure.dict)
+    for (start <- Seq(pure, repaired)) {
+      var h = start
+      indexAndFrame(h) match { case (ix, frame) => ix shouldBe Some(frame) }
+      (1 to 8).foreach { step =>
+        val kind = rnd.nextInt(4)
+        h = kind match {
+          case 0 => GraftStore.appendLocal(spark, h, batch(3))
+          case 1 =>
+            val held = h.triples.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+            GraftStore.removeLocal(spark, h, held.take(2).toSeq)
+          case 2 => GraftStore.compact(spark, h)
+          case _ => GraftStore.append(spark, h, batch(4).toDF("s", "p", "o"))
+        }
+        withClue(s"${if (start eq pure) "pure-hash" else "repaired"} step $step (kind $kind): ") {
+          indexAndFrame(h) match { case (ix, frame) => ix shouldBe Some(frame) }
+        }
+      }
+    }
   }
 }

@@ -820,6 +820,31 @@ class SparqlSpec extends SparkSpec {
     res shouldBe Set(("1", "5"), ("1", "6")) // x=5,6 have unbound ?z
   }
 
+  it should "instantiate driver-decoded solutions on the driver, as the string path does" in {
+    val st = graft.store.GraftStore.ingestTriples(spark, triples)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+      df.collect().map(_.toSeq).toSet
+    val where = "WHERE { ?a :2 ?b . ?b :4 ?c }"
+    val plain = s"PREFIX : <>\nCONSTRUCT { ?a :reaches ?c . ?c :from ?a . ?a :kind \"start\" } $where"
+    val blank = s"PREFIX : <>\nCONSTRUCT { ?a :via _:hop . _:hop :to ?c } $where"
+    val typed = "PREFIX : <>\nCONSTRUCT { ?c :len ?n } WHERE { ?b :4 ?c . BIND(STRLEN(?c) AS ?n) }"
+    for (q <- Seq(plain, blank, typed)) withClue(q + "\n") {
+      val strings = Sparql.construct(spark, Sparql.Dataset.Triples(triples), q)
+      val onDriver = Sparql.construct(spark, st, q)
+      // the forced distributed decode leaves the solutions distributed
+      val distributed = graft.dict.Dictionary.localDecodeCap.withValue(0)(
+        Sparql.construct(spark, st, q))
+      rows(onDriver) shouldBe rows(strings)
+      rows(distributed) shouldBe rows(strings)
+      onDriver.schema shouldBe distributed.schema
+      // a non-string template variable keeps the distributed instantiation
+      graft.dict.Dictionary.isLocal(onDriver) shouldBe (q ne typed)
+    }
+    rows(Sparql.construct(spark, st, plain)) should contain(Seq("5", "from", "1"))
+    val (_, jobs) = jobsDuring(Sparql.construct(spark, st, blank).collect())
+    jobs shouldBe 0
+  }
+
   "Sparql.describe" should "return the concise bounded description (outgoing + incoming)" in {
     val cbd = Set(
       ("3", "4", "5"), ("3", "4", "6"), // outgoing
